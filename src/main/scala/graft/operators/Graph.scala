@@ -61,8 +61,9 @@ object Graph {
     * the small iterative loops at fixture scale). The status store is
     * listener-fed, so a short bounded poll covers the (unobserved in
     * practice: 0 polls across every probe run) event-bus lag; `None`
-    * when the entry never appears — callers then skip compaction
-    * rather than pay a job.
+    * when the entry never appears or never covers every partition —
+    * callers then skip compaction rather than pay a job or size from
+    * partial info.
     */
   private[operators] def cachedFrontierBytes(ck: DataFrame): Option[Long] =
     try {
@@ -75,12 +76,17 @@ object Graph {
         def look() = sc.getRDDStorageInfo.find(_.id == id)
         var info = look()
         var polls = 0
-        while (info.forall(_.numCachedPartitions < want) && polls < 10) {
+        def complete = info.exists(_.numCachedPartitions >= want)
+        while (!complete && polls < 10) {
           Thread.sleep(3); polls += 1; info = look()
         }
-        info.map(i => i.memSize + i.diskSize).filter(_ > 0L)
+        // partial info would under-size the frontier: skip instead
+        info.filter(_ => complete).map(i => i.memSize + i.diskSize).filter(_ > 0L)
       }
-    } catch { case _: Throwable => None }
+    } catch {
+      case _: InterruptedException => Thread.currentThread().interrupt(); None
+      case scala.util.control.NonFatal(_) => None
+    }
 
   /** [[compactFrontier]] sized from the checkpoint's OBSERVED cached
     * bytes (guide §1: gate on measured size) instead of a row count —

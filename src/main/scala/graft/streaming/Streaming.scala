@@ -1090,7 +1090,7 @@ object Streaming {
           r.getFooter.getFileMetaData.getSchema.toString)}%08x",
         columnBoundsOf(r)))
       finally r.close()
-    } catch { case _: Throwable => None }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Longest string bound recorded in a manifest entry — longer values
     * simply drop that column's zone map for the file (the file is then
@@ -1298,7 +1298,7 @@ object Streaming {
     */
   def refreshListing(target: String): Unit =
     try org.apache.spark.sql.SparkSession.active.catalog.refreshByPath(target)
-    catch { case _: Throwable => () } // no active session: nothing cached
+    catch { case scala.util.control.NonFatal(_) => () } // no active session: nothing cached
 
   // ------------------------------------------------------------------
   // Committed manifests — the reader-visible commit point. Every
@@ -2492,17 +2492,14 @@ object Streaming {
       lines: Seq[String],
       df: DataFrame
   ): DataFrame = {
-    val refs = lines.flatMap(entryDv).map(_._1).distinct
-    if (refs.isEmpty) df
+    val tags = lines.flatMap(entryDv)
+    if (tags.isEmpty) df
     else {
       val targetPath = new org.apache.hadoop.fs.Path(target)
       val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val mdir = manifestDir(target)
-      val dv = spark.read
-        .parquet(refs.map(r => new org.apache.hadoop.fs.Path(mdir, r).toString): _*)
+      val dv = taggedDvPositions(spark, target, lines)
         .select(col("rel").as("__gdv_rel"), col("pos").as("__gdv_pos"))
-        .distinct()
-      val totalDeleted = lines.flatMap(entryDv).map(_._2).sum
+      val totalDeleted = tags.map(_._2).sum
       val dvSide = if (totalDeleted <= 4000000L) broadcast(dv) else dv
       val qualRoot = fs.makeQualified(targetPath).toString
       df.withColumn("__gdv_rel",
@@ -2511,6 +2508,64 @@ object Streaming {
         .join(dvSide, Seq("__gdv_rel", "__gdv_pos"), "left_anti")
         .drop("__gdv_rel", "__gdv_pos")
     }
+  }
+
+  /** The fixed schema of every delete-vector sidecar. Reads pass it
+    * explicitly, so no sidecar read pays Spark's footer-inference job.
+    */
+  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("rel", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType)))
+
+  private def emptyPositions(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), DvSchema)
+
+  /** The (rel, pos) positions the DV tags of `lines` record: each
+    * sidecar is read filtered to the files whose tag NAMES it. An
+    * older sidecar can still hold stale positions of a file whose tag
+    * has since moved to a newer, complete sidecar; the filter drops
+    * them, so every file's position set appears exactly once and no
+    * distinct is needed.
+    */
+  private def taggedDvPositions(
+      spark: org.apache.spark.sql.SparkSession,
+      target: String,
+      lines: Seq[String]
+  ): DataFrame = {
+    val tagged = lines.flatMap(l => entryDv(l).map(_._1 -> entryPath(l)))
+    if (tagged.isEmpty) emptyPositions(spark)
+    else {
+      val mdir = manifestDir(target)
+      spark.read.schema(DvSchema)
+        .parquet(tagged.map(_._1).distinct
+          .map(r => new org.apache.hadoop.fs.Path(mdir, r).toString): _*)
+        .where(concat_ws("/", col("_metadata.file_name"), col("rel"))
+          .isin(tagged.map { case (s, r) => s"$s/$r" }: _*))
+        .select(col("rel"), col("pos"))
+    }
+  }
+
+  /** A position-carrying scan of `lines`' files with their existing
+    * delete vectors applied: the data columns plus `__m_rel` (the
+    * file's table-relative path) and `__m_pos` (its row index). An
+    * already-deleted row never appears, so positions a mutation takes
+    * from this scan are disjoint from those its files already record.
+    */
+  private def livePositionedScan(
+      spark: org.apache.spark.sql.SparkSession,
+      target: String,
+      lines: Seq[String]
+  ): DataFrame = {
+    val targetPath = new org.apache.hadoop.fs.Path(target)
+    val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualRoot = fs.makeQualified(targetPath).toString
+    val raw = spark.read.option("basePath", target)
+      .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*)
+      .withColumn("__m_rel",
+        expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})"))
+      .withColumn("__m_pos", col("_metadata.row_index"))
+    applyDeleteVectors(spark, target, lines, raw)
   }
 
   /** Read `target` pinned to its latest COMMITTED manifest generation
@@ -3611,6 +3666,12 @@ object Streaming {
   /** `hits` (rel, pos) UNIONED with the prior sidecar positions of the
     * already-tagged files among `touchedRels` — every DV tag must
     * reference its file's COMPLETE position set (merge-on-write).
+    *
+    * DISJOINT POSITIONS: `hits` must hold each new position once and
+    * none a touched file already records — every verb takes them from
+    * [[livePositionedScan]], where deleted rows no longer appear. The
+    * prior side holds each file's recorded set once
+    * ([[taggedDvPositions]]), so the union needs no distinct.
     */
   private def withPriorDvPositions(
       spark: org.apache.spark.sql.SparkSession,
@@ -3618,18 +3679,37 @@ object Streaming {
       hits: DataFrame,
       lineByPath: Map[String, String],
       touchedRels: Set[String]
-  ): DataFrame = {
-    val mdir = manifestDir(target)
-    val priorRefs = touchedRels.toSeq
-      .flatMap(r => entryDv(lineByPath(r)).map(_._1)).distinct
-    val base =
-      if (priorRefs.isEmpty) hits
-      else hits.unionByName(
-        spark.read.parquet(
-          priorRefs.map(r => new org.apache.hadoop.fs.Path(mdir, r).toString): _*)
-          .where(col("rel").isin(touchedRels.toSeq: _*))
-          .select(col("rel"), col("pos")))
-    base.distinct().localCheckpoint()
+  ): DataFrame =
+    hits.unionByName(taggedDvPositions(spark, target, touchedRels.toSeq.map(lineByPath)))
+
+  /** New deleted positions per file — the touched set with its counts,
+    * from one aggregate over disjoint `positions`.
+    */
+  private def positionsPerFile(positions: DataFrame): Map[String, Long] =
+    positions.groupBy("rel").agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** Write one sidecar for `newPerFile`'s files — their new
+    * `positions` plus their prior ones — and return its name with the
+    * files' retagged entry lines. A file's count is its prior tag
+    * count plus its new count, exact because the two are disjoint.
+    */
+  private def writeDvRetag(
+      spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      gen: Long,
+      lineByPath: Map[String, String],
+      positions: DataFrame,
+      newPerFile: Map[String, Long]
+  ): (String, Map[String, String]) = {
+    val sidecarName = writeDvSidecar(fs, target,
+      withPriorDvPositions(spark, target, positions, lineByPath, newPerFile.keySet),
+      gen + 1)
+    sidecarName -> newPerFile.map { case (r, n) =>
+      val line = lineByPath(r)
+      r -> withDvTag(line, sidecarName, entryDv(line).map(_._2).getOrElse(0L) + n)
+    }
   }
 
   private def deleteVectors(
@@ -3664,35 +3744,20 @@ object Streaming {
         }
       if (scanLines.isEmpty) return 0L
       val lineByPath = allLines.map(l => entryPath(l) -> l).toMap
-      val qualRoot = fs.makeQualified(targetPath).toString
-      // the position scan: matching rows' (rel, pos). Parquet pushdown
-      // prunes row groups; only O(deleted rows) survive to the write.
-      val hits = spark.read.option("basePath", target)
-        .parquet(scanLines.map(l => s"$target/${entryPath(l)}"): _*)
-        .where(predicate)
-        .select(
-          expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})").as("rel"),
-          col("_metadata.row_index").as("pos"))
+      // the position scan: matching live rows' (rel, pos). Parquet
+      // pushdown prunes row groups; only O(deleted rows) survive to
+      // the write, none of them already deleted.
+      val hits = livePositionedScan(spark, target, scanLines).where(predicate)
+        .select(col("__m_rel").as("rel"), col("__m_pos").as("pos"))
         .localCheckpoint()
-      val touchedRels = hits.select("rel").distinct()
-        .collect().map(_.getString(0)).toSet
-      if (touchedRels.isEmpty) return 0L
-      // merge prior positions of re-deleted files into the new sidecar
-      // (each tag must reference its file's COMPLETE set)
-      val combined = withPriorDvPositions(spark, target, hits, lineByPath, touchedRels)
-      // one sidecar per commit, O(deleted rows) bytes
-      val sidecarName = writeDvSidecar(fs, target, combined, gen + 1)
-      // absolute per-file deleted counts after the merge
-      val perFileTotal: Map[String, Long] = combined.groupBy("rel")
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val before = touchedRels.toSeq
-        .map(r => entryDv(lineByPath(r)).map(_._2).getOrElse(0L)).sum
-      val deletedNow = perFileTotal.values.sum - before
-      val newLines: Map[String, String] = touchedRels.iterator.map { r =>
-        r -> withDvTag(lineByPath(r), sidecarName, perFileTotal(r))
-      }.toMap
-      val touchedDirs = touchedRels.map(dirOf)
+      val newPerFile = positionsPerFile(hits)
+      if (newPerFile.isEmpty) return 0L
+      // one sidecar per commit, O(deleted rows) bytes, holding each
+      // touched file's COMPLETE set
+      val (sidecarName, newLines) =
+        writeDvRetag(spark, fs, target, gen, lineByPath, hits, newPerFile)
+      val deletedNow = newPerFile.values.sum
+      val touchedDirs = newPerFile.keySet.map(dirOf)
       // staleness + CAS loop (the optimistic-commit shape): a racing
       // commit on our dirs invalidates the scanned positions entirely
       // (files may be rewritten) -> retry the whole verb; disjoint
@@ -3840,13 +3905,16 @@ object Streaming {
     * columns to SQL exprs over both aliases (unlisted columns keep
     * their `t` value); `whenMatchedDelete` retracts matched rows
     * instead (mutually exclusive with update); `whenNotMatchedInsert`
-    * maps target columns to exprs over `s` (unlisted columns default
-    * to `s.<col>` — absent source columns refuse loudly at analysis).
+    * maps target columns to exprs over `s` alone (unlisted columns
+    * default to `s.<col>` — absent source columns and any `t.<col>`
+    * reference refuse loudly at analysis).
     * An UPDATE whose target row matches multiple source rows refuses
     * loudly (nondeterministic), the Delta posture.
     *
-    * Cost at 100 TB: one pinned scan of the target (parquet pushdown
-    * applies through the join), O(matched) sidecar + O(matched +
+    * Cost at 100 TB: one pinned scan of the target, joined once with
+    * the source and checkpointed once (parquet pushdown applies
+    * through the join); one aggregate over that checkpoint yields
+    * every count; O(matched) sidecar + O(matched +
     * inserted) new-file bytes, zero rewrite of untouched files.
     * Followers and the streaming source observe the commit as a DV
     * window and refuse loudly, exactly as for deleteWhere — route
@@ -3872,8 +3940,11 @@ object Streaming {
       "whenMatchedUpdate and whenMatchedDelete are mutually exclusive")
     require(whenMatchedUpdate.isDefined || whenMatchedDelete ||
       whenNotMatchedInsert.isDefined, "mergeInto needs at least one action clause")
-    val targetPath = new org.apache.hadoop.fs.Path(target)
-    val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the insert clause's rows: `cols` from exprs over the source alone
+    def insertImage(src: DataFrame, cols: Seq[String], m: Map[String, String]) =
+      src.alias("s").select(cols.map(c => expr(m.getOrElse(c, s"s.`$c`")).as(c)): _*)
+    val fs = new org.apache.hadoop.fs.Path(target)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -3895,7 +3966,7 @@ object Streaming {
             val n = source.count()
             if (n == 0) return MergeStats(0L, 0L)
             if (commitMutation(spark, target, gen, Map.empty,
-                emptyPositions(spark), Some(source), stagePartitionBy, n))
+                emptyPositions(spark), Map.empty, Some(source), stagePartitionBy, n))
               return MergeStats(0L, n)
         }
       } else {
@@ -3962,15 +4033,13 @@ object Streaming {
             case Some(m) =>
               val probe = spark.read.option("basePath", target)
                 .parquet(s"$target/${entryPath(allLines.head)}")
-              val sA = source.alias("s")
-              val ins = sA.select(probe.columns.toSeq.map(c =>
-                expr(m.getOrElse(c, s"s.`$c`")).as(c)): _*).localCheckpoint()
+              val ins = insertImage(source, probe.columns.toSeq, m).localCheckpoint()
               val n = ins.count()
               if (n == 0L) return MergeStats(0L, 0L)
               // the "everything pruned out" verdict is a read of every
               // live file's bounds — same conflict scope as a scan
               if (commitMutation(spark, target, gen, Map.empty,
-                  emptyPositions(spark), Some(ins), stagePartitionBy, n,
+                  emptyPositions(spark), Map.empty, Some(ins), stagePartitionBy, n,
                   extraVolatileDirs = allLines.map(l => dirOf(entryPath(l))).toSet,
                   keyEnvelopes = insertEnvelopes)) {
                 refreshListing(target)
@@ -3979,54 +4048,59 @@ object Streaming {
           }
         } else {
         val lineByPath = allLines.map(l => entryPath(l) -> l).toMap
-        val qualRoot = fs.makeQualified(targetPath).toString
-        val raw = spark.read.option("basePath", target)
-          .parquet(scanLines.map(l => s"$target/${entryPath(l)}"): _*)
-          .withColumn("__m_rel",
-            expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})"))
-          .withColumn("__m_pos", col("_metadata.row_index"))
         // existing delete vectors applied FIRST: an already-retracted
         // row must neither match nor resurrect through the merge
-        val tgt = applyDeleteVectors(spark, target, scanLines, raw)
+        val tgt = livePositionedScan(spark, target, scanLines)
         val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
-        val t = tgt.alias("t")
-        val sA = source.alias("s")
-        val cond = expr(condition)
-        val matched = t.join(sA, cond, "inner")
+        // the insert exprs see the source alone, never `t`: analysed
+        // here, before the join exposes the target's columns, and
+        // applied below to the unmatched source rows only
+        whenNotMatchedInsert.foreach(m => insertImage(source, dataCols, m))
+        // ONE pass over the target: source LEFT OUTER JOIN target (an
+        // inner join without an insert clause). Each row is one
+        // (source row, matched target row) pair, projected to the
+        // target position, the update image when matched and the
+        // source row when not, and checkpointed once.
+        val isMatched = col("t.__m_rel").isNotNull
+        val joined = source.alias("s").join(tgt.alias("t"), expr(condition),
+          if (whenNotMatchedInsert.isDefined) "left_outer" else "inner")
         // INSERT-ONLY merge (no matched clause): matched target rows
         // stay byte-identical — retracting their positions here would
         // DV them with no update images re-added, silent data loss
         // (r18 advice, high). Delta/Iceberg semantics: a clause fires
-        // only for the rows it names. Skip the matched scan and the
-        // ambiguity probe entirely; only the anti-join side runs, and
-        // MergeStats reports matched = 0.
+        // only for the rows it names, so the matched pairs are dropped
+        // and MergeStats reports matched = 0.
         val hasMatchedAction = whenMatchedUpdate.isDefined || whenMatchedDelete
-        val posCk =
-          if (!hasMatchedAction) emptyPositions(spark)
-          else {
-            val positions = matched
-              .select(col("t.__m_rel").as("rel"), col("t.__m_pos").as("pos"))
-            if (whenMatchedUpdate.isDefined) {
-              val dup = positions.groupBy("rel", "pos")
-                .agg(count(lit(1)).as("n")).where(col("n") > 1)
-              require(dup.isEmpty,
-                "merge UPDATE is ambiguous: a target row matched multiple source " +
-                  "rows — dedupe the source, or express the intent as delete+insert")
-            }
-            positions.distinct().localCheckpoint()
-          }
-        val matchedCount = if (hasMatchedAction) posCk.count() else 0L
-        val updCk = whenMatchedUpdate.filter(_ => matchedCount > 0).map { m =>
-          matched.select(dataCols.map(c =>
-            expr(m.getOrElse(c, s"t.`$c`")).as(c)): _*).localCheckpoint()
-        }
-        val insCk = whenNotMatchedInsert.map { m =>
-          sA.join(t, cond, "left_anti").select(dataCols.map(c =>
-            expr(m.getOrElse(c, s"s.`$c`")).as(c)): _*).localCheckpoint()
-        }
-        val inserted = insCk.map(_.count()).getOrElse(0L)
+        val ck = (if (hasMatchedAction) joined else joined.where(!isMatched))
+          .select(Seq(col("t.__m_rel").as("rel"), col("t.__m_pos").as("pos")) ++
+            whenMatchedUpdate.toSeq.flatMap(m => dataCols.map(c =>
+              when(isMatched, expr(m.getOrElse(c, s"t.`$c`"))).as(s"__u_$c"))) ++
+            whenNotMatchedInsert.map(_ => when(!isMatched,
+              struct(source.columns.toSeq.map(c => col(s"s.`$c`")): _*)).as("__ins")): _*)
+          .localCheckpoint()
+        // one aggregate over (rel, pos): per touched file, its distinct
+        // matched positions and the most source rows on any one of
+        // them; the unmatched rows form the null group
+        val (unmatchedGroup, perFile) = ck.groupBy("rel", "pos")
+          .agg(count(lit(1)).as("n"))
+          .groupBy("rel")
+          .agg(count(lit(1)).as("positions"), sum("n").as("rows"), max("n").as("most"))
+          .collect().partition(_.isNullAt(0))
+        val inserted = unmatchedGroup.headOption.fold(0L)(_.getLong(2))
+        val newPerFile = perFile.map(r => r.getString(0) -> r.getLong(1)).toMap
+        val matchedCount = newPerFile.values.sum
+        val most = perFile.map(_.getLong(3)).foldLeft(0L)(math.max)
+        require(whenMatchedUpdate.isEmpty || most <= 1L,
+          "merge UPDATE is ambiguous: a target row matched multiple source " +
+            "rows — dedupe the source, or express the intent as delete+insert")
         if (matchedCount == 0L && inserted == 0L) return MergeStats(0L, 0L)
-        val toAdd = (updCk.toSeq ++ insCk.filter(_ => inserted > 0).toSeq)
+        val matchedPairs = ck.where(col("rel").isNotNull)
+        val positions = matchedPairs.select("rel", "pos")
+        val updated = whenMatchedUpdate.filter(_ => matchedCount > 0).map(_ =>
+          matchedPairs.select(dataCols.map(c => col(s"`__u_$c`").as(c)): _*))
+        val toAdd = (updated.toSeq ++
+          whenNotMatchedInsert.filter(_ => inserted > 0).map(m => insertImage(
+            ck.where(col("rel").isNull).select("__ins.*"), dataCols, m)).toSeq)
           .reduceOption(_.unionByName(_))
         // SERIALIZABLE-GRADE conflict scope: every LIVE dir is
         // volatile, not just the dirs of matched files — the merge's
@@ -4044,9 +4118,12 @@ object Streaming {
         // and root layouts route appends into existing dirs, which
         // this covers.)
         val scannedDirs = allLines.map(l => dirOf(entryPath(l))).toSet
-        if (commitMutation(spark, target, gen, lineByPath, posCk, toAdd,
+        // a delete matched by several source rows names its position
+        // once per row
+        if (commitMutation(spark, target, gen, lineByPath,
+            if (most > 1L) positions.distinct() else positions, newPerFile, toAdd,
             stagePartitionBy,
-            (if (updCk.isDefined) matchedCount else 0L) + inserted,
+            (if (updated.isDefined) matchedCount else 0L) + inserted,
             extraVolatileDirs = scannedDirs,
             keyEnvelopes = insertEnvelopes)) {
           refreshListing(target)
@@ -4132,26 +4209,20 @@ object Streaming {
           allLines.filter(l => keptPaths(entryPath(l)))
         }
       if (scanLines.isEmpty) return 0L
-      val qualRoot = fs.makeQualified(targetPath).toString
-      val raw = spark.read.option("basePath", target)
-        .parquet(scanLines.map(l => s"$target/${entryPath(l)}"): _*)
-        .withColumn("__m_rel",
-          expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})"))
-        .withColumn("__m_pos", col("_metadata.row_index"))
-      val tgt = applyDeleteVectors(spark, target, scanLines, raw)
+      val tgt = livePositionedScan(spark, target, scanLines)
       val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
       require(assignments.keySet.subsetOf(dataCols.toSet),
         s"updateWhere assignments reference columns absent from $target: " +
           s"${assignments.keySet.diff(dataCols.toSet).mkString(", ")}")
       val hits = tgt.where(predicate).localCheckpoint()
-      val n = hits.count()
+      // each live row once: the positions are distinct by construction
+      val positions = hits.select(col("__m_rel").as("rel"), col("__m_pos").as("pos"))
+      val newPerFile = positionsPerFile(positions)
+      val n = newPerFile.values.sum
       if (n == 0L) return 0L
       val updated = hits.select(dataCols.map(c =>
         assignments.getOrElse(c, col(c)).as(c)): _*)
-      val positions = hits
-        .select(col("__m_rel").as("rel"), col("__m_pos").as("pos"))
-        .distinct().localCheckpoint()
-      if (commitMutation(spark, target, gen, lineByPath, positions,
+      if (commitMutation(spark, target, gen, lineByPath, positions, newPerFile,
           Some(updated), stagePartitionBy, n)) {
         refreshListing(target)
         return n
@@ -4163,16 +4234,6 @@ object Streaming {
         "contention on these shards is too high; serialize behind the writer lease")
   }
 
-  private def emptyPositions(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("rel",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType))))
-
   /** The shared COMMIT half of [[mergeInto]]/[[updateWhere]]: write
     * the (rel, pos) retraction sidecar (merged with prior tags), stage
     * `newRows`, and land retags + adds as ONE generation through the
@@ -4181,6 +4242,11 @@ object Streaming {
     * dirs, so a replay is idempotent and a racing writer on the
     * scanned dirs conflicts). Returns false — with the sidecar cleaned
     * up — when the commit conflicted and the caller must re-scan.
+    *
+    * `positions` are the verb's NEW retractions, each once and
+    * disjoint from what the touched files already record (the
+    * [[withPriorDvPositions]] rule); `newPerFile` is their count per
+    * file, whose keys are the touched files.
     */
   private def commitMutation(
       spark: org.apache.spark.sql.SparkSession,
@@ -4188,6 +4254,7 @@ object Streaming {
       gen: Long,
       lineByPath: Map[String, String],
       positions: DataFrame,
+      newPerFile: Map[String, Long],
       newRows: Option[DataFrame],
       stagePartitionBy: Seq[String],
       newRowCount: Long,
@@ -4196,20 +4263,13 @@ object Streaming {
   ): Boolean = {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val touchedRels: Set[String] = positions.select("rel").distinct()
-      .collect().map(_.getString(0)).toSet
     val (modified, dvDirs, sidecarOpt) =
-      if (touchedRels.isEmpty) (Seq.empty[String], Set.empty[String], None)
+      if (newPerFile.isEmpty) (Seq.empty[String], Set.empty[String], None)
       else {
-        val combined = withPriorDvPositions(spark, target, positions,
-          lineByPath, touchedRels)
-        val sidecarName = writeDvSidecar(fs, target, combined, gen + 1)
-        val perFileTotal: Map[String, Long] = combined.groupBy("rel")
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val newLines = touchedRels.toSeq.sorted
-          .map(r => withDvTag(lineByPath(r), sidecarName, perFileTotal(r)))
-        (newLines, touchedRels.map(dirOf), Some(sidecarName))
+        val (sidecarName, newLines) =
+          writeDvRetag(spark, fs, target, gen, lineByPath, positions, newPerFile)
+        (newLines.toSeq.sortBy(_._1).map(_._2), newPerFile.keySet.map(dirOf),
+          Some(sidecarName))
       }
     val token = java.util.UUID.randomUUID().toString.take(8)
     val stageName = s".__stage-$token"
@@ -4317,23 +4377,7 @@ object Streaming {
     // is either in a file still live at toGen (adds, DV pre-images;
     // DV-tagged files stay live until compaction) or the window
     // REMOVES files and refuses below.
-    val mdir = manifestDir(target)
     val qualRoot = fs.makeQualified(targetPath).toString
-    def dvPositions(refs: Seq[String], rels: Set[String]): DataFrame = {
-      val base =
-        if (refs.isEmpty)
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("rel",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("pos",
-                org.apache.spark.sql.types.LongType))))
-        else spark.read.parquet(
-          refs.map(r => new org.apache.hadoop.fs.Path(mdir, r).toString): _*)
-          .select(col("rel"), col("pos"))
-      base.where(col("rel").isin(rels.toSeq: _*))
-    }
     var prevLines = manifestEntryLines(fs, target, fromGen)
     val perGen: Seq[DataFrame] = ((fromGen + 1) to toGen).flatMap { g =>
       val curLines = manifestEntryLines(fs, target, g)
@@ -4360,12 +4404,16 @@ object Streaming {
       val deletes: Option[DataFrame] =
         if (dvChanged.isEmpty) None
         else {
-          val newRefs = dvChanged.toSeq.flatMap(p => entryDv(curByPath(p)).map(_._1)).distinct
-          val oldRefs = dvChanged.toSeq.flatMap(p => entryDv(prevByPath(p)).map(_._1)).distinct
-          val delta = dvPositions(newRefs, dvChanged)
-            .join(dvPositions(oldRefs, dvChanged), Seq("rel", "pos"), "left_anti")
+          val changed = dvChanged.toSeq
+          val delta = taggedDvPositions(spark, target, changed.map(curByPath))
+            .join(taggedDvPositions(spark, target, changed.map(prevByPath)),
+              Seq("rel", "pos"), "left_anti")
             .select(col("rel").as("__cdf_rel"), col("pos").as("__cdf_pos"))
-          val deltaCount = delta.count()
+          // each tag counts its file's complete set exactly, so the
+          // growth of the tag counts is the delta's size — no job
+          val deltaCount = changed.map(p =>
+            entryDv(curByPath(p)).map(_._2).getOrElse(0L) -
+              entryDv(prevByPath(p)).map(_._2).getOrElse(0L)).sum
           if (deltaCount == 0L) None
           else {
             val deltaSide =

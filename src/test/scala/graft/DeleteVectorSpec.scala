@@ -77,6 +77,38 @@ class DeleteVectorSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     Streaming.readCommittedRange(spark, target, "id", 0L, 19L).count() shouldBe 5L
   }
 
+  test("a re-delete over files whose tags name different sidecars writes each " +
+      "position once and counts exactly") {
+    val target = seed("graft-dv-overlap")
+    def tagged(): Seq[(String, String, Long)] = {
+      val g = Streaming.manifestGenerations(fs, target).last
+      Streaming.manifestEntryLines(fs, target, g).flatMap(l =>
+        Streaming.entryDv(l).map { case (sidecar, n) =>
+          (Streaming.relOfEntry(l), sidecar, n) })
+    }
+    // 1: one file of shard 0 (X) and one of shard 1 (Y) share sidecar S1
+    Streaming.deleteWhere(spark, target, col("id").isin(0L, 1L)) shouldBe 2L
+    // 2: Y alone moves to S2; X still names S1, which keeps Y's old
+    //    position — stale for Y from now on
+    Streaming.deleteWhere(spark, target, col("id") === 5L) shouldBe 1L
+    tagged().map(_._2).distinct should have size 2
+    // 3: X and Y again: both prior sidecars feed the new one
+    Streaming.deleteWhere(spark, target, col("id").isin(4L, 9L)) shouldBe 2L
+    val after = tagged()
+    val sidecars = after.map(_._2).distinct
+    sidecars should have size 1
+    val rows = spark.read
+      .parquet(new Path(Streaming.manifestDir(target), sidecars.head).toString)
+    rows.groupBy("rel", "pos").count().where(col("count") > 1).count() shouldBe 0L
+    val perFile = rows.groupBy("rel").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    perFile.keySet shouldBe after.map(_._1).toSet
+    after.foreach { case (rel, _, n) => perFile(rel) shouldBe n }
+    after.map(_._3).sum shouldBe 5L
+    Streaming.readCommitted(spark, target).count() shouldBe 195L
+    Streaming.statsRowCount(fs, target) shouldBe Some(195L)
+  }
+
   test("deleteRange zone-map-prunes the scan and deletes exactly the range") {
     val target = seed("graft-dv-range", n = 400L)
     Streaming.clusterTable(spark, target, "id", 16)

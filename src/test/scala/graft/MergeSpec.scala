@@ -132,6 +132,28 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     Streaming.readCommitted(spark, target).count() shouldBe 19L
   }
 
+  test("mergeInto insert exprs see the source alone: a t.<col> reference refuses " +
+      "at analysis and commits nothing") {
+    import spark.implicits._
+    val target = seed("graft-merge-insscope", n = 20)
+    val gens = Streaming.manifestGenerations(fs, target)
+    val source = Seq((5L, "S-5", 1L), (500L, "s-500", 2L)).toDF("id", "s_payload", "score")
+    val ex = intercept[org.apache.spark.sql.AnalysisException] {
+      Streaming.mergeInto(spark, target, source, "t.id = s.id",
+        whenMatchedUpdate = Some(Map("payload" -> "s.s_payload")),
+        whenNotMatchedInsert = Some(Map("payload" -> "t.payload")))
+    }
+    ex.getMessage should include("payload")
+    Streaming.manifestGenerations(fs, target) shouldBe gens
+    // an unqualified name still resolves against the source alone,
+    // though the target carries a column of the same name
+    Streaming.mergeInto(spark, target, source.withColumnRenamed("s_payload", "payload"),
+      "t.id = s.id", whenNotMatchedInsert = Some(Map("payload" -> "upper(payload)"))) shouldBe
+      Streaming.MergeStats(matched = 0L, inserted = 1L)
+    Streaming.readCommitted(spark, target).where(col("id") === 500L)
+      .select("payload").head().getString(0) shouldBe "S-500"
+  }
+
   test("mergeInto composes with EXISTING delete vectors: retracted rows neither " +
       "match nor resurrect") {
     import spark.implicits._
