@@ -26,7 +26,7 @@ object Scratch {
       }
       var p = dirs.poll()
       while (p != null) {
-        try rm(p) catch { case _: Throwable => () }
+        try rm(p) catch { case scala.util.control.NonFatal(_) => () }
         p = dirs.poll()
       }
     }, "graft-scratch-cleanup"))

@@ -247,7 +247,7 @@ object Archive {
             if (c > 0) {
               val k = line.substring(0, c).trim.toLowerCase
               val v = line.substring(c + 1).trim
-              if (k == "content-length") len = try v.toLong catch { case _: Throwable => -1L }
+              if (k == "content-length") len = v.toLongOption.getOrElse(-1L)
               else if (k == "warc-type") wtype = v
               else if (k == "warc-target-uri") uri = v
             }

@@ -355,8 +355,8 @@ class GraftTable(
       desc.map(_.schema).getOrElse(throw new IllegalStateException(
         s"graft table $path has neither a committed manifest nor a descriptor"))
     else {
-      val idx = new GraftFileIndex(spark, path, pinnedGen, applyingDv = true)
-      if (idx.entryLines.isEmpty)
+      val idx = new GraftFileIndex(spark, path, pinnedGen)
+      if (idx.entries.isEmpty)
         desc.map(_.schema).getOrElse(Streaming.readCommitted(spark, path).schema)
       else StructType(idx.dataSchema.fields ++ idx.partitionSchema.fields
         .filterNot(f => idx.dataSchema.fieldNames.contains(f.name)))
@@ -453,8 +453,8 @@ private[sources] class GraftV1Scan(
             spark.createDataFrame(
               java.util.Collections.emptyList[org.apache.spark.sql.Row](), required)
           else {
-            val idx = new GraftFileIndex(spark, path, pinnedGen, applyingDv = true)
-            if (idx.entryLines.isEmpty)
+            val idx = new GraftFileIndex(spark, path, pinnedGen)
+            if (idx.entries.isEmpty)
               spark.createDataFrame(
                 java.util.Collections.emptyList[org.apache.spark.sql.Row](), required)
             else new GraftDvRelationFrame(spark, path, idx).frame
@@ -487,7 +487,7 @@ private[sources] class GraftDvRelationFrame(
       bucketSpec = None,
       fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
       options = Map.empty)(spark)
-    Streaming.applyDeleteVectors(spark, target, index.entryLines,
+    Streaming.applyDeleteVectors(spark, target, index.entries,
       spark.baseRelationToDataFrame(inner))
   }
 }

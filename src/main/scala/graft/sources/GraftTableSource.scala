@@ -15,6 +15,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.streaming.Streaming
+import graft.table.Manifest.dirOf
+import graft.table.ManifestEntry
 
 /** The TABLE-FORMAT connector over the graft manifest protocol (r16
   * judge #3: "the storage layer is invisible to Catalyst/SQL"):
@@ -94,8 +96,8 @@ class GraftTableSource extends RelationProvider
       // footer. Tables with zero live entries fall back to the
       // library reader's retained-footer schema.
       val spark = sqlContext.sparkSession
-      val idx = new GraftFileIndex(spark, target, None, applyingDv = true)
-      if (idx.entryLines.isEmpty) Streaming.readCommitted(spark, target).schema
+      val idx = new GraftFileIndex(spark, target, None)
+      if (idx.entries.isEmpty) Streaming.readCommitted(spark, target).schema
       else org.apache.spark.sql.types.StructType(
         idx.dataSchema.fields ++ idx.partitionSchema.fields
           .filterNot(f => idx.dataSchema.fieldNames.contains(f.name)))
@@ -195,14 +197,13 @@ class GraftTableSource extends RelationProvider
       // definition and skips the check.
       if (!replaceAll && existing.isDefined &&
           !parameters.get("allowSchemaEvolution").exists(_.toBoolean)) {
-        // applyingDv = true: the drift check reads only FOOTER
-        // METADATA, so outstanding delete vectors are irrelevant — the
-        // read connector's reader-version gate must not fail a plain
-        // append (r17 advice, medium). A zero-live-file generation has
-        // no schema to drift against: skip the check rather than throw
-        // an unrelated connector error.
-        val current = new GraftFileIndex(spark, target, None, applyingDv = true)
-        if (current.entryLines.nonEmpty) {
+        // The drift check reads only FOOTER METADATA, so outstanding
+        // delete vectors are irrelevant (r17 advice, medium). A
+        // zero-live-file generation has no schema to drift against:
+        // skip the check rather than throw an unrelated connector
+        // error.
+        val current = new GraftFileIndex(spark, target, None)
+        if (current.entries.nonEmpty) {
           val have = (current.dataSchema.fields ++ current.partitionSchema.fields)
             .map(f => (f.name, f.dataType)).toSet
           val incoming = data.schema.fields.map(f => (f.name, f.dataType)).toSet
@@ -234,11 +235,7 @@ class GraftTableSource extends RelationProvider
       val replaced: Set[String] =
         if (!replaceAll) Set.empty
         else Streaming.latestManifest(fs, target) match {
-          case Some((_, rels)) =>
-            rels.map(r => r.lastIndexOf('/') match {
-              case -1 => ""
-              case i => r.substring(0, i)
-            }).toSet + ""
+          case Some((_, rels)) => rels.map(dirOf).toSet + ""
           case None => Set.empty
         }
       Streaming.commitStage(fs, target, replaced, stageName,
@@ -288,7 +285,7 @@ class GraftTableSource extends RelationProvider
           s"no committed graft manifest at $path — not a graft table"))
       val frame = Streaming.readChangeFeed(spark, path, from, to).getOrElse {
         // empty window: a typed zero-row frame with the CDF schema
-        val idx = new GraftFileIndex(spark, path, Some(to), applyingDv = true)
+        val idx = new GraftFileIndex(spark, path, Some(to))
         val base = StructType(idx.dataSchema.fields ++ idx.partitionSchema.fields
           .filterNot(f => idx.dataSchema.fieldNames.contains(f.name)))
         spark.createDataFrame(
@@ -304,25 +301,23 @@ class GraftTableSource extends RelationProvider
     // relation — the same (file, row_index) anti-join the library
     // readers use, injected UNDER the connector surface. The pre-r18
     // refusal is kept behind option("deleteVectors", "strict") for
-    // consumers that must never pay the anti-join.
-    val strict = parameters.get("deleteVectors").contains("strict")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val resolved = gen.orElse(Streaming.manifestGenerations(fs, path).lastOption)
-    val hasDv = resolved.exists(g =>
-      Streaming.generationHasDeleteVectors(fs, path, g))
-    if (hasDv && !strict) {
-      val index = new GraftFileIndex(spark, path, gen, applyingDv = true)
+    // consumers that must never pay the anti-join: a plain file
+    // listing of a tagged generation would resurrect deleted rows (the
+    // Delta reader-version contract).
+    val index = new GraftFileIndex(spark, path, gen)
+    if (index.entries.exists(_.dv.isDefined)) {
+      require(!parameters.get("deleteVectors").contains("strict"),
+        s"graft table $path generation ${index.generation} carries merge-on-read delete " +
+          "vectors, which the format connector cannot apply — run " +
+          "Streaming.compactShards to absorb them, or read via Streaming.readCommitted")
       new GraftDvRelation(spark, path, parameters, index)
-    } else {
-      val index = new GraftFileIndex(spark, path, gen)
-      HadoopFsRelation(
-        location = index,
-        partitionSchema = index.partitionSchema,
-        dataSchema = index.dataSchema,
-        bucketSpec = None,
-        fileFormat = new ParquetFileFormat,
-        options = parameters)(spark)
-    }
+    } else HadoopFsRelation(
+      location = index,
+      partitionSchema = index.partitionSchema,
+      dataSchema = index.dataSchema,
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat,
+      options = parameters)(spark)
   }
 }
 
@@ -358,7 +353,7 @@ private[graft] class GraftDvRelation(
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
       options = parameters)(spark)
-    Streaming.applyDeleteVectors(spark, target, index.entryLines,
+    Streaming.applyDeleteVectors(spark, target, index.entries,
       spark.baseRelationToDataFrame(inner))
   }
 
@@ -453,8 +448,7 @@ private[sources] object GraftDvRelation {
 class GraftFileIndex(
     spark: SparkSession,
     target: String,
-    pinnedGen: Option[Long],
-    applyingDv: Boolean = false
+    pinnedGen: Option[Long]
 ) extends FileIndex {
 
   private val targetPath = new Path(target)
@@ -467,30 +461,16 @@ class GraftFileIndex(
       s"no committed graft manifest at $target — not a graft table " +
         "(write it with the Streaming verbs or Streaming.writeManifest first)"))
 
-  // the pinned generation's live entry LINES (metadata-only): paths
-  // plus stats/dv/schema-fingerprint tags
-  private[sources] val entryLines: Seq[String] =
-    Streaming.manifestEntryLines(fs, target, generation)
-
-  // READER-VERSION gate: a plain file listing cannot apply
-  // merge-on-read delete vectors — reading a tagged generation here
-  // would resurrect deleted rows. Refuse loudly (the Delta
-  // reader-version contract) UNLESS the caller wraps this index in
-  // the DV-applying relation ([[GraftDvRelation]], the r17 judge #3
-  // rung) — then the anti-join owns correctness and the index is just
+  // the pinned generation's live entries (metadata-only): paths plus
+  // stats/dv/schema-fingerprint tags. A generation carrying delete
+  // vectors is read only through the DV-applying relation
+  // ([[GraftDvRelation]]), which owns that correctness; this index is
   // the pruned listing underneath it.
-  require(applyingDv || !Streaming.generationHasDeleteVectors(fs, target, generation),
-    s"graft table $target generation $generation carries merge-on-read delete " +
-      "vectors, which the format connector cannot apply — run " +
-      "Streaming.compactShards to absorb them, or read via Streaming.readCommitted")
+  private[sources] val entries: Seq[ManifestEntry] =
+    Streaming.liveEntries(fs, target, generation)
 
   // the pinned generation's live files, relative paths (metadata-only)
-  private val allFiles: Seq[String] = entryLines.map(Streaming.relOfEntry)
-
-  private def dirOf(rel: String): String = {
-    val i = rel.lastIndexOf('/')
-    if (i < 0) "" else rel.substring(0, i)
-  }
+  private val allFiles: Seq[String] = entries.map(_.path)
 
   // hive-style partition layout, MULTI-LEVEL (r17 advice, medium: the
   // write path documents partitionBy("a,b") but a single-level parser
@@ -587,9 +567,9 @@ class GraftFileIndex(
   lazy val dataSchema: StructType = {
     require(allFiles.nonEmpty, s"graft table $target generation $generation " +
       "has no live files")
-    val byHash = entryLines.groupBy(Streaming.entrySchemaHash)
-    val known = byHash.collect { case (Some(_), ls) => Streaming.relOfEntry(ls.head) }.toSeq
-    val unknown = byHash.getOrElse(None, Nil).map(Streaming.relOfEntry)
+    val byHash = entries.groupBy(_.schemaHash)
+    val known = byHash.collect { case (Some(_), es) => es.head.path }.toSeq
+    val unknown = byHash.getOrElse(None, Nil).map(_.path)
     val sample: Seq[String] =
       if (unknown.isEmpty) known
       else known ++ unknown.groupBy(dirOf).values.map(_.head).toSeq.sorted.take(32)
@@ -872,8 +852,8 @@ private[sources] class GraftStreamSink(
         // mixed-schema files here. Same opt-in as the batch path.
         if (Streaming.manifestGenerations(fs, target).nonEmpty &&
             !parameters.get("allowSchemaEvolution").exists(_.toBoolean)) {
-          val current = new GraftFileIndex(spark, target, None, applyingDv = true)
-          if (current.entryLines.nonEmpty) {
+          val current = new GraftFileIndex(spark, target, None)
+          if (current.entries.nonEmpty) {
             val have = (current.dataSchema.fields ++ current.partitionSchema.fields)
               .map(f => (f.name, f.dataType)).toSet
             val incoming = batch.schema.fields.map(f => (f.name, f.dataType)).toSet
@@ -891,7 +871,10 @@ private[sources] class GraftStreamSink(
         fs.delete(stage, true)
         val parts = parameters.get("partitionBy").toSeq
           .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        // AQE-sized staged write — see the batch path
+        // the batch path's REBALANCE hint, but NOT AQE-sized here:
+        // `spark` is the stream's session, where Spark turns AQE off,
+        // so the hint plans as a plain hash shuffle by the partition
+        // columns — one writer per dir, no oversized-dir split
         val sized = if (parts.nonEmpty)
           batch.hint("rebalance", parts.map(org.apache.spark.sql.functions.col): _*) else batch
         val writer = sized.write.mode("overwrite")

@@ -6,6 +6,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.table.{Bounds, ColumnStats, CommitHeader, ManifestEntry, ManifestLine, Tag}
+import graft.table.Manifest.dirOf
+
 /** Structured Streaming surface.
   *
   * The reference is strictly batch (SURVEY.md §2.9); these operators
@@ -256,13 +259,18 @@ object Streaming {
     * Atomicity: the commit plan makes the whole batch one atomic
     * generation — a crash anywhere rolls forward or back at the next
     * verb ([[recoverStage]]); latest-wins by version keeps the
-    * foreachBatch redelivery contract idempotent regardless. Contract:
-    * `shardCol` must be a pure function of `keyCol` (else one key
-    * could win in two shards), non-null, and a plain scalar (integral
-    * in every current caller) so its partition-directory name is
-    * derivable. Untouched shards keep their files byte-identical.
-    */
-  /** `allowSchemaEvolution = false` (the default, the Delta contract):
+    * foreachBatch redelivery contract idempotent regardless.
+    * Untouched shards keep their files byte-identical.
+    *
+    * CONTRACT — `shardCol` must be a PURE FUNCTION of `keyCol`: the
+    * latest-wins window partitions by (`shardCol`, `keyCol`) and nothing
+    * checks the mapping, so a key written under two shard values (a
+    * shard derivation that drifted between batches) keeps one winner
+    * in EACH shard — a duplicate key the table never repairs. The shard
+    * value must also be non-null and a plain scalar (integral in every
+    * current caller) so its partition-directory name is derivable.
+    *
+    * `allowSchemaEvolution = false` (the default, the Delta contract):
     * a batch whose schema adds a column over the stored table is
     * REFUSED loudly — the pinned read's projection fails. `true`: the
     * touched shards are rewritten with the WIDENED schema (old rows
@@ -469,7 +477,7 @@ object Streaming {
           val df = applyDeleteVectors(spark, target, lines,
             spark.read.option("basePath", target)
               .option("mergeSchema", mergeSchema.toString)
-              .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*))
+              .parquet(lines.map(l => s"$target/${l.path}"): _*))
           Some(if (wantCols.isEmpty) df else df.select(wantCols.map(col): _*))
         }
       case Some(_) => None // manifest exists but empty: no rows anywhere
@@ -516,11 +524,6 @@ object Streaming {
     */
   val ManifestKeep = 3
 
-  private def dirOf(rel: String): String = {
-    val i = rel.lastIndexOf('/')
-    if (i < 0) "" else rel.substring(0, i)
-  }
-
   /** Recursive data-file listing under `p`, paths relative to it;
     * `_`/`.`-prefixed names (markers, temp files, manifest dirs)
     * skipped.
@@ -565,7 +568,7 @@ object Streaming {
       baseGen: Option[Long] = None,
       tag: Option[String] = None,
       txn: Option[(String, Long)] = None,
-      modifiedEntries: Seq[String] = Nil,
+      modifiedEntries: Seq[ManifestEntry] = Nil,
       volatileDirs: Set[String] = Set.empty,
       keyEnvelopes: Seq[(String, Char, String, String)] = Nil
   ): Unit = {
@@ -596,7 +599,7 @@ object Streaming {
             def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
             s"E ${enc(c)}:$k:${enc(lo)}:${enc(hi)}"
         } ++
-        modifiedEntries.sorted.map(m => s"M $m") ++
+        modifiedEntries.sortBy(_.path).map(m => s"M ${m.encode}") ++
         files.sorted.map(f => s"F $f"))
         .mkString("\n")
     val tmp = new org.apache.hadoop.fs.Path(stage, ".plan.tmp")
@@ -690,8 +693,10 @@ object Streaming {
     // this plan's position scan depends on without replacing its
     // files — conflict-checked like a replaced dir (a racing rewrite
     // invalidates the scanned positions), but its entries survive.
-    val modifiedByPath: Map[String, String] = lines.collect {
-      case l if l.startsWith("M ") => entryPath(l.substring(2)) -> l.substring(2)
+    val modifiedByPath: Map[String, ManifestEntry] = lines.collect {
+      case l if l.startsWith("M ") =>
+        val e = ManifestEntry.decode(l.substring(2))
+        e.path -> e
     }.toMap
     val volatileDirs = lines.collect { case l if l.startsWith("V ") => l.substring(2) }.toSet
     val keyEnvelopes: Seq[(String, Char, String, String)] = lines.collect {
@@ -729,11 +734,8 @@ object Streaming {
     // becomes the generation's `# schema` header (drift detection for
     // followers). Computed ONCE outside the CAS loop: the footer
     // contents don't change on rebase.
-    lazy val footers = inParallel(files.sorted) { f =>
-      f -> footerInfo(fs, new org.apache.hadoop.fs.Path(targetPath, f))
-    }
-    lazy val addLines = footers.map { case (f, info) => entryLineOf(f, info) }
-    lazy val commitSchema = footers.flatMap(_._2.map(_.schemaHash)).headOption
+    lazy val addEntries = inParallel(files.sorted)(footerEntry(fs, targetPath, _))
+    lazy val commitSchema = addEntries.flatMap(_.schemaHash).headOption
     // abort: remove this plan's already-moved files and the stage, so
     // the verb's retry starts clean — but NEVER a file some RETAINED
     // generation still references: a replay of a plan whose commit
@@ -759,13 +761,12 @@ object Streaming {
     lazy val touchedDirs: Set[String] =
       replacedDirs ++ volatileDirs ++ files.map(dirOf) ++
         modifiedByPath.keysIterator.map(dirOf)
-    lazy val addsByDir: Map[String, Seq[String]] =
-      addLines.groupBy(l => dirOf(entryPath(l)))
+    lazy val addsByDir: Map[String, Seq[ManifestEntry]] = addEntries.groupBy(_.dir)
     var done = false
     while (!done) {
       val prevGen = manifestGenerations(fs, target).lastOption
       // base entries of the TOUCHED dirs only, keyed by path with the
-      // full entry lines as values (carried stats stay verbatim). The
+      // full entries as values (carried stats stay verbatim). The
       // manifest-list layout makes this O(touched), never the table's
       // entry list — the last O(table) driver term of the protocol
       // (r15 judge #3). Bootstrap is the exception: the first commit
@@ -780,44 +781,45 @@ object Streaming {
       // below collapses those against the loser's own stats-bearing
       // add lines, so no file is ever listed twice and no row lost
       // (ConcurrentCommitSpec pins the two-writer fresh-table race).
-      val bootstrapAll: Option[Map[String, String]] = prevGen match {
+      val bootstrapAll: Option[Map[String, ManifestEntry]] = prevGen match {
         case Some(_) => None
-        case None => Some((listRel(fs, targetPath).toSet -- files).map(p => p -> p).toMap)
+        case None => Some((listRel(fs, targetPath).toSet -- files)
+          .map(p => p -> ManifestEntry.bare(p)).toMap)
       }
-      val baseTouched: Map[String, String] = bootstrapAll match {
+      val baseTouched: Map[String, ManifestEntry] = bootstrapAll match {
         case Some(all) => all.filter { case (p, _) => touchedDirs(dirOf(p)) }
         case None => entriesForDirs(fs, target, prevGen.get, Some(touchedDirs))
-          .map(l => entryPath(l) -> l).toMap
+          .map(l => l.path -> l).toMap
       }
       // one grouping pass over the touched base, reused by the post
       // state and the replay check (not a rescan per dir)
-      val baseLinesByDir: Map[String, Seq[String]] = baseTouched.toSeq
+      val baseEntriesByDir: Map[String, Seq[ManifestEntry]] = baseTouched.toSeq
         .groupBy { case (p, _) => dirOf(p) }
         .map { case (d, xs) => d -> xs.map(_._2) }
-      // post-commit entry lines per touched dir: a replaced dir keeps
+      // post-commit entries per touched dir: a replaced dir keeps
       // only this commit's adds; any other touched dir appends them
-      val postTouched: Map[String, Seq[String]] = touchedDirs.iterator.map { d =>
+      val postTouched: Map[String, Seq[ManifestEntry]] = touchedDirs.iterator.map { d =>
         val kept =
           if (replacedDirs(d)) Seq.empty
-          else baseLinesByDir.getOrElse(d, Seq.empty)
+          else baseEntriesByDir.getOrElse(d, Seq.empty)
             // in-place modifications (DV retags riding with this plan)
-            .map(l => modifiedByPath.getOrElse(entryPath(l), l))
-        d -> dedupeByPath(kept ++ addsByDir.getOrElse(d, Seq.empty)).sorted
+            .map(l => modifiedByPath.getOrElse(l.path, l))
+        d -> dedupeByPath(kept ++ addsByDir.getOrElse(d, Seq.empty)).sortBy(_.path)
       }.toMap
       // ALREADY COMMITTED (an interrupted commit's replay): every
       // touched dir carries exactly its planned post state — untouched
-      // dirs are unchanged by construction. Full-LINE comparison, not
+      // dirs are unchanged by construction. Full-ENTRY comparison, not
       // path sets: a plan whose only effect is an in-place DV retag
       // changes no path set, and a path-only test would read its replay
-      // as "already landed" before it ever committed. (Line equality is
-      // deterministic: footer stats re-read from the same files render
-      // the same entry lines the landed commit recorded.) This MUST run
+      // as "already landed" before it ever committed. (Entry equality
+      // is deterministic: footer stats re-read from the same files
+      // give the same entries the landed commit recorded.) This MUST run
       // before the staleness scan: a crash between the manifest rename
       // and the stage delete leaves a plan whose own commit sits inside
       // the (baseGen, latest] window, and scanning first would read the
       // replay as a conflict and abort a commit that already LANDED.
       val already = prevGen.isDefined && touchedDirs.forall { d =>
-        baseLinesByDir.getOrElse(d, Seq.empty).sorted == postTouched(d)
+        baseEntriesByDir.getOrElse(d, Seq.empty).sortBy(_.path) == postTouched(d)
       }
       if (already) done = true
       else {
@@ -864,10 +866,11 @@ object Streaming {
           // wildcard (an un-pruned merge with an insert clause)
           // conflicts on any add outside the already-checked dirs.
           if (keyEnvelopes.nonEmpty) {
-            val windowAdds: Option[Seq[String]] =
-              ((bg + 1) to prevGen.get).foldLeft(Option(Seq.empty[String])) {
+            val windowAdds: Option[Seq[ManifestEntry]] =
+              ((bg + 1) to prevGen.get).foldLeft(Option(Seq.empty[ManifestEntry])) {
                 (acc, g) =>
-                  for (a <- acc; l <- deltaAddLinesOf(fs, target, g)) yield a ++ l
+                  for (a <- acc; d <- deltaOf(fs, target, g))
+                    yield a ++ d.collect { case ManifestLine.Add(e) => e }
               }
             windowAdds match {
               case None =>
@@ -877,11 +880,10 @@ object Streaming {
                 val wildcard = keyEnvelopes.exists(_._1 == "*")
                 val typed = keyEnvelopes.filterNot(_._1 == "*")
                 val hit = adds.find { l =>
-                  if (wildcard) !(replacedDirs ++ volatileDirs)(dirOf(entryPath(l)))
+                  if (wildcard) !(replacedDirs ++ volatileDirs)(l.dir)
                   else {
-                    val b = entryBounds(l)
                     typed.forall { case (c, k, lo, hi) =>
-                      b.get(c) match {
+                      l.bounds.range(c) match {
                         case None => true // unprovable: conservative
                         case Some((bk, mn, mx)) =>
                           bk != k || boundsOverlapStr(k, mn, mx, lo, hi)
@@ -890,7 +892,7 @@ object Streaming {
                   }
                 }
                 hit.foreach(l => abortConflict(
-                  s"a concurrent commit added ${entryPath(l)} whose bounds " +
+                  s"a concurrent commit added ${l.path} whose bounds " +
                     "intersect this merge's key envelope — the staged " +
                     "not-matched decisions are stale"))
             }
@@ -901,19 +903,19 @@ object Streaming {
         val gen = prevGen.getOrElse(0L) + 1
         // bootstrap's first checkpoint must cover every dir, legacy
         // files included; steady state passes the touched dirs only
-        val postState: Map[String, Seq[String]] = bootstrapAll match {
+        val postState: Map[String, Seq[ManifestEntry]] = bootstrapAll match {
           case Some(all) =>
             val keptAll = all.collect {
               case (p, l) if !replacedDirs(dirOf(p)) => l
             }.toSeq
-            (keptAll ++ addLines).groupBy(l => dirOf(entryPath(l)))
-              .map { case (d, ls) => d -> dedupeByPath(ls).sorted }
+            (keptAll ++ addEntries).groupBy(_.dir)
+              .map { case (d, ls) => d -> dedupeByPath(ls).sortBy(_.path) }
           case None => postTouched
         }
         if (tryCommitManifest(fs, target, gen, postState,
-            tombstones.toSeq.sorted, addLines, schemaHash = commitSchema,
+            tombstones.toSeq.sorted, addEntries, schemaHash = commitSchema,
             tag = commitTagOpt, txn = commitTxnOpt,
-            modified = modifiedByPath.values.toSeq.sorted)) done = true
+            modified = modifiedByPath.values.toSeq.sortBy(_.path))) done = true
         // else: lost the CAS to a concurrent commit at `gen` — loop.
         // The staleness check above re-runs against the new latest
         // (baseGen is fixed), so an overlapping winner aborts and a
@@ -926,46 +928,17 @@ object Streaming {
     fs.delete(stage, true)
   }
 
-  /** Collapse duplicate entry lines for the same file path, keeping
-    * the most informative one (a stats-bearing `path\trows[\tbounds]`
-    * line is strictly longer than a bare legacy `path` line). The
-    * only legitimate source of duplicates is the concurrent-bootstrap
-    * window: a racing first-committer's live-tree listing captures
-    * another writer's mid-move files as bare lines, and that writer's
-    * own rebase then re-adds them with footer stats.
+  /** Collapse duplicate entries for the same file path, keeping the
+    * most informative one (a stats-bearing entry encodes strictly longer
+    * than a bare legacy `path` one). The only legitimate source of
+    * duplicates is the concurrent-bootstrap window: a racing
+    * first-committer's live-tree listing captures another writer's
+    * mid-move files as bare entries, and that writer's own rebase then
+    * re-adds them with footer stats.
     */
-  private def dedupeByPath(lines: Seq[String]): Seq[String] =
-    if (lines.lengthCompare(lines.iterator.map(entryPath).toSet.size) == 0) lines
-    else lines.groupBy(entryPath).valuesIterator.map(_.maxBy(_.length)).toSeq
-
-  /** Parse an entry line's DELETE-VECTOR tag — a trailing
-    * `dv:<sidecar>:<n>` field appended by [[deleteWhere]]: `sidecar`
-    * is a manifest-dir parquet file of (rel, pos) deleted row
-    * positions covering this entry COMPLETELY (merge-on-write: a
-    * re-delete unions the prior positions into its new sidecar), `n`
-    * their count. Every stats parser skips fields it does not
-    * recognize, so DV-free tables are byte-identical to before.
-    */
-  private[graft] def entryDv(line: String): Option[(String, Long)] =
-    line.split('\t').iterator.flatMap { f =>
-      // STRUCTURAL disambiguation (r17 advice, low): a real dv tag is
-      // exactly `dv:<sidecar>:<n>` — 3 colon parts with a numeric
-      // count. A BOUNDS field whose first zone-mapped column is
-      // literally named "dv" starts with "dv:" too but its tokens
-      // carry 4-5 colon parts (and commas), so the shape test keeps
-      // a hostile column name from misparsing as a sidecar reference.
-      if (!f.startsWith("dv:")) None
-      else f.split(':') match {
-        case Array(_, sidecar, n) if n.forall(_.isDigit) && !sidecar.contains(',') =>
-          Some((sidecar, n.toLong))
-        case _ => None
-      }
-    }.nextOption()
-
-  /** `line` with its dv tag replaced (or appended). */
-  private def withDvTag(line: String, sidecar: String, n: Long): String =
-    (line.split('\t').filterNot(_.startsWith("dv:")) :+ s"dv:$sidecar:$n")
-      .mkString("\t")
+  private def dedupeByPath(entries: Seq[ManifestEntry]): Seq[ManifestEntry] =
+    if (entries.lengthCompare(entries.iterator.map(_.path).toSet.size) == 0) entries
+    else entries.groupBy(_.path).valuesIterator.map(_.maxBy(_.encode.length)).toSeq
 
   /** True when any live entry of `gen` carries a delete-vector tag —
     * the reader-version probe: a consumer that cannot apply DVs (the
@@ -977,120 +950,38 @@ object Streaming {
       target: String,
       gen: Long
   ): Boolean =
-    manifestEntryLines(fs, target, gen).exists(l => entryDv(l).isDefined)
+    liveEntries(fs, target, gen).exists(_.dv.isDefined)
 
-  /** The path half of a manifest entry line
-    * (`path`, `path\trows` or `path\trows\tbounds`).
+  /** The manifest entry of the committed file `rel` under `root`: row
+    * count, zone-map bounds and the file's OWN schema fingerprint (an
+    * `sh:` tag) from its parquet FOOTER — one metadata read, no data
+    * pages. An unreadable/non-parquet file gets a bare stat-less entry
+    * (consumers treat stats as optional). The per-entry fingerprint
+    * lets a reader detect a mixed-schema generation from metadata alone
+    * and switch to a merged inference (r17 advice, low: the per-commit
+    * `# schema` header records only each commit's fingerprint). The
+    * bounds are the entry's ZONE MAP (the Iceberg/Delta file-skipping
+    * stats): min/max over the file's row groups for every top-level
+    * long / double / string column whose chunk statistics are complete
+    * — [[readCommittedRange]] prunes files against them before Spark
+    * ever lists a path.
     */
-  private def entryPath(line: String): String = {
-    val i = line.indexOf('\t')
-    if (i < 0) line else line.substring(0, i)
-  }
-
-  /** [[entryPath]] for the connector package. */
-  private[graft] def relOfEntry(line: String): String = entryPath(line)
-
-  /** Render one manifest entry line: the relative path, then (when the
-    * footer was readable) its row count, then (when any column had
-    * complete chunk statistics) its zone-map bounds.
-    */
-  private def entryLineOf(f: String, info: Option[FooterStats]): String =
-    info match {
-      case None => f
-      // `sh:<8hex>` — the file's OWN schema fingerprint as a trailing
-      // tag field (r17 advice, low: the per-commit `# schema` header
-      // records only each commit's fingerprint, so a single-footer
-      // reader on a table widened via allowSchemaEvolution could
-      // silently sample a pre-widening file; the per-entry tag lets
-      // any reader detect a mixed-schema generation from metadata
-      // alone and switch to a merged inference). Tag fields after the
-      // bounds are prefix-scanned, so every existing parser skips it.
-      case Some(i) if i.bounds.isEmpty => s"$f\t${i.rows}\t\tsh:${i.schemaHash}"
-      case Some(i) => s"$f\t${i.rows}\t${i.bounds}\tsh:${i.schemaHash}"
-    }
-
-  /** Decode an entry line's zone map: column -> (kind, min, max),
-    * fields URL-decoded. Empty for stat-less (legacy) entries.
-    */
-  private[graft] def entryBounds(line: String): Map[String, (Char, String, String)] = {
-    val parts = line.split('\t')
-    if (parts.length < 3) Map.empty
-    else parts(2).split(',').iterator.flatMap { tok =>
-      def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-      tok.split(':') match {
-        // `z` tokens are all-null markers (no values) — null counts
-        // only, never value bounds
-        case Array(n, k, lo, hi) if k.length == 1 && k != "z" =>
-          Some(dec(n) -> (k.head, dec(lo), dec(hi)))
-        case Array(n, k, lo, hi, _) if k.length == 1 && k != "z" =>
-          Some(dec(n) -> (k.head, dec(lo), dec(hi)))
-        case _ => None
-      }
-    }.toMap
-  }
-
-  /** An entry's OWN schema fingerprint (`sh:<hash>` tag field), when
-    * recorded. None on pre-r18 entries — readers treat an unknown
-    * fingerprint conservatively (it may differ from every known one).
-    * Same structural test as [[entryDv]]: a real tag has exactly 2
-    * colon parts, so a bounds field led by a column named "sh"
-    * (4-5 colon parts per token) never misparses.
-    */
-  private[graft] def entrySchemaHash(line: String): Option[String] =
-    line.split('\t').iterator.flatMap { f =>
-      if (!f.startsWith("sh:")) None
-      else f.split(':') match {
-        case Array(_, h) if !h.contains(',') => Some(h)
-        case _ => None
-      }
-    }.nextOption()
-
-  /** Per-column NULL COUNTS from an entry's zone-map tokens — the
-    * 5th field of `n:k:lo:hi:nc`, or the count of an all-null
-    * `n:z:::nc` marker. A column absent here has an UNKNOWABLE null
-    * count (some chunk lacked the statistic) and can never null-prune.
-    */
-  private[graft] def entryNullCounts(line: String): Map[String, Long] = {
-    val parts = line.split('\t')
-    if (parts.length < 3) Map.empty
-    else parts(2).split(',').iterator.flatMap { tok =>
-      tok.split(':') match {
-        case Array(n, k, _, _, nc) if k.length == 1 =>
-          scala.util.Try(nc.toLong).toOption
-            .map(java.net.URLDecoder.decode(n, "UTF-8") -> _)
-        case _ => None
-      }
-    }.toMap
-  }
-
-  /** Row count, schema fingerprint AND per-column min/max bounds from
-    * a parquet file's FOOTER — one metadata read, no data pages. None
-    * for unreadable/non-parquet files (the entry then carries no
-    * stats; consumers treat stats as optional). The schema fingerprint
-    * (8 hex chars over the parquet MessageType string) feeds the
-    * manifest's per-commit `# schema` header, which is how a follower
-    * detects drift (a widened column landing mid-table) without
-    * reading data. The column bounds become the entry's ZONE MAP (the
-    * Iceberg/Delta file-skipping stats): min/max over the file's row
-    * groups for every top-level long / double / string column whose
-    * chunk statistics are complete — [[readCommittedRange]] prunes
-    * files against them before Spark ever lists a path.
-    */
-  private case class FooterStats(rows: Long, schemaHash: String, bounds: String)
-
-  private def footerInfo(
+  private def footerEntry(
       fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path
-  ): Option[FooterStats] =
+      root: org.apache.hadoop.fs.Path,
+      rel: String
+  ): ManifestEntry =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, fs.getConf)
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(root, rel), fs.getConf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try Some(FooterStats(r.getRecordCount,
-        f"${scala.util.hashing.MurmurHash3.stringHash(
-          r.getFooter.getFileMetaData.getSchema.toString)}%08x",
-        columnBoundsOf(r)))
+      try ManifestEntry(rel, Some(r.getRecordCount), columnBoundsOf(r),
+        Seq(Tag.SchemaHash(f"${scala.util.hashing.MurmurHash3.stringHash(
+          r.getFooter.getFileMetaData.getSchema.toString)}%08x")))
       finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch {
+      case scala.util.control.NonFatal(_) => ManifestEntry.bare(rel)
+    }
 
   /** Longest string bound recorded in a manifest entry — longer values
     * simply drop that column's zone map for the file (the file is then
@@ -1099,22 +990,20 @@ object Streaming {
     */
   private val MaxStringBound = 64
 
-  /** Encode the file's per-column bounds as
-    * `name:kind:min:max[,...]` — kind `l` (integral), `d` (floating),
-    * `s` (UTF-8 string); every field URL-encoded so separators can
-    * never collide with values. A column is recorded only when EVERY
+  /** The file's per-column bounds — kind `l` (integral), `d`
+    * (floating), `s` (UTF-8 string). A column is recorded only when EVERY
     * row group carries usable statistics for it (a single stats-less
     * chunk makes the file unboundable on that column — it must never
     * be pruned). All-null chunks contribute no values; nulls never
     * satisfy a range predicate, so bounds over non-null values prune
     * soundly.
     */
-  private def columnBoundsOf(r: org.apache.parquet.hadoop.ParquetFileReader): String = {
+  private def columnBoundsOf(r: org.apache.parquet.hadoop.ParquetFileReader): Bounds = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val blocks = r.getFooter.getBlocks.asScala
-    if (blocks.isEmpty) return ""
+    if (blocks.isEmpty) return Bounds.of(Nil)
     // name -> (kind, Option(min, max), Option(nullCount)); removed
     // (and blacklisted) on any unusable chunk. A column with a null
     // count but NO values (all rows null) is still recorded — as a
@@ -1167,7 +1056,7 @@ object Streaming {
               }
             } else {
               // Option, NOT null-into-a-destructure: assigning null to
-              // `val (mn, mx)` throws a MatchError that footerInfo's
+              // `val (mn, mx)` throws a MatchError that footerEntry's
               // catch-all swallows, silently costing the WHOLE entry
               // its row count and every other column's bounds (ADVICE
               // r16). None drops only THIS column's zone map.
@@ -1203,20 +1092,17 @@ object Streaming {
         }
       } else if (path.length != 1) () // nested: never recorded
     }
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     // cap the recorded columns (schema order): a 500-column table must
     // not turn its manifest into a stats dump — the leading columns
-    // are where keys and cluster dimensions live by convention.
-    // Token shapes: `n:k:lo:hi:nc` (bounds + null count),
-    // `n:k:lo:hi` (bounds, count unknowable), `n:z:::nc` (ALL rows
-    // null — no values, count only). A column with neither is omitted.
-    bounds.take(MaxBoundColumns).flatMap {
-      case (n, (k, Some((lo, hi)), nc)) =>
-        val base = s"${enc(n)}:$k:${enc(lo.toString)}:${enc(hi.toString)}"
-        Some(nc.fold(base)(c => s"$base:$c"))
-      case (n, (_, None, Some(c))) => Some(s"${enc(n)}:z:::$c")
+    // are where keys and cluster dimensions live by convention. A
+    // column is recorded with bounds (and its null count when known),
+    // or as all-null `z` with its count only; with neither it is
+    // omitted.
+    Bounds.of(bounds.take(MaxBoundColumns).toSeq.flatMap {
+      case (n, (k, Some((lo, hi)), nc)) => Some(n -> ColumnStats(k, lo.toString, hi.toString, nc))
+      case (n, (_, None, Some(c))) => Some(n -> ColumnStats('z', "", "", Some(c)))
       case _ => None
-    }.mkString(",")
+    })
   }
 
   /** Most columns recorded per entry's zone map (schema order). */
@@ -1227,11 +1113,6 @@ object Streaming {
     case 'd' => a.asInstanceOf[Double] < b.asInstanceOf[Double]
     case _ => utf8Lt(a.asInstanceOf[String], b.asInstanceOf[String])
   }
-
-  private def rowCountOf(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path
-  ): Option[Long] = footerInfo(fs, p).map(_.rows)
 
   /** Heal an interrupted commit at `target`: a stage carrying the plan
     * rolls FORWARD (the staged files are complete — finish the moves
@@ -1378,12 +1259,12 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long,
-      postState: Map[String, Seq[String]],
+      postState: Map[String, Seq[ManifestEntry]],
       tombstones: Seq[String],
-      adds: Seq[String],
+      adds: Seq[ManifestEntry],
       forceCheckpoint: Boolean = false,
       schemaHash: Option[String] = None,
-      modified: Seq[String] = Nil,
+      modified: Seq[ManifestEntry] = Nil,
       tag: Option[String] = None,
       txn: Option[(String, Long)] = None
   ): Boolean = {
@@ -1427,15 +1308,12 @@ object Streaming {
       case Some((scope, id)) =>
         inheritedTxns.updated(scope, math.max(id, inheritedTxns.getOrElse(scope, Long.MinValue)))
     }
-    val header = schemaHash.toSeq.map(h => s"# schema $h") ++
-      tag.toSeq.map(t => s"# tag $t") ++
-      txns.toSeq.sortBy(_._1).map { case (s, i) => s"# txn $s $i" } ++
-      (if (forceCheckpoint) Seq("# rebuild") else Nil)
+    val header = CommitHeader(schemaHash, tag, txns, rebuild = forceCheckpoint).lines
     // `~` = entry modified in place (a delete-vector tag): the full
     // new entry line rides in the delta so chains reconstruct and
     // conflict scans see the dir changed without any file add
-    val delta = tombstones.map(t => s"- $t") ++ adds.map(a => s"+ $a") ++
-      modified.map(m => s"~ $m")
+    val delta = tombstones.map(ManifestLine.Remove) ++ adds.map(ManifestLine.Add) ++
+      modified.map(ManifestLine.Modify)
     // per-dir manifests written by THIS attempt — deleted on a lost CAS
     val written = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
     val (prefix, body) =
@@ -1443,7 +1321,7 @@ object Streaming {
         ("gen", header ++ checkpointRefLines(fs, target, gen, postState, token, written) ++ delta)
       else ("inc", header ++ delta)
     val tmp = new org.apache.hadoop.fs.Path(mdir, s".$prefix-$gen.tmp-$token")
-    writeLines(fs, tmp, body)
+    writeLines(fs, tmp, body.map(_.encode))
     val dst = new org.apache.hadoop.fs.Path(mdir, f"$prefix-$gen%012d")
     val twin = new org.apache.hadoop.fs.Path(mdir,
       f"${if (checkpoint) "inc" else "gen"}-$gen%012d")
@@ -1485,29 +1363,30 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long,
-      postState: Map[String, Seq[String]],
+      postState: Map[String, Seq[ManifestEntry]],
       token: String,
       written: scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]
-  ): Seq[String] = {
+  ): Seq[ManifestLine.Ref] = {
     val mdir = manifestDir(target)
     // write the dirty dirs' per-dir manifests on the commit pool: each
     // is an independent create of a uniquely-named file (no rename
     // dance; a crashed or losing attempt's orphan is swept by
     // pruneManifests once its generation ages past the horizon) — a
     // 500-dir bootstrap writes them in O(dirs / threads), not serially
-    def writeDirManifests(dirty: Seq[(String, Seq[String])]): Seq[(String, String)] = {
+    def writeDirManifests(
+        dirty: Seq[(String, Seq[ManifestEntry])]): Seq[ManifestLine.Ref] = {
       val named = dirty.filter(_._2.nonEmpty).sortBy(_._1).zipWithIndex
         .map { case ((d, es), i) => (d, es, f"m-$gen%012d-$token-$i") }
       named.foreach { case (_, _, n) =>
         written += new org.apache.hadoop.fs.Path(mdir, n)
       }
       inParallel(named) { case (d, es, n) =>
-        writeLines(fs, new org.apache.hadoop.fs.Path(mdir, n), es.sorted)
-        d -> n
+        writeLines(fs, new org.apache.hadoop.fs.Path(mdir, n), es.sortBy(_.path).map(_.encode))
+        ManifestLine.Ref(d, n)
       }
     }
     val prevCkpt = checkpointGens(fs, target).filter(_ < gen).lastOption
-    val refs: Seq[(String, String)] = prevCkpt match {
+    prevCkpt match {
       case None => // first checkpoint: postState covers the whole table
         writeDirManifests(postState.toSeq)
       case Some(pc) =>
@@ -1517,104 +1396,71 @@ object Streaming {
           ((pc + 1) until gen).foldLeft(Option(Set.empty[String])) { (acc, g) =>
             for (a <- acc; d <- deltaDirsOf(fs, target, g)) yield a ++ d
           }
-        (readCheckpointRefs(fs, target, pc), dirtyBetween) match {
-          case (Some(prevRefs), Some(between)) =>
+        (readCheckpoint(fs, target, pc), dirtyBetween) match {
+          case (Right(prevRefs), Some(between)) =>
             val dirty = between ++ postState.keySet
-            val clean = prevRefs.filterNot { case (d, _) => dirty(d) }
+            val clean = prevRefs.filterNot(r => dirty(r.dir))
             // dirty-but-untouched dirs keep their current (gen-1) state
             val untouched = dirty -- postState.keySet
-            val recon: Map[String, Seq[String]] =
+            val recon: Map[String, Seq[ManifestEntry]] =
               if (untouched.isEmpty) Map.empty
-              else entriesForDirs(fs, target, gen - 1, Some(untouched))
-                .groupBy(l => dirOf(entryPath(l)))
-            (clean ++ writeDirManifests((postState ++ recon).toSeq)).sortBy(_._1)
+              else entriesForDirs(fs, target, gen - 1, Some(untouched)).groupBy(_.dir)
+            (clean ++ writeDirManifests((postState ++ recon).toSeq)).sortBy(_.dir)
           case _ =>
             // legacy flat previous checkpoint (or pruned window): one
             // full rewrite, after which the table is on the new format
-            val all = entriesForDirs(fs, target, gen - 1, None)
-              .groupBy(l => dirOf(entryPath(l)))
+            val all = entriesForDirs(fs, target, gen - 1, None).groupBy(_.dir)
             writeDirManifests(((all -- postState.keySet) ++ postState).toSeq)
         }
     }
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    refs.map { case (d, m) => s"@ ${enc(d)}\t$m" }
   }
 
-  /** A retained checkpoint's dir -> per-dir-manifest references.
-    * None = the checkpoint is in LEGACY flat format (plain entry
-    * lines); an EMPTY new-format checkpoint (a table with zero live
-    * rows) returns Some(empty).
+  /** A retained checkpoint's body: its dir -> per-dir-manifest
+    * references, or — in the LEGACY flat format — the entries
+    * themselves. An EMPTY new-format checkpoint (a table with zero
+    * live rows) is Right(empty).
     */
-  private def readCheckpointRefs(
+  private def readCheckpoint(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Option[Seq[(String, String)]] = {
-    val lines = readManifestFile(fs,
+  ): Either[Seq[ManifestEntry], Seq[ManifestLine.Ref]] = {
+    val lines = readManifest(fs,
       new org.apache.hadoop.fs.Path(manifestDir(target), f"gen-$gen%012d"))
-    val plain = lines.filterNot(l =>
-      l.startsWith("# ") || l.startsWith("@ ") || l.startsWith("+ ") ||
-        l.startsWith("- ") || l.startsWith("~ "))
-    if (plain.nonEmpty) None // legacy flat entry list
-    else Some(lines.collect { case l if l.startsWith("@ ") =>
-      val t = l.substring(2).split('\t')
-      (java.net.URLDecoder.decode(t(0), "UTF-8"), t(1))
-    })
+    if (ManifestLine.isLegacyFlat(lines)) Left(lines.collect { case ManifestLine.Entry(e) => e })
+    else Right(lines.collect { case r: ManifestLine.Ref => r })
   }
 
-  /** The directories touched by generation `gen`'s own commit, from
-    * its recorded `+`/`-` delta lines. None when the information is
-    * not available — the manifest file is gone, the checkpoint is
-    * legacy flat, or it is a `# rebuild` (writeManifest after a
-    * wholesale swap, whose physical delta is unknowable) — and a
-    * conflict scan must then refuse conservatively.
+  /** The delta lines (`+`/`-`/`~`) recorded by generation `gen`'s own
+    * commit. None when the information is not available — the manifest
+    * file is gone, the checkpoint is legacy flat, or it is a
+    * `# rebuild` (writeManifest after a wholesale swap, whose physical
+    * delta is unknowable) — and a conflict scan must then refuse
+    * conservatively.
+    */
+  private def deltaOf(
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      gen: Long
+  ): Option[Seq[ManifestLine]] =
+    manifestFileOf(fs, target, gen).map(readManifest(fs, _)).filterNot(lines =>
+      ManifestLine.isLegacyFlat(lines) || CommitHeader.of(lines).rebuild)
+
+  /** The directories touched by generation `gen`'s own commit
+    * ([[deltaOf]]); a DV delete changes a dir's LIVE ROWS without
+    * touching its file set, so its `~` lines count — it must conflict
+    * a racing merge of that dir.
     */
   private def deltaDirsOf(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Option[Set[String]] = {
-    val mdir = manifestDir(target)
-    val p = Seq(f"inc-$gen%012d", f"gen-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
-    p.flatMap { path =>
-      val lines = readManifestFile(fs, path)
-      val legacyCkpt = path.getName.startsWith("gen-") &&
-        lines.exists(l => !l.startsWith("# ") && !l.startsWith("@ ") &&
-          !l.startsWith("+ ") && !l.startsWith("- ") && !l.startsWith("~ "))
-      if (legacyCkpt || lines.contains("# rebuild")) None
-      else Some(lines.collect {
-        case l if l.startsWith("+ ") => dirOf(entryPath(l.substring(2)))
-        case l if l.startsWith("- ") => dirOf(l.substring(2))
-        // a DV delete changes a dir's LIVE ROWS without touching its
-        // file set — it must conflict a racing merge of that dir
-        case l if l.startsWith("~ ") => dirOf(entryPath(l.substring(2)))
-      }.toSet)
-    }
-  }
-
-  /** The full ADDED entry lines (`+ ` deltas) of one generation's
-    * commit — what the key-envelope conflict check inspects. None when
-    * the generation cannot be scanned exactly (legacy checkpoint,
-    * `# rebuild`, pruned), mirroring [[deltaDirsOf]].
-    */
-  private def deltaAddLinesOf(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Option[Seq[String]] = {
-    val mdir = manifestDir(target)
-    val p = Seq(f"inc-$gen%012d", f"gen-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
-    p.flatMap { path =>
-      val lines = readManifestFile(fs, path)
-      val legacyCkpt = path.getName.startsWith("gen-") &&
-        lines.exists(l => !l.startsWith("# ") && !l.startsWith("@ ") &&
-          !l.startsWith("+ ") && !l.startsWith("- ") && !l.startsWith("~ "))
-      if (legacyCkpt || lines.contains("# rebuild")) None
-      else Some(lines.collect { case l if l.startsWith("+ ") => l.substring(2) })
-    }
-  }
+  ): Option[Set[String]] =
+    deltaOf(fs, target, gen).map(_.iterator.collect {
+      case ManifestLine.Add(e) => e.dir
+      case ManifestLine.Remove(p) => dirOf(p)
+      case ManifestLine.Modify(e) => e.dir
+    }.toSet)
 
   /** [[boundsOverlap]] with string-rendered query bounds (the plan's
     * `E` line carrier format).
@@ -1956,8 +1802,8 @@ object Streaming {
         // gen- file between our listStatus and this read (ADVICE r16):
         // a vanished checkpoint retains nothing, so it contributes no
         // references — it must not fail a verb whose commit landed
-        try readCheckpointRefs(fs, target, n.stripPrefix("gen-").toLong)
-          .getOrElse(Seq.empty).map(_._2)
+        try readCheckpoint(fs, target, n.stripPrefix("gen-").toLong)
+          .fold(_ => Nil, _.map(_.file))
         catch {
           case _: java.io.FileNotFoundException => Nil
           case _: IllegalStateException => Nil
@@ -1982,13 +1828,9 @@ object Streaming {
     // always a CHECKPOINT: a full-relist commit has no delta basis
     // (the rebuild physically replaced the previous generation's files)
     val targetPath = new org.apache.hadoop.fs.Path(target)
-    val footers = inParallel(listRel(fs, targetPath).sorted) { f =>
-      f -> footerInfo(fs, new org.apache.hadoop.fs.Path(targetPath, f))
-    }
-    val byDir = footers.map { case (f, info) => entryLineOf(f, info) }
-      .groupBy(l => dirOf(entryPath(l)))
-      .map { case (d, ls) => d -> ls.sorted }
-    val schema = footers.flatMap(_._2.map(_.schemaHash)).headOption
+    val entries = inParallel(listRel(fs, targetPath).sorted)(footerEntry(fs, targetPath, _))
+    val byDir = entries.groupBy(_.dir).map { case (d, es) => d -> es.sortBy(_.path) }
+    val schema = entries.flatMap(_.schemaHash).headOption
     // single-writer path by contract (fresh table / post-rebuild), but
     // the CAS loop keeps even a misuse linearizable
     var gen = manifestGenerations(fs, target).lastOption.getOrElse(0L) + 1
@@ -2039,8 +1881,27 @@ object Streaming {
     new String(buf, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
   }
 
-  /** The entry LINES (`path`, `path\trows` or `path\trows\tbounds`) of
-    * one retained generation: the nearest checkpoint at or below it
+  /** One manifest file, each line decoded once. */
+  private def readManifest(
+      fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path
+  ): Seq[ManifestLine] = readManifestFile(fs, p).map(ManifestLine.decode)
+
+  /** The manifest file generation `gen` committed (checkpoint or
+    * delta), if retained.
+    */
+  private def manifestFileOf(
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      gen: Long
+  ): Option[org.apache.hadoop.fs.Path] = {
+    val mdir = manifestDir(target)
+    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
+      .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
+  }
+
+  /** The live ENTRIES (paths plus stats and tags) of one retained
+    * generation: the nearest checkpoint at or below it
     * (a MANIFEST LIST — its per-dir manifest files loaded in parallel,
     * or a legacy flat entry list read verbatim) plus the intervening
     * deltas (≤ CheckpointEvery small reads; `-` lines remove by path).
@@ -2048,13 +1909,13 @@ object Streaming {
     * time-travel read beyond the horizon must refuse, never silently
     * read the wrong snapshot.
     */
-  private[graft] def manifestEntryLines(
+  private[graft] def liveEntries(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Seq[String] = entriesForDirs(fs, target, gen, None)
+  ): Seq[ManifestEntry] = entriesForDirs(fs, target, gen, None)
 
-  /** [[manifestEntryLines]] RESTRICTED to `dirs` (None = all): the
+  /** [[liveEntries]] RESTRICTED to `dirs` (None = all): the
     * manifest-list layout makes this O(requested dirs' entries + #dir
     * refs + window deltas) — a shard-scoped verb on a million-file
     * table resolves its touched shards without ever materializing the
@@ -2065,7 +1926,7 @@ object Streaming {
       target: String,
       gen: Long,
       dirs: Option[Set[String]]
-  ): Seq[String] = {
+  ): Seq[ManifestEntry] = {
     val mdir = manifestDir(target)
     def refuse(): Nothing = throw new IllegalStateException(
       s"manifest generation $gen of $target is not retained " +
@@ -2076,18 +1937,17 @@ object Streaming {
     if (!hasCkptAtGen &&
         !fs.exists(new org.apache.hadoop.fs.Path(mdir, f"inc-$gen%012d"))) refuse()
     val base = checkpointGens(fs, target).filter(_ <= gen).lastOption.getOrElse(refuse())
-    val entries = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    readCheckpointRefs(fs, target, base) match {
-      case Some(refs) =>
-        val want = refs.filter { case (d, _) => wanted(d) }
-        inParallel(want) { case (_, m) =>
-          readManifestFile(fs, new org.apache.hadoop.fs.Path(mdir, m))
-        }.flatten.foreach(l => entries(entryPath(l)) = l)
-      case None => // legacy flat checkpoint
-        readManifestFile(fs, new org.apache.hadoop.fs.Path(mdir, f"gen-$base%012d"))
-          .filterNot(_.startsWith("# "))
-          .filter(l => wanted(dirOf(entryPath(l))))
-          .foreach(l => entries(entryPath(l)) = l)
+    val entries = scala.collection.mutable.LinkedHashMap.empty[String, ManifestEntry]
+    readCheckpoint(fs, target, base) match {
+      case Right(refs) =>
+        inParallel(refs.filter(r => wanted(r.dir))) { r =>
+          readManifest(fs, new org.apache.hadoop.fs.Path(mdir, r.file))
+        }.flatten.foreach {
+          case ManifestLine.Entry(e) => entries(e.path) = e
+          case _ => ()
+        }
+      case Left(legacy) =>
+        legacy.foreach(e => if (wanted(e.dir)) entries(e.path) = e)
     }
     var g = base + 1
     while (g <= gen) {
@@ -2096,25 +1956,35 @@ object Streaming {
       // own generation (base == gen then); every intermediate must be
       // a delta — a hole means the chain was pruned out from under us
       if (!fs.exists(inc)) refuse()
-      readManifestFile(fs, inc).foreach { line =>
-        if (line.startsWith("+ ")) {
-          val l = line.substring(2)
-          if (wanted(dirOf(entryPath(l)))) entries(entryPath(l)) = l
-        } else if (line.startsWith("- ")) entries.remove(line.substring(2))
-        else if (line.startsWith("~ ")) {
-          // ENTRY MODIFIED in place (a delete-vector tag landed): same
-          // path, new line — distinct from `+` so followers never read
-          // the file's rows as newly added
-          val l = line.substring(2)
-          if (wanted(dirOf(entryPath(l)))) entries(entryPath(l)) = l
-        } else if (line.startsWith("# ")) () // header (schema fingerprint)
-        else throw new IllegalStateException(
-          s"malformed delta line in $inc: '$line'")
+      readManifest(fs, inc).foreach {
+        case ManifestLine.Add(e) => if (wanted(e.dir)) entries(e.path) = e
+        case ManifestLine.Remove(p) => entries.remove(p)
+        // ENTRY MODIFIED in place (a delete-vector tag landed): same
+        // path, new entry — distinct from `+` so followers never read
+        // the file's rows as newly added
+        case ManifestLine.Modify(e) => if (wanted(e.dir)) entries(e.path) = e
+        case _: ManifestLine.Header => ()
+        case line => throw new IllegalStateException(
+          s"malformed delta line in $inc: '${line.encode}'")
       }
       g += 1
     }
     entries.values.toSeq
   }
+
+  /** The `# ` header of generation `gen`'s commit — empty for a
+    * missing generation. Header lines lead the file, so the read stops
+    * at the first other line.
+    */
+  private def commitHeader(
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      gen: Long
+  ): CommitHeader =
+    manifestFileOf(fs, target, gen).fold(CommitHeader()) { p =>
+      CommitHeader.of(readManifestFile(fs, p).iterator.map(ManifestLine.decode)
+        .takeWhile(_.isInstanceOf[ManifestLine.Header]).toSeq)
+    }
 
   /** The schema fingerprint recorded by generation `gen`'s commit (the
     * `# schema` header: a hash of the parquet schema its ADDED files
@@ -2127,14 +1997,7 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Option[String] = {
-    val mdir = manifestDir(target)
-    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n))
-      .find(fs.exists)
-      .flatMap(p => readManifestFile(fs, p)
-        .collectFirst { case l if l.startsWith("# schema ") => l.stripPrefix("# schema ") })
-  }
+  ): Option[String] = commitHeader(fs, target, gen).schemaHash
 
   /** The idempotency TAG recorded by generation `gen`'s commit
     * (`# tag` header), if any — the streaming sink's
@@ -2146,14 +2009,7 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Option[String] = {
-    val mdir = manifestDir(target)
-    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n))
-      .find(fs.exists)
-      .flatMap(p => readManifestFile(fs, p)
-        .collectFirst { case l if l.startsWith("# tag ") => l.stripPrefix("# tag ") })
-  }
+  ): Option[String] = commitHeader(fs, target, gen).tag
 
   /** The per-scope TRANSACTION high-water marks recorded by (and
     * inherited into) generation `gen`'s commit header (`# txn` lines)
@@ -2165,23 +2021,7 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Map[String, Long] = {
-    val mdir = manifestDir(target)
-    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n))
-      .find(fs.exists)
-      .map(p => readManifestFile(fs, p).iterator
-        .takeWhile(_.startsWith("# "))
-        .filter(_.startsWith("# txn "))
-        .flatMap { l =>
-          l.stripPrefix("# txn ").split(' ') match {
-            case Array(scope, id) if id.forall(c => c.isDigit || c == '-') =>
-              scala.util.Try(id.toLong).toOption.map(scope -> _)
-            case _ => None
-          }
-        }.toMap)
-      .getOrElse(Map.empty)
-  }
+  ): Map[String, Long] = commitHeader(fs, target, gen).txns
 
   /** The durable high-water mark of transaction scope `scope`: the
     * max id any commit recorded under `# txn scope <id>`, read from
@@ -2204,7 +2044,7 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Seq[String] = manifestEntryLines(fs, target, gen).map(entryPath)
+  ): Seq[String] = liveEntries(fs, target, gen).map(_.path)
 
   /** The relative data-file PATHS of one retained generation,
     * restricted to `dirs` — O(requested dirs + #dir refs) under the
@@ -2216,7 +2056,7 @@ object Streaming {
       target: String,
       gen: Long,
       dirs: Set[String]
-  ): Seq[String] = entriesForDirs(fs, target, gen, Some(dirs)).map(entryPath)
+  ): Seq[String] = entriesForDirs(fs, target, gen, Some(dirs)).map(_.path)
 
   /** SUPERSET of the directory names holding live entries at `gen`:
     * the base checkpoint's ref dirs plus every dir added by the
@@ -2237,16 +2077,13 @@ object Streaming {
         s"manifest generation $gen of $target is not retained " +
           s"(retained: ${manifestGenerations(fs, target).mkString(",")}) — " +
           s"the retention horizon is $ManifestKeep generations"))
-    val fromCkpt: Set[String] = readCheckpointRefs(fs, target, base) match {
-      case Some(refs) => refs.map(_._1).toSet
-      case None => readManifestFile(fs,
-          new org.apache.hadoop.fs.Path(mdir, f"gen-$base%012d"))
-        .filterNot(_.startsWith("# ")).map(l => dirOf(entryPath(l))).toSet
+    val fromCkpt: Set[String] = readCheckpoint(fs, target, base) match {
+      case Right(refs) => refs.map(_.dir).toSet
+      case Left(legacy) => legacy.map(_.dir).toSet
     }
     ((base + 1) to gen).foldLeft(fromCkpt) { (acc, g) =>
-      acc ++ readManifestFile(fs,
-          new org.apache.hadoop.fs.Path(mdir, f"inc-$g%012d"))
-        .collect { case l if l.startsWith("+ ") => dirOf(entryPath(l.substring(2))) }
+      acc ++ readManifest(fs, new org.apache.hadoop.fs.Path(mdir, f"inc-$g%012d"))
+        .collect { case ManifestLine.Add(e) => e.dir }
     }
   }
 
@@ -2263,14 +2100,12 @@ object Streaming {
       target: String
   ): Option[Map[String, Long]] =
     manifestGenerations(fs, target).lastOption.flatMap { g =>
-      val lines = manifestEntryLines(fs, target, g)
-      if (lines.exists(_.indexOf('\t') < 0)) None // legacy entries: no stats
-      else Some(lines
-        // live = physical footer count minus the entry's delete-vector
-        // positions (merge-on-read deletes keep counts metadata-exact)
-        .map(l => dirOf(entryPath(l)) ->
-          (l.split('\t')(1).toLong - entryDv(l).map(_._2).getOrElse(0L)))
-        .groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).sum })
+      // live = physical footer count minus the entry's delete-vector
+      // positions (merge-on-read deletes keep counts metadata-exact);
+      // None when any entry is legacy stat-less
+      val live = liveEntries(fs, target, g).map(e => e.liveRows.map(e.dir -> _))
+      if (live.exists(_.isEmpty)) None
+      else Some(live.flatten.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).sum })
     }
 
   /** METADATA-ONLY row count of the latest committed generation: the
@@ -2304,15 +2139,12 @@ object Streaming {
       // a ZERO-ROW entry (an emptied shard's schema-bearing file) has
       // no bounds and is VACUOUS for MIN/MAX — only a row-carrying
       // entry without bounds is ambiguous and forces the refusal
-      val lines = manifestEntryLines(fs, target, g).filterNot { l =>
-        val parts = l.split('\t')
-        parts.length >= 2 && parts(1) == "0"
-      }
+      val lines = liveEntries(fs, target, g).filterNot(_.isEmptyFile)
       if (lines.isEmpty) None
       // a delete-vector entry's bounds cover DELETED rows too — the
       // recorded extreme may be a deleted row, so MIN/MAX must refuse
       // (COUNT stays exact via the per-entry dv counts)
-      else if (lines.exists(l => entryDv(l).isDefined)) None
+      else if (lines.exists(_.dv.isDefined)) None
       else {
         // a file whose column is ALL NULL (recorded `z` marker with
         // nc == rows) is VACUOUS for MIN/MAX — the r16 refusal
@@ -2320,16 +2152,12 @@ object Streaming {
         // by the recorded null counts; only a file with neither bounds
         // nor a full-null proof still refuses
         val contributing = lines.filterNot { l =>
-          entryBounds(l).get(column).isEmpty && {
-            val rows = l.split('\t').lift(1).flatMap(s =>
-              scala.util.Try(s.toLong).toOption)
-            val nc = entryNullCounts(l).get(column)
-            rows.isDefined && nc.isDefined && nc == rows
-          }
+          l.bounds.range(column).isEmpty &&
+            l.rows.isDefined && l.bounds.nulls(column) == l.rows
         }
         if (contributing.isEmpty) None // every row of the column is null
         else {
-        val perFile = contributing.map(l => entryBounds(l).get(column))
+        val perFile = contributing.map(l => l.bounds.range(column))
         if (perFile.exists(_.isEmpty)) None // any unbounded file: refuse
         else {
           val bs = perFile.flatten
@@ -2363,13 +2191,10 @@ object Streaming {
       column: String
   ): Option[Long] =
     manifestGenerations(fs, target).lastOption.flatMap { g =>
-      val lines = manifestEntryLines(fs, target, g).filterNot { l =>
-        val parts = l.split('\t')
-        parts.length >= 2 && parts(1) == "0"
-      }
-      if (lines.exists(l => entryDv(l).isDefined)) None
+      val lines = liveEntries(fs, target, g).filterNot(_.isEmptyFile)
+      if (lines.exists(_.dv.isDefined)) None
       else {
-        val per = lines.map(l => entryNullCounts(l).get(column))
+        val per = lines.map(l => l.bounds.nulls(column))
         if (lines.nonEmpty && per.exists(_.isEmpty)) None
         else Some(per.flatten.sum)
       }
@@ -2420,11 +2245,11 @@ object Streaming {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireRetained(fs, target, gen)
-    val lines = manifestEntryLines(fs, target, gen)
+    val lines = liveEntries(fs, target, gen)
     require(lines.nonEmpty, s"generation $gen of $target has no entries")
     applyDeleteVectors(spark, target, lines,
       spark.read.option("basePath", target)
-        .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*))
+        .parquet(lines.map(l => s"$target/${l.path}"): _*))
   }
 
   /** INCREMENTAL consumption: the rows carried by files ADDED between
@@ -2462,19 +2287,19 @@ object Streaming {
     // tombstones, and files only in `toGen` are retained with it; a
     // pruned fromGen MANIFEST (unreadable chain) still refuses loudly
     val before = manifestEntries(fs, target, fromGen).toSet
-    val toLines = manifestEntryLines(fs, target, toGen)
-    val addedLines = toLines.filterNot(l => before(entryPath(l)))
-    if (addedLines.isEmpty) None
+    val toEntries = liveEntries(fs, target, toGen)
+    val addedEntries = toEntries.filterNot(l => before(l.path))
+    if (addedEntries.isEmpty) None
     else Some(
       // DV-applied at the TO generation: a file added in the window
       // and then delete-vector-tagged still physically carries the
       // masked rows — delivering them raw would resurrect retracted
       // rows in every derived table (found in the r17 self-review;
       // followTable's window guard covers only its own path)
-      applyDeleteVectors(spark, target, addedLines,
+      applyDeleteVectors(spark, target, addedEntries,
         spark.read.option("basePath", target)
           .option("mergeSchema", mergeSchema.toString)
-          .parquet(addedLines.map(l => s"$target/${entryPath(l)}"): _*)))
+          .parquet(addedEntries.map(l => s"$target/${l.path}"): _*)))
   }
 
   /** MERGE-ON-READ: anti-join the delete vectors referenced by
@@ -2489,17 +2314,17 @@ object Streaming {
   private[graft] def applyDeleteVectors(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
-      lines: Seq[String],
+      lines: Seq[ManifestEntry],
       df: DataFrame
   ): DataFrame = {
-    val tags = lines.flatMap(entryDv)
+    val tags = lines.flatMap(_.dv)
     if (tags.isEmpty) df
     else {
       val targetPath = new org.apache.hadoop.fs.Path(target)
       val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val dv = taggedDvPositions(spark, target, lines)
         .select(col("rel").as("__gdv_rel"), col("pos").as("__gdv_pos"))
-      val totalDeleted = tags.map(_._2).sum
+      val totalDeleted = tags.map(_.n).sum
       val dvSide = if (totalDeleted <= 4000000L) broadcast(dv) else dv
       val qualRoot = fs.makeQualified(targetPath).toString
       df.withColumn("__gdv_rel",
@@ -2531,9 +2356,9 @@ object Streaming {
   private def taggedDvPositions(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
-      lines: Seq[String]
+      lines: Seq[ManifestEntry]
   ): DataFrame = {
-    val tagged = lines.flatMap(l => entryDv(l).map(_._1 -> entryPath(l)))
+    val tagged = lines.flatMap(l => l.dv.map(_.sidecar -> l.path))
     if (tagged.isEmpty) emptyPositions(spark)
     else {
       val mdir = manifestDir(target)
@@ -2555,13 +2380,13 @@ object Streaming {
   private def livePositionedScan(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
-      lines: Seq[String]
+      lines: Seq[ManifestEntry]
   ): DataFrame = {
     val targetPath = new org.apache.hadoop.fs.Path(target)
     val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qualRoot = fs.makeQualified(targetPath).toString
     val raw = spark.read.option("basePath", target)
-      .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*)
+      .parquet(lines.map(l => s"$target/${l.path}"): _*)
       .withColumn("__m_rel",
         expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})"))
       .withColumn("__m_pos", col("_metadata.row_index"))
@@ -2593,7 +2418,7 @@ object Streaming {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def reader = spark.read.option("mergeSchema", mergeSchema.toString)
-    latestManifestLines(fs, target) match {
+    latestEntries(fs, target) match {
       case None => reader.parquet(target)
       case Some((gen, lines)) if lines.isEmpty =>
         // an EMPTY committed generation means the table has NO live
@@ -2613,7 +2438,7 @@ object Streaming {
                 "the table", e)
         }
       case Some((gen, lines)) =>
-        val rels = lines.map(entryPath)
+        val rels = lines.map(_.path)
         rels.groupBy(dirOf).toSeq.sortBy(_._1).foreach { case (_, files) =>
           val probe = files.head
           if (!fs.exists(new org.apache.hadoop.fs.Path(s"$target/$probe")))
@@ -2627,16 +2452,16 @@ object Streaming {
     }
   }
 
-  /** [[latestManifest]] with full ENTRY LINES (stats + dv tags) —
+  /** [[latestManifest]] with full ENTRIES (stats + dv tags) —
     * what the DV-aware readers resolve from.
     */
-  private def latestManifestLines(
+  private def latestEntries(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String
-  ): Option[(Long, Seq[String])] = {
+  ): Option[(Long, Seq[ManifestEntry])] = {
     val gens = manifestGenerations(fs, target)
     if (gens.isEmpty) None
-    else Some((gens.max, manifestEntryLines(fs, target, gens.max)))
+    else Some((gens.max, liveEntries(fs, target, gens.max)))
   }
 
   /** Pinned read RESTRICTED to the given partition directories —
@@ -2662,7 +2487,7 @@ object Streaming {
         if (lines.isEmpty) None
         else Some(applyDeleteVectors(spark, target, lines,
           spark.read.option("basePath", target)
-            .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*)))
+            .parquet(lines.map(l => s"$target/${l.path}"): _*)))
       case None =>
         val live = dirs.toSeq.sorted
           .map(d => new org.apache.hadoop.fs.Path(s"$target/$d"))
@@ -2709,24 +2534,23 @@ object Streaming {
       target: String,
       predicates: Seq[(String, Any, Any)]
   ): Option[(Seq[String], Int)] =
-    zoneMapLinesMulti(fs, target, predicates).map { case (kept, total) =>
-      (kept.map(entryPath), total)
+    zoneMapEntriesMulti(fs, target, predicates).map { case (kept, total) =>
+      (kept.map(_.path), total)
     }
 
-  /** [[zoneMapFilesMulti]] at the LINE level (stats + dv tags kept) —
+  /** [[zoneMapFilesMulti]] at the ENTRY level (stats + dv tags kept) —
     * what the DV-aware pruned readers resolve from.
     */
-  private def zoneMapLinesMulti(
+  private def zoneMapEntriesMulti(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       predicates: Seq[(String, Any, Any)]
-  ): Option[(Seq[String], Int)] =
+  ): Option[(Seq[ManifestEntry], Int)] =
     manifestGenerations(fs, target).lastOption.map { g =>
-      val lines = manifestEntryLines(fs, target, g)
+      val lines = liveEntries(fs, target, g)
       val kept = lines.filter { l =>
-        val bounds = entryBounds(l)
         predicates.forall { case (column, lo, hi) =>
-          bounds.get(column) match {
+          l.bounds.range(column) match {
             case None => true // unboundable: must keep
             case Some((k, mn, mx)) => boundsOverlap(k, mn, mx, lo, hi)
           }
@@ -2752,20 +2576,30 @@ object Streaming {
       gen: Long,
       predicates: Seq[(String, Option[Any], Option[Any])]
   ): (Seq[String], Int) = {
-    val lines = manifestEntryLines(fs, target, gen)
-    val kept = lines.filter { l =>
-      lazy val bounds = entryBounds(l)
-      predicates.isEmpty || predicates.forall { case (column, lo, hi) =>
-        bounds.get(column) match {
+    val entries = liveEntries(fs, target, gen)
+    (zoneKept(entries, predicates).map(_.path), entries.size)
+  }
+
+  /** The `entries` whose recorded bounds can overlap every open-ended
+    * `(column, lo, hi)` range of `predicates` — lossless as
+    * [[zoneMapFilesAt]]: an unboundable column or a bound/kind type
+    * mismatch keeps the file.
+    */
+  private def zoneKept(
+      entries: Seq[ManifestEntry],
+      predicates: Seq[(String, Option[Any], Option[Any])]
+  ): Seq[ManifestEntry] =
+    if (predicates.isEmpty) entries
+    else entries.filter { e =>
+      predicates.forall { case (column, lo, hi) =>
+        e.bounds.range(column) match {
           case None => true // unboundable: must keep
           case Some((k, mn, mx)) =>
             try boundsOverlapOpt(k, mn, mx, lo, hi)
             catch { case _: IllegalArgumentException => true } // type drift: keep
         }
       }
-    }.map(entryPath)
-    (kept, lines.size)
-  }
+    }
 
   private def boundsOverlapOpt(
       kind: Char, mn: String, mx: String, lo: Option[Any], hi: Option[Any]): Boolean =
@@ -2859,13 +2693,13 @@ object Streaming {
     val residual = predicates.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
     }.reduce(_ && _)
-    zoneMapLinesMulti(fs, target, predicates) match {
+    zoneMapEntriesMulti(fs, target, predicates) match {
       case Some((kept, _)) if kept.isEmpty =>
         readCommitted(spark, target).where(lit(false))
       case Some((kept, _)) =>
         applyDeleteVectors(spark, target, kept,
           spark.read.option("basePath", target)
-            .parquet(kept.map(l => s"$target/${entryPath(l)}"): _*))
+            .parquet(kept.map(l => s"$target/${l.path}"): _*))
           .where(residual)
       case None => readCommitted(spark, target).where(residual)
     }
@@ -2931,11 +2765,11 @@ object Streaming {
       column: String
   ): Option[Double] =
     manifestGenerations(fs, target).lastOption.flatMap { g =>
-      depthOfLines(manifestEntryLines(fs, target, g), column)
+      depthOf(liveEntries(fs, target, g), column)
     }
 
-  private def depthOfLines(lines: Seq[String], column: String): Option[Double] = {
-      val per = lines.map(l => entryBounds(l).get(column))
+  private def depthOf(lines: Seq[ManifestEntry], column: String): Option[Double] = {
+      val per = lines.map(l => l.bounds.range(column))
       if (per.isEmpty || per.exists(_.isEmpty)) None
       else {
         val bs = per.flatten
@@ -2971,9 +2805,9 @@ object Streaming {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one manifest reconstruction supplies both health signals
     val lines = manifestGenerations(fs, target).lastOption
-      .map(g => manifestEntryLines(fs, target, g)).getOrElse(Seq.empty)
+      .map(g => liveEntries(fs, target, g)).getOrElse(Seq.empty)
     val degraded = lines.size > 2 * numFiles ||
-      depthOfLines(lines, column).exists(_ > maxDepth)
+      depthOf(lines, column).exists(_ > maxDepth)
     if (degraded) clusterTable(spark, target, column, numFiles)
     degraded
   }
@@ -3016,11 +2850,11 @@ object Streaming {
       // ABSORBED (the rewrite reads DV-applied rows and the new entries
       // carry no tags), reclaiming both the masked rows' bytes and the
       // read-side anti-join.
-      val lines = manifestEntryLines(fs, target, gen)
-      val perDir = lines.map(entryPath)
+      val lines = liveEntries(fs, target, gen)
+      val perDir = lines.map(_.path)
         .groupBy(dirOf).map { case (d, fsList) => d -> fsList.size }
-      val dvDirs = lines.filter(l => entryDv(l).isDefined)
-        .map(l => dirOf(entryPath(l)))
+      val dvDirs = lines.filter(_.dv.isDefined)
+        .map(_.dir)
         .filter(_.startsWith(s"$shardCol=")).toSet
       val fragmented = perDir.collect {
         case (d, n) if n > maxFilesPerShard && d.startsWith(s"$shardCol=") => d
@@ -3043,31 +2877,6 @@ object Streaming {
   // ====================================================================
   // BLOOM-FILTER FILE SKIPPING (r16 judge #5)
   // ====================================================================
-
-  /** Parse an entry line's bloom tags: `bl:<encCol>:<sidecar>` fields
-    * (one per indexed column). The sidecar is a manifest-dir parquet
-    * of (rel, m, k, bits) rows; `bits` is the file's bloom bitset over
-    * the column's canonical key bytes.
-    */
-  private[graft] def entryBlooms(line: String): Map[String, String] =
-    line.split('\t').iterator.flatMap { f =>
-      // same structural test as [[entryDv]] (r17 advice, low): a real
-      // bloom tag is exactly `bl:<col>:<sidecar>` — 3 colon parts, no
-      // commas — so a bounds field led by a column named "bl" (4-5
-      // colon parts per token, comma-joined) never misparses
-      if (!f.startsWith("bl:")) None
-      else f.split(':') match {
-        case Array(_, c, sidecar) if !sidecar.contains(',') =>
-          Some(java.net.URLDecoder.decode(c, "UTF-8") -> sidecar)
-        case _ => None
-      }
-    }.toMap
-
-  private def withBloomTag(line: String, column: String, sidecar: String): String = {
-    val enc = java.net.URLEncoder.encode(column, "UTF-8")
-    (line.split('\t').filterNot(_.startsWith(s"bl:$enc:")) :+ s"bl:$enc:$sidecar")
-      .mkString("\t")
-  }
 
   /** Canonical key bytes for bloom hashing: integral values as their
     * decimal string, strings as UTF-8 — one representation on both the
@@ -3124,13 +2933,13 @@ object Streaming {
       val gen = manifestGenerations(fs, target).lastOption.getOrElse(
         throw new IllegalStateException(
           s"cannot bloom-index $target: no committed manifest"))
-      val lines = manifestEntryLines(fs, target, gen)
+      val lines = liveEntries(fs, target, gen)
       if (lines.isEmpty) return 0
-      val lineByPath = lines.map(l => entryPath(l) -> l).toMap
+      val entryByPath = lines.map(l => l.path -> l).toMap
       val qualRoot = fs.makeQualified(targetPath).toString
       import spark.implicits._
       val keyed = spark.read.option("basePath", target)
-        .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*)
+        .parquet(lines.map(l => s"$target/${l.path}"): _*)
         .select(
           expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})").as("rel"),
           col(column).cast("string").as("k"))
@@ -3169,10 +2978,10 @@ object Streaming {
       require(fs.rename(part, new org.apache.hadoop.fs.Path(mdir, sidecarName)),
         s"bloom sidecar rename failed for $target")
       fs.delete(tmpDir, true)
-      val newLines: Map[String, String] = built.iterator.map { case (rel, _, _, _) =>
-        rel -> withBloomTag(lineByPath(rel), column, sidecarName)
+      val retagged: Map[String, ManifestEntry] = built.iterator.map { case (rel, _, _, _) =>
+        rel -> entryByPath(rel).withBloom(column, sidecarName)
       }.toMap
-      val touchedDirs = newLines.keySet.map(dirOf)
+      val touchedDirs = retagged.keySet.map(dirOf)
       // lease-serialized, but the CAS loop keeps optimistic racers safe:
       // a lost CAS re-resolves; a racer that REWROTE one of our files
       // just drops that file's retag (its new entry is untagged anyway)
@@ -3180,20 +2989,20 @@ object Streaming {
       while (!done) {
         val latest = manifestGenerations(fs, target).lastOption.getOrElse(0L)
         val current = entriesForDirs(fs, target, latest, Some(touchedDirs))
-          .map(l => entryPath(l) -> l).toMap
-        val applicable = newLines.filter { case (p, _) =>
-          current.get(p).contains(lineByPath(p))
+          .map(l => l.path -> l).toMap
+        val applicable = retagged.filter { case (p, _) =>
+          current.get(p).contains(entryByPath(p))
         }
         if (applicable.isEmpty) return 0
-        val post: Map[String, Seq[String]] = touchedDirs.iterator.map { d =>
+        val post: Map[String, Seq[ManifestEntry]] = touchedDirs.iterator.map { d =>
           d -> entriesForDirs(fs, target, latest, Some(Set(d)))
-            .map(l => applicable.getOrElse(entryPath(l), l)).sorted
+            .map(l => applicable.getOrElse(l.path, l)).sortBy(_.path)
         }.toMap
         done = tryCommitManifest(fs, target, latest + 1, post, Nil, Nil,
-          modified = applicable.values.toSeq.sorted)
+          modified = applicable.values.toSeq.sortBy(_.path))
       }
       refreshListing(target)
-      newLines.size
+      retagged.size
     }
   }
 
@@ -3208,12 +3017,9 @@ object Streaming {
       column: String
   ): Option[Double] =
     manifestGenerations(fs, target).lastOption.map { g =>
-      val lines = manifestEntryLines(fs, target, g).filterNot { l =>
-        val parts = l.split('\t')
-        parts.length >= 2 && parts(1) == "0"
-      }
+      val lines = liveEntries(fs, target, g).filterNot(_.isEmptyFile)
       if (lines.isEmpty) 1.0
-      else lines.count(l => entryBlooms(l).contains(column)).toDouble / lines.size
+      else lines.count(l => l.blooms.contains(column)).toDouble / lines.size
     }
 
   /** The bloom half of the OPTIMIZE autopilot (the
@@ -3243,14 +3049,14 @@ object Streaming {
     * files) bitset reads, the same metadata cost class as the zone
     * maps).
     */
-  private def bloomKeptLines(
+  private def bloomKeptEntries(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
-      lines: Seq[String],
+      lines: Seq[ManifestEntry],
       column: String,
       values: Seq[Any]
-  ): Seq[String] = {
-    val tagged = lines.flatMap(l => entryBlooms(l).get(column).map(entryPath(l) -> _)).toMap
+  ): Seq[ManifestEntry] = {
+    val tagged = lines.flatMap(l => l.blooms.get(column).map(l.path -> _)).toMap
     if (tagged.isEmpty || values.isEmpty) lines
     else {
       val mdir = manifestDir(target)
@@ -3264,7 +3070,7 @@ object Streaming {
             rel -> ((m, k, bits))
         }.toMap
       lines.filter { l =>
-        val p = entryPath(l)
+        val p = l.path
         tagged.get(p).flatMap(_ => byRel.get(p)) match {
           case None => true // untagged or sidecar row missing: keep
           case Some((m, k, bits)) =>
@@ -3290,22 +3096,15 @@ object Streaming {
   ): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    zoneMapLinesMulti(fs, target, Nil) match {
+    zoneMapEntriesMulti(fs, target, Nil) match {
       case None => readCommitted(spark, target).where(col(column) === lit(value))
       case Some((all, _)) =>
-        val zoneKept = all.filter { l =>
-          entryBounds(l).get(column) match {
-            case None => true
-            case Some((k, mn, mx)) =>
-              try boundsOverlapOpt(k, mn, mx, Some(value), Some(value))
-              catch { case _: IllegalArgumentException => true }
-          }
-        }
-        val kept = bloomKeptLines(spark, target, zoneKept, column, Seq(value))
+        val zoned = zoneKept(all, Seq((column, Some(value), Some(value))))
+        val kept = bloomKeptEntries(spark, target, zoned, column, Seq(value))
         if (kept.isEmpty) readCommitted(spark, target).where(lit(false))
         else applyDeleteVectors(spark, target, kept,
           spark.read.option("basePath", target)
-            .parquet(kept.map(l => s"$target/${entryPath(l)}"): _*))
+            .parquet(kept.map(l => s"$target/${l.path}"): _*))
           .where(col(column) === lit(value))
     }
   }
@@ -3321,19 +3120,12 @@ object Streaming {
   ): (Int, Int, Int) = {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    zoneMapLinesMulti(fs, target, Nil) match {
+    zoneMapEntriesMulti(fs, target, Nil) match {
       case None => (0, 0, 0)
       case Some((all, total)) =>
-        val zoneKept = all.filter { l =>
-          entryBounds(l).get(column) match {
-            case None => true
-            case Some((k, mn, mx)) =>
-              try boundsOverlapOpt(k, mn, mx, Some(value), Some(value))
-              catch { case _: IllegalArgumentException => true }
-          }
-        }
-        val kept = bloomKeptLines(spark, target, zoneKept, column, Seq(value))
-        (kept.size, zoneKept.size, total)
+        val zoned = zoneKept(all, Seq((column, Some(value), Some(value))))
+        val kept = bloomKeptEntries(spark, target, zoned, column, Seq(value))
+        (kept.size, zoned.size, total)
     }
   }
 
@@ -3351,8 +3143,8 @@ object Streaming {
       candidates: Seq[String]
   ): Seq[String] = {
     val cand = candidates.toSet
-    val lines = manifestEntryLines(fs, target, gen).filter(l => cand(entryPath(l)))
-    bloomKeptLines(spark, target, lines, column, values).map(entryPath)
+    val lines = liveEntries(fs, target, gen).filter(l => cand(l.path))
+    bloomKeptEntries(spark, target, lines, column, values).map(_.path)
   }
 
   /** Files that can hold rows satisfying `column IS [NOT] NULL`, from
@@ -3372,18 +3164,17 @@ object Streaming {
       candidates: Seq[String]
   ): Seq[String] = {
     val cand = candidates.toSet
-    manifestEntryLines(fs, target, gen)
-      .filter(l => cand(entryPath(l)))
+    liveEntries(fs, target, gen)
+      .filter(l => cand(l.path))
       .filter { l =>
-        val nc = entryNullCounts(l).get(column)
-        val rows = l.split('\t').lift(1).flatMap(s => scala.util.Try(s.toLong).toOption)
+        val nc = l.bounds.nulls(column)
         if (isNull) nc.forall(_ > 0L)
         else {
-          val hasValues = entryBounds(l).contains(column)
-          hasValues || nc.isEmpty || rows.isEmpty || nc.get < rows.get
+          val hasValues = l.bounds.range(column).isDefined
+          hasValues || nc.isEmpty || l.rows.isEmpty || nc.get < l.rows.get
         }
       }
-      .map(entryPath)
+      .map(_.path)
   }
 
   /** GC delete-vector sidecars that no RETAINED generation's entries
@@ -3407,7 +3198,7 @@ object Streaming {
     }.map(_.getPath.getName)
     if (dvFiles.isEmpty) return
     val referenced: Set[String] = manifestGenerations(fs, target).flatMap { g =>
-      try manifestEntryLines(fs, target, g).flatMap(l => entryDv(l).map(_._1))
+      try liveEntries(fs, target, g).flatMap(_.dv.map(_.sidecar))
       catch { case _: IllegalStateException => dvFiles.toSeq } // pruned mid-walk: keep all
     }.toSet
     dvFiles.filterNot(referenced).foreach(n =>
@@ -3677,10 +3468,10 @@ object Streaming {
       spark: org.apache.spark.sql.SparkSession,
       target: String,
       hits: DataFrame,
-      lineByPath: Map[String, String],
+      entryByPath: Map[String, ManifestEntry],
       touchedRels: Set[String]
   ): DataFrame =
-    hits.unionByName(taggedDvPositions(spark, target, touchedRels.toSeq.map(lineByPath)))
+    hits.unionByName(taggedDvPositions(spark, target, touchedRels.toSeq.map(entryByPath)))
 
   /** New deleted positions per file — the touched set with its counts,
     * from one aggregate over disjoint `positions`.
@@ -3689,9 +3480,19 @@ object Streaming {
     positions.groupBy("rel").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
+  /** Refuse a mutation of a table with legacy stat-less entries: the
+    * delete-vector counts are kept against per-file row counts.
+    */
+  private def requireRowCounts(
+      verb: String, target: String, entries: Seq[ManifestEntry]): Unit =
+    require(entries.forall(_.rows.isDefined),
+      s"$verb needs per-file row counts on every entry of $target — " +
+        "legacy stat-less entries present; rewrite once (clusterTable / " +
+        "compactShards) to record footer stats first")
+
   /** Write one sidecar for `newPerFile`'s files — their new
     * `positions` plus their prior ones — and return its name with the
-    * files' retagged entry lines. A file's count is its prior tag
+    * files' retagged entries. A file's count is its prior tag
     * count plus its new count, exact because the two are disjoint.
     */
   private def writeDvRetag(
@@ -3699,16 +3500,16 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long,
-      lineByPath: Map[String, String],
+      entryByPath: Map[String, ManifestEntry],
       positions: DataFrame,
       newPerFile: Map[String, Long]
-  ): (String, Map[String, String]) = {
+  ): (String, Map[String, ManifestEntry]) = {
     val sidecarName = writeDvSidecar(fs, target,
-      withPriorDvPositions(spark, target, positions, lineByPath, newPerFile.keySet),
+      withPriorDvPositions(spark, target, positions, entryByPath, newPerFile.keySet),
       gen + 1)
     sidecarName -> newPerFile.map { case (r, n) =>
-      val line = lineByPath(r)
-      r -> withDvTag(line, sidecarName, entryDv(line).map(_._2).getOrElse(0L) + n)
+      val line = entryByPath(r)
+      r -> line.withDv(sidecarName, line.dv.fold(0L)(_.n) + n)
     }
   }
 
@@ -3729,33 +3530,25 @@ object Streaming {
         throw new IllegalStateException(
           s"cannot delete from $target: no committed manifest (not maintained " +
             "by this module)"))
-      val allLines = manifestEntryLines(fs, target, gen)
-      if (allLines.isEmpty) return 0L
-      require(allLines.forall(_.indexOf('\t') >= 0),
-        s"deleteWhere needs per-file row counts on every entry of $target — " +
-          "legacy stat-less entries present; rewrite once (clusterTable / " +
-          "compactShards) to record footer stats first")
+      val allEntries = liveEntries(fs, target, gen)
+      if (allEntries.isEmpty) return 0L
+      requireRowCounts("deleteWhere", target, allEntries)
       // candidate files: zone-map pruned for range deletes, all otherwise
-      val scanLines =
-        if (ranges.isEmpty) allLines
-        else {
-          val keptPaths = zoneMapFilesAt(fs, target, gen, ranges)._1.toSet
-          allLines.filter(l => keptPaths(entryPath(l)))
-        }
-      if (scanLines.isEmpty) return 0L
-      val lineByPath = allLines.map(l => entryPath(l) -> l).toMap
+      val scanEntries = zoneKept(allEntries, ranges)
+      if (scanEntries.isEmpty) return 0L
+      val entryByPath = allEntries.map(l => l.path -> l).toMap
       // the position scan: matching live rows' (rel, pos). Parquet
       // pushdown prunes row groups; only O(deleted rows) survive to
       // the write, none of them already deleted.
-      val hits = livePositionedScan(spark, target, scanLines).where(predicate)
+      val hits = livePositionedScan(spark, target, scanEntries).where(predicate)
         .select(col("__m_rel").as("rel"), col("__m_pos").as("pos"))
         .localCheckpoint()
       val newPerFile = positionsPerFile(hits)
       if (newPerFile.isEmpty) return 0L
       // one sidecar per commit, O(deleted rows) bytes, holding each
       // touched file's COMPLETE set
-      val (sidecarName, newLines) =
-        writeDvRetag(spark, fs, target, gen, lineByPath, hits, newPerFile)
+      val (sidecarName, retagged) =
+        writeDvRetag(spark, fs, target, gen, entryByPath, hits, newPerFile)
       val deletedNow = newPerFile.values.sum
       val touchedDirs = newPerFile.keySet.map(dirOf)
       // staleness + CAS loop (the optimistic-commit shape): a racing
@@ -3774,12 +3567,12 @@ object Streaming {
         }
         if (conflicted) state = 2
         else {
-          val post: Map[String, Seq[String]] = touchedDirs.iterator.map { d =>
+          val post: Map[String, Seq[ManifestEntry]] = touchedDirs.iterator.map { d =>
             d -> entriesForDirs(fs, target, latest, Some(Set(d)))
-              .map(l => newLines.getOrElse(entryPath(l), l)).sorted
+              .map(l => retagged.getOrElse(l.path, l)).sortBy(_.path)
           }.toMap
           if (tryCommitManifest(fs, target, latest + 1, post, Nil, Nil,
-              modified = newLines.values.toSeq.sorted))
+              modified = retagged.values.toSeq.sortBy(_.path)))
             state = 1
           // else: CAS lost — loop re-checks staleness at the new latest
         }
@@ -3841,12 +3634,8 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Option[Long] = {
-    val mdir = manifestDir(target)
-    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
-      .map(p => fs.getFileStatus(p).getModificationTime)
-  }
+  ): Option[Long] =
+    manifestFileOf(fs, target, gen).map(fs.getFileStatus(_).getModificationTime)
 
   def tableHistory(
       spark: org.apache.spark.sql.SparkSession,
@@ -3859,19 +3648,17 @@ object Streaming {
       val kind =
         if (fs.exists(new org.apache.hadoop.fs.Path(mdir, f"gen-$g%012d")))
           "checkpoint" else "delta"
-      val lines = manifestEntryLines(fs, target, g)
-      val liveRows: Option[Long] =
-        if (lines.exists(_.indexOf('\t') < 0)) None
-        else Some(lines.map(l =>
-          l.split('\t')(1).toLong - entryDv(l).map(_._2).getOrElse(0L)).sum)
+      val lines = liveEntries(fs, target, g)
+      val perFile = lines.map(_.liveRows)
+      val header = commitHeader(fs, target, g)
       (g, kind,
         commitTimeMs(fs, target, g)
           .map(ms => new java.sql.Timestamp(ms)).orNull,
-        lines.size.toLong, liveRows,
-        commitSchemaHash(fs, target, g), commitTag(fs, target, g),
-        commitTxns(fs, target, g).toSeq.sorted
-          .map { case (s, i) => s"$s=$i" }.mkString(","),
-        lines.exists(l => entryDv(l).isDefined))
+        lines.size.toLong,
+        if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.sum),
+        header.schemaHash, header.tag,
+        header.txns.toSeq.sorted.map { case (s, i) => s"$s=$i" }.mkString(","),
+        lines.exists(_.dv.isDefined))
     }
     import spark.implicits._
     rows.toDF("generation", "kind", "committed_at", "live_files", "live_rows",
@@ -3952,8 +3739,8 @@ object Streaming {
         throw new IllegalStateException(
           s"cannot merge into $target: no committed manifest (not maintained " +
             "by this module)"))
-      val allLines = manifestEntryLines(fs, target, gen)
-      if (allLines.isEmpty) {
+      val allEntries = liveEntries(fs, target, gen)
+      if (allEntries.isEmpty) {
         // zero live rows: only the not-matched clause can fire, and
         // with no target schema to map onto, only INSERT-ALL is
         // well-defined
@@ -3970,10 +3757,7 @@ object Streaming {
               return MergeStats(0L, n)
         }
       } else {
-        require(allLines.forall(_.indexOf('\t') >= 0),
-          s"mergeInto needs per-file row counts on every entry of $target — " +
-            "legacy stat-less entries present; rewrite once (clusterTable / " +
-            "compactShards) to record footer stats first")
+        requireRowCounts("mergeInto", target, allEntries)
         // KEY-ENVELOPE FILE PRUNING (the Delta merge file-skipping
         // shape): when the ON condition is a CONJUNCTION of equalities
         // on the prune columns (same names both sides), the [min, max]
@@ -3997,8 +3781,8 @@ object Streaming {
               (c, 'd', asDouble(lo).toString, asDouble(hi).toString)
             case _ => (c, 's', lo.toString, hi.toString)
           }
-        val (scanLines, typedEnvelopes): (Seq[String], Seq[(String, Char, String, String)]) =
-          if (pruneCols.isEmpty) (allLines, Nil)
+        val (scanEntries, typedEnvelopes): (Seq[ManifestEntry], Seq[(String, Char, String, String)]) =
+          if (pruneCols.isEmpty) (allEntries, Nil)
           else {
             val withKeys = source.filter(
               pruneCols.map(c => col(c).isNotNull).reduce(_ && _))
@@ -4011,8 +3795,7 @@ object Streaming {
                 (c, Some(mm.get(2 * i)): Option[Any],
                   Some(mm.get(2 * i + 1)): Option[Any])
               }
-              val keptPaths = zoneMapFilesAt(fs, target, gen, ranges)._1.toSet
-              (allLines.filter(l => keptPaths(entryPath(l))),
+              (zoneKept(allEntries, ranges),
                 ranges.map { case (c, lo, hi) => envOf(c, lo.get, hi.get) })
             }
           }
@@ -4026,13 +3809,13 @@ object Streaming {
           if (whenNotMatchedInsert.isEmpty) Nil
           else if (typedEnvelopes.nonEmpty) typedEnvelopes
           else Seq(("*", '*', "", ""))
-        if (scanLines.isEmpty) {
+        if (scanEntries.isEmpty) {
           // nothing can match: the whole source is unmatched
           whenNotMatchedInsert match {
             case None => return MergeStats(0L, 0L)
             case Some(m) =>
               val probe = spark.read.option("basePath", target)
-                .parquet(s"$target/${entryPath(allLines.head)}")
+                .parquet(s"$target/${allEntries.head.path}")
               val ins = insertImage(source, probe.columns.toSeq, m).localCheckpoint()
               val n = ins.count()
               if (n == 0L) return MergeStats(0L, 0L)
@@ -4040,17 +3823,17 @@ object Streaming {
               // live file's bounds — same conflict scope as a scan
               if (commitMutation(spark, target, gen, Map.empty,
                   emptyPositions(spark), Map.empty, Some(ins), stagePartitionBy, n,
-                  extraVolatileDirs = allLines.map(l => dirOf(entryPath(l))).toSet,
+                  extraVolatileDirs = allEntries.map(_.dir).toSet,
                   keyEnvelopes = insertEnvelopes)) {
                 refreshListing(target)
                 return MergeStats(0L, n)
               }
           }
         } else {
-        val lineByPath = allLines.map(l => entryPath(l) -> l).toMap
+        val entryByPath = allEntries.map(l => l.path -> l).toMap
         // existing delete vectors applied FIRST: an already-retracted
         // row must neither match nor resurrect through the merge
-        val tgt = livePositionedScan(spark, target, scanLines)
+        val tgt = livePositionedScan(spark, target, scanEntries)
         val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
         // the insert exprs see the source alone, never `t`: analysed
         // here, before the join exposes the target's columns, and
@@ -4117,10 +3900,10 @@ object Streaming {
         // range remains dir-granularity-invisible — documented; shard
         // and root layouts route appends into existing dirs, which
         // this covers.)
-        val scannedDirs = allLines.map(l => dirOf(entryPath(l))).toSet
+        val scannedDirs = allEntries.map(_.dir).toSet
         // a delete matched by several source rows names its position
         // once per row
-        if (commitMutation(spark, target, gen, lineByPath,
+        if (commitMutation(spark, target, gen, entryByPath,
             if (most > 1L) positions.distinct() else positions, newPerFile, toAdd,
             stagePartitionBy,
             (if (updated.isDefined) matchedCount else 0L) + inserted,
@@ -4193,23 +3976,15 @@ object Streaming {
         throw new IllegalStateException(
           s"cannot update $target: no committed manifest (not maintained " +
             "by this module)"))
-      val allLines = manifestEntryLines(fs, target, gen)
-      if (allLines.isEmpty) return 0L
-      require(allLines.forall(_.indexOf('\t') >= 0),
-        s"updateWhere needs per-file row counts on every entry of $target — " +
-          "legacy stat-less entries present; rewrite once (clusterTable / " +
-          "compactShards) to record footer stats first")
-      val lineByPath = allLines.map(l => entryPath(l) -> l).toMap
+      val allEntries = liveEntries(fs, target, gen)
+      if (allEntries.isEmpty) return 0L
+      requireRowCounts("updateWhere", target, allEntries)
+      val entryByPath = allEntries.map(l => l.path -> l).toMap
       // candidate files: zone-map pruned for range updates (lossless
       // by construction), all otherwise — the deleteVectors shape
-      val scanLines =
-        if (ranges.isEmpty) allLines
-        else {
-          val keptPaths = zoneMapFilesAt(fs, target, gen, ranges)._1.toSet
-          allLines.filter(l => keptPaths(entryPath(l)))
-        }
-      if (scanLines.isEmpty) return 0L
-      val tgt = livePositionedScan(spark, target, scanLines)
+      val scanEntries = zoneKept(allEntries, ranges)
+      if (scanEntries.isEmpty) return 0L
+      val tgt = livePositionedScan(spark, target, scanEntries)
       val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
       require(assignments.keySet.subsetOf(dataCols.toSet),
         s"updateWhere assignments reference columns absent from $target: " +
@@ -4222,7 +3997,7 @@ object Streaming {
       if (n == 0L) return 0L
       val updated = hits.select(dataCols.map(c =>
         assignments.getOrElse(c, col(c)).as(c)): _*)
-      if (commitMutation(spark, target, gen, lineByPath, positions, newPerFile,
+      if (commitMutation(spark, target, gen, entryByPath, positions, newPerFile,
           Some(updated), stagePartitionBy, n)) {
         refreshListing(target)
         return n
@@ -4252,7 +4027,7 @@ object Streaming {
       spark: org.apache.spark.sql.SparkSession,
       target: String,
       gen: Long,
-      lineByPath: Map[String, String],
+      entryByPath: Map[String, ManifestEntry],
       positions: DataFrame,
       newPerFile: Map[String, Long],
       newRows: Option[DataFrame],
@@ -4264,11 +4039,11 @@ object Streaming {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (modified, dvDirs, sidecarOpt) =
-      if (newPerFile.isEmpty) (Seq.empty[String], Set.empty[String], None)
+      if (newPerFile.isEmpty) (Seq.empty[ManifestEntry], Set.empty[String], None)
       else {
-        val (sidecarName, newLines) =
-          writeDvRetag(spark, fs, target, gen, lineByPath, positions, newPerFile)
-        (newLines.toSeq.sortBy(_._1).map(_._2), newPerFile.keySet.map(dirOf),
+        val (sidecarName, retagged) =
+          writeDvRetag(spark, fs, target, gen, entryByPath, positions, newPerFile)
+        (retagged.toSeq.sortBy(_._1).map(_._2), newPerFile.keySet.map(dirOf),
           Some(sidecarName))
       }
     val token = java.util.UUID.randomUUID().toString.take(8)
@@ -4307,7 +4082,7 @@ object Streaming {
     * carry DV-tagged `~` deltas — the ones an added-files consumer
     * (followTable, the streaming source) CANNOT observe and must
     * refuse loudly over. Bloom retags are `~` too but row-neutral,
-    * hence the entryDv test. One tiny manifest read per generation.
+    * hence the DV-tag test. One tiny manifest read per generation.
     */
   private[graft] def dvWindowGens(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -4315,12 +4090,11 @@ object Streaming {
       fromExclusive: Long,
       toInclusive: Long
   ): Seq[Long] = {
-    val mdir = manifestDir(target)
     ((fromExclusive + 1) to toInclusive).filter { gen =>
-      Seq(f"inc-$gen%012d", f"gen-$gen%012d")
-        .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
-        .exists(p => readManifestFile(fs, p).exists(l =>
-          l.startsWith("~ ") && entryDv(l.substring(2)).isDefined))
+      manifestFileOf(fs, target, gen).exists(p => readManifest(fs, p).exists {
+        case ManifestLine.Modify(e) => e.dv.isDefined
+        case _ => false
+      })
     }
   }
 
@@ -4378,29 +4152,29 @@ object Streaming {
     // DV-tagged files stay live until compaction) or the window
     // REMOVES files and refuses below.
     val qualRoot = fs.makeQualified(targetPath).toString
-    var prevLines = manifestEntryLines(fs, target, fromGen)
+    var prevEntries = liveEntries(fs, target, fromGen)
     val perGen: Seq[DataFrame] = ((fromGen + 1) to toGen).flatMap { g =>
-      val curLines = manifestEntryLines(fs, target, g)
-      val prevByPath = prevLines.map(l => entryPath(l) -> l).toMap
-      val curByPath = curLines.map(l => entryPath(l) -> l).toMap
+      val curEntries = liveEntries(fs, target, g)
+      val prevByPath = prevEntries.map(l => l.path -> l).toMap
+      val curByPath = curEntries.map(l => l.path -> l).toMap
       val removed = prevByPath.keySet -- curByPath.keySet
       if (removed.nonEmpty) throw new IllegalStateException(
         s"change feed on $target cannot attribute generation $g: it REMOVES " +
           s"${removed.size} file(s) (compaction / rewrite), which carries no " +
           "row-level change information — consume mutation-verb windows only, " +
           "or re-bootstrap the subscriber across the rewrite")
-      val addedLines = curLines.filterNot(l => prevByPath.contains(entryPath(l)))
+      val addedEntries = curEntries.filterNot(l => prevByPath.contains(l.path))
       val inserts: Option[DataFrame] =
-        if (addedLines.isEmpty) None
-        else Some(applyDeleteVectors(spark, target, addedLines,
+        if (addedEntries.isEmpty) None
+        else Some(applyDeleteVectors(spark, target, addedEntries,
           spark.read.option("basePath", target).option("mergeSchema", "true")
-            .parquet(addedLines.map(l => s"$target/${entryPath(l)}"): _*))
+            .parquet(addedEntries.map(l => s"$target/${l.path}"): _*))
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_generation", lit(g)))
       // files present in BOTH whose dv tag changed: merge-on-write
       // sidecars only ever grow, so tag-changed == positions grew
       val dvChanged: Set[String] = (curByPath.keySet & prevByPath.keySet)
-        .filter(p => entryDv(curByPath(p)) != entryDv(prevByPath(p)))
+        .filter(p => curByPath(p).dv != prevByPath(p).dv)
       val deletes: Option[DataFrame] =
         if (dvChanged.isEmpty) None
         else {
@@ -4412,8 +4186,7 @@ object Streaming {
           // each tag counts its file's complete set exactly, so the
           // growth of the tag counts is the delta's size — no job
           val deltaCount = changed.map(p =>
-            entryDv(curByPath(p)).map(_._2).getOrElse(0L) -
-              entryDv(prevByPath(p)).map(_._2).getOrElse(0L)).sum
+            curByPath(p).dv.fold(0L)(_.n) - prevByPath(p).dv.fold(0L)(_.n)).sum
           if (deltaCount == 0L) None
           else {
             val deltaSide =
@@ -4430,7 +4203,7 @@ object Streaming {
               .withColumn("_commit_generation", lit(g)))
           }
         }
-      prevLines = curLines
+      prevEntries = curEntries
       deletes.toSeq ++ inserts.toSeq
     }
     perGen.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))

@@ -82,9 +82,8 @@ class DeleteVectorSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     val target = seed("graft-dv-overlap")
     def tagged(): Seq[(String, String, Long)] = {
       val g = Streaming.manifestGenerations(fs, target).last
-      Streaming.manifestEntryLines(fs, target, g).flatMap(l =>
-        Streaming.entryDv(l).map { case (sidecar, n) =>
-          (Streaming.relOfEntry(l), sidecar, n) })
+      Streaming.liveEntries(fs, target, g).flatMap(e =>
+        e.dv.map(d => (e.path, d.sidecar, d.n)))
     }
     // 1: one file of shard 0 (X) and one of shard 1 (Y) share sidecar S1
     Streaming.deleteWhere(spark, target, col("id").isin(0L, 1L)) shouldBe 2L

@@ -92,11 +92,12 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     }
   }
 
-  test("a LEGACY flat checkpoint stays readable, supports shard-scoped verbs, " +
-      "and migrates to the manifest-list format at the next checkpoint") {
-    val target = Files.createTempDirectory("graft-ml-legacy").toString + "/t"
-    // lay the table down WITHOUT the module (plain partitioned write),
-    // then hand-write an old-format flat manifest over it
+  /** An 80-row, 8-shard table laid down WITHOUT the module (plain
+    * partitioned write) under a hand-written old-format flat manifest:
+    * bare `path` entry lines, no row counts.
+    */
+  private def legacyFlatTable(prefix: String): String = {
+    val target = Files.createTempDirectory(prefix).toString + "/t"
     rows(0 until 80, k => s"v1-$k", 1L)
       .write.mode("overwrite").partitionBy("shard").parquet(target)
     val rels = {
@@ -113,6 +114,12 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     fs.mkdirs(mdir)
     val out = fs.create(new Path(mdir, "gen-000000000001"), true)
     try out.write(rels.sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
+    target
+  }
+
+  test("a LEGACY flat checkpoint stays readable, supports shard-scoped verbs, " +
+      "and migrates to the manifest-list format at the next checkpoint") {
+    val target = legacyFlatTable("graft-ml-legacy")
     // legacy read path: flat entry list, no refs
     Streaming.readCommitted(spark, target).count() shouldBe 80L
     // shard-scoped verbs advance it by delta on top of the legacy base
@@ -130,6 +137,28 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     (0L until 80L).foreach { k =>
       got(k) shouldBe (if (k % 8 == 0) s"v8-$k" else s"v1-$k")
     }
+  }
+
+  test("a bloom-indexed LEGACY stat-less table still answers its metadata reads " +
+      "and refuses deleteWhere") {
+    val target = legacyFlatTable("graft-ml-legacy-bloom")
+    // the retag turns each bare `path` line into `path\tbl:doc_id:<sidecar>`:
+    // a tag where a row count would sit, never a row count
+    Streaming.buildBloomIndex(spark, target, "doc_id") should be > 0
+    manifestLines(target, "inc-000000000002")
+      .exists(_.contains("\tbl:doc_id:bl-")) shouldBe true
+    Streaming.statsRowCount(fs, target) shouldBe None
+    Streaming.committedDirRowCounts(fs, target) shouldBe None
+    val latest = Streaming.tableHistory(spark, target)
+      .orderBy(col("generation").desc).first()
+    latest.getAs[Long]("generation") shouldBe 2L
+    latest.isNullAt(latest.fieldIndex("live_rows")) shouldBe true
+    Streaming.readCommitted(spark, target).count() shouldBe 80L
+    val ex = intercept[IllegalArgumentException] {
+      Streaming.deleteWhere(spark, target, col("doc_id") === 3L)
+    }
+    ex.getMessage should include("deleteWhere needs per-file row counts")
+    Streaming.readCommitted(spark, target).count() shouldBe 80L
   }
 
   test("optimistic conflict detection stays exact ACROSS a checkpoint generation: " +
