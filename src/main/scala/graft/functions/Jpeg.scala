@@ -495,7 +495,7 @@ object Jpeg {
     */
   def decodeRgb(b: Array[Byte]): Option[(Int, Int, Array[Int])] =
     try decodeRgbUnsafe(b)
-    catch { case _: Throwable => None }
+    catch { case scala.util.control.NonFatal(_) => None }
 
   private def decodeRgbUnsafe(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
     if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None

@@ -1334,7 +1334,7 @@ object Media {
         y += 1
       }
       Some((w, h, out))
-    } catch { case _: Throwable => None }
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** PNG variant of [[fromDocumentsBmp]]: the SAME fixture dims and

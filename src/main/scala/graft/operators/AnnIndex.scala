@@ -293,7 +293,7 @@ object AnnIndex {
     val mapPath = new org.apache.hadoop.fs.Path(s"$root/idmap")
     if (!fs.exists(new org.apache.hadoop.fs.Path(corpusPath))) {
       fs.delete(mapPath, true)
-      fs.delete(graft.streaming.Streaming.manifestDir(mapPath.toString), true)
+      fs.delete(graft.table.Snapshot.manifestDir(mapPath.toString), true)
     } else {
       // the corpus is read PINNED: the live directory legitimately
       // holds retained older-generation files awaiting the retention
@@ -305,7 +305,7 @@ object AnnIndex {
         .select(col("vec_id"), col("cell"),
           expr(s"CAST(vec_id DIV $IdMapShardSize AS INT)").as("shard"),
           lit(0L).as("batch_id"))
-      fs.delete(graft.streaming.Streaming.manifestDir(mapPath.toString), true)
+      fs.delete(graft.table.Snapshot.manifestDir(mapPath.toString), true)
       // one file per shard (not one per scan task) — the same
       // small-file economics as the corpus write above
       snap.repartition(col("shard"))
@@ -432,9 +432,9 @@ object AnnIndex {
     val corpusPath = s"$root/corpus"
     if (!fs.exists(new org.apache.hadoop.fs.Path(corpusPath)) ||
         !fs.exists(new org.apache.hadoop.fs.Path(s"$root/centroids"))) return Nil
-    val dirCells = graft.streaming.Streaming.latestManifest(fs, corpusPath) match {
-      case Some((_, rels)) =>
-        rels.flatMap { r =>
+    val dirCells = graft.table.Snapshot.latest(fs, corpusPath) match {
+      case Some(snap) =>
+        snap.paths.flatMap { r =>
           val i = r.lastIndexOf('/')
           val d = if (i < 0) "" else r.substring(0, i)
           if (d.startsWith("cell=")) Some(d.stripPrefix("cell=").toInt) else None
@@ -784,8 +784,8 @@ object AnnIndex {
     */
   private def manifestFiles(fs: org.apache.hadoop.fs.FileSystem,
       table: String, dir: String): Int =
-    graft.streaming.Streaming.latestManifest(fs, table) match {
-      case Some((_, rels)) => rels.count(_.startsWith(dir + "/"))
+    graft.table.Snapshot.latest(fs, table) match {
+      case Some(snap) => snap.paths.count(_.startsWith(dir + "/"))
       case None =>
         val p = new org.apache.hadoop.fs.Path(table, dir)
         if (!fs.exists(p)) 0
@@ -1023,8 +1023,7 @@ object AnnIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = resolveRoot(fs, rootSpec)
     val (centroids, corpus) = openIndex(spark, root)
-    val nNow = graft.streaming.Streaming
-      .committedDirRowCounts(fs, s"$root/corpus")
+    val nNow = graft.table.Snapshot.latest(fs, s"$root/corpus").flatMap(_.dirRowCounts)
       .map { byDir =>
         byDir.toSeq.collect {
           case (d, n) if d.startsWith("cell=") => (d.stripPrefix("cell=").toInt, n)
@@ -1109,9 +1108,9 @@ object AnnIndex {
 
     // -- 3. compaction, over the LIVE MANIFEST (splits/merges above
     //       changed the layout; a cell born this pass compacts too) ------
-    val liveCells = graft.streaming.Streaming.latestManifest(fs, corpusPath) match {
-      case Some((_, rels)) =>
-        rels.flatMap { r =>
+    val liveCells = graft.table.Snapshot.latest(fs, corpusPath) match {
+      case Some(snap) =>
+        snap.paths.flatMap { r =>
           val i = r.lastIndexOf('/')
           val d = if (i < 0) "" else r.substring(0, i)
           if (d.startsWith("cell=")) Some(d.stripPrefix("cell=").toInt) else None

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** The persisted-storage protocol UNDER THE DuckDB GATE: where
   * SwapRecoverySpec/SnapshotIsolationSpec pin the crash windows and
@@ -84,7 +85,7 @@ object StorageQueries {
               .select(col("doc_id"), col("shard")))
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val gen1 = Streaming.manifestGenerations(fs, target).head
+          val gen1 = Snapshot.list(fs, target).gens.head
           Streaming.readCommitted(s, target)
             .join(
               Streaming.readGeneration(s, target, gen1)
@@ -256,7 +257,8 @@ object StorageQueries {
           Streaming.clusterTable(s, target, "doc_id", 16)
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val (kept, total) = Streaming.zoneMapFiles(fs, target, "doc_id", 10L, 39L).get
+          val snap = Snapshot.latest(fs, target).get
+          val (kept, total) = (snap.rangeKept(Seq(("doc_id", 10L, 39L))), snap.entries.size)
           // pruning is load-bearing once the corpus has enough DISTINCT
           // ids that the <=30 in-window ones are a thin contiguous band
           // of the sort order (canon is one row per id, so count =
@@ -344,7 +346,8 @@ object StorageQueries {
           Streaming.writeManifest(fs, target)
           Streaming.clusterTable(s, target, "zval", 16)
           val predicates = Seq[(String, Any, Any)](("x", 4L, 7L), ("y", 1L, 2L))
-          val (kept, total) = Streaming.zoneMapFilesMulti(fs, target, predicates).get
+          val snap = Snapshot.latest(fs, target).get
+          val (kept, total) = (snap.rangeKept(predicates), snap.entries.size)
           // pruning is load-bearing only when the query rectangle holds
           // a MINORITY of the rows (under a quarter): a fixture whose
           // every id maps into the rectangle legitimately keeps all
@@ -379,7 +382,7 @@ object StorageQueries {
         // latest-wins update (rewritten shards get fresh footer
         // stats), a %20==5 retraction — COUNT(*)/MIN/MAX of doc_id are
         // answered from the manifest's per-file row counts and zone
-        // maps with ZERO data I/O (statsRowCount / statsMinMax), and
+        // maps with ZERO data I/O (Snapshot.rowCount / minMax), and
         // the oracle replays the lifecycle's closed form. On a
         // wide-domain fixture the metadata path is REQUIRED (the rung
         // fails if it fell back); a hostile tiny fixture may legally
@@ -425,12 +428,13 @@ object StorageQueries {
               .select(col("doc_id"), col("shard")))
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val metaCnt = Streaming.statsRowCount(fs, target)
-          val metaMm = Streaming.statsMinMax(fs, target, "doc_id")
+          val snap = Snapshot.latest(fs, target)
+          val metaCnt = snap.flatMap(_.rowCount)
+          val metaMm = snap.flatMap(_.minMax("doc_id"))
           // r17: NULL COUNTS ride the zone maps too — payload is
           // md5(text), null exactly where text is null, so the
           // metadata-only null count is oracle-checkable
-          val metaNulls = Streaming.statsNullCount(fs, target, "payload")
+          val metaNulls = snap.flatMap(_.nullCount("payload"))
           require(canon.count() < 64 ||
             (metaCnt.isDefined && metaMm.isDefined && metaNulls.isDefined),
             s"metadata-only aggregates unavailable on a canonical fixture: " +
@@ -606,8 +610,7 @@ object StorageQueries {
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           def live(): Set[(String, Long)] = {
-            val g = Streaming.manifestGenerations(fs, target).last
-            Streaming.manifestEntries(fs, target, g).map { f =>
+            Snapshot.latest(fs, target).get.paths.map { f =>
               f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$target/$f")).getLen
             }.toSet
           }
@@ -619,9 +622,9 @@ object StorageQueries {
             "delete-vector commits rewrote data files — the merge-on-read " +
               "contract is broken")
           val got = Streaming.readCommitted(s, target)
-          // metadata COUNT stays exact under DVs (statsMinMax refuses
+          // metadata COUNT stays exact under DVs (Snapshot.minMax refuses
           // by design — a recorded extreme may be deleted)
-          val metaCnt = Streaming.statsRowCount(fs, target)
+          val metaCnt = Snapshot.latest(fs, target).flatMap(_.rowCount)
           require(metaCnt.forall(_ == got.count()),
             s"metadata row count $metaCnt diverges from the DV-applied read")
           got.groupBy("lang")
@@ -808,9 +811,9 @@ object StorageQueries {
           // metadata stays exact through the DV + add composite commit
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
-          require(Streaming.statsRowCount(fs, target)
-              .contains(canonCount + stats.inserted),
-            s"merge left stats inexact: ${Streaming.statsRowCount(fs, target)} " +
+          val metaCnt = Snapshot.latest(fs, target).flatMap(_.rowCount)
+          require(metaCnt.contains(canonCount + stats.inserted),
+            s"merge left stats inexact: $metaCnt " +
               s"vs $canonCount + ${stats.inserted}")
           // read back through the DV-applying connector surface
           s.read.format("graft").load(target)
@@ -885,7 +888,7 @@ object StorageQueries {
             stagePartitionBy = Seq("shard"))
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
-          require(Streaming.statsRowCount(fs, target).contains(canon.count()),
+          require(Snapshot.latest(fs, target).flatMap(_.rowCount).contains(canon.count()),
             "updateWhere changed the live row count")
           require(updated == canon.filter(col("doc_id") % 5 === 1).count(),
             "updateWhere row count diverges from the predicate's")
@@ -951,13 +954,13 @@ object StorageQueries {
             canon, 1L)
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val g1 = Streaming.manifestGenerations(fs, target).last
+          val g1 = Snapshot.list(fs, target).latest.get
           Streaming.deleteWhere(s, target, col("doc_id") % 9 === 4)
           val updN = Streaming.updateWhere(s, target,
             col("doc_id") % 13 === 2,
             Map("n_chars" -> (col("n_chars") + 11L)),
             stagePartitionBy = Seq("shard"))
-          val gUpd = Streaming.manifestGenerations(fs, target).last
+          val gUpd = Snapshot.list(fs, target).latest.get
           Streaming.readChangeFeed(s, target, g1, gUpd) match {
             case None => outSchema
             case Some(feed) =>

@@ -19,6 +19,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** The DSv2 face of the graft table format (r18 judge #2): a
   * [[TableCatalog]] + namespace catalog over a filesystem root, so
@@ -128,14 +129,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val dataPath = tableDataPath(ident, desc)
     val tfs = new Path(dataPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tsMs = timestamp / 1000L
-    val gens = Streaming.manifestGenerations(tfs, dataPath)
+    val listing = Snapshot.list(tfs, dataPath)
+    val gens = listing.gens
     if (gens.isEmpty) throw new NoSuchTableException(ident)
-    val pick = gens.filter(g =>
-      Streaming.commitTimeMs(tfs, dataPath, g).exists(_ <= tsMs)).lastOption
+    val pick = gens.filter(g => listing.committedAtMs(g).exists(_ <= tsMs)).lastOption
       .getOrElse(throw new IllegalArgumentException(
         s"TIMESTAMP AS OF ${new java.sql.Timestamp(tsMs)} predates every " +
           s"RETAINED generation of ${ident.toString} (oldest retained: " +
-          s"${gens.min}, committed ${Streaming.commitTimeMs(tfs, dataPath, gens.min)
+          s"${gens.min}, committed ${listing.committedAtMs(gens.min)
             .map(ms => new java.sql.Timestamp(ms).toString).getOrElse("?")}) — " +
           "the retention horizon has passed it"))
     new GraftTable(dataPath, s"$catalogName.${ident.toString}", Some(pick), desc)
@@ -144,7 +145,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private def loadPinned(ident: Identifier, gen: Option[Long]): Table = {
     val desc = TableDescriptor.read(fs, tableDescriptorPath(ident))
     val dataPath = tableDataPath(ident, desc)
-    val committed = Streaming.manifestGenerations(fs, dataPath).nonEmpty
+    val committed = Snapshot.list(fs, dataPath).latest.nonEmpty
     if (desc.isEmpty && !committed) throw new NoSuchTableException(ident)
     new GraftTable(dataPath, s"$catalogName.${ident.toString}", gen, desc)
   }
@@ -351,7 +352,7 @@ class GraftTable(
 
   override lazy val schema: StructType = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (Streaming.manifestGenerations(fs, path).isEmpty)
+    if (Snapshot.list(fs, path).latest.isEmpty)
       desc.map(_.schema).getOrElse(throw new IllegalStateException(
         s"graft table $path has neither a committed manifest nor a descriptor"))
     else {
@@ -373,7 +374,7 @@ class GraftTable(
 
   override def version(): String = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    pinnedGen.orElse(Streaming.manifestGenerations(fs, path).lastOption)
+    pinnedGen.orElse(Snapshot.list(fs, path).latest)
       .map(_.toString).orNull
   }
 
@@ -448,7 +449,7 @@ private[sources] class GraftV1Scan(
         val spark = context.sparkSession
         val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
         val base: DataFrame =
-          if (Streaming.manifestGenerations(fs, path).isEmpty)
+          if (Snapshot.list(fs, path).latest.isEmpty)
             // declared-but-never-written table: zero typed rows
             spark.createDataFrame(
               java.util.Collections.emptyList[org.apache.spark.sql.Row](), required)

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.streaming.Streaming
 import graft.table.Manifest.dirOf
-import graft.table.ManifestEntry
+import graft.table.{ManifestEntry, Snapshot}
 
 /** The TABLE-FORMAT connector over the graft manifest protocol (r16
   * judge #3: "the storage layer is invisible to Catalyst/SQL"):
@@ -36,7 +36,7 @@ import graft.table.ManifestEntry
   *    filters (`=`, `<`, `<=`, `>`, `>=`, `IN`, and their
   *    conjunctions) are translated to zone-map ranges and pruned
   *    against the manifest's per-file bounds
-  *    ([[Streaming.zoneMapFilesAt]]) before Spark lists a single path
+  *    ([[Snapshot.zoneKept]]) before Spark lists a single path
   *    — the same lossless metadata prune `readCommittedRange` does,
   *    now owned by the optimizer instead of the caller;
   *  - COLUMN PRUNING, predicate pushdown into parquet row groups,
@@ -184,7 +184,7 @@ class GraftTableSource extends RelationProvider
       "graft sink needs a table path: df.write.format(\"graft\").save(<table>)"))
     val spark = sqlContext.sparkSession
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing = Streaming.manifestGenerations(fs, target).lastOption
+    val existing = Snapshot.list(fs, target).latest
     val upsertKeys = (parameters.get("keyCol"), parameters.get("versionCol"),
       parameters.get("shardCol"))
 
@@ -234,8 +234,8 @@ class GraftTableSource extends RelationProvider
         .parquet(stage.toString)
       val replaced: Set[String] =
         if (!replaceAll) Set.empty
-        else Streaming.latestManifest(fs, target) match {
-          case Some((_, rels)) => rels.map(dirOf).toSet + ""
+        else Snapshot.latest(fs, target) match {
+          case Some(snap) => snap.paths.map(dirOf).toSet + ""
           case None => Set.empty
         }
       Streaming.commitStage(fs, target, replaced, stageName,
@@ -280,7 +280,7 @@ class GraftTableSource extends RelationProvider
           "graft change-feed read needs option(\"startingGeneration\", <gen>) — " +
             "the EXCLUSIVE lower bound (changes strictly after it)")).toLong
       val to = parameters.get("endingGeneration").map(_.toLong)
-        .orElse(Streaming.manifestGenerations(fsC, path).lastOption)
+        .orElse(Snapshot.list(fsC, path).latest)
         .getOrElse(throw new IllegalArgumentException(
           s"no committed graft manifest at $path — not a graft table"))
       val frame = Streaming.readChangeFeed(spark, path, from, to).getOrElse {
@@ -454,20 +454,22 @@ class GraftFileIndex(
   private val targetPath = new Path(target)
   private val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The snapshot this relation reads — resolved ONCE. */
-  val generation: Long = pinnedGen
-    .orElse(Streaming.manifestGenerations(fs, target).lastOption)
-    .getOrElse(throw new IllegalArgumentException(
+  /** The snapshot this relation reads — resolved ONCE: the pinned
+    * generation's live entries (paths plus stats/dv/schema-fingerprint
+    * tags). A generation carrying delete vectors is read only through
+    * the DV-applying relation ([[GraftDvRelation]]), which owns that
+    * correctness; this index is the pruned listing underneath it.
+    */
+  private val snapshot: Snapshot = {
+    val listing = Snapshot.list(fs, target)
+    listing.at(pinnedGen.orElse(listing.latest).getOrElse(throw new IllegalArgumentException(
       s"no committed graft manifest at $target — not a graft table " +
-        "(write it with the Streaming verbs or Streaming.writeManifest first)"))
+        "(write it with the Streaming verbs or Streaming.writeManifest first)")))
+  }
 
-  // the pinned generation's live entries (metadata-only): paths plus
-  // stats/dv/schema-fingerprint tags. A generation carrying delete
-  // vectors is read only through the DV-applying relation
-  // ([[GraftDvRelation]]), which owns that correctness; this index is
-  // the pruned listing underneath it.
-  private[sources] val entries: Seq[ManifestEntry] =
-    Streaming.liveEntries(fs, target, generation)
+  val generation: Long = snapshot.gen
+
+  private[sources] val entries: Seq[ManifestEntry] = snapshot.entries
 
   // the pinned generation's live files, relative paths (metadata-only)
   private val allFiles: Seq[String] = entries.map(_.path)
@@ -589,25 +591,20 @@ class GraftFileIndex(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     // 1) zone-map file skipping from the pushed data filters
-    val ranges = GraftFileIndex.rangesOf(dataFilters)
-    val (zoneKept, total) =
-      if (ranges.isEmpty) (allFiles, allFiles.size)
-      else Streaming.zoneMapFilesAt(fs, target, generation, ranges)
+    val zoneKept = Snapshot.zoneKept(entries, GraftFileIndex.rangesOf(dataFilters))
     // 2) bloom file skipping for point probes (=, IN) on indexed
     // columns — the tier that prunes where min/max cannot (a
     // high-cardinality key's bounds span every probe); untagged
     // columns/files pass through unchanged
-    val points = GraftFileIndex.pointsOf(dataFilters)
-    val bloomKept = points.foldLeft(zoneKept) { case (acc, (column, values)) =>
-      Streaming.bloomPruneFiles(spark, fs, target, generation, column, values, acc)
+    val bloomKept = GraftFileIndex.pointsOf(dataFilters).foldLeft(zoneKept) {
+      case (acc, (column, values)) => Streaming.bloomKeptEntries(spark, target, acc, column, values)
     }
     // 3) null-test pruning from the recorded per-file null counts
-    val kept = GraftFileIndex.nullTestsOf(dataFilters)
-      .foldLeft(bloomKept) { case (acc, (column, isNull)) =>
-        Streaming.nullPruneFiles(fs, target, generation, column, isNull, acc)
-      }
-    lastPruning = Some((kept.size, total))
-    // 2) hive partition pruning from the partition filters
+    val kept = GraftFileIndex.nullTestsOf(dataFilters).foldLeft(bloomKept) {
+      case (acc, (column, isNull)) => Snapshot.nullKept(acc, column, isNull)
+    }.map(_.path)
+    lastPruning = Some((kept.size, entries.size))
+    // 4) hive partition pruning from the partition filters
     val byDir = kept.groupBy(dirOf).toSeq.sortBy(_._1)
     val pruned =
       if (partitionFilters.isEmpty || partitionSchema.isEmpty) byDir
@@ -822,11 +819,9 @@ private[sources] class GraftStreamSink(
     // (old commit marked under the path scope, replay under the query
     // scope) re-appends once; the latest-wins upsert path absorbs it
     // by merge semantics, the append path duplicates one batch.
-    if (Streaming.txnHighWaterMark(fs, target, scope).exists(_ >= batchId)) return
-    if (!queryScoped) {
-      val gens = Streaming.manifestGenerations(fs, target)
-      if (gens.exists(g => Streaming.commitTag(fs, target, g).contains(tag))) return
-    }
+    val listing = Snapshot.list(fs, target)
+    if (listing.latest.exists(g => listing.header(g).txns.get(scope).exists(_ >= batchId))) return
+    if (!queryScoped && listing.gens.exists(g => listing.header(g).tag.contains(tag))) return
     // the standard DSv1 sink re-root: the incoming frame is flagged
     // as a STREAMING plan and cannot seed a new query (`.rdd` throws
     // "must be executed with writeStream.start()"); execute the
@@ -850,7 +845,7 @@ private[sources] class GraftStreamSink(
         // a restarted DSv1 stream re-resolves its source schema, so a
         // widened upstream table would otherwise silently append
         // mixed-schema files here. Same opt-in as the batch path.
-        if (Streaming.manifestGenerations(fs, target).nonEmpty &&
+        if (listing.latest.nonEmpty &&
             !parameters.get("allowSchemaEvolution").exists(_.toBoolean)) {
           val current = new GraftFileIndex(spark, target, None)
           if (current.entries.nonEmpty) {
@@ -881,8 +876,7 @@ private[sources] class GraftStreamSink(
         (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
           .parquet(stage.toString)
         Streaming.commitStage(fs, target, Set.empty, stageName,
-          baseGen = Some(Streaming.manifestGenerations(fs, target)
-            .lastOption.getOrElse(0L)),
+          baseGen = Some(listing.latest.getOrElse(0L)),
           tag = Some(tag), txn = Some((scope, batchId)))
     }
   }
@@ -912,8 +906,8 @@ private[sources] class GraftStreamSink(
   * limits a backlogged stream (the maxFilesPerTrigger analog): each
   * micro-batch spans at most n generations, clamped up to the oldest
   * RETAINED one (an end offset past the horizon would refuse). A stream that stalls past the retention
-  * horizon fails loudly on its next batch (requireRetained inside the
-  * readers) rather than silently skipping — re-bootstrap from a fresh
+  * horizon fails loudly on its next batch (the readers' horizon
+  * check) rather than silently skipping — re-bootstrap from a fresh
   * query. Exactly-once end-to-end against the graft sink: this source
   * redelivers a batch only on the standard crash-replay window, and
   * the sink's txn high-water mark skips it.
@@ -957,7 +951,7 @@ private[sources] class GraftStreamSource(
   }
 
   override def getOffset: Option[org.apache.spark.sql.execution.streaming.Offset] =
-    Streaming.manifestGenerations(fs, target).lastOption
+    Snapshot.list(fs, target).latest
       .map(latest => maxGensPerTrigger match {
         case Some(n) =>
           // the end offset must be a RETAINED generation (the readers
@@ -965,13 +959,13 @@ private[sources] class GraftStreamSource(
           // oldest retained one is clamped up — a stream that fell a
           // whole retention window behind takes one bigger batch
           // rather than failing (or losing data)
-          val oldestRetained = latest - Streaming.ManifestKeep + 1
+          val oldestRetained = latest - Snapshot.ManifestKeep + 1
           val capped = math.max(highWater, startingGen) + n
           if (capped < oldestRetained) logWarning(
             s"graft stream source on $target fell behind the retention horizon: " +
               s"maxGenerationsPerTrigger=$n would end the batch at generation " +
               s"$capped but the oldest retained generation is $oldestRetained " +
-              s"(ManifestKeep=${Streaming.ManifestKeep}) — taking one larger " +
+              s"(ManifestKeep=${Snapshot.ManifestKeep}) — taking one larger " +
               "batch up to the horizon instead of losing the window")
           math.min(latest, math.max(capped, oldestRetained))
         case None => latest
@@ -1003,7 +997,8 @@ private[sources] class GraftStreamSource(
         // (compaction/rewrite) still refuses, inside readChangeFeed
         Streaming.readChangeFeed(spark, target, fromGen, toGen)
       } else {
-        val dvGens = Streaming.dvWindowGens(fs, target, fromGen, toGen)
+        val listing = Snapshot.list(fs, target)
+        val dvGens = Streaming.dvWindowGens(listing, fromGen, toGen)
         if (dvGens.nonEmpty) throw new IllegalStateException(
           s"graft stream source on $target cannot deliver generations " +
             s"${dvGens.mkString(",")}: they carry merge-on-read delete vectors, " +
@@ -1013,9 +1008,8 @@ private[sources] class GraftStreamSource(
             "\"true\") for row-level delivery, or restart the query from a fresh " +
             "checkpoint to re-bootstrap")
         val rangeSchemas = ((fromGen + 1) to toGen)
-          .flatMap(g => Streaming.commitSchemaHash(fs, target, g)).distinct
-        Streaming.readAddedBetween(spark, target, fromGen, toGen,
-          mergeSchema = rangeSchemas.size > 1)
+          .flatMap(g => listing.header(g).schemaHash).distinct
+        Streaming.readAdded(spark, listing, fromGen, toGen, mergeSchema = rangeSchemas.size > 1)
       }
     val aligned = batch match {
       case None =>

@@ -6,8 +6,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.table.{Bounds, ColumnStats, CommitHeader, ManifestEntry, ManifestLine, Tag}
+import graft.table.{Bounds, ColumnStats, CommitHeader, Listing, ManifestEntry, ManifestLine,
+  Snapshot, Tag}
 import graft.table.Manifest.dirOf
+import graft.table.Snapshot.{inParallel, manifestDir, ManifestKeep}
 
 /** Structured Streaming surface.
   *
@@ -182,7 +184,7 @@ object Streaming {
   //
   // SCHEMA EVOLUTION (r15 judge #5): every commit records its added
   // files' parquet-schema fingerprint in the manifest (`# schema`
-  // header; commitSchemaHash) — drift detection with zero data I/O.
+  // header; Snapshot.header) — drift detection with zero data I/O.
   // A widening batch is refused by default and accepted under
   // allowSchemaEvolution (touched shards rewrite widened, old rows
   // null-padded); mixed-schema tables read via mergeSchema = true on
@@ -212,7 +214,7 @@ object Streaming {
     withWriterLease(fs, target) {
     recoverStage(fs, target)
     val existing =
-      if (!fs.exists(targetPath) && latestManifest(fs, target).isEmpty) None
+      if (!fs.exists(targetPath) && Snapshot.list(fs, target).latest.isEmpty) None
       else
         try Some(readCommitted(spark, target))
         catch { case _: org.apache.spark.sql.AnalysisException => None }
@@ -277,7 +279,7 @@ object Streaming {
     * null-padded); untouched shards keep their files, so the table
     * goes mixed-schema — read it with [[readCommitted]]'s
     * `mergeSchema = true`, and detect the transition via the
-    * generation's `# schema` header ([[commitSchemaHash]]).
+    * generation's `# schema` header ([[graft.table.CommitHeader]]).
     */
   def upsertPartitionedBatch(
       target: String,
@@ -376,12 +378,13 @@ object Streaming {
     // scannable because a bootstrap checkpoint carries its own delta
     // lines. Lease-serialized callers are unaffected: nothing can
     // land inside their read-to-commit window, so the scan is vacuous.
-    val baseGen = Some(manifestGenerations(fs, target).lastOption.getOrElse(0L))
+    val listing = Snapshot.list(fs, target)
+    val baseGen = Some(listing.latest.getOrElse(0L))
     // evolution reads ALL stored columns (the union with the batch's
     // becomes the widened schema); the default projects the batch's
     // columns, so a batch adding one refuses loudly in the read
     val existingTouched =
-      readPinnedShards(spark, fs, target, shardCol, shardVals.toSeq,
+      readPinnedShards(spark, fs, listing, shardCol, shardVals.toSeq,
         if (allowSchemaEvolution) Seq.empty else batch.columns.toSeq,
         mergeSchema = allowSchemaEvolution)
     val merged = existingTouched match {
@@ -442,19 +445,20 @@ object Streaming {
   private def readPinnedShards(
       spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
+      listing: Listing,
       shardCol: String,
       shardVals: Seq[Any],
       wantCols: Seq[String],
       mergeSchema: Boolean = false
   ): Option[DataFrame] = {
+    val target = listing.target
     val targetPath = new org.apache.hadoop.fs.Path(target)
-    manifestGenerations(fs, target).lastOption.map(g =>
-        (g, liveDirsApprox(fs, target, g))) match {
-      case Some((g, dirNames)) if dirNames.nonEmpty =>
+    val dirs = shardVals.map(v => s"$shardCol=$v").toSet
+    listing.latest.map(listing.at(_, Some(dirs))) match {
+      case Some(snap) if snap.dirs.nonEmpty =>
         // layout check over the DIR NAMES (O(#dirs) via the manifest
         // list, never the entry list)
-        require(dirNames.forall(d => d.nonEmpty && d.startsWith(s"$shardCol=")),
+        require(snap.dirs.forall(d => d.nonEmpty && d.startsWith(s"$shardCol=")),
           s"target $target has no '$shardCol' partition layout — " +
             "it was not written with this layout; migrate it (rewrite " +
             s"partitionBy($shardCol)) before shard-scoped merging")
@@ -468,16 +472,11 @@ object Streaming {
             s"shard value '$v' (${v.getClass.getName}) is not a plain scalar — " +
               "its partition-directory name is not safely derivable")
         }
-        val dirs = shardVals.map(v => s"$shardCol=$v").toSet
-        val lines = entriesForDirs(fs, target, g, Some(dirs))
-        if (lines.isEmpty) None
+        if (snap.entries.isEmpty) None
         else {
           // DV-applied: an upsert merging a shard that took a
           // merge-on-read delete must NOT resurrect the deleted rows
-          val df = applyDeleteVectors(spark, target, lines,
-            spark.read.option("basePath", target)
-              .option("mergeSchema", mergeSchema.toString)
-              .parquet(lines.map(l => s"$target/${l.path}"): _*))
+          val df = readEntries(spark, target, snap.entries, mergeSchema)
           Some(if (wantCols.isEmpty) df else df.select(wantCols.map(col): _*))
         }
       case Some(_) => None // manifest exists but empty: no rows anywhere
@@ -516,13 +515,6 @@ object Streaming {
     * the protocol must not depend on a committer detail.
     */
   val StageCommitMarker = "__graft_stage_committed"
-
-  /** Generations retained for pinned readers: a reader holding
-    * generation g scans paths guaranteed present until the table
-    * advances ManifestKeep generations past g (each generation's
-    * replaced files are deleted only when that generation is pruned).
-    */
-  val ManifestKeep = 3
 
   /** Recursive data-file listing under `p`, paths relative to it;
     * `_`/`.`-prefixed names (markers, temp files, manifest dirs)
@@ -621,31 +613,6 @@ object Streaming {
     */
   final class CommitConflictException(msg: String) extends IllegalStateException(msg)
 
-  /** Commit-execution parallelism: staged-file renames and footer
-    * stat reads are independent FS metadata ops, so a batch of N files
-    * commits in O(N / threads) round-trips instead of N serial ones
-    * (r15 judge #3: the driver-serial loop was the protocol's
-    * wall-clock term at large batch sizes).
-    */
-  private val CommitPoolThreads = 16
-
-  private def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.size <= 1) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(CommitPoolThreads, items.size))
-      try {
-        val futures = items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
-          override def call(): B = f(a)
-        }))
-        // .get() rethrows (wrapped) — a failed rename/stat must fail
-        // the commit loudly, exactly as the serial loop did
-        futures.map(fu =>
-          try fu.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-      } finally pool.shutdownNow()
-    }
-
   /** The roll-forward half shared by [[commitStage]] and
     * [[recoverStage]]: execute the recorded plan. Idempotent at every
     * crash window — a staged file already moved is skipped; a manifest
@@ -730,7 +697,7 @@ object Streaming {
     // per-file row counts + schema fingerprints from the parquet
     // footers of the files THIS commit added — O(batch) metadata reads
     // (thread-pooled like the renames); counts make table/dir sizes a
-    // manifest lookup (committedDirRowCounts), the schema fingerprint
+    // manifest lookup (Snapshot.dirRowCounts), the schema fingerprint
     // becomes the generation's `# schema` header (drift detection for
     // followers). Computed ONCE outside the CAS loop: the footer
     // contents don't change on rebase.
@@ -745,9 +712,10 @@ object Streaming {
     // their retention-horizon lifecycle. The reference check loads
     // only the touched dirs' entries per retained generation.
     def abortConflict(detail: String): Nothing = {
+      val listing = Snapshot.list(fs, target)
       val protectedPaths: Set[String] =
-        manifestGenerations(fs, target).flatMap { g =>
-          try manifestEntriesForDirs(fs, target, g, touchedDirs)
+        listing.gens.flatMap { g =>
+          try listing.at(g, Some(touchedDirs)).paths
           catch { case _: IllegalStateException => Nil } // chain pruned mid-walk
         }.toSet
       files.filterNot(protectedPaths).foreach(f =>
@@ -764,7 +732,8 @@ object Streaming {
     lazy val addsByDir: Map[String, Seq[ManifestEntry]] = addEntries.groupBy(_.dir)
     var done = false
     while (!done) {
-      val prevGen = manifestGenerations(fs, target).lastOption
+      val listing = Snapshot.list(fs, target)
+      val prevGen = listing.latest
       // base entries of the TOUCHED dirs only, keyed by path with the
       // full entries as values (carried stats stay verbatim). The
       // manifest-list layout makes this O(touched), never the table's
@@ -786,10 +755,10 @@ object Streaming {
         case None => Some((listRel(fs, targetPath).toSet -- files)
           .map(p => p -> ManifestEntry.bare(p)).toMap)
       }
+      val base: Option[Snapshot] = prevGen.map(listing.at(_, Some(touchedDirs)))
       val baseTouched: Map[String, ManifestEntry] = bootstrapAll match {
         case Some(all) => all.filter { case (p, _) => touchedDirs(dirOf(p)) }
-        case None => entriesForDirs(fs, target, prevGen.get, Some(touchedDirs))
-          .map(l => l.path -> l).toMap
+        case None => base.get.byPath
       }
       // one grouping pass over the touched base, reused by the post
       // state and the replay check (not a rescan per dir)
@@ -836,11 +805,7 @@ object Streaming {
         // a legacy flat checkpoint, a `# rebuild` — can no longer
         // prove disjointness and conflicts conservatively.
         baseGen.filter(bg => prevGen.exists(_ > bg)).foreach { bg =>
-          val changed: Option[Set[String]] =
-            ((bg + 1) to prevGen.get).foldLeft(Option(Set.empty[String])) { (acc, g) =>
-              for (a <- acc; d <- deltaDirsOf(fs, target, g)) yield a ++ d
-            }
-          changed match {
+          listing.changedDirs(bg, prevGen.get) match {
             case None =>
               abortConflict(s"the window (gen $bg, gen ${prevGen.get}] of $target cannot " +
                 "be scanned for conflicts (pruned, legacy, or rebuilt in between)")
@@ -869,7 +834,7 @@ object Streaming {
             val windowAdds: Option[Seq[ManifestEntry]] =
               ((bg + 1) to prevGen.get).foldLeft(Option(Seq.empty[ManifestEntry])) {
                 (acc, g) =>
-                  for (a <- acc; d <- deltaOf(fs, target, g))
+                  for (a <- acc; d <- listing.changes(g))
                     yield a ++ d.collect { case ManifestLine.Add(e) => e }
               }
             windowAdds match {
@@ -886,7 +851,7 @@ object Streaming {
                       l.bounds.range(c) match {
                         case None => true // unprovable: conservative
                         case Some((bk, mn, mx)) =>
-                          bk != k || boundsOverlapStr(k, mn, mx, lo, hi)
+                          bk != k || Snapshot.overlapsRendered(k, mn, mx, lo, hi)
                       }
                     }
                   }
@@ -912,7 +877,7 @@ object Streaming {
               .map { case (d, ls) => d -> dedupeByPath(ls).sortBy(_.path) }
           case None => postTouched
         }
-        if (tryCommitManifest(fs, target, gen, postState,
+        if (tryCommitManifest(fs, listing, gen, postState,
             tombstones.toSeq.sorted, addEntries, schemaHash = commitSchema,
             tag = commitTagOpt, txn = commitTxnOpt,
             modified = modifiedByPath.values.toSeq.sortBy(_.path))) done = true
@@ -939,18 +904,6 @@ object Streaming {
   private def dedupeByPath(entries: Seq[ManifestEntry]): Seq[ManifestEntry] =
     if (entries.lengthCompare(entries.iterator.map(_.path).toSet.size) == 0) entries
     else entries.groupBy(_.path).valuesIterator.map(_.maxBy(_.encode.length)).toSeq
-
-  /** True when any live entry of `gen` carries a delete-vector tag —
-    * the reader-version probe: a consumer that cannot apply DVs (the
-    * format connector's plain file listing) must REFUSE such a
-    * generation rather than resurrect deleted rows.
-    */
-  def generationHasDeleteVectors(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Boolean =
-    liveEntries(fs, target, gen).exists(_.dv.isDefined)
 
   /** The manifest entry of the committed file `rel` under `root`: row
     * count, zone-map bounds and the file's OWN schema fingerprint (an
@@ -1008,7 +961,7 @@ object Streaming {
     // (and blacklisted) on any unusable chunk. A column with a null
     // count but NO values (all rows null) is still recorded — as a
     // `z` token carrying only the count — so IS NULL predicates can
-    // prune and statsMinMax can tell all-null from unrecordable.
+    // prune and Snapshot.minMax can tell all-null from unrecordable.
     val bounds = scala.collection.mutable.LinkedHashMap
       .empty[String, (Char, Option[(Any, Any)], Option[Long])]
     val bad = scala.collection.mutable.Set.empty[String]
@@ -1111,7 +1064,7 @@ object Streaming {
   private def boundLt(kind: Char, a: Any, b: Any): Boolean = kind match {
     case 'l' => a.asInstanceOf[Long] < b.asInstanceOf[Long]
     case 'd' => a.asInstanceOf[Double] < b.asInstanceOf[Double]
-    case _ => utf8Lt(a.asInstanceOf[String], b.asInstanceOf[String])
+    case _ => Snapshot.utf8Lt(a.asInstanceOf[String], b.asInstanceOf[String])
   }
 
   /** Heal an interrupted commit at `target`: a stage carrying the plan
@@ -1195,11 +1148,6 @@ object Streaming {
   // production rebuilds write a new root and repoint.
   // ------------------------------------------------------------------
 
-  /** Sibling directory holding manifest generations — OUTSIDE the
-    * table dir, so data-file listings never see them.
-    */
-  def manifestDir(target: String) = new org.apache.hadoop.fs.Path(target + ".__manifests")
-
   /** A full manifest CHECKPOINT is written every CheckpointEvery
     * generations; the generations between carry only their DELTA
     * (`inc-N`: the `+`/`-` lines vs generation N-1). Commit-side
@@ -1257,7 +1205,7 @@ object Streaming {
     */
   private def tryCommitManifest(
       fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
+      listing: Listing,
       gen: Long,
       postState: Map[String, Seq[ManifestEntry]],
       tombstones: Seq[String],
@@ -1268,8 +1216,9 @@ object Streaming {
       tag: Option[String] = None,
       txn: Option[(String, Long)] = None
   ): Boolean = {
+    val target = listing.target
     val mdir = manifestDir(target)
-    if (!fs.exists(mdir)) fs.mkdirs(mdir)
+    if (listing.files.isEmpty) fs.mkdirs(mdir)
     val token = java.util.UUID.randomUUID().toString.take(8)
     val delPath = new org.apache.hadoop.fs.Path(mdir, f"del-$gen%012d-$token")
     if (tombstones.nonEmpty) {
@@ -1282,10 +1231,10 @@ object Streaming {
         s"tombstone-file rename failed for generation $gen of $target")
     }
     val checkpoint = forceCheckpoint ||
-      checkpointGens(fs, target).isEmpty || gen % CheckpointEvery == 0
+      listing.checkpoints.isEmpty || gen % CheckpointEvery == 0
     // `# schema <hash>`: the fingerprint of the schema THIS commit's
     // added files carry (parquet-footer MessageType) — header comment,
-    // skipped by the entry parsers, surfaced by [[commitSchemaHash]]
+    // skipped by the entry parsers, surfaced by [[Snapshot.header]]
     // so a follower detects a widened column landing mid-table without
     // any data read
     // `# tag <t>`: an idempotency token riding INSIDE the atomic
@@ -1302,7 +1251,7 @@ object Streaming {
     // scope S already applied?" no matter how many compaction/bloom
     // autopilot commits landed since. O(#active sink scopes) header
     // lines per commit; one small header read of gen-1 to inherit.
-    val inheritedTxns: Map[String, Long] = commitTxns(fs, target, gen - 1)
+    val inheritedTxns: Map[String, Long] = listing.header(gen - 1).txns
     val txns: Map[String, Long] = txn match {
       case None => inheritedTxns
       case Some((scope, id)) =>
@@ -1316,15 +1265,14 @@ object Streaming {
       modified.map(ManifestLine.Modify)
     // per-dir manifests written by THIS attempt — deleted on a lost CAS
     val written = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    val (prefix, body) =
-      if (checkpoint)
-        ("gen", header ++ checkpointRefLines(fs, target, gen, postState, token, written) ++ delta)
-      else ("inc", header ++ delta)
-    val tmp = new org.apache.hadoop.fs.Path(mdir, s".$prefix-$gen.tmp-$token")
+    val (name, twinName, body) =
+      if (checkpoint) (Snapshot.checkpointName(gen), Snapshot.deltaName(gen),
+        header ++ checkpointRefLines(fs, listing, gen, postState, token, written) ++ delta)
+      else (Snapshot.deltaName(gen), Snapshot.checkpointName(gen), header ++ delta)
+    val tmp = new org.apache.hadoop.fs.Path(mdir, s".$name.tmp-$token")
     writeLines(fs, tmp, body.map(_.encode))
-    val dst = new org.apache.hadoop.fs.Path(mdir, f"$prefix-$gen%012d")
-    val twin = new org.apache.hadoop.fs.Path(mdir,
-      f"${if (checkpoint) "inc" else "gen"}-$gen%012d")
+    val dst = new org.apache.hadoop.fs.Path(mdir, name)
+    val twin = new org.apache.hadoop.fs.Path(mdir, twinName)
     def lose(): Boolean = {
       fs.delete(tmp, false)
       if (tombstones.nonEmpty) fs.delete(delPath, false)
@@ -1361,13 +1309,13 @@ object Streaming {
     */
   private def checkpointRefLines(
       fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
+      listing: Listing,
       gen: Long,
       postState: Map[String, Seq[ManifestEntry]],
       token: String,
       written: scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]
   ): Seq[ManifestLine.Ref] = {
-    val mdir = manifestDir(target)
+    val mdir = manifestDir(listing.target)
     // write the dirty dirs' per-dir manifests on the commit pool: each
     // is an independent create of a uniquely-named file (no rename
     // dance; a crashed or losing attempt's orphan is swept by
@@ -1385,18 +1333,13 @@ object Streaming {
         ManifestLine.Ref(d, n)
       }
     }
-    val prevCkpt = checkpointGens(fs, target).filter(_ < gen).lastOption
-    prevCkpt match {
+    listing.checkpoints.filter(_ < gen).lastOption match {
       case None => // first checkpoint: postState covers the whole table
         writeDirManifests(postState.toSeq)
       case Some(pc) =>
         // dirs whose state changed in (pc, gen): the intervening deltas'
         // dirs (None = unscannable) plus this commit's touched dirs
-        val dirtyBetween: Option[Set[String]] =
-          ((pc + 1) until gen).foldLeft(Option(Set.empty[String])) { (acc, g) =>
-            for (a <- acc; d <- deltaDirsOf(fs, target, g)) yield a ++ d
-          }
-        (readCheckpoint(fs, target, pc), dirtyBetween) match {
+        (listing.checkpointRefs(pc), listing.changedDirs(pc, gen - 1)) match {
           case (Right(prevRefs), Some(between)) =>
             val dirty = between ++ postState.keySet
             val clean = prevRefs.filterNot(r => dirty(r.dir))
@@ -1404,74 +1347,16 @@ object Streaming {
             val untouched = dirty -- postState.keySet
             val recon: Map[String, Seq[ManifestEntry]] =
               if (untouched.isEmpty) Map.empty
-              else entriesForDirs(fs, target, gen - 1, Some(untouched)).groupBy(_.dir)
+              else listing.at(gen - 1, Some(untouched)).entries.groupBy(_.dir)
             (clean ++ writeDirManifests((postState ++ recon).toSeq)).sortBy(_.dir)
           case _ =>
             // legacy flat previous checkpoint (or pruned window): one
             // full rewrite, after which the table is on the new format
-            val all = entriesForDirs(fs, target, gen - 1, None).groupBy(_.dir)
+            val all = listing.at(gen - 1).entries.groupBy(_.dir)
             writeDirManifests(((all -- postState.keySet) ++ postState).toSeq)
         }
     }
   }
-
-  /** A retained checkpoint's body: its dir -> per-dir-manifest
-    * references, or — in the LEGACY flat format — the entries
-    * themselves. An EMPTY new-format checkpoint (a table with zero
-    * live rows) is Right(empty).
-    */
-  private def readCheckpoint(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Either[Seq[ManifestEntry], Seq[ManifestLine.Ref]] = {
-    val lines = readManifest(fs,
-      new org.apache.hadoop.fs.Path(manifestDir(target), f"gen-$gen%012d"))
-    if (ManifestLine.isLegacyFlat(lines)) Left(lines.collect { case ManifestLine.Entry(e) => e })
-    else Right(lines.collect { case r: ManifestLine.Ref => r })
-  }
-
-  /** The delta lines (`+`/`-`/`~`) recorded by generation `gen`'s own
-    * commit. None when the information is not available — the manifest
-    * file is gone, the checkpoint is legacy flat, or it is a
-    * `# rebuild` (writeManifest after a wholesale swap, whose physical
-    * delta is unknowable) — and a conflict scan must then refuse
-    * conservatively.
-    */
-  private def deltaOf(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Option[Seq[ManifestLine]] =
-    manifestFileOf(fs, target, gen).map(readManifest(fs, _)).filterNot(lines =>
-      ManifestLine.isLegacyFlat(lines) || CommitHeader.of(lines).rebuild)
-
-  /** The directories touched by generation `gen`'s own commit
-    * ([[deltaOf]]); a DV delete changes a dir's LIVE ROWS without
-    * touching its file set, so its `~` lines count — it must conflict
-    * a racing merge of that dir.
-    */
-  private def deltaDirsOf(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Option[Set[String]] =
-    deltaOf(fs, target, gen).map(_.iterator.collect {
-      case ManifestLine.Add(e) => e.dir
-      case ManifestLine.Remove(p) => dirOf(p)
-      case ManifestLine.Modify(e) => e.dir
-    }.toSet)
-
-  /** [[boundsOverlap]] with string-rendered query bounds (the plan's
-    * `E` line carrier format).
-    */
-  private def boundsOverlapStr(
-      kind: Char, mn: String, mx: String, lo: String, hi: String): Boolean =
-    kind match {
-      case 'l' => !(mx.toLong < lo.toLong || mn.toLong > hi.toLong)
-      case 'd' => !(mx.toDouble < lo.toDouble || mn.toDouble > hi.toDouble)
-      case _ => !(utf8Lt(mx, lo) || utf8Lt(hi, mn))
-    }
 
   /** A pluggable atomic-claim coordinator for stores whose rename is
     * NOT an atomic fail-if-exists operation (the Delta LogStore
@@ -1646,26 +1531,16 @@ object Streaming {
     require(olderThanMs >= 0, "olderThanMs must be >= 0")
     val targetPath = new org.apache.hadoop.fs.Path(target)
     val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = manifestGenerations(fs, target)
-    require(gens.nonEmpty,
+    val listing = Snapshot.list(fs, target)
+    require(listing.gens.nonEmpty,
       s"cannot vacuum $target: no committed manifest (not maintained by this module)")
     val referenced: Set[String] =
-      gens.flatMap(g => manifestEntries(fs, target, g)).toSet
+      listing.walkAll().flatMap(_.paths).toSet
     // files a pending tombstone file owns: their deletion belongs to
     // the horizon GC (a pinned reader inside the horizon may still
     // resolve the generation that references them)
-    val mdir = manifestDir(target)
-    val pendingDel: Set[String] =
-      fs.listStatus(mdir).map(_.getPath.getName).filter(_.startsWith("del-"))
-        .flatMap { n =>
-          val dp = new org.apache.hadoop.fs.Path(mdir, n)
-          try {
-            val buf = new Array[Byte](fs.getFileStatus(dp).getLen.toInt)
-            val in = fs.open(dp)
-            try in.readFully(buf) finally in.close()
-            new String(buf, "UTF-8").split("\n").filter(_.nonEmpty).toSeq
-          } catch { case _: java.io.FileNotFoundException => Nil }
-        }.toSet
+    val pendingDel: Set[String] = listing.files.map(_.name).filter(_.startsWith("del-"))
+      .flatMap(n => listing.readLines(n).getOrElse(Nil)).toSet
     val now = System.currentTimeMillis()
     def aged(p: org.apache.hadoop.fs.Path): Boolean =
       try now - fs.getFileStatus(p).getModificationTime >= olderThanMs
@@ -1710,12 +1585,11 @@ object Streaming {
       gen: Long
   ): Unit = {
     val mdir = manifestDir(target)
-    val names = fs.listStatus(mdir).map(_.getPath.getName)
+    val listing = Snapshot.list(fs, target)
+    val names = listing.files.map(_.name)
     val cutoff = gen - ManifestKeep
     // the oldest manifest file any retained generation's chain needs
-    val chainFloor = names
-      .filter(_.startsWith("gen-")).map(_.stripPrefix("gen-").toLong)
-      .filter(_ <= cutoff).maxOption.getOrElse(Long.MinValue)
+    val chainFloor = listing.checkpoints.filter(_ <= cutoff).maxOption.getOrElse(Long.MinValue)
     // del names carry a per-writer token suffix (del-N-<token>) since
     // the optimistic protocol — parse the generation as the digit run
     // (legacy untokenized del-N parses identically)
@@ -1733,14 +1607,7 @@ object Streaming {
       // posture as the vanished-checkpoint guard below; surfaced by
       // the 2-writer ManifestScale storm after r18's commit-path
       // timing shifted)
-      val relsOpt: Option[Seq[String]] =
-        try {
-          val buf = new Array[Byte](fs.getFileStatus(dp).getLen.toInt)
-          val in = fs.open(dp)
-          try in.readFully(buf) finally in.close()
-          Some(new String(buf, "UTF-8").split("\n").filter(_.nonEmpty).toSeq)
-        } catch { case _: java.io.FileNotFoundException => None }
-      relsOpt.foreach { rels =>
+      listing.readLines(n).foreach { rels =>
       // ORPHAN GUARD: a del file whose commit never landed (writer died
       // between the del rename and the manifest CAS) or lost the CAS
       // and crashed before cleanup lists files that are STILL LIVE.
@@ -1752,10 +1619,10 @@ object Streaming {
       // generation that really replaces it. The check loads only the
       // del file's own dirs per retained generation.
       val delDirs = rels.map(dirOf).toSet
-      val protectedPaths: Set[String] = manifestGenerations(fs, target)
+      val protectedPaths: Set[String] = listing.gens
         .filter(_ > cutoff)
         .flatMap { g =>
-          try manifestEntriesForDirs(fs, target, g, delDirs)
+          try listing.at(g, Some(delDirs)).paths
           catch { case _: IllegalStateException => Nil } // chain pruned mid-walk
         }.toSet
       val dirs = scala.collection.mutable.Set.empty[String]
@@ -1775,43 +1642,30 @@ object Streaming {
       fs.delete(dp, false)
       }
     }
-    for (n <- names) {
-      val g =
-        if (n.startsWith("gen-")) Some(n.stripPrefix("gen-").toLong)
-        else if (n.startsWith("inc-")) Some(n.stripPrefix("inc-").toLong)
-        else None
-      // deltas BELOW the chain floor are unreadable anyway (their
-      // checkpoint is gone) and checkpoints below it are superseded;
-      // everything >= the floor stays so retained chains reconstruct
-      g.foreach { gg =>
-        if (gg <= cutoff && gg < chainFloor)
-          fs.delete(new org.apache.hadoop.fs.Path(mdir, n), false)
-      }
-    }
+    // deltas BELOW the chain floor are unreadable anyway (their
+    // checkpoint is gone) and checkpoints below it are superseded;
+    // everything >= the floor stays so retained chains reconstruct
+    for (f <- listing.files; g <- f.gen if g <= cutoff && g < chainFloor)
+      fs.delete(new org.apache.hadoop.fs.Path(mdir, f.name), false)
     // per-dir manifest GC: an m-file lives as long as ANY retained
     // checkpoint references it (reused refs keep old m-files alive
     // across checkpoints — by design). Unreferenced m-files at or
     // below the cutoff are CAS losers' and crashed attempts' orphans:
     // safe to delete, because any IN-FLIGHT writer's m-files carry
     // generation latest+1 > cutoff by construction.
-    val remaining = fs.listStatus(mdir).map(_.getPath.getName)
-    val referenced: Set[String] = remaining.iterator
-      .filter(_.startsWith("gen-"))
-      .flatMap { n =>
+    val remaining = Snapshot.list(fs, target)
+    val referenced: Set[String] = remaining.checkpoints.iterator
+      .flatMap { g =>
         // a concurrent lease-less writer's prune may delete a listed
-        // gen- file between our listStatus and this read (ADVICE r16):
+        // checkpoint between our listing and this read (ADVICE r16):
         // a vanished checkpoint retains nothing, so it contributes no
         // references — it must not fail a verb whose commit landed
-        try readCheckpoint(fs, target, n.stripPrefix("gen-").toLong)
-          .fold(_ => Nil, _.map(_.file))
-        catch {
-          case _: java.io.FileNotFoundException => Nil
-          case _: IllegalStateException => Nil
-        }
+        try remaining.checkpointRefs(g).fold(_ => Nil, _.map(_.file))
+        catch { case _: java.io.FileNotFoundException => Nil }
       }
       .toSet
     def mGen(n: String): Long = n.stripPrefix("m-").takeWhile(_.isDigit).toLong
-    for (n <- remaining
+    for (n <- remaining.files.map(_.name)
          if n.startsWith("m-") && mGen(n) <= cutoff && !referenced(n))
       fs.delete(new org.apache.hadoop.fs.Path(mdir, n), false)
   }
@@ -1833,384 +1687,35 @@ object Streaming {
     val schema = entries.flatMap(_.schemaHash).headOption
     // single-writer path by contract (fresh table / post-rebuild), but
     // the CAS loop keeps even a misuse linearizable
-    var gen = manifestGenerations(fs, target).lastOption.getOrElse(0L) + 1
-    while (!tryCommitManifest(fs, target, gen, byDir, Nil, Nil,
-        forceCheckpoint = true, schemaHash = schema))
-      gen = manifestGenerations(fs, target).lastOption.getOrElse(0L) + 1
+    var gen = 0L
+    var done = false
+    while (!done) {
+      val listing = Snapshot.list(fs, target)
+      gen = listing.latest.getOrElse(0L) + 1
+      done = tryCommitManifest(fs, listing, gen, byDir, Nil, Nil,
+        forceCheckpoint = true, schemaHash = schema)
+    }
     gen
   }
 
-  /** The RETAINED manifest generations of `target`, ascending —
-    * checkpoints (`gen-N`) and deltas (`inc-N`) alike; each one a
-    * complete, readable snapshot (deltas reconstruct from the nearest
-    * checkpoint below) until it ages past the retention horizon.
+  /** The RETAINED manifest generations of `target`, ascending. A
+    * one-line delegate kept because the benchmark harness (`perfbench/`,
+    * frozen) calls it; table code lists through [[Snapshot.list]].
     */
   def manifestGenerations(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String
-  ): Seq[Long] = {
-    val mdir = manifestDir(target)
-    if (!fs.exists(mdir)) Nil
-    else fs.listStatus(mdir).map(_.getPath.getName)
-      .collect {
-        case n if n.startsWith("gen-") => n.stripPrefix("gen-").toLong
-        case n if n.startsWith("inc-") => n.stripPrefix("inc-").toLong
-      }
-      .toSeq.sorted
-  }
+  ): Seq[Long] = Snapshot.list(fs, target).gens
 
-  /** Checkpoint generations only (full entry lists), ascending. */
-  private def checkpointGens(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String
-  ): Seq[Long] = {
-    val mdir = manifestDir(target)
-    if (!fs.exists(mdir)) Nil
-    else fs.listStatus(mdir).map(_.getPath.getName)
-      .filter(_.startsWith("gen-")).map(_.stripPrefix("gen-").toLong)
-      .toSeq.sorted
-  }
-
-  private def readManifestFile(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path
-  ): Seq[String] = {
-    val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(buf) finally in.close()
-    new String(buf, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-  }
-
-  /** One manifest file, each line decoded once. */
-  private def readManifest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path
-  ): Seq[ManifestLine] = readManifestFile(fs, p).map(ManifestLine.decode)
-
-  /** The manifest file generation `gen` committed (checkpoint or
-    * delta), if retained.
+  /** The relative data-file PATHS of one retained generation. A
+    * one-line delegate kept because the benchmark harness (`perfbench/`,
+    * frozen) calls and times it.
     */
-  private def manifestFileOf(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Option[org.apache.hadoop.fs.Path] = {
-    val mdir = manifestDir(target)
-    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
-  }
-
-  /** The live ENTRIES (paths plus stats and tags) of one retained
-    * generation: the nearest checkpoint at or below it
-    * (a MANIFEST LIST — its per-dir manifest files loaded in parallel,
-    * or a legacy flat entry list read verbatim) plus the intervening
-    * deltas (≤ CheckpointEvery small reads; `-` lines remove by path).
-    * Throws loudly for a pruned (or never-committed) generation — a
-    * time-travel read beyond the horizon must refuse, never silently
-    * read the wrong snapshot.
-    */
-  private[graft] def liveEntries(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Seq[ManifestEntry] = entriesForDirs(fs, target, gen, None)
-
-  /** [[liveEntries]] RESTRICTED to `dirs` (None = all): the
-    * manifest-list layout makes this O(requested dirs' entries + #dir
-    * refs + window deltas) — a shard-scoped verb on a million-file
-    * table resolves its touched shards without ever materializing the
-    * table's entry list (the Iceberg manifest-list read path).
-    */
-  private def entriesForDirs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long,
-      dirs: Option[Set[String]]
-  ): Seq[ManifestEntry] = {
-    val mdir = manifestDir(target)
-    def refuse(): Nothing = throw new IllegalStateException(
-      s"manifest generation $gen of $target is not retained " +
-        s"(retained: ${manifestGenerations(fs, target).mkString(",")}) — " +
-        s"the retention horizon is $ManifestKeep generations")
-    def wanted(d: String): Boolean = dirs.forall(_.contains(d))
-    val hasCkptAtGen = fs.exists(new org.apache.hadoop.fs.Path(mdir, f"gen-$gen%012d"))
-    if (!hasCkptAtGen &&
-        !fs.exists(new org.apache.hadoop.fs.Path(mdir, f"inc-$gen%012d"))) refuse()
-    val base = checkpointGens(fs, target).filter(_ <= gen).lastOption.getOrElse(refuse())
-    val entries = scala.collection.mutable.LinkedHashMap.empty[String, ManifestEntry]
-    readCheckpoint(fs, target, base) match {
-      case Right(refs) =>
-        inParallel(refs.filter(r => wanted(r.dir))) { r =>
-          readManifest(fs, new org.apache.hadoop.fs.Path(mdir, r.file))
-        }.flatten.foreach {
-          case ManifestLine.Entry(e) => entries(e.path) = e
-          case _ => ()
-        }
-      case Left(legacy) =>
-        legacy.foreach(e => if (wanted(e.dir)) entries(e.path) = e)
-    }
-    var g = base + 1
-    while (g <= gen) {
-      val inc = new org.apache.hadoop.fs.Path(mdir, f"inc-$g%012d")
-      // a checkpoint can interrupt a delta chain only AT the chain's
-      // own generation (base == gen then); every intermediate must be
-      // a delta — a hole means the chain was pruned out from under us
-      if (!fs.exists(inc)) refuse()
-      readManifest(fs, inc).foreach {
-        case ManifestLine.Add(e) => if (wanted(e.dir)) entries(e.path) = e
-        case ManifestLine.Remove(p) => entries.remove(p)
-        // ENTRY MODIFIED in place (a delete-vector tag landed): same
-        // path, new entry — distinct from `+` so followers never read
-        // the file's rows as newly added
-        case ManifestLine.Modify(e) => if (wanted(e.dir)) entries(e.path) = e
-        case _: ManifestLine.Header => ()
-        case line => throw new IllegalStateException(
-          s"malformed delta line in $inc: '${line.encode}'")
-      }
-      g += 1
-    }
-    entries.values.toSeq
-  }
-
-  /** The `# ` header of generation `gen`'s commit — empty for a
-    * missing generation. Header lines lead the file, so the read stops
-    * at the first other line.
-    */
-  private def commitHeader(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): CommitHeader =
-    manifestFileOf(fs, target, gen).fold(CommitHeader()) { p =>
-      CommitHeader.of(readManifestFile(fs, p).iterator.map(ManifestLine.decode)
-        .takeWhile(_.isInstanceOf[ManifestLine.Header]).toSeq)
-    }
-
-  /** The schema fingerprint recorded by generation `gen`'s commit (the
-    * `# schema` header: a hash of the parquet schema its ADDED files
-    * carry), if the generation is retained and recorded one. A
-    * follower comparing fingerprints across the generations it
-    * consumes detects a widened/added column the moment it lands —
-    * zero data I/O — and can switch its read to mergeSchema.
-    */
-  def commitSchemaHash(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Option[String] = commitHeader(fs, target, gen).schemaHash
-
-  /** The idempotency TAG recorded by generation `gen`'s commit
-    * (`# tag` header), if any — the streaming sink's
-    * redelivery-detection channel: a tag lives and dies WITH the
-    * commit it covers, so "was batch N already applied?" is answerable
-    * from retained metadata with no separate marker race.
-    */
-  def commitTag(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Option[String] = commitHeader(fs, target, gen).tag
-
-  /** The per-scope TRANSACTION high-water marks recorded by (and
-    * inherited into) generation `gen`'s commit header (`# txn` lines)
-    * — empty for a missing/pre-txn generation. Scope → max applied
-    * transaction id; see [[tryCommitManifest]] for the carry-forward
-    * contract that makes these prune-proof.
-    */
-  private[graft] def commitTxns(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Map[String, Long] = commitHeader(fs, target, gen).txns
-
-  /** The durable high-water mark of transaction scope `scope`: the
-    * max id any commit recorded under `# txn scope <id>`, read from
-    * the LATEST retained generation (every commit inherits all
-    * scopes' marks forward, so the latest header is authoritative).
-    * None for a table that never saw the scope — the streaming sink's
-    * "was this batch already applied?" primitive, immune to the
-    * ManifestKeep horizon that can prune a per-commit `# tag`.
-    */
-  def txnHighWaterMark(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      scope: String
-  ): Option[Long] =
-    manifestGenerations(fs, target).lastOption
-      .flatMap(g => commitTxns(fs, target, g).get(scope))
-
-  /** The relative data-file PATHS of one retained generation. */
   def manifestEntries(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Seq[String] = liveEntries(fs, target, gen).map(_.path)
-
-  /** The relative data-file PATHS of one retained generation,
-    * restricted to `dirs` — O(requested dirs + #dir refs) under the
-    * manifest-list layout, the resolution path of every shard-scoped
-    * verb and dir-restricted read.
-    */
-  def manifestEntriesForDirs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long,
-      dirs: Set[String]
-  ): Seq[String] = entriesForDirs(fs, target, gen, Some(dirs)).map(_.path)
-
-  /** SUPERSET of the directory names holding live entries at `gen`:
-    * the base checkpoint's ref dirs plus every dir added by the
-    * intervening deltas (a dir EMPTIED by a delta may linger — callers
-    * use this for layout checks and candidate enumeration, where a
-    * stale-but-correctly-named dir is harmless, and resolve actual
-    * files via [[manifestEntriesForDirs]]). O(#dirs + window deltas),
-    * never the entry list.
-    */
-  private def liveDirsApprox(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Set[String] = {
-    val mdir = manifestDir(target)
-    val base = checkpointGens(fs, target).filter(_ <= gen).lastOption.getOrElse(
-      throw new IllegalStateException(
-        s"manifest generation $gen of $target is not retained " +
-          s"(retained: ${manifestGenerations(fs, target).mkString(",")}) — " +
-          s"the retention horizon is $ManifestKeep generations"))
-    val fromCkpt: Set[String] = readCheckpoint(fs, target, base) match {
-      case Right(refs) => refs.map(_.dir).toSet
-      case Left(legacy) => legacy.map(_.dir).toSet
-    }
-    ((base + 1) to gen).foldLeft(fromCkpt) { (acc, g) =>
-      acc ++ readManifest(fs, new org.apache.hadoop.fs.Path(mdir, f"inc-$g%012d"))
-        .collect { case ManifestLine.Add(e) => e.dir }
-    }
-  }
-
-  /** Per-directory LIVE row counts straight from the latest committed
-    * manifest — zero data I/O (the counts were read once, from the
-    * parquet footers, at each file's commit). None when the table has
-    * no manifest or any entry predates stats (legacy) — callers fall
-    * back to a data-side count. This is what turns table-health
-    * signals (AnnIndex.drift's per-cell populations, the maintenance
-    * autopilot's inputs) into metadata lookups at any corpus size.
-    */
-  def committedDirRowCounts(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String
-  ): Option[Map[String, Long]] =
-    manifestGenerations(fs, target).lastOption.flatMap { g =>
-      // live = physical footer count minus the entry's delete-vector
-      // positions (merge-on-read deletes keep counts metadata-exact);
-      // None when any entry is legacy stat-less
-      val live = liveEntries(fs, target, g).map(e => e.liveRows.map(e.dir -> _))
-      if (live.exists(_.isEmpty)) None
-      else Some(live.flatten.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).sum })
-    }
-
-  /** METADATA-ONLY row count of the latest committed generation: the
-    * sum of the per-file footer counts recorded at each file's commit
-    * — `SELECT COUNT(*)` with zero data I/O at any table size (the
-    * Iceberg/Delta stats-pushdown shape). None when the table has no
-    * manifest or any entry predates stats (legacy) — callers fall back
-    * to a data-side count, never guess.
-    */
-  def statsRowCount(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String
-  ): Option[Long] =
-    committedDirRowCounts(fs, target).map(_.values.sum)
-
-  /** METADATA-ONLY MIN/MAX of `column` over the latest committed
-    * generation, from the per-file zone maps. Sound only when EVERY
-    * entry carries bounds for the column AND the table has no
-    * all-null-column file masquerading as boundless — a single entry
-    * without bounds therefore returns None (ambiguous: could be
-    * all-null, could be unrecordable stats) and the caller falls back
-    * to a data-side aggregate. Returns the (min, max) rendered strings
-    * plus the column kind (`l`/`d`/`s`).
-    */
-  def statsMinMax(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      column: String
-  ): Option[(String, String, Char)] =
-    manifestGenerations(fs, target).lastOption.flatMap { g =>
-      // a ZERO-ROW entry (an emptied shard's schema-bearing file) has
-      // no bounds and is VACUOUS for MIN/MAX — only a row-carrying
-      // entry without bounds is ambiguous and forces the refusal
-      val lines = liveEntries(fs, target, g).filterNot(_.isEmptyFile)
-      if (lines.isEmpty) None
-      // a delete-vector entry's bounds cover DELETED rows too — the
-      // recorded extreme may be a deleted row, so MIN/MAX must refuse
-      // (COUNT stays exact via the per-entry dv counts)
-      else if (lines.exists(_.dv.isDefined)) None
-      else {
-        // a file whose column is ALL NULL (recorded `z` marker with
-        // nc == rows) is VACUOUS for MIN/MAX — the r16 refusal
-        // ("ambiguous between all-null and unrecordable") is resolved
-        // by the recorded null counts; only a file with neither bounds
-        // nor a full-null proof still refuses
-        val contributing = lines.filterNot { l =>
-          l.bounds.range(column).isEmpty &&
-            l.rows.isDefined && l.bounds.nulls(column) == l.rows
-        }
-        if (contributing.isEmpty) None // every row of the column is null
-        else {
-        val perFile = contributing.map(l => l.bounds.range(column))
-        if (perFile.exists(_.isEmpty)) None // any unbounded file: refuse
-        else {
-          val bs = perFile.flatten
-          val kind = bs.head._1
-          if (bs.exists(_._1 != kind)) None // mixed kinds across schema drift
-          else {
-            def lt(a: String, b: String): Boolean = kind match {
-              case 'l' => a.toLong < b.toLong
-              case 'd' => a.toDouble < b.toDouble
-              case _ => utf8Lt(a, b)
-            }
-            Some((bs.map(_._2).reduce((a, b) => if (lt(a, b)) a else b),
-              bs.map(_._3).reduce((a, b) => if (lt(a, b)) b else a),
-              kind))
-          }
-        }
-        }
-      }
-    }
-
-  /** METADATA-ONLY null count of `column` over the latest committed
-    * generation — exact when EVERY row-carrying entry records a null
-    * count for it (the per-chunk statistic was present everywhere) and
-    * no entry carries delete vectors (a deleted row may be one of the
-    * counted nulls). None otherwise; callers fall back to a data-side
-    * count.
-    */
-  def statsNullCount(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      column: String
-  ): Option[Long] =
-    manifestGenerations(fs, target).lastOption.flatMap { g =>
-      val lines = liveEntries(fs, target, g).filterNot(_.isEmptyFile)
-      if (lines.exists(_.dv.isDefined)) None
-      else {
-        val per = lines.map(l => l.bounds.nulls(column))
-        if (lines.nonEmpty && per.exists(_.isEmpty)) None
-        else Some(per.flatten.sum)
-      }
-    }
-
-  /** The latest committed manifest generation of `target`, if any:
-    * (generation, relative data-file paths).
-    */
-  def latestManifest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String
-  ): Option[(Long, Seq[String])] = {
-    val gens = manifestGenerations(fs, target)
-    if (gens.isEmpty) None
-    else Some((gens.max, manifestEntries(fs, target, gens.max)))
-  }
+  ): Seq[String] = Snapshot.at(fs, target, gen).paths
 
   /** TIME-TRAVEL read: `target` pinned to a SPECIFIC retained
     * generation. Because files are immutable under the commit
@@ -2218,38 +1723,16 @@ object Streaming {
     * snapshot — this is the lakehouse `VERSION AS OF` read. Refuses
     * loudly past the horizon.
     */
-  /** Refuse a generation whose DATA FILES may already be GC'd: the
-    * retention POLICY is ManifestKeep generations behind the latest,
-    * even when the manifest file itself survives as a delta-chain
-    * anchor — reading it could hit half-deleted data.
-    */
-  private def requireRetained(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Unit = {
-    val latest = manifestGenerations(fs, target).lastOption.getOrElse(
-      throw new IllegalStateException(s"$target has no committed manifest"))
-    if (gen <= latest - ManifestKeep)
-      throw new IllegalStateException(
-        s"manifest generation $gen of $target is not retained " +
-          s"(latest $latest, horizon $ManifestKeep generations) — its replaced " +
-          "files may already be deleted")
-  }
-
   def readGeneration(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
       gen: Long
   ): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireRetained(fs, target, gen)
-    val lines = liveEntries(fs, target, gen)
+    val listing = Snapshot.list(fsOf(spark, target), target)
+    listing.requireWithinHorizon(gen)
+    val lines = listing.at(gen).entries
     require(lines.nonEmpty, s"generation $gen of $target has no entries")
-    applyDeleteVectors(spark, target, lines,
-      spark.read.option("basePath", target)
-        .parquet(lines.map(l => s"$target/${l.path}"): _*))
+    readEntries(spark, target, lines)
   }
 
   /** INCREMENTAL consumption: the rows carried by files ADDED between
@@ -2277,30 +1760,47 @@ object Streaming {
       fromGen: Long,
       toGen: Long,
       mergeSchema: Boolean = false
+  ): Option[DataFrame] =
+    readAdded(spark, Snapshot.list(fsOf(spark, target), target), fromGen, toGen, mergeSchema)
+
+  private[graft] def readAdded(
+      spark: org.apache.spark.sql.SparkSession,
+      listing: Listing,
+      fromGen: Long,
+      toGen: Long,
+      mergeSchema: Boolean
   ): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fromGen <= toGen, s"fromGen $fromGen > toGen $toGen")
-    requireRetained(fs, target, toGen)
+    listing.requireWithinHorizon(toGen)
     // `fromGen` only anchors the set difference — its own files may be
     // gone, but files present in BOTH generations were never its
     // tombstones, and files only in `toGen` are retained with it; a
     // pruned fromGen MANIFEST (unreadable chain) still refuses loudly
-    val before = manifestEntries(fs, target, fromGen).toSet
-    val toEntries = liveEntries(fs, target, toGen)
-    val addedEntries = toEntries.filterNot(l => before(l.path))
+    val before = listing.at(fromGen).byPath
+    val addedEntries = listing.at(toGen).entries.filterNot(l => before.contains(l.path))
+    // DV-applied at the TO generation: a file added in the window and
+    // then delete-vector-tagged still physically carries the masked
+    // rows — delivering them raw would resurrect retracted rows in
+    // every derived table
     if (addedEntries.isEmpty) None
-    else Some(
-      // DV-applied at the TO generation: a file added in the window
-      // and then delete-vector-tagged still physically carries the
-      // masked rows — delivering them raw would resurrect retracted
-      // rows in every derived table (found in the r17 self-review;
-      // followTable's window guard covers only its own path)
-      applyDeleteVectors(spark, target, addedEntries,
-        spark.read.option("basePath", target)
-          .option("mergeSchema", mergeSchema.toString)
-          .parquet(addedEntries.map(l => s"$target/${l.path}"): _*)))
+    else Some(readEntries(spark, listing.target, addedEntries, mergeSchema))
   }
+
+  /** A pinned read of exactly `lines`' files, delete vectors applied —
+    * partition columns derived from the dir names via `basePath`.
+    */
+  private def readEntries(
+      spark: org.apache.spark.sql.SparkSession,
+      target: String,
+      lines: Seq[ManifestEntry],
+      mergeSchema: Boolean = false
+  ): DataFrame =
+    applyDeleteVectors(spark, target, lines,
+      spark.read.option("basePath", target).option("mergeSchema", mergeSchema.toString)
+        .parquet(lines.map(l => s"$target/${l.path}"): _*))
+
+  private def fsOf(spark: org.apache.spark.sql.SparkSession, target: String) =
+    new org.apache.hadoop.fs.Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** MERGE-ON-READ: anti-join the delete vectors referenced by
     * `lines` out of `df`, which must be a DIRECT file-scan frame over
@@ -2418,9 +1918,9 @@ object Streaming {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def reader = spark.read.option("mergeSchema", mergeSchema.toString)
-    latestEntries(fs, target) match {
+    Snapshot.latest(fs, target) match {
       case None => reader.parquet(target)
-      case Some((gen, lines)) if lines.isEmpty =>
+      case Some(snap) if snap.entries.isEmpty =>
         // an EMPTY committed generation means the table has NO live
         // rows — but under the immutable protocol the live directory
         // legitimately retains tombstoned files awaiting GC, so the
@@ -2433,35 +1933,22 @@ object Streaming {
         catch {
           case e: org.apache.spark.sql.AnalysisException =>
             throw new IllegalStateException(
-              s"generation $gen of $target is EMPTY (zero live rows) and no retained " +
+              s"generation ${snap.gen} of $target is EMPTY (zero live rows) and no retained " +
                 "file remains to supply a schema — supply one explicitly or re-seed " +
                 "the table", e)
         }
-      case Some((gen, lines)) =>
-        val rels = lines.map(_.path)
+      case Some(snap) =>
+        val rels = snap.paths
         rels.groupBy(dirOf).toSeq.sortBy(_._1).foreach { case (_, files) =>
           val probe = files.head
           if (!fs.exists(new org.apache.hadoop.fs.Path(s"$target/$probe")))
             throw new IllegalStateException(
-              s"manifest gen $gen of $target references $probe but it no longer exists — " +
+              s"manifest gen ${snap.gen} of $target references $probe but it no longer exists — " +
                 s"the retention horizon ($ManifestKeep generations) was exceeded: more than " +
                 s"$ManifestKeep maintenance verbs completed since this generation was committed")
         }
-        applyDeleteVectors(spark, target, lines,
-          reader.option("basePath", target).parquet(rels.map(f => s"$target/$f"): _*))
+        readEntries(spark, target, snap.entries, mergeSchema)
     }
-  }
-
-  /** [[latestManifest]] with full ENTRIES (stats + dv tags) —
-    * what the DV-aware readers resolve from.
-    */
-  private def latestEntries(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String
-  ): Option[(Long, Seq[ManifestEntry])] = {
-    val gens = manifestGenerations(fs, target)
-    if (gens.isEmpty) None
-    else Some((gens.max, liveEntries(fs, target, gens.max)))
   }
 
   /** Pinned read RESTRICTED to the given partition directories —
@@ -2481,13 +1968,11 @@ object Streaming {
   ): Option[DataFrame] = {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestGenerations(fs, target).lastOption match {
+    val listing = Snapshot.list(fs, target)
+    listing.latest match {
       case Some(g) =>
-        val lines = entriesForDirs(fs, target, g, Some(dirs))
-        if (lines.isEmpty) None
-        else Some(applyDeleteVectors(spark, target, lines,
-          spark.read.option("basePath", target)
-            .parquet(lines.map(l => s"$target/${l.path}"): _*)))
+        val lines = listing.at(g, Some(dirs)).entries
+        if (lines.isEmpty) None else Some(readEntries(spark, target, lines))
       case None =>
         val live = dirs.toSeq.sorted
           .map(d => new org.apache.hadoop.fs.Path(s"$target/$d"))
@@ -2496,168 +1981,6 @@ object Streaming {
         else Some(spark.read.option("basePath", target)
           .parquet(live.map(_.toString): _*))
     }
-  }
-
-  /** ZONE-MAP file pruning against the latest committed manifest: the
-    * entries whose recorded `column` bounds OVERLAP `[lo, hi]`, plus
-    * the total entry count. An entry with no bounds for the column
-    * (legacy line, stats-less footer, incomplete chunk statistics, or
-    * a non-prunable type) is always KEPT — pruning only ever drops a
-    * file the footer PROVED can hold no matching row, so the pruned
-    * read is exactly equal to the full read + filter. `lo`/`hi` must
-    * match the column's recorded kind: integral (Int/Long) for `l`,
-    * numeric for `d`, String for `s`. None when the table has no
-    * committed manifest.
-    *
-    * This is the Iceberg/Delta data-skipping core: at 100 TB a range
-    * predicate over a [[clusterTable]]-clustered column resolves to
-    * O(matching files) from pure manifest metadata — no footer reads,
-    * no listing, no task launch for the skipped ones.
-    */
-  def zoneMapFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      column: String,
-      lo: Any,
-      hi: Any
-  ): Option[(Seq[String], Int)] =
-    zoneMapFilesMulti(fs, target, Seq((column, lo, hi)))
-
-  /** Multi-predicate zone-map pruning: a file is kept only when EVERY
-    * `(column, lo, hi)` range can overlap its recorded bounds — the
-    * conjunctive prune a Z-ORDERED layout rewards (cluster on
-    * `Layout.zorder2(x, y)` and BOTH single-dimension ranges prune,
-    * where a 1-D sort prunes only its leading column).
-    */
-  def zoneMapFilesMulti(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      predicates: Seq[(String, Any, Any)]
-  ): Option[(Seq[String], Int)] =
-    zoneMapEntriesMulti(fs, target, predicates).map { case (kept, total) =>
-      (kept.map(_.path), total)
-    }
-
-  /** [[zoneMapFilesMulti]] at the ENTRY level (stats + dv tags kept) —
-    * what the DV-aware pruned readers resolve from.
-    */
-  private def zoneMapEntriesMulti(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      predicates: Seq[(String, Any, Any)]
-  ): Option[(Seq[ManifestEntry], Int)] =
-    manifestGenerations(fs, target).lastOption.map { g =>
-      val lines = liveEntries(fs, target, g)
-      val kept = lines.filter { l =>
-        predicates.forall { case (column, lo, hi) =>
-          l.bounds.range(column) match {
-            case None => true // unboundable: must keep
-            case Some((k, mn, mx)) => boundsOverlap(k, mn, mx, lo, hi)
-          }
-        }
-      }
-      (kept, lines.size)
-    }
-
-  /** Generation-PINNED zone-map pruning with OPEN-ended ranges — the
-    * DataSource connector's pushdown entry point
-    * ([[graft.sources.GraftFileIndex]]). `predicates` are conjunctive
-    * `(column, lo, hi)` with None = that side unbounded; losslessness
-    * exactly as [[zoneMapFilesMulti]] (an unboundable column, a
-    * stat-less entry, or a bound/kind type mismatch keeps the file —
-    * pruning is an optimization, never a correctness dependency).
-    * Empty predicates return the generation's full live file list, so
-    * this is also the connector's snapshot-resolution call. Returns
-    * (kept relative paths, total entries).
-    */
-  def zoneMapFilesAt(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long,
-      predicates: Seq[(String, Option[Any], Option[Any])]
-  ): (Seq[String], Int) = {
-    val entries = liveEntries(fs, target, gen)
-    (zoneKept(entries, predicates).map(_.path), entries.size)
-  }
-
-  /** The `entries` whose recorded bounds can overlap every open-ended
-    * `(column, lo, hi)` range of `predicates` — lossless as
-    * [[zoneMapFilesAt]]: an unboundable column or a bound/kind type
-    * mismatch keeps the file.
-    */
-  private def zoneKept(
-      entries: Seq[ManifestEntry],
-      predicates: Seq[(String, Option[Any], Option[Any])]
-  ): Seq[ManifestEntry] =
-    if (predicates.isEmpty) entries
-    else entries.filter { e =>
-      predicates.forall { case (column, lo, hi) =>
-        e.bounds.range(column) match {
-          case None => true // unboundable: must keep
-          case Some((k, mn, mx)) =>
-            try boundsOverlapOpt(k, mn, mx, lo, hi)
-            catch { case _: IllegalArgumentException => true } // type drift: keep
-        }
-      }
-    }
-
-  private def boundsOverlapOpt(
-      kind: Char, mn: String, mx: String, lo: Option[Any], hi: Option[Any]): Boolean =
-    kind match {
-      case 'l' =>
-        lo.forall(v => mx.toLong >= asLong(v)) && hi.forall(v => mn.toLong <= asLong(v))
-      case 'd' =>
-        lo.forall(v => mx.toDouble >= asDouble(v)) && hi.forall(v => mn.toDouble <= asDouble(v))
-      case _ =>
-        lo.forall(v => !utf8Lt(mx, v.toString)) && hi.forall(v => !utf8Lt(v.toString, mn))
-    }
-
-  private def boundsOverlap(kind: Char, mn: String, mx: String, lo: Any, hi: Any): Boolean =
-    kind match {
-      case 'l' =>
-        val (qlo, qhi) = (asLong(lo), asLong(hi))
-        !(mx.toLong < qlo || mn.toLong > qhi)
-      case 'd' =>
-        val (qlo, qhi) = (asDouble(lo), asDouble(hi))
-        !(mx.toDouble < qlo || mn.toDouble > qhi)
-      case _ =>
-        val (qlo, qhi) = (lo.toString, hi.toString)
-        !(utf8Lt(mx, qlo) || utf8Lt(qhi, mn))
-    }
-
-  /** UNSIGNED UTF-8 byte-wise string order — the order parquet's
-    * binary statistics are computed in AND the order Spark's
-    * UTF8String filter comparisons use. Scala's String `<` (UTF-16
-    * code units) diverges from both above the BMP, which would
-    * mis-prune a file whose bounds straddle a surrogate pair.
-    */
-  private def utf8Lt(a: String, b: String): Boolean = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
-  }
-
-  private def asLong(v: Any): Long = v match {
-    case n: Byte => n.toLong
-    case n: Short => n.toLong
-    case n: Int => n.toLong
-    case n: Long => n
-    case other => throw new IllegalArgumentException(
-      s"zone-map bound for an integral column must be integral, got " +
-        s"$other (${other.getClass.getName}) — a fractional bound would " +
-        "prune files that hold matching rows")
-  }
-
-  private def asDouble(v: Any): Double = v match {
-    case n: java.lang.Number => n.doubleValue
-    case other => throw new IllegalArgumentException(
-      s"zone-map bound for a floating column must be numeric, got $other")
   }
 
   /** Pinned range read with ZONE-MAP data skipping: resolve the latest
@@ -2679,7 +2002,7 @@ object Streaming {
   ): DataFrame = readCommittedRanges(spark, target, Seq((column, lo, hi)))
 
   /** [[readCommittedRange]] with a CONJUNCTION of ranges — every
-    * predicate prunes files independently (see [[zoneMapFilesMulti]])
+    * predicate prunes files independently (see [[Snapshot.rangeKept]])
     * and all are applied as the exact residual filter.
     */
   def readCommittedRanges(
@@ -2693,14 +2016,10 @@ object Streaming {
     val residual = predicates.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
     }.reduce(_ && _)
-    zoneMapEntriesMulti(fs, target, predicates) match {
-      case Some((kept, _)) if kept.isEmpty =>
+    Snapshot.latest(fs, target).map(_.rangeKept(predicates)) match {
+      case Some(kept) if kept.isEmpty =>
         readCommitted(spark, target).where(lit(false))
-      case Some((kept, _)) =>
-        applyDeleteVectors(spark, target, kept,
-          spark.read.option("basePath", target)
-            .parquet(kept.map(l => s"$target/${l.path}"): _*))
-          .where(residual)
+      case Some(kept) => readEntries(spark, target, kept).where(residual)
       case None => readCommitted(spark, target).where(residual)
     }
   }
@@ -2738,57 +2057,17 @@ object Streaming {
         .write.mode("overwrite").parquet(stage.toString)
       // every previous entry is superseded: replaced dirs come from the
       // manifest when there is one, else from the live tree (bootstrap)
-      val replaced = latestManifest(fs, target) match {
-        case Some((_, rels)) => rels.map(dirOf).toSet + ""
+      val replaced = Snapshot.latest(fs, target) match {
+        case Some(snap) => snap.paths.map(dirOf).toSet + ""
         case None => listRel(fs, targetPath).map(dirOf).toSet + ""
       }
       commitStage(fs, target, replaced)
     }
   }
 
-  /** CLUSTERING DEPTH of `column` over the latest committed generation
-    * — a METADATA-ONLY health signal for the zone-map layout: the
-    * expected number of files whose recorded bounds contain a point
-    * drawn uniformly from the column's committed domain, computed as
-    * sum(per-file range length) / domain length. A freshly
-    * [[clusterTable]]-ed table sits at ~1.0 (disjoint ranges); every
-    * append/upsert whose rows span the domain pushes it up (its files
-    * overlap everything), and at depth d a range predicate reads ~d×
-    * the files it should — the signal that a re-cluster pays for
-    * itself. None when any entry lacks bounds for the column (nothing
-    * to measure) or the domain is a single point. Long/double columns
-    * only (string ranges have no uniform measure).
-    */
-  def clusteringDepth(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      column: String
-  ): Option[Double] =
-    manifestGenerations(fs, target).lastOption.flatMap { g =>
-      depthOf(liveEntries(fs, target, g), column)
-    }
-
-  private def depthOf(lines: Seq[ManifestEntry], column: String): Option[Double] = {
-      val per = lines.map(l => l.bounds.range(column))
-      if (per.isEmpty || per.exists(_.isEmpty)) None
-      else {
-        val bs = per.flatten
-        def num(k: Char, s: String): Double =
-          if (k == 'l') s.toLong.toDouble else s.toDouble
-        if (bs.exists(_._1 == 's')) None
-        else {
-          val spans = bs.map { case (k, mn, mx) => (num(k, mn), num(k, mx)) }
-          val lo = spans.map(_._1).min
-          val hi = spans.map(_._2).max
-          if (hi <= lo) None // single-point domain: depth undefined
-          else Some(spans.map { case (a, b) => b - a }.sum / (hi - lo))
-        }
-      }
-    }
-
   /** The OPTIMIZE autopilot for a read-optimized table: re-cluster on
     * `column` only when the layout has actually degraded —
-    * [[clusteringDepth]] above `maxDepth` (default 2: a range read
+    * [[Snapshot.clusteringDepth]] above `maxDepth` (default 2: a range read
     * touches twice the files it should) or the file count drifted
     * above `numFiles * 2`. Appends/upserts between runs are absorbed;
     * a healthy table is a pure metadata probe (no commit, no read).
@@ -2801,13 +2080,9 @@ object Streaming {
       numFiles: Int,
       maxDepth: Double = 2.0
   ): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // one manifest reconstruction supplies both health signals
-    val lines = manifestGenerations(fs, target).lastOption
-      .map(g => liveEntries(fs, target, g)).getOrElse(Seq.empty)
-    val degraded = lines.size > 2 * numFiles ||
-      depthOf(lines, column).exists(_ > maxDepth)
+    // one snapshot supplies both health signals
+    val degraded = Snapshot.latest(fsOf(spark, target), target).exists(snap =>
+      snap.entries.size > 2 * numFiles || snap.clusteringDepth(column).exists(_ > maxDepth))
     if (degraded) clusterTable(spark, target, column, numFiles)
     degraded
   }
@@ -2841,7 +2116,7 @@ object Streaming {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLease(fs, target) {
       recoverStage(fs, target)
-      val gen = manifestGenerations(fs, target).lastOption.getOrElse(
+      val snap = Snapshot.latest(fs, target).getOrElse(
         throw new IllegalStateException(
           s"cannot compact $target: no committed manifest (not maintained by this module)"))
       // fragmentation census from manifest metadata only. A shard
@@ -2850,7 +2125,7 @@ object Streaming {
       // ABSORBED (the rewrite reads DV-applied rows and the new entries
       // carry no tags), reclaiming both the masked rows' bytes and the
       // read-side anti-join.
-      val lines = liveEntries(fs, target, gen)
+      val lines = snap.entries
       val perDir = lines.map(_.path)
         .groupBy(dirOf).map { case (d, fsList) => d -> fsList.size }
       val dvDirs = lines.filter(_.dv.isDefined)
@@ -2861,8 +2136,7 @@ object Streaming {
       }.toSet ++ dvDirs
       if (fragmented.isEmpty) 0
       else {
-        val touched = readCommittedDirs(spark, target, fragmented).getOrElse(
-          return 0) // raced to empty: nothing to compact
+        val touched = readEntries(spark, target, lines.filter(e => fragmented(e.dir)))
         val stage = new org.apache.hadoop.fs.Path(target + ".__stage")
         fs.delete(stage, true)
         touched.repartition(col(shardCol))
@@ -2930,12 +2204,11 @@ object Streaming {
     val mdir = manifestDir(target)
     withWriterLease(fs, target) {
       recoverStage(fs, target)
-      val gen = manifestGenerations(fs, target).lastOption.getOrElse(
+      val snap = Snapshot.latest(fs, target).getOrElse(
         throw new IllegalStateException(
           s"cannot bloom-index $target: no committed manifest"))
-      val lines = liveEntries(fs, target, gen)
+      val (gen, lines, entryByPath) = (snap.gen, snap.entries, snap.byPath)
       if (lines.isEmpty) return 0
-      val entryByPath = lines.map(l => l.path -> l).toMap
       val qualRoot = fs.makeQualified(targetPath).toString
       import spark.implicits._
       val keyed = spark.read.option("basePath", target)
@@ -2987,18 +2260,14 @@ object Streaming {
       // just drops that file's retag (its new entry is untagged anyway)
       var done = false
       while (!done) {
-        val latest = manifestGenerations(fs, target).lastOption.getOrElse(0L)
-        val current = entriesForDirs(fs, target, latest, Some(touchedDirs))
-          .map(l => l.path -> l).toMap
+        val listing = Snapshot.list(fs, target)
+        val current = listing.at(listing.latest.getOrElse(0L), Some(touchedDirs))
         val applicable = retagged.filter { case (p, _) =>
-          current.get(p).contains(entryByPath(p))
+          current.byPath.get(p).contains(entryByPath(p))
         }
         if (applicable.isEmpty) return 0
-        val post: Map[String, Seq[ManifestEntry]] = touchedDirs.iterator.map { d =>
-          d -> entriesForDirs(fs, target, latest, Some(Set(d)))
-            .map(l => applicable.getOrElse(l.path, l)).sortBy(_.path)
-        }.toMap
-        done = tryCommitManifest(fs, target, latest + 1, post, Nil, Nil,
+        done = tryCommitManifest(fs, listing, current.gen + 1,
+          retaggedDirs(touchedDirs, current, applicable), Nil, Nil,
           modified = applicable.values.toSeq.sortBy(_.path))
       }
       refreshListing(target)
@@ -3006,25 +2275,23 @@ object Streaming {
     }
   }
 
-  /** Bloom-index HEALTH of `column` at the latest generation: the
-    * fraction of row-carrying entries that still carry a bloom tag —
-    * pure metadata (files rewritten since the last build lose their
-    * tags and stop pruning). None when the table has no manifest.
+  /** The post-commit entries of each of `dirs` at `current` with the
+    * `retagged` entries replaced in place — a `~`-only commit's state.
     */
-  def bloomCoverage(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      column: String
-  ): Option[Double] =
-    manifestGenerations(fs, target).lastOption.map { g =>
-      val lines = liveEntries(fs, target, g).filterNot(_.isEmptyFile)
-      if (lines.isEmpty) 1.0
-      else lines.count(l => l.blooms.contains(column)).toDouble / lines.size
-    }
+  private def retaggedDirs(
+      dirs: Set[String],
+      current: Snapshot,
+      retagged: Map[String, ManifestEntry]
+  ): Map[String, Seq[ManifestEntry]] = {
+    val byDir = current.entries.groupBy(_.dir)
+    dirs.iterator.map { d =>
+      d -> byDir.getOrElse(d, Vector.empty).map(l => retagged.getOrElse(l.path, l)).sortBy(_.path)
+    }.toMap
+  }
 
   /** The bloom half of the OPTIMIZE autopilot (the
     * [[maintainClustered]] shape): re-run [[buildBloomIndex]] ONLY
-    * when tag coverage dropped below `minCoverage` — a healthy table
+    * when tag coverage ([[Snapshot.bloomCoverage]]) dropped below `minCoverage` — a healthy table
     * is a pure metadata probe, no data read, no commit. Returns the
     * number of files indexed (0 = healthy or empty).
     */
@@ -3034,9 +2301,7 @@ object Streaming {
       column: String,
       minCoverage: Double = 0.9
   ): Int = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    bloomCoverage(fs, target, column) match {
+    Snapshot.latest(fsOf(spark, target), target).map(_.bloomCoverage(column)) match {
       case Some(c) if c < minCoverage => buildBloomIndex(spark, target, column)
       case _ => 0
     }
@@ -3049,7 +2314,7 @@ object Streaming {
     * files) bitset reads, the same metadata cost class as the zone
     * maps).
     */
-  private def bloomKeptEntries(
+  private[graft] def bloomKeptEntries(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
       lines: Seq[ManifestEntry],
@@ -3094,18 +2359,13 @@ object Streaming {
       column: String,
       value: Any
   ): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    zoneMapEntriesMulti(fs, target, Nil) match {
+    Snapshot.latest(fsOf(spark, target), target) match {
       case None => readCommitted(spark, target).where(col(column) === lit(value))
-      case Some((all, _)) =>
-        val zoned = zoneKept(all, Seq((column, Some(value), Some(value))))
+      case Some(snap) =>
+        val zoned = Snapshot.zoneKept(snap.entries, Seq((column, Some(value), Some(value))))
         val kept = bloomKeptEntries(spark, target, zoned, column, Seq(value))
         if (kept.isEmpty) readCommitted(spark, target).where(lit(false))
-        else applyDeleteVectors(spark, target, kept,
-          spark.read.option("basePath", target)
-            .parquet(kept.map(l => s"$target/${l.path}"): _*))
-          .where(col(column) === lit(value))
+        else readEntries(spark, target, kept).where(col(column) === lit(value))
     }
   }
 
@@ -3118,63 +2378,13 @@ object Streaming {
       column: String,
       value: Any
   ): (Int, Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    zoneMapEntriesMulti(fs, target, Nil) match {
+    Snapshot.latest(fsOf(spark, target), target) match {
       case None => (0, 0, 0)
-      case Some((all, total)) =>
-        val zoned = zoneKept(all, Seq((column, Some(value), Some(value))))
+      case Some(snap) =>
+        val zoned = Snapshot.zoneKept(snap.entries, Seq((column, Some(value), Some(value))))
         val kept = bloomKeptEntries(spark, target, zoned, column, Seq(value))
-        (kept.size, zoned.size, total)
+        (kept.size, zoned.size, snap.entries.size)
     }
-  }
-
-  /** Connector hook: prune `candidates` (relative paths at `gen`) by
-    * the bloom filters of `column` for a point/IN probe. Lossless —
-    * untagged files are kept.
-    */
-  def bloomPruneFiles(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long,
-      column: String,
-      values: Seq[Any],
-      candidates: Seq[String]
-  ): Seq[String] = {
-    val cand = candidates.toSet
-    val lines = liveEntries(fs, target, gen).filter(l => cand(l.path))
-    bloomKeptEntries(spark, target, lines, column, values).map(_.path)
-  }
-
-  /** Files that can hold rows satisfying `column IS [NOT] NULL`, from
-    * the per-file null counts recorded in the zone maps — lossless: a
-    * file without the statistic is always kept, and the counts stay
-    * sound under delete vectors (deletion never adds a null or a
-    * non-null, so "zero nulls" and "all null" both survive masking).
-    * The connector's null-test pushdown hook; `candidates` restricts
-    * to already-pruned paths.
-    */
-  def nullPruneFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long,
-      column: String,
-      isNull: Boolean,
-      candidates: Seq[String]
-  ): Seq[String] = {
-    val cand = candidates.toSet
-    liveEntries(fs, target, gen)
-      .filter(l => cand(l.path))
-      .filter { l =>
-        val nc = l.bounds.nulls(column)
-        if (isNull) nc.forall(_ > 0L)
-        else {
-          val hasValues = l.bounds.range(column).isDefined
-          hasValues || nc.isEmpty || l.rows.isEmpty || nc.get < l.rows.get
-        }
-      }
-      .map(_.path)
   }
 
   /** GC delete-vector sidecars that no RETAINED generation's entries
@@ -3189,20 +2399,16 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String
   ): Unit = {
-    val mdir = manifestDir(target)
-    if (!fs.exists(mdir)) return
+    val listing = Snapshot.list(fs, target)
     val now = System.currentTimeMillis()
-    val dvFiles = fs.listStatus(mdir).filter { st =>
-      st.getPath.getName.startsWith("dv-") &&
-        now - st.getModificationTime > StageAbandonedMs
-    }.map(_.getPath.getName)
+    val dvFiles = listing.files.filter(f =>
+      f.name.startsWith("dv-") && now - f.mtimeMs > StageAbandonedMs).map(_.name)
     if (dvFiles.isEmpty) return
-    val referenced: Set[String] = manifestGenerations(fs, target).flatMap { g =>
-      try liveEntries(fs, target, g).flatMap(_.dv.map(_.sidecar))
-      catch { case _: IllegalStateException => dvFiles.toSeq } // pruned mid-walk: keep all
-    }.toSet
+    val referenced: Set[String] =
+      try listing.walkAll().flatMap(_.entries.flatMap(_.dv.map(_.sidecar))).toSet
+      catch { case _: IllegalStateException => dvFiles.toSet } // pruned mid-walk: keep all
     dvFiles.filterNot(referenced).foreach(n =>
-      fs.delete(new org.apache.hadoop.fs.Path(mdir, n), false))
+      fs.delete(new org.apache.hadoop.fs.Path(manifestDir(target), n), false))
   }
 
   /** Run an ACTION over the pinned snapshot with automatic
@@ -3275,7 +2481,9 @@ object Streaming {
         refreshListing(target) // drop any cached listing of the raced layout
         return f(readCommitted(spark, target))
       } catch {
-        case e: Throwable if raceSignature(e) && tableExists(target) =>
+        // NonFatal: an interrupt or a VM error propagates at once, even
+        // when its cause chain looks like the race
+        case scala.util.control.NonFatal(e) if raceSignature(e) && tableExists(target) =>
           last = e; i += 1
           // linear backoff: a reader racing back-to-back maintenance
           // verbs needs to land BETWEEN two commits; retrying instantly
@@ -3312,7 +2520,8 @@ object Streaming {
     val fs = targetPath.getFileSystem(conf)
     withWriterLease(fs, target) {
     recoverStage(fs, target)
-    if (!fs.exists(targetPath) && latestManifest(fs, target).isEmpty) return 0L
+    val listing = Snapshot.list(fs, target)
+    if (!fs.exists(targetPath) && listing.latest.isEmpty) return 0L
     val keyRows = keys.select(col(keyCol), col(shardCol)).localCheckpoint()
     val shardVals = keyRows.select(col(shardCol)).distinct().collect().map(_.get(0))
     if (shardVals.isEmpty) return 0L
@@ -3324,7 +2533,7 @@ object Streaming {
           "empty-shard staging derives the partition dir name from the value")
     }
     val touched =
-      readPinnedShards(spark, fs, target, shardCol, shardVals.toSeq,
+      readPinnedShards(spark, fs, listing, shardCol, shardVals.toSeq,
         wantCols = Seq.empty) match {
         case None => return 0L
         case Some(df) => df.localCheckpoint()
@@ -3385,8 +2594,8 @@ object Streaming {
     * range-restricted reads, the upsert's shard merge) applies the
     * vectors as an anti-join on (file, position); [[compactShards]]
     * ABSORBS them (the rewrite materializes the surviving rows and
-    * drops the tags); [[statsRowCount]] stays metadata-exact via the
-    * per-entry counts, while [[statsMinMax]] refuses tagged tables (a
+    * drops the tags); [[Snapshot.rowCount]] stays metadata-exact via the
+    * per-entry counts, while [[Snapshot.minMax]] refuses tagged tables (a
     * recorded extreme may be deleted). Optimistic: the commit records
     * the read generation and conflicts/rebases exactly like the
     * upsert CAS (a racing writer on the same dirs wins or loses
@@ -3526,17 +2735,16 @@ object Streaming {
     var attempt = 0
     while (true) {
       attempt += 1
-      val gen = manifestGenerations(fs, target).lastOption.getOrElse(
+      val snap = Snapshot.latest(fs, target).getOrElse(
         throw new IllegalStateException(
           s"cannot delete from $target: no committed manifest (not maintained " +
             "by this module)"))
-      val allEntries = liveEntries(fs, target, gen)
+      val (gen, allEntries, entryByPath) = (snap.gen, snap.entries, snap.byPath)
       if (allEntries.isEmpty) return 0L
       requireRowCounts("deleteWhere", target, allEntries)
       // candidate files: zone-map pruned for range deletes, all otherwise
-      val scanEntries = zoneKept(allEntries, ranges)
+      val scanEntries = Snapshot.zoneKept(allEntries, ranges)
       if (scanEntries.isEmpty) return 0L
-      val entryByPath = allEntries.map(l => l.path -> l).toMap
       // the position scan: matching live rows' (rel, pos). Parquet
       // pushdown prunes row groups; only O(deleted rows) survive to
       // the write, none of them already deleted.
@@ -3557,21 +2765,15 @@ object Streaming {
       // racers just rebase the generation number
       var state = 0 // 0 = trying, 1 = committed, 2 = conflicted
       while (state == 0) {
-        val latest = manifestGenerations(fs, target).lastOption.getOrElse(0L)
-        val conflicted = latest > gen && {
-          val changed = ((gen + 1) to latest)
-            .foldLeft(Option(Set.empty[String])) { (acc, g) =>
-              for (a <- acc; d <- deltaDirsOf(fs, target, g)) yield a ++ d
-            }
-          changed.forall(ch => ch.intersect(touchedDirs).nonEmpty)
-        }
+        val listing = Snapshot.list(fs, target)
+        val latest = listing.latest.getOrElse(0L)
+        val conflicted = latest > gen &&
+          listing.changedDirs(gen, latest).forall(_.intersect(touchedDirs).nonEmpty)
         if (conflicted) state = 2
         else {
-          val post: Map[String, Seq[ManifestEntry]] = touchedDirs.iterator.map { d =>
-            d -> entriesForDirs(fs, target, latest, Some(Set(d)))
-              .map(l => retagged.getOrElse(l.path, l)).sortBy(_.path)
-          }.toMap
-          if (tryCommitManifest(fs, target, latest + 1, post, Nil, Nil,
+          val current = listing.at(latest, Some(touchedDirs))
+          if (tryCommitManifest(fs, listing, latest + 1,
+              retaggedDirs(touchedDirs, current, retagged), Nil, Nil,
               modified = retagged.values.toSeq.sortBy(_.path)))
             state = 1
           // else: CAS lost — loop re-checks staleness at the new latest
@@ -3589,31 +2791,6 @@ object Streaming {
     0L // unreachable
   }
 
-  /** FOLLOW a maintained table: deliver the rows added since the last
-    * consumed generation to `apply`, then durably advance the cursor
-    * (a tmp+renamed file holding the consumed generation). At-least-
-    * once on crash — a death between `apply` and the cursor bump
-    * re-delivers the range, which the consumer's latest-wins merge
-    * absorbs (the same contract foreachBatch redelivery imposes). A
-    * follower that stalls past the retention horizon fails LOUDLY on
-    * its next poll (its cursor generation is no longer reconstructable
-    * or its files are gone) instead of silently skipping data — the
-    * operator then re-bootstraps from a full pinned read. Returns the
-    * delivered row count (0 when already caught up).
-    *
-    * This is the table-to-table CDC primitive: a derived pipeline
-    * tracks a 100-TB source at O(commit delta) per poll, never
-    * rescanning it.
-    *
-    * SCHEMA DRIFT: each poll compares the consumed range's `# schema`
-    * fingerprints ([[commitSchemaHash]] — metadata only); when the
-    * range is mixed (a widened column landed mid-range under
-    * `allowSchemaEvolution`), the delta read switches itself to
-    * mergeSchema, so the delivered frame carries the union schema
-    * with old files null-padded instead of whichever file's schema
-    * the reader sampled first. The consumer sees the new column the
-    * moment it lands (SchemaEvolutionSpec pins this end to end).
-    */
   /** DESCRIBE-HISTORY for a graft table (r17 judge #6): one row per
     * RETAINED generation, newest first, entirely from manifest
     * metadata (zero data I/O): the generation number, whether its
@@ -3625,40 +2802,19 @@ object Streaming {
     * generations — history beyond it is gone by design (the format
     * has no infinite log).
     */
-  /** A retained generation's COMMIT TIME (epoch ms): the modification
-    * time of its manifest file — written once and never rewritten
-    * under the immutable protocol, so the rename instant IS the
-    * commit instant. None for a pruned/absent generation.
-    */
-  def commitTimeMs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Option[Long] =
-    manifestFileOf(fs, target, gen).map(fs.getFileStatus(_).getModificationTime)
-
   def tableHistory(
       spark: org.apache.spark.sql.SparkSession,
       target: String
   ): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mdir = manifestDir(target)
-    val rows = manifestGenerations(fs, target).sorted.reverse.map { g =>
-      val kind =
-        if (fs.exists(new org.apache.hadoop.fs.Path(mdir, f"gen-$g%012d")))
-          "checkpoint" else "delta"
-      val lines = liveEntries(fs, target, g)
-      val perFile = lines.map(_.liveRows)
-      val header = commitHeader(fs, target, g)
-      (g, kind,
-        commitTimeMs(fs, target, g)
-          .map(ms => new java.sql.Timestamp(ms)).orNull,
-        lines.size.toLong,
+    val rows = Snapshot.list(fsOf(spark, target), target).walkAll().reverse.map { snap =>
+      val perFile = snap.entries.map(_.liveRows)
+      (snap.gen, if (snap.isCheckpoint) "checkpoint" else "delta",
+        new java.sql.Timestamp(snap.committedAtMs),
+        snap.entries.size.toLong,
         if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.sum),
-        header.schemaHash, header.tag,
-        header.txns.toSeq.sorted.map { case (s, i) => s"$s=$i" }.mkString(","),
-        lines.exists(_.dv.isDefined))
+        snap.header.schemaHash, snap.header.tag,
+        snap.header.txns.toSeq.sorted.map { case (s, i) => s"$s=$i" }.mkString(","),
+        snap.hasDeleteVectors)
     }
     import spark.implicits._
     rows.toDF("generation", "kind", "committed_at", "live_files", "live_rows",
@@ -3735,11 +2891,11 @@ object Streaming {
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
-      val gen = manifestGenerations(fs, target).lastOption.getOrElse(
+      val snap = Snapshot.latest(fs, target).getOrElse(
         throw new IllegalStateException(
           s"cannot merge into $target: no committed manifest (not maintained " +
             "by this module)"))
-      val allEntries = liveEntries(fs, target, gen)
+      val (gen, allEntries) = (snap.gen, snap.entries)
       if (allEntries.isEmpty) {
         // zero live rows: only the not-matched clause can fire, and
         // with no target schema to map onto, only INSERT-ALL is
@@ -3776,9 +2932,9 @@ object Streaming {
         def envOf(c: String, lo: Any, hi: Any): (String, Char, String, String) =
           lo match {
             case _: Byte | _: Short | _: Int | _: Long =>
-              (c, 'l', asLong(lo).toString, asLong(hi).toString)
+              (c, 'l', Snapshot.asLong(lo).toString, Snapshot.asLong(hi).toString)
             case _: java.lang.Number =>
-              (c, 'd', asDouble(lo).toString, asDouble(hi).toString)
+              (c, 'd', Snapshot.asDouble(lo).toString, Snapshot.asDouble(hi).toString)
             case _ => (c, 's', lo.toString, hi.toString)
           }
         val (scanEntries, typedEnvelopes): (Seq[ManifestEntry], Seq[(String, Char, String, String)]) =
@@ -3795,7 +2951,7 @@ object Streaming {
                 (c, Some(mm.get(2 * i)): Option[Any],
                   Some(mm.get(2 * i + 1)): Option[Any])
               }
-              (zoneKept(allEntries, ranges),
+              (Snapshot.zoneKept(allEntries, ranges),
                 ranges.map { case (c, lo, hi) => envOf(c, lo.get, hi.get) })
             }
           }
@@ -3830,7 +2986,7 @@ object Streaming {
               }
           }
         } else {
-        val entryByPath = allEntries.map(l => l.path -> l).toMap
+        val entryByPath = snap.byPath
         // existing delete vectors applied FIRST: an already-retracted
         // row must neither match nor resurrect through the merge
         val tgt = livePositionedScan(spark, target, scanEntries)
@@ -3972,17 +3128,16 @@ object Streaming {
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
-      val gen = manifestGenerations(fs, target).lastOption.getOrElse(
+      val snap = Snapshot.latest(fs, target).getOrElse(
         throw new IllegalStateException(
           s"cannot update $target: no committed manifest (not maintained " +
             "by this module)"))
-      val allEntries = liveEntries(fs, target, gen)
+      val (gen, allEntries, entryByPath) = (snap.gen, snap.entries, snap.byPath)
       if (allEntries.isEmpty) return 0L
       requireRowCounts("updateWhere", target, allEntries)
-      val entryByPath = allEntries.map(l => l.path -> l).toMap
       // candidate files: zone-map pruned for range updates (lossless
       // by construction), all otherwise — the deleteVectors shape
-      val scanEntries = zoneKept(allEntries, ranges)
+      val scanEntries = Snapshot.zoneKept(allEntries, ranges)
       if (scanEntries.isEmpty) return 0L
       val tgt = livePositionedScan(spark, target, scanEntries)
       val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
@@ -4085,18 +3240,14 @@ object Streaming {
     * hence the DV-tag test. One tiny manifest read per generation.
     */
   private[graft] def dvWindowGens(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
+      listing: Listing,
       fromExclusive: Long,
       toInclusive: Long
-  ): Seq[Long] = {
-    ((fromExclusive + 1) to toInclusive).filter { gen =>
-      manifestFileOf(fs, target, gen).exists(p => readManifest(fs, p).exists {
-        case ManifestLine.Modify(e) => e.dv.isDefined
-        case _ => false
-      })
-    }
-  }
+  ): Seq[Long] =
+    ((fromExclusive + 1) to toInclusive).filter(g => listing.changes(g).exists(_.exists {
+      case ManifestLine.Modify(e) => e.dv.isDefined
+      case _ => false
+    }))
 
   /** CHANGE DATA FEED (r18 judge #1): the ROW-LEVEL changes committed
     * in generations (`fromGen`, `toGen`] as a frame of the table's
@@ -4143,7 +3294,8 @@ object Streaming {
     val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fromGen <= toGen, s"fromGen $fromGen > toGen $toGen")
     if (fromGen == toGen) return None
-    requireRetained(fs, target, toGen)
+    val listing = Snapshot.list(fs, target)
+    listing.requireWithinHorizon(toGen)
     // fromGen itself only anchors the first diff (readAddedBetween's
     // documented posture): its manifest must still be READABLE (the
     // entry-lines resolution refuses loudly past a pruned chain), but
@@ -4152,23 +3304,20 @@ object Streaming {
     // DV-tagged files stay live until compaction) or the window
     // REMOVES files and refuses below.
     val qualRoot = fs.makeQualified(targetPath).toString
-    var prevEntries = liveEntries(fs, target, fromGen)
-    val perGen: Seq[DataFrame] = ((fromGen + 1) to toGen).flatMap { g =>
-      val curEntries = liveEntries(fs, target, g)
-      val prevByPath = prevEntries.map(l => l.path -> l).toMap
-      val curByPath = curEntries.map(l => l.path -> l).toMap
+    val snaps = listing.walk(fromGen, toGen)
+    val perGen: Seq[DataFrame] = snaps.zip(snaps.tail).flatMap { case (prev, cur) =>
+      val g = cur.gen
+      val (prevByPath, curByPath) = (prev.byPath, cur.byPath)
       val removed = prevByPath.keySet -- curByPath.keySet
       if (removed.nonEmpty) throw new IllegalStateException(
         s"change feed on $target cannot attribute generation $g: it REMOVES " +
           s"${removed.size} file(s) (compaction / rewrite), which carries no " +
           "row-level change information — consume mutation-verb windows only, " +
           "or re-bootstrap the subscriber across the rewrite")
-      val addedEntries = curEntries.filterNot(l => prevByPath.contains(l.path))
+      val addedEntries = cur.entries.filterNot(l => prevByPath.contains(l.path))
       val inserts: Option[DataFrame] =
         if (addedEntries.isEmpty) None
-        else Some(applyDeleteVectors(spark, target, addedEntries,
-          spark.read.option("basePath", target).option("mergeSchema", "true")
-            .parquet(addedEntries.map(l => s"$target/${l.path}"): _*))
+        else Some(readEntries(spark, target, addedEntries, mergeSchema = true)
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_generation", lit(g)))
       // files present in BOTH whose dv tag changed: merge-on-write
@@ -4203,12 +3352,36 @@ object Streaming {
               .withColumn("_commit_generation", lit(g)))
           }
         }
-      prevEntries = curEntries
       deletes.toSeq ++ inserts.toSeq
     }
     perGen.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
 
+  /** FOLLOW a maintained table: deliver the rows added since the last
+    * consumed generation to `apply`, then durably advance the cursor
+    * (a tmp+renamed file holding the consumed generation). At-least-
+    * once on crash — a death between `apply` and the cursor bump
+    * re-delivers the range, which the consumer's latest-wins merge
+    * absorbs (the same contract foreachBatch redelivery imposes). A
+    * follower that stalls past the retention horizon fails LOUDLY on
+    * its next poll (its cursor generation is no longer reconstructable
+    * or its files are gone) instead of silently skipping data — the
+    * operator then re-bootstraps from a full pinned read. Returns the
+    * delivered row count (0 when already caught up).
+    *
+    * This is the table-to-table CDC primitive: a derived pipeline
+    * tracks a 100-TB source at O(commit delta) per poll, never
+    * rescanning it.
+    *
+    * SCHEMA DRIFT: each poll compares the consumed range's `# schema`
+    * fingerprints (commit headers — metadata only); when the
+    * range is mixed (a widened column landed mid-range under
+    * `allowSchemaEvolution`), the delta read switches itself to
+    * mergeSchema, so the delivered frame carries the union schema
+    * with old files null-padded instead of whichever file's schema
+    * the reader sampled first. The consumer sees the new column the
+    * moment it lands (SchemaEvolutionSpec pins this end to end).
+    */
   def followTable(
       spark: org.apache.spark.sql.SparkSession,
       source: String,
@@ -4217,7 +3390,8 @@ object Streaming {
     val fs = new org.apache.hadoop.fs.Path(source)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cursor = new org.apache.hadoop.fs.Path(cursorPath)
-    val latest = manifestGenerations(fs, source).lastOption.getOrElse(
+    val listing = Snapshot.list(fs, source)
+    val latest = listing.latest.getOrElse(
       throw new IllegalStateException(
         s"cannot follow $source: no committed manifest (not maintained by this module)"))
     val from: Option[Long] =
@@ -4243,7 +3417,7 @@ object Streaming {
         // only DV-tagged `~` lines change LIVE ROWS — a bloom-index
         // build also retags entries in place but is row-neutral and
         // must not wedge followers
-        val dvGens = dvWindowGens(fs, source, g, latest)
+        val dvGens = dvWindowGens(listing, g, latest)
         if (dvGens.nonEmpty) throw new IllegalStateException(
           s"cannot follow $source across generations ${dvGens.mkString(",")}: they " +
             "carry merge-on-read delete vectors, which an added-files follower " +
@@ -4255,9 +3429,8 @@ object Streaming {
         // read them merged (see scaladoc). One manifest-header read
         // per generation in the range, zero data I/O.
         val rangeSchemas = ((g + 1) to latest)
-          .flatMap(gen => commitSchemaHash(fs, source, gen)).distinct
-        readAddedBetween(spark, source, g, latest,
-          mergeSchema = rangeSchemas.size > 1) match {
+          .flatMap(gen => listing.header(gen).schemaHash).distinct
+        readAdded(spark, listing, g, latest, mergeSchema = rangeSchemas.size > 1) match {
           case Some(delta) =>
             val snap = delta.localCheckpoint() // count + apply read once
             apply(snap); snap.count()

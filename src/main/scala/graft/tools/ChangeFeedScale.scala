@@ -65,8 +65,8 @@ object ChangeFeedScale {
         .sortWithinPartitions("id")
         .write.format("graft").save(src)
     }
-    val g1 = Streaming.manifestGenerations(fs, src).last
-    val liveFiles = Streaming.manifestEntries(fs, src, g1).size
+    val snap1 = graft.table.Snapshot.latest(fs, src).get
+    val (g1, liveFiles) = (snap1.gen, snap1.entries.size)
 
     // bootstrap the CDF subscriber BEFORE the merge so its next batch
     // is exactly the merge window
@@ -96,7 +96,7 @@ object ChangeFeedScale {
         pruneColumn = Some("id"))
     }._1
     require(merged == Streaming.MergeStats(100L, 100L), s"merge stats: $merged")
-    val g2 = Streaming.manifestGenerations(fs, src).last
+    val g2 = graft.table.Snapshot.list(fs, src).latest.get
 
     // batch feed: exactly 300 change rows, scan bounded by touched files
     val (feed, feedSec) = time("readChangeFeed over the merge window") {

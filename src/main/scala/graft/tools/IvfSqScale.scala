@@ -317,8 +317,7 @@ object IvfSqScale {
     // actually opens); the directory also holds replaced files awaiting
     // the retention horizon, which are cost-free to readers
     def corpusFiles(): Long =
-      graft.streaming.Streaming
-        .latestManifest(fs, s"$root/corpus").map(_._2.size.toLong)
+      graft.table.Snapshot.latest(fs, s"$root/corpus").map(_.entries.size.toLong)
         .getOrElse {
           val it = Files.walk(java.nio.file.Paths.get(s"$root/corpus"))
           try it.filter(_.toString.endsWith(".parquet")).count() finally it.close()

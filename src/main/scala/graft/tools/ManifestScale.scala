@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** Scale demonstration for the immutable manifest-selected snapshot
   * layer (r15): what reader isolation COSTS at a 1M-row persisted
@@ -166,10 +167,8 @@ object ManifestScale {
     // manifest ECONOMICS: most commits write an O(batch) delta; a full
     // checkpoint lands every CheckpointEvery generations — the ratio
     // of the two sizes is the Delta-log claim, printed as evidence
-    val mdir = Streaming.manifestDir(target)
-    val stats = fs.listStatus(mdir).map(st => (st.getPath.getName, st.getLen))
-    def tot(prefix: String) = stats.filter(_._1.startsWith(prefix))
-    val ck = tot("gen-"); val inc = tot("inc-")
+    val (ck, inc) = Snapshot.list(fs, target).files.filter(_.gen.isDefined)
+      .map(f => (f.isCheckpoint, f.length)).partition(_._1)
     println(f"[manifest-scale] manifest dir: ${ck.length} checkpoints " +
       f"(max ${if (ck.isEmpty) 0L else ck.map(_._2).max} B), ${inc.length} deltas " +
       f"(max ${if (inc.isEmpty) 0L else inc.map(_._2).max} B) — commit text I/O is " +
@@ -182,7 +181,7 @@ object ManifestScale {
     // the live reader keeps asserting complete generations. Every
     // commit adds exactly one row, so any count outside
     // [base, base + total commits] is a torn read.
-    val gensBefore = Streaming.manifestGenerations(fs, target).max
+    val gensBefore = Snapshot.list(fs, target).latest.get
     val half = math.max(batches / 2, 2)
     val base = finalN
     val torn2 = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -224,7 +223,7 @@ object ManifestScale {
       s"reader: ok=${ok2.get()} torn=${torn2.get()} residual=${residual2.get()}")
     require(torn2.get() == 0, s"TORN READS under 2 writers: ${torn2.get()}")
     require(residual2.get() == 0, s"RESIDUAL REFUSALS under 2 writers: ${residual2.get()}")
-    val gensAfter = Streaming.manifestGenerations(fs, target).max
+    val gensAfter = Snapshot.list(fs, target).latest.get
     require(gensAfter - gensBefore == 2L * half,
       s"manifest chain not linear: ${gensAfter - gensBefore} generations for ${2 * half} commits")
     val n2 = Streaming.readCommitted(spark, target).count()
@@ -242,13 +241,13 @@ object ManifestScale {
         concat(lit("wide-"), col("id")).as("payload"),
         lit(999L).as("batch_id")),
       "doc_id", shardSize)
-    val preFiles = Streaming.manifestGenerations(fs, target).lastOption
-      .map(g => Streaming.manifestEntries(fs, target, g).size).getOrElse(0)
+    val preFiles = Snapshot.latest(fs, target)
+      .map(_.paths.size).getOrElse(0)
     val (_, wideSec) = time("wide upsert (every shard touched)") {
       Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(wideBatch, 1000L)
     }
-    val postFiles = Streaming.manifestGenerations(fs, target).lastOption
-      .map(g => Streaming.manifestEntries(fs, target, g).size).getOrElse(0)
+    val postFiles = Snapshot.latest(fs, target)
+      .map(_.paths.size).getOrElse(0)
     println(f"[manifest-scale] wide commit: $postFiles manifest entries " +
       f"(was $preFiles) in $wideSec%.1f s total verb time (merge + stage + " +
       "thread-pooled renames/footer stats + manifest)")
@@ -264,8 +263,8 @@ object ManifestScale {
     val (nCompacted, _) = time("compactShards (bin-pack every shard)") {
       Streaming.compactShards(spark, target, "shard")
     }
-    val postCompact = Streaming.manifestGenerations(fs, target).lastOption
-      .map(g => Streaming.manifestEntries(fs, target, g).size).getOrElse(0)
+    val postCompact = Snapshot.latest(fs, target)
+      .map(_.paths.size).getOrElse(0)
     println(s"[manifest-scale] compaction: $nCompacted shards bin-packed, " +
       s"$postFiles -> $postCompact manifest entries")
     val n4 = Streaming.readCommitted(spark, target).count()
@@ -283,8 +282,9 @@ object ManifestScale {
       Streaming.writeManifest(fs, zt)
       Streaming.clusterTable(spark, zt, "doc_id", 64)
     }
-    val (kept, total) = Streaming.zoneMapFiles(fs, zt, "doc_id",
-      rows / 2, rows / 2 + rows / 100).get
+    val zSnap = Snapshot.latest(fs, zt).get
+    val (kept, total) = (zSnap.rangeKept(Seq(("doc_id", rows / 2, rows / 2 + rows / 100))),
+      zSnap.entries.size)
     println(s"[manifest-scale] zone maps: a 1%-wide doc_id range keeps " +
       s"${kept.size} of $total clustered files")
     require(kept.size <= math.max(3, total / 16),
@@ -306,29 +306,27 @@ object ManifestScale {
     val dvLo = rows / 4
     val dvHi = dvLo + 99
     val preDvCount = Streaming.readCommitted(spark, zt).count()
-    val bytesBefore = Streaming.manifestGenerations(fs, zt).lastOption
-      .map(g => Streaming.manifestEntries(fs, zt, g)
+    val bytesBefore = Snapshot.latest(fs, zt)
+      .map(_.paths
         .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$zt/$f")).getLen).sum)
       .getOrElse(0L)
-    val entriesBefore = Streaming.manifestGenerations(fs, zt).lastOption
-      .map(g => Streaming.manifestEntries(fs, zt, g).toSet).getOrElse(Set.empty)
+    val entriesBefore = Snapshot.latest(fs, zt)
+      .map(_.paths.toSet).getOrElse(Set.empty)
     val (dvDeleted, dvSec) = time("deleteRange 100 keys via delete vectors") {
       Streaming.deleteRange(spark, zt, "doc_id", dvLo, dvHi)
     }
-    val entriesAfter = Streaming.manifestGenerations(fs, zt).lastOption
-      .map(g => Streaming.manifestEntries(fs, zt, g).toSet).getOrElse(Set.empty)
+    val entriesAfter = Snapshot.latest(fs, zt)
+      .map(_.paths.toSet).getOrElse(Set.empty)
     require(entriesAfter == entriesBefore, "DV delete changed the data file set")
     val bytesAfter = entriesAfter.toSeq
       .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$zt/$f")).getLen).sum
     require(bytesAfter == bytesBefore, "DV delete rewrote data bytes")
-    val mdirZt = Streaming.manifestDir(zt)
-    val dvBytes = fs.listStatus(mdirZt).filter(_.getPath.getName.startsWith("dv-"))
-      .map(_.getLen).sum
+    val dvBytes = Snapshot.list(fs, zt).files.filter(_.name.startsWith("dv-")).map(_.length).sum
     // the rewrite path would have rewritten every file overlapping the
     // range — measure those files' bytes as the comparison base
-    val touchedBytes = Streaming.zoneMapFiles(fs, zt, "doc_id", dvLo, dvHi)
-      .map(_._1.map(f =>
-        fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$zt/$f")).getLen).sum)
+    val touchedBytes = Snapshot.latest(fs, zt)
+      .map(_.rangeKept(Seq(("doc_id", dvLo, dvHi))).map(e =>
+        fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$zt/${e.path}")).getLen).sum)
       .getOrElse(0L)
     println(f"[manifest-scale] delete vectors: $dvDeleted rows in $dvSec%.2f s, " +
       f"sidecar ${dvBytes / 1024.0}%.1f KB vs ${touchedBytes / 1024.0 / 1024.0}%.1f MB " +
@@ -336,8 +334,8 @@ object ManifestScale {
     val dvN = Streaming.readCommitted(spark, zt).count()
     require(dvN == preDvCount - dvDeleted,
       s"DV-applied read $dvN != ${preDvCount - dvDeleted} (pre $preDvCount - $dvDeleted)")
-    require(Streaming.statsRowCount(fs, zt).contains(dvN),
-      s"metadata count ${Streaming.statsRowCount(fs, zt)} diverges from $dvN")
+    val dvMetaCount = Snapshot.latest(fs, zt).flatMap(_.rowCount)
+    require(dvMetaCount.contains(dvN), s"metadata count $dvMetaCount diverges from $dvN")
     println(s"[manifest-scale] delete vectors: $dvN live rows — PASS")
 
     // -- claim 9 (r18): MERGE — update-matched + insert-unmatched in
@@ -348,8 +346,8 @@ object ManifestScale {
     // advances by exactly one, and the metadata row count stays exact.
     val muLo = rows / 2
     val muHi = muLo + 99L
-    val preMergeGen = Streaming.manifestGenerations(fs, zt).last
-    val preMergeEntries = Streaming.manifestEntries(fs, zt, preMergeGen).toSet
+    val preMerge = Snapshot.latest(fs, zt).get
+    val (preMergeGen, preMergeEntries) = (preMerge.gen, preMerge.paths.toSet)
     val preSig: Map[String, (Long, Long)] = preMergeEntries.iterator.map { f =>
       val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$zt/$f"))
       f -> (st.getLen, st.getModificationTime)
@@ -369,10 +367,9 @@ object ManifestScale {
     }
     require(mstats.matched == 100L && mstats.inserted == 100L,
       s"merge stats diverged: $mstats")
-    require(Streaming.manifestGenerations(fs, zt).last == preMergeGen + 1,
-      "merge took more than one generation")
-    val postEntries = Streaming.manifestEntries(fs, zt,
-      Streaming.manifestGenerations(fs, zt).last).toSet
+    val postMerge = Snapshot.latest(fs, zt).get
+    require(postMerge.gen == preMergeGen + 1, "merge took more than one generation")
+    val postEntries = postMerge.paths.toSet
     require(preMergeEntries.subsetOf(postEntries), "merge dropped data files")
     preSig.foreach { case (f, sig) =>
       val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$zt/$f"))
@@ -385,7 +382,7 @@ object ManifestScale {
     val postMergeCount = mergedRead.count()
     require(postMergeCount == preMergeCount + 100L,
       s"merge count wrong: $postMergeCount != $preMergeCount + 100")
-    require(Streaming.statsRowCount(fs, zt).contains(postMergeCount),
+    require(Snapshot.latest(fs, zt).flatMap(_.rowCount).contains(postMergeCount),
       "merge left metadata counts inexact")
     val updVals = mergedRead.filter(col("doc_id").between(muLo, muHi))
       .select(col("payload")).distinct().collect().map(_.getString(0)).toSeq

@@ -381,8 +381,8 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // LIVE file counts come from the manifest — the directories also
     // hold replaced files awaiting the retention horizon
-    val liveByCell = graft.streaming.Streaming.latestManifest(fs, s"$root/corpus")
-      .get._2.groupBy(r => r.substring(0, r.lastIndexOf('/')))
+    val liveByCell = graft.table.Snapshot.latest(fs, s"$root/corpus")
+      .get.paths.groupBy(r => r.substring(0, r.lastIndexOf('/')))
     liveByCell.foreach { case (d, fsOfCell) =>
       withClue(s"cell dir $d still fragmented: ") {
         fsOfCell.size should be <= 3

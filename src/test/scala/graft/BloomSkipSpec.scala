@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** Bloom-filter file skipping (r16 judge #5): per-file blooms on a
   * declared key column, built by a maintenance verb into a sidecar
@@ -109,17 +110,17 @@ class BloomSkipSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       "degrades coverage and triggers exactly one rebuild") {
     val (target, keys) = seed("graft-bloom-maintain")
     Streaming.buildBloomIndex(spark, target, "key") should be >= 16
-    Streaming.bloomCoverage(fs, target, "key") shouldBe Some(1.0)
+    Snapshot.latest(fs, target).map(_.bloomCoverage("key")) shouldBe Some(1.0)
     val genBefore = Streaming.manifestGenerations(fs, target).last
     // healthy: no commit, generation unchanged
     Streaming.maintainBloom(spark, target, "key") shouldBe 0
     Streaming.manifestGenerations(fs, target).last shouldBe genBefore
     // a re-cluster rewrites every file -> tags drop -> coverage 0
     Streaming.clusterTable(spark, target, "id", 8)
-    Streaming.bloomCoverage(fs, target, "key").get shouldBe 0.0
+    Snapshot.latest(fs, target).map(_.bloomCoverage("key")).get shouldBe 0.0
     // degraded: one rebuild commit restores coverage and pruning
     Streaming.maintainBloom(spark, target, "key") should be >= 8
-    Streaming.bloomCoverage(fs, target, "key") shouldBe Some(1.0)
+    Snapshot.latest(fs, target).map(_.bloomCoverage("key")) shouldBe Some(1.0)
     val (bloomKept, zoneKept, _) = Streaming.bloomPointStats(spark, target, "key", keys(3))
     bloomKept should be < zoneKept
   }

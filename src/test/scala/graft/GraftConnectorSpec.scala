@@ -9,6 +9,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.sources.GraftFileIndex
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** The table-format connector (`spark.read.format("graft")`): pinned
   * snapshots, Catalyst-owned zone-map pushdown, hive partition
@@ -223,7 +224,7 @@ class GraftConnectorSpec extends AnyFunSuite with Matchers with SparkSessionSetu
     } finally q.stop()
     // every micro-batch commit carries its idempotency tag
     val gens = Streaming.manifestGenerations(fs, target)
-    val tags = gens.flatMap(g => Streaming.commitTag(fs, target, g))
+    val tags = gens.flatMap(g => Snapshot.list(fs, target).header(g).tag)
     tags should contain allOf ("sinkbatch-0", "sinkbatch-1")
     // REDELIVERY of an already-committed batch id (the crash-between-
     // commit-and-checkpoint window): driven directly through the sink,
@@ -265,7 +266,7 @@ class GraftConnectorSpec extends AnyFunSuite with Matchers with SparkSessionSetu
     spark.read.format("graft").load(target).count() shouldBe 2L
     // the mark landed under a QUERY-ID scope, not the path scope
     val gens1 = Streaming.manifestGenerations(fs, target)
-    val txns = Streaming.commitTxns(fs, target, gens1.last)
+    val txns = Snapshot.list(fs, target).header(gens1.last).txns
     txns.keys.count(_.startsWith("sinkq-")) shouldBe 1
     // canonical reprocess: delete the checkpoint, run the SAME query
     // shape at the SAME path — batch ids restart at 0 under a FRESH
@@ -273,8 +274,7 @@ class GraftConnectorSpec extends AnyFunSuite with Matchers with SparkSessionSetu
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
     runOnce()
     spark.read.format("graft").load(target).count() shouldBe 4L
-    val txns2 = Streaming.commitTxns(fs, target,
-      Streaming.manifestGenerations(fs, target).last)
+    val txns2 = Snapshot.latest(fs, target).get.header.txns
     txns2.keys.count(_.startsWith("sinkq-")) shouldBe 2
   }
 
@@ -287,7 +287,7 @@ class GraftConnectorSpec extends AnyFunSuite with Matchers with SparkSessionSetu
       1L)
     Streaming.deleteWhere(spark, target, col("id") % 10L === 7L) shouldBe 20L
     val gen = Streaming.manifestGenerations(fs, target).last
-    Streaming.generationHasDeleteVectors(fs, target, gen) shouldBe true
+    Snapshot.at(fs, target, gen).hasDeleteVectors shouldBe true
     // the connector now APPLIES the vectors instead of refusing
     val conn = spark.read.format("graft").load(target)
     conn.count() shouldBe 180L
@@ -384,11 +384,11 @@ class GraftConnectorSpec extends AnyFunSuite with Matchers with SparkSessionSetu
     // its post-crash redelivery) that batch 0's generation ages past
     // BOTH the retention horizon and the checkpoint chain anchor, so
     // its `# tag` header is pruned from every retained manifest...
-    (1 to Streaming.CheckpointEvery.toInt + Streaming.ManifestKeep + 1).foreach { i =>
+    (1 to Streaming.CheckpointEvery.toInt + Snapshot.ManifestKeep + 1).foreach { i =>
       batch(100 * i until 100 * i + 5).write.format("graft").mode("append").save(target)
     }
     val gens = Streaming.manifestGenerations(fs, target)
-    gens.flatMap(g => Streaming.commitTag(fs, target, g)) should not contain "sinkbatch-0"
+    gens.flatMap(g => Snapshot.list(fs, target).header(g).tag) should not contain "sinkbatch-0"
     // ...but the carried-forward txn mark still answers, and the
     // redelivered batch is skipped exactly-once
     val before = Streaming.readCommitted(spark, target).count()
@@ -398,9 +398,9 @@ class GraftConnectorSpec extends AnyFunSuite with Matchers with SparkSessionSetu
     // a genuinely new batch id still lands and bumps the mark
     sink.addBatch(1L, batch(50 until 60))
     Streaming.readCommitted(spark, target).count() shouldBe before + 10L
-    Streaming.txnHighWaterMark(fs, target, "sink-" +
+    Snapshot.latest(fs, target).flatMap(_.header.txns.get("sink-" +
       java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(ck).toLong & 0xffffffffL))
+        scala.util.hashing.MurmurHash3.stringHash(ck).toLong & 0xffffffffL)))
       .get shouldBe 1L
   }
 

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** MANIFEST-LIST checkpoints (the Iceberg manifest-list shape; r15
   * judge #3's last O(table) term): a checkpoint is a list of
@@ -41,7 +42,7 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       rows(keys, payload, v), v)
 
   private def manifestLines(target: String, name: String): Seq[String] = {
-    val p = new Path(Streaming.manifestDir(target), name)
+    val p = new Path(Snapshot.manifestDir(target), name)
     val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
     val in = fs.open(p)
     try in.readFully(buf) finally in.close()
@@ -110,7 +111,7 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
         }
       walk(new Path(target), "")
     }
-    val mdir = Streaming.manifestDir(target)
+    val mdir = Snapshot.manifestDir(target)
     fs.mkdirs(mdir)
     val out = fs.create(new Path(mdir, "gen-000000000001"), true)
     try out.write(rels.sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
@@ -147,8 +148,8 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     Streaming.buildBloomIndex(spark, target, "doc_id") should be > 0
     manifestLines(target, "inc-000000000002")
       .exists(_.contains("\tbl:doc_id:bl-")) shouldBe true
-    Streaming.statsRowCount(fs, target) shouldBe None
-    Streaming.committedDirRowCounts(fs, target) shouldBe None
+    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe None
+    Snapshot.latest(fs, target).flatMap(_.dirRowCounts) shouldBe None
     val latest = Streaming.tableHistory(spark, target)
       .orderBy(col("generation").desc).first()
     latest.getAs[Long]("generation") shouldBe 2L
@@ -242,7 +243,7 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
     Streaming.commitStage(fs, target, Set("shard=0"), ".__stage", baseGen = Some(1L))
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
-    val committed = Streaming.manifestEntriesForDirs(fs, target, 2L, Set("shard=0"))
+    val committed = Snapshot.at(fs, target, 2L, Some(Set("shard=0"))).paths
     committed should not be empty
     // fabricate the crash window: the stage reappears holding ONLY the
     // plan marker (files already moved, manifest already committed)
@@ -274,15 +275,15 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     upsert(target, 0 until 160, k => s"v1-$k", 1L) // gen 1, 8 shards
     // a crashed writer's del for a gen-2 proposal that never landed,
     // listing shard=7's LIVE files
-    val live = Streaming.manifestEntriesForDirs(fs, target, 1L, Set("shard=7"))
+    val live = Snapshot.at(fs, target, 1L, Some(Set("shard=7"))).paths
     live should not be empty
-    val orphan = new Path(Streaming.manifestDir(target), "del-000000000002-dead")
+    val orphan = new Path(Snapshot.manifestDir(target), "del-000000000002-dead")
     val out = fs.create(orphan, true)
     try out.write(live.sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
     // gen 1's shard=0 files: LEGITIMATELY replaced by the storm below —
     // their tombstones must still age out (the guard must not block
     // real GC)
-    val replaced = Streaming.manifestEntriesForDirs(fs, target, 1L, Set("shard=0"))
+    val replaced = Snapshot.at(fs, target, 1L, Some(Set("shard=0"))).paths
     replaced should not be empty
     // advance far past the horizon on an unrelated shard
     (2L to 8L).foreach(v => upsert(target, 0 until 160 by 8, k => s"v$v-$k", v))
@@ -374,7 +375,7 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     val target = Files.createTempDirectory("graft-ml-gc").toString + "/t"
     upsert(target, 0 until 160, k => s"v1-$k", 1L) // gen 1 checkpoint
     val refs1 = refsOf(target, 1L)
-    val mdir = Streaming.manifestDir(target)
+    val mdir = Snapshot.manifestDir(target)
     // plant a CAS loser's orphan at gen 1 (unreferenced by any checkpoint)
     val orphan = new Path(mdir, "m-000000000001-dead-0")
     val out = fs.create(orphan, true)

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** Generalized MERGE + row-level UPDATE (r17 judge items #7/#8): one
   * atomic generation composing delete vectors (retract matched) with
@@ -64,7 +65,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       .map(s => s.getPath.getName -> (s.getLen, s.getModificationTime)).toMap
     dataFiles.foreach { case (name, sig) => after(name) shouldBe sig }
     // metadata row count stays exact through the DV + add commit
-    Streaming.statsRowCount(fs, target) shouldBe Some(102L)
+    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(102L)
     // the DV-applying connector reads the merged state too
     spark.read.format("graft").load(target).count() shouldBe 102L
   }
@@ -82,7 +83,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val got = Streaming.readCommitted(spark, target)
     got.count() shouldBe 90L
     got.where(col("id") % 3 === 0 && col("id") < 30).count() shouldBe 0L
-    Streaming.statsRowCount(fs, target) shouldBe Some(90L)
+    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(90L)
   }
 
   test("mergeInto INSERT-ONLY on a NON-EMPTY table leaves matched rows untouched " +
@@ -111,9 +112,8 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     got.where(col("id") === 7L).select("payload").head().getString(0) shouldBe "p-7"
     got.where(col("id") === 300L).select("score").head().getLong(0) shouldBe 400L
     // insert-only commits carry NO delete vectors at all
-    Streaming.generationHasDeleteVectors(fs, target,
-      Streaming.manifestGenerations(fs, target).last) shouldBe false
-    Streaming.statsRowCount(fs, target) shouldBe Some(102L)
+    Snapshot.latest(fs, target).get.hasDeleteVectors shouldBe false
+    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(102L)
   }
 
   test("mergeInto refuses an AMBIGUOUS update (one target row, many source rows)") {
@@ -198,7 +198,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val again = Streaming.readCommitted(spark, target)
     again.count() shouldBe 100L
     again.where(col("id") === 15L).select("score").head().getLong(0) shouldBe 7L
-    Streaming.statsRowCount(fs, target) shouldBe Some(100L)
+    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(100L)
   }
 
   test("updateWhere validates assignment columns") {
@@ -257,10 +257,10 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val source = Seq((100L, 1L, "S-100"), (299L, 1L, "S-299"))
       .toDF("id", "zone", "s_payload")
     val total = Streaming.manifestEntries(fsL, target, gen).size
-    val idOnly = Streaming.zoneMapFilesAt(fsL, target, gen,
-      Seq(("id", Some(100L), Some(299L))))._1.size
-    val both = Streaming.zoneMapFilesAt(fsL, target, gen,
-      Seq(("id", Some(100L), Some(299L)), ("zone", Some(1L), Some(1L))))._1.size
+    val idOnly = Snapshot.zoneKept(Snapshot.at(fsL, target, gen).entries,
+      Seq(("id", Some(100L), Some(299L)))).size
+    val both = Snapshot.zoneKept(Snapshot.at(fsL, target, gen).entries,
+      Seq(("id", Some(100L), Some(299L)), ("zone", Some(1L), Some(1L)))).size
     both should be < idOnly
     idOnly should be < total
     val stats = Streaming.mergeInto(spark, target, source,

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** Schema evolution on MAINTAINED tables (r15 judge #5): the policy
   * for a column added mid-table. Default (the Delta contract): a batch
@@ -18,7 +19,7 @@ import graft.streaming.Streaming
   * `readAddedBetween` take `mergeSchema = true` for the union-schema
   * read, and every commit records its files' schema FINGERPRINT in the
   * manifest (`# schema` header), so a follower detects the transition
-  * with zero data I/O (`commitSchemaHash`).
+  * with zero data I/O.
   */
 class SchemaEvolutionSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
@@ -93,10 +94,10 @@ class SchemaEvolutionSpec extends AnyFunSuite with Matchers with SparkSessionSet
     // back `optional` — register too; what a follower keys on is
     // CHANGE, not a canonical value), and two same-path same-shape
     // commits agree
-    val h1 = Streaming.commitSchemaHash(fs, target, 1L)
-    val h2 = Streaming.commitSchemaHash(fs, target, 2L)
-    val h3 = Streaming.commitSchemaHash(fs, target, 3L)
-    val h4 = Streaming.commitSchemaHash(fs, target, 4L)
+    val h1 = Snapshot.list(fs, target).header(1L).schemaHash
+    val h2 = Snapshot.list(fs, target).header(2L).schemaHash
+    val h3 = Snapshot.list(fs, target).header(3L).schemaHash
+    val h4 = Snapshot.list(fs, target).header(4L).schemaHash
     Seq(h1, h2, h3, h4).foreach(_.isDefined shouldBe true)
     h2 should not be h1 // the widened column registers...
     h3 should not be h2 // ...and the return to the narrow shape too
@@ -158,8 +159,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with Matchers with SparkSessionSet
     byKey(0L) shouldBe Some("drifted")
     byKey(1L) shouldBe None
     // and the drift is detectable generation-by-generation too
-    val h2 = Streaming.commitSchemaHash(fs, target, 2L)
-    val h3 = Streaming.commitSchemaHash(fs, target, 3L)
+    val h2 = Snapshot.list(fs, target).header(2L).schemaHash
+    val h3 = Snapshot.list(fs, target).header(3L).schemaHash
     h2 should not be h3
   }
 }

@@ -10,6 +10,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** Reader-side snapshot isolation for the persisted state layer under
   * the IMMUTABLE commit protocol (r14 judge #1): every completed
@@ -72,7 +73,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
   test("every completed mutation commits a manifest; the pinned read equals the table") {
     val target = Files.createTempDirectory("graft-manifest").toString + "/t"
     seed(target)
-    val g1 = Streaming.latestManifest(fs, target)
+    val g1 = Snapshot.latest(fs, target).map(s => (s.gen, s.paths))
     g1 should not be empty
     withClue("manifest entries are relative data-file paths: ") {
       all(g1.get._2) should fullyMatch regex "shard=\\d+/.+\\.parquet"
@@ -82,7 +83,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
     // a second upsert bumps the generation and the pinned read follows
     Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
       sharded(Seq((100L, "v1-100", 2L))), 2L)
-    val g2 = Streaming.latestManifest(fs, target)
+    val g2 = Snapshot.latest(fs, target).map(s => (s.gen, s.paths))
     g2.get._1 shouldBe (g1.get._1 + 1)
     val snap = Streaming.readCommitted(spark, target)
     snap.count() shouldBe 101
@@ -126,7 +127,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
   test("retention spans ManifestKeep generations: a pinned generation's paths survive subsequent verbs") {
     val target = Files.createTempDirectory("graft-retain").toString + "/t"
     seed(target) // gen 1
-    val gen1 = Streaming.latestManifest(fs, target).get._2
+    val gen1 = Snapshot.latest(fs, target).get.paths
     // two more verbs touching the same shard — within the horizon
     Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
       sharded(Seq((1L, "v2-1", 2L))), 2L)
@@ -149,7 +150,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
     def batch(rows: Seq[(Long, String, Long)]) = rows.toDF("doc_id", "payload", "batch_id")
     Streaming.upsertBatch(target, "doc_id", "batch_id")(
       batch((0L until 40L).map(i => (i, s"v1-$i", 1L))), 1L)
-    Streaming.latestManifest(fs, target) should not be empty
+    Snapshot.latest(fs, target) should not be empty
     Streaming.readCommitted(spark, target).count() shouldBe 40
 
     // a second merge replaces every root entry; within the horizon the
@@ -315,7 +316,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
   test("manifest row-count stats: per-dir live counts are a metadata lookup, exact through upsert and delete") {
     val target = Files.createTempDirectory("graft-stats").toString + "/t"
     seed(target) // docs 0..99 across shards 0 and 1
-    def statCounts() = Streaming.committedDirRowCounts(fs, target).get
+    def statCounts() = Snapshot.latest(fs, target).flatMap(_.dirRowCounts).get
     def dataCounts() = Streaming.readCommitted(spark, target)
       .groupBy(col("shard")).count().collect()
       .map(r => s"shard=${r.getInt(0)}" -> r.getLong(1)).toMap
@@ -365,5 +366,22 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
       tookMs should be < 5000.0
       e.getMessage should not include "lost the maintenance race"
     }
+  }
+
+  test("withSnapshotRetry propagates an interrupt on the first attempt, even with a " +
+      "race-shaped cause") {
+    val target = Files.createTempDirectory("graft-retry-interrupt").toString + "/t"
+    seed(target)
+    var attempts = 0
+    val e = intercept[InterruptedException] {
+      Streaming.withSnapshotRetry(spark, target, attempts = 3) { _ =>
+        attempts += 1
+        val interrupt = new InterruptedException("reader interrupted")
+        interrupt.initCause(new java.io.FileNotFoundException(s"$target/shard=0/gone.parquet"))
+        throw interrupt
+      }
+    }
+    e.getMessage shouldBe "reader interrupted"
+    attempts shouldBe 1
   }
 }

@@ -9,6 +9,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
 import graft.streaming.Streaming.EventRow
+import graft.table.Snapshot
 
 class StreamingSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
@@ -234,7 +235,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     withClue("replaced files are RETAINED for pinned readers (deferred delete): ") {
       fs.listStatus(new org.apache.hadoop.fs.Path(target))
         .count(st => st.isFile && st.getPath.getName.endsWith(".parquet")) should be >
-        Streaming.latestManifest(fs, target).get._2.size
+        Snapshot.latest(fs, target).get.paths.size
     }
   }
 

@@ -10,6 +10,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** The immutable commit protocol behind every persisted-state mutation
   * (upsertPartitionedBatch, deleteFromPartitioned, AnnIndex's verbs):
@@ -86,7 +87,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     withClue("the replaced generation's files are RETAINED on disk for pinned readers: ") {
       // live dir holds old + new files — more parquet files than the
       // manifest references (deferred delete)
-      val manifest = Streaming.latestManifest(fs, target).get._2
+      val manifest = Snapshot.latest(fs, target).get.paths
       fileSet(target, 1).size should be > manifest.count(_.startsWith("shard=1/"))
     }
   }
@@ -115,7 +116,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
   test("an UNPLANNED stage rolls BACK: the half-written job is garbage, the table untouched") {
     val target = Files.createTempDirectory("graft-rollback").toString + "/t"
     seed(target)
-    val gen = Streaming.latestManifest(fs, target).get._1
+    val gen = Snapshot.latest(fs, target).get.gen
     // a stage with NO commit plan (writer died mid-job)
     sharded(Seq((50L, "garbage", 9L)))
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
@@ -126,7 +127,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     t.filter(col("doc_id") === 50L).select("payload").head.getString(0) shouldBe "v1-50"
     fs.exists(new Path(target + ".__stage")) shouldBe false
     withClue("roll-back must not advance the manifest: ") {
-      Streaming.latestManifest(fs, target).get._1 shouldBe gen
+      Snapshot.latest(fs, target).get.gen shouldBe gen
     }
   }
 
@@ -137,13 +138,13 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
     writePlan(target, Set("shard=1"))
     Streaming.recoverStage(fs, target)
-    val gen = Streaming.latestManifest(fs, target).get._1
+    val gen = Snapshot.latest(fs, target).get.gen
     val rows = Streaming.readCommitted(spark, target)
       .select("doc_id", "payload").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     // the stage is gone, so a second recovery is a no-op: same
     // generation, same rows, no double-committed manifest
     Streaming.recoverStage(fs, target)
-    Streaming.latestManifest(fs, target).get._1 shouldBe gen
+    Snapshot.latest(fs, target).get.gen shouldBe gen
     Streaming.readCommitted(spark, target)
       .select("doc_id", "payload").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet shouldBe rows
@@ -152,7 +153,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
   test("replaced files are deleted only at the retention horizon (deferred delete + GC)") {
     val target = Files.createTempDirectory("graft-gc").toString + "/t"
     seed(target) // gen 1
-    val gen1Shard0 = Streaming.latestManifest(fs, target).get._2
+    val gen1Shard0 = Snapshot.latest(fs, target).get.paths
       .filter(_.startsWith("shard=0/")).toSet
     gen1Shard0 should not be empty
     def onDisk(rel: String): Boolean = fs.exists(new Path(s"$target/$rel"))
@@ -182,7 +183,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       e.getMessage should include("not retained")
     }
     withClue("aged tombstone files are gone from the manifest dir: ") {
-      val mdir = Streaming.manifestDir(target)
+      val mdir = Snapshot.manifestDir(target)
       // dels written at gens 2..5 (gen 1 replaced nothing); the one at
       // or below the cutoff (gen 2) is GC'd with its files
       fs.listStatus(mdir).map(_.getPath.getName)
@@ -219,7 +220,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     t.count() shouldBe 50
     t.filter(col("shard") === 0).count() shouldBe 0
     withClue("the emptied shard keeps a manifest entry (the staged empty file): ") {
-      Streaming.latestManifest(fs, target).get._2
+      Snapshot.latest(fs, target).get.paths
         .count(_.startsWith("shard=0/")) shouldBe 1
     }
     // and the layout still upserts normally afterwards

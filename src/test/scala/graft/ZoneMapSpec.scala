@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
+import graft.table.Snapshot
 
 /** Zone-map file skipping (the Iceberg/Delta data-skipping core):
   * every commit records per-file min/max bounds for the top-level
@@ -30,6 +31,12 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString + "/t"
 
+  /** Zone-map pruning of the latest generation: (kept paths, total). */
+  private def zoneMapFiles(target: String, predicates: (String, Any, Any)*): (Seq[String], Int) = {
+    val snap = Snapshot.latest(fs, target).get
+    (snap.rangeKept(predicates).map(_.path), snap.entries.size)
+  }
+
   private def seed(target: String, n: Long = 400L): Unit = {
     import spark.implicits._
     Streaming.upsertPartitionedBatch(target, "id", "v", "shard")(
@@ -42,7 +49,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val target = tmp("graft-zm-cluster")
     seed(target)
     Streaming.clusterTable(spark, target, "id", 16)
-    val (kept, total) = Streaming.zoneMapFiles(fs, target, "id", 100L, 124L).get
+    val (kept, total) = zoneMapFiles(target, ("id", 100L, 124L))
     total should be >= 16
     // a 25-wide slice of a 400-key domain split into 16 ranges touches
     // a small handful of files (range-partitioner SAMPLING shifts the
@@ -60,7 +67,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val target = tmp("graft-zm-kinds")
     seed(target)
     Streaming.clusterTable(spark, target, "score", 8)
-    val (keptD, totalD) = Streaming.zoneMapFiles(fs, target, "score", 10.0, 19.5).get
+    val (keptD, totalD) = zoneMapFiles(target, ("score", 10.0, 19.5))
     keptD.size should be < totalD
     val prunedD = Streaming.readCommittedRange(spark, target, "score", 10.0, 19.5)
     prunedD.count() shouldBe Streaming.readCommitted(spark, target)
@@ -68,7 +75,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
     Streaming.clusterTable(spark, target, "name", 8)
     val (keptS, totalS) =
-      Streaming.zoneMapFiles(fs, target, "name", "name-100", "name-149").get
+      zoneMapFiles(target, ("name", "name-100", "name-149"))
     keptS.size should be < totalS
     Streaming.readCommittedRange(spark, target, "name", "name-100", "name-149")
       .count() shouldBe 50L
@@ -89,18 +96,18 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
         .toDF("id", "text", "v", "shard"),
       1L)
     // the row count survived the oversized string bound
-    Streaming.statsRowCount(fs, target) shouldBe Some(200L)
+    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(200L)
     // the long column has no zone map -> its min/max refuses...
-    Streaming.statsMinMax(fs, target, "text") shouldBe None
+    Snapshot.latest(fs, target).flatMap(_.minMax("text")) shouldBe None
     // ...but the sibling long column's bounds were recorded and answer
-    Streaming.statsMinMax(fs, target, "id") shouldBe Some(("0", "199", 'l'))
+    Snapshot.latest(fs, target).flatMap(_.minMax("id")) shouldBe Some(("0", "199", 'l'))
     // and pruning on the sibling column still works after clustering
     Streaming.clusterTable(spark, target, "id", 8)
-    val (kept, total) = Streaming.zoneMapFiles(fs, target, "id", 10L, 29L).get
+    val (kept, total) = zoneMapFiles(target, ("id", 10L, 29L))
     kept.size should be < total
     Streaming.readCommittedRange(spark, target, "id", 10L, 29L).count() shouldBe 20L
     // the unboundable text column keeps every file — lossless fallback
-    val (keptT, totalT) = Streaming.zoneMapFiles(fs, target, "text", "a", "b").get
+    val (keptT, totalT) = zoneMapFiles(target, ("text", "a", "b"))
     keptT.size shouldBe totalT
   }
 
@@ -120,13 +127,13 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val g = Streaming.manifestGenerations(fs, target).last
     val all = Streaming.manifestEntries(fs, target, g)
     // exact metadata-only null count
-    Streaming.statsNullCount(fs, target, "maybe") shouldBe Some(100L)
-    Streaming.statsNullCount(fs, target, "id") shouldBe Some(0L)
+    Snapshot.latest(fs, target).flatMap(_.nullCount("maybe")) shouldBe Some(100L)
+    Snapshot.latest(fs, target).flatMap(_.nullCount("id")) shouldBe Some(0L)
     // IS NULL keeps only the null-bearing (low-id) files
-    val isNullKept = Streaming.nullPruneFiles(fs, target, g, "maybe", isNull = true, all)
+    val isNullKept = Snapshot.nullKept(Snapshot.at(fs, target, g).entries, "maybe", isNull = true).map(_.path)
     isNullKept.size should be < all.size
     // IS NOT NULL drops the all-null files
-    val notNullKept = Streaming.nullPruneFiles(fs, target, g, "maybe", isNull = false, all)
+    val notNullKept = Snapshot.nullKept(Snapshot.at(fs, target, g).entries, "maybe", isNull = false).map(_.path)
     notNullKept.size should be < all.size
     // both lossless vs the full filter
     val full = Streaming.readCommitted(spark, target)
@@ -141,7 +148,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     // the r16 refusal case resolved: files whose `maybe` is ALL NULL
     // carry a z-marker (all-null proof), so min/max answers from the
     // value-bearing files instead of refusing
-    Streaming.statsMinMax(fs, target, "maybe") shouldBe Some(("v-100", "v-399", 's'))
+    Snapshot.latest(fs, target).flatMap(_.minMax("maybe")) shouldBe Some(("v-100", "v-399", 's'))
     // and the CONNECTOR's null-test pushdown consumes the counts
     val scan = spark.read.format("graft").load(target).where(col("maybe").isNull)
     scan.count() shouldBe 100L
@@ -159,7 +166,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val target = tmp("graft-zm-empty")
     seed(target)
     Streaming.clusterTable(spark, target, "id", 8)
-    val (kept, _) = Streaming.zoneMapFiles(fs, target, "id", 100000L, 200000L).get
+    val (kept, _) = zoneMapFiles(target, ("id", 100000L, 200000L))
     kept shouldBe empty
     val out = Streaming.readCommittedRange(spark, target, "id", 100000L, 200000L)
     out.count() shouldBe 0L
@@ -201,7 +208,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       withZ.withColumn("shard", col("shard").cast("long")), 1L)
     Streaming.clusterTable(spark, staged, "zval", 16)
     val predicates = Seq[(String, Any, Any)](("x", 8L, 15L), ("y", 24L, 31L))
-    val (kept, total) = Streaming.zoneMapFilesMulti(fs, staged, predicates).get
+    val (kept, total) = zoneMapFiles(staged, predicates: _*)
     total shouldBe 16
     // an 8x8 query rectangle over a 64x64 z-ordered space: a handful
     // of files, never most of them (boundaries are SAMPLED — allow
@@ -221,11 +228,11 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     seed(target, n = 50L)
     // a column with no recorded bounds (shard is a PARTITION dir, not
     // a data column in the files): every file kept
-    val (kept, total) = Streaming.zoneMapFiles(fs, target, "no_such_col", 0L, 1L).get
+    val (kept, total) = zoneMapFiles(target, ("no_such_col", 0L, 1L))
     kept.size shouldBe total
     // fractional bound against an integral column: loud refusal
     an[IllegalArgumentException] should be thrownBy
-      Streaming.zoneMapFiles(fs, target, "id", 1.5, 2.5)
+      zoneMapFiles(target, ("id", 1.5, 2.5))
   }
 
   test("clusteringDepth reads layout health from metadata; maintainClustered " +
@@ -234,7 +241,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val target = tmp("graft-zm-maintain")
     seed(target)
     Streaming.clusterTable(spark, target, "id", 8)
-    val healthy = Streaming.clusteringDepth(fs, target, "id").get
+    val healthy = Snapshot.latest(fs, target).flatMap(_.clusteringDepth("id")).get
     healthy should be < 1.5
     // a healthy table is a pure metadata probe: no new generation
     val genBefore = Streaming.manifestGenerations(fs, target).max
@@ -253,14 +260,14 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
         .write.mode("overwrite").parquet(target + ".__stage")
       Streaming.commitStage(fs, target, Set.empty)
     }
-    val degraded = Streaming.clusteringDepth(fs, target, "id").get
+    val degraded = Snapshot.latest(fs, target).flatMap(_.clusteringDepth("id")).get
     degraded should be > 2.0
     val before = Streaming.readCommitted(spark, target).count()
     Streaming.maintainClustered(spark, target, "id", 8) shouldBe true
-    Streaming.clusteringDepth(fs, target, "id").get should be < 1.5
+    Snapshot.latest(fs, target).flatMap(_.clusteringDepth("id")).get should be < 1.5
     Streaming.readCommitted(spark, target).count() shouldBe before
     // and pruning is sharp again (sampled boundaries: allow straddle)
-    val (kept, total) = Streaming.zoneMapFiles(fs, target, "id", 100L, 124L).get
+    val (kept, total) = zoneMapFiles(target, ("id", 100L, 124L))
     kept.size should be <= 3
     total shouldBe 8
   }
@@ -274,7 +281,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       Seq((0L, 99.0, "upd", 9L, 0L)).toDF("id", "score", "name", "v", "shard"), 2L)
     Streaming.manifestGenerations(fs, target2).last shouldBe gens.last + 1
     // shards 1..3 were untouched: their carried entries still prune
-    val (kept2, total2) = Streaming.zoneMapFiles(fs, target2, "id", 50000L, 60000L).get
+    val (kept2, total2) = zoneMapFiles(target2, ("id", 50000L, 60000L))
     kept2 shouldBe empty
     total2 should be > 0
   }
