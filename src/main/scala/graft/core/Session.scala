@@ -45,7 +45,12 @@ object Session {
     // (an analyzer check rule — see GraftExtensions.guardGraftInsert:
     // a SQL insert into a graft catalog table would otherwise write
     // files the manifest never commits, a silent no-op for readers).
-    "spark.sql.extensions" -> "graft.plans.GraftExtensions"
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    // `file://` without a forked `chmod` per create and mkdirs (see
+    // GraftLocalFileSystem). Hadoop's FileSystem cache ignores conf: a
+    // `file` FS built in this JVM before the session stays the default
+    // one — slower, still correct.
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName
   )
 
   def build(

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.streaming.Streaming
 import graft.table.Manifest.dirOf
-import graft.table.{ManifestEntry, Snapshot}
+import graft.table.{FooterSchema, ManifestEntry, Snapshot}
 
 /** The TABLE-FORMAT connector over the graft manifest protocol (r16
   * judge #3: "the storage layer is invisible to Catalyst/SQL"):
@@ -565,6 +565,9 @@ class GraftFileIndex(
     *    unknowable from metadata → they contribute a bounded per-dir
     *    footer sample to the merge (capped; documented best-effort —
     *    rewrite once via compactShards to stamp fingerprints).
+    *
+    * The footers are read on the driver ([[FooterSchema]]), not by an
+    * inference job.
     */
   lazy val dataSchema: StructType = {
     require(allFiles.nonEmpty, s"graft table $target generation $generation " +
@@ -575,11 +578,7 @@ class GraftFileIndex(
     val sample: Seq[String] =
       if (unknown.isEmpty) known
       else known ++ unknown.groupBy(dirOf).values.map(_.head).toSeq.sorted.take(32)
-    new ParquetFileFormat().inferSchema(
-      spark, Map("mergeSchema" -> (sample.size > 1).toString),
-      sample.map(statusByRel)).getOrElse(
-      throw new IllegalStateException(
-        s"unreadable parquet footer(s) under $target (generation $generation)"))
+    FooterSchema.of(spark, sample.map(statusByRel(_).getPath))
   }
 
   /** (kept, total) of the most recent `listFiles` zone-map prune. */

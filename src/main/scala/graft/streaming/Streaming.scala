@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.table.{Bounds, ColumnStats, CommitHeader, Listing, ManifestEntry, ManifestLine,
-  Snapshot, Tag}
+import graft.table.{Bounds, ColumnStats, CommitHeader, FooterSchema, Listing, ManifestEntry,
+  ManifestLine, Snapshot, Tag}
 import graft.table.Manifest.dirOf
 import graft.table.Snapshot.{inParallel, manifestDir, ManifestKeep}
 
@@ -1795,9 +1795,29 @@ object Streaming {
       lines: Seq[ManifestEntry],
       mergeSchema: Boolean = false
   ): DataFrame =
-    applyDeleteVectors(spark, target, lines,
-      spark.read.option("basePath", target).option("mergeSchema", mergeSchema.toString)
-        .parquet(lines.map(l => s"$target/${l.path}"): _*))
+    applyDeleteVectors(spark, target, lines, fileScan(spark, target, lines, mergeSchema))
+
+  /** The raw parquet scan of `lines`' files (no delete vectors),
+    * partition columns derived from the dir names via `basePath`. The
+    * data schema is read from the footers Spark would infer it from
+    * ([[FooterSchema]]), so the scan starts no inference job. A file
+    * gone before the read leaves inference to Spark, which then fails
+    * the read as it always has.
+    */
+  private def fileScan(
+      spark: org.apache.spark.sql.SparkSession,
+      target: String,
+      lines: Seq[ManifestEntry],
+      mergeSchema: Boolean = false
+  ): DataFrame = {
+    def pathOf(l: ManifestEntry) = s"$target/${l.path}"
+    val reader = spark.read.option("basePath", target).option("mergeSchema", mergeSchema.toString)
+    val schema =
+      try Some(FooterSchema.of(spark, FooterSchema.sample(lines, mergeSchema)
+        .map(l => new org.apache.hadoop.fs.Path(pathOf(l)))))
+      catch { case _: java.io.FileNotFoundException => None }
+    schema.fold(reader)(reader.schema).parquet(lines.map(pathOf): _*)
+  }
 
   private def fsOf(spark: org.apache.spark.sql.SparkSession, target: String) =
     new org.apache.hadoop.fs.Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1885,8 +1905,7 @@ object Streaming {
     val targetPath = new org.apache.hadoop.fs.Path(target)
     val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qualRoot = fs.makeQualified(targetPath).toString
-    val raw = spark.read.option("basePath", target)
-      .parquet(lines.map(l => s"$target/${l.path}"): _*)
+    val raw = fileScan(spark, target, lines)
       .withColumn("__m_rel",
         expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})"))
       .withColumn("__m_pos", col("_metadata.row_index"))
@@ -2101,9 +2120,10 @@ object Streaming {
     *
     * This is the maintenance job that keeps an append-heavy or
     * wide-ingest table's file count bounded at 100 TB — run it as its
-    * own service against the optimistic writers ([[commitStage]]'s CAS
-    * detects any overlap with a concurrent upsert and the loser
-    * re-runs).
+    * own service against the optimistic writers: an optimistic commit
+    * that lands on a fragmented shard between this verb's read and its
+    * commit makes the commit throw [[CommitConflictException]] (the
+    * writer's rows stay; re-run the compaction).
     */
   def compactShards(
       spark: org.apache.spark.sql.SparkSession,
@@ -2141,8 +2161,11 @@ object Streaming {
         fs.delete(stage, true)
         touched.repartition(col(shardCol))
           .write.mode("overwrite").partitionBy(shardCol).parquet(stage.toString)
-        commitStage(fs, target, fragmented)
-        sweepUnreferencedDvs(fs, target)
+        // the lease keeps lease-holding verbs out, not the optimistic
+        // writers: the read generation lets the commit's staleness scan
+        // catch one that replaced a fragmented shard since the read
+        commitStage(fs, target, fragmented, baseGen = Some(snap.gen))
+        sweepUnreferencedSidecars(fs, target)
         fragmented.size
       }
     }
@@ -2211,8 +2234,7 @@ object Streaming {
       if (lines.isEmpty) return 0
       val qualRoot = fs.makeQualified(targetPath).toString
       import spark.implicits._
-      val keyed = spark.read.option("basePath", target)
-        .parquet(lines.map(l => s"$target/${l.path}"): _*)
+      val keyed = fileScan(spark, target, lines)
         .select(
           expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})").as("rel"),
           col(column).cast("string").as("k"))
@@ -2270,6 +2292,7 @@ object Streaming {
           retaggedDirs(touchedDirs, current, applicable), Nil, Nil,
           modified = applicable.values.toSeq.sortBy(_.path))
       }
+      sweepUnreferencedSidecars(fs, target)
       refreshListing(target)
       retagged.size
     }
@@ -2328,7 +2351,7 @@ object Streaming {
       val sidecars = tagged.values.toSeq.distinct
       import org.apache.spark.sql.Row
       val taggedRels = tagged.keySet
-      val byRel: Map[String, (Int, Int, Array[Byte])] = spark.read
+      val byRel: Map[String, (Int, Int, Array[Byte])] = spark.read.schema(BloomSchema)
         .parquet(sidecars.map(s => new org.apache.hadoop.fs.Path(mdir, s).toString): _*)
         .collect().iterator.collect {
           case Row(rel: String, m: Int, k: Int, bits: Array[Byte]) if taggedRels(rel) =>
@@ -2343,6 +2366,15 @@ object Streaming {
         }
       }
     }
+  }
+
+  /** The fixed schema of every bloom sidecar (as [[DvSchema]] for the
+    * delete-vector ones): a probe's read pays no inference job.
+    */
+  private val BloomSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("rel", StringType), StructField("m", IntegerType),
+      StructField("k", IntegerType), StructField("bits", BinaryType)))
   }
 
   /** POINT LOOKUP with bloom + zone-map file skipping: resolve the
@@ -2387,27 +2419,31 @@ object Streaming {
     }
   }
 
-  /** GC delete-vector sidecars that no RETAINED generation's entries
-    * reference anymore — run from maintenance verbs (compaction),
+  /** GC delete-vector (`dv-`) and bloom (`bl-`) sidecars that no
+    * RETAINED generation's entries reference anymore — run from the
+    * maintenance verbs that retire them (compaction, a bloom rebuild),
     * where an O(retained entry lists) metadata pass is already in
     * budget, never from the per-commit prune. Sidecars younger than
     * the stage-abandonment TTL are left alone: an in-flight
-    * [[deleteWhere]] writes its sidecar BEFORE the tagging commit
-    * lands, and sweeping inside that window would tear it.
+    * [[deleteWhere]] or [[buildBloomIndex]] writes its sidecar BEFORE
+    * the tagging commit lands, and sweeping inside that window would
+    * tear it.
     */
-  private def sweepUnreferencedDvs(
+  private def sweepUnreferencedSidecars(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String
   ): Unit = {
     val listing = Snapshot.list(fs, target)
     val now = System.currentTimeMillis()
-    val dvFiles = listing.files.filter(f =>
-      f.name.startsWith("dv-") && now - f.mtimeMs > StageAbandonedMs).map(_.name)
-    if (dvFiles.isEmpty) return
+    val sidecars = listing.files.filter(f =>
+      (f.name.startsWith("dv-") || f.name.startsWith("bl-")) &&
+        now - f.mtimeMs > StageAbandonedMs).map(_.name)
+    if (sidecars.isEmpty) return
     val referenced: Set[String] =
-      try listing.walkAll().flatMap(_.entries.flatMap(_.dv.map(_.sidecar))).toSet
-      catch { case _: IllegalStateException => dvFiles.toSet } // pruned mid-walk: keep all
-    dvFiles.filterNot(referenced).foreach(n =>
+      try listing.walkAll().flatMap(_.entries.flatMap(e => e.dv.map(_.sidecar) ++ e.blooms.values))
+        .toSet
+      catch { case _: IllegalStateException => sidecars.toSet } // pruned mid-walk: keep all
+    sidecars.filterNot(referenced).foreach(n =>
       fs.delete(new org.apache.hadoop.fs.Path(manifestDir(target), n), false))
   }
 
@@ -2970,8 +3006,7 @@ object Streaming {
           whenNotMatchedInsert match {
             case None => return MergeStats(0L, 0L)
             case Some(m) =>
-              val probe = spark.read.option("basePath", target)
-                .parquet(s"$target/${allEntries.head.path}")
+              val probe = fileScan(spark, target, allEntries.take(1))
               val ins = insertImage(source, probe.columns.toSeq, m).localCheckpoint()
               val n = ins.count()
               if (n == 0L) return MergeStats(0L, 0L)
@@ -3340,9 +3375,8 @@ object Streaming {
           else {
             val deltaSide =
               if (deltaCount <= 4000000L) broadcast(delta) else delta
-            val pre = spark.read.option("basePath", target)
-              .option("mergeSchema", "true")
-              .parquet(dvChanged.toSeq.sorted.map(p => s"$target/$p"): _*)
+            val pre = fileScan(spark, target, dvChanged.toSeq.sorted.map(curByPath),
+                mergeSchema = true)
               .withColumn("__cdf_rel",
                 expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})"))
               .withColumn("__cdf_pos", col("_metadata.row_index"))

@@ -23,3 +23,14 @@ object PlanBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
+
+/** Package bridge to `StructType.merge` (private[sql]), the merge
+  * Spark's parquet schema inference applies across footers.
+  */
+object SchemaBridge {
+  def merge(
+      left: org.apache.spark.sql.types.StructType,
+      right: org.apache.spark.sql.types.StructType,
+      caseSensitive: Boolean
+  ): org.apache.spark.sql.types.StructType = left.merge(right, caseSensitive)
+}

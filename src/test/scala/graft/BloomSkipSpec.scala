@@ -133,4 +133,32 @@ class BloomSkipSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     Streaming.deleteWhere(spark, target, col("id") === 42L) shouldBe 1L
     Streaming.readCommittedPoint(spark, target, "key", probe).count() shouldBe 0L
   }
+
+  test("a bloom rebuild sweeps aged sidecars no retained generation names; " +
+      "named and young ones stay") {
+    val (target, keys) = seed("graft-bloom-sweep")
+    Streaming.buildBloomIndex(spark, target, "key") should be >= 16
+    val mdir = Snapshot.manifestDir(target)
+    def sidecars = fs.listStatus(mdir).map(_.getPath.getName).filter(_.startsWith("bl-")).toSet
+    val first = sidecars
+    first.size shouldBe 1
+    // two sidecars no generation names (a build that died before its
+    // tagging commit): one past the in-flight age guard, one inside it
+    def orphan(name: String) = {
+      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(mdir, first.head), fs,
+        new Path(mdir, name), false, spark.sparkContext.hadoopConfiguration)
+      name
+    }
+    val (aged, young) = (orphan("bl-000000000900-deadbeef.parquet"),
+      orphan("bl-000000000901-cafebabe.parquet"))
+    val old = System.currentTimeMillis() - Streaming.StageAbandonedMs - 1000
+    (first + aged).foreach(n => fs.setTimes(new Path(mdir, n), old, -1))
+    // the rebuild re-tags every file with its own new sidecar; the
+    // first one is still named by the retained generation it tagged
+    Streaming.buildBloomIndex(spark, target, "key") should be >= 16
+    val rebuilt = sidecars -- first - young
+    rebuilt.size shouldBe 1
+    sidecars shouldBe first ++ rebuilt + young
+    Streaming.readCommittedPoint(spark, target, "key", keys(7)).count() shouldBe 1L
+  }
 }

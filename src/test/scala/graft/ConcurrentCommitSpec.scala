@@ -418,4 +418,49 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
       .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
     gotRows shouldBe Seq((1L, "b1"), (2L, "b2"), (100L, "a1")).sorted
   }
+
+  test("an optimistic upsert landing between compaction's read and its commit " +
+      "conflicts the compaction; the upsert's rows survive") {
+    val target = Files.createTempDirectory("graft-cc-compact").toString + "/t"
+    seed(target, 80) // gen 1
+    // a delete vector makes shard 0 fragmented: compaction rewrites it
+    Streaming.deleteWhere(spark, target, col("doc_id") === 8L) shouldBe 1L // gen 2
+    val racer = rows(0 until 80, k => s"racer-$k", 2L)
+      .filter(col("shard") === 0L && col("doc_id") =!= 8L)
+    // the racer commits from inside compaction's manifest claim, i.e.
+    // after compaction read gen 2 and staged its rewrite of shard 0;
+    // every claim itself is the plain file:// one (the hook steps
+    // aside while it runs, and for good once the racer has landed)
+    var raced = false
+    Streaming.registerClaimPrimitive("file", new Streaming.ClaimPrimitive {
+      def claim(fs: org.apache.hadoop.fs.FileSystem, tmp: Path, dst: Path): Boolean = {
+        Streaming.unregisterClaimPrimitive("file")
+        if (dst.getName.matches("(gen|inc)-\\d+")) {
+          raced = true
+          Streaming.upsertPartitionedOptimistic(target, "doc_id", "batch_id", "shard")(
+            racer) shouldBe 1
+        }
+        val won = Streaming.atomicClaim(fs, tmp, dst)
+        if (!raced) Streaming.registerClaimPrimitive("file", this)
+        won
+      }
+    })
+    try {
+      val ex = intercept[Streaming.CommitConflictException] {
+        Streaming.compactShards(spark, target, "shard")
+      }
+      ex.getMessage should include("shard=0")
+    } finally Streaming.unregisterClaimPrimitive("file")
+    raced shouldBe true
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L, 3L)
+    val got = readAll(target)
+    got.size shouldBe 79
+    (0L until 80L).filterNot(_ == 8L).foreach { k =>
+      val expect = if (k % 8 == 0) (s"racer-$k", 2L) else (s"v1-$k", 1L)
+      withClue(s"key $k: ") { got(k) shouldBe expect }
+    }
+    // the re-run finds shard 0 already one DV-free file
+    Streaming.compactShards(spark, target, "shard") shouldBe 0
+    readAll(target) shouldBe got
+  }
 }

@@ -16,8 +16,9 @@ import graft.streaming.Streaming
   * target once, checkpoints that scan once and takes every count from
   * one aggregate over it, and reads sidecars with their fixed schema;
   * a verb that re-scans the target, re-counts positions or infers a
-  * sidecar's schema shows here as extra jobs. These are job counts,
-  * not timings.
+  * sidecar's schema shows here as extra jobs. The pinned reads' counts
+  * show the same for a data file's schema. These are job counts, not
+  * timings.
   */
 class MutationJobCountSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
@@ -84,5 +85,21 @@ class MutationJobCountSpec extends AnyFunSuite with Matchers with SparkSessionSe
     deleteJobs should be <= 7
     updateJobs should be <= 8
     mergeJobs should be <= 14
+  }
+
+  test("a pinned read, a point read and a range read each run one Spark job: " +
+      "the schema comes from the footer, not from an inference job") {
+    import spark.implicits._
+    val target = Files.createTempDirectory("graft-jobcount").toString + "/t"
+    Streaming.upsertPartitionedBatch(target, "id", "v", "shard")(
+      (0 until 200).map(k => (k.toLong, 1L, k.toLong % 4)).toDF("id", "v", "shard"), 1L)
+    var rows = Seq.empty[Int]
+    val jobs = Seq(
+      jobsOf(rows :+= Streaming.readCommitted(spark, target).collect().length),
+      jobsOf(rows :+= Streaming.readCommittedPoint(spark, target, "id", 7L).collect().length),
+      jobsOf(rows :+= Streaming.readCommittedRange(spark, target, "id", 10L, 19L)
+        .collect().length))
+    rows shouldBe Seq(200, 1, 10)
+    jobs shouldBe Seq(1, 1, 1)
   }
 }

@@ -35,6 +35,13 @@ class SessionConfSpec extends AnyFunSuite {
     }
   }
 
+  test("every session's file:// FileSystem is the chmod-free one") {
+    val impl = "spark.hadoop.fs.file.impl"
+    val name = classOf[graft.core.GraftLocalFileSystem].getName
+    assert(Session.defaultConf.get(impl).contains(name))
+    assert(Session.driverConf("7").get(impl).contains(name))
+  }
+
   test("driverConf sizes shuffle partitions to the worker count and disables the UI") {
     val driver = Session.driverConf("7")
     assert(driver.get("spark.sql.shuffle.partitions").contains("7"))
