@@ -144,7 +144,7 @@ object AnnIndex {
     val spark = corpus.sparkSession
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.Streaming.withWriterLease(fs, root) {
+    graft.table.Commit.withWriterLease(fs, root) {
       // A rebuild over an existing root is a NEW GENERATION: purge
       // every commit-protocol leftover of the old one first. A
       // committed `corpus.__stage` left by a crashed maintenance verb
@@ -174,8 +174,8 @@ object AnnIndex {
       // reader-visible commit of the new generation (in-place retrain
       // itself is NOT snapshot-isolated — the overwrite deletes the
       // old files; production rebuilds write a new root and repoint)
-      graft.streaming.Streaming.writeManifest(fs, s"$root/centroids")
-      graft.streaming.Streaming.writeManifest(fs, s"$root/corpus")
+      graft.table.Commit.writeManifest(fs, s"$root/centroids")
+      graft.table.Commit.writeManifest(fs, s"$root/corpus")
       rebuildIdMap(spark, root, fs)
     }
   }
@@ -209,7 +209,7 @@ object AnnIndex {
     // in-flight maintenance on the current version — the GC below
     // retains exactly the superseded version, which is the newest one
     // any of them can hold.
-    graft.streaming.Streaming.withWriterLease(fs, root) {
+    graft.table.Commit.withWriterLease(fs, root) {
     val cur = currentVersion(fs, root)
     val next = cur.getOrElse(0L) + 1
     val sub = f"$root/v-$next%06d"
@@ -222,7 +222,7 @@ object AnnIndex {
     val ptr = new org.apache.hadoop.fs.Path(root, "__current")
     fs.delete(ptr, false) // local FS rename refuses an existing dest
     require(fs.rename(tmp, ptr), s"repoint failed: $tmp -> $ptr")
-    graft.streaming.Streaming.refreshListing(root)
+    graft.table.Commit.refreshListing(root)
     // retain exactly the superseded version for in-flight readers;
     // anything older can have no reader left (they resolved since the
     // previous repoint). First rebuild: nothing to retain or GC.
@@ -310,8 +310,8 @@ object AnnIndex {
       // small-file economics as the corpus write above
       snap.repartition(col("shard"))
         .write.mode("overwrite").partitionBy("shard").parquet(mapPath.toString)
-      graft.streaming.Streaming.refreshListing(mapPath.toString)
-      graft.streaming.Streaming.writeManifest(fs, mapPath.toString)
+      graft.table.Commit.refreshListing(mapPath.toString)
+      graft.table.Commit.writeManifest(fs, mapPath.toString)
     }
     fs.delete(idMapDirty(root, fs), false)
   }
@@ -360,7 +360,7 @@ object AnnIndex {
       .write.mode("overwrite").partitionBy("shard").parquet(stage.toString)
     // append-only commit: no replaced dirs — every previous entry
     // survives, the staged files join the manifest atomically
-    graft.streaming.Streaming.commitStage(fs, s"$root/idmap", Set.empty)
+    graft.table.Commit.commitStage(fs, s"$root/idmap", Set.empty)
   }
 
   /** Open a persisted index for serving: (centroids, corpus). By
@@ -383,8 +383,8 @@ object AnnIndex {
     // the layout and will heal); any other failure inside the leased
     // heal is real and must surface, not read as "live writer" (r13
     // advice, low)
-    try graft.streaming.Streaming.withWriterLease(fs, root) { heal(spark, root, fs) }
-    catch { case _: graft.streaming.Streaming.LeaseHeldException => () } // live writer: it heals
+    try graft.table.Commit.withWriterLease(fs, root) { heal(spark, root, fs) }
+    catch { case _: graft.table.Commit.LeaseHeldException => () } // live writer: it heals
     (graft.streaming.Streaming.readCommitted(spark, s"$root/centroids"),
       graft.streaming.Streaming.readCommitted(spark, s"$root/corpus"))
   }
@@ -400,14 +400,14 @@ object AnnIndex {
     */
   private def heal(spark: SparkSession, root: String,
       fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    graft.streaming.Streaming.recoverStage(fs, s"$root/corpus")
-    graft.streaming.Streaming.recoverStage(fs, s"$root/centroids")
+    graft.table.Commit.recoverStage(fs, s"$root/corpus")
+    graft.table.Commit.recoverStage(fs, s"$root/centroids")
     repairOrphanCells(spark, root)
     // sidecar consistency: a dirty sentinel (crash inside a mutation)
     // or a live corpus with no sidecar (pre-sidecar index) triggers
     // the wholesale rebuild — one corpus scan, after which [[delete]]
     // discovery is shard-pruned again
-    graft.streaming.Streaming.recoverStage(fs, s"$root/idmap")
+    graft.table.Commit.recoverStage(fs, s"$root/idmap")
     if (fs.exists(idMapDirty(root, fs)) ||
         (fs.exists(new org.apache.hadoop.fs.Path(s"$root/corpus")) &&
           !fs.exists(new org.apache.hadoop.fs.Path(s"$root/idmap"))))
@@ -490,7 +490,7 @@ object AnnIndex {
     * under unique names, the manifest is the reader-visible commit,
     * and the replaced files await the retention horizon, so a pinned
     * reader's centroid paths never move. Crash-atomic via the commit
-    * plan ([[graft.streaming.Streaming.recoverStage]] at every entry
+    * plan ([[graft.table.Commit.recoverStage]] at every entry
     * point). localCheckpoint severs the lineage from the table being
     * replaced (the update usually READS the current table).
     */
@@ -501,7 +501,7 @@ object AnnIndex {
     val snap = updated.localCheckpoint()
     fs.delete(stage, true)
     snap.write.mode("overwrite").parquet(stage.toString)
-    graft.streaming.Streaming.commitStage(fs, cPath, replacedDirs = Set(""))
+    graft.table.Commit.commitStage(fs, cPath, replacedDirs = Set(""))
   }
 
   /** Nearest-`nprobe` cell assignment of `vecs` ((id, e) with e
@@ -643,7 +643,7 @@ object AnnIndex {
     val fs = new org.apache.hadoop.fs.Path(rootSpec)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = resolveRoot(fs, rootSpec)
-    graft.streaming.Streaming.withWriterLease(fs, root) {
+    graft.table.Commit.withWriterLease(fs, root) {
     // entry healing: a crashed splitCell may have left a PLANNED
     // corpus commit half-executed — appending against that layout
     // would interleave this batch with the roll-forward. Heal FIRST
@@ -714,7 +714,7 @@ object AnnIndex {
       // partition x cell) — bounds append fragmentation at the source
       rows.repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(corpusStage.toString)
-      graft.streaming.Streaming.commitStage(fs, s"$root/corpus", Set.empty)
+      graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty)
       appendIdMap(rows.select(col("vec_id"), col("cell")), root)
     }
     base.count()
@@ -742,7 +742,7 @@ object AnnIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = resolveRoot(fs, rootSpec)
     val corpusPath = s"$root/corpus"
-    graft.streaming.Streaming.withWriterLease(fs, root) {
+    graft.table.Commit.withWriterLease(fs, root) {
       heal(spark, root, fs)
       if (!fs.exists(new org.apache.hadoop.fs.Path(corpusPath))) 0L
       else {
@@ -810,7 +810,7 @@ object AnnIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = resolveRoot(fs, rootSpec)
     val corpusPath = s"$root/corpus"
-    graft.streaming.Streaming.withWriterLease(fs, root) {
+    graft.table.Commit.withWriterLease(fs, root) {
       heal(spark, root, fs)
       val before = manifestFiles(fs, corpusPath, s"cell=$cell")
       if (before <= 1) (before, before)
@@ -822,7 +822,7 @@ object AnnIndex {
           .foreach { members =>
             members.coalesce(1)
               .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-            graft.streaming.Streaming.commitStage(fs, corpusPath, Set(s"cell=$cell"))
+            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"))
           }
         (before, manifestFiles(fs, corpusPath, s"cell=$cell"))
       }
@@ -857,7 +857,7 @@ object AnnIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = resolveRoot(fs, rootSpec)
     val corpusPath = s"$root/corpus"
-    graft.streaming.Streaming.withWriterLease(fs, root) {
+    graft.table.Commit.withWriterLease(fs, root) {
       heal(spark, root, fs)
       val centroids = graft.streaming.Streaming.readCommitted(spark, s"$root/centroids")
         .select(col("cell"), col("centroid"), col("n_build")).collect()
@@ -892,7 +892,7 @@ object AnnIndex {
             // adds land under cell=dst (whose existing entries survive);
             // cell=$cell's entries are replaced by nothing — the folded
             // cell leaves the manifest atomically with the commit
-            graft.streaming.Streaming.commitStage(fs, corpusPath, Set(s"cell=$cell"))
+            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"))
             upsertIdMap(moved.select(col("vec_id"), col("cell")), root)
           }
         }
@@ -914,7 +914,7 @@ object AnnIndex {
     * member is reassigned to the nearer sub-centroid, both sub-cells'
     * files are staged and committed under the immutable protocol (the
     * commit plan lands only after both staged dirs are fully written,
-    * so Streaming.recoverStage ROLLS an interrupted commit FORWARD;
+    * so Commit.recoverStage ROLLS an interrupted commit FORWARD;
     * the replaced cell's old files await the retention horizon for
     * pinned readers), and the k-row centroid table is rewritten with
     * the old row replaced and one row appended (new cell id = max + 1,
@@ -941,7 +941,7 @@ object AnnIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = resolveRoot(fs, rootSpec)
     val corpusPath = s"$root/corpus"
-    graft.streaming.Streaming.withWriterLease(fs, root) {
+    graft.table.Commit.withWriterLease(fs, root) {
     heal(spark, root, fs)
     val centroids = graft.streaming.Streaming.readCommitted(spark, s"$root/centroids")
     // pinned + dir-restricted: one cell's files, however large the
@@ -974,7 +974,7 @@ object AnnIndex {
       val stagedDirs = fs.listStatus(stage)
         .filter(_.isDirectory).map(_.getPath.getName).toSet
       withIdMapDirty(fs, root) {
-        graft.streaming.Streaming.commitStage(fs, corpusPath,
+        graft.table.Commit.commitStage(fs, corpusPath,
           stagedDirs + s"cell=$cell")
         // sidecar relabel for the moved half (the retained half keeps
         // its cell id — only newCell rows change assignment)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Streaming
-import graft.table.Snapshot
+import graft.table.{Commit, Snapshot}
 
 /** The persisted-storage protocol UNDER THE DuckDB GATE: where
   * SwapRecoverySpec/SnapshotIsolationSpec pin the crash windows and
@@ -343,7 +343,7 @@ object StorageQueries {
             .write.mode("overwrite").parquet(target)
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
-          Streaming.writeManifest(fs, target)
+          Commit.writeManifest(fs, target)
           Streaming.clusterTable(s, target, "zval", 16)
           val predicates = Seq[(String, Any, Any)](("x", 4L, 7L), ("y", 1L, 2L))
           val snap = Snapshot.latest(fs, target).get

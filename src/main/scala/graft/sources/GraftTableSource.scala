@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.streaming.Streaming
 import graft.table.Manifest.dirOf
-import graft.table.{FooterSchema, ManifestEntry, Snapshot}
+import graft.table.{Commit, FooterSchema, ManifestEntry, Snapshot}
 
 /** The TABLE-FORMAT connector over the graft manifest protocol (r16
   * judge #3: "the storage layer is invisible to Catalyst/SQL"):
@@ -238,7 +238,7 @@ class GraftTableSource extends RelationProvider
           case Some(snap) => snap.paths.map(dirOf).toSet + ""
           case None => Set.empty
         }
-      Streaming.commitStage(fs, target, replaced, stageName,
+      Commit.commitStage(fs, target, replaced, stageName,
         baseGen = Some(existing.getOrElse(0L)))
     }
 
@@ -464,7 +464,7 @@ class GraftFileIndex(
     val listing = Snapshot.list(fs, target)
     listing.at(pinnedGen.orElse(listing.latest).getOrElse(throw new IllegalArgumentException(
       s"no committed graft manifest at $target — not a graft table " +
-        "(write it with the Streaming verbs or Streaming.writeManifest first)")))
+        "(write it with the Streaming verbs or Commit.writeManifest first)")))
   }
 
   val generation: Long = snapshot.gen
@@ -874,7 +874,7 @@ private[sources] class GraftStreamSink(
         val writer = sized.write.mode("overwrite")
         (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
           .parquet(stage.toString)
-        Streaming.commitStage(fs, target, Set.empty, stageName,
+        Commit.commitStage(fs, target, Set.empty, stageName,
           baseGen = Some(listing.latest.getOrElse(0L)),
           tag = Some(tag), txn = Some((scope, batchId)))
     }

@@ -6,10 +6,12 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.table.{Bounds, ColumnStats, CommitHeader, FooterSchema, Listing, ManifestEntry,
-  ManifestLine, Snapshot, Tag}
+import graft.table.{Commit, FooterSchema, Listing, ManifestEntry, ManifestLine, Snapshot}
+import graft.table.Commit.{commitStage, listRel, recoverAbandonedStages, recoverStage,
+  refreshListing, tryCommitManifest, withWriterLease, CommitConflictException,
+  StageAbandonedMs}
 import graft.table.Manifest.dirOf
-import graft.table.Snapshot.{inParallel, manifestDir, ManifestKeep}
+import graft.table.Snapshot.{manifestDir, ManifestKeep}
 
 /** Structured Streaming surface.
   *
@@ -116,80 +118,6 @@ object Streaming {
       joinType
     ).select(col("click_id"), col("user_id"), col("click_ts"), col("view_id"), col("view_ts"))
   }
-
-  // ====================================================================
-  // Persisted-state mutation protocol: IMMUTABLE MANIFEST-SELECTED
-  // COMMITS (the Iceberg/Delta shape, r14 judge #1).
-  //
-  // Through round 14 the protocol swapped whole partition DIRECTORIES
-  // (stage renamed in, live twin renamed aside and retained one verb) —
-  // writer-crash-atomic, and manifest-pinned readers resolved each file
-  // live-or-aside. The residual race was structural: a pinned file's
-  // PATH MOVED during a swap, so a reader racing the rename between its
-  // resolve probe and the scan lost the file and had to retry
-  // (withSnapshotRetry) — retry-shaped tail latency under maintenance
-  // storms.
-  //
-  // Round 15 removes the channel entirely: a data file's path NEVER
-  // changes while any retained manifest generation references it.
-  //
-  //  - A mutation stages its new files OUTSIDE the table
-  //    (`target.__stage`), then records a COMMIT PLAN (the staged file
-  //    list + the dirs whose previous entries it replaces) atomically
-  //    at the stage root — the crash pivot: plan present = roll the
-  //    commit FORWARD; plan absent = the staged write died mid-job,
-  //    roll it back.
-  //  - Executing the commit MOVES each staged FILE into the live
-  //    directory tree under its staged (job-UUID-unique) name. Those
-  //    renames are invisible to every reader: no committed manifest
-  //    references the new names yet, and no existing file moves.
-  //  - The next manifest generation is committed by DELTA ARITHMETIC
-  //    (previous entries minus the replaced dirs' entries plus the
-  //    staged files) — never by re-listing a live directory, which now
-  //    legitimately holds older generations' files awaiting deletion.
-  //  - Replaced files are recorded as the generation's TOMBSTONES and
-  //    physically deleted only when that generation ages out of the
-  //    retention horizon (ManifestKeep generations) — so a reader
-  //    pinned to any retained generation scans paths that all still
-  //    exist, single-attempt, zero retries.
-  //
-  // Consequence (the documented cost of the shape): a PLAIN DIRECTORY
-  // READ of a maintained table is no longer the table — it would see
-  // retained older files alongside the live ones. Every read goes
-  // through [[readCommitted]] (which falls back to the directory read
-  // only for tables that have never been maintained by this module).
-  //
-  // Scale shape: a commit costs O(batch) file renames + one manifest
-  // write (entry-list text, linear in table file count — the known
-  // next shaving at extreme file counts is per-directory manifest
-  // splitting, the Iceberg manifest-list move) + O(aged tombstones)
-  // deletes. No O(table) listing anywhere on the mutation path. The
-  // renames and the per-file footer-stat reads are THREAD-POOLED
-  // (r15 judge #3): a wide commit's FS round-trips divide by the pool.
-  //
-  // Round 16 adds OPTIMISTIC MULTI-WRITER commits (r15 judge #2, the
-  // Delta/Iceberg concurrency model): the manifest-generation rename
-  // is a CAS, each commit plan records the generation its pinned read
-  // was based on (`B <gen>` — the transaction's snapshot version), and
-  // executeCommit checks STALENESS against it — a commit whose
-  // replaced dirs changed since its read aborts with
-  // CommitConflictException (the verb re-runs); a commit overtaken
-  // only on DISJOINT dirs rebases its delta and retries the CAS. Two
-  // writers on disjoint shards therefore commit concurrently with no
-  // lease and no lost update (upsertPartitionedOptimistic;
-  // ConcurrentCommitSpec; tools/ManifestScale's 2-writer storm:
-  // torn=0, residual=0, linear chain). The lease path remains the
-  // default for single-process pipelines — both paths share the same
-  // CAS commit, so mixing them cannot fork the chain.
-  //
-  // SCHEMA EVOLUTION (r15 judge #5): every commit records its added
-  // files' parquet-schema fingerprint in the manifest (`# schema`
-  // header; Snapshot.header) — drift detection with zero data I/O.
-  // A widening batch is refused by default and accepted under
-  // allowSchemaEvolution (touched shards rewrite widened, old rows
-  // null-padded); mixed-schema tables read via mergeSchema = true on
-  // readCommitted/readAddedBetween (SchemaEvolutionSpec).
-  // ====================================================================
 
   /** Incremental latest-wins upsert sink: merge each micro-batch into
     * a parquet target keyed by `keyCol`, keeping the row with the
@@ -502,996 +430,6 @@ object Streaming {
     }
   }
 
-  /** Name of the commit-plan file a writer drops at the stage root
-    * AFTER its staged write job returns — the recovery pivot, and the
-    * commit's full instruction set: the staged file list plus the dirs
-    * whose previous manifest entries this commit replaces. A stage
-    * carrying the plan is complete and rolls FORWARD (finish the file
-    * moves from the plan, commit the manifest delta); a stage without
-    * it is a write that died mid-job — garbage, rolled BACK. The plan
-    * is written to a temp name and renamed in, so a torn plan write
-    * reads as "no plan". Deliberately our own sentinel rather than
-    * Spark's _SUCCESS: committers can be configured markerless, and
-    * the protocol must not depend on a committer detail.
-    */
-  val StageCommitMarker = "__graft_stage_committed"
-
-  /** Recursive data-file listing under `p`, paths relative to it;
-    * `_`/`.`-prefixed names (markers, temp files, manifest dirs)
-    * skipped.
-    */
-  private def listRel(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[String] = {
-    def walk(cur: org.apache.hadoop.fs.Path, rel: String): Seq[String] =
-      if (!fs.exists(cur)) Nil
-      else fs.listStatus(cur).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("_") || name.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath, if (rel.isEmpty) name else s"$rel/$name")
-        else Seq(if (rel.isEmpty) name else s"$rel/$name")
-      }
-    walk(p, "")
-  }
-
-  /** Commit the staged write at `target<stageName>` under the
-    * immutable protocol: record the plan (atomic rename — the commit
-    * decision point), move the staged files into the live tree,
-    * advance the manifest by delta, age out tombstones. `replacedDirs`
-    * are the directory names (relative to the table root; "" = the
-    * root itself for flat layouts) whose PREVIOUS manifest entries
-    * this commit supersedes — an append-only commit passes Set.empty
-    * and the previous entries all survive. Crash-atomic end to end:
-    * before the plan lands a crash rolls back; after it,
-    * [[recoverStage]] rolls forward through every window (file moves
-    * are idempotent, the manifest delta is recomputed from the plan
-    * and skipped if already committed).
-    *
-    * `stageName` defaults to the shared `.__stage` used by the
-    * lease-serialized verbs; optimistic concurrent writers pass a
-    * per-writer unique suffix ([[upsertPartitionedOptimistic]]) so
-    * their stages never collide. The manifest advance itself is a CAS
-    * (see [[executeCommit]]) in both modes.
-    */
-  def commitStage(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      replacedDirs: Set[String],
-      stageName: String = ".__stage",
-      baseGen: Option[Long] = None,
-      tag: Option[String] = None,
-      txn: Option[(String, Long)] = None,
-      modifiedEntries: Seq[ManifestEntry] = Nil,
-      volatileDirs: Set[String] = Set.empty,
-      keyEnvelopes: Seq[(String, Char, String, String)] = Nil
-  ): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(target + stageName)
-    val files = listRel(fs, stage)
-    // `B <gen>`: the manifest generation the writer's pinned READ was
-    // based on — the transaction's snapshot version (the Delta shape).
-    // Staleness is checked against it in executeCommit: a commit
-    // touching dirs that CHANGED since the read must conflict even
-    // when its CAS rename wins uncontested (the racing writer may have
-    // committed long before our rename). Absent for lease-serialized
-    // verbs, whose lease spans read-to-commit.
-    val plan =
-      (baseGen.toSeq.map(g => s"B $g") ++
-        tag.toSeq.map(t => s"T $t") ++
-        txn.toSeq.map { case (s, i) => s"X $s $i" } ++
-        replacedDirs.toSeq.sorted.map(d => s"R $d") ++
-        volatileDirs.toSeq.sorted.map(d => s"V $d") ++
-        // `E <col>:<kind>:<lo>:<hi>` (URL-encoded like bounds tokens,
-        // or the `E *` wildcard): this plan's NOT-MATCHED decisions
-        // depend on NO live row existing with a key inside the
-        // envelope — a window commit ADDING an entry whose bounds
-        // intersect it (even in a brand-new dir the volatile set
-        // cannot name) must conflict (r18 judge #6).
-        keyEnvelopes.map {
-          case ("*", _, _, _) => "E *"
-          case (c, k, lo, hi) =>
-            def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-            s"E ${enc(c)}:$k:${enc(lo)}:${enc(hi)}"
-        } ++
-        modifiedEntries.sortBy(_.path).map(m => s"M ${m.encode}") ++
-        files.sorted.map(f => s"F $f"))
-        .mkString("\n")
-    val tmp = new org.apache.hadoop.fs.Path(stage, ".plan.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(plan.getBytes("UTF-8")) finally out.close()
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, StageCommitMarker))
-    executeCommit(fs, target, stage)
-  }
-
-  /** Thrown when an optimistic commit loses the manifest CAS to a
-    * concurrent commit whose changed directories OVERLAP this one's
-    * `replacedDirs` — the loser's pinned read is stale, so rebasing
-    * the manifest delta would silently drop the winner's rows. The
-    * caller must re-run its whole verb (re-read the now-current
-    * shards, re-merge, re-stage) — [[upsertPartitionedOptimistic]]
-    * does exactly that. Disjoint concurrent commits never see this:
-    * they REBASE (recompute the delta against the winner's generation)
-    * and retry the CAS, so two writers on disjoint shards both land.
-    */
-  final class CommitConflictException(msg: String) extends IllegalStateException(msg)
-
-  /** The roll-forward half shared by [[commitStage]] and
-    * [[recoverStage]]: execute the recorded plan. Idempotent at every
-    * crash window — a staged file already moved is skipped; a manifest
-    * generation already carrying the planned entry set is not
-    * re-committed.
-    *
-    * The manifest advance is a CAS loop: the delta is computed against
-    * the latest generation and committed by an atomic rename to
-    * `gen/inc-(latest+1)`; when a CONCURRENT writer wins that name,
-    * the loser inspects the winner's commit — changed directories
-    * DISJOINT from this plan's `replacedDirs` mean the plan is still
-    * valid and the delta is REBASED against the winner's generation;
-    * an overlap means this plan was computed from a stale read and a
-    * [[CommitConflictException]] aborts the commit (the plan's
-    * already-moved files — referenced by no manifest — are deleted, so
-    * the abort leaves no garbage and the verb can re-run cleanly).
-    * This is the Delta/Iceberg optimistic-concurrency shape: writers
-    * on disjoint shards commit in parallel with no lost update.
-    */
-  private def executeCommit(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      stage: org.apache.hadoop.fs.Path
-  ): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(stage, StageCommitMarker)
-    val planBytes = {
-      val len = fs.getFileStatus(marker).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(marker)
-      try in.readFully(buf) finally in.close()
-      new String(buf, "UTF-8")
-    }
-    val lines = planBytes.split("\n", -1).toSeq
-    val replacedDirs = lines.collect { case l if l.startsWith("R ") => l.substring(2) }.toSet
-    val files = lines.collect { case l if l.startsWith("F ") => l.substring(2) }
-    val baseGen = lines.collectFirst { case l if l.startsWith("B ") => l.substring(2).toLong }
-    val commitTagOpt = lines.collectFirst { case l if l.startsWith("T ") => l.substring(2) }
-    val commitTxnOpt = lines.collectFirst {
-      case l if l.startsWith("X ") => l.substring(2).split(' ')
-    }.collect { case Array(scope, id) => (scope, id.toLong) }
-    // `M <entry line>`: MODIFY an existing entry in place (a
-    // delete-vector retag riding in the same atomic commit as this
-    // plan's adds — the MERGE/updateWhere shape: update = DV-delete +
-    // re-insert in ONE generation). `V <dir>`: a dir whose LIVE ROWS
-    // this plan's position scan depends on without replacing its
-    // files — conflict-checked like a replaced dir (a racing rewrite
-    // invalidates the scanned positions), but its entries survive.
-    val modifiedByPath: Map[String, ManifestEntry] = lines.collect {
-      case l if l.startsWith("M ") =>
-        val e = ManifestEntry.decode(l.substring(2))
-        e.path -> e
-    }.toMap
-    val volatileDirs = lines.collect { case l if l.startsWith("V ") => l.substring(2) }.toSet
-    val keyEnvelopes: Seq[(String, Char, String, String)] = lines.collect {
-      case "E *" => ("*", '*', "", "")
-      case l if l.startsWith("E ") =>
-        def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-        l.substring(2).split(':') match {
-          case Array(c, k, lo, hi) if k.length == 1 => (dec(c), k.head, dec(lo), dec(hi))
-          case _ => throw new IllegalStateException(s"corrupt plan envelope line: $l")
-        }
-    }
-    val targetPath = new org.apache.hadoop.fs.Path(target)
-    if (!fs.exists(targetPath)) fs.mkdirs(targetPath)
-    // parent dirs first (serial — they dedupe to the touched-shard
-    // count), then the file renames thread-pooled: each is one atomic
-    // FS op with no cross-file ordering, so a 20k-file batch commits
-    // in O(files / pool) round-trips instead of 20k serial ones
-    files.map(f => new org.apache.hadoop.fs.Path(targetPath, f).getParent)
-      .distinct.foreach(p => if (!fs.exists(p)) fs.mkdirs(p))
-    inParallel(files) { f =>
-      val src = new org.apache.hadoop.fs.Path(stage, f)
-      if (fs.exists(src)) {
-        val dst = new org.apache.hadoop.fs.Path(targetPath, f)
-        // staged names are job-UUID-unique; an existing destination can
-        // only be our own interrupted move's completed twin — but the
-        // per-file rename is atomic, so src and dst never coexist
-        require(fs.rename(src, dst), s"commit move failed: $src -> $dst")
-      } // already moved by the interrupted run: skip
-    }
-    refreshListing(target)
-    // per-file row counts + schema fingerprints from the parquet
-    // footers of the files THIS commit added — O(batch) metadata reads
-    // (thread-pooled like the renames); counts make table/dir sizes a
-    // manifest lookup (Snapshot.dirRowCounts), the schema fingerprint
-    // becomes the generation's `# schema` header (drift detection for
-    // followers). Computed ONCE outside the CAS loop: the footer
-    // contents don't change on rebase.
-    lazy val addEntries = inParallel(files.sorted)(footerEntry(fs, targetPath, _))
-    lazy val commitSchema = addEntries.flatMap(_.schemaHash).headOption
-    // abort: remove this plan's already-moved files and the stage, so
-    // the verb's retry starts clean — but NEVER a file some RETAINED
-    // generation still references: a replay of a plan whose commit
-    // LANDED (crash between the manifest rename and the stage delete)
-    // must not tear the live table, and a plan superseded after
-    // landing must leave its files to the tombstone GC, which owns
-    // their retention-horizon lifecycle. The reference check loads
-    // only the touched dirs' entries per retained generation.
-    def abortConflict(detail: String): Nothing = {
-      val listing = Snapshot.list(fs, target)
-      val protectedPaths: Set[String] =
-        listing.gens.flatMap { g =>
-          try listing.at(g, Some(touchedDirs)).paths
-          catch { case _: IllegalStateException => Nil } // chain pruned mid-walk
-        }.toSet
-      files.filterNot(protectedPaths).foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(targetPath, f), false))
-      fs.delete(stage, true)
-      throw new CommitConflictException(
-        s"optimistic commit to $target conflicts with a concurrent commit: $detail — " +
-          "the staged merge read a stale generation; re-run the verb against the " +
-          "current one")
-    }
-    lazy val touchedDirs: Set[String] =
-      replacedDirs ++ volatileDirs ++ files.map(dirOf) ++
-        modifiedByPath.keysIterator.map(dirOf)
-    lazy val addsByDir: Map[String, Seq[ManifestEntry]] = addEntries.groupBy(_.dir)
-    var done = false
-    while (!done) {
-      val listing = Snapshot.list(fs, target)
-      val prevGen = listing.latest
-      // base entries of the TOUCHED dirs only, keyed by path with the
-      // full entries as values (carried stats stay verbatim). The
-      // manifest-list layout makes this O(touched), never the table's
-      // entry list — the last O(table) driver term of the protocol
-      // (r15 judge #3). Bootstrap is the exception: the first commit
-      // must seed a FULL checkpoint, so it keeps the live-tree listing
-      // (pre-manifest legacy files minus whatever of our adds already
-      // moved). Concurrent bootstrap is CAS-safe (r16 judge #8): both
-      // first-committers race the same gen-1 claim through
-      // atomicClaim; the loser loops, re-reads the winner's
-      // checkpoint, and rebases through the steady-state path. The
-      // winner's live-tree listing may have captured SOME of the
-      // loser's mid-move files as bare legacy lines — dedupeByPath
-      // below collapses those against the loser's own stats-bearing
-      // add lines, so no file is ever listed twice and no row lost
-      // (ConcurrentCommitSpec pins the two-writer fresh-table race).
-      val bootstrapAll: Option[Map[String, ManifestEntry]] = prevGen match {
-        case Some(_) => None
-        case None => Some((listRel(fs, targetPath).toSet -- files)
-          .map(p => p -> ManifestEntry.bare(p)).toMap)
-      }
-      val base: Option[Snapshot] = prevGen.map(listing.at(_, Some(touchedDirs)))
-      val baseTouched: Map[String, ManifestEntry] = bootstrapAll match {
-        case Some(all) => all.filter { case (p, _) => touchedDirs(dirOf(p)) }
-        case None => base.get.byPath
-      }
-      // one grouping pass over the touched base, reused by the post
-      // state and the replay check (not a rescan per dir)
-      val baseEntriesByDir: Map[String, Seq[ManifestEntry]] = baseTouched.toSeq
-        .groupBy { case (p, _) => dirOf(p) }
-        .map { case (d, xs) => d -> xs.map(_._2) }
-      // post-commit entries per touched dir: a replaced dir keeps
-      // only this commit's adds; any other touched dir appends them
-      val postTouched: Map[String, Seq[ManifestEntry]] = touchedDirs.iterator.map { d =>
-        val kept =
-          if (replacedDirs(d)) Seq.empty
-          else baseEntriesByDir.getOrElse(d, Seq.empty)
-            // in-place modifications (DV retags riding with this plan)
-            .map(l => modifiedByPath.getOrElse(l.path, l))
-        d -> dedupeByPath(kept ++ addsByDir.getOrElse(d, Seq.empty)).sortBy(_.path)
-      }.toMap
-      // ALREADY COMMITTED (an interrupted commit's replay): every
-      // touched dir carries exactly its planned post state — untouched
-      // dirs are unchanged by construction. Full-ENTRY comparison, not
-      // path sets: a plan whose only effect is an in-place DV retag
-      // changes no path set, and a path-only test would read its replay
-      // as "already landed" before it ever committed. (Entry equality
-      // is deterministic: footer stats re-read from the same files
-      // give the same entries the landed commit recorded.) This MUST run
-      // before the staleness scan: a crash between the manifest rename
-      // and the stage delete leaves a plan whose own commit sits inside
-      // the (baseGen, latest] window, and scanning first would read the
-      // replay as a conflict and abort a commit that already LANDED.
-      val already = prevGen.isDefined && touchedDirs.forall { d =>
-        baseEntriesByDir.getOrElse(d, Seq.empty).sortBy(_.path) == postTouched(d)
-      }
-      if (already) done = true
-      else {
-        // STALENESS check (the conflict detection): scan the recorded
-        // delta lines of every generation between the snapshot the
-        // writer's read was based on (`B <gen>` in the plan) and the
-        // current latest — each O(its batch). Any dir in our
-        // replacedDirs touched in that window means our staged merge
-        // would silently drop the interloper's rows — conflict,
-        // whether or not our CAS rename would win (a
-        // rename-collision-only check misses every writer whose
-        // read-to-commit window fully contains another's commit). A
-        // window that cannot be scanned exactly — a pruned generation,
-        // a legacy flat checkpoint, a `# rebuild` — can no longer
-        // prove disjointness and conflicts conservatively.
-        baseGen.filter(bg => prevGen.exists(_ > bg)).foreach { bg =>
-          listing.changedDirs(bg, prevGen.get) match {
-            case None =>
-              abortConflict(s"the window (gen $bg, gen ${prevGen.get}] of $target cannot " +
-                "be scanned for conflicts (pruned, legacy, or rebuilt in between)")
-            case Some(ch) =>
-              // volatile dirs conflict like replaced ones: a plan whose
-              // position scan (DV retag) read them is stale if they
-              // changed, even though it replaces none of their files
-              val overlap = ch.intersect(replacedDirs ++ volatileDirs)
-              if (overlap.nonEmpty)
-                abortConflict(s"directories ${overlap.take(5).mkString(", ")} changed " +
-                  s"between read generation $bg and current ${prevGen.get}")
-          }
-          // KEY-ENVELOPE conflicts (r18 judge #6): the plan's
-          // not-matched decisions assumed no live row holds a key
-          // inside the envelope beyond what it scanned. A window
-          // commit ADDING an entry whose bounds intersect it — in a
-          // brand-new directory the volatile set cannot name, or a
-          // pruned-out one — invalidates that assumption; dir
-          // granularity cannot see it, so the adds are checked
-          // value-level against their recorded zone bounds. An add
-          // with no bounds for an envelope column cannot prove
-          // disjointness and conflicts conservatively; the `*`
-          // wildcard (an un-pruned merge with an insert clause)
-          // conflicts on any add outside the already-checked dirs.
-          if (keyEnvelopes.nonEmpty) {
-            val windowAdds: Option[Seq[ManifestEntry]] =
-              ((bg + 1) to prevGen.get).foldLeft(Option(Seq.empty[ManifestEntry])) {
-                (acc, g) =>
-                  for (a <- acc; d <- listing.changes(g))
-                    yield a ++ d.collect { case ManifestLine.Add(e) => e }
-              }
-            windowAdds match {
-              case None =>
-                abortConflict(s"the window (gen $bg, gen ${prevGen.get}] of $target " +
-                  "cannot be scanned for key-envelope conflicts")
-              case Some(adds) =>
-                val wildcard = keyEnvelopes.exists(_._1 == "*")
-                val typed = keyEnvelopes.filterNot(_._1 == "*")
-                val hit = adds.find { l =>
-                  if (wildcard) !(replacedDirs ++ volatileDirs)(l.dir)
-                  else {
-                    typed.forall { case (c, k, lo, hi) =>
-                      l.bounds.range(c) match {
-                        case None => true // unprovable: conservative
-                        case Some((bk, mn, mx)) =>
-                          bk != k || Snapshot.overlapsRendered(k, mn, mx, lo, hi)
-                      }
-                    }
-                  }
-                }
-                hit.foreach(l => abortConflict(
-                  s"a concurrent commit added ${l.path} whose bounds " +
-                    "intersect this merge's key envelope — the staged " +
-                    "not-matched decisions are stale"))
-            }
-          }
-        }
-        val tombstones =
-          baseTouched.keySet.filter(p => replacedDirs(dirOf(p))) -- files
-        val gen = prevGen.getOrElse(0L) + 1
-        // bootstrap's first checkpoint must cover every dir, legacy
-        // files included; steady state passes the touched dirs only
-        val postState: Map[String, Seq[ManifestEntry]] = bootstrapAll match {
-          case Some(all) =>
-            val keptAll = all.collect {
-              case (p, l) if !replacedDirs(dirOf(p)) => l
-            }.toSeq
-            (keptAll ++ addEntries).groupBy(_.dir)
-              .map { case (d, ls) => d -> dedupeByPath(ls).sortBy(_.path) }
-          case None => postTouched
-        }
-        if (tryCommitManifest(fs, listing, gen, postState,
-            tombstones.toSeq.sorted, addEntries, schemaHash = commitSchema,
-            tag = commitTagOpt, txn = commitTxnOpt,
-            modified = modifiedByPath.values.toSeq.sortBy(_.path))) done = true
-        // else: lost the CAS to a concurrent commit at `gen` — loop.
-        // The staleness check above re-runs against the new latest
-        // (baseGen is fixed), so an overlapping winner aborts and a
-        // disjoint one REBASES: the delta is recomputed against its
-        // generation and the CAS retried at gen+1. Lease-serialized
-        // plans (no `B` line) can only lose to writeManifest-style
-        // bootstraps and rebase unconditionally, as before.
-      }
-    }
-    fs.delete(stage, true)
-  }
-
-  /** Collapse duplicate entries for the same file path, keeping the
-    * most informative one (a stats-bearing entry encodes strictly longer
-    * than a bare legacy `path` one). The only legitimate source of
-    * duplicates is the concurrent-bootstrap window: a racing
-    * first-committer's live-tree listing captures another writer's
-    * mid-move files as bare entries, and that writer's own rebase then
-    * re-adds them with footer stats.
-    */
-  private def dedupeByPath(entries: Seq[ManifestEntry]): Seq[ManifestEntry] =
-    if (entries.lengthCompare(entries.iterator.map(_.path).toSet.size) == 0) entries
-    else entries.groupBy(_.path).valuesIterator.map(_.maxBy(_.encode.length)).toSeq
-
-  /** The manifest entry of the committed file `rel` under `root`: row
-    * count, zone-map bounds and the file's OWN schema fingerprint (an
-    * `sh:` tag) from its parquet FOOTER — one metadata read, no data
-    * pages. An unreadable/non-parquet file gets a bare stat-less entry
-    * (consumers treat stats as optional). The per-entry fingerprint
-    * lets a reader detect a mixed-schema generation from metadata alone
-    * and switch to a merged inference (r17 advice, low: the per-commit
-    * `# schema` header records only each commit's fingerprint). The
-    * bounds are the entry's ZONE MAP (the Iceberg/Delta file-skipping
-    * stats): min/max over the file's row groups for every top-level
-    * long / double / string column whose chunk statistics are complete
-    * — [[readCommittedRange]] prunes files against them before Spark
-    * ever lists a path.
-    */
-  private def footerEntry(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      rel: String
-  ): ManifestEntry =
-    try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(root, rel), fs.getConf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try ManifestEntry(rel, Some(r.getRecordCount), columnBoundsOf(r),
-        Seq(Tag.SchemaHash(f"${scala.util.hashing.MurmurHash3.stringHash(
-          r.getFooter.getFileMetaData.getSchema.toString)}%08x")))
-      finally r.close()
-    } catch {
-      case scala.util.control.NonFatal(_) => ManifestEntry.bare(rel)
-    }
-
-  /** Longest string bound recorded in a manifest entry — longer values
-    * simply drop that column's zone map for the file (the file is then
-    * never pruned on it; correctness needs no upper-bound adjustment
-    * trick because an unbounded column is always kept).
-    */
-  private val MaxStringBound = 64
-
-  /** The file's per-column bounds — kind `l` (integral), `d`
-    * (floating), `s` (UTF-8 string). A column is recorded only when EVERY
-    * row group carries usable statistics for it (a single stats-less
-    * chunk makes the file unboundable on that column — it must never
-    * be pruned). All-null chunks contribute no values; nulls never
-    * satisfy a range predicate, so bounds over non-null values prune
-    * soundly.
-    */
-  private def columnBoundsOf(r: org.apache.parquet.hadoop.ParquetFileReader): Bounds = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val blocks = r.getFooter.getBlocks.asScala
-    if (blocks.isEmpty) return Bounds.of(Nil)
-    // name -> (kind, Option(min, max), Option(nullCount)); removed
-    // (and blacklisted) on any unusable chunk. A column with a null
-    // count but NO values (all rows null) is still recorded — as a
-    // `z` token carrying only the count — so IS NULL predicates can
-    // prune and Snapshot.minMax can tell all-null from unrecordable.
-    val bounds = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Char, Option[(Any, Any)], Option[Long])]
-    val bad = scala.collection.mutable.Set.empty[String]
-    for (b <- blocks; c <- b.getColumns.asScala) {
-      val path = c.getPath.toArray
-      if (path.length == 1 && !bad(path(0))) {
-        val name = path(0)
-        val pt = c.getPrimitiveType
-        val lta = pt.getLogicalTypeAnnotation
-        val kind: Option[Char] = pt.getPrimitiveTypeName match {
-          // UNSIGNED int annotations are excluded: parquet orders their
-          // statistics unsigned, and sign-extending uint32 max
-          // 4294967295 to long -1 would record inverted bounds that
-          // prune files holding matching rows
-          case INT32 | INT64
-              if lta == null || (lta match {
-                case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-                case _ => false
-              }) =>
-            Some('l')
-          case FLOAT | DOUBLE => Some('d')
-          case BINARY if lta.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-            Some('s')
-          case _ => None // dates/timestamps/decimals/nested: no zone map
-        }
-        def drop(): Unit = { bad += name; bounds.remove(name) }
-        kind match {
-          case None => drop()
-          case Some(k) =>
-            val st = c.getStatistics
-            if (st == null || st.isEmpty) drop()
-            else {
-            // per-chunk null count, summed when every chunk records
-            // one; a single chunk without it makes the file's null
-            // count unknowable (None) but leaves the value bounds
-            val chunkNulls: Option[Long] =
-              if (st.isNumNullsSet) Some(st.getNumNulls) else None
-            def mergeNulls(cur: Option[Long]): Option[Long] =
-              for (a <- cur; b <- chunkNulls) yield a + b
-            if (!st.hasNonNullValue) {
-              // all-null chunk: no values, only the null count
-              bounds.get(name) match {
-                case None => bounds(name) = (k, None, chunkNulls)
-                case Some((kk, b0, n0)) => bounds(name) = (kk, b0, mergeNulls(n0))
-              }
-            } else {
-              // Option, NOT null-into-a-destructure: assigning null to
-              // `val (mn, mx)` throws a MatchError that footerEntry's
-              // catch-all swallows, silently costing the WHOLE entry
-              // its row count and every other column's bounds (ADVICE
-              // r16). None drops only THIS column's zone map.
-              val mnmx: Option[(Any, Any)] = k match {
-                case 'l' => Some((st.genericGetMin.asInstanceOf[Number].longValue,
-                  st.genericGetMax.asInstanceOf[Number].longValue))
-                case 'd' => Some((st.genericGetMin.asInstanceOf[Number].doubleValue,
-                  st.genericGetMax.asInstanceOf[Number].doubleValue))
-                case _ =>
-                  val lo = st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                    .toStringUsingUTF8
-                  val hi = st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                    .toStringUsingUTF8
-                  if (lo.length > MaxStringBound || hi.length > MaxStringBound) None
-                  else Some((lo, hi))
-              }
-              mnmx match {
-                case None => drop()
-                case Some((mn, mx)) => bounds.get(name) match {
-                  case None => bounds(name) = (k, Some((mn, mx)), chunkNulls)
-                  case Some((_, None, n0)) =>
-                    bounds(name) = (k, Some((mn, mx)), mergeNulls(n0))
-                  case Some((_, Some((curLo, curHi)), n0)) =>
-                    bounds(name) = (k,
-                      Some((
-                        if (boundLt(k, mn, curLo)) mn else curLo,
-                        if (boundLt(k, curHi, mx)) mx else curHi)),
-                      mergeNulls(n0))
-                }
-              }
-            }
-            }
-        }
-      } else if (path.length != 1) () // nested: never recorded
-    }
-    // cap the recorded columns (schema order): a 500-column table must
-    // not turn its manifest into a stats dump — the leading columns
-    // are where keys and cluster dimensions live by convention. A
-    // column is recorded with bounds (and its null count when known),
-    // or as all-null `z` with its count only; with neither it is
-    // omitted.
-    Bounds.of(bounds.take(MaxBoundColumns).toSeq.flatMap {
-      case (n, (k, Some((lo, hi)), nc)) => Some(n -> ColumnStats(k, lo.toString, hi.toString, nc))
-      case (n, (_, None, Some(c))) => Some(n -> ColumnStats('z', "", "", Some(c)))
-      case _ => None
-    })
-  }
-
-  /** Most columns recorded per entry's zone map (schema order). */
-  private val MaxBoundColumns = 16
-
-  private def boundLt(kind: Char, a: Any, b: Any): Boolean = kind match {
-    case 'l' => a.asInstanceOf[Long] < b.asInstanceOf[Long]
-    case 'd' => a.asInstanceOf[Double] < b.asInstanceOf[Double]
-    case _ => Snapshot.utf8Lt(a.asInstanceOf[String], b.asInstanceOf[String])
-  }
-
-  /** Heal an interrupted commit at `target`: a stage carrying the plan
-    * rolls FORWARD (the staged files are complete — finish the moves
-    * and the manifest delta); a stage without it is a write that died
-    * mid-job — garbage, rolled BACK. Live data and committed manifests
-    * are untouched in both branches, so readers never notice. Every
-    * mutation verb (and AnnIndex's lease-holding open) runs this first.
-    */
-  def recoverStage(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(target + ".__stage")
-    if (fs.exists(new org.apache.hadoop.fs.Path(stage, StageCommitMarker)))
-      try executeCommit(fs, target, stage)
-      catch {
-        // the crashed writer's plan now conflicts with commits that
-        // landed since: executeCommit already aborted it cleanly
-        // (moved files + stage deleted). The batch is NOT lost — the
-        // source's redelivery contract re-runs the verb against the
-        // current generation.
-        case _: CommitConflictException => ()
-      }
-    else fs.delete(stage, true)
-  }
-
-  /** A per-writer optimistic stage (`<target>.__stage-<token>`) is
-    * presumed ABANDONED — its writer crashed — once this old; younger
-    * ones may belong to a live concurrent writer and are left alone.
-    * Mirrors the writer-lease TTL.
-    */
-  val StageAbandonedMs: Long = 15 * 60 * 1000L
-
-  /** Sweep ABANDONED per-writer optimistic stages of `target`: a
-    * plan-bearing stale stage rolls FORWARD (its staged write
-    * completed — commit it, unless the table has moved under it, in
-    * which case the conflict aborts it cleanly); a plan-less stale
-    * stage is a write that died mid-job and rolls BACK. Stages younger
-    * than [[StageAbandonedMs]] are untouched — they may belong to a
-    * LIVE writer, and racing its own roll-forward would double-execute
-    * the plan. The shared `.__stage` is [[recoverStage]]'s business
-    * (its lease guarantees no live owner).
-    */
-  def recoverAbandonedStages(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
-    val t = new org.apache.hadoop.fs.Path(target)
-    val parent = t.getParent
-    if (parent == null || !fs.exists(parent)) return
-    val prefix = t.getName + ".__stage-"
-    val now = System.currentTimeMillis()
-    fs.listStatus(parent).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(prefix) &&
-          now - st.getModificationTime > StageAbandonedMs) {
-        val stage = st.getPath
-        if (fs.exists(new org.apache.hadoop.fs.Path(stage, StageCommitMarker)))
-          try executeCommit(fs, target, stage)
-          catch { case _: CommitConflictException => () } // aborted cleanly
-        else fs.delete(stage, true)
-      }
-    }
-  }
-
-  /** Direct-FS renames bypass Spark's session-wide file-status cache
-    * (DataFrameWriter invalidates it for paths IT writes; a commit's
-    * file moves do not), so a reader planning against the new layout
-    * could still hold a stale listing. Every layout mutation ends with
-    * this invalidation.
-    */
-  def refreshListing(target: String): Unit =
-    try org.apache.spark.sql.SparkSession.active.catalog.refreshByPath(target)
-    catch { case scala.util.control.NonFatal(_) => () } // no active session: nothing cached
-
-  // ------------------------------------------------------------------
-  // Committed manifests — the reader-visible commit point. Every
-  // completed mutation commits a MANIFEST GENERATION
-  // (`<root>.__manifests/gen-N`: the table's relative data-file list,
-  // written to a temp name and RENAMED in); readers resolve the latest
-  // generation instead of listing the directory. Under the immutable
-  // protocol the pinned paths never move, so a pinned read is
-  // single-attempt for as long as its generation stays inside the
-  // retention horizon (ManifestKeep generations; overrun fails loudly,
-  // never partially). The one non-isolated verb left is the in-place
-  // wholesale rebuild (AnnIndex.writeIndex / rebuildIdMap overwrite) —
-  // production rebuilds write a new root and repoint.
-  // ------------------------------------------------------------------
-
-  /** A full manifest CHECKPOINT is written every CheckpointEvery
-    * generations; the generations between carry only their DELTA
-    * (`inc-N`: the `+`/`-` lines vs generation N-1). Commit-side
-    * manifest I/O is therefore O(batch) on most commits and O(table
-    * entry list) only at the checkpoint cadence — the Delta-log shape,
-    * which is what keeps the commit path batch-proportional when the
-    * table holds millions of files. Readers reconstruct a generation
-    * from the nearest checkpoint at or below it (≤ CheckpointEvery
-    * small delta reads).
-    */
-  val CheckpointEvery = 8L
-
-  /** Attempt to commit manifest generation `gen` — the CAS half of
-    * the optimistic protocol. Writes generation `gen`'s tombstone file
-    * first (`del-N-<token>`: the files this generation REPLACED,
-    * physically deleted when the generation is pruned — by then no
-    * retained manifest can reference them; the per-writer token keeps
-    * two racers' del writes from colliding, and a LOSER deletes its
-    * own), then commits the generation itself: a CHECKPOINT (`gen-N`)
-    * at the checkpoint cadence or when no checkpoint exists yet,
-    * otherwise the delta (`inc-N`). The rename of the gen/inc file is
-    * both the reader-visible commit point AND the CAS:
-    * rename-to-existing fails atomically on HDFS and the local FS
-    * alike, so of N writers proposing generation `gen` exactly one
-    * wins. Returns true on the win; false means another writer
-    * committed `gen` first and the caller must rebase (its own del
-    * file, tmp, and freshly-written per-dir manifests are cleaned up
-    * here). A rename that fails with the destination ABSENT is a real
-    * FS fault and throws (r15 advice, medium — a silent failure here
-    * would strand the batch's files unlisted by any manifest).
-    *
-    * CHECKPOINTS ARE MANIFEST LISTS (the Iceberg manifest-list shape;
-    * r15 judge #3's residual O(table) term): a checkpoint is a list of
-    * `@ <dir>\t<m-file>` references to immutable PER-DIRECTORY
-    * manifest files (`m-<gen>-<token>-<i>`, each holding one dir's
-    * entry lines). Directories untouched since the previous checkpoint
-    * REUSE its references verbatim — the checkpoint writes O(dirs
-    * touched in the window) per-dir manifests plus O(#dirs) ref lines,
-    * never the table's full entry list, and commit-side driver memory
-    * is O(touched) at every cadence. Checkpoints ALSO carry their own
-    * commit's `+`/`-` delta lines, so conflict scans (the staleness
-    * check in executeCommit) stay exact across checkpoint generations.
-    * `postState` maps each TOUCHED dir to its full post-commit entry
-    * lines — for a forced checkpoint (bootstrap / wholesale rebuild,
-    * which has no delta basis) it must cover every dir, and the file
-    * records `# rebuild` so a conflict scan crossing it refuses
-    * conservatively instead of reading "nothing changed".
-    *
-    * One residual dual-name window: a `forceCheckpoint` commit racing
-    * a regular delta at the same generation could land `gen-N` beside
-    * `inc-N` since the names differ. The post-rename twin check closes
-    * it: whoever SEES the other's twin deletes its own file and loses
-    * (both-lose is safe — the listing max stays N-1 and both
-    * re-propose N).
-    */
-  private def tryCommitManifest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      listing: Listing,
-      gen: Long,
-      postState: Map[String, Seq[ManifestEntry]],
-      tombstones: Seq[String],
-      adds: Seq[ManifestEntry],
-      forceCheckpoint: Boolean = false,
-      schemaHash: Option[String] = None,
-      modified: Seq[ManifestEntry] = Nil,
-      tag: Option[String] = None,
-      txn: Option[(String, Long)] = None
-  ): Boolean = {
-    val target = listing.target
-    val mdir = manifestDir(target)
-    if (listing.files.isEmpty) fs.mkdirs(mdir)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val delPath = new org.apache.hadoop.fs.Path(mdir, f"del-$gen%012d-$token")
-    if (tombstones.nonEmpty) {
-      val dtmp = new org.apache.hadoop.fs.Path(mdir, s".del-$gen.tmp-$token")
-      writeLines(fs, dtmp, tombstones)
-      // a failed del rename must abort BEFORE the generation commits:
-      // a committed generation with lost tombstones would leak its
-      // replaced files forever (r15 advice, medium)
-      require(fs.rename(dtmp, delPath),
-        s"tombstone-file rename failed for generation $gen of $target")
-    }
-    val checkpoint = forceCheckpoint ||
-      listing.checkpoints.isEmpty || gen % CheckpointEvery == 0
-    // `# schema <hash>`: the fingerprint of the schema THIS commit's
-    // added files carry (parquet-footer MessageType) — header comment,
-    // skipped by the entry parsers, surfaced by [[Snapshot.header]]
-    // so a follower detects a widened column landing mid-table without
-    // any data read
-    // `# tag <t>`: an idempotency token riding INSIDE the atomic
-    // commit (the streaming sink's exactly-once hinge — a marker file
-    // updated after the commit leaves a redelivery window; a token in
-    // the manifest cannot be separated from the data it covers)
-    // `# txn <scope> <id>`: PER-SCOPE transaction high-water marks
-    // (the Delta SetTransaction shape; r17 advice, medium). Unlike a
-    // `# tag` — which lives and dies with its own commit and is
-    // therefore prunable by ManifestKeep intervening maintenance
-    // commits — txn lines are CARRIED FORWARD by EVERY commit (this
-    // is the single choke point all verbs commit through), so the
-    // newest retained manifest always answers "was sink batch N of
-    // scope S already applied?" no matter how many compaction/bloom
-    // autopilot commits landed since. O(#active sink scopes) header
-    // lines per commit; one small header read of gen-1 to inherit.
-    val inheritedTxns: Map[String, Long] = listing.header(gen - 1).txns
-    val txns: Map[String, Long] = txn match {
-      case None => inheritedTxns
-      case Some((scope, id)) =>
-        inheritedTxns.updated(scope, math.max(id, inheritedTxns.getOrElse(scope, Long.MinValue)))
-    }
-    val header = CommitHeader(schemaHash, tag, txns, rebuild = forceCheckpoint).lines
-    // `~` = entry modified in place (a delete-vector tag): the full
-    // new entry line rides in the delta so chains reconstruct and
-    // conflict scans see the dir changed without any file add
-    val delta = tombstones.map(ManifestLine.Remove) ++ adds.map(ManifestLine.Add) ++
-      modified.map(ManifestLine.Modify)
-    // per-dir manifests written by THIS attempt — deleted on a lost CAS
-    val written = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    val (name, twinName, body) =
-      if (checkpoint) (Snapshot.checkpointName(gen), Snapshot.deltaName(gen),
-        header ++ checkpointRefLines(fs, listing, gen, postState, token, written) ++ delta)
-      else (Snapshot.deltaName(gen), Snapshot.checkpointName(gen), header ++ delta)
-    val tmp = new org.apache.hadoop.fs.Path(mdir, s".$name.tmp-$token")
-    writeLines(fs, tmp, body.map(_.encode))
-    val dst = new org.apache.hadoop.fs.Path(mdir, name)
-    val twin = new org.apache.hadoop.fs.Path(mdir, twinName)
-    def lose(): Boolean = {
-      fs.delete(tmp, false)
-      if (tombstones.nonEmpty) fs.delete(delPath, false)
-      written.foreach(p => fs.delete(p, false))
-      false
-    }
-    if (!atomicClaim(fs, tmp, dst)) {
-      // CAS lost — unless the destination is absent, which makes this
-      // a real FS fault that must abort loudly, not rebase forever
-      if (!fs.exists(dst)) throw new IllegalStateException(
-        s"manifest commit rename failed for generation $gen of $target with no " +
-          "competing commit present — the staged batch is NOT committed; " +
-          "rerun the verb (recoverStage rolls it forward)")
-      lose()
-    } else if (fs.exists(twin)) {
-      // dual-name window: the other prefix landed too — whoever sees
-      // the twin withdraws (see scaladoc)
-      fs.delete(dst, false)
-      lose()
-    } else {
-      pruneManifests(fs, target, gen)
-      true
-    }
-  }
-
-  /** Build a checkpoint's `@ dir\tm-file` reference lines: reuse the
-    * previous checkpoint's reference for every directory untouched
-    * since it, write a fresh per-dir manifest for the dirty ones. The
-    * dirty set is the union of the intervening deltas' touched dirs
-    * (each O(its batch) to scan) plus this commit's own; a previous
-    * checkpoint in LEGACY flat format, or an unscannable window, falls
-    * back to rewriting every dir from the reconstructed current state
-    * — the one-time migration cost of an old-format table.
-    */
-  private def checkpointRefLines(
-      fs: org.apache.hadoop.fs.FileSystem,
-      listing: Listing,
-      gen: Long,
-      postState: Map[String, Seq[ManifestEntry]],
-      token: String,
-      written: scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]
-  ): Seq[ManifestLine.Ref] = {
-    val mdir = manifestDir(listing.target)
-    // write the dirty dirs' per-dir manifests on the commit pool: each
-    // is an independent create of a uniquely-named file (no rename
-    // dance; a crashed or losing attempt's orphan is swept by
-    // pruneManifests once its generation ages past the horizon) — a
-    // 500-dir bootstrap writes them in O(dirs / threads), not serially
-    def writeDirManifests(
-        dirty: Seq[(String, Seq[ManifestEntry])]): Seq[ManifestLine.Ref] = {
-      val named = dirty.filter(_._2.nonEmpty).sortBy(_._1).zipWithIndex
-        .map { case ((d, es), i) => (d, es, f"m-$gen%012d-$token-$i") }
-      named.foreach { case (_, _, n) =>
-        written += new org.apache.hadoop.fs.Path(mdir, n)
-      }
-      inParallel(named) { case (d, es, n) =>
-        writeLines(fs, new org.apache.hadoop.fs.Path(mdir, n), es.sortBy(_.path).map(_.encode))
-        ManifestLine.Ref(d, n)
-      }
-    }
-    listing.checkpoints.filter(_ < gen).lastOption match {
-      case None => // first checkpoint: postState covers the whole table
-        writeDirManifests(postState.toSeq)
-      case Some(pc) =>
-        // dirs whose state changed in (pc, gen): the intervening deltas'
-        // dirs (None = unscannable) plus this commit's touched dirs
-        (listing.checkpointRefs(pc), listing.changedDirs(pc, gen - 1)) match {
-          case (Right(prevRefs), Some(between)) =>
-            val dirty = between ++ postState.keySet
-            val clean = prevRefs.filterNot(r => dirty(r.dir))
-            // dirty-but-untouched dirs keep their current (gen-1) state
-            val untouched = dirty -- postState.keySet
-            val recon: Map[String, Seq[ManifestEntry]] =
-              if (untouched.isEmpty) Map.empty
-              else listing.at(gen - 1, Some(untouched)).entries.groupBy(_.dir)
-            (clean ++ writeDirManifests((postState ++ recon).toSeq)).sortBy(_.dir)
-          case _ =>
-            // legacy flat previous checkpoint (or pruned window): one
-            // full rewrite, after which the table is on the new format
-            val all = listing.at(gen - 1).entries.groupBy(_.dir)
-            writeDirManifests(((all -- postState.keySet) ++ postState).toSeq)
-        }
-    }
-  }
-
-  /** A pluggable atomic-claim coordinator for stores whose rename is
-    * NOT an atomic fail-if-exists operation (the Delta LogStore
-    * shape). `claim` must publish `tmp`'s complete content at `dst`
-    * IFF `dst` does not exist, atomically: of N concurrent claimants
-    * exactly one returns true, and a reader of `dst` never sees a
-    * loser's or a torn write. Typical S3 implementations route the
-    * existence check through a conditional-put coordinator (DynamoDB
-    * conditional write, S3 If-None-Match) rather than the store's
-    * rename.
-    */
-  trait ClaimPrimitive {
-    def claim(
-        fs: org.apache.hadoop.fs.FileSystem,
-        tmp: org.apache.hadoop.fs.Path,
-        dst: org.apache.hadoop.fs.Path): Boolean
-  }
-
-  private val claimPrimitives =
-    new java.util.concurrent.ConcurrentHashMap[String, ClaimPrimitive]()
-
-  /** Register the claim coordinator for a URI scheme (e.g. "s3a").
-    * Commits to that scheme refuse loudly until one is registered —
-    * see [[atomicClaim]] for why silence would be a lost update.
-    */
-  def registerClaimPrimitive(scheme: String, p: ClaimPrimitive): Unit =
-    claimPrimitives.put(scheme.toLowerCase(java.util.Locale.ROOT), p)
-
-  def unregisterClaimPrimitive(scheme: String): Unit =
-    claimPrimitives.remove(scheme.toLowerCase(java.util.Locale.ROOT))
-
-  /** Schemes whose `FileSystem.rename` refuses an existing destination
-    * ATOMICALLY (a single metadata-service operation checks existence
-    * and links the new name under one lock): HDFS and its federated /
-    * REST faces, Azure ABFS (rename is an atomic blob-service
-    * operation on hierarchical namespaces), and Ozone's o3fs/ofs. An
-    * EXPLICIT allowlist, not a default: S3A's "rename" is a
-    * client-side HEAD existence check followed by copy+delete — the
-    * exact check-then-act TOCTOU the local filesystem had (see below)
-    * — and a commit protocol that silently used it would lose updates
-    * under writer concurrency on the most common 100-TB substrate.
-    */
-  private val AtomicRenameSchemes: Set[String] =
-    Set("hdfs", "viewfs", "webhdfs", "swebhdfs", "hopsfs", "abfs", "abfss", "o3fs", "ofs")
-
-  /** The manifest CAS primitive: publish `tmp` (fully written) at
-    * `dst` IFF `dst` does not exist, atomically — of N concurrent
-    * claimants exactly one wins and the losers' content never
-    * replaces the winner's.
-    *
-    * Three routes, by scheme (r16 judge #2):
-    *  - a registered [[ClaimPrimitive]] always wins — the plug point
-    *    for object stores (conditional-put coordinators);
-    *  - `file:` uses `link(2)` via Files.createLink — one syscall
-    *    that fails EEXIST atomically and publishes the complete
-    *    content. Hadoop's local rename is check-then-`File#renameTo`
-    *    and POSIX rename(2) REPLACES an existing destination, so two
-    *    racers inside the check window both "win" (a real lost
-    *    update, caught under a full-suite load storm). Mounts that
-    *    reject hard links (vfat, some NFS/overlay throw
-    *    FileSystemException for EPERM/EXDEV) fall back to the rename
-    *    — no worse than the pre-link protocol on those mounts;
-    *  - [[AtomicRenameSchemes]] use the store's native atomic rename.
-    *
-    * Any OTHER scheme refuses loudly: on S3A-like stores rename is a
-    * HEAD check then copy+delete, and treating it as a CAS silently
-    * loses one of two concurrent commits. Refusal at the commit point
-    * (not data loss at read time) is the contract; register a
-    * coordinator to enable those stores.
-    */
-  private[graft] def atomicClaim(
-      fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path
-  ): Boolean = {
-    val scheme = Option(fs.getUri.getScheme)
-      .map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse("file")
-    val plugged = claimPrimitives.get(scheme)
-    if (plugged != null) plugged.claim(fs, tmp, dst)
-    else if ("file" == scheme) {
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(fs.makeQualified(dst).toUri.getPath),
-          java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath))
-        fs.delete(tmp, false)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: UnsupportedOperationException => fs.rename(tmp, dst)
-        // EPERM/EXDEV mounts (vfat, some NFS/overlay) reject hard
-        // links with a generic FileSystemException (ADVICE r16):
-        // fall back to the rename rather than failing every commit.
-        // FileAlreadyExistsException is a FileSystemException subclass
-        // — the EEXIST -> false arm above must stay first.
-        case _: java.nio.file.FileSystemException => fs.rename(tmp, dst)
-      }
-    } else if (AtomicRenameSchemes(scheme)) fs.rename(tmp, dst)
-    else throw new UnsupportedOperationException(
-      s"graft commit CAS: scheme '$scheme' has no atomic fail-if-exists rename " +
-        "(object-store renames are a HEAD check then copy+delete — a check-then-act " +
-        "race that LOSES one of two concurrent commits). Register a coordinator via " +
-        "Streaming.registerClaimPrimitive(\"" + scheme + "\", ...) (conditional-put, " +
-        "e.g. DynamoDB or S3 If-None-Match) to commit to this store.")
-  }
-
-  /** Stream `lines` to `p` newline-joined — no single O(table) driver
-    * string even for a full checkpoint's entry list (r15 judge #3).
-    */
-  private def writeLines(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path,
-      lines: Seq[String]
-  ): Unit = {
-    val out = fs.create(p, true)
-    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(out, "UTF-8"), 1 << 16)
-    try {
-      var first = true
-      lines.foreach { l =>
-        if (!first) w.write('\n')
-        w.write(l)
-        first = false
-      }
-      w.flush()
-    } finally w.close()
-  }
-
-  /** Prune generations no retained reader can still need, physically
-    * deleting each pruned generation's tombstoned files — the deferred
-    * half of the immutable protocol. Manifest files are kept down to
-    * the newest CHECKPOINT at or below the cutoff: the retained
-    * generations' delta chains reconstruct from it, and the handful of
-    * extra delta files below the horizon are O(batch)-sized.
-    * Idempotent: a crash mid-prune retries at the next commit (file
-    * deletes tolerate absence).
-    */
   final case class VacuumStats(
       candidates: Seq[String],
       bytes: Long,
@@ -1579,124 +517,12 @@ object Streaming {
     VacuumStats(candidates, bytes, deleted, staleStages)
   }
 
-  private def pruneManifests(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Unit = {
-    val mdir = manifestDir(target)
-    val listing = Snapshot.list(fs, target)
-    val names = listing.files.map(_.name)
-    val cutoff = gen - ManifestKeep
-    // the oldest manifest file any retained generation's chain needs
-    val chainFloor = listing.checkpoints.filter(_ <= cutoff).maxOption.getOrElse(Long.MinValue)
-    // del names carry a per-writer token suffix (del-N-<token>) since
-    // the optimistic protocol — parse the generation as the digit run
-    // (legacy untokenized del-N parses identically)
-    def delGen(n: String): Long =
-      n.stripPrefix("del-").takeWhile(_.isDigit).toLong
-    // tombstones first (so a crash between the two deletes retries);
-    // del-files for pruned gens may survive a crashed earlier prune
-    // whose gen-file went first — sweep both prefixes independently
-    for (n <- names if n.startsWith("del-") && delGen(n) <= cutoff) {
-      val dp = new org.apache.hadoop.fs.Path(mdir, n)
-      // a CONCURRENT lease-less writer's prune may process (and
-      // delete) a listed del file between our listStatus and this
-      // read — that pruner owns the tombstones' deletion, so a
-      // vanished del file here is simply not ours to sweep (the same
-      // posture as the vanished-checkpoint guard below; surfaced by
-      // the 2-writer ManifestScale storm after r18's commit-path
-      // timing shifted)
-      listing.readLines(n).foreach { rels =>
-      // ORPHAN GUARD: a del file whose commit never landed (writer died
-      // between the del rename and the manifest CAS) or lost the CAS
-      // and crashed before cleanup lists files that are STILL LIVE.
-      // A legitimately tombstoned file was replaced at delGen <= cutoff
-      // and appears in no generation ABOVE the cutoff, so any file a
-      // reader-retained generation (> cutoff; NOT the chain-anchor
-      // checkpoints below the horizon, which legitimately still list
-      // it) references is an orphan's — skipped here and left to the
-      // generation that really replaces it. The check loads only the
-      // del file's own dirs per retained generation.
-      val delDirs = rels.map(dirOf).toSet
-      val protectedPaths: Set[String] = listing.gens
-        .filter(_ > cutoff)
-        .flatMap { g =>
-          try listing.at(g, Some(delDirs)).paths
-          catch { case _: IllegalStateException => Nil } // chain pruned mid-walk
-        }.toSet
-      val dirs = scala.collection.mutable.Set.empty[String]
-      rels.filterNot(protectedPaths).foreach { rel =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$target/$rel"), false)
-        val d = dirOf(rel)
-        if (d.nonEmpty) dirs += d
-      }
-      // drop directories the deletes fully emptied (e.g. a merged-away
-      // cell): non-recursive, so a dir still carrying live files refuses
-      dirs.foreach { d =>
-        try {
-          val dp2 = new org.apache.hadoop.fs.Path(s"$target/$d")
-          if (fs.exists(dp2) && fs.listStatus(dp2).isEmpty) fs.delete(dp2, false)
-        } catch { case _: java.io.IOException => () }
-      }
-      fs.delete(dp, false)
-      }
-    }
-    // deltas BELOW the chain floor are unreadable anyway (their
-    // checkpoint is gone) and checkpoints below it are superseded;
-    // everything >= the floor stays so retained chains reconstruct
-    for (f <- listing.files; g <- f.gen if g <= cutoff && g < chainFloor)
-      fs.delete(new org.apache.hadoop.fs.Path(mdir, f.name), false)
-    // per-dir manifest GC: an m-file lives as long as ANY retained
-    // checkpoint references it (reused refs keep old m-files alive
-    // across checkpoints — by design). Unreferenced m-files at or
-    // below the cutoff are CAS losers' and crashed attempts' orphans:
-    // safe to delete, because any IN-FLIGHT writer's m-files carry
-    // generation latest+1 > cutoff by construction.
-    val remaining = Snapshot.list(fs, target)
-    val referenced: Set[String] = remaining.checkpoints.iterator
-      .flatMap { g =>
-        // a concurrent lease-less writer's prune may delete a listed
-        // checkpoint between our listing and this read (ADVICE r16):
-        // a vanished checkpoint retains nothing, so it contributes no
-        // references — it must not fail a verb whose commit landed
-        try remaining.checkpointRefs(g).fold(_ => Nil, _.map(_.file))
-        catch { case _: java.io.FileNotFoundException => Nil }
-      }
-      .toSet
-    def mGen(n: String): Long = n.stripPrefix("m-").takeWhile(_.isDigit).toLong
-    for (n <- remaining.files.map(_.name)
-         if n.startsWith("m-") && mGen(n) <= cutoff && !referenced(n))
-      fs.delete(new org.apache.hadoop.fs.Path(mdir, n), false)
-  }
-
-  /** Commit a manifest generation from a FULL listing of the live tree
-    * — the bootstrap/rebuild path only (first write of a fresh table,
-    * or right after a mode-overwrite wholesale rebuild whose directory
-    * is clean by construction). Mutation verbs never re-list: the live
-    * tree legitimately holds older generations' files awaiting the
-    * retention horizon, so their manifests advance by delta inside
-    * [[commitStage]].
+  /** Commit a manifest generation from a full listing of the live tree
+    * ([[Commit.writeManifest]]). A one-line forwarder kept because the
+    * benchmark harness (`perfbench/`, frozen) calls it.
     */
-  def writeManifest(fs: org.apache.hadoop.fs.FileSystem, target: String): Long = {
-    // always a CHECKPOINT: a full-relist commit has no delta basis
-    // (the rebuild physically replaced the previous generation's files)
-    val targetPath = new org.apache.hadoop.fs.Path(target)
-    val entries = inParallel(listRel(fs, targetPath).sorted)(footerEntry(fs, targetPath, _))
-    val byDir = entries.groupBy(_.dir).map { case (d, es) => d -> es.sortBy(_.path) }
-    val schema = entries.flatMap(_.schemaHash).headOption
-    // single-writer path by contract (fresh table / post-rebuild), but
-    // the CAS loop keeps even a misuse linearizable
-    var gen = 0L
-    var done = false
-    while (!done) {
-      val listing = Snapshot.list(fs, target)
-      gen = listing.latest.getOrElse(0L) + 1
-      done = tryCommitManifest(fs, listing, gen, byDir, Nil, Nil,
-        forceCheckpoint = true, schemaHash = schema)
-    }
-    gen
-  }
+  def writeManifest(fs: org.apache.hadoop.fs.FileSystem, target: String): Long =
+    Commit.writeManifest(fs, target)
 
   /** The RETAINED manifest generations of `target`, ascending. A
     * one-line delegate kept because the benchmark harness (`perfbench/`,
@@ -3480,126 +2306,6 @@ object Streaming {
     fs.delete(cursor, false)
     fs.rename(tmp, cursor)
     delivered
-  }
-
-  /** Thrown when another LIVE writer holds a lease — its own type so
-    * callers that want "skip if contended" (AnnIndex.openIndex's
-    * opportunistic heal) can catch EXACTLY the contended case without
-    * also swallowing real failures from the leased body (r13 advice:
-    * a broad IllegalStateException catch treated a failed heal as "a
-    * live writer owns it").
-    */
-  final class LeaseHeldException(msg: String) extends IllegalStateException(msg)
-
-  /** Single-writer lease on a persisted state root: a sentinel file at
-    * `root.__lease` created atomically (create-no-overwrite — the FS
-    * primitive that is atomic on HDFS and local disk alike), holding a
-    * per-acquisition UUID token. A second concurrent writer REFUSES
-    * LOUDLY ([[LeaseHeldException]]) instead of interleaving commits
-    * with the first (two writers inside one commit protocol can each
-    * see the other's half-finished state as "interrupted" and roll it
-    * the wrong way).
-    *
-    * Liveness is the sentinel's MODIFICATION TIME, renewed by a
-    * daemon HEARTBEAT thread (`fs.setTimes` every ttl/4 — an atomic
-    * metadata touch, never a content rewrite a concurrent reader could
-    * catch half-written), so an honest write LONGER than the TTL keeps
-    * its lease (r13 judge #3) and the TTL only needs to exceed the
-    * longest heartbeat gap (a GC pause or FS stall > ttl is the one
-    * window left, and the commit protocol behind the lease is
-    * crash-recoverable anyway).
-    *
-    * A lease whose mtime is older than `ttlMs` is presumed crashed and
-    * broken ATOMICALLY: the breaker must first RENAME the sentinel to
-    * a unique path — rename is the atomic claim; of N waiters that all
-    * observed staleness exactly one wins it — then delete its claimed
-    * copy and re-race the create. RELEASE uses the same rename-claim
-    * (r14 advice, low: the old check-then-act release let a stalled
-    * holder delete a NEW holder's sentinel between the token check and
-    * the delete): rename the sentinel to a unique path, verify the
-    * claimed copy carries OUR token, delete it — or rename it back if
-    * the token is foreign. Returns the result of `body`; always stops
-    * the heartbeat and releases on exit (including non-local returns:
-    * finally runs under NonLocalReturnControl).
-    */
-  def withWriterLease[T](
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: String,
-      ttlMs: Long = 15 * 60 * 1000L
-  )(body: => T): T = {
-    val lease = new org.apache.hadoop.fs.Path(root + ".__lease")
-    val token = java.util.UUID.randomUUID().toString
-    // acquire = write the sentinel FULLY to a unique tmp, then claim
-    // the lease name via [[atomicClaim]]. A create-no-overwrite here
-    // would be check-then-act on the local filesystem (two racers both
-    // pass the check, the second truncates the first's sentinel and
-    // both believe they hold the lease) — the same TOCTOU the manifest
-    // CAS closes; the claim also makes the sentinel's content appear
-    // atomically, so a concurrent tokenAt can never read it torn.
-    def tryAcquire(): Boolean =
-      try {
-        val tmp = new org.apache.hadoop.fs.Path(root + s".__lease.tmp-$token")
-        val out = fs.create(tmp, true)
-        out.writeLong(System.currentTimeMillis()); out.writeUTF(token); out.close()
-        val won = atomicClaim(fs, tmp, lease)
-        if (!won) fs.delete(tmp, false)
-        won
-      } catch { case _: java.io.IOException => false }
-    def tokenAt(p: org.apache.hadoop.fs.Path): Option[String] =
-      try {
-        val in = fs.open(p)
-        try { in.readLong(); Some(in.readUTF()) } finally in.close()
-      } catch { case _: java.io.IOException => None } // absent/zero-byte/legacy: no token
-    if (!tryAcquire()) {
-      // liveness from metadata, not content: a heartbeat touch never
-      // leaves a half-written file for this read to misjudge
-      val stale =
-        try System.currentTimeMillis() -
-          fs.getFileStatus(lease).getModificationTime > ttlMs
-        catch { case _: java.io.IOException => false } // vanished: re-race below
-      val claimed = stale && {
-        val breaking = new org.apache.hadoop.fs.Path(root + s".__lease_breaking_$token")
-        val won = try fs.rename(lease, breaking) catch { case _: java.io.IOException => false }
-        if (won) fs.delete(breaking, false)
-        won
-      }
-      // after a won break (or a vanished lease) the create is re-raced;
-      // losing that race means another waiter is now the live holder
-      if (!tryAcquire())
-        throw new LeaseHeldException(
-          s"another writer holds the lease on $root (${lease}); concurrent writers on one " +
-            "persisted index are refused — run them from a single maintenance process, or " +
-            s"if the holder crashed, the lease self-expires after ${ttlMs / 1000} s " +
-            s"(stale=$stale, breakClaimed=$claimed)")
-    }
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val heartbeat = new Thread(() => {
-      while (!stop.get()) {
-        try Thread.sleep(math.max(ttlMs / 4, 50L))
-        catch { case _: InterruptedException => () }
-        if (!stop.get())
-          try fs.setTimes(lease, System.currentTimeMillis(), -1)
-          catch { case _: java.io.IOException => () } // broken/FS blip: next beat retries
-      }
-    }, s"graft-lease-heartbeat-$root")
-    heartbeat.setDaemon(true)
-    heartbeat.start()
-    try body
-    finally {
-      stop.set(true)
-      heartbeat.interrupt()
-      // release via the same atomic rename-claim as breaking: claim the
-      // sentinel, verify the claimed copy is OURS, delete it — rename it
-      // back if foreign (our lease was broken and re-acquired while we
-      // stalled; a check-then-act release could delete the new holder's
-      // fresh sentinel between the check and the delete)
-      val claiming = new org.apache.hadoop.fs.Path(root + s".__lease_release_$token")
-      val won = try fs.rename(lease, claiming) catch { case _: java.io.IOException => false }
-      if (won) {
-        if (tokenAt(claiming).contains(token)) fs.delete(claiming, false)
-        else fs.rename(claiming, lease) // a foreign holder's lease: put it back
-      }
-    }
   }
 
   /** Gap-based sessionization: consecutive events of a user belong to

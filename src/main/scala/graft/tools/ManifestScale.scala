@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
-import graft.table.Snapshot
+import graft.table.{Commit, Snapshot}
 
 /** Scale demonstration for the immutable manifest-selected snapshot
   * layer (r15): what reader isolation COSTS at a 1M-row persisted
@@ -113,7 +113,7 @@ object ManifestScale {
     }
     // bootstrap commit: the one full-relist path left in the protocol
     time("manifest commit, full re-list (bootstrap)") {
-      Streaming.writeManifest(fs, target)
+      Commit.writeManifest(fs, target)
     }
 
     // -- claim 2: pinned read ~ plain read -----------------------------
@@ -279,7 +279,7 @@ object ManifestScale {
     val (_, clusterSec) = time("clusterTable copy on doc_id (64 files)") {
       Streaming.readCommitted(spark, target)
         .write.mode("overwrite").parquet(zt)
-      Streaming.writeManifest(fs, zt)
+      Commit.writeManifest(fs, zt)
       Streaming.clusterTable(spark, zt, "doc_id", 64)
     }
     val zSnap = Snapshot.latest(fs, zt).get

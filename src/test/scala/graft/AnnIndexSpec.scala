@@ -566,7 +566,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       val plan = (Seq(s"R cell=$fat", "R cell=4") ++ files.sorted.map(f => s"F $f"))
         .mkString("\n")
       val out = fs.create(new org.apache.hadoop.fs.Path(stage,
-        graft.streaming.Streaming.StageCommitMarker), true)
+        graft.table.Commit.StageCommitMarker), true)
       try out.write(plan.getBytes("UTF-8")) finally out.close()
       val first = files.head
       val dst = new org.apache.hadoop.fs.Path(s"$corpusPath/$first")
@@ -607,7 +607,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage")
       fs.delete(stage, true)
       cur.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-      graft.streaming.Streaming.commitStage(fs, corpusPath,
+      graft.table.Commit.commitStage(fs, corpusPath,
         Set(s"cell=$fat", "cell=77"))
     }
     val repaired = AnnIndex.repairOrphanCells(spark, root)
@@ -758,7 +758,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       .withColumn("cell", lit(999))
       .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
     fs.create(new org.apache.hadoop.fs.Path(stage,
-      graft.streaming.Streaming.StageCommitMarker), true).close()
+      graft.table.Commit.StageCommitMarker), true).close()
 
     // retrain into the SAME root (the r13 advisor's medium scenario)
     val (c1, v1) = AnnIndex.build(corpusN(300), k = 4, vecCol = "e", dim = dim)
@@ -799,7 +799,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val stage = new org.apache.hadoop.fs.Path(s"$root/corpus.__stage")
     fs.delete(stage, true)
     newRow.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-    graft.streaming.Streaming.commitStage(fs, s"$root/corpus", Set.empty)
+    graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty)
 
     // the next entry heals: sidecar rebuilt from the PINNED corpus —
     // the appended row is listed, the tables agree, serving sees it

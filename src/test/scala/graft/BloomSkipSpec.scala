@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
-import graft.table.Snapshot
+import graft.table.{Commit, Snapshot}
 
 /** Bloom-filter file skipping (r16 judge #5): per-file blooms on a
   * declared key column, built by a maintenance verb into a sidecar
@@ -151,7 +151,7 @@ class BloomSkipSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     }
     val (aged, young) = (orphan("bl-000000000900-deadbeef.parquet"),
       orphan("bl-000000000901-cafebabe.parquet"))
-    val old = System.currentTimeMillis() - Streaming.StageAbandonedMs - 1000
+    val old = System.currentTimeMillis() - Commit.StageAbandonedMs - 1000
     (first + aged).foreach(n => fs.setTimes(new Path(mdir, n), old, -1))
     // the rebuild re-tags every file with its own new sidecar; the
     // first one is still named by the retained generation it tagged

@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
+import graft.table.Commit
 
 /** OPTIMISTIC multi-writer commits (r15 judge #2): the manifest
   * generation rename is a CAS, and each commit plan records the
@@ -96,8 +97,8 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     stale.write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage-spec")
     Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
       rows(0 until 80, k => s"winner-$k", 3L).filter(col("shard") === 0L), 2L) // gen 2
-    val ex = intercept[Streaming.CommitConflictException] {
-      Streaming.commitStage(fs, target, Set("shard=0"), ".__stage-spec", baseGen = Some(1L))
+    val ex = intercept[Commit.CommitConflictException] {
+      Commit.commitStage(fs, target, Set("shard=0"), ".__stage-spec", baseGen = Some(1L))
     }
     ex.getMessage should include("shard=0")
     // the abort left no garbage: stage gone, moved files deleted, and
@@ -143,7 +144,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     // staged merge is still valid and must land as gen 3
     Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
       rows(0 until 80, k => s"other-$k", 2L).filter(col("shard") === 2L), 2L)
-    Streaming.commitStage(fs, target, Set("shard=1"), ".__stage-rb", baseGen = Some(1L))
+    Commit.commitStage(fs, target, Set("shard=1"), ".__stage-rb", baseGen = Some(1L))
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L, 3L)
     val got = readAll(target)
     (0L until 80L).foreach { k =>
@@ -177,7 +178,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     val staged = files(stage, "")
     staged should not be empty
     val plan = ("B 1" +: "R shard=0" +: staged.sorted.map(f => s"F $f")).mkString("\n")
-    val out = fs.create(new Path(stage, Streaming.StageCommitMarker), true)
+    val out = fs.create(new Path(stage, Commit.StageCommitMarker), true)
     out.write(plan.getBytes("UTF-8")); out.close()
     val first = staged.head
     fs.mkdirs(new Path(s"$target/${first.substring(0, first.lastIndexOf('/'))}"))
@@ -185,8 +186,8 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     // readers never saw the torn state: the manifest still pins gen 1
     readAll(target).values.forall(_._2 == 1L) shouldBe true
     // recovery past the TTL completes the commit exactly once
-    fs.setTimes(stage, System.currentTimeMillis() - Streaming.StageAbandonedMs - 1000, -1)
-    Streaming.recoverAbandonedStages(fs, target)
+    fs.setTimes(stage, System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
+    Commit.recoverAbandonedStages(fs, target)
     fs.exists(stage) shouldBe false
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
     val got = readAll(target)
@@ -208,14 +209,14 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     val files = fs.listStatus(new Path(stage, "shard=0")).filterNot(
       _.getPath.getName.startsWith("_")).map(st => s"shard=0/${st.getPath.getName}")
     val plan = ("B 1" +: files.toSeq.sorted.map(f => s"F $f")).mkString("\n")
-    val out = fs.create(new Path(stage, Streaming.StageCommitMarker), true)
+    val out = fs.create(new Path(stage, Commit.StageCommitMarker), true)
     out.write(plan.getBytes("UTF-8")); out.close()
     // fresh stage (mtime now): recovery must leave it alone
-    Streaming.recoverAbandonedStages(fs, target)
+    Commit.recoverAbandonedStages(fs, target)
     fs.exists(stage) shouldBe true
     // age it past the abandonment TTL, then recover: rolls forward
-    fs.setTimes(stage, System.currentTimeMillis() - Streaming.StageAbandonedMs - 1000, -1)
-    Streaming.recoverAbandonedStages(fs, target)
+    fs.setTimes(stage, System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
+    Commit.recoverAbandonedStages(fs, target)
     fs.exists(stage) shouldBe false
     readAll(target).get(1000L) shouldBe Some(("late", 2L))
   }
@@ -241,7 +242,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     val out = fake.create(tmp, true)
     try out.write("content".getBytes("UTF-8")) finally out.close()
     val ex = intercept[UnsupportedOperationException] {
-      Streaming.atomicClaim(fake, tmp, dst)
+      Commit.atomicClaim(fake, tmp, dst)
     }
     ex.getMessage should include("mocks3")
     ex.getMessage should include("registerClaimPrimitive")
@@ -257,7 +258,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     // a single-process coordinator: existence check + publish under
     // one lock — the DynamoDB-conditional-write / S3 If-None-Match
     // contract scoped to this JVM (what a real S3 LogStore plugs in)
-    val coordinator = new Streaming.ClaimPrimitive {
+    val coordinator = new Commit.ClaimPrimitive {
       private val lock = new Object
       def claim(fs: org.apache.hadoop.fs.FileSystem, tmp: Path, dst: Path): Boolean =
         lock.synchronized {
@@ -265,7 +266,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
           else { require(fs.rename(tmp, dst), s"publish failed: $tmp -> $dst"); true }
         }
     }
-    Streaming.registerClaimPrimitive("mocks3", coordinator)
+    Commit.registerClaimPrimitive("mocks3", coordinator)
     try {
       val dir = new Path(Files.createTempDirectory("graft-cc-plugged").toString)
       (1 to 20).foreach { round =>
@@ -279,7 +280,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
             val out = fake.create(tmp, true)
             try out.write(s"writer-$i".getBytes("UTF-8")) finally out.close()
             start.countDown(); start.await()
-            if (Streaming.atomicClaim(fake, tmp, dst)) winners.add(i)
+            if (Commit.atomicClaim(fake, tmp, dst)) winners.add(i)
             else fake.delete(tmp, false)
           })
         }
@@ -291,13 +292,13 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
         try in.readFully(buf) finally in.close()
         new String(buf, "UTF-8") shouldBe s"writer-${winners.peek()}"
       }
-    } finally Streaming.unregisterClaimPrimitive("mocks3")
+    } finally Commit.unregisterClaimPrimitive("mocks3")
     // the registration is gone: the scheme refuses again
     val dir2 = Files.createTempDirectory("graft-cc-unreg").toString
     val tmp2 = new Path(s"$dir2/.t"); val out2 = fake.create(tmp2, true)
     try out2.write("x".getBytes("UTF-8")) finally out2.close()
     intercept[UnsupportedOperationException] {
-      Streaming.atomicClaim(fake, tmp2, new Path(s"$dir2/d"))
+      Commit.atomicClaim(fake, tmp2, new Path(s"$dir2/d"))
     }
   }
 
@@ -394,7 +395,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     // record B's plan (append-only, fresh-table read -> B 0), then
     // "crash" B after moving its FIRST file into the live tree
     val planB = ("B 0" +: stagedB.sorted.map(f => s"F $f")).mkString("\n")
-    val out = fs.create(new Path(stageB, Streaming.StageCommitMarker), true)
+    val out = fs.create(new Path(stageB, Commit.StageCommitMarker), true)
     out.write(planB.getBytes("UTF-8")); out.close()
     val moved = stagedB.head
     fs.mkdirs(new Path(s"$target/${moved.substring(0, moved.lastIndexOf('/'))}"))
@@ -404,13 +405,13 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     val stageA = new Path(target + ".__stage-a")
     Seq((100L, "a1", 1L, 1L)).toDF("doc_id", "payload", "batch_id", "shard")
       .write.mode("overwrite").partitionBy("shard").parquet(stageA.toString)
-    Streaming.commitStage(fs, target, Set.empty, ".__stage-a", baseGen = Some(0L))
+    Commit.commitStage(fs, target, Set.empty, ".__stage-a", baseGen = Some(0L))
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
     // B's crashed commit rolls forward past the TTL: the already-moved
     // file is skipped at the move and RE-ADDED to the manifest with
     // stats — the dedupe point
-    fs.setTimes(stageB, System.currentTimeMillis() - Streaming.StageAbandonedMs - 1000, -1)
-    Streaming.recoverAbandonedStages(fs, target)
+    fs.setTimes(stageB, System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
+    Commit.recoverAbandonedStages(fs, target)
     fs.exists(stageB) shouldBe false
     // every row exactly once — a double-listed entry would read b-rows twice
     val gotRows = Streaming.readCommitted(spark, target)
@@ -432,25 +433,25 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     // every claim itself is the plain file:// one (the hook steps
     // aside while it runs, and for good once the racer has landed)
     var raced = false
-    Streaming.registerClaimPrimitive("file", new Streaming.ClaimPrimitive {
+    Commit.registerClaimPrimitive("file", new Commit.ClaimPrimitive {
       def claim(fs: org.apache.hadoop.fs.FileSystem, tmp: Path, dst: Path): Boolean = {
-        Streaming.unregisterClaimPrimitive("file")
+        Commit.unregisterClaimPrimitive("file")
         if (dst.getName.matches("(gen|inc)-\\d+")) {
           raced = true
           Streaming.upsertPartitionedOptimistic(target, "doc_id", "batch_id", "shard")(
             racer) shouldBe 1
         }
-        val won = Streaming.atomicClaim(fs, tmp, dst)
-        if (!raced) Streaming.registerClaimPrimitive("file", this)
+        val won = Commit.atomicClaim(fs, tmp, dst)
+        if (!raced) Commit.registerClaimPrimitive("file", this)
         won
       }
     })
     try {
-      val ex = intercept[Streaming.CommitConflictException] {
+      val ex = intercept[Commit.CommitConflictException] {
         Streaming.compactShards(spark, target, "shard")
       }
       ex.getMessage should include("shard=0")
-    } finally Streaming.unregisterClaimPrimitive("file")
+    } finally Commit.unregisterClaimPrimitive("file")
     raced shouldBe true
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L, 3L)
     val got = readAll(target)

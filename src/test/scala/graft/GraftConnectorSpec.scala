@@ -9,7 +9,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.sources.GraftFileIndex
 import graft.streaming.Streaming
-import graft.table.Snapshot
+import graft.table.{Commit, Snapshot}
 
 /** The table-format connector (`spark.read.format("graft")`): pinned
   * snapshots, Catalyst-owned zone-map pushdown, hive partition
@@ -384,7 +384,7 @@ class GraftConnectorSpec extends AnyFunSuite with Matchers with SparkSessionSetu
     // its post-crash redelivery) that batch 0's generation ages past
     // BOTH the retention horizon and the checkpoint chain anchor, so
     // its `# tag` header is pruned from every retained manifest...
-    (1 to Streaming.CheckpointEvery.toInt + Snapshot.ManifestKeep + 1).foreach { i =>
+    (1 to Commit.CheckpointEvery.toInt + Snapshot.ManifestKeep + 1).foreach { i =>
       batch(100 * i until 100 * i + 5).write.format("graft").mode("append").save(target)
     }
     val gens = Streaming.manifestGenerations(fs, target)

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
+import graft.table.Commit
 
 /** The PERSISTED cycle of incremental cross-batch dedup, which the
   * oracled q_dedup_incremental (in-plan fixture split) cannot show:
@@ -232,7 +233,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSessionSetup {
         }
       val plan = (Seq("R shard=1") ++ walk(stage, "").sorted.map(f => s"F $f")).mkString("\n")
       val out = fs.create(
-        new org.apache.hadoop.fs.Path(stage, Streaming.StageCommitMarker), true)
+        new org.apache.hadoop.fs.Path(stage, Commit.StageCommitMarker), true)
       try out.write(plan.getBytes("UTF-8")) finally out.close()
     }
     assert(Streaming.readCommitted(spark, target).count() == 100) // nothing torn

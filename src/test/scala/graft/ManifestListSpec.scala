@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
-import graft.table.Snapshot
+import graft.table.{Commit, Snapshot}
 
 /** MANIFEST-LIST checkpoints (the Iceberg manifest-list shape; r15
   * judge #3's last O(table) term): a checkpoint is a list of
@@ -180,12 +180,12 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     // the window (1, 8] includes the gen-8 CHECKPOINT — its recorded
     // delta lines are what keep the scan exact here
     (2L to 8L).foreach(v => upsert(target, 0 until 80 by 8, k => s"v$v-$k", v))
-    val ex = intercept[Streaming.CommitConflictException] {
-      Streaming.commitStage(fs, target, Set("shard=0"), ".__stage-ovl", baseGen = Some(1L))
+    val ex = intercept[Commit.CommitConflictException] {
+      Commit.commitStage(fs, target, Set("shard=0"), ".__stage-ovl", baseGen = Some(1L))
     }
     ex.getMessage should include("shard=0")
     // disjoint: rebases straight through the checkpoint and lands
-    Streaming.commitStage(fs, target, Set("shard=1"), ".__stage-dis", baseGen = Some(1L))
+    Commit.commitStage(fs, target, Set("shard=1"), ".__stage-dis", baseGen = Some(1L))
     val got = Streaming.readCommitted(spark, target)
       .select("doc_id", "payload").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -207,7 +207,7 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       .repartition(5)
       .write.mode("overwrite").partitionBy("shard")
       .parquet(target + ".__stage")
-    Streaming.commitStage(fs, target, Set.empty) // append: replaces nothing
+    Commit.commitStage(fs, target, Set.empty) // append: replaces nothing
     val gen2 = Streaming.manifestGenerations(fs, target).max
     val before = Streaming.manifestEntries(fs, target, gen2)
     val frag0 = before.count(_.startsWith("shard=0/"))
@@ -241,7 +241,7 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     (0 until 80 by 8).map(k => (k.toLong, s"v2-$k", 2L, 0L))
       .toDF("doc_id", "payload", "batch_id", "shard")
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
-    Streaming.commitStage(fs, target, Set("shard=0"), ".__stage", baseGen = Some(1L))
+    Commit.commitStage(fs, target, Set("shard=0"), ".__stage", baseGen = Some(1L))
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
     val committed = Snapshot.at(fs, target, 2L, Some(Set("shard=0"))).paths
     committed should not be empty
@@ -251,11 +251,11 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     fs.mkdirs(stage)
     val plan = (Seq("B 1", "R shard=0") ++ committed.sorted.map(f => s"F $f"))
       .mkString("\n")
-    val out = fs.create(new Path(stage, Streaming.StageCommitMarker), true)
+    val out = fs.create(new Path(stage, Commit.StageCommitMarker), true)
     try out.write(plan.getBytes("UTF-8")) finally out.close()
     // recovery must recognize the landed commit: no new generation, no
     // deletion of the manifest-referenced files
-    Streaming.recoverStage(fs, target)
+    Commit.recoverStage(fs, target)
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
     committed.foreach { f =>
       withClue(s"committed file $f must survive the replay: ") {
@@ -319,7 +319,7 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
           val out = fs.create(tmp, true)
           try out.write(s"writer-$i".getBytes("UTF-8")) finally out.close()
           start.countDown(); start.await()
-          if (Streaming.atomicClaim(fs, tmp, dst)) winners.add(i)
+          if (Commit.atomicClaim(fs, tmp, dst)) winners.add(i)
           else fs.delete(tmp, false)
         })
       }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
-import graft.table.Snapshot
+import graft.table.{Commit, Snapshot}
 
 /** Generalized MERGE + row-level UPDATE (r17 judge items #7/#8): one
   * atomic generation composing delete vectors (retract matched) with
@@ -320,8 +320,8 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     // the volatile declaration must conflict the stale plan LOUDLY
     // (without it, a plain append plan would happily rebase past the
     // racer — that is exactly the duplicate-insert hole)
-    val ex = intercept[Streaming.CommitConflictException] {
-      Streaming.commitStage(fs, target, Set.empty, stageName,
+    val ex = intercept[Commit.CommitConflictException] {
+      Commit.commitStage(fs, target, Set.empty, stageName,
         baseGen = Some(baseGen), volatileDirs = Set(""))
     }
     ex.getMessage should include("concurrent")
@@ -362,8 +362,8 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     // a stale plan whose envelope [90, 110] covers the racer's key
     // must conflict even though its volatile dirs ({""}) are untouched
     val s1 = stagePlan(".__stage-env1", 901L)
-    val ex = intercept[Streaming.CommitConflictException] {
-      Streaming.commitStage(fs, target, Set.empty, s1,
+    val ex = intercept[Commit.CommitConflictException] {
+      Commit.commitStage(fs, target, Set.empty, s1,
         baseGen = Some(baseGen), volatileDirs = Set("shard=0"),
         keyEnvelopes = Seq(("id", 'l', "90", "110")))
     }
@@ -371,7 +371,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     // DISJOINT envelope: the same race with keys the merge can't touch
     // REBASES and lands (liveness: unrelated writers don't serialize)
     val s2 = stagePlan(".__stage-env2", 902L)
-    Streaming.commitStage(fs, target, Set.empty, s2,
+    Commit.commitStage(fs, target, Set.empty, s2,
       baseGen = Some(baseGen), volatileDirs = Set("shard=0"),
       keyEnvelopes = Seq(("id", 'l', "5000", "6000")))
     Streaming.readCommitted(spark, target)
@@ -383,8 +383,8 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       .write.format("graft").mode("append").option("partitionBy", "shard")
       .save(target)
     val s3 = stagePlan(".__stage-env3", 903L)
-    intercept[Streaming.CommitConflictException] {
-      Streaming.commitStage(fs, target, Set.empty, s3,
+    intercept[Commit.CommitConflictException] {
+      Commit.commitStage(fs, target, Set.empty, s3,
         baseGen = Some(base2), volatileDirs = Set("shard=0"),
         keyEnvelopes = Seq(("*", '*', "", "")))
     }
@@ -407,7 +407,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     import spark.implicits._
     val target = Files.createTempDirectory("graft-merge-empty").toString + "/t"
     fs.mkdirs(new Path(target))
-    Streaming.writeManifest(fs, target) // gen 1, zero entries
+    Commit.writeManifest(fs, target) // gen 1, zero entries
     val source = Seq((1L, "a", 5L)).toDF("id", "payload", "score")
     val ex = intercept[IllegalArgumentException] {
       Streaming.mergeInto(spark, target, source, "t.id = s.id",

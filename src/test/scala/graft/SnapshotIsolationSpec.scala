@@ -10,7 +10,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
-import graft.table.Snapshot
+import graft.table.{Commit, Snapshot}
 
 /** Reader-side snapshot isolation for the persisted state layer under
   * the IMMUTABLE commit protocol (r14 judge #1): every completed
@@ -60,7 +60,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
     val files = walk(stage, "")
     val plan = (replaced.toSeq.sorted.map(d => s"R $d") ++ files.sorted.map(f => s"F $f"))
       .mkString("\n")
-    val out = fs.create(new Path(stage, Streaming.StageCommitMarker), true)
+    val out = fs.create(new Path(stage, Commit.StageCommitMarker), true)
     try out.write(plan.getBytes("UTF-8")) finally out.close()
     // the crash: one file moved, the rest still staged, manifest not bumped
     val first = files.head
@@ -118,7 +118,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
 
     // the writer's recovery completes the commit; the pinned read now
     // sees the NEW state
-    Streaming.recoverStage(fs, target)
+    Commit.recoverStage(fs, target)
     val after = Streaming.readCommitted(spark, target)
     after.count() shouldBe 100
     after.filter(col("payload").startsWith("v2-")).count() shouldBe 50
@@ -286,7 +286,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
     // docs in a brand-new shard and commit with no replaced dirs
     sharded(Seq((200L, "new-200", 2L), (201L, "new-201", 2L)))
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
-    Streaming.commitStage(fs, target, replacedDirs = Set.empty)
+    Commit.commitStage(fs, target, replacedDirs = Set.empty)
     val gens = Streaming.manifestGenerations(fs, target)
     gens.size shouldBe 2
     // append-only: the delta is EXACTLY the appended rows

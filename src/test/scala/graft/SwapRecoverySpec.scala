@@ -10,7 +10,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
-import graft.table.Snapshot
+import graft.table.{Commit, Snapshot}
 
 /** The immutable commit protocol behind every persisted-state mutation
   * (upsertPartitionedBatch, deleteFromPartitioned, AnnIndex's verbs):
@@ -61,7 +61,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     val files = walk(stage, "")
     val plan = (replaced.toSeq.sorted.map(d => s"R $d") ++ files.sorted.map(f => s"F $f"))
       .mkString("\n")
-    val out = fs.create(new Path(stage, Streaming.StageCommitMarker), true)
+    val out = fs.create(new Path(stage, Commit.StageCommitMarker), true)
     try out.write(plan.getBytes("UTF-8")) finally out.close()
     files
   }
@@ -78,7 +78,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     val first = files.head
     fs.rename(new Path(s"$target.__stage/$first"), new Path(s"$target/$first"))
 
-    Streaming.recoverStage(fs, target)
+    Commit.recoverStage(fs, target)
     val t = Streaming.readCommitted(spark, target)
     t.count() shouldBe 100
     t.filter(col("doc_id") === 75L).select("payload").head.getString(0) shouldBe "v2-75"
@@ -105,7 +105,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
     writePlan(target, Set("shard=1", "shard=9"))
 
-    Streaming.recoverStage(fs, target)
+    Commit.recoverStage(fs, target)
     val t = Streaming.readCommitted(spark, target)
     t.count() shouldBe 100 // membership conserved: 50 in shard 0, 25 + 25 in 1 and 9
     t.filter(col("shard") === 1).count() shouldBe 25
@@ -121,7 +121,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     sharded(Seq((50L, "garbage", 9L)))
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
 
-    Streaming.recoverStage(fs, target)
+    Commit.recoverStage(fs, target)
     val t = Streaming.readCommitted(spark, target)
     t.count() shouldBe 100
     t.filter(col("doc_id") === 50L).select("payload").head.getString(0) shouldBe "v1-50"
@@ -137,13 +137,13 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     sharded((50L until 100L).map(i => (i, s"v2-$i", 2L)))
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
     writePlan(target, Set("shard=1"))
-    Streaming.recoverStage(fs, target)
+    Commit.recoverStage(fs, target)
     val gen = Snapshot.latest(fs, target).get.gen
     val rows = Streaming.readCommitted(spark, target)
       .select("doc_id", "payload").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     // the stage is gone, so a second recovery is a no-op: same
     // generation, same rows, no double-committed manifest
-    Streaming.recoverStage(fs, target)
+    Commit.recoverStage(fs, target)
     Snapshot.latest(fs, target).get.gen shouldBe gen
     Streaming.readCommitted(spark, target)
       .select("doc_id", "payload").collect()
@@ -264,14 +264,14 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     val root = Files.createTempDirectory("graft-lease-hb").toString + "/t"
     val ttl = 400L // heartbeat every ttl/4 = 100 ms
     @volatile var refusedDuring = 0
-    Streaming.withWriterLease(fs, root, ttlMs = ttl) {
+    Commit.withWriterLease(fs, root, ttlMs = ttl) {
       // the body outlives the TTL several times over; without the
       // heartbeat the mtime would go stale and the probes below would
       // break the lease mid-write (the r13 judge #3 hazard)
       (1 to 4).foreach { _ =>
         Thread.sleep(ttl)
-        intercept[Streaming.LeaseHeldException] {
-          Streaming.withWriterLease(fs, root, ttlMs = ttl) { fail("second writer entered") }
+        intercept[Commit.LeaseHeldException] {
+          Commit.withWriterLease(fs, root, ttlMs = ttl) { fail("second writer entered") }
         }
         refusedDuring += 1
       }
@@ -281,13 +281,13 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       fs.exists(new Path(root + ".__lease")) shouldBe false
     }
     // and after release, the next writer acquires normally
-    Streaming.withWriterLease(fs, root, ttlMs = ttl) { () }
+    Commit.withWriterLease(fs, root, ttlMs = ttl) { () }
   }
 
   test("lease release is claim-guarded: a broken-and-reacquired lease is never deleted by the old holder") {
     val root = Files.createTempDirectory("graft-lease-tok").toString + "/t"
     val lease = new Path(root + ".__lease")
-    Streaming.withWriterLease(fs, root, ttlMs = 60000L) {
+    Commit.withWriterLease(fs, root, ttlMs = 60000L) {
       // simulate the degenerate interleaving: our lease is broken out
       // from under us (heartbeat stalled past the TTL) and a NEW
       // holder's sentinel now sits at the path with a different token

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
-import graft.table.Snapshot
+import graft.table.{Commit, Snapshot}
 
 /** Zone-map file skipping (the Iceberg/Delta data-skipping core):
   * every commit records per-file min/max bounds for the top-level
@@ -258,7 +258,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
         .withColumn("shard", col("shard").cast("int"))
         .coalesce(1)
         .write.mode("overwrite").parquet(target + ".__stage")
-      Streaming.commitStage(fs, target, Set.empty)
+      Commit.commitStage(fs, target, Set.empty)
     }
     val degraded = Snapshot.latest(fs, target).flatMap(_.clusteringDepth("id")).get
     degraded should be > 2.0
