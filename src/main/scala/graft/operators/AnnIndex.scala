@@ -341,8 +341,10 @@ object AnnIndex {
   private def appendIdMap(rows: DataFrame, root: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(s"$root/idmap.__stage")
-    fs.delete(stage, true)
+    // an append reads nothing of the sidecar: its read generation is
+    // the one it stages against
+    val readGen = graft.table.Commit.readGen(fs, s"$root/idmap")
+    val stage = graft.table.Commit.freshStage(fs, s"$root/idmap")
     // vec_id re-cast defensively: every appended file must carry the
     // same long type as rebuildIdMap's corpus-derived sidecar, or a
     // later parquet read fails on schema conflict (r13 advice, low)
@@ -360,7 +362,7 @@ object AnnIndex {
       .write.mode("overwrite").partitionBy("shard").parquet(stage.toString)
     // append-only commit: no replaced dirs — every previous entry
     // survives, the staged files join the manifest atomically
-    graft.table.Commit.commitStage(fs, s"$root/idmap", Set.empty)
+    graft.table.Commit.commitStage(fs, s"$root/idmap", Set.empty, readGen)
   }
 
   /** Open a persisted index for serving: (centroids, corpus). By
@@ -444,6 +446,7 @@ object AnnIndex {
           .filter(_.isDirectory).map(_.getPath.getName)
           .collect { case n if n.startsWith("cell=") => n.stripPrefix("cell=").toInt }.toSeq
     }
+    val centroidsGen = graft.table.Commit.readGen(fs, s"$root/centroids")
     val centroids = graft.streaming.Streaming.readCommitted(spark, s"$root/centroids")
     val known = centroids.select(col("cell")).collect().map(_.getInt(0)).toSet
     val orphans = dirCells.filterNot(known).sorted
@@ -480,7 +483,7 @@ object AnnIndex {
           org.apache.spark.sql.types.LongType))))
     writeCentroidsSwapped(
       centroids.unionByName(repaired.select(centroids.columns.map(col).toIndexedSeq: _*)),
-      root, fs)
+      root, fs, centroidsGen)
     orphans
   }
 
@@ -492,16 +495,16 @@ object AnnIndex {
     * reader's centroid paths never move. Crash-atomic via the commit
     * plan ([[graft.table.Commit.recoverStage]] at every entry
     * point). localCheckpoint severs the lineage from the table being
-    * replaced (the update usually READS the current table).
+    * replaced (the update usually READS the current table); `readGen`
+    * is the centroid generation that read was based on.
     */
   private def writeCentroidsSwapped(updated: DataFrame, root: String,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
+      fs: org.apache.hadoop.fs.FileSystem, readGen: Long): Unit = {
     val cPath = s"$root/centroids"
-    val stage = new org.apache.hadoop.fs.Path(s"$root/centroids.__stage")
     val snap = updated.localCheckpoint()
-    fs.delete(stage, true)
+    val stage = graft.table.Commit.freshStage(fs, cPath)
     snap.write.mode("overwrite").parquet(stage.toString)
-    graft.table.Commit.commitStage(fs, cPath, replacedDirs = Set(""))
+    graft.table.Commit.commitStage(fs, cPath, replacedDirs = Set(""), readGen)
   }
 
   /** Nearest-`nprobe` cell assignment of `vecs` ((id, e) with e
@@ -708,13 +711,13 @@ object AnnIndex {
       // rows partitioned by cell, commit append-only — the staged
       // files join the touched cells' manifests atomically, untouched
       // cells keep their bytes, and no existing file moves
-      val corpusStage = new org.apache.hadoop.fs.Path(s"$root/corpus.__stage")
-      fs.delete(corpusStage, true)
+      val corpusGen = graft.table.Commit.readGen(fs, s"$root/corpus")
+      val corpusStage = graft.table.Commit.freshStage(fs, s"$root/corpus")
       // one staged file per touched cell per batch (not one per input
       // partition x cell) — bounds append fragmentation at the source
       rows.repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(corpusStage.toString)
-      graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty)
+      graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty, corpusGen)
       appendIdMap(rows.select(col("vec_id"), col("cell")), root)
     }
     base.count()
@@ -815,14 +818,14 @@ object AnnIndex {
       val before = manifestFiles(fs, corpusPath, s"cell=$cell")
       if (before <= 1) (before, before)
       else {
-        val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage")
-        fs.delete(stage, true)
+        val stage = graft.table.Commit.freshStage(fs, corpusPath)
+        val corpusGen = graft.table.Commit.readGen(fs, corpusPath)
         graft.streaming.Streaming
           .readCommittedDirs(spark, corpusPath, Set(s"cell=$cell"))
           .foreach { members =>
             members.coalesce(1)
               .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"))
+            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen)
           }
         (before, manifestFiles(fs, corpusPath, s"cell=$cell"))
       }
@@ -859,6 +862,7 @@ object AnnIndex {
     val corpusPath = s"$root/corpus"
     graft.table.Commit.withWriterLease(fs, root) {
       heal(spark, root, fs)
+      val centroidsGen = graft.table.Commit.readGen(fs, s"$root/centroids")
       val centroids = graft.streaming.Streaming.readCommitted(spark, s"$root/centroids")
         .select(col("cell"), col("centroid"), col("n_build")).collect()
       require(centroids.length > minK,
@@ -878,6 +882,7 @@ object AnnIndex {
         }
         .minBy(_._2)
       val dst = absorber.getInt(0)
+      val corpusGen = graft.table.Commit.readGen(fs, corpusPath)
       graft.streaming.Streaming
         .readCommittedDirs(spark, corpusPath, Set(s"cell=$cell")).foreach { src =>
           // members re-labeled to the absorber and re-written as new
@@ -886,13 +891,12 @@ object AnnIndex {
             .select(col("vec_id"), col("q8"), col("nrm"), lit(dst).as("cell"))
             .localCheckpoint()
           withIdMapDirty(fs, root) {
-            val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage")
-            fs.delete(stage, true)
+            val stage = graft.table.Commit.freshStage(fs, corpusPath)
             moved.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
             // adds land under cell=dst (whose existing entries survive);
             // cell=$cell's entries are replaced by nothing — the folded
             // cell leaves the manifest atomically with the commit
-            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"))
+            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen)
             upsertIdMap(moved.select(col("vec_id"), col("cell")), root)
           }
         }
@@ -901,7 +905,7 @@ object AnnIndex {
         .withColumn("n_build",
           when(col("cell") === dst, col("n_build") + lit(folded.getLong(2)))
             .otherwise(col("n_build")))
-      writeCentroidsSwapped(updated, root, fs)
+      writeCentroidsSwapped(updated, root, fs, centroidsGen)
       dst
     }
   }
@@ -943,7 +947,9 @@ object AnnIndex {
     val corpusPath = s"$root/corpus"
     graft.table.Commit.withWriterLease(fs, root) {
     heal(spark, root, fs)
+    val centroidsGen = graft.table.Commit.readGen(fs, s"$root/centroids")
     val centroids = graft.streaming.Streaming.readCommitted(spark, s"$root/centroids")
+    val corpusGen = graft.table.Commit.readGen(fs, corpusPath)
     // pinned + dir-restricted: one cell's files, however large the
     // index. The 2-means runs in RAW space — q8/127 x nrm reconstructs
     // each member up to int8 rounding — so the sub-centroids are
@@ -968,14 +974,13 @@ object AnnIndex {
       // replaced set is the split cell PLUS whatever Spark staged —
       // covering the degenerate 2-means that routes every member to
       // one side (the old dir's entries must still be superseded).
-      val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage")
-      fs.delete(stage, true)
+      val stage = graft.table.Commit.freshStage(fs, corpusPath)
       reassigned.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
       val stagedDirs = fs.listStatus(stage)
         .filter(_.isDirectory).map(_.getPath.getName).toSet
       withIdMapDirty(fs, root) {
         graft.table.Commit.commitStage(fs, corpusPath,
-          stagedDirs + s"cell=$cell")
+          stagedDirs + s"cell=$cell", corpusGen)
         // sidecar relabel for the moved half (the retained half keeps
         // its cell id — only newCell rows change assignment)
         graft.streaming.Streaming
@@ -1000,7 +1005,7 @@ object AnnIndex {
         .join(counts, Seq("cell"), "left").na.fill(0L, Seq("n_build"))
       val updated = centroids.filter(col("cell") =!= cell)
         .unionByName(subCentroids.select(centroids.columns.map(col).toIndexedSeq: _*))
-      writeCentroidsSwapped(updated, root, fs)
+      writeCentroidsSwapped(updated, root, fs, centroidsGen)
       newCell
     } finally members.unpersist()
     }

@@ -12,7 +12,6 @@ import org.apache.spark.sql.types.LongType
 
 import graft.sources.GraftTable
 import graft.streaming.Streaming
-import graft.table.Commit
 
 /** SQL DML → library verbs (r18 judge #3): an analyzer RESOLUTION
   * rule that plans `MERGE INTO` / `UPDATE` / `DELETE FROM` statements
@@ -165,7 +164,7 @@ case class GraftMergeCommand(
     val stats = Streaming.mergeInto(spark, path, src, conditionSql,
       whenMatchedUpdate = update, whenMatchedDelete = delete,
       whenNotMatchedInsert = insert, stagePartitionBy = stagePartitionBy)
-    Commit.refreshListing(path)
+    graft.table.Commit.refreshListing(path)
     Seq(Row(stats.matched, stats.inserted))
   }
 }
@@ -189,7 +188,7 @@ case class GraftUpdateCommand(
     val assigns = assignmentSql.map { case (k, v) => k -> expr(v) }.toMap
     val n = Streaming.updateWhere(spark, path, pred, assigns,
       stagePartitionBy = stagePartitionBy)
-    Commit.refreshListing(path)
+    graft.table.Commit.refreshListing(path)
     Seq(Row(n))
   }
 }
@@ -207,7 +206,7 @@ case class GraftDeleteCommand(
 
   override def run(spark: SparkSession): Seq[Row] = {
     val n = Streaming.deleteWhere(spark, path, expr(predicateSql))
-    Commit.refreshListing(path)
+    graft.table.Commit.refreshListing(path)
     Seq(Row(n))
   }
 }

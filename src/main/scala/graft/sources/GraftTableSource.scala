@@ -214,10 +214,8 @@ class GraftTableSource extends RelationProvider
               "(followers detect the drift via the per-commit schema fingerprint)")
         }
       }
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val stageName = s".__stage-$token"
-      val stage = new Path(target + stageName)
-      fs.delete(stage, true)
+      val stageName = Commit.writerStageName()
+      val stage = Commit.freshStage(fs, target, stageName)
       val parts = parameters.get("partitionBy").toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       // AQE-sized staged write (r19 advisor, medium): REBALANCE by the
@@ -238,8 +236,7 @@ class GraftTableSource extends RelationProvider
           case Some(snap) => snap.paths.map(dirOf).toSet + ""
           case None => Set.empty
         }
-      Commit.commitStage(fs, target, replaced, stageName,
-        baseGen = Some(existing.getOrElse(0L)))
+      Commit.commitStage(fs, target, replaced, existing.getOrElse(0L), stageName)
     }
 
     mode match {
@@ -859,10 +856,8 @@ private[sources] class GraftStreamSink(
                 "deliberately")
           }
         }
-        val token = java.util.UUID.randomUUID().toString.take(8)
-        val stageName = s".__stage-$token"
-        val stage = new Path(target + stageName)
-        fs.delete(stage, true)
+        val stageName = Commit.writerStageName()
+        val stage = Commit.freshStage(fs, target, stageName)
         val parts = parameters.get("partitionBy").toSeq
           .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
         // the batch path's REBALANCE hint, but NOT AQE-sized here:
@@ -874,8 +869,7 @@ private[sources] class GraftStreamSink(
         val writer = sized.write.mode("overwrite")
         (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
           .parquet(stage.toString)
-        Commit.commitStage(fs, target, Set.empty, stageName,
-          baseGen = Some(listing.latest.getOrElse(0L)),
+        Commit.commitStage(fs, target, Set.empty, listing.latest.getOrElse(0L), stageName,
           tag = Some(tag), txn = Some((scope, batchId)))
     }
   }

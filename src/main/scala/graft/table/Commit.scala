@@ -11,19 +11,9 @@ object Commit {
 
   // ====================================================================
   // Persisted-state mutation protocol: IMMUTABLE MANIFEST-SELECTED
-  // COMMITS (the Iceberg/Delta shape, r14 judge #1).
-  //
-  // Through round 14 the protocol swapped whole partition DIRECTORIES
-  // (stage renamed in, live twin renamed aside and retained one verb) —
-  // writer-crash-atomic, and manifest-pinned readers resolved each file
-  // live-or-aside. The residual race was structural: a pinned file's
-  // PATH MOVED during a swap, so a reader racing the rename between its
-  // resolve probe and the scan lost the file and had to retry
-  // (withSnapshotRetry) — retry-shaped tail latency under maintenance
-  // storms.
-  //
-  // Round 15 removes the channel entirely: a data file's path NEVER
-  // changes while any retained manifest generation references it.
+  // COMMITS (the Iceberg/Delta shape). A data file's path NEVER changes
+  // while any retained manifest generation references it, so a pinned
+  // reader never loses a file to a concurrent commit.
   //
   //  - A mutation stages its new files OUTSIDE the table
   //    (`target.__stage`), then records a COMMIT PLAN (the staged file
@@ -59,20 +49,21 @@ object Commit {
   // renames and the per-file footer-stat reads are THREAD-POOLED
   // (r15 judge #3): a wide commit's FS round-trips divide by the pool.
   //
-  // Round 16 adds OPTIMISTIC MULTI-WRITER commits (r15 judge #2, the
-  // Delta/Iceberg concurrency model): the manifest-generation rename
-  // is a CAS, each commit plan records the generation its pinned read
-  // was based on (`B <gen>` — the transaction's snapshot version), and
-  // executeCommit checks STALENESS against it — a commit whose
-  // replaced dirs changed since its read aborts with
-  // CommitConflictException (the verb re-runs); a commit overtaken
-  // only on DISJOINT dirs rebases its delta and retries the CAS. Two
-  // writers on disjoint shards therefore commit concurrently with no
-  // lease and no lost update (upsertPartitionedOptimistic;
-  // ConcurrentCommitSpec; tools/ManifestScale's 2-writer storm:
-  // torn=0, residual=0, linear chain). The lease path remains the
-  // default for single-process pipelines — both paths share the same
-  // CAS commit, so mixing them cannot fork the chain.
+  // OPTIMISTIC MULTI-WRITER commits (the Delta/Iceberg concurrency
+  // model): the manifest-generation rename is a CAS, every commit plan
+  // records the generation its read was based on (the read generation
+  // — the transaction's snapshot version), and executeCommit checks
+  // STALENESS against it — a commit whose replaced or read dirs changed
+  // since its read aborts with CommitConflictException (the verb
+  // re-runs); a commit overtaken only on DISJOINT dirs rebases its
+  // delta and retries the CAS. Two writers on disjoint shards therefore
+  // commit concurrently with no lease and no lost update
+  // (upsertPartitionedOptimistic; ConcurrentCommitSpec;
+  // tools/ManifestScale's 2-writer storm: torn=0, residual=0, linear
+  // chain). The lease serializes lease-holding verbs only: they state
+  // their read generation too, so an optimistic writer landing inside
+  // a leased verb's read-to-commit window conflicts it rather than
+  // losing its rows.
   //
   // SCHEMA EVOLUTION (r15 judge #5): every commit records its added
   // files' parquet-schema fingerprint in the manifest (`# schema`
@@ -127,67 +118,77 @@ object Commit {
     * are idempotent, the manifest delta is recomputed from the plan
     * and skipped if already committed).
     *
+    * `readGen` is the generation the writer's read was based on (0 for
+    * a table with no committed generation): the roll-forward conflicts
+    * when a dir the plan replaces or read changed after it, even when
+    * its CAS rename wins uncontested, so a lease-holding verb is safe
+    * against the optimistic writers the lease does not exclude.
+    *
     * `stageName` defaults to the shared `.__stage` used by the
     * lease-serialized verbs; optimistic concurrent writers pass a
-    * per-writer unique suffix ([[upsertPartitionedOptimistic]]) so
-    * their stages never collide. The manifest advance itself is a CAS
-    * (see [[executeCommit]]) in both modes.
+    * per-writer unique suffix ([[graft.streaming.Streaming.upsertPartitionedOptimistic]])
+    * so their stages never collide. The manifest advance itself is a
+    * CAS (see [[executeCommit]]) in both modes.
     */
   def commitStage(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       replacedDirs: Set[String],
+      readGen: Long,
       stageName: String = ".__stage",
-      baseGen: Option[Long] = None,
       tag: Option[String] = None,
       txn: Option[(String, Long)] = None,
       modifiedEntries: Seq[ManifestEntry] = Nil,
       volatileDirs: Set[String] = Set.empty,
-      keyEnvelopes: Seq[(String, Char, String, String)] = Nil
+      keyEnvelopes: Seq[KeyEnvelope] = Nil
   ): Unit = {
     val stage = new org.apache.hadoop.fs.Path(target + stageName)
-    val files = listRel(fs, stage)
-    // `B <gen>`: the manifest generation the writer's pinned READ was
-    // based on — the transaction's snapshot version (the Delta shape).
-    // Staleness is checked against it in executeCommit: a commit
-    // touching dirs that CHANGED since the read must conflict even
-    // when its CAS rename wins uncontested (the racing writer may have
-    // committed long before our rename). Absent for lease-serialized
-    // verbs, whose lease spans read-to-commit.
-    val plan =
-      (baseGen.toSeq.map(g => s"B $g") ++
-        tag.toSeq.map(t => s"T $t") ++
-        txn.toSeq.map { case (s, i) => s"X $s $i" } ++
-        replacedDirs.toSeq.sorted.map(d => s"R $d") ++
-        volatileDirs.toSeq.sorted.map(d => s"V $d") ++
-        // `E <col>:<kind>:<lo>:<hi>` (URL-encoded like bounds tokens,
-        // or the `E *` wildcard): this plan's NOT-MATCHED decisions
-        // depend on NO live row existing with a key inside the
-        // envelope — a window commit ADDING an entry whose bounds
-        // intersect it (even in a brand-new dir the volatile set
-        // cannot name) must conflict (r18 judge #6).
-        keyEnvelopes.map {
-          case ("*", _, _, _) => "E *"
-          case (c, k, lo, hi) =>
-            def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-            s"E ${enc(c)}:$k:${enc(lo)}:${enc(hi)}"
-        } ++
-        modifiedEntries.sortBy(_.path).map(m => s"M ${m.encode}") ++
-        files.sorted.map(f => s"F $f"))
-        .mkString("\n")
-    val tmp = new org.apache.hadoop.fs.Path(stage, ".plan.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(plan.getBytes("UTF-8")) finally out.close()
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, StageCommitMarker))
+    writePlan(fs, stage, CommitPlan(Some(readGen), listRel(fs, stage), replacedDirs,
+      volatileDirs, keyEnvelopes, modifiedEntries, tag, txn))
     executeCommit(fs, target, stage)
   }
+
+  /** Land `plan` at `stage`'s [[StageCommitMarker]]: written to a temp
+    * name and renamed in, so a torn write reads as "no plan".
+    */
+  private[graft] def writePlan(
+      fs: org.apache.hadoop.fs.FileSystem,
+      stage: org.apache.hadoop.fs.Path,
+      plan: CommitPlan
+  ): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(stage, ".plan.tmp")
+    writeLines(fs, tmp, Seq(plan.encode))
+    fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, StageCommitMarker))
+  }
+
+  /** The stage `target<stageName>`, emptied for a fresh staged write. */
+  def freshStage(
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      stageName: String = ".__stage"
+  ): org.apache.hadoop.fs.Path = {
+    val stage = new org.apache.hadoop.fs.Path(target + stageName)
+    fs.delete(stage, true)
+    stage
+  }
+
+  /** A per-writer stage name (`.__stage-<token>`): optimistic writers
+    * take no lease, so their stages must never collide.
+    */
+  def writerStageName(): String = s".__stage-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** The current latest generation of `target`, 0 for a table with no
+    * committed generation: the read generation of a read taken now.
+    */
+  def readGen(fs: org.apache.hadoop.fs.FileSystem, target: String): Long =
+    Snapshot.list(fs, target).latest.getOrElse(0L)
 
   /** Thrown when an optimistic commit loses the manifest CAS to a
     * concurrent commit whose changed directories OVERLAP this one's
     * `replacedDirs` — the loser's pinned read is stale, so rebasing
     * the manifest delta would silently drop the winner's rows. The
     * caller must re-run its whole verb (re-read the now-current
-    * shards, re-merge, re-stage) — [[upsertPartitionedOptimistic]]
+    * shards, re-merge, re-stage) — [[graft.streaming.Streaming.upsertPartitionedOptimistic]]
     * does exactly that. Disjoint concurrent commits never see this:
     * they REBASE (recompute the delta against the winner's generation)
     * and retry the CAS, so two writers on disjoint shards both land.
@@ -218,44 +219,13 @@ object Commit {
       target: String,
       stage: org.apache.hadoop.fs.Path
   ): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(stage, StageCommitMarker)
-    val planBytes = {
-      val len = fs.getFileStatus(marker).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(marker)
-      try in.readFully(buf) finally in.close()
-      new String(buf, "UTF-8")
+    val plan = {
+      val in = fs.open(new org.apache.hadoop.fs.Path(stage, StageCommitMarker))
+      try CommitPlan.decode(new String(in.readAllBytes(), "UTF-8")) finally in.close()
     }
-    val lines = planBytes.split("\n", -1).toSeq
-    val replacedDirs = lines.collect { case l if l.startsWith("R ") => l.substring(2) }.toSet
-    val files = lines.collect { case l if l.startsWith("F ") => l.substring(2) }
-    val baseGen = lines.collectFirst { case l if l.startsWith("B ") => l.substring(2).toLong }
-    val commitTagOpt = lines.collectFirst { case l if l.startsWith("T ") => l.substring(2) }
-    val commitTxnOpt = lines.collectFirst {
-      case l if l.startsWith("X ") => l.substring(2).split(' ')
-    }.collect { case Array(scope, id) => (scope, id.toLong) }
-    // `M <entry line>`: MODIFY an existing entry in place (a
-    // delete-vector retag riding in the same atomic commit as this
-    // plan's adds — the MERGE/updateWhere shape: update = DV-delete +
-    // re-insert in ONE generation). `V <dir>`: a dir whose LIVE ROWS
-    // this plan's position scan depends on without replacing its
-    // files — conflict-checked like a replaced dir (a racing rewrite
-    // invalidates the scanned positions), but its entries survive.
-    val modifiedByPath: Map[String, ManifestEntry] = lines.collect {
-      case l if l.startsWith("M ") =>
-        val e = ManifestEntry.decode(l.substring(2))
-        e.path -> e
-    }.toMap
-    val volatileDirs = lines.collect { case l if l.startsWith("V ") => l.substring(2) }.toSet
-    val keyEnvelopes: Seq[(String, Char, String, String)] = lines.collect {
-      case "E *" => ("*", '*', "", "")
-      case l if l.startsWith("E ") =>
-        def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-        l.substring(2).split(':') match {
-          case Array(c, k, lo, hi) if k.length == 1 => (dec(c), k.head, dec(lo), dec(hi))
-          case _ => throw new IllegalStateException(s"corrupt plan envelope line: $l")
-        }
-    }
+    import plan.{files, replacedDirs, volatileDirs}
+    val modifiedByPath: Map[String, ManifestEntry] =
+      plan.modified.iterator.map(e => e.path -> e).toMap
     val targetPath = new org.apache.hadoop.fs.Path(target)
     if (!fs.exists(targetPath)) fs.mkdirs(targetPath)
     // parent dirs first (serial — they dedupe to the touched-shard
@@ -274,7 +244,6 @@ object Commit {
         require(fs.rename(src, dst), s"commit move failed: $src -> $dst")
       } // already moved by the interrupted run: skip
     }
-    refreshListing(target)
     // per-file row counts + schema fingerprints from the parquet
     // footers of the files THIS commit added — O(batch) metadata reads
     // (thread-pooled like the renames); counts make table/dir sizes a
@@ -294,12 +263,7 @@ object Commit {
     // only the touched dirs' entries per retained generation.
     def abortConflict(detail: String): Nothing = {
       val listing = Snapshot.list(fs, target)
-      val protectedPaths: Set[String] =
-        listing.gens.flatMap { g =>
-          try listing.at(g, Some(touchedDirs)).paths
-          catch { case _: IllegalStateException => Nil } // chain pruned mid-walk
-        }.toSet
-      files.filterNot(protectedPaths).foreach(f =>
+      files.filterNot(listing.referencedPaths(listing.gens, touchedDirs)).foreach(f =>
         fs.delete(new org.apache.hadoop.fs.Path(targetPath, f), false))
       fs.delete(stage, true)
       throw new CommitConflictException(
@@ -336,10 +300,9 @@ object Commit {
         case None => Some((listRel(fs, targetPath).toSet -- files)
           .map(p => p -> ManifestEntry.bare(p)).toMap)
       }
-      val base: Option[Snapshot] = prevGen.map(listing.at(_, Some(touchedDirs)))
       val baseTouched: Map[String, ManifestEntry] = bootstrapAll match {
         case Some(all) => all.filter { case (p, _) => touchedDirs(dirOf(p)) }
-        case None => base.get.byPath
+        case None => listing.at(prevGen.get, Some(touchedDirs)).byPath
       }
       // one grouping pass over the touched base, reused by the post
       // state and the replay check (not a rescan per dir)
@@ -366,7 +329,7 @@ object Commit {
       // give the same entries the landed commit recorded.) This MUST run
       // before the staleness scan: a crash between the manifest rename
       // and the stage delete leaves a plan whose own commit sits inside
-      // the (baseGen, latest] window, and scanning first would read the
+      // the (readGen, latest] window, and scanning first would read the
       // replay as a conflict and abort a commit that already LANDED.
       val already = prevGen.isDefined && touchedDirs.forall { d =>
         baseEntriesByDir.getOrElse(d, Seq.empty).sortBy(_.path) == postTouched(d)
@@ -375,7 +338,7 @@ object Commit {
       else {
         // STALENESS check (the conflict detection): scan the recorded
         // delta lines of every generation between the snapshot the
-        // writer's read was based on (`B <gen>` in the plan) and the
+        // writer's read was based on (the plan's read generation) and the
         // current latest — each O(its batch). Any dir in our
         // replacedDirs touched in that window means our staged merge
         // would silently drop the interloper's rows — conflict,
@@ -385,7 +348,7 @@ object Commit {
         // window that cannot be scanned exactly — a pruned generation,
         // a legacy flat checkpoint, a `# rebuild` — can no longer
         // prove disjointness and conflicts conservatively.
-        baseGen.filter(bg => prevGen.exists(_ > bg)).foreach { bg =>
+        plan.readGen.filter(bg => prevGen.exists(_ > bg)).foreach { bg =>
           listing.changedDirs(bg, prevGen.get) match {
             case None =>
               abortConflict(s"the window (gen $bg, gen ${prevGen.get}] of $target cannot " +
@@ -408,10 +371,10 @@ object Commit {
           // granularity cannot see it, so the adds are checked
           // value-level against their recorded zone bounds. An add
           // with no bounds for an envelope column cannot prove
-          // disjointness and conflicts conservatively; the `*`
-          // wildcard (an un-pruned merge with an insert clause)
-          // conflicts on any add outside the already-checked dirs.
-          if (keyEnvelopes.nonEmpty) {
+          // disjointness and conflicts conservatively. An add inside
+          // the replaced or volatile dirs already conflicted above, so
+          // the wildcard envelope conflicts on any add at all.
+          if (plan.envelopes.nonEmpty) {
             val windowAdds: Option[Seq[ManifestEntry]] =
               ((bg + 1) to prevGen.get).foldLeft(Option(Seq.empty[ManifestEntry])) {
                 (acc, g) =>
@@ -423,20 +386,7 @@ object Commit {
                 abortConflict(s"the window (gen $bg, gen ${prevGen.get}] of $target " +
                   "cannot be scanned for key-envelope conflicts")
               case Some(adds) =>
-                val wildcard = keyEnvelopes.exists(_._1 == "*")
-                val typed = keyEnvelopes.filterNot(_._1 == "*")
-                val hit = adds.find { l =>
-                  if (wildcard) !(replacedDirs ++ volatileDirs)(l.dir)
-                  else {
-                    typed.forall { case (c, k, lo, hi) =>
-                      l.bounds.range(c) match {
-                        case None => true // unprovable: conservative
-                        case Some((bk, mn, mx)) =>
-                          bk != k || Snapshot.overlapsRendered(k, mn, mx, lo, hi)
-                      }
-                    }
-                  }
-                }
+                val hit = adds.find(l => plan.envelopes.forall(_.mayHold(l)))
                 hit.foreach(l => abortConflict(
                   s"a concurrent commit added ${l.path} whose bounds " +
                     "intersect this merge's key envelope — the staged " +
@@ -460,18 +410,19 @@ object Commit {
         }
         if (tryCommitManifest(fs, listing, gen, postState,
             tombstones.toSeq.sorted, addEntries, schemaHash = commitSchema,
-            tag = commitTagOpt, txn = commitTxnOpt,
+            tag = plan.tag, txn = plan.txn,
             modified = modifiedByPath.values.toSeq.sortBy(_.path))) done = true
         // else: lost the CAS to a concurrent commit at `gen` — loop.
         // The staleness check above re-runs against the new latest
-        // (baseGen is fixed), so an overlapping winner aborts and a
-        // disjoint one REBASES: the delta is recomputed against its
-        // generation and the CAS retried at gen+1. Lease-serialized
-        // plans (no `B` line) can only lose to writeManifest-style
-        // bootstraps and rebase unconditionally, as before.
+        // (the read generation is fixed), so an overlapping winner
+        // aborts and a disjoint one REBASES: the delta is recomputed
+        // against its generation and the CAS retried at gen+1. A plan
+        // with no read generation, left by an older writer, rebases
+        // unconditionally.
       }
     }
     fs.delete(stage, true)
+    refreshListing(target)
   }
 
   /** Collapse duplicate entries for the same file path, keeping the
@@ -655,20 +606,24 @@ object Commit {
     * are untouched in both branches, so readers never notice. Every
     * mutation verb (and AnnIndex's lease-holding open) runs this first.
     */
-  def recoverStage(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(target + ".__stage")
+  def recoverStage(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit =
+    recover(fs, target, new org.apache.hadoop.fs.Path(target + ".__stage"))
+
+  /** Roll `stage` forward when it carries a plan, back when it does
+    * not. A plan that now conflicts with commits landed since is
+    * aborted cleanly by [[executeCommit]] (moved files + stage
+    * deleted); the batch is NOT lost — the source's redelivery
+    * contract re-runs the verb against the current generation.
+    */
+  private def recover(
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      stage: org.apache.hadoop.fs.Path
+  ): Unit =
     if (fs.exists(new org.apache.hadoop.fs.Path(stage, StageCommitMarker)))
       try executeCommit(fs, target, stage)
-      catch {
-        // the crashed writer's plan now conflicts with commits that
-        // landed since: executeCommit already aborted it cleanly
-        // (moved files + stage deleted). The batch is NOT lost — the
-        // source's redelivery contract re-runs the verb against the
-        // current generation.
-        case _: CommitConflictException => ()
-      }
+      catch { case _: CommitConflictException => () }
     else fs.delete(stage, true)
-  }
 
   /** A per-writer optimistic stage (`<target>.__stage-<token>`) is
     * presumed ABANDONED — its writer crashed — once this old; younger
@@ -695,13 +650,8 @@ object Commit {
     val now = System.currentTimeMillis()
     fs.listStatus(parent).foreach { st =>
       if (st.isDirectory && st.getPath.getName.startsWith(prefix) &&
-          now - st.getModificationTime > StageAbandonedMs) {
-        val stage = st.getPath
-        if (fs.exists(new org.apache.hadoop.fs.Path(stage, StageCommitMarker)))
-          try executeCommit(fs, target, stage)
-          catch { case _: CommitConflictException => () } // aborted cleanly
-        else fs.delete(stage, true)
-      }
+          now - st.getModificationTime > StageAbandonedMs)
+        recover(fs, target, st.getPath)
     }
   }
 
@@ -1112,13 +1062,8 @@ object Commit {
       // it) references is an orphan's — skipped here and left to the
       // generation that really replaces it. The check loads only the
       // del file's own dirs per retained generation.
-      val delDirs = rels.map(dirOf).toSet
-      val protectedPaths: Set[String] = listing.gens
-        .filter(_ > cutoff)
-        .flatMap { g =>
-          try listing.at(g, Some(delDirs)).paths
-          catch { case _: IllegalStateException => Nil } // chain pruned mid-walk
-        }.toSet
+      val protectedPaths =
+        listing.referencedPaths(listing.gens.filter(_ > cutoff), rels.map(dirOf).toSet)
       val dirs = scala.collection.mutable.Set.empty[String]
       rels.filterNot(protectedPaths).foreach { rel =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$target/$rel"), false)

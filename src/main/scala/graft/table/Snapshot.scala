@@ -251,6 +251,14 @@ final class Listing private[table] (
       }
     }
 
+  /** The paths any of `gens` references in `dirs`; a generation whose
+    * chain is pruned while this listing is read references none.
+    */
+  def referencedPaths(gens: Seq[Long], dirs: Set[String]): Set[String] =
+    gens.flatMap { g =>
+      try at(g, Some(dirs)).paths catch { case _: IllegalStateException => Nil }
+    }.toSet
+
   /** Generation `gen`, restricted to `dirs` (None = all): O(requested
     * dirs' entries + #dir refs + window deltas) — the manifest-list read
     * path a shard-scoped verb takes on a table of millions of files.
@@ -365,6 +373,13 @@ object Snapshot {
     val l = list(fs, target)
     l.latest.map(l.at(_))
   }
+
+  /** The latest generation of a table a verb of this module wrote;
+    * `doing` names the refused action when there is none.
+    */
+  def requireLatest(fs: FileSystem, target: String, doing: String): Snapshot =
+    latest(fs, target).getOrElse(throw new IllegalStateException(
+      s"cannot $doing $target: no committed manifest (not maintained by this module)"))
 
   def walk(fs: FileSystem, target: String, from: Long, to: Long): Vector[Snapshot] =
     list(fs, target).walk(from, to)

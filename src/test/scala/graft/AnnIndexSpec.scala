@@ -555,19 +555,9 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       .write.mode("overwrite").partitionBy("cell").parquet(corpusPath + ".__stage")
     locally {
       val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage")
-      def walk(p: org.apache.hadoop.fs.Path, rel: String): Seq[String] =
-        fs.listStatus(p).toSeq.flatMap { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("_") || n.startsWith(".")) Nil
-          else if (st.isDirectory) walk(st.getPath, if (rel.isEmpty) n else s"$rel/$n")
-          else Seq(if (rel.isEmpty) n else s"$rel/$n")
-        }
-      val files = walk(stage, "")
-      val plan = (Seq(s"R cell=$fat", "R cell=4") ++ files.sorted.map(f => s"F $f"))
-        .mkString("\n")
-      val out = fs.create(new org.apache.hadoop.fs.Path(stage,
-        graft.table.Commit.StageCommitMarker), true)
-      try out.write(plan.getBytes("UTF-8")) finally out.close()
+      val files = graft.table.Commit.listRel(fs, stage)
+      graft.table.Commit.writePlan(fs, stage,
+        graft.table.CommitPlan(readGen = None, files, Set(s"cell=$fat", "cell=4")))
       val first = files.head
       val dst = new org.apache.hadoop.fs.Path(s"$corpusPath/$first")
       if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
@@ -608,7 +598,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       fs.delete(stage, true)
       cur.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
       graft.table.Commit.commitStage(fs, corpusPath,
-        Set(s"cell=$fat", "cell=77"))
+        Set(s"cell=$fat", "cell=77"), graft.table.Commit.readGen(fs, corpusPath))
     }
     val repaired = AnnIndex.repairOrphanCells(spark, root)
     repaired shouldBe Seq(77)
@@ -757,8 +747,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     spark.read.parquet(s"$root/corpus").filter(col("cell") === 0)
       .withColumn("cell", lit(999))
       .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-    fs.create(new org.apache.hadoop.fs.Path(stage,
-      graft.table.Commit.StageCommitMarker), true).close()
+    graft.table.Commit.writePlan(fs, stage, graft.table.CommitPlan(readGen = None))
 
     // retrain into the SAME root (the r13 advisor's medium scenario)
     val (c1, v1) = AnnIndex.build(corpusN(300), k = 4, vecCol = "e", dim = dim)
@@ -799,7 +788,8 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val stage = new org.apache.hadoop.fs.Path(s"$root/corpus.__stage")
     fs.delete(stage, true)
     newRow.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-    graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty)
+    graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty,
+      graft.table.Commit.readGen(fs, s"$root/corpus"))
 
     // the next entry heals: sidecar rebuilt from the PINNED corpus —
     // the appended row is listed, the tables agree, serving sees it

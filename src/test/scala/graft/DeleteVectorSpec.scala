@@ -224,4 +224,35 @@ class DeleteVectorSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     Streaming.deleteWhere(spark, target, col("id") === 99999L) shouldBe 0L
     Streaming.manifestGenerations(fs, target) shouldBe gensBefore
   }
+
+  test("a deleteWhere that dies after its plan lands rolls forward once through " +
+      "recoverAbandonedStages") {
+    val target = seed("graft-dv-recover")
+    // the writer dies at its manifest claim: its plan-bearing stage stays
+    Commit.registerClaimPrimitive("file", new Commit.ClaimPrimitive {
+      def claim(fs: org.apache.hadoop.fs.FileSystem, tmp: Path, dst: Path): Boolean =
+        throw new IllegalStateException("writer died at the manifest claim")
+    })
+    val crash =
+      try intercept[IllegalStateException](Streaming.deleteWhere(spark, target, col("id") % 10 === 3))
+      finally Commit.unregisterClaimPrimitive("file")
+    crash.getMessage shouldBe "writer died at the manifest claim"
+    val stages = fs.listStatus(new Path(target).getParent).map(_.getPath)
+      .filter(_.getName.startsWith("t.__stage-"))
+    stages should have size 1
+    fs.exists(new Path(stages.head, Commit.StageCommitMarker)) shouldBe true
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
+    Streaming.readCommitted(spark, target).count() shouldBe 200L
+    // aged past the abandonment TTL, the plan rolls forward exactly once
+    fs.setTimes(stages.head, System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
+    Commit.recoverAbandonedStages(fs, target)
+    fs.exists(stages.head) shouldBe false
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
+    Streaming.readCommitted(spark, target).count() shouldBe 180L
+    Snapshot.latest(fs, target).get.entries.flatMap(_.dv).map(_.n).sum shouldBe 20L
+    Commit.recoverAbandonedStages(fs, target)
+    Streaming.deleteWhere(spark, target, col("id") % 10 === 3) shouldBe 0L
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
+    Streaming.readCommitted(spark, target).count() shouldBe 180L
+  }
 }

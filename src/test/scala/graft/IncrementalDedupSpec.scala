@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
-import graft.table.Commit
+import graft.table.{Commit, CommitPlan}
 
 /** The PERSISTED cycle of incremental cross-batch dedup, which the
   * oracled q_dedup_incremental (in-plan fixture split) cannot show:
@@ -224,17 +224,8 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSessionSetup {
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
     locally {
       val stage = new org.apache.hadoop.fs.Path(target + ".__stage")
-      def walk(p: org.apache.hadoop.fs.Path, rel: String): Seq[String] =
-        fs.listStatus(p).toSeq.flatMap { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("_") || n.startsWith(".")) Nil
-          else if (st.isDirectory) walk(st.getPath, if (rel.isEmpty) n else s"$rel/$n")
-          else Seq(if (rel.isEmpty) n else s"$rel/$n")
-        }
-      val plan = (Seq("R shard=1") ++ walk(stage, "").sorted.map(f => s"F $f")).mkString("\n")
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(stage, Commit.StageCommitMarker), true)
-      try out.write(plan.getBytes("UTF-8")) finally out.close()
+      Commit.writePlan(fs, stage,
+        CommitPlan(readGen = None, Commit.listRel(fs, stage), Set("shard=1")))
     }
     assert(Streaming.readCommitted(spark, target).count() == 100) // nothing torn
 

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
-import graft.table.{Commit, Snapshot}
+import graft.table.{Commit, CommitPlan, Snapshot}
 
 /** MANIFEST-LIST checkpoints (the Iceberg manifest-list shape; r15
   * judge #3's last O(table) term): a checkpoint is a list of
@@ -181,11 +181,11 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     // delta lines are what keep the scan exact here
     (2L to 8L).foreach(v => upsert(target, 0 until 80 by 8, k => s"v$v-$k", v))
     val ex = intercept[Commit.CommitConflictException] {
-      Commit.commitStage(fs, target, Set("shard=0"), ".__stage-ovl", baseGen = Some(1L))
+      Commit.commitStage(fs, target, Set("shard=0"), 1L, ".__stage-ovl")
     }
     ex.getMessage should include("shard=0")
     // disjoint: rebases straight through the checkpoint and lands
-    Commit.commitStage(fs, target, Set("shard=1"), ".__stage-dis", baseGen = Some(1L))
+    Commit.commitStage(fs, target, Set("shard=1"), 1L, ".__stage-dis")
     val got = Streaming.readCommitted(spark, target)
       .select("doc_id", "payload").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -207,7 +207,8 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       .repartition(5)
       .write.mode("overwrite").partitionBy("shard")
       .parquet(target + ".__stage")
-    Commit.commitStage(fs, target, Set.empty) // append: replaces nothing
+    // append: replaces nothing
+    Commit.commitStage(fs, target, Set.empty, Commit.readGen(fs, target))
     val gen2 = Streaming.manifestGenerations(fs, target).max
     val before = Streaming.manifestEntries(fs, target, gen2)
     val frag0 = before.count(_.startsWith("shard=0/"))
@@ -237,11 +238,11 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     import spark.implicits._
     val target = Files.createTempDirectory("graft-ml-replay").toString + "/t"
     upsert(target, 0 until 80, k => s"v1-$k", 1L) // gen 1
-    // an optimistic commit on shard=0 against baseGen 1 -> gen 2
+    // an optimistic commit on shard=0 against read generation 1 -> gen 2
     (0 until 80 by 8).map(k => (k.toLong, s"v2-$k", 2L, 0L))
       .toDF("doc_id", "payload", "batch_id", "shard")
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
-    Commit.commitStage(fs, target, Set("shard=0"), ".__stage", baseGen = Some(1L))
+    Commit.commitStage(fs, target, Set("shard=0"), 1L, ".__stage")
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
     val committed = Snapshot.at(fs, target, 2L, Some(Set("shard=0"))).paths
     committed should not be empty
@@ -249,10 +250,7 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     // plan marker (files already moved, manifest already committed)
     val stage = new Path(target + ".__stage")
     fs.mkdirs(stage)
-    val plan = (Seq("B 1", "R shard=0") ++ committed.sorted.map(f => s"F $f"))
-      .mkString("\n")
-    val out = fs.create(new Path(stage, Commit.StageCommitMarker), true)
-    try out.write(plan.getBytes("UTF-8")) finally out.close()
+    Commit.writePlan(fs, stage, CommitPlan(Some(1L), committed, Set("shard=0")))
     // recovery must recognize the landed commit: no new generation, no
     // deletion of the manifest-referenced files
     Commit.recoverStage(fs, target)

@@ -10,7 +10,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
-import graft.table.{Commit, Snapshot}
+import graft.table.{Commit, CommitPlan, Snapshot}
 
 /** Reader-side snapshot isolation for the persisted state layer under
   * the IMMUTABLE commit protocol (r14 judge #1): every completed
@@ -50,18 +50,8 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
     sharded(rows).write.mode("overwrite").partitionBy("shard")
       .parquet(target + ".__stage")
     val stage = new Path(target + ".__stage")
-    def walk(p: Path, rel: String): Seq[String] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath, if (rel.isEmpty) n else s"$rel/$n")
-        else Seq(if (rel.isEmpty) n else s"$rel/$n")
-      }
-    val files = walk(stage, "")
-    val plan = (replaced.toSeq.sorted.map(d => s"R $d") ++ files.sorted.map(f => s"F $f"))
-      .mkString("\n")
-    val out = fs.create(new Path(stage, Commit.StageCommitMarker), true)
-    try out.write(plan.getBytes("UTF-8")) finally out.close()
+    val files = Commit.listRel(fs, stage)
+    Commit.writePlan(fs, stage, CommitPlan(readGen = None, files, replaced))
     // the crash: one file moved, the rest still staged, manifest not bumped
     val first = files.head
     val dst = new Path(s"$target/$first")
@@ -286,7 +276,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
     // docs in a brand-new shard and commit with no replaced dirs
     sharded(Seq((200L, "new-200", 2L), (201L, "new-201", 2L)))
       .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
-    Commit.commitStage(fs, target, replacedDirs = Set.empty)
+    Commit.commitStage(fs, target, replacedDirs = Set.empty, Commit.readGen(fs, target))
     val gens = Streaming.manifestGenerations(fs, target)
     gens.size shouldBe 2
     // append-only: the delta is EXACTLY the appended rows

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FilterFileSystem, FSDataInputStream, Path}
 import org.apache.spark.sql.functions.col
@@ -118,4 +119,38 @@ class SnapshotSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       Streaming.manifestEntries(cfs, target, 17L) should not be empty)
     check("Snapshot.walk")(cfs => Snapshot.walk(cfs, target, 8L, 18L) should have size 11)
   }
+
+  test("one deleteWhere lists the manifest dir 4 times") {
+    val target = Files.createTempDirectory("graft-snapshot-delete").toString + "/t"
+    upsert(target, 0 until 80, 1L)
+    // the verb opens its filesystem from the session conf: swap in the
+    // counting one, uncached so every open yields a counting instance
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = Option(conf.get("fs.file.impl"))
+    conf.set("fs.file.impl", classOf[ListCountingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    ListCountingFs.listed.clear()
+    try Streaming.deleteWhere(spark, target, col("id") % 7 === 3) shouldBe 11L
+    finally {
+      impl.fold(conf.unset("fs.file.impl"))(conf.set("fs.file.impl", _))
+      conf.unset("fs.file.impl.disable.cache")
+    }
+    val mdir = Snapshot.manifestDir(target).toUri.getPath
+    // the read's listing, the commit attempt's, and the two of the prune
+    ListCountingFs.listed.asScala.count(_.toUri.getPath == mdir) shouldBe 4
+  }
+}
+
+/** The local filesystem recording every path it lists, for a verb that
+  * opens its own filesystem from the Hadoop conf.
+  */
+class ListCountingFs extends graft.core.GraftLocalFileSystem {
+  override def listStatus(p: Path): Array[FileStatus] = {
+    ListCountingFs.listed.add(p)
+    super.listStatus(p)
+  }
+}
+
+object ListCountingFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 }

@@ -9,7 +9,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.streaming.Streaming
 import graft.streaming.Streaming.EventRow
-import graft.table.{Commit, Snapshot}
+import graft.table.{Commit, CommitPlan, Snapshot}
 
 class StreamingSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
@@ -218,9 +218,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       val stage = new org.apache.hadoop.fs.Path(target + ".__stage")
       val files = fs.listStatus(stage).filter(_.isFile).map(_.getPath.getName)
         .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      val plan = (Seq("R ") ++ files.sorted.map(f => s"F $f")).mkString("\n")
-      val out = fs.create(new org.apache.hadoop.fs.Path(stage, Commit.StageCommitMarker), true)
-      try out.write(plan.getBytes("UTF-8")) finally out.close()
+      Commit.writePlan(fs, stage, CommitPlan(readGen = None, files.toSeq, Set("")))
     }
     Streaming.readCommitted(spark, target).count() shouldBe 2L
     // ...and the next micro-batch on restart heals FIRST (recovery is

@@ -10,7 +10,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.operators.MinHashLsh
 import graft.streaming.Streaming
-import graft.table.{Commit, Snapshot}
+import graft.table.{Commit, CommitPlan, Snapshot}
 
 /** The immutable commit protocol behind every persisted-state mutation
   * (upsertPartitionedBatch, deleteFromPartitioned, AnnIndex's verbs):
@@ -51,18 +51,8 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     */
   private def writePlan(target: String, replaced: Set[String]): Seq[String] = {
     val stage = new Path(target + ".__stage")
-    def walk(p: Path, rel: String): Seq[String] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath, if (rel.isEmpty) n else s"$rel/$n")
-        else Seq(if (rel.isEmpty) n else s"$rel/$n")
-      }
-    val files = walk(stage, "")
-    val plan = (replaced.toSeq.sorted.map(d => s"R $d") ++ files.sorted.map(f => s"F $f"))
-      .mkString("\n")
-    val out = fs.create(new Path(stage, Commit.StageCommitMarker), true)
-    try out.write(plan.getBytes("UTF-8")) finally out.close()
+    val files = Commit.listRel(fs, stage)
+    Commit.writePlan(fs, stage, CommitPlan(readGen = None, files, replaced))
     files
   }
 

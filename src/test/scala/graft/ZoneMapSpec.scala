@@ -258,7 +258,7 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
         .withColumn("shard", col("shard").cast("int"))
         .coalesce(1)
         .write.mode("overwrite").parquet(target + ".__stage")
-      Commit.commitStage(fs, target, Set.empty)
+      Commit.commitStage(fs, target, Set.empty, Commit.readGen(fs, target))
     }
     val degraded = Snapshot.latest(fs, target).flatMap(_.clusteringDepth("id")).get
     degraded should be > 2.0
