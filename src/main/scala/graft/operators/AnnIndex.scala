@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -131,7 +133,7 @@ object AnnIndex {
       .join(out.groupBy(col("cell")).agg(count(lit(1)).as("n_build")), Seq("cell"), "left")
       .na.fill(0L, Seq("n_build"))
     (centroids, out)
-    } catch { case t: Throwable => base.unpersist(blocking = false); throw t }
+    } catch { case NonFatal(t) => base.unpersist(blocking = false); throw t }
   }
 
   /** Persist the index: centroids plain, corpus partitioned by cell —

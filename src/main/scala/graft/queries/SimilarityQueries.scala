@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -347,7 +349,7 @@ object SimilarityQueries {
             col("e1").as("exact1_cosine"))
           .orderBy("qid")
         }
-        } catch { case t: Throwable => emb.unpersist(blocking = false); throw t }
+        } catch { case NonFatal(t) => emb.unpersist(blocking = false); throw t }
       },
       Some(s"""WITH b0 AS MATERIALIZED (SELECT vec_id,
                   ${VectorKit.sanitizedSql("CAST(embedding AS DOUBLE[])")} AS e
@@ -582,7 +584,7 @@ object SimilarityQueries {
             col("e1").as("exact1_cosine"))
           .orderBy("qid")
         }
-        } catch { case t: Throwable => emb.unpersist(blocking = false); throw t }
+        } catch { case NonFatal(t) => emb.unpersist(blocking = false); throw t }
       },
       Some(s"""WITH b0 AS MATERIALIZED (SELECT vec_id,
                   ${VectorKit.sanitizedSql("CAST(embedding AS DOUBLE[])")} AS e
@@ -781,7 +783,7 @@ object SimilarityQueries {
             col("e1").as("exact1_cosine"))
           .orderBy("qid")
         }
-        } catch { case t: Throwable => emb.unpersist(blocking = false); throw t }
+        } catch { case NonFatal(t) => emb.unpersist(blocking = false); throw t }
       },
       Some(s"""WITH b0 AS MATERIALIZED (SELECT vec_id,
                   ${VectorKit.sanitizedSql("CAST(embedding AS DOUBLE[])")} AS e
@@ -913,7 +915,7 @@ object SimilarityQueries {
               col("e1").as("exact1_cosine"))
             .orderBy("qid")
         }
-        } catch { case t: Throwable => base.unpersist(blocking = false); throw t }
+        } catch { case NonFatal(t) => base.unpersist(blocking = false); throw t }
       },
       Some(s"""WITH b0 AS MATERIALIZED (SELECT vec_id,
                   ${VectorKit.sanitizedSql("CAST(embedding AS DOUBLE[])")} AS e

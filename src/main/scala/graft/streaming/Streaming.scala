@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.table.{Commit, FooterSchema, KeyEnvelope, Listing, ManifestEntry, ManifestLine,
   Snapshot}
 import graft.table.Commit.{commitStage, listRel, recoverAbandonedStages, recoverStage,
-  refreshListing, tryCommitManifest, withWriterLease, CommitConflictException,
-  StageAbandonedMs}
+  refreshListing, sweepManifestDir, tryCommitManifest, withWriterLease,
+  CommitConflictException}
 import graft.table.Manifest.dirOf
 import graft.table.Snapshot.{manifestDir, ManifestKeep}
 
@@ -432,14 +432,17 @@ object Streaming {
 
   /** User-facing GC (r18 judge, missing #5): delete ORPHAN data files
     * — files physically present under `target` but referenced by NO
-    * retained manifest generation and owed to NO pending tombstone
-    * file (those age out through the commit-path horizon GC, which
-    * owns retention) — i.e. the leftovers of crashed writers: files
-    * moved into the live tree by a commit that never landed, or an
-    * aborted plan whose cleanup died mid-delete. The protocol never
-    * READS such files (pinned readers resolve manifests, not
+    * manifest generation still in the manifest dir (a tombstoned file
+    * stays listed by its pre-replacement generation until the horizon
+    * GC deletes it) — i.e. the leftovers of crashed writers: files
+    * moved into the live tree by a commit that never landed, an
+    * aborted plan whose cleanup died mid-delete, or the tombstones of
+    * a generation whose writer died before aging it out. The protocol
+    * never READS such files (pinned readers resolve manifests, not
     * listings), so they cost only storage — vacuum is a bytes
-    * reclaimer, never a correctness verb.
+    * reclaimer, never a correctness verb. A deleting run also sweeps
+    * the manifest dir ([[Commit.sweepManifestDir]], with the sidecar
+    * walk).
     *
     * `olderThanMs` guards IN-FLIGHT commits: a live writer moves
     * staged files before its manifest CAS lands, so only files whose
@@ -468,17 +471,12 @@ object Streaming {
       s"cannot vacuum $target: no committed manifest (not maintained by this module)")
     val referenced: Set[String] =
       listing.walkAll().flatMap(_.paths).toSet
-    // files a pending tombstone file owns: their deletion belongs to
-    // the horizon GC (a pinned reader inside the horizon may still
-    // resolve the generation that references them)
-    val pendingDel: Set[String] = listing.files.map(_.name).filter(_.startsWith("del-"))
-      .flatMap(n => listing.readLines(n).getOrElse(Nil)).toSet
     val now = System.currentTimeMillis()
     def aged(p: org.apache.hadoop.fs.Path): Boolean =
       try now - fs.getFileStatus(p).getModificationTime >= olderThanMs
       catch { case _: java.io.FileNotFoundException => false }
     val candidates = listRel(fs, targetPath)
-      .filterNot(referenced).filterNot(pendingDel)
+      .filterNot(referenced)
       .filter(rel => aged(new org.apache.hadoop.fs.Path(s"$target/$rel")))
       .sorted
     val bytes = candidates.map { rel =>
@@ -507,6 +505,7 @@ object Streaming {
         try { if (fs.listStatus(dp).isEmpty) fs.delete(dp, false) }
         catch { case _: java.io.FileNotFoundException => () }
       }
+      sweepManifestDir(fs, listing, walkSidecars = true)
     }
     VacuumStats(candidates, bytes, deleted, staleStages)
   }
@@ -996,7 +995,7 @@ object Streaming {
         // writers: the read generation lets the commit's staleness scan
         // catch one that replaced a fragmented shard since the read
         commitStage(fs, target, fragmented, snap.gen)
-        sweepUnreferencedSidecars(fs, target)
+        sweepManifestDir(fs, Snapshot.list(fs, target), walkSidecars = true)
         fragmented.size
       }
     }
@@ -1114,7 +1113,7 @@ object Streaming {
         done = tryCommitManifest(fs, listing, current.gen + 1, postState, Nil, Nil,
           modified = applicable.values.toSeq.sortBy(_.path))
       }
-      sweepUnreferencedSidecars(fs, target)
+      sweepManifestDir(fs, Snapshot.list(fs, target), walkSidecars = true)
       refreshListing(target)
       retagged.size
     }
@@ -1225,34 +1224,6 @@ object Streaming {
         val kept = bloomKeptEntries(spark, target, zoned, column, Seq(value))
         (kept.size, zoned.size, snap.entries.size)
     }
-  }
-
-  /** GC delete-vector (`dv-`) and bloom (`bl-`) sidecars that no
-    * RETAINED generation's entries reference anymore — run from the
-    * maintenance verbs that retire them (compaction, a bloom rebuild),
-    * where an O(retained entry lists) metadata pass is already in
-    * budget, never from the per-commit prune. Sidecars younger than
-    * the stage-abandonment TTL are left alone: an in-flight
-    * [[deleteWhere]] or [[buildBloomIndex]] writes its sidecar BEFORE
-    * the tagging commit lands, and sweeping inside that window would
-    * tear it.
-    */
-  private def sweepUnreferencedSidecars(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String
-  ): Unit = {
-    val listing = Snapshot.list(fs, target)
-    val now = System.currentTimeMillis()
-    val sidecars = listing.files.filter(f =>
-      (f.name.startsWith("dv-") || f.name.startsWith("bl-")) &&
-        now - f.mtimeMs > StageAbandonedMs).map(_.name)
-    if (sidecars.isEmpty) return
-    val referenced: Set[String] =
-      try listing.walkAll().flatMap(_.entries.flatMap(e => e.dv.map(_.sidecar) ++ e.blooms.values))
-        .toSet
-      catch { case _: IllegalStateException => sidecars.toSet } // pruned mid-walk: keep all
-    sidecars.filterNot(referenced).foreach(n =>
-      fs.delete(new org.apache.hadoop.fs.Path(manifestDir(target), n), false))
   }
 
   /** Run an ACTION over the pinned snapshot with automatic

@@ -177,19 +177,11 @@ final class Listing private[table] (
   private val decoded = new java.util.concurrent.ConcurrentHashMap[String, Vector[ManifestLine]]()
 
   private def read(name: String): Vector[ManifestLine] =
-    decoded.computeIfAbsent(name, _ => readText(name).map(ManifestLine.decode))
-
-  private def readText(name: String): Vector[String] = {
-    val in = fs.open(new Path(dir, name))
-    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    text.split("\n").iterator.filter(_.nonEmpty).toVector
-  }
-
-  /** The non-empty lines of a plain manifest-dir file (a tombstone
-    * list); None when it vanished since the listing.
-    */
-  def readLines(name: String): Option[Vector[String]] =
-    try Some(readText(name)) catch { case _: FileNotFoundException => None }
+    decoded.computeIfAbsent(name, _ => {
+      val in = fs.open(new Path(dir, name))
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      text.split("\n").iterator.filter(_.nonEmpty).map(ManifestLine.decode).toVector
+    })
 
   private def refuse(gen: Long, cause: Throwable = null): Nothing =
     throw new IllegalStateException(

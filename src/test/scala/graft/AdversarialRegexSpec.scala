@@ -114,28 +114,34 @@ class AdversarialRegexSpec extends AnyFunSuite with SparkSessionSetup {
 
   test("the unbounded pattern really was quadratic (documents why the bound exists)") {
     // growth-ratio probe on small n so the spec stays fast: doubling n
-    // must at least ~3x the time for the unbounded pattern (quadratic
-    // = 4x) while the bounded one stays ~2x (linear). Ratios, not
-    // absolutes, so host speed doesn't matter.
-    // median of 5 runs per size: the other timing tests carry ~50x
-    // margins, but this one asserts a growth RATIO of two
-    // millisecond-scale measurements, where a single JIT/GC/co-tenancy
-    // hiccup could flake it (advisor r10) — the median absorbs that.
-    def cost(re: String, n: Int): Double = {
-      val bait = "a" * n
-      val pat = Pattern.compile(re)
-      val runs = Seq.fill(5) {
-        val t0 = System.nanoTime()
-        val m = pat.matcher(bait)
+    // must more than 2.5x the work for the unbounded pattern
+    // (quadratic = 4x), while the bounded one stays ~2x (linear) and
+    // fails the same threshold. The work is COUNTED, not timed: the
+    // matcher reads its input through a CharSequence that counts
+    // charAt calls, so the ratio is exact on any host under any load
+    // (two millisecond-scale timings flaked it under a loaded suite).
+    final class CountingChars(s: String) extends CharSequence {
+      var reads = 0L
+      def length: Int = s.length
+      def charAt(i: Int): Char = { reads += 1; s.charAt(i) }
+      def subSequence(from: Int, to: Int): CharSequence = s.subSequence(from, to)
+      override def toString: String = s
+    }
+    def growth(re: String): Double = {
+      def reads(n: Int): Long = {
+        val bait = new CountingChars("a" * n)
+        val m = Pattern.compile(re).matcher(bait)
         while (m.find()) {}
-        (System.nanoTime() - t0) / 1e9
+        bait.reads
       }
-      runs.sorted.apply(runs.size / 2)
+      reads(16000).toDouble / reads(8000)
     }
     val unbounded = "[a-z0-9._]+@[a-z]+\\.[a-z]+"
-    cost(unbounded, 4000) // JIT warm
-    val r = cost(unbounded, 16000) / cost(unbounded, 8000)
-    assert(r > 2.5, f"unbounded growth ratio $r%.1f — if this fails, Java's engine " +
+    val r = growth(unbounded)
+    assert(r > 2.5, f"unbounded growth ratio $r%.2f — if this fails, Java's engine " +
       "stopped backtracking here and the bound may be relaxable")
+    val linear = growth(TextKit.EmailRe)
+    assert(linear < 2.5, f"bounded growth ratio $linear%.2f — linear growth must not " +
+      "pass the quadratic threshold")
   }
 }

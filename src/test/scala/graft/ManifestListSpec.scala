@@ -23,8 +23,9 @@ import graft.table.{Commit, CommitPlan, Snapshot}
   * checkpoints stay readable and migrate to the new format at the
   * next checkpoint. Unreferenced per-dir manifests (CAS losers,
   * crashed attempts) are swept once their generation ages past the
-  * horizon, while reused references keep their m-files alive across
-  * checkpoints indefinitely.
+  * horizon, crashed writers' temp files once they are abandoned, while
+  * reused references keep their m-files alive across checkpoints
+  * indefinitely.
   */
 class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
@@ -267,27 +268,42 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     (0L until 80L by 8L).foreach(k => got(k) shouldBe s"v2-$k")
   }
 
-  test("an ORPHAN del file (writer died before its manifest CAS) never deletes " +
-      "live files; it is swept without honoring its list") {
+  test("an orphan `.inc-N.tmp-*` / `.dv-tmp-*` left by a crashed writer is swept; " +
+      "live files stay and replaced files age out") {
     val target = Files.createTempDirectory("graft-ml-orphan").toString + "/t"
     upsert(target, 0 until 160, k => s"v1-$k", 1L) // gen 1, 8 shards
-    // a crashed writer's del for a gen-2 proposal that never landed,
-    // listing shard=7's LIVE files
+    val mdir = Snapshot.manifestDir(target)
+    def plant(p: Path, text: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    // a crashed writer's delta for a gen-2 proposal it never claimed,
+    // and a delete-vector sidecar write that died before its rename
     val live = Snapshot.at(fs, target, 1L, Some(Set("shard=7"))).paths
     live should not be empty
-    val orphan = new Path(Snapshot.manifestDir(target), "del-000000000002-dead")
-    val out = fs.create(orphan, true)
-    try out.write(live.sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
+    val incTmp = new Path(mdir, ".inc-2.tmp-dead")
+    plant(incTmp, live.sorted.map(p => s"- $p").mkString("\n"))
+    val dvTmp = new Path(mdir, ".dv-tmp-dead")
+    plant(new Path(dvTmp, "part-00000.parquet"), "torn")
     // gen 1's shard=0 files: LEGITIMATELY replaced by the storm below —
-    // their tombstones must still age out (the guard must not block
-    // real GC)
+    // their tombstones must still age out
     val replaced = Snapshot.at(fs, target, 1L, Some(Set("shard=0"))).paths
     replaced should not be empty
+    upsert(target, 0 until 160 by 8, k => s"v2-$k", 2L)
+    withClue("temp files younger than the abandonment window may be a live writer's: ") {
+      fs.exists(incTmp) shouldBe true
+      fs.exists(dvTmp) shouldBe true
+    }
+    val aged = System.currentTimeMillis() - Commit.StageAbandonedMs - 1000
+    Seq(incTmp, dvTmp).foreach(fs.setTimes(_, aged, -1))
     // advance far past the horizon on an unrelated shard
-    (2L to 8L).foreach(v => upsert(target, 0 until 160 by 8, k => s"v$v-$k", v))
-    withClue("orphan del file must be swept: ") { fs.exists(orphan) shouldBe false }
+    (3L to 8L).foreach(v => upsert(target, 0 until 160 by 8, k => s"v$v-$k", v))
+    withClue("aged orphan temp files must be swept: ") {
+      fs.exists(incTmp) shouldBe false
+      fs.exists(dvTmp) shouldBe false
+    }
     live.foreach { f =>
-      withClue(s"live file $f must survive the orphan del: ") {
+      withClue(s"live file $f must survive the orphan delta: ") {
         fs.exists(new Path(s"$target/$f")) shouldBe true
       }
     }

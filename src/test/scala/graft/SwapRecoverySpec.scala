@@ -172,12 +172,10 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       }
       e.getMessage should include("not retained")
     }
-    withClue("aged tombstone files are gone from the manifest dir: ") {
+    withClue("tombstones live only in the generation files — no del- file is written: ") {
       val mdir = Snapshot.manifestDir(target)
-      // dels written at gens 2..5 (gen 1 replaced nothing); the one at
-      // or below the cutoff (gen 2) is GC'd with its files
       fs.listStatus(mdir).map(_.getPath.getName)
-        .count(_.startsWith("del-")) shouldBe 3
+        .count(_.startsWith("del-")) shouldBe 0
     }
   }
 
