@@ -1,26 +1,30 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.collection.{immutable, mutable}
 
-/** Distributed graph ancestry.
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types._
+
+/** Graph ancestry over child->parent edge lists.
   *
-  * The reference computes ontology ancestors/descendants by collecting
-  * the whole graph to the driver into jgrapht
-  * (etl/backend/graph/GraphNode.scala:44-49,56-80) — O(V+E) driver
-  * memory, a hard wall at 100 TB. This operator re-expresses the same
-  * semantics as a distributed transitive closure over DataFrames.
+  * The reference computes ontology ancestors and descendants by
+  * collecting the graph to the driver into jgrapht
+  * (etl/backend/graph/GraphNode.scala:44-49,56-80); real ontologies
+  * have 10^4-10^5 edges. [[transitiveClosure]] does the same while the
+  * graph and its closure fit a fixed share of driver memory, and runs
+  * a distributed closure (smart path-doubling: log-many rounds of
+  * shuffle joins, each composing only the pairs the last round found)
+  * above that gate. Both paths give the same set of rows (OperatorsSpec
+  * runs both on the same graphs).
   *
-  * Three closure algorithms, all log-or-depth bounded rounds of
-  * shuffle joins, all spec-verified equal (OperatorsSpec), all
-  * measured against each other at sf0.1 (tools.ClosureCompare):
-  * smart path-doubling (delta ∘ closure, the default), plain
-  * path-doubling (closure ∘ closure, best on overlap-heavy DAGs at
-  * local scale), and semi-naive frontier iteration (delta ∘ edges,
-  * for incremental-delta workloads). Ontology DAGs are shallow
-  * (depth < 20), so the doubling variants converge in <= 5 rounds.
-  *
-  * Scale notes:
+  * Scale notes on the distributed loop:
   *  - every round is one shuffle join on the frontier key plus a
   *    distinct (second shuffle); both partition on the same key space;
   *  - `localCheckpoint` truncates the exponentially-growing plan
@@ -110,146 +114,148 @@ object Graph {
       case None => ck
     }
 
-  /** Full ancestor closure of a child->parent edge list.
+  /** Full ancestor closure of a child->parent edge list: every (n, a)
+    * with a path n -> a of length >= 1, so `(n, n)` appears iff n is on
+    * a cycle. Duplicate edges collapse. A null endpoint equals nothing,
+    * as in a join: an edge with one is kept, and a path ends at a null
+    * ancestor.
     *
-    * The default routes to [[transitiveClosureSmart]] — measured
-    * fastest on tree-like graphs and never catastrophically worse
-    * (tools.ClosureCompare numbers in each variant's doc). Callers on
-    * overlap-heavy DAGs can pick [[transitiveClosureDoubling]], which
-    * measured marginally faster there.
+    * One gate picks the path. A single one-task job collects at most
+    * [[DriverMaxEdges]] + 1 edges. The closure is computed on the
+    * driver when the input has at most [[DriverMaxEdges]] edges, both
+    * columns have one atomic type whose boxed equality is Spark's join
+    * equality (integral, UTF8_BINARY string or date), and the walk stays
+    * within [[DriverMaxPairs]] pairs; it is returned as a one-partition
+    * relation. Any other input, or a walk that passes the pair cap,
+    * runs [[distributedClosure]] unchanged. Both paths return the same
+    * set of rows and the same schema, and both throw
+    * IllegalStateException iff some pair's shortest path is longer than
+    * 2^maxRounds.
     *
     * @param edges DataFrame with exactly two columns: (child, parent).
     * @return DataFrame(node, ancestor): every (n, a) with a path n -> a.
     */
   def transitiveClosure(edges: DataFrame, maxRounds: Int = 20): DataFrame =
-    transitiveClosureSmart(edges, maxRounds)
+    transitiveClosure(edges, maxRounds, DriverMaxEdges, DriverMaxPairs)
 
-  /** Plain path-doubling closure: each round joins the closure-so-far
-    * with ITSELF, so reachable distance doubles per round. Log-many
-    * rounds, but the self-join re-derives every already-known pair
-    * each round before the distinct — [[transitiveClosureSmart]]
-    * composes off the delta instead and skips that re-derivation.
-    * Kept as the measurement baseline (no registry query pins it
-    * since the round-7 re-pin of q_graph_ancestry_dag to smart); the
-    * current numbers for all three variants live in
-    * [[transitiveClosureSmart]]'s scaladoc (single source of truth).
-    */
-  def transitiveClosureDoubling(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val Array(childCol, parentCol) = edges.columns
-    val base = edges
-      .select(col(childCol).as("node"), col(parentCol).as("ancestor"))
-      .distinct()
-      .localCheckpoint() // cluster: .checkpoint() against a reliable dir
-    var size = base.count()
-    var closure = compactFrontier(base, size)
-    var rounds = 0
-    var grown = true
-    while (grown && rounds < maxRounds) {
-      val next = closure
-        .as("a")
-        .join(closure.as("b"), col("a.ancestor") === col("b.node"))
-        .select(col("a.node").as("node"), col("b.ancestor").as("ancestor"))
-      val merged = closure.union(next).distinct().localCheckpoint()
-      val mergedSize = merged.count()
-      grown = mergedSize > size
-      closure = compactFrontier(merged, mergedSize)
-      size = mergedSize
-      rounds += 1
+  /** [[transitiveClosure]] with its two caps given, for tests. */
+  private[operators] def transitiveClosure(
+      edges: DataFrame,
+      maxRounds: Int,
+      maxEdges: Int,
+      maxPairs: Long): DataFrame = {
+    val head = edges.select(col(edges.columns(0)).as("node"), col(edges.columns(1)).as("ancestor"))
+    val Array(t, u) = head.schema.fields.map(_.dataType)
+    val onDriver =
+      if (t != u || !driverKey(t)) None
+      else {
+        val rows = collectAtMost(head, maxEdges + 1)
+        if (rows.length > maxEdges) None else driverClosure(rows, t, maxRounds, maxPairs)
+      }
+    onDriver match {
+      case Some(pairs) => oneRelation(head, pairs)
+      case None => distributedClosure(edges, maxRounds)
     }
-    // The final round still added pairs, so completeness is unknown: a
-    // silent return could hand the caller a truncated closure. Probe
-    // boundary-EXACTLY (the ConnectedComponents guard pattern) instead
-    // of throwing eagerly — one more composition, checked with a
-    // limit-1 isEmpty, decides whether the loop stopped exactly at
-    // convergence (legal: maxRounds == ceil(log2(depth))) or truncated.
-    if (grown) {
-      val probe = closure
-        .as("a")
-        .join(closure.as("b"), col("a.ancestor") === col("b.node"))
-        .select(col("a.node").as("node"), col("b.ancestor").as("ancestor"))
-        .join(closure, Seq("node", "ancestor"), "left_anti")
-      if (!probe.isEmpty)
-        throw new IllegalStateException(
-          s"transitiveClosureDoubling: pairs beyond the computed closure exist after " +
-            s"$maxRounds rounds; raise maxRounds")
-    }
-    closure
   }
 
-  /** Semi-naive FRONTIER closure: the depth-rounds/narrow-join
-    * alternative to path-doubling, kept for measurement and for the
-    * regime where it wins (deep closure already materialized, small
-    * per-round deltas).
-    *
-    * Each round joins only the NEW pairs (the frontier) against the
-    * base edge relation, then anti-joins against the closure-so-far so
-    * frontiers stay disjoint — the final result is a plain unionAll of
-    * checkpointed frontiers, no global distinct. Per-round shuffle is
-    * O(frontier + closure-anti-side) vs doubling's O(closure x 2) join
-    * + O(closure) distinct, but the round COUNT is the full depth
-    * (log2 for doubling).
-    *
-    * MEASURED on the sf0.1 binary tree (20k nodes, depth ~14,
-    * |closure| = 247,234; tools.ClosureCompare): frontier 5.7-6.5 s
-    * vs plain doubling 4.8-5.9 s vs smart doubling 3.3-3.4 s — the
-    * depth-many rounds of scheduling cost more than log-many wide
-    * joins at this scale, so a doubling variant stays the default;
-    * this shape remains correct-by-spec (OperatorsSpec equality) for
-    * callers with incremental-delta workloads, where only the delta
-    * re-derives.
+  /** Driver memory the driver closure may take: an eighth of the heap
+    * for the collected edges, and another eighth for the pairs.
     */
-  def transitiveClosureFrontier(edges: DataFrame, maxRounds: Int = 30): DataFrame = {
-    val Array(childCol, parentCol) = edges.columns
-    // re-alias after every checkpoint: minting fresh attribute ids per
-    // round keeps Union's constraint rewrite off stale ids when the
-    // same checkpointed frame appears on both sides of the self-join
-    def fresh(df: DataFrame): DataFrame =
-      df.select(col("node").as("node"), col("ancestor").as("ancestor"))
-    val e0 = edges
-      .select(col(childCol).as("node"), col(parentCol).as("ancestor"))
-      .distinct()
-      .localCheckpoint() // cluster: .checkpoint() against a reliable dir
-    val e = fresh(compactFrontierAuto(e0))
-    var frontiers = List(e)
-    var frontier = e
-    var rounds = 0
-    var done = frontier.isEmpty
-    while (!done && rounds < maxRounds) {
-      val closure = frontiers.reduce(_ union _)
-      val ck = frontier
-        .as("f")
-        .join(e.as("g"), col("f.ancestor") === col("g.node"))
-        .select(col("f.node").as("node"), col("g.ancestor").as("ancestor"))
-        .distinct()
-        .join(closure, Seq("node", "ancestor"), "left_anti")
-        .localCheckpoint()
-      // ONE flat job per round: count serves convergence AND sizing
-      // (an isEmpty here pays the limit scale-up's up-to-4 sequential
-      // mini-jobs on the final all-empty round — measured slower than
-      // the single cached-scan count at fixture scale)
-      val n = ck.count()
-      if (n == 0) done = true
-      else {
-        val next = fresh(compactFrontier(ck, n))
-        frontiers = next :: frontiers
+  private val DriverBudget: Long = Runtime.getRuntime.maxMemory / 8
+
+  /** 256 B an edge: its collected two-column UnsafeRow (~80 B) and its
+    * adjacency entry (boxed key, hash node, parent-buffer slot: ~150 B).
+    * 1,048,576 edges at -Xmx2g, 4,194,304 at -Xmx8g.
+    */
+  private[operators] val DriverMaxEdges: Int =
+    math.min(DriverBudget / 256, Int.MaxValue - 1L).toInt
+
+  /** 256 B a pair: its output UnsafeRow (~80 B) and two reference slots
+    * in the relation's RDD (16 B), the serialized copy inside the one
+    * task that scans it (~40 B), the copy that task reads (~80 B) and
+    * the walk's visited-set entry. 1,048,576 pairs at -Xmx2g, 4,194,304
+    * at -Xmx8g: `tools/ClosureScale` (12.5M pairs) stays distributed.
+    */
+  private[operators] val DriverMaxPairs: Long = DriverBudget / 256
+
+  /** Key types whose boxed internal value (java.lang.Long/Integer/...,
+    * UTF8String, the date's day number) is equal iff Spark's join
+    * equality holds. Binary (array identity), floating point (NaN,
+    * -0.0) and collated strings are not.
+    */
+  private def driverKey(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | DateType | StringType => true
+    case _ => false
+  }
+
+  /** At most `n` rows of `df`, in one job of one task: after
+    * `coalesce(1)` the scan stops at the limit (a plain limit-collect
+    * scans partitions in rounds of jobs).
+    */
+  private def collectAtMost(df: DataFrame, n: Int): Array[InternalRow] = {
+    val qe = df.coalesce(1).limit(n).queryExecution
+    SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect())
+  }
+
+  /** The closure of `rows` (child, parent) as (node, ancestor) rows: an
+    * adjacency map, then one BFS per child over its parents. BFS depth
+    * is the shortest path length, so the walk throws at the distributed
+    * loop's boundary (a pair at distance > 2^maxRounds). None once the
+    * walk passes `maxPairs`.
+    */
+  private def driverClosure(
+      rows: Array[InternalRow],
+      t: DataType,
+      maxRounds: Int,
+      maxPairs: Long): Option[Array[InternalRow]] = {
+    val parents = mutable.LinkedHashMap.empty[Any, mutable.ArrayBuffer[Any]]
+    rows.foreach(r => parents.getOrElseUpdate(r.get(0, t), mutable.ArrayBuffer.empty) += r.get(1, t))
+    val maxDepth = if (maxRounds >= 62) Long.MaxValue else 1L << maxRounds
+    val toRow = UnsafeProjection.create(Array[DataType](t, t))
+    val pair = new GenericInternalRow(2)
+    val out = mutable.ArrayBuffer.empty[InternalRow]
+    val starts = parents.iterator
+    while (starts.hasNext && out.size <= maxPairs) {
+      val (node, ps) = starts.next()
+      val seen = mutable.HashSet.empty[Any]
+      var frontier = ps
+      var depth = 0L
+      while (frontier.nonEmpty && out.size <= maxPairs) {
+        depth += 1
+        val next = mutable.ArrayBuffer.empty[Any]
+        frontier.foreach { a =>
+          if (out.size <= maxPairs && seen.add(a)) {
+            if (depth > maxDepth)
+              throw new IllegalStateException(
+                s"transitiveClosure: a shortest path of length $depth exceeds 2^$maxRounds; " +
+                  "raise maxRounds")
+            pair.update(0, node)
+            pair.update(1, a)
+            out += toRow(pair).copy()
+            if (a != null) parents.get(a).foreach(next ++= _)
+          }
+        }
         frontier = next
       }
-      rounds += 1
     }
-    // frontier advances ONE depth level per round (the doubling
-    // variants cover 2^rounds) — a deeper graph would silently return
-    // a truncated closure, so exhaustion is an error, not a result
-    if (!done)
-      throw new IllegalStateException(
-        s"transitiveClosureFrontier: frontier still non-empty after $maxRounds rounds " +
-          "(graph deeper than maxRounds); raise maxRounds or use transitiveClosure")
-    frontiers.reduce(_ union _)
+    if (out.size > maxPairs) None else Some(out.toArray)
   }
 
-  /** Smart path-doubling: log-many rounds like [[transitiveClosure]],
-    * but each round composes only the DELTA (pairs first discovered
-    * last round) with the closure — `delta ∘ closure ∪ closure ∘
-    * delta` — instead of `closure ∘ closure`.
+  /** `rows` as a relation with `like`'s schema, held in one partition
+    * and declared so: a count, groupBy or sort over it needs no
+    * exchange, and a scan of it is one task.
+    */
+  private def oneRelation(like: DataFrame, rows: Array[InternalRow]): DataFrame = {
+    val spark = like.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val rdd = spark.sparkContext.parallelize(immutable.ArraySeq.unsafeWrapArray(rows), 1)
+    PlanBridge.dataFrame(spark,
+      LogicalRDD(DataTypeUtils.toAttributes(like.schema), rdd, SinglePartition)(spark))
+  }
+
+  /** The distributed closure: smart path-doubling. Log-many rounds,
+    * each composing only the DELTA (pairs first discovered last round)
+    * with the closure — `delta ∘ closure ∪ closure ∘ delta` — so no
+    * round re-derives the pairs already known.
     *
     * Correctness: after round k the closure holds exactly the pairs
     * with shortest distance <= 2^k, and the delta those in
@@ -257,28 +263,10 @@ object Graph {
     * its path midpoint into halves of length <= 2^k (both in the
     * closure); at least one half has length > 2^(k-1) (else D <= 2^k),
     * i.e. is in the delta — so one of the two delta-joins derives it.
-    *
-    * Why it can beat plain doubling on overlap-heavy DAGs: the
-    * closure x closure join materializes every re-derivation of every
-    * already-known pair before the distinct; composing off the delta
-    * skips re-deriving the old closure, so join OUTPUT (the distinct's
-    * input) shrinks from O(closure x overlap) toward O(new pairs x
-    * overlap). The anti-join keeps deltas disjoint, so the final
-    * result is a plain unionAll, no global distinct.
-    *
-    * MEASURED (tools.ClosureCompare, sf0.1; round-7 re-measurement):
-    * binary tree (|closure| = 247,234): smart 3.4-4.2 s vs doubling
-    * 5.0-5.1 s vs frontier 6.0-6.1 s — the re-derivation skip
-    * dominates, smart is the [[transitiveClosure]] default.
-    * Multi-parent DAG (div2+div3 parents, |closure| = 897,357):
-    * doubling 6.6-6.7 s, frontier 6.5-6.8 s, smart 6.3-7.3 s — a
-    * statistical tie (the host-contention noise band swamps the
-    * spread), so the tie-breaker is the scale argument: smart's
-    * per-round join output is O(new pairs) where doubling's is
-    * O(closure), and q_graph_ancestry_dag re-pinned to smart in
-    * round 7 on that basis.
+    * The anti-join keeps deltas disjoint, so the final result is a
+    * plain unionAll, no global distinct.
     */
-  def transitiveClosureSmart(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
+  private[operators] def distributedClosure(edges: DataFrame, maxRounds: Int): DataFrame = {
     def fresh(df: DataFrame): DataFrame =
       df.select(col("node").as("node"), col("ancestor").as("ancestor"))
     val e0 = edges
@@ -344,7 +332,7 @@ object Graph {
         .join(closure, Seq("node", "ancestor"), "left_anti")
       if (!probe.isEmpty)
         throw new IllegalStateException(
-          s"transitiveClosureSmart: pairs beyond the computed closure exist after " +
+          s"transitiveClosure: pairs beyond the computed closure exist after " +
             s"$maxRounds rounds; raise maxRounds")
     }
     frontiers.reduce(_ union _)
@@ -384,7 +372,7 @@ object Graph {
     val e = edges
       .select(col(childCol).as("child"), col(parentCol).as("parent"))
       .distinct()
-    val closure = transitiveClosure(e)
+    val closure = transitiveClosure(edges)
     val tagged = closure
       .select(col("node"), col("ancestor").as("other"), lit(0).as("tag"))
       .union(closure.select(col("ancestor"), col("node"), lit(1)))
@@ -406,8 +394,12 @@ object Graph {
     * parent), as a child-first array (the reference's
     * `path: Seq[Seq[String]]`, GraphNode.scala:26,63-80).
     *
-    * SMART path-doubling enumeration (the delta-composition of
-    * [[transitiveClosureSmart]], forward-only): the path relation
+    * Always distributed: the path count is exponential in the graph's
+    * depth in general, so no edge cap bounds the driver memory a driver
+    * walk would need.
+    *
+    * Smart path-doubling enumeration (the delta-composition of
+    * [[distributedClosure]], forward-only): the path relation
     * holds (node, head, path); each round composes only the DELTA
     * (paths first built last round) as PREFIX with the closure as
     * suffix. Unlike reachability, a path's length is a fixed property,
@@ -416,11 +408,8 @@ object Graph {
     * into a prefix of length 2^k — in the delta, which holds all
     * lengths in (2^(k-1), 2^k] — and a closure suffix of length
     * <= 2^k. Still ceil(log2(depth)) rounds, but the join re-derives
-    * only new paths, not the whole relation (the tree-closure
-    * measurement: smart 3.3-3.4 s vs plain 4.8-5.0 s, and the path
-    * relation on a tree IS the closure). Path count bounds
-    * tractability: shallow ontology-like DAGs only — path count is
-    * exponential in general.
+    * only new paths, not the whole relation. Path count bounds
+    * tractability: shallow ontology-like DAGs only.
     */
   def rootPaths(edges: DataFrame, maxDepth: Int = 25): DataFrame = {
     val Array(childCol, parentCol) = edges.columns
@@ -451,7 +440,7 @@ object Graph {
         )
         .distinct()
       val ck = composed.join(closure, Seq("node", "head", "path"), "left_anti").localCheckpoint()
-      // one flat count job per round (see transitiveClosureSmart);
+      // one flat count job per round (see distributedClosure);
       // path rows carry arrays — compact at a lower rows/partition
       val n = ck.count()
       if (n == 0) done = true
@@ -462,7 +451,7 @@ object Graph {
       }
       rounds += 1
     }
-    // Truncation guard, boundary-exact (see transitiveClosureSmart):
+    // Truncation guard, boundary-exact (see distributedClosure):
     // probe one more prefix-composition; non-empty means paths beyond
     // the computed relation exist and the root filter below would
     // silently drop every node whose only root path exceeds maxDepth.

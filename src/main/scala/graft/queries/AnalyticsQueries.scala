@@ -247,12 +247,11 @@ object AnalyticsQueries {
     QueryDef(
       "q_graph_ancestry",
       (s, dir) => {
-        // Distributed ontology-ancestry closure (replaces the
-        // reference's driver-side jgrapht closure, GraphNode.scala:44-80
-        // — see graft.operators.Graph). Synthetic DAG: partkey k has
-        // parent k div 2, a binary tree of depth ~log2(|part|); the
-        // path-doubling closure converges in ~5 rounds where the naive
-        // edge iteration would take ~15.
+        // Ontology-ancestry closure (the reference's jgrapht closure,
+        // GraphNode.scala:44-80 — see graft.operators.Graph: a driver
+        // walk under its memory gate, path-doubling above it).
+        // Synthetic DAG: partkey k has parent k div 2, a binary tree of
+        // depth ~log2(|part|).
         val edges = Tables(s, dir, "part")
           .filter(col("p_partkey") >= 2)
           .select(col("p_partkey").as("child"), expr("p_partkey div 2").as("parent"))
@@ -282,14 +281,9 @@ object AnalyticsQueries {
         // Parents of k: k div 2 and k div 3 — ancestor sets overlap
         // heavily, so the per-round dedup genuinely collapses shared
         // paths rather than being a no-op. The recursive-CTE oracle
-        // dedups via UNION. PINS smart (delta-composed) doubling: the
-        // round-7 re-measurement has all three variants in a
-        // statistical tie on this DAG (two tools.ClosureCompare runs:
-        // doubling 6.6-6.7s, frontier 6.5-6.8s, smart 6.3-7.3s at
-        // sf0.1), and on a tie the scale argument decides — smart's
-        // per-round join output is O(new pairs), plain doubling's is
-        // O(closure), so smart degrades gracefully where the closure
-        // outgrows the delta. Full matrix in operators.Graph scaladoc.
+        // dedups via UNION. Graph.transitiveClosure walks the DAG on
+        // the driver under its memory gate and runs the distributed
+        // delta-composed loop above it; both give the same pairs.
         val part = Tables(s, dir, "part").select(col("p_partkey"))
         val edges = part.filter(col("p_partkey") >= 2)
           .select(col("p_partkey").as("child"), expr("p_partkey div 2").as("parent"))
@@ -297,7 +291,7 @@ object AnalyticsQueries {
             part.filter(col("p_partkey") >= 3)
               .select(col("p_partkey").as("child"), expr("p_partkey div 3").as("parent"))
           )
-        Graph.transitiveClosureSmart(edges)
+        Graph.transitiveClosure(edges)
           .groupBy(col("node"))
           .agg(
             count(lit(1)).as("n_ancestors"),

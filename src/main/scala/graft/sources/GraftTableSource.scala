@@ -215,7 +215,7 @@ class GraftTableSource extends RelationProvider
         }
       }
       val stageName = Commit.writerStageName()
-      val stage = Commit.freshStage(fs, target, stageName)
+      val stage = Commit.stagePath(target, stageName)
       val parts = parameters.get("partitionBy").toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       // AQE-sized staged write (r19 advisor, medium): REBALANCE by the
@@ -857,7 +857,7 @@ private[sources] class GraftStreamSink(
           }
         }
         val stageName = Commit.writerStageName()
-        val stage = Commit.freshStage(fs, target, stageName)
+        val stage = Commit.stagePath(target, stageName)
         val parts = parameters.get("partitionBy").toSeq
           .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
         // the batch path's REBALANCE hint, but NOT AQE-sized here:

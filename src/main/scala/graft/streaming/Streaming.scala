@@ -158,7 +158,7 @@ object Streaming {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__new")
-    val stage = Commit.freshStage(fs, target)
+    val stage = Commit.stagePath(target)
     winner.write.mode("overwrite").parquet(stage.toString)
     // flat layout: the staged files land at the table root and replace
     // every previous root entry
@@ -345,7 +345,7 @@ object Streaming {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__new")
-    val stage = Commit.freshStage(fs, target, stageName)
+    val stage = Commit.stagePath(target, stageName)
     winner.write.mode("overwrite").partitionBy(shardCol).parquet(stage.toString)
     // replaced dirs = the dir names SPARK wrote into the stage (never
     // re-derived by interpolating shard values — the hive-escaping
@@ -903,7 +903,7 @@ object Streaming {
       recoverStage(fs, target)
       // one snapshot is both what is read and what is replaced
       val snap = Snapshot.latest(fs, target)
-      val stage = Commit.freshStage(fs, target)
+      val stage = Commit.stagePath(target)
       readSnapshot(spark, fs, target, snap).repartitionByRange(numFiles, col(clusterCol))
         .sortWithinPartitions(clusterCol)
         .write.mode("overwrite").parquet(stage.toString)
@@ -988,7 +988,7 @@ object Streaming {
       if (fragmented.isEmpty) 0
       else {
         val touched = readEntries(spark, target, lines.filter(e => fragmented(e.dir)))
-        val stage = Commit.freshStage(fs, target)
+        val stage = Commit.stagePath(target)
         touched.repartition(col(shardCol))
           .write.mode("overwrite").partitionBy(shardCol).parquet(stage.toString)
         // the lease keeps lease-holding verbs out, not the optimistic
@@ -1357,7 +1357,7 @@ object Streaming {
       .join(keyRows.select(col(keyCol)), Seq(keyCol), "left_semi").count()
     if (deleted == 0L) return 0L
     val keep = touched.join(keyRows.select(col(keyCol)), Seq(keyCol), "left_anti")
-    val stage = Commit.freshStage(fs, target)
+    val stage = Commit.stagePath(target)
     // AQE-sized staged write (guide §2.5/§6): REBALANCE by the shard
     // column coalesces the touched shards' survivors into few
     // advisory-sized tasks (one data file per shard dir at commit-batch
@@ -1975,7 +1975,7 @@ object Streaming {
           Some(sidecarName))
       }
     val stageName = Commit.writerStageName()
-    val stage = Commit.freshStage(fs, target, stageName)
+    val stage = Commit.stagePath(target, stageName)
     newRows match {
       case Some(df) =>
         // size the add files by the KNOWN output row count (the verbs

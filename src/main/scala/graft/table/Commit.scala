@@ -167,10 +167,17 @@ object Commit {
       target: String,
       stageName: String = ".__stage"
   ): org.apache.hadoop.fs.Path = {
-    val stage = new org.apache.hadoop.fs.Path(target + stageName)
+    val stage = stagePath(target, stageName)
     fs.delete(stage, true)
     stage
   }
+
+  /** The stage `target<stageName>` where nothing can be left to empty:
+    * the shared `.__stage` right after [[recoverStage]] (which removes
+    * it or throws), or a new [[writerStageName]].
+    */
+  def stagePath(target: String, stageName: String = ".__stage"): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(target + stageName)
 
   /** A per-writer stage name (`.__stage-<token>`): optimistic writers
     * take no lease, so their stages must never collide.

@@ -3,6 +3,7 @@ package graft.table
 import java.io.FileNotFoundException
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -382,6 +383,12 @@ object Snapshot {
     */
   private val PoolThreads = 16
 
+  /** `items.map(f)` on up to [[PoolThreads]] threads. A failed `f`
+    * fails the batch loudly, but only once no call is left running:
+    * the ops not yet started are cancelled, the running ones awaited,
+    * then the first failure (in item order) is rethrown, so the caller
+    * never races a pool thread still renaming or creating files.
+    */
   private[graft] def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
     if (items.size <= 1) items.map(f)
     else {
@@ -391,10 +398,17 @@ object Snapshot {
         val futures = items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
           override def call(): B = f(a)
         }))
-        // .get() rethrows (wrapped) — a failed op must fail loudly
-        futures.map(fu =>
+        pool.shutdown()
+        try futures.map(fu =>
           try fu.get()
           catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
+        catch {
+          case NonFatal(e) =>
+            futures.foreach(_.cancel(false))
+            try pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+            catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+            throw e
+        }
       } finally pool.shutdownNow()
     }
 

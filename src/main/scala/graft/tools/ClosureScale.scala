@@ -11,9 +11,11 @@ import graft.operators.Graph
   * verdict item #5: "prove the compaction at scale and kill the
   * anti-scaling inversion question"). Builds K chains of length L
   * (closure = K * L*(L+1)/2 pairs — defaults give ~12.5M, well past
-  * the 10M bar), runs [[Graph.transitiveClosure]] (the smart-doubling
-  * variant every q_graph_* rung routes through), and prints total
-  * wall, TASK COUNT and summed task time from a listener.
+  * the 10M bar), runs [[Graph.transitiveClosure]], and prints total
+  * wall, TASK COUNT and summed task time from a listener. The default
+  * closure passes the driver path's pair cap at every driver heap up
+  * to 8 GB (4,194,304 pairs there), so this measures the distributed
+  * loop, after a driver walk that stops at the cap.
   *
   * The inversion diagnosis: at fixture scale the per-round frontier
   * scans fanned out to (shuffle partitions = cpus) tasks each, so task

@@ -2,6 +2,8 @@ package graft.tools
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.MinHashLsh
@@ -145,7 +147,7 @@ object ManifestScale {
         try {
           val n = Streaming.readCommitted(spark, target).count()
           if (validCounts.contains(n)) ok.incrementAndGet() else torn.incrementAndGet()
-        } catch { case _: Throwable => residual.incrementAndGet() }
+        } catch { case NonFatal(_) => residual.incrementAndGet() }
       }
     }, "manifest-scale-reader")
     reader.start()
@@ -194,7 +196,7 @@ object ManifestScale {
           val n = Streaming.readCommitted(spark, target).count()
           if (n >= base && n <= base + 2L * half) ok2.incrementAndGet()
           else torn2.incrementAndGet()
-        } catch { case _: Throwable => residual2.incrementAndGet() }
+        } catch { case NonFatal(_) => residual2.incrementAndGet() }
       }
     }, "manifest-scale-reader2")
     reader2.start()
@@ -208,7 +210,7 @@ object ManifestScale {
           attempts.addAndGet(
             Streaming.upsertPartitionedOptimistic(target, "doc_id", "batch_id", "shard")(
               mk(offset + i * shardSize, offset + i * shardSize + 1, 100L + i)))
-      } catch { case t: Throwable => werrs.add(t) }
+      } catch { case NonFatal(t) => werrs.add(t) }
     })
     val (_, storm2Sec) = time(s"2-writer optimistic storm (2 x $half upserts)") {
       val wa = optWriter(10L * rows)

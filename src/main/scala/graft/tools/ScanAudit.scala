@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.execution.FileSourceScanExec
 
 import graft.SparkEntry
@@ -41,7 +43,7 @@ object ScanAudit {
           println(f"[scan-audit] $name%-34s $table%-10s read=$width%2d/of=$disk%2d pushedDataFilters=$pushed")
         }
       } catch {
-        case e: Throwable => println(s"[scan-audit] $name FAILED: ${e.getClass.getSimpleName}")
+        case NonFatal(e) => println(s"[scan-audit] $name FAILED: ${e.getClass.getSimpleName}")
       }
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))

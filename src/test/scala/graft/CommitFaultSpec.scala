@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.EnumSet
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.locks.LockSupport
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -25,16 +26,26 @@ import graft.table.{Commit, Snapshot}
   * every mutating call throws, on every thread, until it is disarmed:
   * the writer is dead, so not even its `finally` blocks change the
   * disk. Calls from Spark's task threads are not counted (they are the
-  * executors', not the driver's).
+  * executors', not the driver's). A call from any other driver thread
+  * (the commit pool) is held in flight, deaf to interrupts as a slow
+  * store's call is: 5 ms, plus 5 ms for every call already in flight,
+  * so that calls started later end later and a verb that throws at its
+  * first failed call while later ones still run shows it.
   */
 class FaultyFs extends GraftLocalFileSystem.Raw {
   override def getUri: java.net.URI = java.net.URI.create("faulty:///")
   override def getScheme: String = "faulty"
 
   private def mutating[T](call: => T): T = {
-    FaultyFs.mutation()
-    FaultyFs.inFlight.incrementAndGet()
-    try call finally FaultyFs.inFlight.decrementAndGet()
+    val pooled = FaultyFs.mutation()
+    val before = FaultyFs.inFlight.getAndIncrement()
+    try {
+      if (pooled) {
+        val until = System.nanoTime() + 5000000L * (before + 1)
+        while (System.nanoTime() < until) LockSupport.parkNanos(until - System.nanoTime())
+      }
+      call
+    } finally FaultyFs.inFlight.decrementAndGet()
   }
 
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
@@ -69,28 +80,30 @@ object FaultyFs {
   private val inFlight = new AtomicInteger(0)
   @volatile private var armed = false
   @volatile private var crashAt = Long.MaxValue
+  @volatile private var armedBy: Thread = _
 
   /** Count from zero, crashing at call `k` (never for Long.MaxValue). */
-  def arm(k: Long): Unit = { calls.set(0); crashAt = k; armed = true }
-
-  /** Stop counting and crashing, once the calls other driver threads
-    * (the commit pool) still have in flight are done.
-    */
-  def disarm(): Unit = {
-    val deadline = System.currentTimeMillis() + 5000
-    while (inFlight.get() > 0 && System.currentTimeMillis() < deadline) Thread.sleep(5)
-    Thread.sleep(20)
-    armed = false
+  def arm(k: Long): Unit = {
+    calls.set(0); crashAt = k; armedBy = Thread.currentThread(); armed = true
   }
+
+  /** Stop counting and crashing. */
+  def disarm(): Unit = armed = false
+
+  /** Mutating calls running now, on any thread. */
+  def running: Int = inFlight.get()
 
   /** The driver's mutating calls since the last [[arm]]. */
   def counted: Long = calls.get()
 
-  private def mutation(): Unit = if (armed) {
-    val k =
-      if (Thread.currentThread().getName.startsWith("Executor task launch worker")) calls.get()
-      else calls.incrementAndGet()
+  /** Counts the call and throws from the crash point on; true for a
+    * counted call off the arming thread (a commit-pool call).
+    */
+  private def mutation(): Boolean = armed && {
+    val executor = Thread.currentThread().getName.startsWith("Executor task launch worker")
+    val k = if (executor) calls.get() else calls.incrementAndGet()
     if (k >= crashAt) throw new InjectedCrash(k)
+    !executor && Thread.currentThread() != armedBy
   }
 }
 
@@ -218,7 +231,13 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     for (k <- 1L to calls) withClue(s"crash at mutating call $k of $calls: ") {
       val t = copyTable(base, "graft-fault")
       FaultyFs.arm(k)
-      try verb(t) catch { case NonFatal(_) => () } finally FaultyFs.disarm()
+      try verb(t)
+      catch {
+        case NonFatal(_) =>
+          withClue("the verb threw while a commit-pool thread was still changing the disk: ") {
+            FaultyFs.running shouldBe 0
+          }
+      } finally FaultyFs.disarm()
       backdate(t)
       Commit.recoverAbandonedStages(faulty, t)
       Commit.recoverStage(faulty, t)
@@ -268,7 +287,9 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       Streaming.deleteWhere(spark, t, col("id") % 10 === 3)
     }
     info(s"$points crash points")
-    points should be > 10L
+    // exact: a redundant mutating call (such as deleting the writer's
+    // brand-new .__stage-<token>) adds a crash point and fails this
+    points shouldBe 27L
   }
 
   test("a compactShards crashed at ANY mutating call heals to generation g or g+1, " +
@@ -281,7 +302,8 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       Streaming.compactShards(spark, t, "shard") shouldBe 2
     }
     info(s"$points crash points")
-    points should be > 10L
+    // exact: deleting .__stage again after recoverStage would add one
+    points shouldBe 25L
   }
 
   test("a writer that dies between its CAS and its prune leaks that horizon's " +

@@ -2,9 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -21,38 +18,6 @@ import graft.streaming.Streaming
   * timings.
   */
 class MutationJobCountSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
-
-  /** Jobs started by `body`, counted between two marker jobs: the
-    * listener bus delivers events in order, so every job started
-    * between the markers' starts belongs to `body` (suites run one at
-    * a time in the forked test JVM).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = ArrayBuffer.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = groups.synchronized {
-        groups += Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      }
-    }
-    def marker(name: String): Unit = {
-      sc.setJobGroup(name, name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (groups.synchronized(!groups.contains(name)) && System.nanoTime() < deadline)
-        Thread.sleep(5)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("jobcount-before")
-      body
-      marker("jobcount-after")
-      groups.synchronized {
-        groups.indexOf("jobcount-after") - groups.indexOf("jobcount-before") - 1
-      }
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("deleteWhere, updateWhere and mergeInto on a table carrying delete vectors " +
       "run at most 7, 8 and 14 Spark jobs per call") {

@@ -1,11 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.functions.{Media, MonteCarlo, TextKit, VectorKit}
-import graft.operators.Graph
+import graft.operators.{Graph, GraphPaths}
 
 class OperatorsSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
@@ -22,44 +23,102 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     )
   }
 
-  test("all three closure variants agree on a multi-parent DAG") {
+  test("the driver and distributed closures agree on a multi-parent DAG") {
     import spark.implicits._
     // parents of k: k div 2 and k div 3 — overlap-heavy, re-derivations
-    // exercise the frontier/smart anti-join dedup and smart's
-    // two-sided delta composition
+    // exercise the distributed anti-join dedup and its two-sided delta
+    // composition
     val edges = (2 to 200).map(k => (k.toLong, (k / 2).toLong))
       .concat((3 to 200).map(k => (k.toLong, (k / 3).toLong)))
       .toDF("child", "parent")
-    val doubling = Graph.transitiveClosureDoubling(edges).as[(Long, Long)].collect().toSet
-    val frontier = Graph.transitiveClosureFrontier(edges).as[(Long, Long)].collect().toSet
-    val smart = Graph.transitiveClosureSmart(edges).as[(Long, Long)].collect().toSet
-    frontier shouldBe doubling
-    smart shouldBe doubling
-    doubling.size should be > 200 // sanity: closure strictly larger than edge set
+    val onDriver = Graph.transitiveClosure(edges)
+    GraphPaths.onDriver(onDriver) shouldBe true
+    val driver = onDriver.as[(Long, Long)].collect().toSet
+    val distributed = GraphPaths.distributed(edges).as[(Long, Long)].collect().toSet
+    driver shouldBe distributed
+    driver.size should be > 200 // sanity: closure strictly larger than edge set
   }
 
-  test("every closure variant throws rather than return a truncated result") {
+  test("both closure paths and rootPaths throw rather than return a truncated result") {
     import spark.implicits._
-    // chain of depth 8; one round of any variant cannot finish it. A
-    // silent return here would be a WRONG closure with no error — the
-    // guard must be consistent across all three variants + rootPaths.
+    // chain of depth 8; one round cannot finish it. A silent return
+    // here would be a WRONG closure with no error — the guard must be
+    // the same on the driver walk, the distributed loop and rootPaths.
     val edges = (2 to 9).map(k => (k.toLong, k - 1L)).toDF("child", "parent")
+    GraphPaths.onDriver(Graph.transitiveClosure(edges)) shouldBe true
     an[IllegalStateException] should be thrownBy
-      Graph.transitiveClosureDoubling(edges, maxRounds = 1).count()
+      Graph.transitiveClosure(edges, maxRounds = 1).count()
     an[IllegalStateException] should be thrownBy
-      Graph.transitiveClosureSmart(edges, maxRounds = 1).count()
-    an[IllegalStateException] should be thrownBy
-      Graph.transitiveClosureFrontier(edges, maxRounds = 1).count()
+      GraphPaths.distributed(edges, maxRounds = 1).count()
     an[IllegalStateException] should be thrownBy
       Graph.rootPaths(edges, maxDepth = 2).count()
     // and the guard is BOUNDARY-exact, not early: maxRounds == 3 ==
     // ceil(log2(8)) completes the depth-8 closure on its final
     // permitted round (the convergence check never runs), and the
     // probe must recognize completeness rather than throw
-    Graph.transitiveClosureDoubling(edges, maxRounds = 3).count() shouldBe 36
-    Graph.transitiveClosureSmart(edges, maxRounds = 3).count() shouldBe 36
-    Graph.transitiveClosureDoubling(edges, maxRounds = 4).count() shouldBe 36
-    Graph.transitiveClosureSmart(edges, maxRounds = 4).count() shouldBe 36
+    Graph.transitiveClosure(edges, maxRounds = 3).count() shouldBe 36
+    GraphPaths.distributed(edges, maxRounds = 3).count() shouldBe 36
+    Graph.transitiveClosure(edges, maxRounds = 4).count() shouldBe 36
+    GraphPaths.distributed(edges, maxRounds = 4).count() shouldBe 36
+  }
+
+  test("the driver closure gives the distributed closure's rows and schema on seeded graphs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(12)
+    val random = Seq.fill(150)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+    val chains = for (c <- 0L until 3L; i <- 0L until 7L) yield (c * 100 + i, c * 100 + i + 1)
+    val graphs: Seq[(String, DataFrame, Boolean)] = Seq(
+      ("chains", chains.toDF("child", "parent"), true),
+      ("binary tree", (2L to 63L).map(k => (k, k / 2)).toDF("child", "parent"), true),
+      ("div2/div3 DAG", (2L to 120L).flatMap(k => Seq((k, k / 2), (k, k / 3))).filter(_._2 > 0)
+        .toDF("child", "parent"), true),
+      ("cycles and self-loops", Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (5L, 5L), (6L, 5L),
+        (7L, 8L), (8L, 7L)).toDF("child", "parent"), true),
+      ("seeded random graph", random.toDF("child", "parent"), true),
+      ("duplicate edges", (chains ++ chains ++ chains.take(5)).toDF("child", "parent"), true),
+      ("null endpoints", Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(2L), None),
+        (None, Some(3L)), (Some(3L), Some(4L)), (Some(4L), None), (None, None), (Some(5L), None))
+        .toDF("child", "parent"), true),
+      ("string keys", random.map { case (c, p) => (s"n$c", s"n$p") }.toDF("child", "parent"), true),
+      ("int child, long parent", random.map { case (c, p) => (c.toInt, p) }.toDF("child", "parent"),
+        false),
+      ("double keys", random.map { case (c, p) => (c * 0.5, p * 0.5) }.toDF("child", "parent"),
+        false),
+      ("collated string keys", random.map { case (c, p) => (s"N$c", s"n$p") }.toDF("c", "p")
+        .select(collate(col("c"), "UTF8_LCASE").as("child"), collate(col("p"), "UTF8_LCASE")
+          .as("parent")), false))
+    for ((name, edges, driverPath) <- graphs) withClue(s"$name: ") {
+      val closure = Graph.transitiveClosure(edges)
+      val distributed = GraphPaths.distributed(edges)
+      GraphPaths.onDriver(closure) shouldBe driverPath
+      closure.schema shouldBe distributed.schema
+      closure.collect().toSet shouldBe distributed.collect().toSet
+      closure.count() shouldBe closure.distinct().count()
+    }
+  }
+
+  test("a driver walk that passes the pair cap falls back and returns the full closure") {
+    import spark.implicits._
+    // a depth-8 chain closes to 36 pairs
+    val edges = (2 to 9).map(k => (k.toLong, k - 1L)).toDF("child", "parent")
+    val full = Graph.transitiveClosure(edges).as[(Long, Long)].collect().toSet
+    full should have size 36
+    val atCap = GraphPaths.capped(edges, maxEdges = 8, maxPairs = 36)
+    GraphPaths.onDriver(atCap) shouldBe true
+    for (capped <- Seq(GraphPaths.capped(edges, maxEdges = 8, maxPairs = 35),
+                       GraphPaths.capped(edges, maxEdges = 7, maxPairs = 36))) {
+      GraphPaths.onDriver(capped) shouldBe false
+      capped.as[(Long, Long)].collect().toSet shouldBe full
+    }
+  }
+
+  test("a closure under the gate runs at most 2 Spark jobs, the caller's count() included") {
+    // a scan that needs a job: the gate collects it in one; the one-
+    // partition result counts in another, with no exchange
+    val edges = spark.range(2, 400).select(col("id").as("child"), expr("id div 2").as("parent"))
+    var pairs = 0L
+    jobsOf { pairs = Graph.transitiveClosure(edges).count() } should be <= 2
+    pairs shouldBe (2L until 400L).map(k => 63 - java.lang.Long.numberOfLeadingZeros(k)).sum
   }
 
   test("MinHashLsh finds the near-dup pair and rejects the distinct docs") {
@@ -877,5 +936,26 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     nPrefix should be < plainCand / 4
     // losslessness: the true near-dup pair survives the filter
     prefixCand.filter(col("d1") === 100 && col("d2") === 101).count() shouldBe 1L
+  }
+}
+
+package operators {
+
+  import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+  import org.apache.spark.sql.execution.LogicalRDD
+
+  /** Test access to [[Graph]]'s `private[operators]` closure paths. */
+  object GraphPaths {
+    def distributed(edges: DataFrame, maxRounds: Int = 20): DataFrame =
+      Graph.distributedClosure(edges, maxRounds)
+
+    def capped(edges: DataFrame, maxEdges: Int, maxPairs: Long): DataFrame =
+      Graph.transitiveClosure(edges, 20, maxEdges, maxPairs)
+
+    /** Whether `closure` is the driver path's one-partition relation. */
+    def onDriver(closure: DataFrame): Boolean = closure.queryExecution.analyzed match {
+      case r: LogicalRDD => r.outputPartitioning == SinglePartition
+      case _ => false
+    }
   }
 }
