@@ -1017,26 +1017,22 @@ object AnnIndex {
     * n_now, growth) where growth = (n_now - n_build) / max(n_build, 1).
     * A cell whose population has grown far past its build-time share
     * means the coarse quantizer no longer describes the corpus — the
-    * retrain signal. k rows out — and when the corpus manifest carries
-    * per-file row counts (every commit records them from the parquet
-    * footers), n_now comes from METADATA: the health read costs zero
-    * data I/O at any corpus size, which is what lets the maintenance
-    * autopilot poll it every window. Legacy manifests without stats
-    * fall back to the partial-agg'd corpus count.
+    * retrain signal. k rows out — n_now comes from the corpus
+    * manifest's per-file row counts (every commit records them from the
+    * parquet footers), so the health read costs zero data I/O at any
+    * corpus size, which is what lets the maintenance autopilot poll it
+    * every window.
     */
   def drift(spark: SparkSession, rootSpec: String): DataFrame = {
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(rootSpec)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = resolveRoot(fs, rootSpec)
-    val (centroids, corpus) = openIndex(spark, root)
-    val nNow = graft.table.Snapshot.latest(fs, s"$root/corpus").flatMap(_.dirRowCounts)
-      .map { byDir =>
-        byDir.toSeq.collect {
-          case (d, n) if d.startsWith("cell=") => (d.stripPrefix("cell=").toInt, n)
-        }.toDF("cell", "n_now")
-      }
-      .getOrElse(corpus.groupBy(col("cell")).agg(count(lit(1)).as("n_now")))
+    val (centroids, _) = openIndex(spark, root)
+    val nNow = graft.table.Snapshot.requireLatest(fs, s"$root/corpus", "measure the drift of")
+      .dirRowCounts.toSeq.collect {
+        case (d, n) if d.startsWith("cell=") => (d.stripPrefix("cell=").toInt, n)
+      }.toDF("cell", "n_now")
     centroids
       .select(col("cell"), col("n_build"))
       .join(nNow, Seq("cell"), "left")

@@ -294,9 +294,7 @@ object Graph {
             .as("c")
             .join(delta.as("d"), col("c.ancestor") === col("d.node"))
             .select(col("c.node").as("node"), col("d.ancestor").as("ancestor")))
-      val ck = composed
-        .distinct()
-        .join(closure, Seq("node", "ancestor"), "left_anti")
+      val ck = unseen(composed.distinct(), closure, Seq("node", "ancestor"))
         .localCheckpoint()
       // ONE flat job per round: count serves convergence AND sizing
       // (an isEmpty here pays the limit scale-up's up-to-4 sequential
@@ -329,14 +327,21 @@ object Graph {
             .as("c")
             .join(delta.as("d"), col("c.ancestor") === col("d.node"))
             .select(col("c.node").as("node"), col("d.ancestor").as("ancestor")))
-        .join(closure, Seq("node", "ancestor"), "left_anti")
-      if (!probe.isEmpty)
+      if (!unseen(probe, closure, Seq("node", "ancestor")).isEmpty)
         throw new IllegalStateException(
           s"transitiveClosure: pairs beyond the computed closure exist after " +
             s"$maxRounds rounds; raise maxRounds")
     }
     frontiers.reduce(_ union _)
   }
+
+  /** The rows of `derived` that `known` does not hold, matching every
+    * column of `keys` null-safely: a re-derived pair with a null
+    * endpoint is not new.
+    */
+  private def unseen(derived: DataFrame, known: DataFrame, keys: Seq[String]): DataFrame =
+    derived.as("u").join(known.as("k"),
+      keys.map(c => col(s"u.$c") <=> col(s"k.$c")).reduce(_ && _), "left_anti")
 
   /** Ancestor list per node (the reference's GraphNodeDocument shape,
     * GraphNode.scala:22-30): node -> sorted array of ancestors.
@@ -439,7 +444,7 @@ object Graph {
           concat(col("a.path"), slice(col("b.path"), lit(2), size(col("b.path")) - 1)).as("path")
         )
         .distinct()
-      val ck = composed.join(closure, Seq("node", "head", "path"), "left_anti").localCheckpoint()
+      val ck = unseen(composed, closure, Seq("node", "head", "path")).localCheckpoint()
       // one flat count job per round (see distributedClosure);
       // path rows carry arrays — compact at a lower rows/partition
       val n = ck.count()
@@ -463,8 +468,7 @@ object Graph {
           col("a.node").as("node"),
           col("b.head").as("head"),
           concat(col("a.path"), slice(col("b.path"), lit(2), size(col("b.path")) - 1)).as("path"))
-        .join(closure, Seq("node", "head", "path"), "left_anti")
-      if (!probe.isEmpty)
+      if (!unseen(probe, closure, Seq("node", "head", "path")).isEmpty)
         throw new IllegalStateException(
           s"rootPaths: paths beyond the computed relation exist after $maxRounds rounds " +
             s"(graph deeper than maxDepth=$maxDepth); raise maxDepth")

@@ -429,7 +429,7 @@ object StorageQueries {
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           val snap = Snapshot.latest(fs, target)
-          val metaCnt = snap.flatMap(_.rowCount)
+          val metaCnt = snap.map(_.rowCount)
           val metaMm = snap.flatMap(_.minMax("doc_id"))
           // r17: NULL COUNTS ride the zone maps too — payload is
           // md5(text), null exactly where text is null, so the
@@ -624,7 +624,7 @@ object StorageQueries {
           val got = Streaming.readCommitted(s, target)
           // metadata COUNT stays exact under DVs (Snapshot.minMax refuses
           // by design — a recorded extreme may be deleted)
-          val metaCnt = Snapshot.latest(fs, target).flatMap(_.rowCount)
+          val metaCnt = Snapshot.latest(fs, target).map(_.rowCount)
           require(metaCnt.forall(_ == got.count()),
             s"metadata row count $metaCnt diverges from the DV-applied read")
           got.groupBy("lang")
@@ -811,7 +811,7 @@ object StorageQueries {
           // metadata stays exact through the DV + add composite commit
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val metaCnt = Snapshot.latest(fs, target).flatMap(_.rowCount)
+          val metaCnt = Snapshot.latest(fs, target).map(_.rowCount)
           require(metaCnt.contains(canonCount + stats.inserted),
             s"merge left stats inexact: $metaCnt " +
               s"vs $canonCount + ${stats.inserted}")
@@ -888,7 +888,7 @@ object StorageQueries {
             stagePartitionBy = Seq("shard"))
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
-          require(Snapshot.latest(fs, target).flatMap(_.rowCount).contains(canon.count()),
+          require(Snapshot.latest(fs, target).map(_.rowCount).contains(canon.count()),
             "updateWhere changed the live row count")
           require(updated == canon.filter(col("doc_id") % 5 === 1).count(),
             "updateWhere row count diverges from the predicate's")

@@ -143,7 +143,7 @@ object Commit {
       keyEnvelopes: Seq[KeyEnvelope] = Nil
   ): Unit = {
     val stage = new org.apache.hadoop.fs.Path(target + stageName)
-    writePlan(fs, stage, CommitPlan(Some(readGen), listRel(fs, stage), replacedDirs,
+    writePlan(fs, stage, CommitPlan(readGen, listRel(fs, stage), replacedDirs,
       volatileDirs, keyEnvelopes, modifiedEntries, tag, txn))
     executeCommit(fs, target, stage)
   }
@@ -227,8 +227,14 @@ object Commit {
       stage: org.apache.hadoop.fs.Path
   ): Unit = {
     val plan = {
-      val in = fs.open(new org.apache.hadoop.fs.Path(stage, StageCommitMarker))
-      try CommitPlan.decode(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+      val planPath = new org.apache.hadoop.fs.Path(stage, StageCommitMarker)
+      val in = fs.open(planPath)
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      try CommitPlan.decode(text)
+      catch {
+        case e: IllegalStateException =>
+          throw new IllegalStateException(s"$planPath: ${e.getMessage}", e)
+      }
     }
     import plan.{files, replacedDirs, volatileDirs}
     val modifiedByPath: Map[String, ManifestEntry] =
@@ -292,20 +298,21 @@ object Commit {
       // entry list — the last O(table) driver term of the protocol
       // (r15 judge #3). Bootstrap is the exception: the first commit
       // must seed a FULL checkpoint, so it keeps the live-tree listing
-      // (pre-manifest legacy files minus whatever of our adds already
-      // moved). Concurrent bootstrap is CAS-safe (r16 judge #8): both
+      // (the files already there minus whatever of our adds already
+      // moved), each entry read from its footer as writeManifest does.
+      // Concurrent bootstrap is CAS-safe (r16 judge #8): both
       // first-committers race the same gen-1 claim through
       // atomicClaim; the loser loops, re-reads the winner's
       // checkpoint, and rebases through the steady-state path. The
       // winner's live-tree listing may have captured SOME of the
-      // loser's mid-move files as bare legacy lines — dedupeByPath
-      // below collapses those against the loser's own stats-bearing
-      // add lines, so no file is ever listed twice and no row lost
+      // loser's mid-move files — dedupeByPath below collapses those
+      // against the loser's own add lines, the same footer entries, so
+      // no file is ever listed twice and no row lost
       // (ConcurrentCommitSpec pins the two-writer fresh-table race).
       val bootstrapAll: Option[Map[String, ManifestEntry]] = prevGen match {
         case Some(_) => None
-        case None => Some((listRel(fs, targetPath).toSet -- files)
-          .map(p => p -> ManifestEntry.bare(p)).toMap)
+        case None => Some(inParallel((listRel(fs, targetPath).toSet -- files).toSeq.sorted)(
+          footerEntry(fs, targetPath, _)).map(e => e.path -> e).toMap)
       }
       val baseTouched: Map[String, ManifestEntry] = bootstrapAll match {
         case Some(all) => all.filter { case (p, _) => touchedDirs(dirOf(p)) }
@@ -352,14 +359,15 @@ object Commit {
         // whether or not our CAS rename would win (a
         // rename-collision-only check misses every writer whose
         // read-to-commit window fully contains another's commit). A
-        // window that cannot be scanned exactly — a pruned generation,
-        // a legacy flat checkpoint, a `# rebuild` — can no longer
-        // prove disjointness and conflicts conservatively.
-        plan.readGen.filter(bg => prevGen.exists(_ > bg)).foreach { bg =>
+        // window that cannot be scanned exactly — a pruned generation
+        // or a `# rebuild` — can no longer prove disjointness and
+        // conflicts conservatively.
+        val bg = plan.readGen
+        if (prevGen.exists(_ > bg)) {
           listing.changedDirs(bg, prevGen.get) match {
             case None =>
               abortConflict(s"the window (gen $bg, gen ${prevGen.get}] of $target cannot " +
-                "be scanned for conflicts (pruned, legacy, or rebuilt in between)")
+                "be scanned for conflicts (pruned or rebuilt in between)")
             case Some(ch) =>
               // volatile dirs conflict like replaced ones: a plan whose
               // position scan (DV retag) read them is stale if they
@@ -404,8 +412,9 @@ object Commit {
         val tombstones =
           baseTouched.keySet.filter(p => replacedDirs(dirOf(p))) -- files
         val gen = prevGen.getOrElse(0L) + 1
-        // bootstrap's first checkpoint must cover every dir, legacy
-        // files included; steady state passes the touched dirs only
+        // bootstrap's first checkpoint must cover every dir, the files
+        // already there included; steady state passes the touched dirs
+        // only
         val postState: Map[String, Seq[ManifestEntry]] = bootstrapAll match {
           case Some(all) =>
             val keptAll = all.collect {
@@ -423,9 +432,7 @@ object Commit {
         // The staleness check above re-runs against the new latest
         // (the read generation is fixed), so an overlapping winner
         // aborts and a disjoint one REBASES: the delta is recomputed
-        // against its generation and the CAS retried at gen+1. A plan
-        // with no read generation, left by an older writer, rebases
-        // unconditionally.
+        // against its generation and the CAS retried at gen+1.
       }
     }
     fs.delete(stage, true)
@@ -433,22 +440,21 @@ object Commit {
   }
 
   /** Collapse duplicate entries for the same file path, keeping the
-    * most informative one (a stats-bearing entry encodes strictly longer
-    * than a bare legacy `path` one). The only legitimate source of
-    * duplicates is the concurrent-bootstrap window: a racing
-    * first-committer's live-tree listing captures another writer's
-    * mid-move files as bare entries, and that writer's own rebase then
-    * re-adds them with footer stats.
+    * first. The only legitimate source of duplicates is the
+    * concurrent-bootstrap window: a racing first-committer's live-tree
+    * listing captures another writer's mid-move files, and that
+    * writer's own rebase then re-adds them. Both entries are read from
+    * the same footer, so they are equal.
     */
   private def dedupeByPath(entries: Seq[ManifestEntry]): Seq[ManifestEntry] =
-    if (entries.lengthCompare(entries.iterator.map(_.path).toSet.size) == 0) entries
-    else entries.groupBy(_.path).valuesIterator.map(_.maxBy(_.encode.length)).toSeq
+    entries.distinctBy(_.path)
 
   /** The manifest entry of the committed file `rel` under `root`: row
     * count, zone-map bounds and the file's OWN schema fingerprint (an
     * `sh:` tag) from its parquet FOOTER — one metadata read, no data
-    * pages. An unreadable/non-parquet file gets a bare stat-less entry
-    * (consumers treat stats as optional). The per-entry fingerprint
+    * pages. An unreadable or non-parquet file throws, naming it: no
+    * entry is written without its row count, and the commit's
+    * idempotent roll-forward runs again. The per-entry fingerprint
     * lets a reader detect a mixed-schema generation from metadata alone
     * and switch to a merged inference (r17 advice, low: the per-commit
     * `# schema` header records only each commit's fingerprint). The
@@ -462,18 +468,21 @@ object Commit {
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       rel: String
-  ): ManifestEntry =
+  ): ManifestEntry = {
+    val path = new org.apache.hadoop.fs.Path(root, rel)
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(root, rel), fs.getConf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try ManifestEntry(rel, Some(r.getRecordCount), columnBoundsOf(r),
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, fs.getConf))
+      try ManifestEntry(rel, r.getRecordCount, columnBoundsOf(r),
         Seq(Tag.SchemaHash(f"${scala.util.hashing.MurmurHash3.stringHash(
           r.getFooter.getFileMetaData.getSchema.toString)}%08x")))
       finally r.close()
     } catch {
-      case scala.util.control.NonFatal(_) => ManifestEntry.bare(rel)
+      case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+        s"data file $path: no readable parquet footer (${e.getMessage}) — " +
+          "not the graft table format", e)
     }
+  }
 
   /** Longest string bound recorded in a manifest entry — longer values
     * simply drop that column's zone map for the file (the file is then
@@ -548,9 +557,8 @@ object Commit {
               }
             } else {
               // Option, NOT null-into-a-destructure: assigning null to
-              // `val (mn, mx)` throws a MatchError that footerEntry's
-              // catch-all swallows, silently costing the WHOLE entry
-              // its row count and every other column's bounds (ADVICE
+              // `val (mn, mx)` throws a MatchError that fails the
+              // footer read, and with it the whole commit (ADVICE
               // r16). None drops only THIS column's zone map.
               val mnmx: Option[(Any, Any)] = k match {
                 case 'l' => Some((st.genericGetMin.asInstanceOf[Number].longValue,
@@ -829,10 +837,9 @@ object Commit {
     * previous checkpoint's reference for every directory untouched
     * since it, write a fresh per-dir manifest for the dirty ones. The
     * dirty set is the union of the intervening deltas' touched dirs
-    * (each O(its batch) to scan) plus this commit's own; a previous
-    * checkpoint in LEGACY flat format, or an unscannable window, falls
-    * back to rewriting every dir from the reconstructed current state
-    * — the one-time migration cost of an old-format table.
+    * (each O(its batch) to scan) plus this commit's own; an
+    * unscannable window falls back to rewriting every dir from the
+    * reconstructed current state.
     */
   private def checkpointRefLines(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -866,8 +873,9 @@ object Commit {
       case Some(pc) =>
         // dirs whose state changed in (pc, gen): the intervening deltas'
         // dirs (None = unscannable) plus this commit's touched dirs
-        (listing.checkpointRefs(pc), listing.changedDirs(pc, gen - 1)) match {
-          case (Right(prevRefs), Some(between)) =>
+        val prevRefs = listing.checkpointRefs(pc)
+        listing.changedDirs(pc, gen - 1) match {
+          case Some(between) =>
             val dirty = between ++ postState.keySet
             val clean = prevRefs.filterNot(r => dirty(r.dir))
             // dirty-but-untouched dirs keep their current (gen-1) state
@@ -876,9 +884,13 @@ object Commit {
               if (untouched.isEmpty) Map.empty
               else listing.at(gen - 1, Some(untouched)).entries.groupBy(_.dir)
             (clean ++ writeDirManifests((postState ++ recon).toSeq)).sortBy(_.dir)
-          case _ =>
-            // legacy flat previous checkpoint (or pruned window): one
-            // full rewrite, after which the table is on the new format
+          case None =>
+            // a delta of the window is gone: a concurrent writer's
+            // prune moved the chain floor past `pc` after this listing
+            // was taken. That writer committed at or past `gen`, so this
+            // attempt loses its CAS; the rewrite reads generation gen-1
+            // through the same listing, and so refuses it as not
+            // retained before writing anything
             val all = listing.at(gen - 1).entries.groupBy(_.dir)
             writeDirManifests(((all -- postState.keySet) ++ postState).toSeq)
         }
@@ -1079,7 +1091,7 @@ object Commit {
         // a concurrent lease-less writer's prune may delete a listed
         // checkpoint before this read (ADVICE r16): a vanished
         // checkpoint retains nothing
-        try listing.checkpointRefs(g).fold(_ => Nil, _.map(_.file))
+        try listing.checkpointRefs(g).map(_.file)
         catch { case _: java.io.FileNotFoundException => Nil }
       }
       .toSet
@@ -1201,7 +1213,7 @@ object Commit {
       try {
         val in = fs.open(p)
         try { in.readLong(); Some(in.readUTF()) } finally in.close()
-      } catch { case _: java.io.IOException => None } // absent/zero-byte/legacy: no token
+      } catch { case _: java.io.IOException => None } // absent, zero-byte or token-less
     if (!tryAcquire()) {
       // liveness from metadata, not content: a heartbeat touch never
       // leaves a half-written file for this read to misjudge

@@ -44,8 +44,7 @@ object KeyEnvelope {
   *
   *  - `readGen`: the generation the writer's read was based on (0 for a
   *    table with no committed generation). The commit conflicts when a
-  *    dir it depends on changed after it. None only in a plan left by an
-  *    older writer, which rolls forward with no staleness scan;
+  *    dir it depends on changed after it;
   *  - `tag`, `txn`: the idempotency token and the per-scope transaction
   *    high-water mark riding in the commit's header;
   *  - `replacedDirs`: dirs whose previous entries this commit supersedes
@@ -57,7 +56,7 @@ object KeyEnvelope {
   *  - `files`: the staged data files, relative to the stage root.
   */
 final case class CommitPlan(
-    readGen: Option[Long],
+    readGen: Long,
     files: Seq[String] = Nil,
     replacedDirs: Set[String] = Set.empty,
     volatileDirs: Set[String] = Set.empty,
@@ -74,7 +73,7 @@ final case class CommitPlan(
     * written sorted.
     */
   def encode: String =
-    (readGen.toSeq.map(g => s"B $g") ++
+    (Seq(s"B $readGen") ++
       tag.toSeq.map(t => s"T $t") ++
       txn.toSeq.map { case (s, i) => s"X $s $i" } ++
       replacedDirs.toSeq.sorted.map(d => s"R $d") ++
@@ -91,9 +90,10 @@ final case class CommitPlan(
 object CommitPlan {
 
   /** Parse a plan written by [[CommitPlan.encode]]. Empty lines are
-    * skipped (an empty plan stages nothing); a line of an unknown kind
-    * or a malformed value throws, since executing a plan with a fact
-    * dropped could commit what its writer never meant.
+    * skipped; a line of an unknown kind or a malformed value throws,
+    * since executing a plan with a fact dropped could commit what its
+    * writer never meant, and so does a plan with no `B` line, a layout
+    * no reader knows.
     */
   def decode(text: String): CommitPlan = {
     def corrupt(l: String): Nothing =
@@ -106,7 +106,6 @@ object CommitPlan {
       lines.collect { case (`kind`, v, l) => f(v, l) }
     def long(s: String, l: String): Long = s.toLongOption.getOrElse(corrupt(l))
     CommitPlan(
-      readGen = all('B')(long).lastOption,
       files = all('F')((v, _) => v),
       replacedDirs = all('R')((v, _) => v).toSet,
       volatileDirs = all('V')((v, _) => v).toSet,
@@ -124,6 +123,10 @@ object CommitPlan {
         val i = v.lastIndexOf(' ')
         if (i <= 0) corrupt(l)
         (v.substring(0, i), long(v.substring(i + 1), l))
-      }.lastOption)
+      }.lastOption,
+      // named arguments evaluate in written order: a malformed line
+      // reports itself before a missing read generation does
+      readGen = all('B')(long).lastOption.getOrElse(
+        throw new IllegalStateException("commit plan with no read generation (no B line)")))
   }
 }

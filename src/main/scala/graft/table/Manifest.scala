@@ -7,10 +7,10 @@ import java.net.{URLDecoder, URLEncoder}
   * encoded back byte-identically (the Iceberg manifest entry / Delta
   * `add` action shape, over tab-separated text).
   *
-  * An ENTRY line is `path[\trows[\tbounds]][\ttag]*`:
+  * An ENTRY line is `path\trows[\tbounds][\ttag]*`:
   *
-  *  - `rows`: the file's footer row count, absent on legacy stat-less
-  *    entries;
+  *  - `rows`: the file's footer row count, always present: a line
+  *    without one is refused;
   *  - `bounds`: the zone map, a comma-joined list of
   *    `name:kind:min:max[:nulls]` tokens (every part URL-encoded; kind
   *    `l` integral, `d` floating, `s` string, `z` all-null with empty
@@ -156,12 +156,12 @@ object Tag {
   }
 }
 
-/** One live data file of a manifest generation. `rows` is None on a
-  * legacy stat-less entry, and then the line carries no bounds either.
+/** One live data file of a manifest generation, with its footer row
+  * count.
   */
 final case class ManifestEntry(
     path: String,
-    rows: Option[Long],
+    rows: Long,
     bounds: Bounds,
     tags: Seq[Tag]
 ) {
@@ -174,11 +174,11 @@ final case class ManifestEntry(
   /** Indexed column -> bloom sidecar. */
   def blooms: Map[String, String] = tags.collect { case Tag.Bloom(c, s) => c -> s }.toMap
 
-  /** Footer rows minus delete-vector positions; None when stat-less. */
-  def liveRows: Option[Long] = rows.map(_ - dv.fold(0L)(_.n))
+  /** Footer rows minus delete-vector positions. */
+  def liveRows: Long = rows - dv.fold(0L)(_.n)
 
   /** A schema-bearing file with zero rows (an emptied shard's file). */
-  def isEmptyFile: Boolean = rows.contains(0L)
+  def isEmptyFile: Boolean = rows == 0L
 
   /** This entry with its delete-vector tag replaced (or appended). */
   def withDv(sidecar: String, n: Long): ManifestEntry =
@@ -192,8 +192,7 @@ final case class ManifestEntry(
     } :+ Tag.Bloom(column, sidecar))
 
   def encode: String = {
-    val sb = new java.lang.StringBuilder(path)
-    rows.foreach(r => sb.append('\t').append(r))
+    val sb = new java.lang.StringBuilder(path).append('\t').append(rows)
     bounds.field.foreach(b => sb.append('\t').append(b))
     tags.foreach(t => sb.append('\t').append(t.encode))
     sb.toString
@@ -201,17 +200,18 @@ final case class ManifestEntry(
 }
 
 object ManifestEntry {
-  /** A stat-less entry: the path alone. */
-  def bare(path: String): ManifestEntry = ManifestEntry(path, None, Bounds.Absent, Nil)
 
+  /** Decode an entry line; a line with no row count after the path is
+    * the stat-less layout, which no reader knows, and is refused.
+    */
   def decode(line: String): ManifestEntry = {
     val f = line.split("\t", -1)
-    val rows = if (f.length > 1 && Tag.isCount(f(1))) Some(f(1).toLong) else None
-    val hasBounds = rows.isDefined && f.length > 2 && Bounds.isField(f(2))
-    val tagsFrom = if (hasBounds) 3 else if (rows.isDefined) 2 else 1
-    ManifestEntry(f(0), rows,
+    if (f.length < 2 || !Tag.isCount(f(1)))
+      throw new IllegalStateException(s"stat-less manifest entry (no row count): '$line'")
+    val hasBounds = f.length > 2 && Bounds.isField(f(2))
+    ManifestEntry(f(0), f(1).toLong,
       if (hasBounds) Bounds(Some(f(2))) else Bounds.Absent,
-      f.iterator.drop(tagsFrom).map(Tag.decode).toList)
+      f.iterator.drop(if (hasBounds) 3 else 2).map(Tag.decode).toList)
   }
 }
 
@@ -219,7 +219,7 @@ object ManifestEntry {
   * lines, `@ dir\tm-file` references to per-directory manifests, and
   * its own commit's delta; a delta (`inc-N`) holds header lines and
   * `+ ` add, `- ` remove and `~ ` modify lines; a per-directory
-  * manifest, and a LEGACY flat checkpoint, hold plain entry lines.
+  * manifest holds plain entry lines.
   */
 sealed trait ManifestLine {
   import ManifestLine._
@@ -253,11 +253,6 @@ object ManifestLine {
         Ref(Manifest.dec(line.substring(2, t)), line.substring(t + 1))
       case _ => Entry(ManifestEntry.decode(line))
     }
-
-  /** Plain entry lines appear in a checkpoint only in the legacy flat
-    * format.
-    */
-  def isLegacyFlat(lines: Seq[ManifestLine]): Boolean = lines.exists(_.isInstanceOf[Entry])
 }
 
 /** The `# ` header of one commit: its added files' schema fingerprint

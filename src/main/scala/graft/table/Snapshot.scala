@@ -36,17 +36,13 @@ final case class Snapshot(
   def hasDeleteVectors: Boolean = entries.exists(_.dv.isDefined)
 
   /** Per-directory LIVE row counts (footer rows minus delete-vector
-    * positions); None when any entry is legacy stat-less — callers fall
-    * back to a data-side count, never guess.
+    * positions).
     */
-  def dirRowCounts: Option[Map[String, Long]] = {
-    val live = entries.map(e => e.liveRows.map(e.dir -> _))
-    if (live.exists(_.isEmpty)) None
-    else Some(live.flatten.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).sum })
-  }
+  def dirRowCounts: Map[String, Long] =
+    entries.groupMapReduce(_.dir)(_.liveRows)(_ + _)
 
   /** `SELECT COUNT(*)` from the footer counts recorded at commit. */
-  def rowCount: Option[Long] = dirRowCounts.map(_.values.sum)
+  def rowCount: Long = entries.iterator.map(_.liveRows).sum
 
   /** MIN/MAX of `column` from the zone maps, with the column kind
     * (`l`/`d`/`s`). None whenever the answer cannot be proven from
@@ -60,7 +56,7 @@ final case class Snapshot(
     else {
       // an all-null file (null count == rows) is vacuous too
       val perFile = lines.filterNot { l =>
-        l.bounds.range(column).isEmpty && l.rows.isDefined && l.bounds.nulls(column) == l.rows
+        l.bounds.range(column).isEmpty && l.bounds.nulls(column).contains(l.rows)
       }.map(_.bounds.range(column))
       if (perFile.isEmpty || perFile.exists(_.isEmpty)) None
       else {
@@ -146,10 +142,11 @@ final case class Snapshot(
   * lifetime — one table call).
   *
   * A checkpoint `gen-N` is a manifest LIST: `@ dir\tm-file` references
-  * to per-directory manifests, plus its own commit's delta lines; a
-  * LEGACY checkpoint holds the entry lines themselves. A delta `inc-N`
-  * holds the `+`/`-`/`~` lines against generation N-1. Every file
-  * opens with its commit's `# ` header lines.
+  * to per-directory manifests, plus its own commit's delta lines. A
+  * delta `inc-N` holds the `+`/`-`/`~` lines against generation N-1.
+  * Every file opens with its commit's `# ` header lines. A file that
+  * holds any other layout (a checkpoint of plain entry lines, an entry
+  * with no row count) is refused, naming the file.
   */
 final class Listing private[table] (
     fs: FileSystem,
@@ -181,8 +178,13 @@ final class Listing private[table] (
     decoded.computeIfAbsent(name, _ => {
       val in = fs.open(new Path(dir, name))
       val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      text.split("\n").iterator.filter(_.nonEmpty).map(ManifestLine.decode).toVector
+      try text.split("\n").iterator.filter(_.nonEmpty).map(ManifestLine.decode).toVector
+      catch { case e: IllegalStateException => unknownLayout(name, e.getMessage) }
     })
+
+  private def unknownLayout(name: String, layout: String): Nothing =
+    throw new IllegalStateException(
+      s"manifest file ${new Path(dir, name)}: $layout — not the graft table format")
 
   private def refuse(gen: Long, cause: Throwable = null): Nothing =
     throw new IllegalStateException(
@@ -212,24 +214,27 @@ final class Listing private[table] (
   private def headerOf(lines: Seq[ManifestLine]): CommitHeader =
     CommitHeader.of(lines.takeWhile(_.isInstanceOf[ManifestLine.Header]))
 
-  /** A retained checkpoint's body: dir -> per-dir manifest references,
-    * or the entries themselves in the legacy flat format.
+  /** A retained checkpoint's per-dir manifest references; a plain
+    * entry line is the flat checkpoint layout, which no reader knows.
     */
-  def checkpointRefs(gen: Long): Either[Seq[ManifestEntry], Seq[ManifestLine.Ref]] = {
-    val lines = read(Snapshot.checkpointName(gen))
-    if (ManifestLine.isLegacyFlat(lines)) Left(lines.collect { case ManifestLine.Entry(e) => e })
-    else Right(lines.collect { case r: ManifestLine.Ref => r })
+  def checkpointRefs(gen: Long): Seq[ManifestLine.Ref] = {
+    val name = Snapshot.checkpointName(gen)
+    read(name).collect {
+      case r: ManifestLine.Ref => r
+      case ManifestLine.Entry(e) =>
+        unknownLayout(name, s"flat checkpoint (plain entry line for ${e.path})")
+    }
   }
 
   /** The lines of generation `gen`'s own commit, whose `+`/`-`/`~` lines
     * are its delta. None when that delta is unknowable — the file is
-    * gone, a legacy flat checkpoint, or a `# rebuild` (a wholesale swap)
-    * — and a conflict scan must then refuse conservatively.
+    * gone, or a `# rebuild` (a wholesale swap) — and a conflict scan
+    * must then refuse conservatively.
     */
   def changes(gen: Long): Option[Seq[ManifestLine]] =
     genFile.get(gen)
       .flatMap(f => try Some(read(f.name)) catch { case _: FileNotFoundException => None })
-      .filterNot(lines => ManifestLine.isLegacyFlat(lines) || CommitHeader.of(lines).rebuild)
+      .filterNot(lines => CommitHeader.of(lines).rebuild)
 
   /** The directories the commits in (`from`, `to`] touched (a `~`
     * retag changes a dir's live rows without touching its file set, so
@@ -287,19 +292,13 @@ final class Listing private[table] (
       val lines = load(asked, f.name)
       if (f.isCheckpoint) {
         entries.clear()
-        if (ManifestLine.isLegacyFlat(lines)) {
-          val legacy = lines.collect { case ManifestLine.Entry(e) => e }
-          seen = legacy.iterator.map(_.dir).toSet
-          legacy.foreach(e => if (wanted(e.dir)) entries(e.path) = e)
-        } else {
-          val refs = lines.collect { case r: ManifestLine.Ref => r }
-          seen = refs.iterator.map(_.dir).toSet
-          Snapshot.inParallel(refs.filter(r => wanted(r.dir)))(r => load(asked, r.file))
-            .foreach(_.foreach {
-              case ManifestLine.Entry(e) => entries(e.path) = e
-              case _ => ()
-            })
-        }
+        val refs = checkpointRefs(g)
+        seen = refs.iterator.map(_.dir).toSet
+        Snapshot.inParallel(refs.filter(r => wanted(r.dir)))(r => load(asked, r.file))
+          .foreach(_.foreach {
+            case ManifestLine.Entry(e) => entries(e.path) = e
+            case _ => ()
+          })
       } else lines.foreach {
         case ManifestLine.Add(e) =>
           seen += e.dir
@@ -414,9 +413,8 @@ object Snapshot {
 
   /** The `entries` whose recorded bounds can overlap every open-ended
     * `(column, lo, hi)` range (None = that side unbounded). Lossless:
-    * an unboundable column, a stat-less entry or a bound/kind type
-    * mismatch keeps the file — pruning is never a correctness
-    * dependency.
+    * an unboundable column or a bound/kind type mismatch keeps the
+    * file — pruning is never a correctness dependency.
     */
   def zoneKept(
       entries: Seq[ManifestEntry],
@@ -442,7 +440,7 @@ object Snapshot {
     entries.filter { l =>
       val nc = l.bounds.nulls(column)
       if (isNull) nc.forall(_ > 0L)
-      else l.bounds.range(column).isDefined || nc.isEmpty || l.rows.isEmpty || nc.get < l.rows.get
+      else l.bounds.range(column).isDefined || nc.forall(_ < l.rows)
     }
 
   private def overlapsOpen(

@@ -336,7 +336,7 @@ object ManifestScale {
     val dvN = Streaming.readCommitted(spark, zt).count()
     require(dvN == preDvCount - dvDeleted,
       s"DV-applied read $dvN != ${preDvCount - dvDeleted} (pre $preDvCount - $dvDeleted)")
-    val dvMetaCount = Snapshot.latest(fs, zt).flatMap(_.rowCount)
+    val dvMetaCount = Snapshot.latest(fs, zt).map(_.rowCount)
     require(dvMetaCount.contains(dvN), s"metadata count $dvMetaCount diverges from $dvN")
     println(s"[manifest-scale] delete vectors: $dvN live rows — PASS")
 
@@ -384,7 +384,7 @@ object ManifestScale {
     val postMergeCount = mergedRead.count()
     require(postMergeCount == preMergeCount + 100L,
       s"merge count wrong: $postMergeCount != $preMergeCount + 100")
-    require(Snapshot.latest(fs, zt).flatMap(_.rowCount).contains(postMergeCount),
+    require(Snapshot.latest(fs, zt).map(_.rowCount).contains(postMergeCount),
       "merge left metadata counts inexact")
     val updVals = mergedRead.filter(col("doc_id").between(muLo, muHi))
       .select(col("payload")).distinct().collect().map(_.getString(0)).toSeq

@@ -557,7 +557,8 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage")
       val files = graft.table.Commit.listRel(fs, stage)
       graft.table.Commit.writePlan(fs, stage,
-        graft.table.CommitPlan(readGen = None, files, Set(s"cell=$fat", "cell=4")))
+        graft.table.CommitPlan(graft.table.Commit.readGen(fs, corpusPath), files,
+          Set(s"cell=$fat", "cell=4")))
       val first = files.head
       val dst = new org.apache.hadoop.fs.Path(s"$corpusPath/$first")
       if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
@@ -747,7 +748,8 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     spark.read.parquet(s"$root/corpus").filter(col("cell") === 0)
       .withColumn("cell", lit(999))
       .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-    graft.table.Commit.writePlan(fs, stage, graft.table.CommitPlan(readGen = None))
+    graft.table.Commit.writePlan(fs, stage,
+      graft.table.CommitPlan(graft.table.Commit.readGen(fs, s"$root/corpus")))
 
     // retrain into the SAME root (the r13 advisor's medium scenario)
     val (c1, v1) = AnnIndex.build(corpusN(300), k = 4, vecCol = "e", dim = dim)

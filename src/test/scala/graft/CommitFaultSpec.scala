@@ -108,8 +108,10 @@ object FaultyFs {
 }
 
 /** Crash enumeration for the commit protocol: a writer that dies at ANY
-  * mutating filesystem call of `deleteWhere` (the delete-vector path)
-  * or `compactShards` leaves a table that recovery heals to exactly the
+  * mutating filesystem call of `deleteWhere` (the delete-vector path),
+  * `compactShards` or the bootstrap commit (the first `commitStage` on
+  * a directory of plain parquet) leaves a table that recovery heals to
+  * exactly the
   * generation before or after the verb, whose every retained entry
   * names a file on disk, where no deleted row comes back, and whose
   * manifest dir holds nothing a retained generation cannot reach once
@@ -150,15 +152,18 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       .collect().toSeq.sorted
   }
 
-  private def latest(target: String): Long = Snapshot.list(faulty, target).latest.get
+  /** The latest generation, 0 for a directory with no manifest. */
+  private def latest(target: String): Long = Snapshot.list(faulty, target).latest.getOrElse(0L)
 
   private def localPath(target: String): java.nio.file.Path =
     Paths.get(new Path(target).toUri.getPath)
 
-  /** Copy the table, its manifest dir and nothing else to a new root. */
+  /** Copy the table, its manifest dir if any and nothing else to a new
+    * root.
+    */
   private def copyTable(from: String, prefix: String): String = {
     val to = "faulty://" + Files.createTempDirectory(prefix).toString + "/t"
-    for (suffix <- Seq("", ".__manifests")) {
+    for (suffix <- Seq("", ".__manifests") if Files.exists(localPath(from + suffix))) {
       val src = localPath(from + suffix)
       val dst = localPath(to + suffix)
       Files.walk(src).iterator().asScala.foreach { p =>
@@ -186,7 +191,7 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val cutoff = listing.latest.get - Snapshot.ManifestKeep
     val floor = listing.checkpoints.filter(_ <= cutoff).maxOption.getOrElse(Long.MinValue)
     val mFiles = listing.checkpoints.filter(_ >= floor)
-      .flatMap(g => listing.checkpointRefs(g).fold(_ => Nil, _.map(_.file))).toSet
+      .flatMap(g => listing.checkpointRefs(g).map(_.file)).toSet
     val sidecars = listing.walkAll()
       .flatMap(_.entries.flatMap(e => e.dv.map(_.sidecar) ++ e.blooms.values)).toSet
     listing.files.filterNot(f => f.gen.exists(_ >= floor) || mFiles(f.name) || sidecars(f.name))
@@ -195,21 +200,29 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
   private val extraRows: Seq[(Long, String)] = Seq(5000L, 5004L, 5008L).map(k => (k, s"p9-$k"))
 
-  /** One parquet file of [[extraRows]] (all in shard 0), for the commit
-    * every crashed copy takes after its recovery.
-    */
-  private lazy val extraFile: java.nio.file.Path = {
-    val dir = Files.createTempDirectory("graft-fault-extra").toString + "/x"
-    rows(extraRows.map(_._1), 9L).coalesce(1).write.partitionBy("shard").parquet(dir)
+  /** One parquet file of `ids` (all in shard 0) at `version`. */
+  private def shard0File(ids: Seq[Long], version: Long): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("graft-fault-file").toString + "/x"
+    rows(ids, version).coalesce(1).write.partitionBy("shard").parquet(dir)
     Files.list(Paths.get(dir, "shard=0")).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
   }
 
+  /** One parquet file of [[extraRows]], for the commit every crashed
+    * copy takes after its recovery.
+    */
+  private lazy val extraFile: java.nio.file.Path = shard0File(extraRows.map(_._1), 9L)
+
+  /** Stage `file` as shard 0's only file at `target<stageName>`. */
+  private def stageShard0(target: String, stageName: String, file: java.nio.file.Path): Unit = {
+    val stage = localPath(target + stageName).resolve("shard=0")
+    Files.createDirectories(stage)
+    Files.copy(file, stage.resolve(s"part${stageName.replace(".__stage", "")}.parquet"))
+  }
+
   /** Append [[extraFile]] to shard 0 through a hand-staged commit. */
   private def commitExtra(target: String): Unit = {
-    val stage = localPath(target + ".__stage-extra").resolve("shard=0")
-    Files.createDirectories(stage)
-    Files.copy(extraFile, stage.resolve("part-extra.parquet"))
+    stageShard0(target, ".__stage-extra", extraFile)
     Commit.commitStage(faulty, target, Set.empty, latest(target), ".__stage-extra")
   }
 
@@ -304,6 +317,27 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     info(s"$points crash points")
     // exact: deleting .__stage again after recoverStage would add one
     points shouldBe 25L
+  }
+
+  test("a bootstrap commit crashed at ANY mutating call heals to no manifest or " +
+      "generation 1, and the sweep leaves nothing unreachable") {
+    faulty // registers the scheme and its claim primitive
+    // a directory of plain parquet, no manifest: the first commit reads
+    // every file's footer to seed its checkpoint
+    val base = "faulty://" + Files.createTempDirectory("graft-fault-plain").toString + "/t"
+    rows(0L until 200L, 1L).write.partitionBy("shard").parquet(base)
+    val shard0 = 0L until 200L by 4
+    val replacement = shard0File(shard0, 2L)
+    val after = (read(base).filterNot(_._1 % 4 == 0) ++ shard0.map(k => (k, s"p2-$k"))).sorted
+    val points = enumerateCrashes(base, after) { t =>
+      stageShard0(t, ".__stage", replacement)
+      Commit.commitStage(faulty, t, Set("shard=0"), 0L)
+    }
+    info(s"$points crash points")
+    // exact: the plan (create, rename), the staged file's move, the
+    // manifest dir, four per-dir manifests and the checkpoint, the
+    // claim, the stage; each create also counts its parent's mkdirs
+    points shouldBe 17L
   }
 
   test("a writer that dies between its CAS and its prune leaks that horizon's " +

@@ -170,7 +170,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
       .write.mode("overwrite").partitionBy("shard").parquet(stage.toString)
     val staged = Commit.listRel(fs, stage)
     staged should not be empty
-    Commit.writePlan(fs, stage, CommitPlan(Some(1L), staged, Set("shard=0")))
+    Commit.writePlan(fs, stage, CommitPlan(1L, staged, Set("shard=0")))
     val first = staged.head
     fs.mkdirs(new Path(s"$target/${first.substring(0, first.lastIndexOf('/'))}"))
     fs.rename(new Path(stage, first), new Path(s"$target/$first")) shouldBe true
@@ -199,7 +199,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     val stage = new Path(target + ".__stage-dead")
     val files = fs.listStatus(new Path(stage, "shard=0")).filterNot(
       _.getPath.getName.startsWith("_")).map(st => s"shard=0/${st.getPath.getName}")
-    Commit.writePlan(fs, stage, CommitPlan(Some(1L), files.toSeq))
+    Commit.writePlan(fs, stage, CommitPlan(1L, files.toSeq))
     // fresh stage (mtime now): recovery must leave it alone
     Commit.recoverAbandonedStages(fs, target)
     fs.exists(stage) shouldBe true
@@ -361,8 +361,8 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
       "own commit replays the path (no double-listed entry)") {
     // The deterministic core of the concurrent-bootstrap window:
     // writer B's file is already IN the live tree (mid-executeCommit)
-    // when writer A's bootstrap lists it as a bare legacy entry; B's
-    // commit then re-adds the same path with footer stats. Without
+    // when writer A's bootstrap lists it with its footer stats; B's
+    // commit then re-adds the same path with the same entry. Without
     // dedupeByPath the manifest lists the file twice and every pinned
     // read double-counts its rows.
     import spark.implicits._
@@ -376,12 +376,12 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     stagedB.size should be >= 1
     // record B's plan (append-only, fresh-table read -> read gen 0),
     // then "crash" B after moving its FIRST file into the live tree
-    Commit.writePlan(fs, stageB, CommitPlan(Some(0L), stagedB))
+    Commit.writePlan(fs, stageB, CommitPlan(0L, stagedB))
     val moved = stagedB.head
     fs.mkdirs(new Path(s"$target/${moved.substring(0, moved.lastIndexOf('/'))}"))
     fs.rename(new Path(stageB, moved), new Path(s"$target/$moved")) shouldBe true
     // writer A bootstraps NOW: its live-tree listing captures B's
-    // moved file as a bare (stats-less) legacy entry
+    // moved file, read from its footer
     val stageA = new Path(target + ".__stage-a")
     Seq((100L, "a1", 1L, 1L)).toDF("doc_id", "payload", "batch_id", "shard")
       .write.mode("overwrite").partitionBy("shard").parquet(stageA.toString)

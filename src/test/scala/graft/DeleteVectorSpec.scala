@@ -56,7 +56,7 @@ class DeleteVectorSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     got.where(col("id") % 20 === 5).count() shouldBe 0L
     // COUNT stays metadata-exact; MIN/MAX refuses (a deleted row could
     // be the recorded extreme)
-    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(190L)
+    Snapshot.latest(fs, target).map(_.rowCount) shouldBe Some(190L)
     Snapshot.latest(fs, target).flatMap(_.minMax("id")) shouldBe None
   }
 
@@ -73,7 +73,7 @@ class DeleteVectorSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     // fully-covered re-delete: zero
     Streaming.deleteWhere(spark, target, col("id") < 15L) shouldBe 0L
     Streaming.readCommitted(spark, target).count() shouldBe 185L
-    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(185L)
+    Snapshot.latest(fs, target).map(_.rowCount) shouldBe Some(185L)
     // the range reader applies the vectors too
     Streaming.readCommittedRange(spark, target, "id", 0L, 19L).count() shouldBe 5L
   }
@@ -106,7 +106,7 @@ class DeleteVectorSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     after.foreach { case (rel, _, n) => perFile(rel) shouldBe n }
     after.map(_._3).sum shouldBe 5L
     Streaming.readCommitted(spark, target).count() shouldBe 195L
-    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(195L)
+    Snapshot.latest(fs, target).map(_.rowCount) shouldBe Some(195L)
   }
 
   test("deleteRange zone-map-prunes the scan and deletes exactly the range") {
@@ -158,7 +158,7 @@ class DeleteVectorSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     Snapshot.at(fs, target, g).hasDeleteVectors shouldBe false
     Streaming.readCommitted(spark, target).count() shouldBe 180L
     spark.read.format("graft").load(target).count() shouldBe 180L
-    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(180L)
+    Snapshot.latest(fs, target).map(_.rowCount) shouldBe Some(180L)
     // sidecar GC: the sweep is reference-counted against RETAINED
     // generations — while the tagged generation is still readable
     // (time travel), its sidecar must survive even past the in-flight

@@ -225,7 +225,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSessionSetup {
     locally {
       val stage = new org.apache.hadoop.fs.Path(target + ".__stage")
       Commit.writePlan(fs, stage,
-        CommitPlan(readGen = None, Commit.listRel(fs, stage), Set("shard=1")))
+        CommitPlan(Commit.readGen(fs, target), Commit.listRel(fs, stage), Set("shard=1")))
     }
     assert(Streaming.readCommitted(spark, target).count() == 100) // nothing torn
 

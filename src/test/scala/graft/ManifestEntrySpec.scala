@@ -7,9 +7,9 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.table.{Bounds, ColumnStats, CommitHeader, ManifestEntry, ManifestLine, Tag}
 
-/** The manifest codec (`graft.table.Manifest`): every line shape ever
-  * written decodes to the expected typed values and re-encodes to the
-  * same bytes, and any entry the writers can build survives an
+/** The manifest codec (`graft.table.Manifest`): every line shape of
+  * the table format decodes to the expected typed values and re-encodes
+  * to the same bytes, and any entry the writers can build survives an
   * encode/decode round trip — hostile column names included.
   */
 class ManifestEntrySpec extends AnyFunSuite with Matchers {
@@ -19,13 +19,10 @@ class ManifestEntrySpec extends AnyFunSuite with Matchers {
 
   // one line per shape, oldest first
   private val golden: Seq[String] = Seq(
-    p,                                                   // legacy bare path
-    s"$p\t120",                                          // + row count
+    s"$p\t120",                                          // row count
     s"$p\t120\tid:l:0:119",                              // + bounds, pre-null-count
     s"$p\t120\t\tsh:0a1b2c3d",                           // empty bounds + schema hash
     s"$p\t120\t$bounds\tsh:0a1b2c3d",                    // full stats
-    s"$p\tbl:doc_id:bl-000000000002-ab12cd34.parquet",   // bloom on a legacy entry
-    s"$p\tdv:dv-000000000002-ab12cd34.parquet:4",        // DV on a legacy entry
     s"$p\t120\tdv:dv-000000000002-ab12cd34.parquet:7",   // DV on a pre-bounds entry
     s"$p\t120\t$bounds\tsh:0a1b2c3d\tdv:dv-3.parquet:7\tbl:id:bl-4.parquet",
     s"$p\t120\t$bounds\tsh:0a1b2c3d\tbl:id:bl-4.parquet\tdv:dv-3.parquet:7",
@@ -49,8 +46,7 @@ class ManifestEntrySpec extends AnyFunSuite with Matchers {
 
   test("the golden lines decode to the values their writers meant") {
     def entry(l: String) = ManifestEntry.decode(l)
-    entry(p) shouldBe ManifestEntry(p, None, Bounds.Absent, Nil)
-    entry(s"$p\t120").rows shouldBe Some(120L)
+    entry(s"$p\t120") shouldBe ManifestEntry(p, 120L, Bounds.Absent, Nil)
     entry(s"$p\t120\tid:l:0:119").bounds.range("id") shouldBe Some(('l', "0", "119"))
     entry(s"$p\t120\tid:l:0:119").bounds.nulls("id") shouldBe None
     val full = entry(s"$p\t120\t$bounds\tsh:0a1b2c3d")
@@ -61,13 +57,11 @@ class ManifestEntrySpec extends AnyFunSuite with Matchers {
     full.bounds.nulls("v") shouldBe Some(120L)
     full.schemaHash shouldBe Some("0a1b2c3d")
     full.dv shouldBe None
-    val legacyBloom = entry(s"$p\tbl:doc_id:bl-000000000002-ab12cd34.parquet")
-    legacyBloom.rows shouldBe None
-    legacyBloom.liveRows shouldBe None
-    legacyBloom.blooms shouldBe Map("doc_id" -> "bl-000000000002-ab12cd34.parquet")
-    entry(s"$p\tdv:dv-000000000002-ab12cd34.parquet:4").dv shouldBe
-      Some(Tag.Dv("dv-000000000002-ab12cd34.parquet", 4L))
-    entry(s"$p\t120\tdv:dv-000000000002-ab12cd34.parquet:7").liveRows shouldBe Some(113L)
+    val dv = entry(s"$p\t120\tdv:dv-000000000002-ab12cd34.parquet:7")
+    dv.dv shouldBe Some(Tag.Dv("dv-000000000002-ab12cd34.parquet", 7L))
+    dv.liveRows shouldBe 113L
+    entry(s"$p\t120\t$bounds\tsh:0a1b2c3d\tdv:dv-3.parquet:7\tbl:id:bl-4.parquet").blooms shouldBe
+      Map("id" -> "bl-4.parquet")
     val dvCol = entry(s"$p\t5\tdv:l:1:5:0\tsh:0a1b2c3d")
     dvCol.dv shouldBe None
     dvCol.bounds.range("dv") shouldBe Some(('l', "1", "5"))
@@ -81,8 +75,6 @@ class ManifestEntrySpec extends AnyFunSuite with Matchers {
     ManifestLine.decode("@ shard%3D3\tm-000000000008-ab12cd34-0") shouldBe
       ManifestLine.Ref("shard=3", "m-000000000008-ab12cd34-0")
     ManifestLine.decode(s"- $p") shouldBe ManifestLine.Remove(p)
-    ManifestLine.isLegacyFlat(Seq(p, s"+ $p").map(ManifestLine.decode)) shouldBe true
-    ManifestLine.isLegacyFlat(golden.drop(13).map(ManifestLine.decode)) shouldBe false
     CommitHeader.of(golden.takeRight(4).map(ManifestLine.decode)) shouldBe
       CommitHeader(Some("0a1b2c3d"), Some("sinkbatch-4"), Map("sink-a" -> 4L), rebuild = true)
     CommitHeader.of(golden.takeRight(4).map(ManifestLine.decode)).lines.map(_.encode) shouldBe
@@ -131,12 +123,12 @@ class ManifestEntrySpec extends AnyFunSuite with Matchers {
   private val entry: Gen[ManifestEntry] = for {
     dir <- Gen.oneOf("", "shard=0/", "a=1/b=x%20y/")
     file <- word
-    rows <- Gen.option(Gen.choose(0L, Long.MaxValue / 2))
+    rows <- Gen.choose(0L, Long.MaxValue / 2)
     cols <- Gen.listOf(Gen.zip(name, stats)).map(_.toMap.toSeq)
     withBounds <- Gen.oneOf(true, false)
     tags <- Gen.listOf(tag)
   } yield ManifestEntry(s"$dir$file.parquet", rows,
-    if (rows.isDefined && withBounds) Bounds.of(cols) else Bounds.Absent, tags)
+    if (withBounds) Bounds.of(cols) else Bounds.Absent, tags)
 
   test("property: decode(encode(e)) == e, hostile column names included") {
     forAll(entry) { e =>

@@ -19,13 +19,12 @@ import graft.table.{Commit, CommitPlan, Snapshot}
   * the window) — never the table's entry list — and commit-side
   * driver memory is O(touched dirs) at every cadence. Checkpoints
   * also record their own commit's `+`/`-` delta, keeping optimistic
-  * conflict scans exact across checkpoint generations. Legacy flat
-  * checkpoints stay readable and migrate to the new format at the
-  * next checkpoint. Unreferenced per-dir manifests (CAS losers,
-  * crashed attempts) are swept once their generation ages past the
-  * horizon, crashed writers' temp files once they are abandoned, while
-  * reused references keep their m-files alive across checkpoints
-  * indefinitely.
+  * conflict scans exact across checkpoint generations. A checkpoint
+  * in any other layout, or an entry with no row count, is refused.
+  * Unreferenced per-dir manifests (CAS losers, crashed attempts) are
+  * swept once their generation ages past the horizon, crashed writers'
+  * temp files once they are abandoned, while reused references keep
+  * their m-files alive across checkpoints indefinitely.
   */
 class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
@@ -95,72 +94,85 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
   }
 
   /** An 80-row, 8-shard table laid down WITHOUT the module (plain
-    * partitioned write) under a hand-written old-format flat manifest:
-    * bare `path` entry lines, no row counts.
+    * partitioned write); returns it with its data files, table-relative.
     */
-  private def legacyFlatTable(prefix: String): String = {
+  private def plainTable(prefix: String): (String, Seq[String]) = {
     val target = Files.createTempDirectory(prefix).toString + "/t"
     rows(0 until 80, k => s"v1-$k", 1L)
       .write.mode("overwrite").partitionBy("shard").parquet(target)
-    val rels = {
-      def walk(p: Path, rel: String): Seq[String] =
-        fs.listStatus(p).toSeq.flatMap { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("_") || n.startsWith(".")) Nil
-          else if (st.isDirectory) walk(st.getPath, if (rel.isEmpty) n else s"$rel/$n")
-          else Seq(if (rel.isEmpty) n else s"$rel/$n")
-        }
-      walk(new Path(target), "")
-    }
-    val mdir = Snapshot.manifestDir(target)
-    fs.mkdirs(mdir)
-    val out = fs.create(new Path(mdir, "gen-000000000001"), true)
-    try out.write(rels.sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
-    target
+    (target, Commit.listRel(fs, new Path(target)).sorted)
   }
 
-  test("a LEGACY flat checkpoint stays readable, supports shard-scoped verbs, " +
-      "and migrates to the manifest-list format at the next checkpoint") {
-    val target = legacyFlatTable("graft-ml-legacy")
-    // legacy read path: flat entry list, no refs
-    Streaming.readCommitted(spark, target).count() shouldBe 80L
-    // shard-scoped verbs advance it by delta on top of the legacy base
-    (2L to 7L).foreach(v => upsert(target, 0 until 80 by 8, k => s"v$v-$k", v))
-    Streaming.readCommitted(spark, target).count() shouldBe 80L
-    // the gen-8 checkpoint migrates the whole table to refs format
-    upsert(target, 0 until 80 by 8, k => s"v8-$k", 8L)
-    val gen8 = manifestLines(target, "gen-000000000008")
-    gen8.exists(_.startsWith("@ ")) shouldBe true
-    gen8.exists(l => !l.startsWith("# ") && !l.startsWith("@ ") &&
-      !l.startsWith("+ ") && !l.startsWith("- ")) shouldBe false
-    val got = Streaming.readCommitted(spark, target)
-      .select("doc_id", "payload").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    (0L until 80L).foreach { k =>
-      got(k) shouldBe (if (k % 8 == 0) s"v8-$k" else s"v1-$k")
-    }
+  private def overwrite(p: Path, lines: Seq[String]): Unit = {
+    val out = fs.create(p, true)
+    try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
   }
 
-  test("a bloom-indexed LEGACY stat-less table still answers its metadata reads " +
-      "and refuses deleteWhere") {
-    val target = legacyFlatTable("graft-ml-legacy-bloom")
-    // the retag turns each bare `path` line into `path\tbl:doc_id:<sidecar>`:
-    // a tag where a row count would sit, never a row count
-    Streaming.buildBloomIndex(spark, target, "doc_id") should be > 0
-    manifestLines(target, "inc-000000000002")
-      .exists(_.contains("\tbl:doc_id:bl-")) shouldBe true
-    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe None
-    Snapshot.latest(fs, target).flatMap(_.dirRowCounts) shouldBe None
-    val latest = Streaming.tableHistory(spark, target)
-      .orderBy(col("generation").desc).first()
-    latest.getAs[Long]("generation") shouldBe 2L
-    latest.isNullAt(latest.fieldIndex("live_rows")) shouldBe true
-    Streaming.readCommitted(spark, target).count() shouldBe 80L
-    val ex = intercept[IllegalArgumentException] {
-      Streaming.deleteWhere(spark, target, col("doc_id") === 3L)
+  test("a reader refuses every layout but the current one, naming layout and file") {
+    def refused(layout: String, file: String)(call: => Any): Unit =
+      withClue(s"$layout in $file: ") {
+        val ex = intercept[IllegalStateException](call)
+        ex.getMessage should include(layout)
+        ex.getMessage should include(file)
+      }
+    val gen1 = "gen-000000000001"
+    // a flat checkpoint: entry lines where the `@ dir\tm-file` refs belong
+    locally {
+      val (target, rels) = plainTable("graft-ml-flat")
+      overwrite(new Path(Snapshot.manifestDir(target), gen1), rels.map(r => s"$r\t10"))
+      refused("flat checkpoint", gen1)(Streaming.readCommitted(spark, target).count())
+      refused("flat checkpoint", gen1)(upsert(target, 0 until 80 by 8, k => s"v2-$k", 2L))
     }
-    ex.getMessage should include("deleteWhere needs per-file row counts")
-    Streaming.readCommitted(spark, target).count() shouldBe 80L
+    // an entry line with no row count: the bare-path flat checkpoint of
+    // the oldest writers, and a per-dir manifest
+    locally {
+      val (target, rels) = plainTable("graft-ml-bare")
+      overwrite(new Path(Snapshot.manifestDir(target), gen1), rels)
+      refused("stat-less manifest entry", gen1)(Streaming.readCommitted(spark, target).count())
+      refused("stat-less manifest entry", gen1)(
+        Streaming.deleteWhere(spark, target, col("doc_id") === 3L))
+    }
+    locally {
+      val target = Files.createTempDirectory("graft-ml-rowless").toString + "/t"
+      upsert(target, 0 until 80, k => s"v1-$k", 1L)
+      val m = refsOf(target, 1L)("shard=3")
+      val mPath = new Path(Snapshot.manifestDir(target), m)
+      overwrite(mPath, manifestLines(target, m).map(_.split('\t').head))
+      refused("stat-less manifest entry", m)(Streaming.readCommitted(spark, target).count())
+      refused("stat-less manifest entry", m)(Streaming.tableHistory(spark, target).count())
+    }
+    // a commit plan with no `B` read generation
+    locally {
+      val target = Files.createTempDirectory("graft-ml-bless").toString + "/t"
+      upsert(target, 0 until 80, k => s"v1-$k", 1L)
+      rows(0 until 80 by 8, k => s"v2-$k", 2L)
+        .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
+      val stage = new Path(target + ".__stage")
+      overwrite(new Path(stage, Commit.StageCommitMarker),
+        Commit.listRel(fs, stage).map(f => s"F $f") :+ "R shard=0")
+      refused("no read generation", Commit.StageCommitMarker)(Commit.recoverStage(fs, target))
+      refused("no read generation", Commit.StageCommitMarker)(
+        upsert(target, 0 until 80 by 8, k => s"v3-$k", 3L))
+      Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
+    }
+    // a file with no parquet footer in the tree, at bootstrap and at
+    // writeManifest: nothing is committed, and once the file is gone
+    // the plan left at the stage rolls forward
+    locally {
+      val (target, _) = plainTable("graft-ml-notes")
+      overwrite(new Path(s"$target/shard=1/notes.txt"), Seq("not parquet"))
+      rows(80 until 88, k => s"v1-$k", 1L)
+        .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
+      refused("no readable parquet footer", "shard=1/notes.txt")(
+        Commit.commitStage(fs, target, Set.empty, 0L))
+      refused("no readable parquet footer", "shard=1/notes.txt")(
+        Streaming.writeManifest(fs, target))
+      Streaming.manifestGenerations(fs, target) shouldBe Nil
+      fs.delete(new Path(s"$target/shard=1/notes.txt"), false) shouldBe true
+      Commit.recoverStage(fs, target)
+      Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
+      Streaming.readCommitted(spark, target).count() shouldBe 88L
+    }
   }
 
   test("optimistic conflict detection stays exact ACROSS a checkpoint generation: " +
@@ -251,7 +263,7 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     // plan marker (files already moved, manifest already committed)
     val stage = new Path(target + ".__stage")
     fs.mkdirs(stage)
-    Commit.writePlan(fs, stage, CommitPlan(Some(1L), committed, Set("shard=0")))
+    Commit.writePlan(fs, stage, CommitPlan(1L, committed, Set("shard=0")))
     // recovery must recognize the landed commit: no new generation, no
     // deletion of the manifest-referenced files
     Commit.recoverStage(fs, target)

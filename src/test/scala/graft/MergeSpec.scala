@@ -65,7 +65,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       .map(s => s.getPath.getName -> (s.getLen, s.getModificationTime)).toMap
     dataFiles.foreach { case (name, sig) => after(name) shouldBe sig }
     // metadata row count stays exact through the DV + add commit
-    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(102L)
+    Snapshot.latest(fs, target).map(_.rowCount) shouldBe Some(102L)
     // the DV-applying connector reads the merged state too
     spark.read.format("graft").load(target).count() shouldBe 102L
   }
@@ -83,7 +83,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val got = Streaming.readCommitted(spark, target)
     got.count() shouldBe 90L
     got.where(col("id") % 3 === 0 && col("id") < 30).count() shouldBe 0L
-    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(90L)
+    Snapshot.latest(fs, target).map(_.rowCount) shouldBe Some(90L)
   }
 
   test("mergeInto INSERT-ONLY on a NON-EMPTY table leaves matched rows untouched " +
@@ -113,7 +113,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     got.where(col("id") === 300L).select("score").head().getLong(0) shouldBe 400L
     // insert-only commits carry NO delete vectors at all
     Snapshot.latest(fs, target).get.hasDeleteVectors shouldBe false
-    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(102L)
+    Snapshot.latest(fs, target).map(_.rowCount) shouldBe Some(102L)
   }
 
   test("mergeInto refuses an AMBIGUOUS update (one target row, many source rows)") {
@@ -198,7 +198,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val again = Streaming.readCommitted(spark, target)
     again.count() shouldBe 100L
     again.where(col("id") === 15L).select("score").head().getLong(0) shouldBe 7L
-    Snapshot.latest(fs, target).flatMap(_.rowCount) shouldBe Some(100L)
+    Snapshot.latest(fs, target).map(_.rowCount) shouldBe Some(100L)
   }
 
   test("updateWhere validates assignment columns") {

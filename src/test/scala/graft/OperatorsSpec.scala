@@ -94,6 +94,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       closure.schema shouldBe distributed.schema
       closure.collect().toSet shouldBe distributed.collect().toSet
       closure.count() shouldBe closure.distinct().count()
+      distributed.count() shouldBe distributed.distinct().count()
     }
   }
 

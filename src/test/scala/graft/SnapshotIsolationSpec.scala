@@ -51,7 +51,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
       .parquet(target + ".__stage")
     val stage = new Path(target + ".__stage")
     val files = Commit.listRel(fs, stage)
-    Commit.writePlan(fs, stage, CommitPlan(readGen = None, files, replaced))
+    Commit.writePlan(fs, stage, CommitPlan(Commit.readGen(fs, target), files, replaced))
     // the crash: one file moved, the rest still staged, manifest not bumped
     val first = files.head
     val dst = new Path(s"$target/$first")
@@ -306,7 +306,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
   test("manifest row-count stats: per-dir live counts are a metadata lookup, exact through upsert and delete") {
     val target = Files.createTempDirectory("graft-stats").toString + "/t"
     seed(target) // docs 0..99 across shards 0 and 1
-    def statCounts() = Snapshot.latest(fs, target).flatMap(_.dirRowCounts).get
+    def statCounts() = Snapshot.latest(fs, target).map(_.dirRowCounts).get
     def dataCounts() = Streaming.readCommitted(spark, target)
       .groupBy(col("shard")).count().collect()
       .map(r => s"shard=${r.getInt(0)}" -> r.getLong(1)).toMap

@@ -218,7 +218,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       val stage = new org.apache.hadoop.fs.Path(target + ".__stage")
       val files = fs.listStatus(stage).filter(_.isFile).map(_.getPath.getName)
         .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      Commit.writePlan(fs, stage, CommitPlan(readGen = None, files.toSeq, Set("")))
+      Commit.writePlan(fs, stage, CommitPlan(Commit.readGen(fs, target), files.toSeq, Set("")))
     }
     Streaming.readCommitted(spark, target).count() shouldBe 2L
     // ...and the next micro-batch on restart heals FIRST (recovery is

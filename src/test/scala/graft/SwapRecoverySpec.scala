@@ -52,7 +52,7 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
   private def writePlan(target: String, replaced: Set[String]): Seq[String] = {
     val stage = new Path(target + ".__stage")
     val files = Commit.listRel(fs, stage)
-    Commit.writePlan(fs, stage, CommitPlan(readGen = None, files, replaced))
+    Commit.writePlan(fs, stage, CommitPlan(Commit.readGen(fs, target), files, replaced))
     files
   }
 
