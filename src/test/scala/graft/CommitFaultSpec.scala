@@ -111,13 +111,13 @@ object FaultyFs {
   * mutating filesystem call of `deleteWhere` (the delete-vector path),
   * `compactShards` or the bootstrap commit (the first `commitStage` on
   * a directory of plain parquet) leaves a table that recovery heals to
-  * exactly the
-  * generation before or after the verb, whose every retained entry
-  * names a file on disk, where no deleted row comes back, and whose
-  * manifest dir holds nothing a retained generation cannot reach once
-  * the sweep runs past the abandonment window. Also pins the mutating
-  * calls of one replacing commit: tombstones live only in the
-  * generation file, so no `del-` file is written, renamed or deleted.
+  * exactly the generation before or after the verb, whose every
+  * retained entry names a file on disk, where no deleted row comes
+  * back, and whose manifest dir holds nothing a retained generation
+  * cannot reach once the sweep runs past the abandonment window. Also
+  * pins the mutating calls of one replacing commit: tombstones live
+  * only in the generation file, so no `del-` file is written, renamed
+  * or deleted.
   */
 class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
