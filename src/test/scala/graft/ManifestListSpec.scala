@@ -108,21 +108,25 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
   }
 
-  test("a reader refuses every layout but the current one, naming layout and file") {
-    def refused(layout: String, file: String)(call: => Any): Unit =
-      withClue(s"$layout in $file: ") {
-        val ex = intercept[IllegalStateException](call)
-        ex.getMessage should include(layout)
-        ex.getMessage should include(file)
-      }
-    val gen1 = "gen-000000000001"
-    // a flat checkpoint: entry lines where the `@ dir\tm-file` refs belong
-    locally {
-      val (target, rels) = plainTable("graft-ml-flat")
-      overwrite(new Path(Snapshot.manifestDir(target), gen1), rels.map(r => s"$r\t10"))
-      refused("flat checkpoint", gen1)(Streaming.readCommitted(spark, target).count())
-      refused("flat checkpoint", gen1)(upsert(target, 0 until 80 by 8, k => s"v2-$k", 2L))
+  /** `call` fails with one message naming the refused layout and the file. */
+  private def refused(layout: String, file: String)(call: => Any): Unit =
+    withClue(s"$layout in $file: ") {
+      val ex = intercept[IllegalStateException](call)
+      ex.getMessage should include(layout)
+      ex.getMessage should include(file)
     }
+
+  private val gen1 = "gen-000000000001"
+
+  test("a LEGACY flat checkpoint is refused by a read and a write, naming its file") {
+    // entry lines where the `@ dir\tm-file` refs belong
+    val (target, rels) = plainTable("graft-ml-flat")
+    overwrite(new Path(Snapshot.manifestDir(target), gen1), rels.map(r => s"$r\t10"))
+    refused("flat checkpoint", gen1)(Streaming.readCommitted(spark, target).count())
+    refused("flat checkpoint", gen1)(upsert(target, 0 until 80 by 8, k => s"v2-$k", 2L))
+  }
+
+  test("a LEGACY stat-less table is refused at decode, naming its file") {
     // an entry line with no row count: the bare-path flat checkpoint of
     // the oldest writers, and a per-dir manifest
     locally {
@@ -141,6 +145,9 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       refused("stat-less manifest entry", m)(Streaming.readCommitted(spark, target).count())
       refused("stat-less manifest entry", m)(Streaming.tableHistory(spark, target).count())
     }
+  }
+
+  test("a plan with no read generation, or a file with no footer, is refused") {
     // a commit plan with no `B` read generation
     locally {
       val target = Files.createTempDirectory("graft-ml-bless").toString + "/t"
