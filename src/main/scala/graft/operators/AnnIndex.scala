@@ -48,6 +48,13 @@ import graft.functions.VectorKit
   * build, upsert, and query time per the VectorKit.normalizable
   * policy — an index stores directions, and they have none.
   *
+  * Concurrency: each of the three tables commits optimistically from
+  * its own per-writer stage, like every table verb. The index verbs
+  * still take a lease on the index root ([[graft.table.Commit.withWriterLease]]),
+  * because what they keep consistent spans tables: the corpus,
+  * centroid and id-map commits under the dirty sentinel, and the
+  * `__current` repoint with its version GC ([[writeIndexVersioned]]).
+  *
   * AnnIndexSpec drives the full persisted cycle (build -> partitioned
   * parquet -> fresh-read serve with an asserted pruned scan -> upsert
   * -> post-build vectors found -> drift), pinning the tinyint storage
@@ -149,17 +156,17 @@ object AnnIndex {
     graft.table.Commit.withWriterLease(fs, root) {
       // A rebuild over an existing root is a NEW GENERATION: purge
       // every commit-protocol leftover of the old one first. A
-      // committed `corpus.__stage` left by a crashed maintenance verb
-      // would otherwise be rolled FORWARD by the next heal INTO the
-      // freshly rebuilt corpus — resurrecting stale cells and silently
-      // desyncing the new idmap (r13 advice, medium). The MANIFEST
-      // DIRS are purged too: the rebuild's mode-overwrite physically
-      // deletes the prior generation's files, so its manifests (and
-      // pending tombstones) would dangle — the fresh root restarts at
-      // generation 1 from a clean full listing.
-      for (leftover <- Seq("corpus.__stage", "idmap.__stage", "centroids.__stage",
-          "corpus.__manifests", "idmap.__manifests", "centroids.__manifests"))
-        fs.delete(new org.apache.hadoop.fs.Path(s"$root/$leftover"), true)
+      // committed `corpus.__stage-<token>` left by a crashed
+      // maintenance verb would otherwise be rolled FORWARD by the next
+      // heal INTO the freshly rebuilt corpus — resurrecting stale cells
+      // and silently desyncing the new idmap (r13 advice, medium). The
+      // MANIFEST DIRS are purged too: the rebuild's mode-overwrite
+      // physically deletes the prior generation's files, so its
+      // manifests (and pending tombstones) would dangle — the fresh
+      // root restarts at generation 1 from a clean full listing.
+      Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+          s"$root/{corpus,idmap,centroids}.__{stage-*,manifests}")))
+        .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
       // dirty-first: a crash anywhere before the sidecar is complete
       // leaves the sentinel, and the next heal rebuilds the sidecar from
       // the corpus — the tables can never silently disagree
@@ -346,7 +353,7 @@ object AnnIndex {
     // an append reads nothing of the sidecar: its read generation is
     // the one it stages against
     val readGen = graft.table.Commit.readGen(fs, s"$root/idmap")
-    val stage = graft.table.Commit.freshStage(fs, s"$root/idmap")
+    val stage = graft.table.Commit.newStage(s"$root/idmap")
     // vec_id re-cast defensively: every appended file must carry the
     // same long type as rebuildIdMap's corpus-derived sidecar, or a
     // later parquet read fails on schema conflict (r13 advice, low)
@@ -364,13 +371,13 @@ object AnnIndex {
       .write.mode("overwrite").partitionBy("shard").parquet(stage.toString)
     // append-only commit: no replaced dirs — every previous entry
     // survives, the staged files join the manifest atomically
-    graft.table.Commit.commitStage(fs, s"$root/idmap", Set.empty, readGen)
+    graft.table.Commit.commitStage(fs, s"$root/idmap", Set.empty, readGen, stage)
   }
 
   /** Open a persisted index for serving: (centroids, corpus). By
     * default the open HEALS a maintenance crash first (interrupted
     * staged commit, orphan cells, dirty sidecar) — but only if it can
-    * take the writer lease: against a LIVE maintainer the healing is
+    * take the index lease: against a LIVE maintainer the healing is
     * skipped (that writer owns the layout and will heal), never raced.
     * Both tables are read PINNED to their latest committed manifest
     * generation (Streaming.readCommitted): under the immutable commit
@@ -395,8 +402,9 @@ object AnnIndex {
 
   /** The shared entry-point healing every maintenance verb (and a
     * lease-holding [[openIndex]]) runs before touching the layout:
-    * roll a PLANNED staged commit forward (or an unplanned stage back)
-    * on the corpus, centroids, and sidecar, then give any
+    * [[graft.table.Commit.recover]] on the corpus, centroids, and
+    * sidecar (a PLANNED staged commit rolls forward, an abandoned
+    * unplanned stage back), then give any
     * manifest-listed corpus cell that has no centroid row (the crash
     * window between a completed [[splitCell]] corpus commit and its
     * centroid rewrite) a repaired row, so no vector is ever silently
@@ -404,14 +412,14 @@ object AnnIndex {
     */
   private def heal(spark: SparkSession, root: String,
       fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    graft.table.Commit.recoverStage(fs, s"$root/corpus")
-    graft.table.Commit.recoverStage(fs, s"$root/centroids")
+    graft.table.Commit.recover(fs, s"$root/corpus")
+    graft.table.Commit.recover(fs, s"$root/centroids")
     repairOrphanCells(spark, root)
     // sidecar consistency: a dirty sentinel (crash inside a mutation)
     // or a live corpus with no sidecar (pre-sidecar index) triggers
     // the wholesale rebuild — one corpus scan, after which [[delete]]
     // discovery is shard-pruned again
-    graft.table.Commit.recoverStage(fs, s"$root/idmap")
+    graft.table.Commit.recover(fs, s"$root/idmap")
     if (fs.exists(idMapDirty(root, fs)) ||
         (fs.exists(new org.apache.hadoop.fs.Path(s"$root/corpus")) &&
           !fs.exists(new org.apache.hadoop.fs.Path(s"$root/idmap"))))
@@ -495,7 +503,7 @@ object AnnIndex {
     * under unique names, the manifest is the reader-visible commit,
     * and the replaced files await the retention horizon, so a pinned
     * reader's centroid paths never move. Crash-atomic via the commit
-    * plan ([[graft.table.Commit.recoverStage]] at every entry
+    * plan ([[graft.table.Commit.recover]] at every entry
     * point). localCheckpoint severs the lineage from the table being
     * replaced (the update usually READS the current table); `readGen`
     * is the centroid generation that read was based on.
@@ -504,9 +512,9 @@ object AnnIndex {
       fs: org.apache.hadoop.fs.FileSystem, readGen: Long): Unit = {
     val cPath = s"$root/centroids"
     val snap = updated.localCheckpoint()
-    val stage = graft.table.Commit.freshStage(fs, cPath)
+    val stage = graft.table.Commit.newStage(cPath)
     snap.write.mode("overwrite").parquet(stage.toString)
-    graft.table.Commit.commitStage(fs, cPath, replacedDirs = Set(""), readGen)
+    graft.table.Commit.commitStage(fs, cPath, replacedDirs = Set(""), readGen, stage)
   }
 
   /** Nearest-`nprobe` cell assignment of `vecs` ((id, e) with e
@@ -652,7 +660,7 @@ object AnnIndex {
     // entry healing: a crashed splitCell may have left a PLANNED
     // corpus commit half-executed — appending against that layout
     // would interleave this batch with the roll-forward. Heal FIRST
-    // (recoverStage completes or discards the stage), then append.
+    // (recovery completes or discards the stage), then append.
     heal(spark, root, fs)
     val centroids = graft.streaming.Streaming.readCommitted(spark, s"$root/centroids")
     // id normalized to `vec_id` long at the boundary (the [[build]]
@@ -714,12 +722,12 @@ object AnnIndex {
       // files join the touched cells' manifests atomically, untouched
       // cells keep their bytes, and no existing file moves
       val corpusGen = graft.table.Commit.readGen(fs, s"$root/corpus")
-      val corpusStage = graft.table.Commit.freshStage(fs, s"$root/corpus")
+      val corpusStage = graft.table.Commit.newStage(s"$root/corpus")
       // one staged file per touched cell per batch (not one per input
       // partition x cell) — bounds append fragmentation at the source
       rows.repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(corpusStage.toString)
-      graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty, corpusGen)
+      graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty, corpusGen, corpusStage)
       appendIdMap(rows.select(col("vec_id"), col("cell")), root)
     }
     base.count()
@@ -820,14 +828,14 @@ object AnnIndex {
       val before = manifestFiles(fs, corpusPath, s"cell=$cell")
       if (before <= 1) (before, before)
       else {
-        val stage = graft.table.Commit.freshStage(fs, corpusPath)
+        val stage = graft.table.Commit.newStage(corpusPath)
         val corpusGen = graft.table.Commit.readGen(fs, corpusPath)
         graft.streaming.Streaming
           .readCommittedDirs(spark, corpusPath, Set(s"cell=$cell"))
           .foreach { members =>
             members.coalesce(1)
               .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen)
+            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen, stage)
           }
         (before, manifestFiles(fs, corpusPath, s"cell=$cell"))
       }
@@ -893,12 +901,12 @@ object AnnIndex {
             .select(col("vec_id"), col("q8"), col("nrm"), lit(dst).as("cell"))
             .localCheckpoint()
           withIdMapDirty(fs, root) {
-            val stage = graft.table.Commit.freshStage(fs, corpusPath)
+            val stage = graft.table.Commit.newStage(corpusPath)
             moved.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
             // adds land under cell=dst (whose existing entries survive);
             // cell=$cell's entries are replaced by nothing — the folded
             // cell leaves the manifest atomically with the commit
-            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen)
+            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen, stage)
             upsertIdMap(moved.select(col("vec_id"), col("cell")), root)
           }
         }
@@ -920,7 +928,7 @@ object AnnIndex {
     * member is reassigned to the nearer sub-centroid, both sub-cells'
     * files are staged and committed under the immutable protocol (the
     * commit plan lands only after both staged dirs are fully written,
-    * so Commit.recoverStage ROLLS an interrupted commit FORWARD;
+    * so Commit.recover ROLLS an interrupted commit FORWARD;
     * the replaced cell's old files await the retention horizon for
     * pinned readers), and the k-row centroid table is rewritten with
     * the old row replaced and one row appended (new cell id = max + 1,
@@ -976,13 +984,13 @@ object AnnIndex {
       // replaced set is the split cell PLUS whatever Spark staged —
       // covering the degenerate 2-means that routes every member to
       // one side (the old dir's entries must still be superseded).
-      val stage = graft.table.Commit.freshStage(fs, corpusPath)
+      val stage = graft.table.Commit.newStage(corpusPath)
       reassigned.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
       val stagedDirs = fs.listStatus(stage)
         .filter(_.isDirectory).map(_.getPath.getName).toSet
       withIdMapDirty(fs, root) {
         graft.table.Commit.commitStage(fs, corpusPath,
-          stagedDirs + s"cell=$cell", corpusGen)
+          stagedDirs + s"cell=$cell", corpusGen, stage)
         // sidecar relabel for the moved half (the retained half keeps
         // its cell id — only newCell rows change assignment)
         graft.streaming.Streaming

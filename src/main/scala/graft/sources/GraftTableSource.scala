@@ -184,6 +184,7 @@ class GraftTableSource extends RelationProvider
       "graft sink needs a table path: df.write.format(\"graft\").save(<table>)"))
     val spark = sqlContext.sparkSession
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Commit.recover(fs, target)
     val existing = Snapshot.list(fs, target).latest
     val upsertKeys = (parameters.get("keyCol"), parameters.get("versionCol"),
       parameters.get("shardCol"))
@@ -214,8 +215,7 @@ class GraftTableSource extends RelationProvider
               "(followers detect the drift via the per-commit schema fingerprint)")
         }
       }
-      val stageName = Commit.writerStageName()
-      val stage = Commit.stagePath(target, stageName)
+      val stage = Commit.newStage(target)
       val parts = parameters.get("partitionBy").toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       // AQE-sized staged write (r19 advisor, medium): REBALANCE by the
@@ -236,13 +236,13 @@ class GraftTableSource extends RelationProvider
           case Some(snap) => snap.paths.map(dirOf).toSet + ""
           case None => Set.empty
         }
-      Commit.commitStage(fs, target, replaced, existing.getOrElse(0L), stageName)
+      Commit.commitStage(fs, target, replaced, existing.getOrElse(0L), stage)
     }
 
     mode match {
       case SaveMode.Append => upsertKeys match {
         case (Some(k), Some(v), Some(sh)) =>
-          Streaming.upsertPartitionedOptimistic(target, k, v, sh)(data)
+          Streaming.upsertPartitionedBatch(target, k, v, sh)(data, 0L)
         case (None, None, None) => stageAndCommit(replaceAll = false)
         case _ => throw new IllegalArgumentException(
           "graft upsert needs ALL of keyCol, versionCol, shardCol (or none for append)")
@@ -795,6 +795,9 @@ private[sources] class GraftStreamSink(
       spark.sparkContext.getLocalProperty("sql.streaming.queryId") != null
     val scope = txnScope(spark)
     val tag = s"sinkbatch-$batchId"
+    // a crashed earlier delivery's plan lands (or rolls back) before
+    // the redelivery check reads the high-water marks
+    Commit.recover(fs, target)
     // redelivery check:
     //  1. the durable per-scope `# txn` high-water mark, carried
     //     forward by EVERY commit (r17 advice, medium: with
@@ -856,8 +859,7 @@ private[sources] class GraftStreamSink(
                 "deliberately")
           }
         }
-        val stageName = Commit.writerStageName()
-        val stage = Commit.stagePath(target, stageName)
+        val stage = Commit.newStage(target)
         val parts = parameters.get("partitionBy").toSeq
           .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
         // the batch path's REBALANCE hint, but NOT AQE-sized here:
@@ -869,7 +871,7 @@ private[sources] class GraftStreamSink(
         val writer = sized.write.mode("overwrite")
         (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
           .parquet(stage.toString)
-        Commit.commitStage(fs, target, Set.empty, listing.latest.getOrElse(0L), stageName,
+        Commit.commitStage(fs, target, Set.empty, listing.latest.getOrElse(0L), stage,
           tag = Some(tag), txn = Some((scope, batchId)))
     }
   }

@@ -8,9 +8,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.table.{Commit, FooterSchema, KeyEnvelope, Listing, ManifestEntry, ManifestLine,
   Snapshot}
-import graft.table.Commit.{commitStage, listRel, recoverAbandonedStages, recoverStage,
-  refreshListing, sweepManifestDir, tryCommitManifest, withWriterLease,
-  CommitConflictException}
+import graft.table.Commit.{commitStage, listRel, recover, refreshListing, sweepManifestDir,
+  tryCommitManifest, CommitConflictException}
 import graft.table.Manifest.dirOf
 import graft.table.Snapshot.{manifestDir, ManifestKeep}
 
@@ -140,8 +139,7 @@ object Streaming {
     val conf = spark.sparkContext.hadoopConfiguration
     val targetPath = new org.apache.hadoop.fs.Path(target)
     val fs = targetPath.getFileSystem(conf)
-    withWriterLease(fs, target) {
-    recoverStage(fs, target)
+    recover(fs, target)
     val snap = Snapshot.latest(fs, target)
     val existing =
       if (!fs.exists(targetPath) && snap.isEmpty) None
@@ -158,12 +156,11 @@ object Streaming {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__new")
-    val stage = Commit.stagePath(target)
+    val stage = Commit.newStage(target)
     winner.write.mode("overwrite").parquet(stage.toString)
     // flat layout: the staged files land at the table root and replace
     // every previous root entry
-    commitStage(fs, target, replacedDirs = Set(""), readGen = snap.fold(0L)(_.gen))
-    }
+    commitStage(fs, target, replacedDirs = Set(""), readGen = snap.fold(0L)(_.gen), stage)
   }
 
   /** PARTITION-SCOPED latest-wins upsert — the 100-TB cut of
@@ -189,9 +186,20 @@ object Streaming {
     *
     * Atomicity: the commit plan makes the whole batch one atomic
     * generation — a crash anywhere rolls forward or back at the next
-    * verb ([[recoverStage]]); latest-wins by version keeps the
+    * verb ([[Commit.recover]]); latest-wins by version keeps the
     * foreachBatch redelivery contract idempotent regardless.
     * Untouched shards keep their files byte-identical.
+    *
+    * Concurrency is optimistic, with no table lease: each attempt
+    * stages into its own `<target>.__stage-<token>`. Writers whose
+    * batches touch DISJOINT shards both land (the loser of the
+    * generation rename rebases its delta and retries the CAS — no lost
+    * update, one linear manifest chain); a writer whose shards changed
+    * since its read conflicts and re-runs the whole body here (re-reads
+    * the now-current shards, re-merges, re-stages), at most
+    * [[MaxAttempts]] times with linear backoff — the Delta/Iceberg
+    * multi-writer contract, which lets ingest, compaction and GC run
+    * as separate services against one table.
     *
     * CONTRACT — `shardCol` must be a PURE FUNCTION of `keyCol`: the
     * latest-wins window partitions by (`shardCol`, `keyCol`) and nothing
@@ -219,79 +227,38 @@ object Streaming {
   )(batch: DataFrame, batchId: Long): Unit = {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, target) {
-      recoverStage(fs, target)
-      upsertPartitionedCore(fs, target, keyCol, versionCol, shardCol, batch,
-        stageName = ".__stage", allowSchemaEvolution)
-    }
-  }
-
-  /** OPTIMISTIC-CONCURRENCY twin of [[upsertPartitionedBatch]]: no
-    * table lease — each writer stages into its own
-    * `<target>.__stage-<token>` and the manifest advance is the CAS in
-    * [[executeCommit]]. Two writers whose batches touch DISJOINT
-    * shards both land concurrently (the loser of the generation rename
-    * rebases its delta and retries the CAS — no lost update, one
-    * linear manifest chain); writers touching the SAME shard conflict
-    * and the loser re-runs the whole verb here (re-reads the
-    * now-current shards, re-merges, re-stages) up to `maxAttempts`
-    * times with linear backoff. This is the Delta/Iceberg
-    * multi-writer contract — at fleet scale it lets ingest,
-    * compaction, and GC run as separate services against one table
-    * instead of funneling through a single lease (r15 judge #2).
-    *
-    * Bootstrap is single-writer by contract (the first commit's base
-    * is a live-tree listing — see executeCommit); seed the table
-    * before turning concurrent writers loose. Returns the number of
-    * verb attempts used (1 = no conflict).
-    */
-  def upsertPartitionedOptimistic(
-      target: String,
-      keyCol: String,
-      versionCol: String,
-      shardCol: String,
-      maxAttempts: Int = 5
-  )(batch: DataFrame): Int = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    recoverAbandonedStages(fs, target)
-    var attempt = 0
-    while (true) {
+    recover(fs, target)
+    var attempt = 1
+    while (!tryUpsertPartitioned(fs, target, keyCol, versionCol, shardCol, batch,
+        allowSchemaEvolution)) {
+      if (attempt >= MaxAttempts) throw new IllegalStateException(
+        s"upsert to $target conflicted $attempt times in a row — contention on these " +
+          "shards is too high; re-deliver the batch later")
+      Thread.sleep(math.min(50L * attempt, 500L))
       attempt += 1
-      try {
-        upsertPartitionedCore(fs, target, keyCol, versionCol, shardCol, batch,
-          stageName = Commit.writerStageName(), allowSchemaEvolution = false)
-        return attempt
-      } catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxAttempts) throw new IllegalStateException(
-            s"optimistic upsert to $target conflicted $attempt times in a row — " +
-              "contention on these shards is too high for optimistic mode; route " +
-              "them through one writer (upsertPartitionedBatch)", e)
-          Thread.sleep(math.min(50L * attempt, 500L))
-      }
     }
-    attempt // unreachable
   }
 
-  /** The shared upsert body: pinned read of the touched shards at the
-    * CURRENT latest generation, latest-wins merge, stage, commit.
-    * Callers own the concurrency discipline (lease or CAS-retry).
+  /** Verb attempts an optimistic upsert makes before it gives up. */
+  private val MaxAttempts = 5
+
+  /** One attempt of [[upsertPartitionedBatch]]: pinned read of the
+    * touched shards at the CURRENT latest generation, latest-wins
+    * merge, stage, commit. False when the commit conflicted.
     */
-  private def upsertPartitionedCore(
+  private def tryUpsertPartitioned(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       keyCol: String,
       versionCol: String,
       shardCol: String,
       batch: DataFrame,
-      stageName: String,
-      allowSchemaEvolution: Boolean = false
-  ): Unit = {
+      allowSchemaEvolution: Boolean
+  ): Boolean = {
     val spark = batch.sparkSession
     import org.apache.spark.sql.expressions.Window
     val shardVals = batch.select(col(shardCol)).distinct().collect().map(_.get(0))
-    if (shardVals.isEmpty) return
+    if (shardVals.isEmpty) return true
     require(!shardVals.contains(null),
       s"NULL $shardCol in upsert batch — shard must be a total function of $keyCol")
     // the transaction's snapshot version, recorded in the commit plan
@@ -345,14 +312,15 @@ object Streaming {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__new")
-    val stage = Commit.stagePath(target, stageName)
+    val stage = Commit.newStage(target)
     winner.write.mode("overwrite").partitionBy(shardCol).parquet(stage.toString)
     // replaced dirs = the dir names SPARK wrote into the stage (never
     // re-derived by interpolating shard values — the hive-escaping
     // hazard); every touched shard has a staged dir because latest-wins
     // keeps at least one row per key
     val replaced = fs.listStatus(stage).filter(_.isDirectory).map(_.getPath.getName).toSet
-    commitStage(fs, target, replaced, readGen, stageName)
+    try { commitStage(fs, target, replaced, readGen, stage); true }
+    catch { case _: CommitConflictException => false }
   }
 
   /** The pinned, partition-pruned read of a mutation verb: the touched
@@ -450,8 +418,8 @@ object Streaming {
     * (default 7 days, the Delta VACUUM convention). `dryRun = true`
     * (the default) returns the listing — candidates, reclaimable
     * bytes, and any stale `.__stage-*` dirs older than the window
-    * (left for [[recoverStage]], which owns their roll-forward/back
-    * decision) — without deleting anything.
+    * (left for [[Commit.recover]], which rolls a plan-bearing one
+    * forward and a plan-less one back) — without deleting anything.
     *
     * Scale: one recursive listing of the table tree + O(retained
     * generations) manifest resolutions, all metadata. No reference
@@ -899,22 +867,20 @@ object Streaming {
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
     val targetPath = new org.apache.hadoop.fs.Path(target)
     val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, target) {
-      recoverStage(fs, target)
-      // one snapshot is both what is read and what is replaced
-      val snap = Snapshot.latest(fs, target)
-      val stage = Commit.stagePath(target)
-      readSnapshot(spark, fs, target, snap).repartitionByRange(numFiles, col(clusterCol))
-        .sortWithinPartitions(clusterCol)
-        .write.mode("overwrite").parquet(stage.toString)
-      // every previous entry is superseded: replaced dirs come from the
-      // manifest when there is one, else from the live tree (bootstrap)
-      val replaced = snap match {
-        case Some(s) => s.paths.map(dirOf).toSet + ""
-        case None => listRel(fs, targetPath).map(dirOf).toSet + ""
-      }
-      commitStage(fs, target, replaced, readGen = snap.fold(0L)(_.gen))
+    recover(fs, target)
+    // one snapshot is both what is read and what is replaced
+    val snap = Snapshot.latest(fs, target)
+    val stage = Commit.newStage(target)
+    readSnapshot(spark, fs, target, snap).repartitionByRange(numFiles, col(clusterCol))
+      .sortWithinPartitions(clusterCol)
+      .write.mode("overwrite").parquet(stage.toString)
+    // every previous entry is superseded: replaced dirs come from the
+    // manifest when there is one, else from the live tree (bootstrap)
+    val replaced = snap match {
+      case Some(s) => s.paths.map(dirOf).toSet + ""
+      case None => listRel(fs, targetPath).map(dirOf).toSet + ""
     }
+    commitStage(fs, target, replaced, readGen = snap.fold(0L)(_.gen), stage)
   }
 
   /** The OPTIMIZE autopilot for a read-optimized table: re-cluster on
@@ -953,10 +919,10 @@ object Streaming {
     *
     * This is the maintenance job that keeps an append-heavy or
     * wide-ingest table's file count bounded at 100 TB — run it as its
-    * own service against the optimistic writers: an optimistic commit
-    * that lands on a fragmented shard between this verb's read and its
-    * commit makes the commit throw [[CommitConflictException]] (the
-    * writer's rows stay; re-run the compaction).
+    * own service beside the writers: a commit that lands on a
+    * fragmented shard between this verb's read and its commit makes
+    * the commit throw [[CommitConflictException]] (the writer's rows
+    * stay; re-run the compaction).
     */
   def compactShards(
       spark: org.apache.spark.sql.SparkSession,
@@ -967,37 +933,34 @@ object Streaming {
     require(maxFilesPerShard >= 1, s"maxFilesPerShard must be >= 1, got $maxFilesPerShard")
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, target) {
-      recoverStage(fs, target)
-      val snap = Snapshot.requireLatest(fs, target, "compact")
-      // fragmentation census from manifest metadata only. A shard
-      // carrying delete-vector entries counts as fragmented regardless
-      // of file count: compaction is where merge-on-read deletes are
-      // ABSORBED (the rewrite reads DV-applied rows and the new entries
-      // carry no tags), reclaiming both the masked rows' bytes and the
-      // read-side anti-join.
-      val lines = snap.entries
-      val perDir = lines.map(_.path)
-        .groupBy(dirOf).map { case (d, fsList) => d -> fsList.size }
-      val dvDirs = lines.filter(_.dv.isDefined)
-        .map(_.dir)
-        .filter(_.startsWith(s"$shardCol=")).toSet
-      val fragmented = perDir.collect {
-        case (d, n) if n > maxFilesPerShard && d.startsWith(s"$shardCol=") => d
-      }.toSet ++ dvDirs
-      if (fragmented.isEmpty) 0
-      else {
-        val touched = readEntries(spark, target, lines.filter(e => fragmented(e.dir)))
-        val stage = Commit.stagePath(target)
-        touched.repartition(col(shardCol))
-          .write.mode("overwrite").partitionBy(shardCol).parquet(stage.toString)
-        // the lease keeps lease-holding verbs out, not the optimistic
-        // writers: the read generation lets the commit's staleness scan
-        // catch one that replaced a fragmented shard since the read
-        commitStage(fs, target, fragmented, snap.gen)
-        sweepManifestDir(fs, Snapshot.list(fs, target), walkSidecars = true)
-        fragmented.size
-      }
+    recover(fs, target)
+    val snap = Snapshot.requireLatest(fs, target, "compact")
+    // fragmentation census from manifest metadata only. A shard
+    // carrying delete-vector entries counts as fragmented regardless
+    // of file count: compaction is where merge-on-read deletes are
+    // ABSORBED (the rewrite reads DV-applied rows and the new entries
+    // carry no tags), reclaiming both the masked rows' bytes and the
+    // read-side anti-join.
+    val lines = snap.entries
+    val perDir = lines.map(_.path)
+      .groupBy(dirOf).map { case (d, fsList) => d -> fsList.size }
+    val dvDirs = lines.filter(_.dv.isDefined)
+      .map(_.dir)
+      .filter(_.startsWith(s"$shardCol=")).toSet
+    val fragmented = perDir.collect {
+      case (d, n) if n > maxFilesPerShard && d.startsWith(s"$shardCol=") => d
+    }.toSet ++ dvDirs
+    if (fragmented.isEmpty) 0
+    else {
+      val touched = readEntries(spark, target, lines.filter(e => fragmented(e.dir)))
+      val stage = Commit.newStage(target)
+      touched.repartition(col(shardCol))
+        .write.mode("overwrite").partitionBy(shardCol).parquet(stage.toString)
+      // the read generation lets the commit's staleness scan catch a
+      // writer that replaced a fragmented shard since the read
+      commitStage(fs, target, fragmented, snap.gen, stage)
+      sweepManifestDir(fs, Snapshot.list(fs, target), walkSidecars = true)
+      fragmented.size
     }
   }
 
@@ -1054,69 +1017,67 @@ object Streaming {
   ): Int = {
     val targetPath = new org.apache.hadoop.fs.Path(target)
     val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, target) {
-      recoverStage(fs, target)
-      val snap = Snapshot.requireLatest(fs, target, "bloom-index")
-      val (gen, lines, entryByPath) = (snap.gen, snap.entries, snap.byPath)
-      if (lines.isEmpty) return 0
-      val qualRoot = fs.makeQualified(targetPath).toString
-      import spark.implicits._
-      val keyed = fileScan(spark, target, lines)
-        .select(
-          expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})").as("rel"),
-          col(column).cast("string").as("k"))
-        .as[(String, String)]
-      val bpk = bitsPerKey
-      val cap = maxBytesPerFile
-      val built: Seq[(String, Int, Int, Array[Byte])] = keyed
-        .groupByKey(_._1)
-        .mapGroups { (rel, it) =>
-          // two-pass-free build: buffer the group's distinct keys, size
-          // m from the count, then set bits (a file's keys fit an
-          // executor — files are split-sized by construction)
-          val keys = new scala.collection.mutable.HashSet[String]
-          it.foreach(t => if (t._2 != null) keys += t._2)
-          val m0 = math.max(64L, keys.size.toLong * bpk)
-          val m = math.min(m0, cap.toLong * 8).toInt
-          val k = 7
-          val bits = new Array[Byte]((m + 7) / 8)
-          keys.foreach { s =>
-            bloomBits(s.getBytes("UTF-8"), m, k).foreach { idx =>
-              bits(idx >> 3) = (bits(idx >> 3) | (1 << (idx & 7))).toByte
-            }
+    recover(fs, target)
+    val snap = Snapshot.requireLatest(fs, target, "bloom-index")
+    val (gen, lines, entryByPath) = (snap.gen, snap.entries, snap.byPath)
+    if (lines.isEmpty) return 0
+    val qualRoot = fs.makeQualified(targetPath).toString
+    import spark.implicits._
+    val keyed = fileScan(spark, target, lines)
+      .select(
+        expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})").as("rel"),
+        col(column).cast("string").as("k"))
+      .as[(String, String)]
+    val bpk = bitsPerKey
+    val cap = maxBytesPerFile
+    val built: Seq[(String, Int, Int, Array[Byte])] = keyed
+      .groupByKey(_._1)
+      .mapGroups { (rel, it) =>
+        // two-pass-free build: buffer the group's distinct keys, size
+        // m from the count, then set bits (a file's keys fit an
+        // executor — files are split-sized by construction)
+        val keys = new scala.collection.mutable.HashSet[String]
+        it.foreach(t => if (t._2 != null) keys += t._2)
+        val m0 = math.max(64L, keys.size.toLong * bpk)
+        val m = math.min(m0, cap.toLong * 8).toInt
+        val k = 7
+        val bits = new Array[Byte]((m + 7) / 8)
+        keys.foreach { s =>
+          bloomBits(s.getBytes("UTF-8"), m, k).foreach { idx =>
+            bits(idx >> 3) = (bits(idx >> 3) | (1 << (idx & 7))).toByte
           }
-          (rel, m, k, bits)
-        }.collect().toSeq
-      // one sidecar parquet per build
-      val sidecarName = writeSidecar(fs, target, "bl", gen + 1,
-        built.toDF("rel", "m", "k", "bits"))
-      val retagged: Map[String, ManifestEntry] = built.iterator.map { case (rel, _, _, _) =>
-        rel -> entryByPath(rel).withBloom(column, sidecarName)
-      }.toMap
-      val touchedDirs = retagged.keySet.map(dirOf)
-      // lease-serialized, but the CAS loop keeps optimistic racers safe:
-      // a lost CAS re-resolves; a racer that REWROTE one of our files
-      // just drops that file's retag (its new entry is untagged anyway)
-      var done = false
-      while (!done) {
-        val listing = Snapshot.list(fs, target)
-        val current = listing.at(listing.latest.getOrElse(0L), Some(touchedDirs))
-        val applicable = retagged.filter { case (p, _) =>
-          current.byPath.get(p).contains(entryByPath(p))
         }
-        if (applicable.isEmpty) return 0
-        val byDir = current.entries.groupBy(_.dir)
-        val postState = touchedDirs.iterator.map { d =>
-          d -> byDir.getOrElse(d, Vector.empty).map(l => applicable.getOrElse(l.path, l))
-            .sortBy(_.path)
-        }.toMap
-        done = tryCommitManifest(fs, listing, current.gen + 1, postState, Nil, Nil,
-          modified = applicable.values.toSeq.sortBy(_.path))
+        (rel, m, k, bits)
+      }.collect().toSeq
+    // one sidecar parquet per build
+    val sidecarName = writeSidecar(fs, target, "bl", gen + 1,
+      built.toDF("rel", "m", "k", "bits"))
+    val retagged: Map[String, ManifestEntry] = built.iterator.map { case (rel, _, _, _) =>
+      rel -> entryByPath(rel).withBloom(column, sidecarName)
+    }.toMap
+    val touchedDirs = retagged.keySet.map(dirOf)
+    // optimistic: a lost CAS re-resolves; a racer that REWROTE one of
+    // our files just drops that file's retag (its new entry is
+    // untagged anyway)
+    var done = false
+    while (!done) {
+      val listing = Snapshot.list(fs, target)
+      val current = listing.at(listing.latest.getOrElse(0L), Some(touchedDirs))
+      val applicable = retagged.filter { case (p, _) =>
+        current.byPath.get(p).contains(entryByPath(p))
       }
-      sweepManifestDir(fs, Snapshot.list(fs, target), walkSidecars = true)
-      refreshListing(target)
-      retagged.size
+      if (applicable.isEmpty) return 0
+      val byDir = current.entries.groupBy(_.dir)
+      val postState = touchedDirs.iterator.map { d =>
+        d -> byDir.getOrElse(d, Vector.empty).map(l => applicable.getOrElse(l.path, l))
+          .sortBy(_.path)
+      }.toMap
+      done = tryCommitManifest(fs, listing, current.gen + 1, postState, Nil, Nil,
+        modified = applicable.values.toSeq.sortBy(_.path))
     }
+    sweepManifestDir(fs, Snapshot.list(fs, target), walkSidecars = true)
+    refreshListing(target)
+    retagged.size
   }
 
   /** The bloom half of the OPTIMIZE autopilot (the
@@ -1333,8 +1294,7 @@ object Streaming {
     val conf = spark.sparkContext.hadoopConfiguration
     val targetPath = new org.apache.hadoop.fs.Path(target)
     val fs = targetPath.getFileSystem(conf)
-    withWriterLease(fs, target) {
-    recoverStage(fs, target)
+    recover(fs, target)
     val listing = Snapshot.list(fs, target)
     if (!fs.exists(targetPath) && listing.latest.isEmpty) return 0L
     val keyRows = keys.select(col(keyCol), col(shardCol)).localCheckpoint()
@@ -1357,7 +1317,7 @@ object Streaming {
       .join(keyRows.select(col(keyCol)), Seq(keyCol), "left_semi").count()
     if (deleted == 0L) return 0L
     val keep = touched.join(keyRows.select(col(keyCol)), Seq(keyCol), "left_anti")
-    val stage = Commit.stagePath(target)
+    val stage = Commit.newStage(target)
     // AQE-sized staged write (guide §2.5/§6): REBALANCE by the shard
     // column coalesces the touched shards' survivors into few
     // advisory-sized tasks (one data file per shard dir at commit-batch
@@ -1379,11 +1339,8 @@ object Streaming {
         .write.mode("overwrite").parquet(new org.apache.hadoop.fs.Path(stage, dirName).toString)
     }
     val replaced = fs.listStatus(stage).filter(_.isDirectory).map(_.getPath.getName).toSet
-    // the read generation: the lease keeps lease-holding verbs out, not
-    // the optimistic writers
-    commitStage(fs, target, replaced, listing.latest.getOrElse(0L))
+    commitStage(fs, target, replaced, listing.latest.getOrElse(0L), stage)
     deleted
-    }
   }
 
   /** MERGE-ON-READ point deletes — DELETE VECTORS (r16 judge #4,
@@ -1537,6 +1494,7 @@ object Streaming {
   ): Long = {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recover(fs, target)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -1561,8 +1519,8 @@ object Streaming {
     }
     throw new IllegalStateException(
       s"deleteWhere on $target conflicted $maxAttempts times in a row — " +
-        "contention on these shards is too high; serialize the delete " +
-        "behind the writer lease or route it through deleteFromPartitioned")
+        "contention on these shards is too high; retry later or route it " +
+        "through deleteFromPartitioned")
   }
 
   /** DESCRIBE-HISTORY for a graft table (r17 judge #6): one row per
@@ -1660,6 +1618,7 @@ object Streaming {
       src.alias("s").select(cols.map(c => expr(m.getOrElse(c, s"s.`$c`")).as(c)): _*)
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recover(fs, target)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -1838,7 +1797,7 @@ object Streaming {
     }
     throw new IllegalStateException(
       s"mergeInto $target conflicted $maxAttempts times in a row — contention " +
-        "on these shards is too high; serialize behind the writer lease")
+        "on these shards is too high; retry later")
   }
 
   /** Row-level UPDATE (r17 judge item #8): rewrite the rows matching
@@ -1889,6 +1848,7 @@ object Streaming {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
     val targetPath = new org.apache.hadoop.fs.Path(target)
     val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recover(fs, target)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -1919,7 +1879,7 @@ object Streaming {
     }
     throw new IllegalStateException(
       s"updateWhere on $target conflicted $maxAttempts times in a row — " +
-        "contention on these shards is too high; serialize behind the writer lease")
+        "contention on these shards is too high; retry later")
   }
 
   /** The shared COMMIT half of [[mergeInto]], [[updateWhere]] and
@@ -1959,8 +1919,7 @@ object Streaming {
         (retagged.toSeq.sortBy(_._1).map(_._2), newPerFile.keySet.map(dirOf),
           Some(sidecarName))
       }
-    val stageName = Commit.writerStageName()
-    val stage = Commit.stagePath(target, stageName)
+    val stage = Commit.newStage(target)
     newRows match {
       case Some(df) =>
         // size the add files by the KNOWN output row count (the verbs
@@ -1977,7 +1936,7 @@ object Streaming {
       case None => fs.mkdirs(stage) // retraction-only merge: no adds
     }
     try {
-      commitStage(fs, target, Set.empty, gen, stageName,
+      commitStage(fs, target, Set.empty, gen, stage,
         modifiedEntries = modified, volatileDirs = dvDirs ++ extraVolatileDirs,
         keyEnvelopes = keyEnvelopes)
       true

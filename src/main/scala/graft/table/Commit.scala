@@ -4,8 +4,10 @@ import graft.table.Manifest.dirOf
 import graft.table.Snapshot.{inParallel, manifestDir, ManifestKeep}
 
 /** The commit protocol of a graft table: the staged commit plan, the
-  * manifest CAS, crash recovery and the single-writer lease. Every
-  * verb that changes a table lands its change through this object.
+  * optimistic manifest CAS and crash recovery. Every verb that changes
+  * a table lands its change through this object, and none takes a
+  * lease. The writer lease here ([[withWriterLease]]) serialises only
+  * AnnIndex's index-level verbs and its `__current` repoint.
   */
 object Commit {
 
@@ -15,8 +17,8 @@ object Commit {
   // while any retained manifest generation references it, so a pinned
   // reader never loses a file to a concurrent commit.
   //
-  //  - A mutation stages its new files OUTSIDE the table
-  //    (`target.__stage`), then records a COMMIT PLAN (the staged file
+  //  - A mutation stages its new files OUTSIDE the table, in its own
+  //    `target.__stage-<token>`, then records a COMMIT PLAN (the staged file
   //    list + the dirs whose previous entries it replaces) atomically
   //    at the stage root — the crash pivot: plan present = roll the
   //    commit FORWARD; plan absent = the staged write died mid-job,
@@ -49,21 +51,21 @@ object Commit {
   // renames and the per-file footer-stat reads are THREAD-POOLED
   // (r15 judge #3): a wide commit's FS round-trips divide by the pool.
   //
-  // OPTIMISTIC MULTI-WRITER commits (the Delta/Iceberg concurrency
-  // model): the manifest-generation rename is a CAS, every commit plan
-  // records the generation its read was based on (the read generation
-  // — the transaction's snapshot version), and executeCommit checks
-  // STALENESS against it — a commit whose replaced or read dirs changed
-  // since its read aborts with CommitConflictException (the verb
-  // re-runs); a commit overtaken only on DISJOINT dirs rebases its
+  // OPTIMISTIC CONCURRENCY, the one mode (the Delta/Iceberg model: no
+  // table lease): the manifest-generation rename is a CAS, every commit
+  // plan records the generation its read was based on (the read
+  // generation — the transaction's snapshot version), and executeCommit
+  // checks STALENESS against it — a commit whose replaced or read dirs
+  // changed since its read aborts with CommitConflictException (the
+  // verb re-runs); a commit overtaken only on DISJOINT dirs rebases its
   // delta and retries the CAS. Two writers on disjoint shards therefore
-  // commit concurrently with no lease and no lost update
-  // (upsertPartitionedOptimistic; ConcurrentCommitSpec;
+  // commit concurrently with no lost update (ConcurrentCommitSpec;
   // tools/ManifestScale's 2-writer storm: torn=0, residual=0, linear
-  // chain). The lease serializes lease-holding verbs only: they state
-  // their read generation too, so an optimistic writer landing inside
-  // a leased verb's read-to-commit window conflicts it rather than
-  // losing its rows.
+  // chain). Every writing entry point first runs [[recover]], which
+  // rolls ANY plan-bearing stage forward, a live writer's included, so
+  // one plan can have two rollers: the generation that lands a plan
+  // records its id (the stage token), which makes "already landed"
+  // exact and the second roller's commit a no-op.
   //
   // SCHEMA EVOLUTION (r15 judge #5): every commit records its added
   // files' parquet-schema fingerprint in the manifest (`# schema`
@@ -105,7 +107,7 @@ object Commit {
     walk(p, "")
   }
 
-  /** Commit the staged write at `target<stageName>` under the
+  /** Commit the staged write at `stage` under the
     * immutable protocol: record the plan (atomic rename — the commit
     * decision point), move the staged files into the live tree,
     * advance the manifest by delta, age out tombstones. `replacedDirs`
@@ -113,39 +115,37 @@ object Commit {
     * root itself for flat layouts) whose PREVIOUS manifest entries
     * this commit supersedes — an append-only commit passes Set.empty
     * and the previous entries all survive. Crash-atomic end to end:
-    * before the plan lands a crash rolls back; after it,
-    * [[recoverStage]] rolls forward through every window (file moves
-    * are idempotent, the manifest delta is recomputed from the plan
-    * and skipped if already committed).
+    * before the plan lands a crash rolls back; after it, [[recover]]
+    * rolls forward through every window (file moves are idempotent,
+    * the manifest delta is recomputed from the plan and skipped once a
+    * generation carries the plan's id).
     *
     * `readGen` is the generation the writer's read was based on (0 for
     * a table with no committed generation): the roll-forward conflicts
     * when a dir the plan replaces or read changed after it, even when
-    * its CAS rename wins uncontested, so a lease-holding verb is safe
-    * against the optimistic writers the lease does not exclude.
+    * its CAS rename wins uncontested.
     *
-    * `stageName` defaults to the shared `.__stage` used by the
-    * lease-serialized verbs; optimistic concurrent writers pass a
-    * per-writer unique suffix ([[graft.streaming.Streaming.upsertPartitionedOptimistic]])
-    * so their stages never collide. The manifest advance itself is a
-    * CAS (see [[executeCommit]]) in both modes.
+    * `stage` is the writer's own, from [[newStage]]. The manifest
+    * advance is a CAS (see [[executeCommit]]).
     */
   def commitStage(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       replacedDirs: Set[String],
       readGen: Long,
-      stageName: String = ".__stage",
+      stage: org.apache.hadoop.fs.Path,
       tag: Option[String] = None,
       txn: Option[(String, Long)] = None,
       modifiedEntries: Seq[ManifestEntry] = Nil,
       volatileDirs: Set[String] = Set.empty,
       keyEnvelopes: Seq[KeyEnvelope] = Nil
   ): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(target + stageName)
-    writePlan(fs, stage, CommitPlan(readGen, listRel(fs, stage), replacedDirs,
-      volatileDirs, keyEnvelopes, modifiedEntries, tag, txn))
-    executeCommit(fs, target, stage)
+    require(stage.getName.startsWith(new org.apache.hadoop.fs.Path(target).getName + StagePrefix),
+      s"$stage is not a stage of $target")
+    val plan = CommitPlan(readGen, listRel(fs, stage), replacedDirs,
+      volatileDirs, keyEnvelopes, modifiedEntries, tag, txn)
+    writePlan(fs, stage, plan)
+    executeCommit(fs, target, stage, plan)
   }
 
   /** Land `plan` at `stage`'s [[StageCommitMarker]]: written to a temp
@@ -161,28 +161,23 @@ object Commit {
     fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, StageCommitMarker))
   }
 
-  /** The stage `target<stageName>`, emptied for a fresh staged write. */
-  def freshStage(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      stageName: String = ".__stage"
-  ): org.apache.hadoop.fs.Path = {
-    val stage = stagePath(target, stageName)
-    fs.delete(stage, true)
-    stage
+  /** After the table's name, every stage name starts with this; the
+    * rest is its token.
+    */
+  private val StagePrefix = ".__stage-"
+
+  /** A new per-writer stage, `<target>.__stage-<token>`, a table-dir
+    * sibling: writers take no lease, so their stages never collide,
+    * and the token is the plan id the landing generation records.
+    */
+  def newStage(target: String): org.apache.hadoop.fs.Path = new org.apache.hadoop.fs.Path(
+    target + StagePrefix + java.util.UUID.randomUUID().toString.take(8))
+
+  /** The id of the plan staged at `stage`: the stage's token. */
+  private def planId(stage: org.apache.hadoop.fs.Path): String = {
+    val name = stage.getName
+    name.substring(name.lastIndexOf(StagePrefix) + StagePrefix.length)
   }
-
-  /** The stage `target<stageName>` where nothing can be left to empty:
-    * the shared `.__stage` right after [[recoverStage]] (which removes
-    * it or throws), or a new [[writerStageName]].
-    */
-  def stagePath(target: String, stageName: String = ".__stage"): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(target + stageName)
-
-  /** A per-writer stage name (`.__stage-<token>`): optimistic writers
-    * take no lease, so their stages must never collide.
-    */
-  def writerStageName(): String = s".__stage-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** The current latest generation of `target`, 0 for a table with no
     * committed generation: the read generation of a read taken now.
@@ -195,17 +190,17 @@ object Commit {
     * `replacedDirs` — the loser's pinned read is stale, so rebasing
     * the manifest delta would silently drop the winner's rows. The
     * caller must re-run its whole verb (re-read the now-current
-    * shards, re-merge, re-stage) — [[graft.streaming.Streaming.upsertPartitionedOptimistic]]
+    * shards, re-merge, re-stage) — [[graft.streaming.Streaming.upsertPartitionedBatch]]
     * does exactly that. Disjoint concurrent commits never see this:
     * they REBASE (recompute the delta against the winner's generation)
     * and retry the CAS, so two writers on disjoint shards both land.
     */
   final class CommitConflictException(msg: String) extends IllegalStateException(msg)
 
-  /** The roll-forward half shared by [[commitStage]] and
-    * [[recoverStage]]: execute the recorded plan. Idempotent at every
-    * crash window — a staged file already moved is skipped; a manifest
-    * generation already carrying the planned entry set is not
+  /** The roll-forward half shared by [[commitStage]] and [[recover]]:
+    * execute `plan`, staged at `stage`. Idempotent at every crash
+    * window — a staged file already moved is skipped; a plan whose id
+    * a generation past its read generation carries is not
     * re-committed.
     *
     * The manifest advance is a CAS loop: the delta is computed against
@@ -215,48 +210,34 @@ object Commit {
     * DISJOINT from this plan's `replacedDirs` mean the plan is still
     * valid and the delta is REBASED against the winner's generation;
     * an overlap means this plan was computed from a stale read and a
-    * [[CommitConflictException]] aborts the commit (the plan's
-    * already-moved files — referenced by no manifest — are deleted, so
-    * the abort leaves no garbage and the verb can re-run cleanly).
-    * This is the Delta/Iceberg optimistic-concurrency shape: writers
-    * on disjoint shards commit in parallel with no lost update.
+    * [[CommitConflictException]] aborts the commit (the stage and the
+    * plan's already-moved files — referenced by no manifest — are
+    * deleted, so the abort leaves no garbage and the verb can re-run
+    * cleanly). This is the Delta/Iceberg optimistic-concurrency shape:
+    * writers on disjoint shards commit in parallel with no lost update.
+    *
+    * TWO ROLLERS of one plan (its writer, and a [[recover]] in another
+    * verb or process) are safe: a file the other roller moved counts
+    * as moved, and "already landed" is the plan id in a generation of
+    * (readGen, latest], so the loser of the race returns normally even
+    * after a later commit changed the same dirs. A plan that vanishes
+    * mid-run was taken by the other roller: it landed (its id is
+    * found) or it was aborted as a conflict.
     */
   private def executeCommit(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
-      stage: org.apache.hadoop.fs.Path
+      stage: org.apache.hadoop.fs.Path,
+      plan: CommitPlan
   ): Unit = {
-    val plan = {
-      val planPath = new org.apache.hadoop.fs.Path(stage, StageCommitMarker)
-      val in = fs.open(planPath)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      try CommitPlan.decode(text)
-      catch {
-        case e: IllegalStateException =>
-          throw new IllegalStateException(s"$planPath: ${e.getMessage}", e)
-      }
-    }
     import plan.{files, replacedDirs, volatileDirs}
+    val id = planId(stage)
+    def landed(listing: Listing): Boolean =
+      listing.latest.exists(latest =>
+        ((plan.readGen + 1) to latest).exists(listing.header(_).plan.contains(id)))
     val modifiedByPath: Map[String, ManifestEntry] =
       plan.modified.iterator.map(e => e.path -> e).toMap
     val targetPath = new org.apache.hadoop.fs.Path(target)
-    if (!fs.exists(targetPath)) fs.mkdirs(targetPath)
-    // parent dirs first (serial — they dedupe to the touched-shard
-    // count), then the file renames thread-pooled: each is one atomic
-    // FS op with no cross-file ordering, so a 20k-file batch commits
-    // in O(files / pool) round-trips instead of 20k serial ones
-    files.map(f => new org.apache.hadoop.fs.Path(targetPath, f).getParent)
-      .distinct.foreach(p => if (!fs.exists(p)) fs.mkdirs(p))
-    inParallel(files) { f =>
-      val src = new org.apache.hadoop.fs.Path(stage, f)
-      if (fs.exists(src)) {
-        val dst = new org.apache.hadoop.fs.Path(targetPath, f)
-        // staged names are job-UUID-unique; an existing destination can
-        // only be our own interrupted move's completed twin — but the
-        // per-file rename is atomic, so src and dst never coexist
-        require(fs.rename(src, dst), s"commit move failed: $src -> $dst")
-      } // already moved by the interrupted run: skip
-    }
     // per-file row counts + schema fingerprints from the parquet
     // footers of the files THIS commit added — O(batch) metadata reads
     // (thread-pooled like the renames); counts make table/dir sizes a
@@ -264,21 +245,54 @@ object Commit {
     // becomes the generation's `# schema` header (drift detection for
     // followers). Computed ONCE outside the CAS loop: the footer
     // contents don't change on rebase.
-    lazy val addEntries = inParallel(files.sorted)(footerEntry(fs, targetPath, _))
+    val addEntries =
+      try {
+        if (!fs.exists(targetPath)) fs.mkdirs(targetPath)
+        // parent dirs first (serial — they dedupe to the touched-shard
+        // count), then the file renames thread-pooled: each is one
+        // atomic FS op with no cross-file ordering, so a 20k-file batch
+        // commits in O(files / pool) round-trips instead of 20k serial ones
+        files.map(f => new org.apache.hadoop.fs.Path(targetPath, f).getParent)
+          .distinct.foreach(p => if (!fs.exists(p)) fs.mkdirs(p))
+        inParallel(files) { f =>
+          val src = new org.apache.hadoop.fs.Path(stage, f)
+          val dst = new org.apache.hadoop.fs.Path(targetPath, f)
+          // staged names are job-UUID-unique, so an existing destination
+          // is this plan's own move: by an interrupted run, or by the
+          // other roller, which may also move `src` between the check
+          // and ours
+          if (!fs.exists(dst)) {
+            val moved =
+              try fs.rename(src, dst) catch { case _: java.io.FileNotFoundException => false }
+            if (!moved && !fs.exists(dst))
+              throw new IllegalStateException(s"commit move failed: $src -> $dst")
+          }
+        }
+        inParallel(files.sorted)(footerEntry(fs, targetPath, _))
+      } catch {
+        // the plan vanished: the other roller took it, and landed it or
+        // aborted it (deleting the moved files this run needs)
+        case scala.util.control.NonFatal(e)
+            if !fs.exists(new org.apache.hadoop.fs.Path(stage, StageCommitMarker)) =>
+          if (landed(Snapshot.list(fs, target))) { refreshListing(target); return }
+          throw new CommitConflictException(
+            s"optimistic commit to $target: another roller took the plan at $stage and " +
+              s"did not land it (${e.getMessage}) — re-run the verb against the current " +
+              "generation")
+      }
     lazy val commitSchema = addEntries.flatMap(_.schemaHash).headOption
-    // abort: remove this plan's already-moved files and the stage, so
-    // the verb's retry starts clean — but NEVER a file some RETAINED
-    // generation still references: a replay of a plan whose commit
-    // LANDED (crash between the manifest rename and the stage delete)
-    // must not tear the live table, and a plan superseded after
-    // landing must leave its files to the tombstone GC, which owns
-    // their retention-horizon lifecycle. The reference check loads
-    // only the touched dirs' entries per retained generation.
+    // abort: remove the stage (its plan first, so another roller reads
+    // the plan as taken), then this plan's already-moved files — but
+    // NEVER a file some RETAINED generation still references: a plan
+    // superseded after landing must leave its files to the tombstone
+    // GC, which owns their retention-horizon lifecycle. The reference
+    // check loads only the touched dirs' entries per retained
+    // generation.
     def abortConflict(detail: String): Nothing = {
+      fs.delete(stage, true)
       val listing = Snapshot.list(fs, target)
       files.filterNot(listing.referencedPaths(listing.gens, touchedDirs)).foreach(f =>
         fs.delete(new org.apache.hadoop.fs.Path(targetPath, f), false))
-      fs.delete(stage, true)
       throw new CommitConflictException(
         s"optimistic commit to $target conflicts with a concurrent commit: $detail — " +
           "the staged merge read a stale generation; re-run the verb against the " +
@@ -287,8 +301,8 @@ object Commit {
     lazy val touchedDirs: Set[String] =
       replacedDirs ++ volatileDirs ++ files.map(dirOf) ++
         modifiedByPath.keysIterator.map(dirOf)
-    lazy val addsByDir: Map[String, Seq[ManifestEntry]] = addEntries.groupBy(_.dir)
-    var done = false
+    val addsByDir: Map[String, Seq[ManifestEntry]] = addEntries.groupBy(_.dir)
+    var done = touchedDirs.isEmpty // an empty plan changes nothing
     while (!done) {
       val listing = Snapshot.list(fs, target)
       val prevGen = listing.latest
@@ -318,8 +332,7 @@ object Commit {
         case Some(all) => all.filter { case (p, _) => touchedDirs(dirOf(p)) }
         case None => listing.at(prevGen.get, Some(touchedDirs)).byPath
       }
-      // one grouping pass over the touched base, reused by the post
-      // state and the replay check (not a rescan per dir)
+      // one grouping pass over the touched base (not a rescan per dir)
       val baseEntriesByDir: Map[String, Seq[ManifestEntry]] = baseTouched.toSeq
         .groupBy { case (p, _) => dirOf(p) }
         .map { case (d, xs) => d -> xs.map(_._2) }
@@ -333,22 +346,11 @@ object Commit {
             .map(l => modifiedByPath.getOrElse(l.path, l))
         d -> dedupeByPath(kept ++ addsByDir.getOrElse(d, Seq.empty)).sortBy(_.path)
       }.toMap
-      // ALREADY COMMITTED (an interrupted commit's replay): every
-      // touched dir carries exactly its planned post state — untouched
-      // dirs are unchanged by construction. Full-ENTRY comparison, not
-      // path sets: a plan whose only effect is an in-place DV retag
-      // changes no path set, and a path-only test would read its replay
-      // as "already landed" before it ever committed. (Entry equality
-      // is deterministic: footer stats re-read from the same files
-      // give the same entries the landed commit recorded.) This MUST run
-      // before the staleness scan: a crash between the manifest rename
-      // and the stage delete leaves a plan whose own commit sits inside
-      // the (readGen, latest] window, and scanning first would read the
-      // replay as a conflict and abort a commit that already LANDED.
-      val already = prevGen.isDefined && touchedDirs.forall { d =>
-        baseEntriesByDir.getOrElse(d, Seq.empty).sortBy(_.path) == postTouched(d)
-      }
-      if (already) done = true
+      // ALREADY LANDED (an interrupted commit's replay, or the other
+      // roller's win): checked before the staleness scan, which would
+      // read the landed commit, or a later one over the same dirs, as
+      // a conflict and make the verb apply its change twice
+      if (landed(listing)) done = true
       else {
         // STALENESS check (the conflict detection): scan the recorded
         // delta lines of every generation between the snapshot the
@@ -426,7 +428,7 @@ object Commit {
         }
         if (tryCommitManifest(fs, listing, gen, postState,
             tombstones.toSeq.sorted, addEntries, schemaHash = commitSchema,
-            tag = plan.tag, txn = plan.txn,
+            tag = plan.tag, txn = plan.txn, planId = Some(id),
             modified = modifiedByPath.values.toSeq.sortBy(_.path))) done = true
         // else: lost the CAS to a concurrent commit at `gen` — loop.
         // The staleness check above re-runs against the new latest
@@ -614,59 +616,57 @@ object Commit {
     case _ => Snapshot.utf8Lt(a.asInstanceOf[String], b.asInstanceOf[String])
   }
 
-  /** Heal an interrupted commit at `target`: a stage carrying the plan
-    * rolls FORWARD (the staged files are complete — finish the moves
-    * and the manifest delta); a stage without it is a write that died
-    * mid-job — garbage, rolled BACK. Live data and committed manifests
-    * are untouched in both branches, so readers never notice. Every
-    * mutation verb (and AnnIndex's lease-holding open) runs this first.
-    */
-  def recoverStage(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit =
-    recover(fs, target, new org.apache.hadoop.fs.Path(target + ".__stage"))
-
-  /** Roll `stage` forward when it carries a plan, back when it does
-    * not. A plan that now conflicts with commits landed since is
-    * aborted cleanly by [[executeCommit]] (moved files + stage
-    * deleted); the batch is NOT lost — the source's redelivery
-    * contract re-runs the verb against the current generation.
-    */
-  private def recover(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      stage: org.apache.hadoop.fs.Path
-  ): Unit =
-    if (fs.exists(new org.apache.hadoop.fs.Path(stage, StageCommitMarker)))
-      try executeCommit(fs, target, stage)
-      catch { case _: CommitConflictException => () }
-    else fs.delete(stage, true)
-
-  /** A per-writer optimistic stage (`<target>.__stage-<token>`) is
-    * presumed ABANDONED — its writer crashed — once this old; younger
-    * ones may belong to a live concurrent writer and are left alone.
-    * Mirrors the writer-lease TTL.
+  /** A plan-less stage, or a temp or sidecar file in the manifest
+    * dir, is presumed ABANDONED — its writer died mid-job — once this
+    * old; a younger one may belong to a live writer, and is left alone.
     */
   val StageAbandonedMs: Long = 15 * 60 * 1000L
 
-  /** Sweep ABANDONED per-writer optimistic stages of `target`: a
-    * plan-bearing stale stage rolls FORWARD (its staged write
-    * completed — commit it, unless the table has moved under it, in
-    * which case the conflict aborts it cleanly); a plan-less stale
-    * stage is a write that died mid-job and rolls BACK. Stages younger
-    * than [[StageAbandonedMs]] are untouched — they may belong to a
-    * LIVE writer, and racing its own roll-forward would double-execute
-    * the plan. The shared `.__stage` is [[recoverStage]]'s business
-    * (its lease guarantees no live owner).
+  /** The one recovery rule, run first by every writing entry point:
+    * heal the interrupted commits of `target`. Each
+    * `<target>.__stage-<token>` carrying a plan rolls FORWARD at once
+    * — its staged write is complete, and a live writer still executing
+    * the same plan is safe (see [[executeCommit]]); a plan that now
+    * conflicts with commits landed since is aborted cleanly, and the
+    * source's redelivery contract re-runs the verb. A stage without a
+    * plan rolls BACK once older than [[StageAbandonedMs]]. Live data
+    * and committed manifests are untouched in every branch, and a table
+    * with no stage costs one listing and no mutating call.
     */
-  def recoverAbandonedStages(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
+  def recover(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
     val t = new org.apache.hadoop.fs.Path(target)
-    val parent = t.getParent
-    if (parent == null || !fs.exists(parent)) return
-    val prefix = t.getName + ".__stage-"
+    val stages = Option(t.getParent).filter(fs.exists).fold(Seq.empty[org.apache.hadoop.fs.FileStatus])(
+      fs.listStatus(_).toSeq.filter(st =>
+        st.isDirectory && st.getPath.getName.startsWith(t.getName + StagePrefix)))
     val now = System.currentTimeMillis()
-    fs.listStatus(parent).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(prefix) &&
-          now - st.getModificationTime > StageAbandonedMs)
-        recover(fs, target, st.getPath)
+    stages.foreach { st =>
+      readPlan(fs, st.getPath) match {
+        case Some(plan) =>
+          try executeCommit(fs, target, st.getPath, plan)
+          catch { case _: CommitConflictException => () }
+        case None =>
+          if (now - st.getModificationTime > StageAbandonedMs) fs.delete(st.getPath, true)
+      }
+    }
+  }
+
+  /** The plan at `stage`; None when there is none: not yet written, or
+    * removed by the roller that landed or aborted it.
+    */
+  private def readPlan(
+      fs: org.apache.hadoop.fs.FileSystem,
+      stage: org.apache.hadoop.fs.Path
+  ): Option[CommitPlan] = {
+    val planPath = new org.apache.hadoop.fs.Path(stage, StageCommitMarker)
+    val text =
+      try {
+        val in = fs.open(planPath)
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      } catch { case _: java.io.FileNotFoundException => return None }
+    try Some(CommitPlan.decode(text))
+    catch {
+      case e: IllegalStateException =>
+        throw new IllegalStateException(s"$planPath: ${e.getMessage}", e)
     }
   }
 
@@ -760,7 +760,8 @@ object Commit {
       schemaHash: Option[String] = None,
       modified: Seq[ManifestEntry] = Nil,
       tag: Option[String] = None,
-      txn: Option[(String, Long)] = None
+      txn: Option[(String, Long)] = None,
+      planId: Option[String] = None
   ): Boolean = {
     val target = listing.target
     val mdir = manifestDir(target)
@@ -793,7 +794,7 @@ object Commit {
       case Some((scope, id)) =>
         inheritedTxns.updated(scope, math.max(id, inheritedTxns.getOrElse(scope, Long.MinValue)))
     }
-    val header = CommitHeader(schemaHash, tag, txns, rebuild = forceCheckpoint).lines
+    val header = CommitHeader(schemaHash, tag, txns, rebuild = forceCheckpoint, planId).lines
     // `~` = entry modified in place (a delete-vector tag): the full
     // new entry line rides in the delta so chains reconstruct and
     // conflict scans see the dir changed without any file add
@@ -801,10 +802,16 @@ object Commit {
       modified.map(ManifestLine.Modify)
     // per-dir manifests written by THIS attempt — deleted on a lost CAS
     val written = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    val (name, twinName, body) =
-      if (checkpoint) (Snapshot.checkpointName(gen), Snapshot.deltaName(gen),
-        header ++ checkpointRefLines(fs, listing, gen, postState, token, written) ++ delta)
-      else (Snapshot.deltaName(gen), Snapshot.checkpointName(gen), header ++ delta)
+    val refs =
+      if (checkpoint) checkpointRefLines(fs, listing, gen, postState, forceCheckpoint, token,
+        written)
+      else Some(Nil)
+    // no refs: the listing is stale past a concurrent prune, a lost attempt
+    if (refs.isEmpty) return false
+    val (name, twinName) =
+      if (checkpoint) (Snapshot.checkpointName(gen), Snapshot.deltaName(gen))
+      else (Snapshot.deltaName(gen), Snapshot.checkpointName(gen))
+    val body = header ++ refs.get ++ delta
     val tmp = new org.apache.hadoop.fs.Path(mdir, s".$name.tmp-$token")
     writeLines(fs, tmp, body.map(_.encode))
     val dst = new org.apache.hadoop.fs.Path(mdir, name)
@@ -820,7 +827,7 @@ object Commit {
       if (!fs.exists(dst)) throw new IllegalStateException(
         s"manifest commit rename failed for generation $gen of $target with no " +
           "competing commit present — the staged batch is NOT committed; " +
-          "rerun the verb (recoverStage rolls it forward)")
+          "rerun the verb (its recovery rolls the plan forward)")
       lose()
     } else if (fs.exists(twin)) {
       // dual-name window: the other prefix landed too — whoever sees
@@ -837,18 +844,22 @@ object Commit {
     * previous checkpoint's reference for every directory untouched
     * since it, write a fresh per-dir manifest for the dirty ones. The
     * dirty set is the union of the intervening deltas' touched dirs
-    * (each O(its batch) to scan) plus this commit's own; an
-    * unscannable window falls back to rewriting every dir from the
-    * reconstructed current state.
+    * (each O(its batch) to scan) plus this commit's own. A `rebuild`
+    * (whose `postState` is the whole table) and a table's first
+    * checkpoint write refs for `postState` only. None when the window
+    * is gone: a concurrent writer's prune moved the chain floor past
+    * it after `listing` was taken, so that writer committed at or past
+    * `gen` and this attempt has lost its CAS already.
     */
   private def checkpointRefLines(
       fs: org.apache.hadoop.fs.FileSystem,
       listing: Listing,
       gen: Long,
       postState: Map[String, Seq[ManifestEntry]],
+      rebuild: Boolean,
       token: String,
       written: scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]
-  ): Seq[ManifestLine.Ref] = {
+  ): Option[Seq[ManifestLine.Ref]] = {
     val mdir = manifestDir(listing.target)
     // write the dirty dirs' per-dir manifests on the commit pool: each
     // is an independent create of a uniquely-named file (no rename
@@ -868,32 +879,25 @@ object Commit {
       }
     }
     listing.checkpoints.filter(_ < gen).lastOption match {
-      case None => // first checkpoint: postState covers the whole table
-        writeDirManifests(postState.toSeq)
-      case Some(pc) =>
+      case Some(pc) if !rebuild =>
         // dirs whose state changed in (pc, gen): the intervening deltas'
-        // dirs (None = unscannable) plus this commit's touched dirs
-        val prevRefs = listing.checkpointRefs(pc)
-        listing.changedDirs(pc, gen - 1) match {
-          case Some(between) =>
-            val dirty = between ++ postState.keySet
-            val clean = prevRefs.filterNot(r => dirty(r.dir))
-            // dirty-but-untouched dirs keep their current (gen-1) state
-            val untouched = dirty -- postState.keySet
-            val recon: Map[String, Seq[ManifestEntry]] =
-              if (untouched.isEmpty) Map.empty
-              else listing.at(gen - 1, Some(untouched)).entries.groupBy(_.dir)
-            (clean ++ writeDirManifests((postState ++ recon).toSeq)).sortBy(_.dir)
-          case None =>
-            // a delta of the window is gone: a concurrent writer's
-            // prune moved the chain floor past `pc` after this listing
-            // was taken. That writer committed at or past `gen`, so this
-            // attempt loses its CAS; the rewrite reads generation gen-1
-            // through the same listing, and so refuses it as not
-            // retained before writing anything
-            val all = listing.at(gen - 1).entries.groupBy(_.dir)
-            writeDirManifests(((all -- postState.keySet) ++ postState).toSeq)
+        // dirs plus this commit's touched dirs. A verb's own base read
+        // has already read the window through this listing, so it is
+        // gone only for a listing handed over before that read.
+        val window =
+          try listing.changedDirs(pc, gen - 1).map(_ -> listing.checkpointRefs(pc))
+          catch { case _: java.io.FileNotFoundException => None }
+        window.map { case (between, prevRefs) =>
+          val dirty = between ++ postState.keySet
+          val clean = prevRefs.filterNot(r => dirty(r.dir))
+          // dirty-but-untouched dirs keep their current (gen-1) state
+          val untouched = dirty -- postState.keySet
+          val recon: Map[String, Seq[ManifestEntry]] =
+            if (untouched.isEmpty) Map.empty
+            else listing.at(gen - 1, Some(untouched)).entries.groupBy(_.dir)
+          (clean ++ writeDirManifests((postState ++ recon).toSeq)).sortBy(_.dir)
         }
+      case _ => Some(writeDirManifests(postState.toSeq))
     }
   }
 
@@ -1155,14 +1159,14 @@ object Commit {
     */
   final class LeaseHeldException(msg: String) extends IllegalStateException(msg)
 
-  /** Single-writer lease on a persisted state root: a sentinel file at
+  /** Single-writer lease on an AnnIndex root: a sentinel file at
     * `root.__lease` created atomically (create-no-overwrite — the FS
     * primitive that is atomic on HDFS and local disk alike), holding a
     * per-acquisition UUID token. A second concurrent writer REFUSES
-    * LOUDLY ([[LeaseHeldException]]) instead of interleaving commits
-    * with the first (two writers inside one commit protocol can each
-    * see the other's half-finished state as "interrupted" and roll it
-    * the wrong way).
+    * LOUDLY ([[LeaseHeldException]]). No table commit takes it (each
+    * is optimistic on its own); it serialises what spans tables: an
+    * index verb's corpus, centroid and id-map commits under the dirty
+    * sentinel, and the `__current` repoint with its version GC.
     *
     * Liveness is the sentinel's MODIFICATION TIME, renewed by a
     * daemon HEARTBEAT thread (`fs.setTimes` every ttl/4 — an atomic

@@ -258,18 +258,21 @@ object ManifestLine {
 /** The `# ` header of one commit: its added files' schema fingerprint
   * (`# schema`), idempotency tag (`# tag`), per-scope transaction
   * high-water marks (`# txn <scope> <id>`, carried forward by every
-  * commit) and the `# rebuild` marker of a full-relist commit.
+  * commit), the `# rebuild` marker of a full-relist commit and the id
+  * of the staged plan the commit lands (`# plan <token>`).
   */
 final case class CommitHeader(
     schemaHash: Option[String] = None,
     tag: Option[String] = None,
     txns: Map[String, Long] = Map.empty,
-    rebuild: Boolean = false
+    rebuild: Boolean = false,
+    plan: Option[String] = None
 ) {
   def lines: Seq[ManifestLine.Header] =
     (schemaHash.map(h => s"schema $h").toSeq ++ tag.map(t => s"tag $t") ++
       txns.toSeq.sortBy(_._1).map { case (s, i) => s"txn $s $i" } ++
-      (if (rebuild) Seq("rebuild") else Nil)).map(ManifestLine.Header)
+      (if (rebuild) Seq("rebuild") else Nil) ++
+      plan.map(p => s"plan $p")).map(ManifestLine.Header)
 }
 
 object CommitHeader {
@@ -285,6 +288,7 @@ object CommitHeader {
           case _ => None
         }
       }.toMap,
-      texts.contains("rebuild"))
+      texts.contains("rebuild"),
+      texts.collectFirst { case t if t.startsWith("plan ") => t.stripPrefix("plan ") })
   }
 }

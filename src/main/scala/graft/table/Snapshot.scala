@@ -206,9 +206,12 @@ final class Listing private[table] (
           "files may already be deleted")
   }
 
-  /** Generation `gen`'s commit header; empty when it is not retained. */
+  /** Generation `gen`'s commit header; empty when it is not retained,
+    * pruned since this listing included.
+    */
   def header(gen: Long): CommitHeader =
-    genFile.get(gen).fold(CommitHeader())(f => headerOf(read(f.name)))
+    genFile.get(gen).fold(CommitHeader())(f =>
+      try headerOf(read(f.name)) catch { case _: FileNotFoundException => CommitHeader() })
 
   // header lines lead every manifest file
   private def headerOf(lines: Seq[ManifestLine]): CommitHeader =

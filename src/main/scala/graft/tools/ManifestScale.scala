@@ -200,16 +200,14 @@ object ManifestScale {
       }
     }, "manifest-scale-reader2")
     reader2.start()
-    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
     val werrs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     // each batch lands in its own fresh shard; the two writers' id
     // ranges are far apart so their shard sets never intersect
     def optWriter(offset: Long) = new Thread(() => {
       try {
         for (i <- 1 to half)
-          attempts.addAndGet(
-            Streaming.upsertPartitionedOptimistic(target, "doc_id", "batch_id", "shard")(
-              mk(offset + i * shardSize, offset + i * shardSize + 1, 100L + i)))
+          Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
+            mk(offset + i * shardSize, offset + i * shardSize + 1, 100L + i), 100L + i)
       } catch { case NonFatal(t) => werrs.add(t) }
     })
     val (_, storm2Sec) = time(s"2-writer optimistic storm (2 x $half upserts)") {
@@ -221,7 +219,7 @@ object ManifestScale {
     reader2.join(30000)
     require(werrs.isEmpty, s"writer errors: ${werrs.peek()}")
     println(f"[manifest-scale] 2-writer: per-commit=${storm2Sec / (2 * half)}%.2f s, " +
-      s"verb attempts=${attempts.get()} (for ${2 * half} commits); " +
+      s"${2 * half} commits; " +
       s"reader: ok=${ok2.get()} torn=${torn2.get()} residual=${residual2.get()}")
     require(torn2.get() == 0, s"TORN READS under 2 writers: ${torn2.get()}")
     require(residual2.get() == 0, s"RESIDUAL REFUSALS under 2 writers: ${residual2.get()}")

@@ -552,9 +552,9 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     v0.filter(col("cell") === fat)
       .withColumn("cell",
         when(pmod(col("vec_id"), lit(2)) === 0, lit(fat)).otherwise(lit(4)))
-      .write.mode("overwrite").partitionBy("cell").parquet(corpusPath + ".__stage")
+      .write.mode("overwrite").partitionBy("cell").parquet(corpusPath + ".__stage-split")
     locally {
-      val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage")
+      val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage-split")
       val files = graft.table.Commit.listRel(fs, stage)
       graft.table.Commit.writePlan(fs, stage,
         graft.table.CommitPlan(graft.table.Commit.readGen(fs, corpusPath), files,
@@ -562,7 +562,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       val first = files.head
       val dst = new org.apache.hadoop.fs.Path(s"$corpusPath/$first")
       if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
-      fs.rename(new org.apache.hadoop.fs.Path(s"$corpusPath.__stage/$first"), dst)
+      fs.rename(new org.apache.hadoop.fs.Path(s"$corpusPath.__stage-split/$first"), dst)
     }
 
     // the next index entry (an upsert here — the r12-advice scenario
@@ -595,11 +595,10 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
         .withColumn("cell",
           when(pmod(col("vec_id"), lit(4)) === 0, lit(fat)).otherwise(lit(77)))
         .localCheckpoint()
-      val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage")
-      fs.delete(stage, true)
+      val stage = new org.apache.hadoop.fs.Path(corpusPath + ".__stage-w2")
       cur.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
       graft.table.Commit.commitStage(fs, corpusPath,
-        Set(s"cell=$fat", "cell=77"), graft.table.Commit.readGen(fs, corpusPath))
+        Set(s"cell=$fat", "cell=77"), graft.table.Commit.readGen(fs, corpusPath), stage)
     }
     val repaired = AnnIndex.repairOrphanCells(spark, root)
     repaired shouldBe Seq(77)
@@ -744,7 +743,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     // simulate a maintenance verb that crashed AFTER committing its
     // stage: a stage dir with the commit marker holding a poison cell
     // that exists nowhere in the next generation
-    val stage = new org.apache.hadoop.fs.Path(s"$root/corpus.__stage")
+    val stage = new org.apache.hadoop.fs.Path(s"$root/corpus.__stage-poison")
     spark.read.parquet(s"$root/corpus").filter(col("cell") === 0)
       .withColumn("cell", lit(999))
       .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
@@ -787,11 +786,10 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val newRow = graft.streaming.Streaming.readCommitted(spark, s"$root/corpus")
       .limit(1).select(lit(900L).as("vec_id"), col("q8"), col("nrm"), col("cell"))
       .localCheckpoint()
-    val stage = new org.apache.hadoop.fs.Path(s"$root/corpus.__stage")
-    fs.delete(stage, true)
+    val stage = new org.apache.hadoop.fs.Path(s"$root/corpus.__stage-app")
     newRow.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
     graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty,
-      graft.table.Commit.readGen(fs, s"$root/corpus"))
+      graft.table.Commit.readGen(fs, s"$root/corpus"), stage)
 
     // the next entry heals: sidecar rebuilt from the PINNED corpus —
     // the appended row is listed, the tables agree, serving sees it

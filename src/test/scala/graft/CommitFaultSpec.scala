@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.EnumSet
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
 import java.util.concurrent.locks.LockSupport
 
 import scala.collection.mutable
@@ -30,14 +30,17 @@ import graft.table.{Commit, Snapshot}
   * (the commit pool) is held in flight, deaf to interrupts as a slow
   * store's call is: 5 ms, plus 5 ms for every call already in flight,
   * so that calls started later end later and a verb that throws at its
-  * first failed call while later ones still run shows it.
+  * first failed call while later ones still run shows it. Instead of
+  * crashing, a counted call can first run a hook ([[FaultyFs.hookAt]]):
+  * another writer acting between two calls of this one. A rename
+  * refuses an existing destination file, as HDFS's does.
   */
 class FaultyFs extends GraftLocalFileSystem.Raw {
   override def getUri: java.net.URI = java.net.URI.create("faulty:///")
   override def getScheme: String = "faulty"
 
-  private def mutating[T](call: => T): T = {
-    val pooled = FaultyFs.mutation()
+  private def mutating[T](p: Path)(call: => T): T = {
+    val pooled = FaultyFs.mutation(p)
     val before = FaultyFs.inFlight.getAndIncrement()
     try {
       if (pooled) {
@@ -50,27 +53,32 @@ class FaultyFs extends GraftLocalFileSystem.Raw {
 
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: Progressable): FSDataOutputStream =
-    mutating(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+    mutating(f)(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
   override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream =
-    mutating(super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
+    mutating(f)(super.create(f, permission, overwrite, bufferSize, replication, blockSize,
+      progress))
   override def createNonRecursive(f: Path, permission: FsPermission,
       flags: EnumSet[CreateFlag], bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream =
-    mutating(super.createNonRecursive(f, permission, flags, bufferSize, replication,
+    mutating(f)(super.createNonRecursive(f, permission, flags, bufferSize, replication,
       blockSize, progress))
   override def createNonRecursive(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream =
-    mutating(super.createNonRecursive(f, permission, overwrite, bufferSize, replication,
+    mutating(f)(super.createNonRecursive(f, permission, overwrite, bufferSize, replication,
       blockSize, progress))
-  override def rename(src: Path, dst: Path): Boolean = mutating(super.rename(src, dst))
-  override def delete(p: Path, recursive: Boolean): Boolean = mutating(super.delete(p, recursive))
-  override def mkdirs(p: Path): Boolean = mutating(super.mkdirs(p))
+  override def rename(src: Path, dst: Path): Boolean =
+    mutating(dst)(!isExistingFile(dst) && super.rename(src, dst))
+  private def isExistingFile(p: Path): Boolean =
+    try super.getFileStatus(p).isFile catch { case _: java.io.FileNotFoundException => false }
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    mutating(p)(super.delete(p, recursive))
+  override def mkdirs(p: Path): Boolean = mutating(p)(super.mkdirs(p))
   override def mkdirs(p: Path, permission: FsPermission): Boolean =
-    mutating(super.mkdirs(p, permission))
+    mutating(p)(super.mkdirs(p, permission))
   override def setTimes(p: Path, mtime: Long, atime: Long): Unit =
-    mutating(super.setTimes(p, mtime, atime))
+    mutating(p)(super.setTimes(p, mtime, atime))
 }
 
 object FaultyFs {
@@ -81,14 +89,23 @@ object FaultyFs {
   @volatile private var armed = false
   @volatile private var crashAt = Long.MaxValue
   @volatile private var armedBy: Thread = _
+  private val hook = new AtomicReference[((Long, Path) => Boolean, () => Unit)]()
 
   /** Count from zero, crashing at call `k` (never for Long.MaxValue). */
   def arm(k: Long): Unit = {
     calls.set(0); crashAt = k; armedBy = Thread.currentThread(); armed = true
   }
 
-  /** Stop counting and crashing. */
-  def disarm(): Unit = armed = false
+  /** Count from zero, never crashing; at the first counted call k on
+    * path p for which `at(k, p)` holds, run `body` once on the calling
+    * thread, then make the call.
+    */
+  def hookAt(at: (Long, Path) => Boolean)(body: => Unit): Unit = {
+    hook.set((at, () => body)); arm(Long.MaxValue)
+  }
+
+  /** Stop counting, crashing and hooking. */
+  def disarm(): Unit = { armed = false; hook.set(null) }
 
   /** Mutating calls running now, on any thread. */
   def running: Int = inFlight.get()
@@ -96,14 +113,34 @@ object FaultyFs {
   /** The driver's mutating calls since the last [[arm]]. */
   def counted: Long = calls.get()
 
-  /** Counts the call and throws from the crash point on; true for a
-    * counted call off the arming thread (a commit-pool call).
+  /** Counts the call, runs a due hook and throws from the crash point
+    * on; true for a counted call off the arming thread (a commit-pool
+    * call).
     */
-  private def mutation(): Boolean = armed && {
+  private def mutation(p: Path): Boolean = armed && {
     val executor = Thread.currentThread().getName.startsWith("Executor task launch worker")
     val k = if (executor) calls.get() else calls.incrementAndGet()
     if (k >= crashAt) throw new InjectedCrash(k)
+    val h = hook.get()
+    if (!executor && h != null && h._1(k, p) && hook.compareAndSet(h, null)) h._2()
     !executor && Thread.currentThread() != armedBy
+  }
+
+  /** The CAS on a scheme without an atomic fail-if-exists rename: one
+    * JVM-wide lock around check-and-publish (ConcurrentCommitSpec's
+    * coordinator shape).
+    */
+  private val claim = new Commit.ClaimPrimitive {
+    def claim(fs: FileSystem, tmp: Path, dst: Path): Boolean = synchronized {
+      if (fs.exists(dst)) false else fs.rename(tmp, dst)
+    }
+  }
+
+  /** The `faulty://` filesystem, with its scheme's claim registered. */
+  def of(spark: org.apache.spark.sql.SparkSession): FileSystem = {
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    Commit.registerClaimPrimitive("faulty", claim)
+    new Path("faulty:///tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
   }
 }
 
@@ -121,19 +158,7 @@ object FaultyFs {
   */
 class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
-  private lazy val faulty: FileSystem = {
-    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
-    // the CAS on a scheme without an atomic fail-if-exists rename: one
-    // JVM-wide lock around check-and-publish (ConcurrentCommitSpec's
-    // coordinator shape)
-    Commit.registerClaimPrimitive("faulty", new Commit.ClaimPrimitive {
-      private val lock = new Object
-      def claim(fs: FileSystem, tmp: Path, dst: Path): Boolean = lock.synchronized {
-        if (fs.exists(dst)) false else fs.rename(tmp, dst)
-      }
-    })
-    new Path("faulty:///tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
-  }
+  private lazy val faulty: FileSystem = FaultyFs.of(spark)
 
   private def local: FileSystem =
     new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -223,7 +248,8 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
   /** Append [[extraFile]] to shard 0 through a hand-staged commit. */
   private def commitExtra(target: String): Unit = {
     stageShard0(target, ".__stage-extra", extraFile)
-    Commit.commitStage(faulty, target, Set.empty, latest(target), ".__stage-extra")
+    Commit.commitStage(faulty, target, Set.empty, latest(target),
+      new Path(target + ".__stage-extra"))
   }
 
   /** Run `verb` on a copy of `base` (at generation g, rows `before`),
@@ -252,8 +278,7 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
           }
       } finally FaultyFs.disarm()
       backdate(t)
-      Commit.recoverAbandonedStages(faulty, t)
-      Commit.recoverStage(faulty, t)
+      Commit.recover(faulty, t)
       val healed = read(t)
       withClue("the pinned read is generation g or g+1 exactly: ") {
         Seq((g, before), (g + 1, after)) should contain((latest(t), healed))
@@ -262,19 +287,24 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       backdate(t)
       Streaming.vacuum(spark, t, olderThanMs = 0L, dryRun = false)
       withClue("no deleted row comes back: ") { read(t) shouldBe (healed ++ extraRows).sorted }
-      val listing = Snapshot.list(faulty, t)
-      val mdir = Snapshot.manifestDir(t)
-      for (gen <- listing.gens if gen > listing.latest.get - Snapshot.ManifestKeep;
-           e <- listing.at(gen).entries) withClue(s"generation $gen, entry ${e.path}: ") {
-        faulty.exists(new Path(s"$t/${e.path}")) shouldBe true
-        (e.dv.map(_.sidecar) ++ e.blooms.values).foreach(s =>
-          faulty.exists(new Path(mdir, s)) shouldBe true)
-      }
+      assertEntriesOnDisk(t)
       withClue("no temp or unreachable file is left in the manifest dir: ") {
         unreachable(t) shouldBe empty
       }
     }
     calls
+  }
+
+  /** Every entry of every retained generation names a file on disk. */
+  private def assertEntriesOnDisk(t: String): Unit = {
+    val listing = Snapshot.list(faulty, t)
+    val mdir = Snapshot.manifestDir(t)
+    for (gen <- listing.gens if gen > listing.latest.get - Snapshot.ManifestKeep;
+         e <- listing.at(gen).entries) withClue(s"generation $gen, entry ${e.path}: ") {
+      faulty.exists(new Path(s"$t/${e.path}")) shouldBe true
+      (e.dv.map(_.sidecar) ++ e.blooms.values).foreach(s =>
+        faulty.exists(new Path(mdir, s)) shouldBe true)
+    }
   }
 
   /** A 4-shard table at generation 7: a seed, then six upserts that
@@ -301,7 +331,8 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     }
     info(s"$points crash points")
     // exact: a redundant mutating call (such as deleting the writer's
-    // brand-new .__stage-<token>) adds a crash point and fails this
+    // brand-new .__stage-<token>, or one by the recovery that runs
+    // first on this clean table) adds a crash point and fails this
     points shouldBe 27L
   }
 
@@ -315,8 +346,117 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       Streaming.compactShards(spark, t, "shard") shouldBe 2
     }
     info(s"$points crash points")
-    // exact: deleting .__stage again after recoverStage would add one
+    // exact: a mutating call by the recovery that runs first on this
+    // clean table, or a lease, would add one. With the table lease
+    // (create, claim, release rename, delete) and the shared stage's
+    // unconditional delete it was 25.
+    points shouldBe 19L
+  }
+
+  /** Shard 0 of [[base7]] rewritten at version 8. */
+  private val shard0 = 0L until 200L by 4
+
+  private def shard0At8(rs: Seq[(Long, String)]): Seq[(Long, String)] =
+    (rs.filterNot(_._1 % 4 == 0) ++ shard0.map(k => (k, s"p8-$k"))).sorted
+
+  test("an upsertPartitionedBatch crashed at ANY mutating call heals to generation g " +
+      "or g+1, and the sweep leaves nothing unreachable") {
+    val points = enumerateCrashes(base7, shard0At8(read(base7))) { t => upsert(t, shard0, 8L) }
+    info(s"$points crash points")
+    // exact, like the others: the staged write's job commit, the plan,
+    // the move, the checkpoint and its per-dir manifests, the claim,
+    // the prune and the stage
     points shouldBe 25L
+  }
+
+  test("a second roller at ANY mutating call of a writer's commit lands its plan once, " +
+      "and the writer returns normally") {
+    // the writer: a hand-staged commit replacing shard 0 at gen 8 (a
+    // checkpoint, so the calls cover its per-dir manifests too); the
+    // roller: the recovery entry, run to completion before call k
+    val g = latest(base7)
+    val after = shard0At8(read(base7))
+    val replacement = shard0File(shard0, 8L)
+    def commit(t: String): Unit =
+      Commit.commitStage(faulty, t, Set("shard=0"), g, new Path(t + ".__stage-roller"))
+    val clean = copyTable(base7, "graft-roller-clean")
+    stageShard0(clean, ".__stage-roller", replacement)
+    FaultyFs.arm(Long.MaxValue)
+    try commit(clean) finally FaultyFs.disarm()
+    val calls = FaultyFs.counted
+    for (k <- 1L to calls) withClue(s"second roller at mutating call $k of $calls: ") {
+      val t = copyTable(base7, "graft-roller")
+      stageShard0(t, ".__stage-roller", replacement)
+      var rolled = false
+      FaultyFs.hookAt((n, _) => n == k) { rolled = true; Commit.recover(faulty, t) }
+      try commit(t) finally FaultyFs.disarm()
+      rolled shouldBe true
+      (latest(t), read(t)) shouldBe ((g + 1, after))
+      val listing = Snapshot.list(faulty, t)
+      listing.gens.filter(listing.header(_).plan.contains("roller")) shouldBe Seq(g + 1)
+      faulty.exists(new Path(t + ".__stage-roller")) shouldBe false
+      assertEntriesOnDisk(t)
+    }
+    info(s"$calls mutating calls")
+  }
+
+  test("an updateWhere whose plan a second roller lands applies its change once, " +
+      "even under a later commit to the same dirs") {
+    import spark.implicits._
+    def readV(t: String): Seq[(Long, String, Long)] =
+      Streaming.readCommitted(spark, t).select("id", "payload", "v")
+        .as[(Long, String, Long)].collect().toSeq.sorted
+    val g = latest(base7)
+    val before = readV(base7)
+    def update(t: String): Unit =
+      Streaming.updateWhere(spark, t, col("id") % 10 === 3, Map("v" -> (col("v") + 1)),
+        stagePartitionBy = Seq("shard")) shouldBe 20L
+    // the mutating calls of its commit: from the plan's rename on
+    var planCall = 0L
+    val clean = copyTable(base7, "graft-roller-update-clean")
+    FaultyFs.hookAt { (k, p) =>
+      if (planCall == 0L && p.getName == Commit.StageCommitMarker) planCall = k
+      false
+    }(())
+    try update(clean) finally FaultyFs.disarm()
+    val calls = FaultyFs.counted
+    planCall should be > 0L
+    for (k <- planCall to calls) withClue(s"second roller at mutating call $k of $calls: ") {
+      val t = copyTable(base7, "graft-roller-update")
+      var overlapped = false
+      FaultyFs.hookAt((n, _) => n == k) {
+        Commit.recover(faulty, t)
+        // the plan has landed: a later commit changes a dir it read
+        if (latest(t) == g + 1) {
+          Streaming.deleteWhere(spark, t, col("id") === 1L) shouldBe 1L
+          overlapped = true
+        }
+      }
+      try update(t) finally FaultyFs.disarm()
+      latest(t) shouldBe (if (overlapped) g + 2 else g + 1)
+      readV(t) shouldBe before.collect {
+        case (id, p, v) if id != 1L || !overlapped => (id, p, if (id % 10 == 3) v + 1 else v)
+      }
+      assertEntriesOnDisk(t)
+    }
+    info(s"${calls - planCall + 1} mutating calls from the plan's rename")
+  }
+
+  test("a checkpoint attempt whose listing a concurrent prune outran loses its CAS " +
+      "instead of failing") {
+    // base7 is checkpoint 1 and deltas 2-7; the listing is taken before
+    // anything is read through it, as a writer's listing is before its
+    // window is read
+    val t = copyTable(base7, "graft-fault-stale")
+    val stale = Snapshot.list(faulty, t)
+    // gens 8-11 land; gen 11's prune moves the chain floor to
+    // checkpoint 8, deleting checkpoint 1 and the deltas after it
+    (8L to 11L).foreach(v => upsert(t, 1L until 200L by 4, v))
+    Snapshot.list(faulty, t).checkpoints shouldBe Seq(8L)
+    val postState = Snapshot.at(faulty, t, 11L, Some(Set("shard=0"))).entries.groupBy(_.dir)
+    Commit.tryCommitManifest(faulty, stale, 8L, postState, Nil, Nil) shouldBe false
+    latest(t) shouldBe 11L
+    withClue("the lost attempt wrote nothing: ") { unreachable(t) shouldBe empty }
   }
 
   test("a bootstrap commit crashed at ANY mutating call heals to no manifest or " +
@@ -330,8 +470,8 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val replacement = shard0File(shard0, 2L)
     val after = (read(base).filterNot(_._1 % 4 == 0) ++ shard0.map(k => (k, s"p2-$k"))).sorted
     val points = enumerateCrashes(base, after) { t =>
-      stageShard0(t, ".__stage", replacement)
-      Commit.commitStage(faulty, t, Set("shard=0"), 0L)
+      stageShard0(t, ".__stage-boot", replacement)
+      Commit.commitStage(faulty, t, Set("shard=0"), 0L, new Path(t + ".__stage-boot"))
     }
     info(s"$points crash points")
     // exact: the plan (create, rename), the staged file's move, the
@@ -403,9 +543,10 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     (2L to 4L).foreach(v => upsert(target, shard0, v))
     val tombstoned = Snapshot.at(local, target, 1L, Some(Set("shard=0"))).paths
     tombstoned should have size 1
-    rows(shard0, 5L).coalesce(1).write.partitionBy("shard").parquet(target + ".__stage")
+    rows(shard0, 5L).coalesce(1).write.partitionBy("shard").parquet(target + ".__stage-count")
     val counting = new CountingFs(local)
-    Commit.commitStage(counting, target, Set("shard=0"), 4L)
+    Commit.commitStage(counting, target, Set("shard=0"), 4L,
+      new Path(target + ".__stage-count"))
     // the plan (create, rename), the staged file's move, the delta
     // (create, and the claim's delete of its temp name), gen 2's
     // tombstone, the stage. The parent commit made 10: it also wrote

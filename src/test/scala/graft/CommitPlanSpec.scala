@@ -88,8 +88,8 @@ class CommitPlanSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     Streaming.upsertPartitionedBatch(target, "id", "v", "shard")(
       (0L until 40L).map(k => (k, s"v1-$k", 1L, k % 4)).toDF("id", "payload", "v", "shard"), 1L)
     (1L until 40L by 4L).map(k => (k, s"v2-$k", 2L, 1L)).toDF("id", "payload", "v", "shard")
-      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
-    val stage = new Path(target + ".__stage")
+      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage-bless")
+    val stage = new Path(target + ".__stage-bless")
     val plan = CommitPlan(readGen = 1L, Commit.listRel(fs, stage), Set("shard=1"))
     Commit.writePlan(fs, stage, plan)
     // the plan as a writer without read generations would have left it
@@ -97,7 +97,7 @@ class CommitPlanSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val out = fs.create(marker, true)
     try out.write(plan.encode.split("\n").filterNot(_.startsWith("B ")).mkString("\n")
       .getBytes("UTF-8")) finally out.close()
-    val ex = intercept[IllegalStateException](Commit.recoverStage(fs, target))
+    val ex = intercept[IllegalStateException](Commit.recover(fs, target))
     ex.getMessage should include("no read generation")
     ex.getMessage should include(marker.getName)
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
@@ -111,10 +111,10 @@ class CommitPlanSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val target = Files.createTempDirectory("graft-plan-empty").toString + "/t"
     Streaming.upsertPartitionedBatch(target, "id", "v", "shard")(
       (0L until 8L).map(k => (k, s"v1-$k", 1L, k % 4)).toDF("id", "payload", "v", "shard"), 1L)
-    val stage = new Path(target + ".__stage")
+    val stage = new Path(target + ".__stage-empty")
     fs.mkdirs(stage)
     Commit.writePlan(fs, stage, CommitPlan(readGen = 1L))
-    Commit.recoverStage(fs, target)
+    Commit.recover(fs, target)
     fs.exists(stage) shouldBe false
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
     Streaming.readCommitted(spark, target).count() shouldBe 8L

@@ -20,10 +20,9 @@ import graft.table.{Commit, CommitPlan}
   * delta against the winner's generation — no lost update, one linear
   * manifest chain); a writer whose replaced dirs CHANGED since its
   * read conflicts loudly (CommitConflictException) and
-  * upsertPartitionedOptimistic re-runs its whole verb against the
-  * current generation. Before this, one table-wide lease serialized
-  * every verb — a real throughput ceiling once ingest, compaction, and
-  * GC run as separate services against one 100-TB table.
+  * upsertPartitionedBatch re-runs its whole body against the current
+  * generation. No table verb takes a lease, so ingest, compaction and
+  * GC can run as separate services against one 100-TB table.
   */
 class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
@@ -52,14 +51,12 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     // writer A updates shards 0-3 (keys = 0 mod 8 .. 3 mod 8), writer B
     // shards 4-7; a latch releases both threads into the verb together
     val start = new CountDownLatch(2)
-    val attempts = new java.util.concurrent.ConcurrentHashMap[String, Int]()
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     def writer(name: String, shards: Set[Long], payload: Long => String) = new Thread(() => {
       try {
         val batch = rows(0 until 200, payload, 2L).filter(col("shard").isin(shards.toSeq: _*))
         start.countDown(); start.await()
-        attempts.put(name,
-          Streaming.upsertPartitionedOptimistic(target, "doc_id", "batch_id", "shard")(batch))
+        Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(batch, 2L)
       } catch { case t: Throwable => errs.add(t) }
     }, s"graft-cc-$name")
     val a = writer("A", Set(0L, 1L, 2L, 3L), k => s"A-$k")
@@ -76,10 +73,6 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     // one LINEAR chain: three generations (seed + one per writer), no
     // gap, and the latest reconstructs (delta arithmetic intact)
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L, 3L)
-    // neither writer needed a verb-level re-run: disjoint commits
-    // REBASE at the CAS instead of conflicting
-    attempts.get("A") shouldBe 1
-    attempts.get("B") shouldBe 1
   }
 
   test("a commit whose read generation is stale on the SAME dirs conflicts loudly " +
@@ -98,7 +91,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
       rows(0 until 80, k => s"winner-$k", 3L).filter(col("shard") === 0L), 2L) // gen 2
     val ex = intercept[Commit.CommitConflictException] {
-      Commit.commitStage(fs, target, Set("shard=0"), 1L, ".__stage-spec")
+      Commit.commitStage(fs, target, Set("shard=0"), 1L, new Path(target + ".__stage-spec"))
     }
     ex.getMessage should include("shard=0")
     // the abort left no garbage: stage gone, moved files deleted, and
@@ -117,7 +110,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
       try {
         val batch = rows(0 until 80, k => s"v$v-$k", v).filter(col("shard") === 1L)
         start.countDown(); start.await()
-        Streaming.upsertPartitionedOptimistic(target, "doc_id", "batch_id", "shard")(batch)
+        Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(batch, v)
       } catch { case t: Throwable => errs.add(t) }
     }, s"graft-cc-v$v")
     val w4 = writer(4L); val w5 = writer(5L)
@@ -144,7 +137,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     // staged merge is still valid and must land as gen 3
     Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
       rows(0 until 80, k => s"other-$k", 2L).filter(col("shard") === 2L), 2L)
-    Commit.commitStage(fs, target, Set("shard=1"), 1L, ".__stage-rb")
+    Commit.commitStage(fs, target, Set("shard=1"), 1L, new Path(target + ".__stage-rb"))
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L, 3L)
     val got = readAll(target)
     (0L until 80L).foreach { k =>
@@ -157,7 +150,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
   }
 
   test("a mid-commit crash window (plan recorded, files partially moved) rolls forward " +
-      "idempotently from recoverAbandonedStages") {
+      "idempotently from the recovery entry") {
     val target = Files.createTempDirectory("graft-cc-midcrash").toString + "/t"
     seed(target, 40) // gen 1
     import spark.implicits._
@@ -176,10 +169,10 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     fs.rename(new Path(stage, first), new Path(s"$target/$first")) shouldBe true
     // readers never saw the torn state: the manifest still pins gen 1
     readAll(target).values.forall(_._2 == 1L) shouldBe true
-    // recovery past the TTL completes the commit exactly once
-    fs.setTimes(stage, System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
-    Commit.recoverAbandonedStages(fs, target)
+    // recovery completes the commit at once, and exactly once
+    Commit.recover(fs, target)
     fs.exists(stage) shouldBe false
+    Commit.recover(fs, target)
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
     val got = readAll(target)
     (0L until 40L).foreach { k =>
@@ -188,7 +181,8 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     }
   }
 
-  test("an abandoned plan-bearing optimistic stage rolls forward; a fresh one is untouched") {
+  test("a fresh plan-bearing stage rolls forward at once, and a fresh plan-less stage " +
+      "is left alone") {
     val target = Files.createTempDirectory("graft-cc-recover").toString + "/t"
     seed(target, 40) // gen 1
     import spark.implicits._
@@ -200,14 +194,21 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     val files = fs.listStatus(new Path(stage, "shard=0")).filterNot(
       _.getPath.getName.startsWith("_")).map(st => s"shard=0/${st.getPath.getName}")
     Commit.writePlan(fs, stage, CommitPlan(1L, files.toSeq))
-    // fresh stage (mtime now): recovery must leave it alone
-    Commit.recoverAbandonedStages(fs, target)
-    fs.exists(stage) shouldBe true
-    // age it past the abandonment TTL, then recover: rolls forward
-    fs.setTimes(stage, System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
-    Commit.recoverAbandonedStages(fs, target)
+    // a second writer still staging: no plan yet, mtime now
+    val live = new Path(target + ".__stage-live")
+    add.write.mode("overwrite").partitionBy("shard").parquet(live.toString)
+    Commit.recover(fs, target)
     fs.exists(stage) shouldBe false
     readAll(target).get(1000L) shouldBe Some(("late", 2L))
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
+    withClue("a young plan-less stage may belong to a live writer: ") {
+      fs.exists(live) shouldBe true
+    }
+    // once past the abandonment window it rolls back
+    fs.setTimes(live, System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
+    Commit.recover(fs, target)
+    fs.exists(live) shouldBe false
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
   }
 
   /** A local filesystem wearing an object-store scheme: rename is
@@ -300,8 +301,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
       try {
         val batch = rows(0 until 200, payload, 1L).filter(col("shard").isin(shards.toSeq: _*))
         start.countDown(); start.await()
-        Streaming.upsertPartitionedOptimistic(target, "doc_id", "batch_id", "shard")(batch)
-        ()
+        Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(batch, 1L)
       } catch { case t: Throwable => errs.add(t) }
     }, s"graft-cc-boot-$name")
     val a = writer("A", Set(0L, 1L, 2L, 3L), k => s"A-$k")
@@ -340,8 +340,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
         // versions 1 and 2 over the SAME keys 0..79 (all shards)
         val batch = rows(0 until 80, k => s"v$v-$k", v)
         start.countDown(); start.await()
-        Streaming.upsertPartitionedOptimistic(target, "doc_id", "batch_id", "shard")(batch)
-        ()
+        Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(batch, v)
       } catch { case t: Throwable => errs.add(t) }
     }, s"graft-cc-bootsame-$v")
     val w1 = writer(1L); val w2 = writer(2L)
@@ -385,13 +384,12 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     val stageA = new Path(target + ".__stage-a")
     Seq((100L, "a1", 1L, 1L)).toDF("doc_id", "payload", "batch_id", "shard")
       .write.mode("overwrite").partitionBy("shard").parquet(stageA.toString)
-    Commit.commitStage(fs, target, Set.empty, 0L, ".__stage-a")
+    Commit.commitStage(fs, target, Set.empty, 0L, new Path(target + ".__stage-a"))
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
-    // B's crashed commit rolls forward past the TTL: the already-moved
-    // file is skipped at the move and RE-ADDED to the manifest with
-    // stats — the dedupe point
-    fs.setTimes(stageB, System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
-    Commit.recoverAbandonedStages(fs, target)
+    // B's crashed commit rolls forward at the next recovery: the
+    // already-moved file is skipped at the move and RE-ADDED to the
+    // manifest with stats — the dedupe point
+    Commit.recover(fs, target)
     fs.exists(stageB) shouldBe false
     // every row exactly once — a double-listed entry would read b-rows twice
     val gotRows = Streaming.readCommitted(spark, target)
@@ -400,29 +398,21 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     gotRows shouldBe Seq((1L, "b1"), (2L, "b2"), (100L, "a1")).sorted
   }
 
-  /** Run `verb` with `racer` committed from inside its manifest claim,
-    * i.e. after the verb read its generation and staged its rewrite.
-    * Every claim itself is the plain file:// one: the hook steps aside
-    * while it runs, and for good once the racer has landed.
+  /** Run `verb` with `racer` committed from inside it, just before the
+    * verb records its plan: after it read its generation and staged
+    * its rewrite. (Once the plan is recorded, the racer's own recovery
+    * would land the verb's plan first.) The verb runs on the
+    * `faulty://` face of `target`, where [[FaultyFs]] runs the racer.
     */
-  private def withRacerInCommit[T](racer: => Unit)(verb: => T): T = {
-    var raced = false
-    Commit.registerClaimPrimitive("file", new Commit.ClaimPrimitive {
-      def claim(fs: org.apache.hadoop.fs.FileSystem, tmp: Path, dst: Path): Boolean = {
-        Commit.unregisterClaimPrimitive("file")
-        if (dst.getName.matches("(gen|inc)-\\d+")) { raced = true; racer }
-        val won = Commit.atomicClaim(fs, tmp, dst)
-        if (!raced) Commit.registerClaimPrimitive("file", this)
-        won
-      }
-    })
-    try verb finally Commit.unregisterClaimPrimitive("file")
+  private def withRacerBeforePlan[T](target: String)(racer: => Unit)(verb: String => T): T = {
+    FaultyFs.of(spark)
+    FaultyFs.hookAt((_, p) => p.getName == ".plan.tmp")(racer)
+    try verb("faulty://" + target) finally FaultyFs.disarm()
   }
 
-  /** An optimistic upsert of `racer` that lands in one attempt. */
+  /** An optimistic upsert of `racer`. */
   private def upsertOnce(target: String, racer: DataFrame): Unit =
-    Streaming.upsertPartitionedOptimistic(target, "doc_id", "batch_id", "shard")(
-      racer) shouldBe 1
+    Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(racer, 2L)
 
   test("an optimistic upsert landing between compaction's read and its commit " +
       "conflicts the compaction; the upsert's rows survive") {
@@ -434,8 +424,8 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
       .filter(col("shard") === 0L && col("doc_id") =!= 8L)
     var raced = false
     val ex = intercept[Commit.CommitConflictException] {
-      withRacerInCommit { raced = true; upsertOnce(target, racer) } {
-        Streaming.compactShards(spark, target, "shard")
+      withRacerBeforePlan(target) { raced = true; upsertOnce(target, racer) } { t =>
+        Streaming.compactShards(spark, t, "shard")
       }
     }
     ex.getMessage should include("shard=0")
@@ -459,8 +449,8 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     val racer = rows(0 until 80, k => s"racer-$k", 2L).filter(col("shard") === 0L)
     var raced = false
     val ex = intercept[Commit.CommitConflictException] {
-      withRacerInCommit { raced = true; upsertOnce(target, racer) } {
-        Streaming.clusterTable(spark, target, "doc_id", numFiles = 2)
+      withRacerBeforePlan(target) { raced = true; upsertOnce(target, racer) } { t =>
+        Streaming.clusterTable(spark, t, "doc_id", numFiles = 2)
       }
     }
     ex.getMessage should include("shard=0")
@@ -483,8 +473,8 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
       .filter(col("shard") === 0L && col("doc_id") =!= 8L)
     var raced = false
     val ex = intercept[Commit.CommitConflictException] {
-      withRacerInCommit { raced = true; upsertOnce(target, racer) } {
-        Streaming.deleteFromPartitioned(target, "doc_id", "shard")(
+      withRacerBeforePlan(target) { raced = true; upsertOnce(target, racer) } { t =>
+        Streaming.deleteFromPartitioned(t, "doc_id", "shard")(
           Seq((8L, 0L)).toDF("doc_id", "shard"))
       }
     }

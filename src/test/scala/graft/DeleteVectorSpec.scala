@@ -226,7 +226,7 @@ class DeleteVectorSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
   }
 
   test("a deleteWhere that dies after its plan lands rolls forward once through " +
-      "recoverAbandonedStages") {
+      "the next recovery") {
     val target = seed("graft-dv-recover")
     // the writer dies at its manifest claim: its plan-bearing stage stays
     Commit.registerClaimPrimitive("file", new Commit.ClaimPrimitive {
@@ -243,14 +243,13 @@ class DeleteVectorSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     fs.exists(new Path(stages.head, Commit.StageCommitMarker)) shouldBe true
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
     Streaming.readCommitted(spark, target).count() shouldBe 200L
-    // aged past the abandonment TTL, the plan rolls forward exactly once
-    fs.setTimes(stages.head, System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
-    Commit.recoverAbandonedStages(fs, target)
+    // a plan-bearing stage rolls forward at once, and exactly once
+    Commit.recover(fs, target)
     fs.exists(stages.head) shouldBe false
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
     Streaming.readCommitted(spark, target).count() shouldBe 180L
     Snapshot.latest(fs, target).get.entries.flatMap(_.dv).map(_.n).sum shouldBe 20L
-    Commit.recoverAbandonedStages(fs, target)
+    Commit.recover(fs, target)
     Streaming.deleteWhere(spark, target, col("id") % 10 === 3) shouldBe 0L
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
     Streaming.readCommitted(spark, target).count() shouldBe 180L

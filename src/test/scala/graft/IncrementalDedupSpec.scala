@@ -221,15 +221,15 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSessionSetup {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     sharded((50L until 100L).map(i => (i, s"v1.5-$i", 2L)))
-      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
+      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage-crash")
     locally {
-      val stage = new org.apache.hadoop.fs.Path(target + ".__stage")
+      val stage = new org.apache.hadoop.fs.Path(target + ".__stage-crash")
       Commit.writePlan(fs, stage,
         CommitPlan(Commit.readGen(fs, target), Commit.listRel(fs, stage), Set("shard=1")))
     }
     assert(Streaming.readCommitted(spark, target).count() == 100) // nothing torn
 
-    // the next upsert call heals FIRST (recoverStage rolls the planned
+    // the next upsert call heals FIRST (its recovery rolls the planned
     // commit FORWARD), so the merge sees the completed v1.5 state and
     // nothing is lost
     up(sharded(Seq((0L, "v2-0", 2L))), 2L)
@@ -237,7 +237,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSessionSetup {
     assert(t.count() == 100)
     assert(t.filter(col("doc_id") === 0L).select(col("payload")).head().getString(0) == "v2-0")
     assert(t.filter(col("doc_id") === 75L).select(col("payload")).head().getString(0) == "v1.5-75")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(target + ".__stage")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(target + ".__stage-crash")))
   }
 
   test("re-ingesting an id replaces its index row (latest version wins)") {

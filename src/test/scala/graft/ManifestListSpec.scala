@@ -147,17 +147,35 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     }
   }
 
+  test("writeManifest over a table with generations drops the dirs its listing lacks") {
+    // a forced checkpoint's post state is the whole table: no ref of
+    // the previous checkpoint survives it
+    val target = Files.createTempDirectory("graft-ml-rewrite").toString + "/t"
+    rows(0 until 80, k => s"v1-$k", 1L).write.partitionBy("shard").parquet(target)
+    Streaming.writeManifest(fs, target) shouldBe 1L
+    import spark.implicits._
+    (0 until 40).map(k => (k.toLong, s"v2-$k", 2L, (k % 4).toLong))
+      .toDF("doc_id", "payload", "batch_id", "shard")
+      .write.mode("overwrite").partitionBy("shard").parquet(target)
+    Streaming.writeManifest(fs, target) shouldBe 2L
+    val snap = Snapshot.latest(fs, target).get
+    snap.dirs shouldBe (0 until 4).map(s => s"shard=$s").toSet
+    snap.rowCount shouldBe 40L
+    Streaming.readCommitted(spark, target).select("payload").as[String].collect()
+      .sorted shouldBe (0 until 40).map(k => s"v2-$k").sorted
+  }
+
   test("a plan with no read generation, or a file with no footer, is refused") {
     // a commit plan with no `B` read generation
     locally {
       val target = Files.createTempDirectory("graft-ml-bless").toString + "/t"
       upsert(target, 0 until 80, k => s"v1-$k", 1L)
       rows(0 until 80 by 8, k => s"v2-$k", 2L)
-        .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
-      val stage = new Path(target + ".__stage")
+        .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage-bless")
+      val stage = new Path(target + ".__stage-bless")
       overwrite(new Path(stage, Commit.StageCommitMarker),
         Commit.listRel(fs, stage).map(f => s"F $f") :+ "R shard=0")
-      refused("no read generation", Commit.StageCommitMarker)(Commit.recoverStage(fs, target))
+      refused("no read generation", Commit.StageCommitMarker)(Commit.recover(fs, target))
       refused("no read generation", Commit.StageCommitMarker)(
         upsert(target, 0 until 80 by 8, k => s"v3-$k", 3L))
       Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
@@ -169,14 +187,14 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
       val (target, _) = plainTable("graft-ml-notes")
       overwrite(new Path(s"$target/shard=1/notes.txt"), Seq("not parquet"))
       rows(80 until 88, k => s"v1-$k", 1L)
-        .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
+        .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage-notes")
       refused("no readable parquet footer", "shard=1/notes.txt")(
-        Commit.commitStage(fs, target, Set.empty, 0L))
+        Commit.commitStage(fs, target, Set.empty, 0L, new Path(target + ".__stage-notes")))
       refused("no readable parquet footer", "shard=1/notes.txt")(
         Streaming.writeManifest(fs, target))
       Streaming.manifestGenerations(fs, target) shouldBe Nil
       fs.delete(new Path(s"$target/shard=1/notes.txt"), false) shouldBe true
-      Commit.recoverStage(fs, target)
+      Commit.recover(fs, target)
       Streaming.manifestGenerations(fs, target) shouldBe Seq(1L)
       Streaming.readCommitted(spark, target).count() shouldBe 88L
     }
@@ -201,11 +219,11 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     // delta lines are what keep the scan exact here
     (2L to 8L).foreach(v => upsert(target, 0 until 80 by 8, k => s"v$v-$k", v))
     val ex = intercept[Commit.CommitConflictException] {
-      Commit.commitStage(fs, target, Set("shard=0"), 1L, ".__stage-ovl")
+      Commit.commitStage(fs, target, Set("shard=0"), 1L, new Path(target + ".__stage-ovl"))
     }
     ex.getMessage should include("shard=0")
     // disjoint: rebases straight through the checkpoint and lands
-    Commit.commitStage(fs, target, Set("shard=1"), 1L, ".__stage-dis")
+    Commit.commitStage(fs, target, Set("shard=1"), 1L, new Path(target + ".__stage-dis"))
     val got = Streaming.readCommitted(spark, target)
       .select("doc_id", "payload").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -226,9 +244,10 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     rows(1000 until 1040 by 8, k => s"app-$k", 2L)
       .repartition(5)
       .write.mode("overwrite").partitionBy("shard")
-      .parquet(target + ".__stage")
+      .parquet(target + ".__stage-app")
     // append: replaces nothing
-    Commit.commitStage(fs, target, Set.empty, Commit.readGen(fs, target))
+    Commit.commitStage(fs, target, Set.empty, Commit.readGen(fs, target),
+      new Path(target + ".__stage-app"))
     val gen2 = Streaming.manifestGenerations(fs, target).max
     val before = Streaming.manifestEntries(fs, target, gen2)
     val frag0 = before.count(_.startsWith("shard=0/"))
@@ -261,19 +280,19 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     // an optimistic commit on shard=0 against read generation 1 -> gen 2
     (0 until 80 by 8).map(k => (k.toLong, s"v2-$k", 2L, 0L))
       .toDF("doc_id", "payload", "batch_id", "shard")
-      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
-    Commit.commitStage(fs, target, Set("shard=0"), 1L, ".__stage")
+      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage-replay")
+    Commit.commitStage(fs, target, Set("shard=0"), 1L, new Path(target + ".__stage-replay"))
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
     val committed = Snapshot.at(fs, target, 2L, Some(Set("shard=0"))).paths
     committed should not be empty
     // fabricate the crash window: the stage reappears holding ONLY the
     // plan marker (files already moved, manifest already committed)
-    val stage = new Path(target + ".__stage")
+    val stage = new Path(target + ".__stage-replay")
     fs.mkdirs(stage)
     Commit.writePlan(fs, stage, CommitPlan(1L, committed, Set("shard=0")))
     // recovery must recognize the landed commit: no new generation, no
     // deletion of the manifest-referenced files
-    Commit.recoverStage(fs, target)
+    Commit.recover(fs, target)
     Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
     committed.foreach { f =>
       withClue(s"committed file $f must survive the replay: ") {
@@ -383,8 +402,8 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
             .filter(k => k % 8 == 2 * w || k % 8 == 2 * w + 1)
             .map(k => (k, s"w$w-v$v-$k", v, k % 8))
             .toDF("doc_id", "payload", "batch_id", "shard")
-          Streaming.upsertPartitionedOptimistic(
-            target, "doc_id", "batch_id", "shard")(batch)
+          Streaming.upsertPartitionedBatch(
+            target, "doc_id", "batch_id", "shard")(batch, v)
         }
       } catch { case t: Throwable => errs.add(t) }
     }, s"graft-ml4-$w")

@@ -310,8 +310,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       .write.format("graft").save(target)
     val baseGen = Streaming.manifestGenerations(fs, target).last
     // stage a file for a plan that READ dir "" at baseGen...
-    val stageName = ".__stage-vtest"
-    val stage = new Path(target + stageName)
+    val stage = new Path(target + ".__stage-vtest")
     (900 until 905).map(k => (k.toLong, s"x-$k")).toDF("id", "payload")
       .coalesce(1).write.mode("overwrite").parquet(stage.toString)
     // ...then land a RACING append into the same dir before committing
@@ -321,7 +320,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     // (without it, a plain append plan would happily rebase past the
     // racer — that is exactly the duplicate-insert hole)
     val ex = intercept[Commit.CommitConflictException] {
-      Commit.commitStage(fs, target, Set.empty, baseGen, stageName,
+      Commit.commitStage(fs, target, Set.empty, baseGen, stage,
         volatileDirs = Set(""))
     }
     ex.getMessage should include("concurrent")
@@ -347,12 +346,12 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     (0 until 50).map(k => (k.toLong, s"p-$k", 0L)).toDF("id", "payload", "shard")
       .write.format("graft").option("partitionBy", "shard").save(target)
     val baseGen = Streaming.manifestGenerations(fs, target).last
-    def stagePlan(name: String, lo: Long): String = {
+    def stagePlan(name: String, lo: Long): Path = {
       val stage = new Path(target + name)
       Seq((lo, s"stage-$lo", 0L)).toDF("id", "payload", "shard")
         .coalesce(1).write.mode("overwrite").partitionBy("shard")
         .parquet(stage.toString)
-      name
+      stage
     }
     // racer: an in-envelope key (id=100) lands in a NEW hive dir the
     // base table never had — invisible to dir-granularity volatility

@@ -43,20 +43,20 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
 
   /** Park a mutation at the exact mid-commit window: a staged merge
     * with its plan recorded and ONE staged file already moved into the
-    * live tree. Returns nothing — recoverStage completes it.
+    * live tree. Returns nothing — Commit.recover completes it.
     */
   private def injectMidCommit(target: String, rows: Seq[(Long, String, Long)],
       replaced: Set[String]): Unit = {
     sharded(rows).write.mode("overwrite").partitionBy("shard")
-      .parquet(target + ".__stage")
-    val stage = new Path(target + ".__stage")
+      .parquet(target + ".__stage-mid")
+    val stage = new Path(target + ".__stage-mid")
     val files = Commit.listRel(fs, stage)
     Commit.writePlan(fs, stage, CommitPlan(Commit.readGen(fs, target), files, replaced))
     // the crash: one file moved, the rest still staged, manifest not bumped
     val first = files.head
     val dst = new Path(s"$target/$first")
     if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
-    fs.rename(new Path(s"$target.__stage/$first"), dst)
+    fs.rename(new Path(s"$target.__stage-mid/$first"), dst)
     spark.catalog.refreshByPath(target)
   }
 
@@ -108,7 +108,7 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
 
     // the writer's recovery completes the commit; the pinned read now
     // sees the NEW state
-    Commit.recoverStage(fs, target)
+    Commit.recover(fs, target)
     val after = Streaming.readCommitted(spark, target)
     after.count() shouldBe 100
     after.filter(col("payload").startsWith("v2-")).count() shouldBe 50
@@ -275,8 +275,9 @@ class SnapshotIsolationSpec extends AnyFunSuite with Matchers with SparkSessionS
     // an APPEND-ONLY commit (the AnnIndex-corpus shape): stage two new
     // docs in a brand-new shard and commit with no replaced dirs
     sharded(Seq((200L, "new-200", 2L), (201L, "new-201", 2L)))
-      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
-    Commit.commitStage(fs, target, replacedDirs = Set.empty, Commit.readGen(fs, target))
+      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage-app")
+    Commit.commitStage(fs, target, replacedDirs = Set.empty, Commit.readGen(fs, target),
+      new Path(target + ".__stage-app"))
     val gens = Streaming.manifestGenerations(fs, target)
     gens.size shouldBe 2
     // append-only: the delta is EXACTLY the appended rows

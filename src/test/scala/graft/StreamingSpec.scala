@@ -213,9 +213,9 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     // the staged content of a real upsertBatch is the full MERGED
     // winner: existing {1@10, 2@20} merged with an incoming {2@25}
     Seq(row(1, 10), EventRow(2L, ts(25), 1L, "click", 8.0)).toDF()
-      .write.mode("overwrite").parquet(target + ".__stage")
+      .write.mode("overwrite").parquet(target + ".__stage-crash")
     locally { // record the plan exactly as the writer would have
-      val stage = new org.apache.hadoop.fs.Path(target + ".__stage")
+      val stage = new org.apache.hadoop.fs.Path(target + ".__stage-crash")
       val files = fs.listStatus(stage).filter(_.isFile).map(_.getPath.getName)
         .filterNot(n => n.startsWith("_") || n.startsWith("."))
       Commit.writePlan(fs, stage, CommitPlan(Commit.readGen(fs, target), files.toSeq, Set("")))

@@ -20,8 +20,8 @@ import graft.table.{Commit, CommitPlan, Snapshot}
   * files never move — replaced files are tombstoned and physically
   * deleted only when their generation ages out of the retention
   * horizon (ManifestKeep generations). Plus the retraction verb
-  * (deleteFromPartitioned) and the single-writer lease on the same
-  * layout.
+  * (deleteFromPartitioned) and the writer lease AnnIndex takes on its
+  * index roots.
   */
 class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup {
 
@@ -44,13 +44,16 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     finally it.close()
   }
 
+  /** The stage suffix of the crashed writer these tests stand in for. */
+  private val Stage = ".__stage-crashed"
+
   /** Replicate the plan a crashed writer would have recorded: the
     * staged file list + the replaced dirs, written to the stage root —
     * so tests can park the protocol at any window between "plan
     * committed" and "commit executed".
     */
   private def writePlan(target: String, replaced: Set[String]): Seq[String] = {
-    val stage = new Path(target + ".__stage")
+    val stage = new Path(target + Stage)
     val files = Commit.listRel(fs, stage)
     Commit.writePlan(fs, stage, CommitPlan(Commit.readGen(fs, target), files, replaced))
     files
@@ -61,19 +64,19 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     seed(target)
     // a complete staged merge for shard 1 (new payloads), plan recorded
     sharded((50L until 100L).map(i => (i, s"v2-$i", 2L)))
-      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
+      .write.mode("overwrite").partitionBy("shard").parquet(target + Stage)
     val files = writePlan(target, Set("shard=1"))
     // crash point: ONE staged file already moved into the live dir, the
     // rest not — the exact mid-commit window
     val first = files.head
-    fs.rename(new Path(s"$target.__stage/$first"), new Path(s"$target/$first"))
+    fs.rename(new Path(s"$target$Stage/$first"), new Path(s"$target/$first"))
 
-    Commit.recoverStage(fs, target)
+    Commit.recover(fs, target)
     val t = Streaming.readCommitted(spark, target)
     t.count() shouldBe 100
     t.filter(col("doc_id") === 75L).select("payload").head.getString(0) shouldBe "v2-75"
     t.filter(col("doc_id") === 10L).select("payload").head.getString(0) shouldBe "v1-10"
-    fs.exists(new Path(target + ".__stage")) shouldBe false
+    fs.exists(new Path(target + Stage)) shouldBe false
     withClue("the replaced generation's files are RETAINED on disk for pinned readers: ") {
       // live dir holds old + new files — more parquet files than the
       // manifest references (deferred delete)
@@ -92,10 +95,10 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     import spark.implicits._
     half1.toDF("doc_id", "payload", "batch_id").withColumn("shard", lit(1))
       .unionByName(half2.toDF("doc_id", "payload", "batch_id").withColumn("shard", lit(9)))
-      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
+      .write.mode("overwrite").partitionBy("shard").parquet(target + Stage)
     writePlan(target, Set("shard=1", "shard=9"))
 
-    Commit.recoverStage(fs, target)
+    Commit.recover(fs, target)
     val t = Streaming.readCommitted(spark, target)
     t.count() shouldBe 100 // membership conserved: 50 in shard 0, 25 + 25 in 1 and 9
     t.filter(col("shard") === 1).count() shouldBe 25
@@ -107,15 +110,17 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     val target = Files.createTempDirectory("graft-rollback").toString + "/t"
     seed(target)
     val gen = Snapshot.latest(fs, target).get.gen
-    // a stage with NO commit plan (writer died mid-job)
+    // a stage with NO commit plan (writer died mid-job), abandoned
     sharded(Seq((50L, "garbage", 9L)))
-      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
+      .write.mode("overwrite").partitionBy("shard").parquet(target + Stage)
+    fs.setTimes(new Path(target + Stage),
+      System.currentTimeMillis() - Commit.StageAbandonedMs - 1000, -1)
 
-    Commit.recoverStage(fs, target)
+    Commit.recover(fs, target)
     val t = Streaming.readCommitted(spark, target)
     t.count() shouldBe 100
     t.filter(col("doc_id") === 50L).select("payload").head.getString(0) shouldBe "v1-50"
-    fs.exists(new Path(target + ".__stage")) shouldBe false
+    fs.exists(new Path(target + Stage)) shouldBe false
     withClue("roll-back must not advance the manifest: ") {
       Snapshot.latest(fs, target).get.gen shouldBe gen
     }
@@ -125,15 +130,15 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     val target = Files.createTempDirectory("graft-idem").toString + "/t"
     seed(target)
     sharded((50L until 100L).map(i => (i, s"v2-$i", 2L)))
-      .write.mode("overwrite").partitionBy("shard").parquet(target + ".__stage")
+      .write.mode("overwrite").partitionBy("shard").parquet(target + Stage)
     writePlan(target, Set("shard=1"))
-    Commit.recoverStage(fs, target)
+    Commit.recover(fs, target)
     val gen = Snapshot.latest(fs, target).get.gen
     val rows = Streaming.readCommitted(spark, target)
       .select("doc_id", "payload").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     // the stage is gone, so a second recovery is a no-op: same
     // generation, same rows, no double-committed manifest
-    Commit.recoverStage(fs, target)
+    Commit.recover(fs, target)
     Snapshot.latest(fs, target).get.gen shouldBe gen
     Streaming.readCommitted(spark, target)
       .select("doc_id", "payload").collect()
@@ -225,12 +230,13 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     val out = fs.create(lease, false)
     out.writeLong(System.currentTimeMillis()); out.close()
     val e = intercept[IllegalStateException] {
-      Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
-        sharded(Seq((1L, "b", 2L))), 2L)
+      Commit.withWriterLease(fs, target) { fail("second writer entered") }
     }
     e.getMessage should include("another writer")
-    // nothing was written under the refused call
-    Streaming.readCommitted(spark, target).filter(col("payload") === "b").count() shouldBe 0
+    // no table verb takes the lease: a live one does not block an upsert
+    Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
+      sharded(Seq((1L, "b", 2L))), 2L)
+    Streaming.readCommitted(spark, target).filter(col("payload") === "b").count() shouldBe 1
     fs.delete(lease, false)
 
     // a lease whose MTIME is older than the TTL is presumed crashed
@@ -240,9 +246,9 @@ class SwapRecoverySpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     val out2 = fs.create(lease, false)
     out2.writeLong(System.currentTimeMillis() - 24 * 3600 * 1000L); out2.close()
     fs.setTimes(lease, System.currentTimeMillis() - 24 * 3600 * 1000L, -1)
-    Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(
-      sharded(Seq((1L, "b", 2L))), 2L)
-    Streaming.readCommitted(spark, target).filter(col("payload") === "b").count() shouldBe 1
+    var entered = false
+    Commit.withWriterLease(fs, target) { entered = true }
+    entered shouldBe true
     withClue("the lease must be released after the write: ") {
       fs.exists(lease) shouldBe false
     }

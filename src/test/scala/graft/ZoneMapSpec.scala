@@ -257,8 +257,9 @@ class ZoneMapSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
         .toDF("id", "score", "name", "v", "shard")
         .withColumn("shard", col("shard").cast("int"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(target + ".__stage")
-      Commit.commitStage(fs, target, Set.empty, Commit.readGen(fs, target))
+        .write.mode("overwrite").parquet(target + s".__stage-app$i")
+      Commit.commitStage(fs, target, Set.empty, Commit.readGen(fs, target),
+        new Path(target + s".__stage-app$i"))
     }
     val degraded = Snapshot.latest(fs, target).flatMap(_.clusteringDepth("id")).get
     degraded should be > 2.0
