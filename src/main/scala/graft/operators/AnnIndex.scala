@@ -353,25 +353,26 @@ object AnnIndex {
     // an append reads nothing of the sidecar: its read generation is
     // the one it stages against
     val readGen = graft.table.Commit.readGen(fs, s"$root/idmap")
-    val stage = graft.table.Commit.newStage(s"$root/idmap")
-    // vec_id re-cast defensively: every appended file must carry the
-    // same long type as rebuildIdMap's corpus-derived sidecar, or a
-    // later parquet read fails on schema conflict (r13 advice, low)
-    rows.select(col("vec_id").cast("long").as("vec_id"), col("cell"),
-      expr(s"CAST(vec_id DIV $IdMapShardSize AS INT)").as("shard"),
-      lit(0L).as("batch_id"))
-      // one data file per staged shard dir (see Streaming
-      // upsertPartitionedCore): without the shard hash the dynamic-
-      // partition write fans out to (input partitions x shards) tiny
-      // part files per append. REBALANCE (not repartition): AQE
-      // coalesces batch-sized appends into few write tasks and splits
-      // a whale shard across several bounded writers (r19 verdict's
-      // whale-shard straggler item).
-      .hint("rebalance", col("shard"))
-      .write.mode("overwrite").partitionBy("shard").parquet(stage.toString)
-    // append-only commit: no replaced dirs — every previous entry
-    // survives, the staged files join the manifest atomically
-    graft.table.Commit.commitStage(fs, s"$root/idmap", Set.empty, readGen, stage)
+    graft.table.Commit.withStage(fs, s"$root/idmap") { stage =>
+      // vec_id re-cast defensively: every appended file must carry the
+      // same long type as rebuildIdMap's corpus-derived sidecar, or a
+      // later parquet read fails on schema conflict (r13 advice, low)
+      rows.select(col("vec_id").cast("long").as("vec_id"), col("cell"),
+        expr(s"CAST(vec_id DIV $IdMapShardSize AS INT)").as("shard"),
+        lit(0L).as("batch_id"))
+        // one data file per staged shard dir (see Streaming
+        // upsertPartitionedCore): without the shard hash the dynamic-
+        // partition write fans out to (input partitions x shards) tiny
+        // part files per append. REBALANCE (not repartition): AQE
+        // coalesces batch-sized appends into few write tasks and splits
+        // a whale shard across several bounded writers (r19 verdict's
+        // whale-shard straggler item).
+        .hint("rebalance", col("shard"))
+        .write.mode("overwrite").partitionBy("shard").parquet(stage.toString)
+      // append-only commit: no replaced dirs — every previous entry
+      // survives, the staged files join the manifest atomically
+      graft.table.Commit.commitStage(fs, s"$root/idmap", Set.empty, readGen, stage)
+    }
   }
 
   /** Open a persisted index for serving: (centroids, corpus). By
@@ -512,9 +513,10 @@ object AnnIndex {
       fs: org.apache.hadoop.fs.FileSystem, readGen: Long): Unit = {
     val cPath = s"$root/centroids"
     val snap = updated.localCheckpoint()
-    val stage = graft.table.Commit.newStage(cPath)
-    snap.write.mode("overwrite").parquet(stage.toString)
-    graft.table.Commit.commitStage(fs, cPath, replacedDirs = Set(""), readGen, stage)
+    graft.table.Commit.withStage(fs, cPath) { stage =>
+      snap.write.mode("overwrite").parquet(stage.toString)
+      graft.table.Commit.commitStage(fs, cPath, replacedDirs = Set(""), readGen, stage)
+    }
   }
 
   /** Nearest-`nprobe` cell assignment of `vecs` ((id, e) with e
@@ -722,12 +724,13 @@ object AnnIndex {
       // files join the touched cells' manifests atomically, untouched
       // cells keep their bytes, and no existing file moves
       val corpusGen = graft.table.Commit.readGen(fs, s"$root/corpus")
-      val corpusStage = graft.table.Commit.newStage(s"$root/corpus")
-      // one staged file per touched cell per batch (not one per input
-      // partition x cell) — bounds append fragmentation at the source
-      rows.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(corpusStage.toString)
-      graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty, corpusGen, corpusStage)
+      graft.table.Commit.withStage(fs, s"$root/corpus") { corpusStage =>
+        // one staged file per touched cell per batch (not one per input
+        // partition x cell) — bounds append fragmentation at the source
+        rows.repartition(col("cell"))
+          .write.mode("overwrite").partitionBy("cell").parquet(corpusStage.toString)
+        graft.table.Commit.commitStage(fs, s"$root/corpus", Set.empty, corpusGen, corpusStage)
+      }
       appendIdMap(rows.select(col("vec_id"), col("cell")), root)
     }
     base.count()
@@ -828,14 +831,15 @@ object AnnIndex {
       val before = manifestFiles(fs, corpusPath, s"cell=$cell")
       if (before <= 1) (before, before)
       else {
-        val stage = graft.table.Commit.newStage(corpusPath)
         val corpusGen = graft.table.Commit.readGen(fs, corpusPath)
         graft.streaming.Streaming
           .readCommittedDirs(spark, corpusPath, Set(s"cell=$cell"))
           .foreach { members =>
-            members.coalesce(1)
-              .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen, stage)
+            graft.table.Commit.withStage(fs, corpusPath) { stage =>
+              members.coalesce(1)
+                .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
+              graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen, stage)
+            }
           }
         (before, manifestFiles(fs, corpusPath, s"cell=$cell"))
       }
@@ -901,12 +905,13 @@ object AnnIndex {
             .select(col("vec_id"), col("q8"), col("nrm"), lit(dst).as("cell"))
             .localCheckpoint()
           withIdMapDirty(fs, root) {
-            val stage = graft.table.Commit.newStage(corpusPath)
-            moved.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-            // adds land under cell=dst (whose existing entries survive);
-            // cell=$cell's entries are replaced by nothing — the folded
-            // cell leaves the manifest atomically with the commit
-            graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen, stage)
+            graft.table.Commit.withStage(fs, corpusPath) { stage =>
+              moved.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
+              // adds land under cell=dst (whose existing entries survive);
+              // cell=$cell's entries are replaced by nothing — the folded
+              // cell leaves the manifest atomically with the commit
+              graft.table.Commit.commitStage(fs, corpusPath, Set(s"cell=$cell"), corpusGen, stage)
+            }
             upsertIdMap(moved.select(col("vec_id"), col("cell")), root)
           }
         }
@@ -984,18 +989,19 @@ object AnnIndex {
       // replaced set is the split cell PLUS whatever Spark staged —
       // covering the degenerate 2-means that routes every member to
       // one side (the old dir's entries must still be superseded).
-      val stage = graft.table.Commit.newStage(corpusPath)
-      reassigned.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-      val stagedDirs = fs.listStatus(stage)
-        .filter(_.isDirectory).map(_.getPath.getName).toSet
-      withIdMapDirty(fs, root) {
-        graft.table.Commit.commitStage(fs, corpusPath,
-          stagedDirs + s"cell=$cell", corpusGen, stage)
-        // sidecar relabel for the moved half (the retained half keeps
-        // its cell id — only newCell rows change assignment)
-        graft.streaming.Streaming
-          .readCommittedDirs(spark, corpusPath, Set(s"cell=$newCell"))
-          .foreach(nc => upsertIdMap(nc.select(col("vec_id"), col("cell")), root))
+      graft.table.Commit.withStage(fs, corpusPath) { stage =>
+        reassigned.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
+        val stagedDirs = fs.listStatus(stage)
+          .filter(_.isDirectory).map(_.getPath.getName).toSet
+        withIdMapDirty(fs, root) {
+          graft.table.Commit.commitStage(fs, corpusPath,
+            stagedDirs + s"cell=$cell", corpusGen, stage)
+          // sidecar relabel for the moved half (the retained half keeps
+          // its cell id — only newCell rows change assignment)
+          graft.streaming.Streaming
+            .readCommittedDirs(spark, corpusPath, Set(s"cell=$newCell"))
+            .foreach(nc => upsertIdMap(nc.select(col("vec_id"), col("cell")), root))
+        }
       }
       // centroid table: replace the split row, append the new one; the
       // sub-cell populations become the new drift baselines

@@ -184,77 +184,49 @@ class GraftTableSource extends RelationProvider
       "graft sink needs a table path: df.write.format(\"graft\").save(<table>)"))
     val spark = sqlContext.sparkSession
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Commit.recover(fs, target)
-    val existing = Snapshot.list(fs, target).latest
     val upsertKeys = (parameters.get("keyCol"), parameters.get("versionCol"),
       parameters.get("shardCol"))
+    // the latest generation once crashed commits are healed; the keyed
+    // append is the upsert verb, which recovers on its own
+    def recovered(): Option[Long] = {
+      Commit.recover(fs, target)
+      Snapshot.list(fs, target).latest
+    }
 
-    def stageAndCommit(replaceAll: Boolean): Unit = {
-      // SCHEMA DRIFT on append refuses by default — the library
-      // upsert's contract (allowSchemaEvolution opt-in): a silent
-      // mixed-schema append would leave readers inferring whichever
-      // footer they sample first. Name-and-type comparison, order- and
-      // nullability-insensitive; overwrite replaces the schema by
-      // definition and skips the check.
-      if (!replaceAll && existing.isDefined &&
-          !parameters.get("allowSchemaEvolution").exists(_.toBoolean)) {
-        // The drift check reads only FOOTER METADATA, so outstanding
-        // delete vectors are irrelevant (r17 advice, medium). A
-        // zero-live-file generation has no schema to drift against:
-        // skip the check rather than throw an unrelated connector
-        // error.
-        val current = new GraftFileIndex(spark, target, None)
-        if (current.entries.nonEmpty) {
-          val have = (current.dataSchema.fields ++ current.partitionSchema.fields)
-            .map(f => (f.name, f.dataType)).toSet
-          val incoming = data.schema.fields.map(f => (f.name, f.dataType)).toSet
-          if (have != incoming) throw new IllegalArgumentException(
-            s"append schema ${incoming.toSeq.sortBy(_._1).mkString(", ")} does not match " +
-              s"graft table $target's ${have.toSeq.sortBy(_._1).mkString(", ")} — set " +
-              "option(\"allowSchemaEvolution\", \"true\") to widen deliberately " +
-              "(followers detect the drift via the per-commit schema fingerprint)")
-        }
+    def stageAndCommit(replaceAll: Boolean, existing: Option[Long]): Unit = {
+      // overwrite replaces the schema by definition and skips the check
+      if (!replaceAll && existing.isDefined)
+        GraftTableSource.refuseSchemaDrift(spark, target, parameters, data.schema)
+      Commit.withStage(fs, target) { stage =>
+        GraftTableSource.writeStaged(data, parameters, stage)
+        val replaced: Set[String] =
+          if (!replaceAll) Set.empty
+          else Snapshot.latest(fs, target) match {
+            case Some(snap) => snap.paths.map(dirOf).toSet + ""
+            case None => Set.empty
+          }
+        Commit.commitStage(fs, target, replaced, existing.getOrElse(0L), stage)
       }
-      val stage = Commit.newStage(target)
-      val parts = parameters.get("partitionBy").toSeq
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      // AQE-sized staged write (r19 advisor, medium): REBALANCE by the
-      // partition columns instead of a plain hash repartition — small
-      // dirs still collapse to one file each (no (input partitions x
-      // dirs) fan-out), but a full-table overwrite partitioned by a
-      // low-cardinality column no longer serializes each dir through
-      // ONE task producing one arbitrarily large file: AQE splits
-      // oversized dirs across advisory-sized writers.
-      val sized = if (parts.nonEmpty)
-        data.hint("rebalance", parts.map(org.apache.spark.sql.functions.col): _*) else data
-      val writer = sized.write.mode("overwrite")
-      (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
-        .parquet(stage.toString)
-      val replaced: Set[String] =
-        if (!replaceAll) Set.empty
-        else Snapshot.latest(fs, target) match {
-          case Some(snap) => snap.paths.map(dirOf).toSet + ""
-          case None => Set.empty
-        }
-      Commit.commitStage(fs, target, replaced, existing.getOrElse(0L), stage)
     }
 
     mode match {
       case SaveMode.Append => upsertKeys match {
         case (Some(k), Some(v), Some(sh)) =>
           Streaming.upsertPartitionedBatch(target, k, v, sh)(data, 0L)
-        case (None, None, None) => stageAndCommit(replaceAll = false)
+        case (None, None, None) => stageAndCommit(replaceAll = false, recovered())
         case _ => throw new IllegalArgumentException(
           "graft upsert needs ALL of keyCol, versionCol, shardCol (or none for append)")
       }
-      case SaveMode.Overwrite => stageAndCommit(replaceAll = true)
+      case SaveMode.Overwrite => stageAndCommit(replaceAll = true, recovered())
       case SaveMode.ErrorIfExists =>
+        val existing = recovered()
         if (existing.isDefined) throw new IllegalStateException(
           s"graft table $target already exists (generation ${existing.get}); " +
             "use mode(\"append\") or mode(\"overwrite\")")
-        stageAndCommit(replaceAll = false)
+        stageAndCommit(replaceAll = false, existing)
       case SaveMode.Ignore =>
-        if (existing.isEmpty) stageAndCommit(replaceAll = false)
+        val existing = recovered()
+        if (existing.isEmpty) stageAndCommit(replaceAll = false, existing)
     }
     createRelation(sqlContext, parameters)
   }
@@ -756,6 +728,51 @@ object GraftFileIndex {
   }
 }
 
+/** The staged-write steps the batch writer and the stream sink share. */
+private[sources] object GraftTableSource {
+
+  /** SCHEMA DRIFT refusal, the library upsert's contract
+    * (`allowSchemaEvolution` opts in): a silent mixed-schema write
+    * would leave readers inferring whichever footer they sample first.
+    * Names and types are compared, order- and nullability-insensitive,
+    * from FOOTER METADATA only, so outstanding delete vectors are
+    * irrelevant (r17 advice, medium); a table with no live file has no
+    * schema to drift from.
+    */
+  def refuseSchemaDrift(spark: SparkSession, target: String,
+      parameters: Map[String, String], incoming: StructType): Unit =
+    if (!parameters.get("allowSchemaEvolution").exists(_.toBoolean)) {
+      val current = new GraftFileIndex(spark, target, None)
+      if (current.entries.nonEmpty) {
+        val have = (current.dataSchema.fields ++ current.partitionSchema.fields)
+          .map(f => (f.name, f.dataType)).toSet
+        val in = incoming.fields.map(f => (f.name, f.dataType)).toSet
+        if (have != in) throw new IllegalArgumentException(
+          s"write schema ${in.toSeq.sortBy(_._1).mkString(", ")} does not match " +
+            s"graft table $target's ${have.toSeq.sortBy(_._1).mkString(", ")} — set " +
+            "option(\"allowSchemaEvolution\", \"true\") to widen deliberately " +
+            "(followers detect the drift via the per-commit schema fingerprint)")
+      }
+    }
+
+  /** Write `data` to `stage`, partitioned by the `partitionBy` option.
+    * REBALANCE by the partition columns instead of a plain hash
+    * repartition (r19 advisor, medium): small dirs still collapse to
+    * one file each (no (input partitions x dirs) fan-out), and under
+    * AQE an oversized dir splits across advisory-sized writers instead
+    * of ONE task writing one arbitrarily large file. A stream's
+    * session runs with AQE off, so there the hint plans as a plain hash
+    * shuffle: one writer per dir.
+    */
+  def writeStaged(data: DataFrame, parameters: Map[String, String], stage: Path): Unit = {
+    val parts = parameters.get("partitionBy").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val sized = if (parts.nonEmpty) data.hint("rebalance", parts.map(col): _*) else data
+    val writer = sized.write.mode("overwrite")
+    (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer).parquet(stage.toString)
+  }
+}
+
 /** The micro-batch sink behind `writeStream.format("graft")` — see
   * [[GraftTableSource.createSink]] for the exactly-once contract.
   * Single writer per query by Structured Streaming's own design; the
@@ -840,39 +857,16 @@ private[sources] class GraftStreamSink(
         // semantics; the tag above is the fast skip
         Streaming.upsertPartitionedBatch(target, k, v, sh)(batch, batchId)
       case _ =>
-        // SCHEMA DRIFT refusal, the batch write path's contract (r18):
-        // a restarted DSv1 stream re-resolves its source schema, so a
-        // widened upstream table would otherwise silently append
-        // mixed-schema files here. Same opt-in as the batch path.
-        if (listing.latest.nonEmpty &&
-            !parameters.get("allowSchemaEvolution").exists(_.toBoolean)) {
-          val current = new GraftFileIndex(spark, target, None)
-          if (current.entries.nonEmpty) {
-            val have = (current.dataSchema.fields ++ current.partitionSchema.fields)
-              .map(f => (f.name, f.dataType)).toSet
-            val incoming = batch.schema.fields.map(f => (f.name, f.dataType)).toSet
-            if (have != incoming) throw new IllegalArgumentException(
-              s"stream batch schema ${incoming.toSeq.sortBy(_._1).mkString(", ")} " +
-                s"does not match graft table $target's " +
-                s"${have.toSeq.sortBy(_._1).mkString(", ")} — set " +
-                "option(\"allowSchemaEvolution\", \"true\") on the sink to widen " +
-                "deliberately")
-          }
+        // the batch write path's drift refusal (r18): a restarted DSv1
+        // stream re-resolves its source schema, so a widened upstream
+        // table would otherwise silently append mixed-schema files here
+        if (listing.latest.nonEmpty)
+          GraftTableSource.refuseSchemaDrift(spark, target, parameters, batch.schema)
+        Commit.withStage(fs, target) { stage =>
+          GraftTableSource.writeStaged(batch, parameters, stage)
+          Commit.commitStage(fs, target, Set.empty, listing.latest.getOrElse(0L), stage,
+            tag = Some(tag), txn = Some((scope, batchId)))
         }
-        val stage = Commit.newStage(target)
-        val parts = parameters.get("partitionBy").toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        // the batch path's REBALANCE hint, but NOT AQE-sized here:
-        // `spark` is the stream's session, where Spark turns AQE off,
-        // so the hint plans as a plain hash shuffle by the partition
-        // columns — one writer per dir, no oversized-dir split
-        val sized = if (parts.nonEmpty)
-          batch.hint("rebalance", parts.map(org.apache.spark.sql.functions.col): _*) else batch
-        val writer = sized.write.mode("overwrite")
-        (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
-          .parquet(stage.toString)
-        Commit.commitStage(fs, target, Set.empty, listing.latest.getOrElse(0L), stage,
-          tag = Some(tag), txn = Some((scope, batchId)))
     }
   }
 

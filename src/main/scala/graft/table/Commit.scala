@@ -125,7 +125,7 @@ object Commit {
     * when a dir the plan replaces or read changed after it, even when
     * its CAS rename wins uncontested.
     *
-    * `stage` is the writer's own, from [[newStage]]. The manifest
+    * `stage` is the writer's own, from [[withStage]]. The manifest
     * advance is a CAS (see [[executeCommit]]).
     */
   def commitStage(
@@ -166,17 +166,51 @@ object Commit {
     */
   private val StagePrefix = ".__stage-"
 
-  /** A new per-writer stage, `<target>.__stage-<token>`, a table-dir
-    * sibling: writers take no lease, so their stages never collide,
-    * and the token is the plan id the landing generation records.
+  /** Run `body` with a new per-writer stage, `<target>.__stage-<token>`,
+    * a table-dir sibling: writers take no lease, so their stages never
+    * collide, and the token (a whole UUID) is the plan id the landing
+    * generation records. `body` stages its write there and commits it
+    * ([[commitStage]]). Until `body` exits, a heartbeat keeps the
+    * stage younger than a quarter of [[StageAbandonedMs]], so a
+    * [[recover]] in another verb or process never rolls a live
+    * writer's plan-less stage back, however long its staged write runs
+    * (Spark sets the stage's mtime only when its job starts).
     */
-  def newStage(target: String): org.apache.hadoop.fs.Path = new org.apache.hadoop.fs.Path(
-    target + StagePrefix + java.util.UUID.randomUUID().toString.take(8))
+  def withStage[T](fs: org.apache.hadoop.fs.FileSystem, target: String)(
+      body: org.apache.hadoop.fs.Path => T): T = {
+    val stage = new org.apache.hadoop.fs.Path(
+      target + StagePrefix + java.util.UUID.randomUUID().toString)
+    // the beat reads the stage's age every second
+    keepingFresh(fs, stage, 1000L, StageAbandonedMs / 4)(body(stage))
+  }
 
-  /** The id of the plan staged at `stage`: the stage's token. */
-  private def planId(stage: org.apache.hadoop.fs.Path): String = {
-    val name = stage.getName
-    name.substring(name.lastIndexOf(StagePrefix) + StagePrefix.length)
+  /** Run `body` while a daemon thread keeps `p` fresh: every `everyMs`
+    * it touches `p`'s modification time (`fs.setTimes`, an atomic
+    * metadata call, never a content rewrite a reader could catch
+    * half-written) if `p` is older than `olderThanMs` (0: every
+    * time). An absent `p` or a failed touch waits for the next beat.
+    * The beat stops when `body` exits, by any path.
+    */
+  private def keepingFresh[T](
+      fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path,
+      everyMs: Long,
+      olderThanMs: Long
+  )(body: => T): T = {
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val beat = new Thread(() =>
+      try while (!stop.get()) {
+        Thread.sleep(everyMs)
+        try {
+          val now = System.currentTimeMillis()
+          if (olderThanMs == 0 || now - fs.getFileStatus(p).getModificationTime > olderThanMs)
+            fs.setTimes(p, now, -1)
+        } catch { case _: java.io.IOException => () } // absent/FS blip: next beat retries
+      } catch { case _: InterruptedException => () }, // the exit below ends the sleep
+      s"graft-heartbeat-$p")
+    beat.setDaemon(true)
+    beat.start()
+    try body finally { stop.set(true); beat.interrupt() }
   }
 
   /** The current latest generation of `target`, 0 for a table with no
@@ -231,7 +265,7 @@ object Commit {
       plan: CommitPlan
   ): Unit = {
     import plan.{files, replacedDirs, volatileDirs}
-    val id = planId(stage)
+    val id = stage.getName.substring(stage.getName.lastIndexOf(StagePrefix) + StagePrefix.length)
     def landed(listing: Listing): Boolean =
       listing.latest.exists(latest =>
         ((plan.readGen + 1) to latest).exists(listing.header(_).plan.contains(id)))
@@ -619,6 +653,8 @@ object Commit {
   /** A plan-less stage, or a temp or sidecar file in the manifest
     * dir, is presumed ABANDONED — its writer died mid-job — once this
     * old; a younger one may belong to a live writer, and is left alone.
+    * A live writer's stage never gets this old: its heartbeat
+    * ([[withStage]]) keeps touching it.
     */
   val StageAbandonedMs: Long = 15 * 60 * 1000L
 
@@ -629,15 +665,15 @@ object Commit {
     * the same plan is safe (see [[executeCommit]]); a plan that now
     * conflicts with commits landed since is aborted cleanly, and the
     * source's redelivery contract re-runs the verb. A stage without a
-    * plan rolls BACK once older than [[StageAbandonedMs]]. Live data
+    * plan rolls BACK once older than [[StageAbandonedMs]], which a live
+    * writer's heartbeating stage never is. Live data
     * and committed manifests are untouched in every branch, and a table
     * with no stage costs one listing and no mutating call.
     */
   def recover(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
     val t = new org.apache.hadoop.fs.Path(target)
-    val stages = Option(t.getParent).filter(fs.exists).fold(Seq.empty[org.apache.hadoop.fs.FileStatus])(
-      fs.listStatus(_).toSeq.filter(st =>
-        st.isDirectory && st.getPath.getName.startsWith(t.getName + StagePrefix)))
+    val stages = Option(t.getParent).filter(fs.exists).toSeq.flatMap(fs.listStatus(_)).filter(st =>
+      st.isDirectory && st.getPath.getName.startsWith(t.getName + StagePrefix))
     val now = System.currentTimeMillis()
     stages.foreach { st =>
       readPlan(fs, st.getPath) match {
@@ -1240,27 +1276,8 @@ object Commit {
             s"if the holder crashed, the lease self-expires after ${ttlMs / 1000} s " +
             s"(stale=$stale, breakClaimed=$claimed)")
     }
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val heartbeat = new Thread(() => {
-      try {
-        while (!stop.get()) {
-          Thread.sleep(math.max(ttlMs / 4, 50L))
-          if (!stop.get())
-            try fs.setTimes(lease, System.currentTimeMillis(), -1)
-            catch { case _: java.io.IOException => () } // broken/FS blip: next beat retries
-        }
-      } catch {
-        // the release interrupts the sleep: end the beat with the
-        // interrupt flag restored, not cleared
-        case _: InterruptedException => Thread.currentThread().interrupt()
-      }
-    }, s"graft-lease-heartbeat-$root")
-    heartbeat.setDaemon(true)
-    heartbeat.start()
-    try body
+    try keepingFresh(fs, lease, math.max(ttlMs / 4, 50L), olderThanMs = 0)(body)
     finally {
-      stop.set(true)
-      heartbeat.interrupt()
       // release via the same atomic rename-claim as breaking: claim the
       // sentinel, verify the claimed copy is OURS, delete it — rename it
       // back if foreign (our lease was broken and re-acquired while we

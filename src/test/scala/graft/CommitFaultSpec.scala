@@ -421,6 +421,8 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     try update(clean) finally FaultyFs.disarm()
     val calls = FaultyFs.counted
     planCall should be > 0L
+    // the plan id is the stage's whole-UUID token
+    Snapshot.list(faulty, clean).header(g + 1).plan.map(_.length) shouldBe Some(36)
     for (k <- planCall to calls) withClue(s"second roller at mutating call $k of $calls: ") {
       val t = copyTable(base7, "graft-roller-update")
       var overlapped = false

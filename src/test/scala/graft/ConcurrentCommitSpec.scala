@@ -414,6 +414,48 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
   private def upsertOnce(target: String, racer: DataFrame): Unit =
     Streaming.upsertPartitionedBatch(target, "doc_id", "batch_id", "shard")(racer, 2L)
 
+  /** Run `verb` with `racer` committed from inside its manifest claim,
+    * i.e. after the verb recorded its plan and moved its files. Every
+    * claim itself is the plain file:// one: the hook steps aside while
+    * it runs, and for good once the racer has landed.
+    */
+  private def withRacerInCommit[T](racer: => Unit)(verb: => T): T = {
+    var raced = false
+    Commit.registerClaimPrimitive("file", new Commit.ClaimPrimitive {
+      def claim(fs: org.apache.hadoop.fs.FileSystem, tmp: Path, dst: Path): Boolean = {
+        Commit.unregisterClaimPrimitive("file")
+        if (dst.getName.matches("(gen|inc)-\\d+")) { raced = true; racer }
+        val won = Commit.atomicClaim(fs, tmp, dst)
+        if (!raced) Commit.registerClaimPrimitive("file", this)
+        won
+      }
+    })
+    try verb finally Commit.unregisterClaimPrimitive("file")
+  }
+
+  /** A second writer's hand-staged commit replacing the shards of
+    * `image` with it. A bare commitStage runs no recovery, so the
+    * verb's recorded plan stays the verb's own to land or abort.
+    */
+  private def stagedCommit(target: String, image: DataFrame): Unit = {
+    val stage = new Path(target + ".__stage-racer")
+    image.write.mode("overwrite").partitionBy("shard").parquet(stage.toString)
+    val replaced = fs.listStatus(stage).filter(_.isDirectory).map(_.getPath.getName).toSet
+    Commit.commitStage(fs, target, replaced, Commit.readGen(fs, target), stage)
+  }
+
+  /** The aborted verb left nothing behind: no stage, and every data
+    * file on disk that `before` lacks is the racer's, named by the
+    * latest generation.
+    */
+  private def assertAbortClean(target: String, before: Set[String]): Unit = {
+    val t = new Path(target)
+    fs.listStatus(t.getParent).map(_.getPath.getName)
+      .filter(_.startsWith(t.getName + ".__stage")) shouldBe empty
+    val latestPaths = graft.table.Snapshot.latest(fs, target).get.paths.toSet
+    (Commit.listRel(fs, t).toSet -- before) shouldBe (latestPaths -- before)
+  }
+
   test("an optimistic upsert landing between compaction's read and its commit " +
       "conflicts the compaction; the upsert's rows survive") {
     val target = Files.createTempDirectory("graft-cc-compact").toString + "/t"
@@ -491,5 +533,114 @@ class ConcurrentCommitSpec extends AnyFunSuite with Matchers with SparkSessionSe
     Streaming.deleteFromPartitioned(target, "doc_id", "shard")(
       Seq((8L, 0L)).toDF("doc_id", "shard")) shouldBe 1L
     readAll(target) shouldBe got - 8L
+  }
+
+  test("a commit landing at compaction's manifest claim, after its files moved, " +
+      "aborts the compaction and removes the moved files") {
+    val target = Files.createTempDirectory("graft-cc-compact-claim").toString + "/t"
+    seed(target, 80) // gen 1
+    Streaming.deleteWhere(spark, target, col("doc_id") === 8L) shouldBe 1L // gen 2
+    val image = rows(0 until 80, k => s"racer-$k", 2L)
+      .filter(col("shard") === 0L && col("doc_id") =!= 8L)
+    val before = Commit.listRel(fs, new Path(target)).toSet
+    var raced = false
+    val ex = intercept[Commit.CommitConflictException] {
+      withRacerInCommit { raced = true; stagedCommit(target, image) } {
+        Streaming.compactShards(spark, target, "shard")
+      }
+    }
+    ex.getMessage should include("shard=0")
+    raced shouldBe true
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L, 3L)
+    assertAbortClean(target, before)
+    val got = readAll(target)
+    got.size shouldBe 79
+    (0L until 80L).filterNot(_ == 8L).foreach { k =>
+      val expect = if (k % 8 == 0) (s"racer-$k", 2L) else (s"v1-$k", 1L)
+      withClue(s"key $k: ") { got(k) shouldBe expect }
+    }
+  }
+
+  test("a commit landing at clusterTable's manifest claim, after its files moved, " +
+      "aborts the clustering and removes the moved files") {
+    val target = Files.createTempDirectory("graft-cc-cluster-claim").toString + "/t"
+    seed(target, 80) // gen 1
+    val image = rows(0 until 80, k => s"racer-$k", 2L).filter(col("shard") === 0L)
+    val before = Commit.listRel(fs, new Path(target)).toSet
+    var raced = false
+    val ex = intercept[Commit.CommitConflictException] {
+      withRacerInCommit { raced = true; stagedCommit(target, image) } {
+        Streaming.clusterTable(spark, target, "doc_id", numFiles = 2)
+      }
+    }
+    ex.getMessage should include("shard=0")
+    raced shouldBe true
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
+    assertAbortClean(target, before)
+    val got = readAll(target)
+    got.size shouldBe 80
+    (0L until 80L).foreach { k =>
+      val expect = if (k % 8 == 0) (s"racer-$k", 2L) else (s"v1-$k", 1L)
+      withClue(s"key $k: ") { got(k) shouldBe expect }
+    }
+  }
+
+  test("a commit landing at deleteFromPartitioned's manifest claim, after its files " +
+      "moved, aborts the delete and removes the moved files") {
+    import spark.implicits._
+    val target = Files.createTempDirectory("graft-cc-delete-claim").toString + "/t"
+    seed(target, 80) // gen 1
+    // shard 0's whole new image: every key but 8 rewritten, 8 kept
+    val image = rows(0 until 80, k => s"racer-$k", 2L)
+      .filter(col("shard") === 0L && col("doc_id") =!= 8L)
+      .unionByName(rows(8 to 8, k => s"v1-$k", 1L))
+    val before = Commit.listRel(fs, new Path(target)).toSet
+    var raced = false
+    val ex = intercept[Commit.CommitConflictException] {
+      withRacerInCommit { raced = true; stagedCommit(target, image) } {
+        Streaming.deleteFromPartitioned(target, "doc_id", "shard")(
+          Seq((8L, 0L)).toDF("doc_id", "shard"))
+      }
+    }
+    ex.getMessage should include("shard=0")
+    raced shouldBe true
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
+    assertAbortClean(target, before)
+    val got = readAll(target)
+    got.size shouldBe 80
+    (0L until 80L).foreach { k =>
+      val expect = if (k % 8 == 0 && k != 8L) (s"racer-$k", 2L) else (s"v1-$k", 1L)
+      withClue(s"key $k: ") { got(k) shouldBe expect }
+    }
+  }
+
+  test("a live writer's plan-less stage older than StageAbandonedMs survives a " +
+      "concurrent recovery: the writer's heartbeat keeps it fresh") {
+    val target = Files.createTempDirectory("graft-cc-live").toString + "/t"
+    seed(target, 80) // gen 1
+    val before = readAll(target)
+    var survived = false
+    FaultyFs.of(spark)
+    // at the plan's write the staged files are complete and the plan
+    // is not yet recorded: age the stage past the abandonment window,
+    // as a staged write running that long leaves it, and let another
+    // process's recovery see it once the heartbeat has had its beat
+    var planTmp: Path = null
+    FaultyFs.hookAt { (_, p) => planTmp = p; p.getName == ".plan.tmp" } {
+      val stage = java.nio.file.Paths.get(planTmp.getParent.toUri.getPath)
+      Files.setLastModifiedTime(stage, java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - Commit.StageAbandonedMs - 60000L))
+      def age = System.currentTimeMillis() - Files.getLastModifiedTime(stage).toMillis
+      val deadline = System.currentTimeMillis() + 10000L
+      while (age > Commit.StageAbandonedMs && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      Commit.recover(fs, target)
+      survived = Files.isDirectory(stage)
+    }
+    try Streaming.clusterTable(spark, "faulty://" + target, "doc_id", numFiles = 2)
+    finally FaultyFs.disarm()
+    survived shouldBe true
+    Streaming.manifestGenerations(fs, target) shouldBe Seq(1L, 2L)
+    readAll(target) shouldBe before
   }
 }
