@@ -201,12 +201,16 @@ object Commit {
     val beat = new Thread(() =>
       try while (!stop.get()) {
         Thread.sleep(everyMs)
-        try {
+        if (!stop.get()) try {
           val now = System.currentTimeMillis()
           if (olderThanMs == 0 || now - fs.getFileStatus(p).getModificationTime > olderThanMs)
             fs.setTimes(p, now, -1)
         } catch { case _: java.io.IOException => () } // absent/FS blip: next beat retries
-      } catch { case _: InterruptedException => () }, // the exit below ends the sleep
+      } catch {
+        // the exit below ends the sleep: end the beat with the
+        // interrupt flag restored, not cleared
+        case _: InterruptedException => Thread.currentThread().interrupt()
+      },
       s"graft-heartbeat-$p")
     beat.setDaemon(true)
     beat.start()
