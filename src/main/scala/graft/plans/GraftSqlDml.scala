@@ -137,6 +137,9 @@ case class GraftSqlDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     GraftDeleteCommand(table.path, sqlOf(d.condition))
   }
 
+  // the catalog's declared partition columns: the verbs stage new rows
+  // by the table's own directory layout and refuse a declaration that
+  // differs from it
   private def partitionColsOf(table: GraftTable): Seq[String] =
     table.partitioning().toSeq.flatMap(t =>
       t.references.headOption.map(_.fieldNames.mkString(".")))

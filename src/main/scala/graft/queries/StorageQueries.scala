@@ -806,8 +806,7 @@ object StorageQueries {
               "n_chars" -> "s.new_chars",
               "lang" -> "'zz'",
               "batch_id" -> "CAST(2 AS INT)",
-              "shard" -> "CAST(s.doc_id % 16 AS INT)")),
-            stagePartitionBy = Seq("shard"))
+              "shard" -> "CAST(s.doc_id % 16 AS INT)")))
           // metadata stays exact through the DV + add composite commit
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -884,8 +883,7 @@ object StorageQueries {
             canon, 1L)
           val updated = Streaming.updateWhere(s, target,
             col("doc_id") % 5 === 1,
-            Map("n_chars" -> (col("n_chars") + 7L)),
-            stagePartitionBy = Seq("shard"))
+            Map("n_chars" -> (col("n_chars") + 7L)))
           val fs = new org.apache.hadoop.fs.Path(target)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
           require(Snapshot.latest(fs, target).map(_.rowCount).contains(canon.count()),
@@ -958,8 +956,7 @@ object StorageQueries {
           Streaming.deleteWhere(s, target, col("doc_id") % 9 === 4)
           val updN = Streaming.updateWhere(s, target,
             col("doc_id") % 13 === 2,
-            Map("n_chars" -> (col("n_chars") + 11L)),
-            stagePartitionBy = Seq("shard"))
+            Map("n_chars" -> (col("n_chars") + 11L)))
           val gUpd = Snapshot.list(fs, target).latest.get
           Streaming.readChangeFeed(s, target, g1, gUpd) match {
             case None => outSchema

@@ -445,45 +445,13 @@ class GraftFileIndex(
 
   // hive-style partition layout, MULTI-LEVEL (r17 advice, medium: the
   // write path documents partitionBy("a,b") but a single-level parser
-  // silently returned rows missing those columns): every dir is a
-  // `col=value(/col=value)*` chain sharing ONE column sequence. All
-  // dirs parse consistently -> that's the partition schema; NO dir
-  // parses -> unpartitioned plain layout; a MIX (some dirs hive-shaped,
-  // some not, or differing column chains) is a layout the reader
-  // cannot represent -> loud refusal instead of silently dropping the
-  // partition columns. Values are hive-unescaped (%-sequences), the
-  // null sentinel maps to NULL.
-  private val dirChains: Map[String, Option[Seq[(String, String)]]] = {
-    def parseDir(d: String): Option[Seq[(String, String)]] =
-      if (d.isEmpty) None
-      else {
-        val segs = d.split('/').toSeq.map { seg =>
-          seg.split("=", 2) match {
-            case Array(c, v) if c.nonEmpty && c.matches("[A-Za-z_][A-Za-z0-9_]*") =>
-              Some(c -> GraftFileIndex.hiveUnescape(v))
-            case _ => None
-          }
-        }
-        if (segs.forall(_.isDefined)) Some(segs.flatten) else None
-      }
-    allFiles.map(dirOf).distinct.map(d => d -> parseDir(d)).toMap
-  }
-  private val partitionCols: Seq[String] = {
-    val chains = dirChains.values.toSeq
-    val parsed = chains.flatten
-    if (parsed.isEmpty) Nil
-    else {
-      val colSeqs = parsed.map(_.map(_._1)).distinct
-      if (parsed.size != chains.size || colSeqs.size != 1)
-        throw new IllegalArgumentException(
-          s"graft table $target generation $generation has an inconsistent " +
-            s"partition layout (directory column chains: ${
-              dirChains.keys.take(5).mkString(", ")} ...) — the connector can map " +
-            "only a uniform col=value(/col=value)* hive layout to partition " +
-            "columns; read via Streaming.readCommitted for a path-only view")
-      colSeqs.head
-    }
-  }
+  // silently returned rows missing those columns): the table's one
+  // directory parser ([[Snapshot.partitionColumns]]) maps a uniform
+  // `col=value(/col=value)*` layout to partition columns, a plain one to
+  // none, and refuses a mix rather than drop the partition columns
+  private val dirChains: Map[String, Option[Seq[(String, String)]]] =
+    allFiles.map(dirOf).distinct.map(d => d -> Snapshot.partitionChain(d)).toMap
+  private val partitionCols: Seq[String] = Snapshot.partitionColumns(target, dirChains.keys)
   // per-column: Long when every non-null value is integral
   private val partitionColIsLong: Seq[Boolean] = partitionCols.zipWithIndex.map {
     case (_, i) =>
@@ -611,17 +579,6 @@ class GraftFileIndex(
 }
 
 object GraftFileIndex {
-
-  /** Undo hive partition-value escaping (`%xx` byte sequences, as
-    * written by DataFrameWriter.partitionBy) and map the hive null
-    * sentinel to null. Values with no `%` pass through untouched —
-    * the upsert shard layout's plain-scalar contract is unaffected.
-    */
-  private[sources] def hiveUnescape(v: String): String =
-    if (v == "__HIVE_DEFAULT_PARTITION__") null
-    else if (!v.contains('%')) v
-    else try java.net.URLDecoder.decode(v.replace("+", "%2B"), "UTF-8")
-    catch { case _: IllegalArgumentException => v }
 
   /** Point-probe conjuncts (`=`, `IN` on a bare attribute) as
     * (column, values) — the bloom-pruning feed. Same losslessness

@@ -196,11 +196,11 @@ object Streaming {
     * batches touch DISJOINT shards both land (the loser of the
     * generation rename rebases its delta and retries the CAS — no lost
     * update, one linear manifest chain); a writer whose shards changed
-    * since its read conflicts and re-runs the whole body here (re-reads
-    * the now-current shards, re-merges, re-stages), at most
-    * [[MaxAttempts]] times with linear backoff — the Delta/Iceberg
-    * multi-writer contract, which lets ingest, compaction and GC run
-    * as separate services against one table.
+    * since its read conflicts and re-runs the whole body (re-reads the
+    * now-current shards, re-merges, re-stages) under the one retry rule
+    * of [[Commit.optimistic]] — the Delta/Iceberg multi-writer
+    * contract, which lets ingest, compaction and GC run as separate
+    * services against one table.
     *
     * CONTRACT — `shardCol` must be a PURE FUNCTION of `keyCol`: the
     * latest-wins window partitions by (`shardCol`, `keyCol`) and nothing
@@ -228,26 +228,16 @@ object Streaming {
   )(batch: DataFrame, batchId: Long): Unit = {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    recover(fs, target)
-    var attempt = 1
-    while (!tryUpsertPartitioned(fs, target, keyCol, versionCol, shardCol, batch,
-        allowSchemaEvolution)) {
-      if (attempt >= MaxAttempts) throw new IllegalStateException(
-        s"upsert to $target conflicted $attempt times in a row — contention on these " +
-          "shards is too high; re-deliver the batch later")
-      Thread.sleep(math.min(50L * attempt, 500L))
-      attempt += 1
-    }
+    Commit.optimistic(fs, target, "upsertPartitionedBatch")(
+      upsertAttempt(fs, target, keyCol, versionCol, shardCol, batch, allowSchemaEvolution))
   }
-
-  /** Verb attempts an optimistic upsert makes before it gives up. */
-  private val MaxAttempts = 5
 
   /** One attempt of [[upsertPartitionedBatch]]: pinned read of the
     * touched shards at the CURRENT latest generation, latest-wins
-    * merge, stage, commit. False when the commit conflicted.
+    * merge, stage, commit. Throws [[CommitConflictException]] when the
+    * commit conflicted.
     */
-  private def tryUpsertPartitioned(
+  private def upsertAttempt(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       keyCol: String,
@@ -255,11 +245,11 @@ object Streaming {
       shardCol: String,
       batch: DataFrame,
       allowSchemaEvolution: Boolean
-  ): Boolean = {
+  ): Unit = {
     val spark = batch.sparkSession
     import org.apache.spark.sql.expressions.Window
     val shardVals = batch.select(col(shardCol)).distinct().collect().map(_.get(0))
-    if (shardVals.isEmpty) return true
+    if (shardVals.isEmpty) return
     require(!shardVals.contains(null),
       s"NULL $shardCol in upsert batch — shard must be a total function of $keyCol")
     // the transaction's snapshot version, recorded in the commit plan
@@ -320,8 +310,7 @@ object Streaming {
       // hazard); every touched shard has a staged dir because latest-wins
       // keeps at least one row per key
       val replaced = fs.listStatus(stage).filter(_.isDirectory).map(_.getPath.getName).toSet
-      try { commitStage(fs, target, replaced, readGen, stage); true }
-      catch { case _: CommitConflictException => false }
+      commitStage(fs, target, replaced, readGen, stage)
     }
   }
 
@@ -349,8 +338,8 @@ object Streaming {
     listing.latest.map(listing.at(_, Some(dirs))) match {
       case Some(snap) if snap.dirs.nonEmpty =>
         // layout check over the DIR NAMES (O(#dirs) via the manifest
-        // list, never the entry list)
-        require(snap.dirs.forall(d => d.nonEmpty && d.startsWith(s"$shardCol=")),
+        // list, never the entry list), by the table's one dir parser
+        require(Snapshot.partitionColumns(target, snap.dirs) == Seq(shardCol),
           s"target $target has no '$shardCol' partition layout — " +
             "it was not written with this layout; migrate it (rewrite " +
             s"partitionBy($shardCol)) before shard-scoped merging")
@@ -712,8 +701,8 @@ object Streaming {
     * derived from the dir names via `basePath`, exactly as a directory
     * scan would. A table with no manifest (never maintained by this
     * module) falls back to the plain directory read.
-    */
-  /** `mergeSchema = true` reads a MIXED-SCHEMA table (a widened column
+    *
+    * `mergeSchema = true` reads a MIXED-SCHEMA table (a widened column
     * landed mid-table via `allowSchemaEvolution`) with the union
     * schema, old files null-padded — the lakehouse read for an evolved
     * table. The default keeps the single-footer fast path.
@@ -1377,7 +1366,9 @@ object Streaming {
     * recorded extreme may be deleted). Optimistic: the commit records
     * the read generation and conflicts/rebases exactly like the
     * upsert CAS (a racing writer on the same dirs wins or loses
-    * loudly, never silently resurrects rows).
+    * loudly, never silently resurrects rows), and a conflict re-scans
+    * under the one retry rule of [[Commit.optimistic]]. The body is
+    * [[updateWhere]]'s with no assignments ([[mutateRows]]).
     *
     * VISIBILITY LIMITS (enforced contract): [[followTable]]
     * consumers read ADDED files, and a DV commit adds none — a
@@ -1395,9 +1386,8 @@ object Streaming {
   def deleteWhere(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
-      predicate: org.apache.spark.sql.Column,
-      maxAttempts: Int = 5
-  ): Long = deleteVectors(spark, target, predicate, ranges = Nil, maxAttempts)
+      predicate: org.apache.spark.sql.Column
+  ): Long = mutateRows(spark, target, predicate, ranges = Nil, update = None, Nil)
 
   /** [[deleteWhere]] for a range predicate, with the candidate FILE
     * list zone-map-pruned before the position scan — the point-delete
@@ -1410,11 +1400,9 @@ object Streaming {
       target: String,
       column: String,
       lo: Any,
-      hi: Any,
-      maxAttempts: Int = 5
-  ): Long = deleteVectors(spark, target,
-    col(column) >= lit(lo) && col(column) <= lit(hi),
-    ranges = Seq((column, Some(lo), Some(hi))), maxAttempts)
+      hi: Any
+  ): Long = mutateRows(spark, target, col(column) >= lit(lo) && col(column) <= lit(hi),
+    ranges = Seq((column, Some(lo), Some(hi))), update = None, Nil)
 
   /** Write `df` as ONE parquet sidecar in the manifest dir, named
     * `<prefix>-<atGen>-<token>.parquet` for the generation it will be
@@ -1490,44 +1478,6 @@ object Streaming {
     }
   }
 
-  private def deleteVectors(
-      spark: org.apache.spark.sql.SparkSession,
-      target: String,
-      predicate: org.apache.spark.sql.Column,
-      ranges: Seq[(String, Option[Any], Option[Any])],
-      maxAttempts: Int
-  ): Long = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, target)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = Snapshot.requireLatest(fs, target, "delete from")
-      val allEntries = snap.entries
-      if (allEntries.isEmpty) return 0L
-      // candidate files: zone-map pruned for range deletes, all otherwise
-      val scanEntries = Snapshot.zoneKept(allEntries, ranges)
-      if (scanEntries.isEmpty) return 0L
-      // the position scan: matching live rows' (rel, pos). Parquet
-      // pushdown prunes row groups; only O(deleted rows) survive to
-      // the write, none of them already deleted.
-      val hits = livePositionedScan(spark, target, scanEntries).where(predicate)
-        .select(col("__m_rel").as("rel"), col("__m_pos").as("pos"))
-        .localCheckpoint()
-      val newPerFile = positionsPerFile(hits)
-      if (newPerFile.isEmpty) return 0L
-      if (commitMutation(spark, target, snap.gen, snap.byPath, hits, newPerFile,
-          newRows = None, stagePartitionBy = Nil, newRowCount = 0L))
-        return newPerFile.values.sum
-      Thread.sleep(math.min(50L * attempt, 500L))
-    }
-    throw new IllegalStateException(
-      s"deleteWhere on $target conflicted $maxAttempts times in a row — " +
-        "contention on these shards is too high; retry later or route it " +
-        "through deleteFromPartitioned")
-  }
-
   /** DESCRIBE-HISTORY for a graft table (r17 judge #6): one row per
     * RETAINED generation, newest first, entirely from manifest
     * metadata (zero data I/O): the generation number, whether its
@@ -1575,8 +1525,9 @@ object Streaming {
     *    state or the fully-merged state, never a tear;
     *  - the commit is optimistic: the plan records the scanned dirs
     *    as VOLATILE, so a racing writer on them conflicts (positions
-    *    would be stale) and the verb re-scans, while disjoint writers
-    *    rebase and both land.
+    *    would be stale) and the verb re-scans under the one retry rule
+    *    of [[Commit.optimistic]], while disjoint writers rebase and
+    *    both land.
     *
     * `condition` is ANSI SQL over aliases `t` (target) and `s`
     * (source), e.g. `"t.id = s.id"`. `whenMatchedUpdate` maps target
@@ -1588,6 +1539,15 @@ object Streaming {
     * reference refuse loudly at analysis).
     * An UPDATE whose target row matches multiple source rows refuses
     * loudly (nondeterministic), the Delta posture.
+    *
+    * The new rows stage by the table's own partition layout, read from
+    * its entries' directory names ([[Snapshot.partitionColumns]]).
+    * `stagePartitionBy` may name it: on a generation with entries a
+    * non-empty value must equal that layout, and a mismatch is refused;
+    * only a generation with no entries, which has no directories to
+    * read, stages by the given value. `pruneColumns` names the ON
+    * condition's equality keys whose source envelope zone-map-prunes
+    * the target's files (see below).
     *
     * Cost at 100 TB: one pinned scan of the target, joined once with
     * the source and checkpointed once (parquet pushdown applies
@@ -1610,8 +1570,6 @@ object Streaming {
       whenMatchedDelete: Boolean = false,
       whenNotMatchedInsert: Option[Map[String, String]] = None,
       stagePartitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 5,
-      pruneColumn: Option[String] = None,
       pruneColumns: Seq[String] = Nil
   ): MergeStats = {
     require(!(whenMatchedUpdate.isDefined && whenMatchedDelete),
@@ -1621,29 +1579,22 @@ object Streaming {
     // the insert clause's rows: `cols` from exprs over the source alone
     def insertImage(src: DataFrame, cols: Seq[String], m: Map[String, String]) =
       src.alias("s").select(cols.map(c => expr(m.getOrElse(c, s"s.`$c`")).as(c)): _*)
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, target)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    val fs = fsOf(spark, target)
+    Commit.optimistic(fs, target, "mergeInto") {
       val snap = Snapshot.requireLatest(fs, target, "merge into")
-      val (gen, allEntries) = (snap.gen, snap.entries)
+      val allEntries = snap.entries
       if (allEntries.isEmpty) {
         // zero live rows: only the not-matched clause can fire, and
         // with no target schema to map onto, only INSERT-ALL is
         // well-defined
-        whenNotMatchedInsert match {
-          case None => return MergeStats(0L, 0L)
-          case Some(m) =>
-            require(m.isEmpty,
-              "merge into an EMPTY table supports only insert-all " +
-                "(no target schema to map the insert exprs onto)")
-            val n = source.count()
-            if (n == 0) return MergeStats(0L, 0L)
-            if (commitMutation(spark, target, gen, Map.empty,
-                emptyPositions(spark), Map.empty, Some(source), stagePartitionBy, n))
-              return MergeStats(0L, n)
+        whenNotMatchedInsert.fold(MergeStats(0L, 0L)) { m =>
+          require(m.isEmpty,
+            "merge into an EMPTY table supports only insert-all " +
+              "(no target schema to map the insert exprs onto)")
+          val n = source.count()
+          if (n > 0L) commitMutation(spark, target, snap, emptyPositions(spark), Map.empty,
+            Some(source), stagePartitionBy, n)
+          MergeStats(0L, n)
         }
       } else {
         // KEY-ENVELOPE FILE PRUNING (the Delta merge file-skipping
@@ -1658,9 +1609,6 @@ object Streaming {
         // key matches nothing under `=`, so only all-keys-non-null
         // rows shape the envelopes). On a key-clustered 100-TB table a
         // narrow merge then scans O(matching files), not the table.
-        // `pruneColumns` is the multi-key form (r18 judge #5);
-        // `pruneColumn` remains as the single-key spelling.
-        val pruneCols: Seq[String] = pruneColumn.toSeq ++ pruneColumns
         def envOf(c: String, lo: Any, hi: Any): KeyEnvelope =
           lo match {
             case _: Byte | _: Short | _: Int | _: Long =>
@@ -1671,16 +1619,16 @@ object Streaming {
             case _ => KeyEnvelope.Range(c, 's', lo.toString, hi.toString)
           }
         val (scanEntries, typedEnvelopes): (Seq[ManifestEntry], Seq[KeyEnvelope]) =
-          if (pruneCols.isEmpty) (allEntries, Nil)
+          if (pruneColumns.isEmpty) (allEntries, Nil)
           else {
             val withKeys = source.filter(
-              pruneCols.map(c => col(c).isNotNull).reduce(_ && _))
-            val aggs = pruneCols.flatMap(c =>
+              pruneColumns.map(c => col(c).isNotNull).reduce(_ && _))
+            val aggs = pruneColumns.flatMap(c =>
               Seq(min(col(c)).as(s"__lo_$c"), max(col(c)).as(s"__hi_$c")))
             val mm = withKeys.agg(aggs.head, aggs.tail: _*).head()
             if (mm.isNullAt(0)) (Seq.empty, Nil) // no full-key rows: no matches
             else {
-              val ranges = pruneCols.zipWithIndex.map { case (c, i) =>
+              val ranges = pruneColumns.zipWithIndex.map { case (c, i) =>
                 (c, Some(mm.get(2 * i)): Option[Any],
                   Some(mm.get(2 * i + 1)): Option[Any])
               }
@@ -1698,86 +1646,13 @@ object Streaming {
           if (whenNotMatchedInsert.isEmpty) Nil
           else if (typedEnvelopes.nonEmpty) typedEnvelopes
           else Seq(KeyEnvelope.All)
-        if (scanEntries.isEmpty) {
-          // nothing can match: the whole source is unmatched
-          whenNotMatchedInsert match {
-            case None => return MergeStats(0L, 0L)
-            case Some(m) =>
-              val probe = fileScan(spark, target, allEntries.take(1))
-              val ins = insertImage(source, probe.columns.toSeq, m).localCheckpoint()
-              val n = ins.count()
-              if (n == 0L) return MergeStats(0L, 0L)
-              // the "everything pruned out" verdict is a read of every
-              // live file's bounds — same conflict scope as a scan
-              if (commitMutation(spark, target, gen, Map.empty,
-                  emptyPositions(spark), Map.empty, Some(ins), stagePartitionBy, n,
-                  extraVolatileDirs = allEntries.map(_.dir).toSet,
-                  keyEnvelopes = insertEnvelopes))
-                return MergeStats(0L, n)
-          }
-        } else {
-        val entryByPath = snap.byPath
-        // existing delete vectors applied FIRST: an already-retracted
-        // row must neither match nor resurrect through the merge
-        val tgt = livePositionedScan(spark, target, scanEntries)
-        val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
-        // the insert exprs see the source alone, never `t`: analysed
-        // here, before the join exposes the target's columns, and
-        // applied below to the unmatched source rows only
-        whenNotMatchedInsert.foreach(m => insertImage(source, dataCols, m))
-        // ONE pass over the target: source LEFT OUTER JOIN target (an
-        // inner join without an insert clause). Each row is one
-        // (source row, matched target row) pair, projected to the
-        // target position, the update image when matched and the
-        // source row when not, and checkpointed once.
-        val isMatched = col("t.__m_rel").isNotNull
-        val joined = source.alias("s").join(tgt.alias("t"), expr(condition),
-          if (whenNotMatchedInsert.isDefined) "left_outer" else "inner")
-        // INSERT-ONLY merge (no matched clause): matched target rows
-        // stay byte-identical — retracting their positions here would
-        // DV them with no update images re-added, silent data loss
-        // (r18 advice, high). Delta/Iceberg semantics: a clause fires
-        // only for the rows it names, so the matched pairs are dropped
-        // and MergeStats reports matched = 0.
-        val hasMatchedAction = whenMatchedUpdate.isDefined || whenMatchedDelete
-        val ck = (if (hasMatchedAction) joined else joined.where(!isMatched))
-          .select(Seq(col("t.__m_rel").as("rel"), col("t.__m_pos").as("pos")) ++
-            whenMatchedUpdate.toSeq.flatMap(m => dataCols.map(c =>
-              when(isMatched, expr(m.getOrElse(c, s"t.`$c`"))).as(s"__u_$c"))) ++
-            whenNotMatchedInsert.map(_ => when(!isMatched,
-              struct(source.columns.toSeq.map(c => col(s"s.`$c`")): _*)).as("__ins")): _*)
-          .localCheckpoint()
-        // one aggregate over (rel, pos): per touched file, its distinct
-        // matched positions and the most source rows on any one of
-        // them; the unmatched rows form the null group
-        val (unmatchedGroup, perFile) = ck.groupBy("rel", "pos")
-          .agg(count(lit(1)).as("n"))
-          .groupBy("rel")
-          .agg(count(lit(1)).as("positions"), sum("n").as("rows"), max("n").as("most"))
-          .collect().partition(_.isNullAt(0))
-        val inserted = unmatchedGroup.headOption.fold(0L)(_.getLong(2))
-        val newPerFile = perFile.map(r => r.getString(0) -> r.getLong(1)).toMap
-        val matchedCount = newPerFile.values.sum
-        val most = perFile.map(_.getLong(3)).foldLeft(0L)(math.max)
-        require(whenMatchedUpdate.isEmpty || most <= 1L,
-          "merge UPDATE is ambiguous: a target row matched multiple source " +
-            "rows — dedupe the source, or express the intent as delete+insert")
-        if (matchedCount == 0L && inserted == 0L) return MergeStats(0L, 0L)
-        val matchedPairs = ck.where(col("rel").isNotNull)
-        val positions = matchedPairs.select("rel", "pos")
-        val updated = whenMatchedUpdate.filter(_ => matchedCount > 0).map(_ =>
-          matchedPairs.select(dataCols.map(c => col(s"`__u_$c`").as(c)): _*))
-        val toAdd = (updated.toSeq ++
-          whenNotMatchedInsert.filter(_ => inserted > 0).map(m => insertImage(
-            ck.where(col("rel").isNull).select("__ins.*"), dataCols, m)).toSeq)
-          .reduceOption(_.unionByName(_))
         // SERIALIZABLE-GRADE conflict scope: every LIVE dir is
         // volatile, not just the dirs of matched files — the merge's
         // not-matched (insert) decisions depend on what the scanned
         // files did NOT contain, so a racing commit that adds a
         // matching row to any scanned dir must conflict this merge
         // into a re-scan rather than let it insert a duplicate key.
-        // With pruneColumn set this must be the PRE-prune dir set
+        // With pruneColumns set this must be the PRE-prune dir set
         // (r18 advice, low): the prune's validity is itself a read of
         // every live file's bounds, so a racer appending an
         // in-envelope key to a dir whose existing files were all
@@ -1787,22 +1662,82 @@ object Streaming {
         // and root layouts route appends into existing dirs, which
         // this covers.)
         val scannedDirs = allEntries.map(_.dir).toSet
-        // a delete matched by several source rows names its position
-        // once per row
-        if (commitMutation(spark, target, gen, entryByPath,
-            if (most > 1L) positions.distinct() else positions, newPerFile, toAdd,
-            stagePartitionBy,
-            (if (updated.isDefined) matchedCount else 0L) + inserted,
-            extraVolatileDirs = scannedDirs,
-            keyEnvelopes = insertEnvelopes))
-          return MergeStats(matchedCount, inserted)
+        if (scanEntries.isEmpty) {
+          // nothing can match: the whole source is unmatched
+          whenNotMatchedInsert.fold(MergeStats(0L, 0L)) { m =>
+            val probe = fileScan(spark, target, allEntries.take(1))
+            val ins = insertImage(source, probe.columns.toSeq, m).localCheckpoint()
+            val n = ins.count()
+            if (n > 0L) commitMutation(spark, target, snap, emptyPositions(spark), Map.empty,
+              Some(ins), stagePartitionBy, n, scannedDirs, insertEnvelopes)
+            MergeStats(0L, n)
+          }
+        } else {
+          // existing delete vectors applied FIRST: an already-retracted
+          // row must neither match nor resurrect through the merge
+          val tgt = livePositionedScan(spark, target, scanEntries)
+          val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
+          // the insert exprs see the source alone, never `t`: analysed
+          // here, before the join exposes the target's columns, and
+          // applied below to the unmatched source rows only
+          whenNotMatchedInsert.foreach(m => insertImage(source, dataCols, m))
+          // ONE pass over the target: source LEFT OUTER JOIN target (an
+          // inner join without an insert clause). Each row is one
+          // (source row, matched target row) pair, projected to the
+          // target position, the update image when matched and the
+          // source row when not, and checkpointed once.
+          val isMatched = col("t.__m_rel").isNotNull
+          val joined = source.alias("s").join(tgt.alias("t"), expr(condition),
+            if (whenNotMatchedInsert.isDefined) "left_outer" else "inner")
+          // INSERT-ONLY merge (no matched clause): matched target rows
+          // stay byte-identical — retracting their positions here would
+          // DV them with no update images re-added, silent data loss
+          // (r18 advice, high). Delta/Iceberg semantics: a clause fires
+          // only for the rows it names, so the matched pairs are dropped
+          // and MergeStats reports matched = 0.
+          val hasMatchedAction = whenMatchedUpdate.isDefined || whenMatchedDelete
+          val ck = (if (hasMatchedAction) joined else joined.where(!isMatched))
+            .select(Seq(col("t.__m_rel").as("rel"), col("t.__m_pos").as("pos")) ++
+              whenMatchedUpdate.toSeq.flatMap(m => dataCols.map(c =>
+                when(isMatched, expr(m.getOrElse(c, s"t.`$c`"))).as(s"__u_$c"))) ++
+              whenNotMatchedInsert.map(_ => when(!isMatched,
+                struct(source.columns.toSeq.map(c => col(s"s.`$c`")): _*)).as("__ins")): _*)
+            .localCheckpoint()
+          // one aggregate over (rel, pos): per touched file, its distinct
+          // matched positions and the most source rows on any one of
+          // them; the unmatched rows form the null group
+          val (unmatchedGroup, perFile) = ck.groupBy("rel", "pos")
+            .agg(count(lit(1)).as("n"))
+            .groupBy("rel")
+            .agg(count(lit(1)).as("positions"), sum("n").as("rows"), max("n").as("most"))
+            .collect().partition(_.isNullAt(0))
+          val inserted = unmatchedGroup.headOption.fold(0L)(_.getLong(2))
+          val newPerFile = perFile.map(r => r.getString(0) -> r.getLong(1)).toMap
+          val matchedCount = newPerFile.values.sum
+          val most = perFile.map(_.getLong(3)).foldLeft(0L)(math.max)
+          require(whenMatchedUpdate.isEmpty || most <= 1L,
+            "merge UPDATE is ambiguous: a target row matched multiple source " +
+              "rows — dedupe the source, or express the intent as delete+insert")
+          if (matchedCount > 0L || inserted > 0L) {
+            val matchedPairs = ck.where(col("rel").isNotNull)
+            val positions = matchedPairs.select("rel", "pos")
+            val updated = whenMatchedUpdate.filter(_ => matchedCount > 0).map(_ =>
+              matchedPairs.select(dataCols.map(c => col(s"`__u_$c`").as(c)): _*))
+            val toAdd = (updated.toSeq ++
+              whenNotMatchedInsert.filter(_ => inserted > 0).map(m => insertImage(
+                ck.where(col("rel").isNull).select("__ins.*"), dataCols, m)).toSeq)
+              .reduceOption(_.unionByName(_))
+            // a delete matched by several source rows names its position
+            // once per row
+            commitMutation(spark, target, snap,
+              if (most > 1L) positions.distinct() else positions, newPerFile, toAdd,
+              stagePartitionBy, (if (updated.isDefined) matchedCount else 0L) + inserted,
+              scannedDirs, insertEnvelopes)
+          }
+          MergeStats(matchedCount, inserted)
         }
       }
-      Thread.sleep(math.min(50L * attempt, 500L))
     }
-    throw new IllegalStateException(
-      s"mergeInto $target conflicted $maxAttempts times in a row — contention " +
-        "on these shards is too high; retry later")
   }
 
   /** Row-level UPDATE (r17 judge item #8): rewrite the rows matching
@@ -1812,16 +1747,23 @@ object Streaming {
     * untouched files byte-identical ([[mergeInto]]'s machinery with
     * the table itself as the source side). Returns the number of rows
     * updated.
+    *
+    * The updated rows stage by the table's own partition layout, read
+    * from its entries' directory names ([[Snapshot.partitionColumns]]).
+    * `stagePartitionBy` may name it: on a generation with entries a
+    * non-empty value must equal that layout, and a mismatch is refused;
+    * only a generation with no entries, which has no directories to
+    * read, stages by the given value (an update of such a table changes
+    * nothing). A conflict re-scans under [[Commit.optimistic]].
     */
   def updateWhere(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
       predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
-      stagePartitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 5
-  ): Long = updateCore(spark, target, predicate, assignments, ranges = Nil,
-    stagePartitionBy, maxAttempts)
+      stagePartitionBy: Seq[String] = Nil
+  ): Long = mutateRows(spark, target, predicate, ranges = Nil, Some(assignments),
+    stagePartitionBy)
 
   /** [[updateWhere]] for a range predicate, with the candidate FILE
     * list zone-map-pruned before the position scan (the deleteRange
@@ -1834,67 +1776,79 @@ object Streaming {
       column: String,
       lo: Any,
       hi: Any,
-      assignments: Map[String, org.apache.spark.sql.Column],
-      stagePartitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 5
-  ): Long = updateCore(spark, target,
-    col(column) >= lit(lo) && col(column) <= lit(hi), assignments,
-    ranges = Seq((column, Some(lo), Some(hi))), stagePartitionBy, maxAttempts)
+      assignments: Map[String, org.apache.spark.sql.Column]
+  ): Long = mutateRows(spark, target, col(column) >= lit(lo) && col(column) <= lit(hi),
+    ranges = Seq((column, Some(lo), Some(hi))), Some(assignments), Nil)
 
-  private def updateCore(
+  /** The one body of [[deleteWhere]], [[deleteRange]], [[updateWhere]]
+    * and [[updateRange]]: `update` None deletes the rows matching
+    * `predicate`, Some rewrites them with its assignments. One pinned
+    * scan of the candidate files (zone-map pruned by `ranges`,
+    * lossless; all files when empty) finds the matching live rows,
+    * checkpointed once: a delete keeps only their (rel, pos), an
+    * update the full rows its new images come from. Returns the rows
+    * deleted or updated.
+    */
+  private def mutateRows(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
       predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column],
       ranges: Seq[(String, Option[Any], Option[Any])],
-      stagePartitionBy: Seq[String],
-      maxAttempts: Int
+      update: Option[Map[String, org.apache.spark.sql.Column]],
+      stagePartitionBy: Seq[String]
   ): Long = {
-    require(assignments.nonEmpty, "updateWhere needs at least one assignment")
-    val targetPath = new org.apache.hadoop.fs.Path(target)
-    val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, target)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = Snapshot.requireLatest(fs, target, "update")
-      val (gen, allEntries, entryByPath) = (snap.gen, snap.entries, snap.byPath)
-      if (allEntries.isEmpty) return 0L
-      // candidate files: zone-map pruned for range updates (lossless
-      // by construction), all otherwise — the deleteVectors shape
-      val scanEntries = Snapshot.zoneKept(allEntries, ranges)
-      if (scanEntries.isEmpty) return 0L
-      val tgt = livePositionedScan(spark, target, scanEntries)
-      val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
-      require(assignments.keySet.subsetOf(dataCols.toSet),
-        s"updateWhere assignments reference columns absent from $target: " +
-          s"${assignments.keySet.diff(dataCols.toSet).mkString(", ")}")
-      val hits = tgt.where(predicate).localCheckpoint()
-      // each live row once: the positions are distinct by construction
-      val positions = hits.select(col("__m_rel").as("rel"), col("__m_pos").as("pos"))
-      val newPerFile = positionsPerFile(positions)
-      val n = newPerFile.values.sum
-      if (n == 0L) return 0L
-      val updated = hits.select(dataCols.map(c =>
-        assignments.getOrElse(c, col(c)).as(c)): _*)
-      if (commitMutation(spark, target, gen, entryByPath, positions, newPerFile,
-          Some(updated), stagePartitionBy, n))
-        return n
-      Thread.sleep(math.min(50L * attempt, 500L))
+    update.foreach(a => require(a.nonEmpty, "updateWhere needs at least one assignment"))
+    val fs = fsOf(spark, target)
+    Commit.optimistic(fs, target, if (update.isEmpty) "deleteWhere" else "updateWhere") {
+      val snap = Snapshot.requireLatest(fs, target, if (update.isEmpty) "delete from" else "update")
+      val scanEntries = Snapshot.zoneKept(snap.entries, ranges)
+      if (scanEntries.isEmpty) 0L
+      else {
+        val tgt = livePositionedScan(spark, target, scanEntries)
+        val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
+        update.foreach(a => require(a.keySet.subsetOf(dataCols.toSet),
+          s"updateWhere assignments reference columns absent from $target: " +
+            s"${a.keySet.diff(dataCols.toSet).mkString(", ")}"))
+        // parquet pushdown prunes row groups; no row already deleted
+        // appears, so each position is new and appears once
+        val matched = tgt.where(predicate)
+        val hits = (if (update.isEmpty) matched.select("__m_rel", "__m_pos") else matched)
+          .localCheckpoint()
+        val positions = hits.select(col("__m_rel").as("rel"), col("__m_pos").as("pos"))
+        val newPerFile = positionsPerFile(positions)
+        val n = newPerFile.values.sum
+        if (n > 0L) commitMutation(spark, target, snap, positions, newPerFile,
+          update.map(a => hits.select(dataCols.map(c => a.getOrElse(c, col(c)).as(c)): _*)),
+          stagePartitionBy, n)
+        n
+      }
     }
-    throw new IllegalStateException(
-      s"updateWhere on $target conflicted $maxAttempts times in a row — " +
-        "contention on these shards is too high; retry later")
   }
 
-  /** The shared COMMIT half of [[mergeInto]], [[updateWhere]] and
-    * [[deleteWhere]]: write the (rel, pos) retraction sidecar (merged
-    * with prior tags), stage `newRows` (none for a delete), and land
-    * retags + adds as ONE generation through the standard staged-plan
-    * machinery (crash-recoverable at every window: the plan carries the
+  /** The shared COMMIT half of [[mergeInto]] and [[mutateRows]]: stage
+    * `newRows` (none for a delete), write the (rel, pos) retraction
+    * sidecar (merged with prior tags), and land retags + adds as ONE
+    * generation through the standard staged-plan machinery
+    * (crash-recoverable at every window: the plan carries the
     * retagged entries and the volatile dirs, so a replay is idempotent
-    * and a racing writer on the scanned dirs conflicts). Returns false — with the sidecar cleaned
-    * up — when the commit conflicted and the caller must re-scan.
+    * and a racing writer on the scanned dirs conflicts). On a conflict
+    * the sidecar is deleted and the [[CommitConflictException]]
+    * propagates, so the caller's attempt re-scans.
+    *
+    * `snap` is the generation the verb read. `newRows` stage by the
+    * table's partition layout, its entries' directory names
+    * ([[Snapshot.partitionColumns]]), derived only when there are rows
+    * to stage, so a delete works on any layout. `stagePartitionBy`, the
+    * caller's statement of that layout, must equal it when non-empty;
+    * a generation with no entries stages by it.
+    *
+    * The sidecar is written inside the stage's heartbeat, after the
+    * staged rows and just before the commit: a sweep
+    * ([[Commit.sweepManifestDir]]) spares an untagged sidecar younger
+    * than [[Commit.StageAbandonedMs]], so a staged write of any length
+    * cannot age it. The window left is the commit itself: one that ran
+    * past [[Commit.StageAbandonedMs]] could lose its sidecar to a
+    * concurrent sweep.
     *
     * `positions` are the verb's NEW retractions, each once and
     * disjoint from what the touched files already record (the
@@ -1904,8 +1858,7 @@ object Streaming {
   private def commitMutation(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
-      gen: Long,
-      entryByPath: Map[String, ManifestEntry],
+      snap: Snapshot,
       positions: DataFrame,
       newPerFile: Map[String, Long],
       newRows: Option[DataFrame],
@@ -1913,20 +1866,21 @@ object Streaming {
       newRowCount: Long,
       extraVolatileDirs: Set[String] = Set.empty,
       keyEnvelopes: Seq[KeyEnvelope] = Nil
-  ): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (modified, dvDirs, sidecarOpt) =
-      if (newPerFile.isEmpty) (Seq.empty[ManifestEntry], Set.empty[String], None)
-      else {
-        val (sidecarName, retagged) =
-          writeDvRetag(spark, fs, target, gen, entryByPath, positions, newPerFile)
-        (retagged.toSeq.sortBy(_._1).map(_._2), newPerFile.keySet.map(dirOf),
-          Some(sidecarName))
-      }
+  ): Unit = {
+    val fs = fsOf(spark, target)
     Commit.withStage(fs, target) { stage =>
       newRows match {
         case Some(df) =>
+          val layout =
+            if (snap.entries.isEmpty) stagePartitionBy
+            else {
+              val derived = Snapshot.partitionColumns(target, snap.entries.map(_.dir))
+              require(stagePartitionBy.isEmpty || stagePartitionBy == derived,
+                s"stagePartitionBy ${stagePartitionBy.mkString("[", ", ", "]")} is not the " +
+                  s"partition layout of $target, ${derived.mkString("[", ", ", "]")} — omit " +
+                  "it, and the new rows stage by the table's own layout")
+              derived
+            }
           // size the add files by the KNOWN output row count (the verbs
           // counted matched/inserted already): a 100-row update must not
           // scatter 30+ near-empty part files across the table (measured
@@ -1936,20 +1890,24 @@ object Streaming {
           val sized = if (parts < spark.sparkContext.defaultParallelism)
             df.coalesce(parts) else df
           val w = sized.write.mode("overwrite")
-          (if (stagePartitionBy.nonEmpty) w.partitionBy(stagePartitionBy: _*) else w)
-            .parquet(stage.toString)
-        case None => fs.mkdirs(stage) // retraction-only merge: no adds
+          (if (layout.nonEmpty) w.partitionBy(layout: _*) else w).parquet(stage.toString)
+        case None => fs.mkdirs(stage) // retraction-only: no adds
       }
-      try {
-        commitStage(fs, target, Set.empty, gen, stage,
-          modifiedEntries = modified, volatileDirs = dvDirs ++ extraVolatileDirs,
-          keyEnvelopes = keyEnvelopes)
-        true
-      } catch {
-        case _: CommitConflictException =>
-          sidecarOpt.foreach(s => fs.delete(
-            new org.apache.hadoop.fs.Path(manifestDir(target), s), false))
-          false
+      val (modified, sidecar) =
+        if (newPerFile.isEmpty) (Seq.empty[ManifestEntry], None)
+        else {
+          val (name, retagged) =
+            writeDvRetag(spark, fs, target, snap.gen, snap.byPath, positions, newPerFile)
+          (retagged.toSeq.sortBy(_._1).map(_._2), Some(name))
+        }
+      try commitStage(fs, target, Set.empty, snap.gen, stage, modifiedEntries = modified,
+        volatileDirs = newPerFile.keySet.map(dirOf) ++ extraVolatileDirs,
+        keyEnvelopes = keyEnvelopes)
+      catch {
+        case e: CommitConflictException =>
+          sidecar.foreach(s =>
+            fs.delete(new org.apache.hadoop.fs.Path(manifestDir(target), s), false))
+          throw e
       }
     }
   }

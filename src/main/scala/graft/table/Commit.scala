@@ -228,12 +228,41 @@ object Commit {
     * `replacedDirs` — the loser's pinned read is stale, so rebasing
     * the manifest delta would silently drop the winner's rows. The
     * caller must re-run its whole verb (re-read the now-current
-    * shards, re-merge, re-stage) — [[graft.streaming.Streaming.upsertPartitionedBatch]]
-    * does exactly that. Disjoint concurrent commits never see this:
+    * shards, re-merge, re-stage), which [[optimistic]] does for every
+    * optimistic verb. Disjoint concurrent commits never see this:
     * they REBASE (recompute the delta against the winner's generation)
     * and retry the CAS, so two writers on disjoint shards both land.
     */
   final class CommitConflictException(msg: String) extends IllegalStateException(msg)
+
+  /** Attempts an [[optimistic]] verb makes before it gives up. */
+  private val MaxAttempts = 5
+
+  /** The one retry rule of the optimistic verbs (the upsert, delete,
+    * update and merge): run [[recover]] once, then `attempt` up to
+    * [[MaxAttempts]] times. Each attempt reads the latest generation,
+    * does its work and commits; a [[CommitConflictException]] means
+    * its read went stale, and after the i-th one the next attempt
+    * starts min(50·i, 500) ms later (linear backoff). The last
+    * conflict fails the verb with one message naming `verb` and
+    * `target`.
+    */
+  def optimistic[A](fs: org.apache.hadoop.fs.FileSystem, target: String, verb: String)(
+      attempt: => A): A = {
+    recover(fs, target)
+    @scala.annotation.tailrec
+    def run(i: Int): A =
+      (try Right(attempt) catch { case e: CommitConflictException => Left(e) }) match {
+        case Right(a) => a
+        case Left(e) if i == MaxAttempts =>
+          throw new IllegalStateException(s"$verb on $target conflicted $MaxAttempts times " +
+            "in a row — contention on the dirs it touches is too high; retry later", e)
+        case Left(_) =>
+          Thread.sleep(math.min(50L * i, 500L))
+          run(i + 1)
+      }
+    run(1)
+  }
 
   /** The roll-forward half shared by [[commitStage]] and [[recover]]:
     * execute `plan`, staged at `stage`. Idempotent at every crash

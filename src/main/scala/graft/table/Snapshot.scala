@@ -379,6 +379,46 @@ object Snapshot {
   def walk(fs: FileSystem, target: String, from: Long, to: Long): Vector[Snapshot] =
     list(fs, target).walk(from, to)
 
+  /** A directory name's hive partition chain, `col=value(/col=value)*`,
+    * values hive-unescaped (`%xx` sequences, as `partitionBy` writes
+    * them; the null sentinel is null). None for any other name, the
+    * table root ("") included.
+    */
+  def partitionChain(dir: String): Option[Seq[(String, String)]] =
+    if (dir.isEmpty) None
+    else {
+      val segs = dir.split('/').toSeq.map(_.split("=", 2) match {
+        case Array(c, v) if c.matches("[A-Za-z_][A-Za-z0-9_]*") => Some(c -> hiveUnescape(v))
+        case _ => None
+      })
+      if (segs.forall(_.isDefined)) Some(segs.flatten) else None
+    }
+
+  /** The partition columns of a table whose data directories are
+    * `dirs`, as a table's layout is written down: in its directory
+    * names (Delta keeps them as `metaData.partitionColumns`, Iceberg as
+    * a partition spec). The one column chain every dir names
+    * ([[partitionChain]]); Nil when no dir is hive-shaped (a flat
+    * table). A mix (some dirs hive-shaped and some not, or two column
+    * chains) is no layout, and is refused naming `target`.
+    */
+  def partitionColumns(target: String, dirs: Iterable[String]): Seq[String] = {
+    val chains = dirs.toSeq.distinct.map(d => d -> partitionChain(d))
+    val colSeqs = chains.flatMap(_._2).map(_.map(_._1)).distinct
+    if (colSeqs.isEmpty) Nil
+    else if (colSeqs.size == 1 && chains.forall(_._2.isDefined)) colSeqs.head
+    else throw new IllegalArgumentException(
+      s"$target has an inconsistent partition layout (directories: " +
+        s"${chains.map(_._1).sorted.take(5).mkString(", ")} ...) — every directory must be " +
+        "a col=value(/col=value)* chain over one column sequence, or none may be")
+  }
+
+  private def hiveUnescape(v: String): String =
+    if (v == "__HIVE_DEFAULT_PARTITION__") null
+    else if (!v.contains('%')) v
+    else try java.net.URLDecoder.decode(v.replace("+", "%2B"), "UTF-8")
+    catch { case _: IllegalArgumentException => v }
+
   /** Parallelism of independent manifest and commit FS operations
     * (per-dir manifest reads and writes, staged-file renames, footer
     * reads): N of them cost O(N / threads) round-trips.

@@ -93,7 +93,7 @@ object ChangeFeedScale {
         whenMatchedUpdate = Some(Map("payload" -> "s.s_payload")),
         whenNotMatchedInsert = Some(Map(
           "payload" -> "s.s_payload", "score" -> "s.id * 10")),
-        pruneColumn = Some("id"))
+        pruneColumns = Seq("id"))
     }._1
     require(merged == Streaming.MergeStats(100L, 100L), s"merge stats: $merged")
     val g2 = graft.table.Snapshot.list(fs, src).latest.get

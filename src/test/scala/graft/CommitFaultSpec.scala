@@ -369,6 +369,62 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     points shouldBe 25L
   }
 
+  test("an updateWhere crashed at ANY mutating call heals to generation g or g+1, " +
+      "and the sweep leaves nothing unreachable") {
+    val after = read(base7).map { case (id, p) => (id, if (id % 10 == 3) p + "u" else p) }
+    val points = enumerateCrashes(base7, after) { t =>
+      Streaming.updateWhere(spark, t, col("id") % 10 === 3,
+        Map("payload" -> concat(col("payload"), lit("u")))) shouldBe 20L
+    }
+    info(s"$points crash points")
+    // exact, like the others: a delete's calls (sidecar, plan, delta,
+    // prune, stage) plus the staged write of the updated rows and their
+    // moves into the shard dirs
+    points shouldBe 37L
+  }
+
+  test("a mergeInto crashed at ANY mutating call heals to generation g or g+1, " +
+      "and the sweep leaves nothing unreachable") {
+    // 20 matched rows updated and 4 inserted, one in each shard
+    val source = rows((3L until 200L by 10) ++ (1000L until 1004L), 8L)
+    val after = (read(base7).map { case (id, p) => (id, if (id % 10 == 3) s"p8-$id" else p) } ++
+      (1000L until 1004L).map(k => (k, s"p8-$k"))).sorted
+    val points = enumerateCrashes(base7, after) { t =>
+      Streaming.mergeInto(spark, t, source, "t.id = s.id",
+        whenMatchedUpdate = Some(Map("payload" -> "s.payload")),
+        whenNotMatchedInsert = Some(Map.empty)) shouldBe Streaming.MergeStats(20L, 4L)
+    }
+    info(s"$points crash points")
+    // exact, like the others
+    points shouldBe 41L
+  }
+
+  test("a mutation's delete-vector sidecar survives a sweep that runs while its " +
+      "staged write is under way") {
+    // the hook runs at the staged write's first mutating call: it ages
+    // every dv- sidecar past the abandonment window and sweeps the
+    // manifest dir, as a concurrent vacuum does once a staged write has
+    // run longer than the window
+    val t = copyTable(base7, "graft-fault-sidecar")
+    val g = latest(t)
+    val before = readV(t)
+    var swept = false
+    FaultyFs.hookAt((_, p) => p.toString.contains(".__stage-")) {
+      val aged = System.currentTimeMillis() - Commit.StageAbandonedMs - 60000
+      faulty.listStatus(Snapshot.manifestDir(t)).map(_.getPath)
+        .filter(_.getName.startsWith("dv-")).foreach(faulty.setTimes(_, aged, -1))
+      Commit.sweepManifestDir(faulty, Snapshot.list(faulty, t), walkSidecars = true)
+      swept = true
+    }
+    try Streaming.updateWhere(spark, t, col("id") % 10 === 3,
+      Map("v" -> (col("v") + 1))) shouldBe 20L
+    finally FaultyFs.disarm()
+    swept shouldBe true
+    latest(t) shouldBe g + 1
+    readV(t) shouldBe before.map { case (id, p, v) => (id, p, if (id % 10 == 3) v + 1 else v) }
+    assertEntriesOnDisk(t)
+  }
+
   test("a second roller at ANY mutating call of a writer's commit lands its plan once, " +
       "and the writer returns normally") {
     // the writer: a hand-staged commit replacing shard 0 at gen 8 (a
@@ -400,12 +456,14 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     info(s"$calls mutating calls")
   }
 
+  private def readV(t: String): Seq[(Long, String, Long)] = {
+    import spark.implicits._
+    Streaming.readCommitted(spark, t).select("id", "payload", "v")
+      .as[(Long, String, Long)].collect().toSeq.sorted
+  }
+
   test("an updateWhere whose plan a second roller lands applies its change once, " +
       "even under a later commit to the same dirs") {
-    import spark.implicits._
-    def readV(t: String): Seq[(Long, String, Long)] =
-      Streaming.readCommitted(spark, t).select("id", "payload", "v")
-        .as[(Long, String, Long)].collect().toSeq.sorted
     val g = latest(base7)
     val before = readV(base7)
     def update(t: String): Unit =

@@ -223,7 +223,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     val stats = Streaming.mergeInto(spark, target, source, "t.id = s.id",
       whenMatchedUpdate = Some(Map("payload" -> "s.s_payload")),
       whenNotMatchedInsert = Some(Map("payload" -> "s.s_payload", "score" -> "0")),
-      pruneColumn = Some("id"))
+      pruneColumns = Seq("id"))
     stats shouldBe Streaming.MergeStats(matched = 5L, inserted = 5L)
     val got = Streaming.readCommitted(spark, target)
     got.count() shouldBe 405L
@@ -235,7 +235,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
     Streaming.mergeInto(spark, target, far, "t.id = s.id",
       whenMatchedUpdate = Some(Map("payload" -> "s.s_payload")),
       whenNotMatchedInsert = Some(Map("payload" -> "s.s_payload", "score" -> "0")),
-      pruneColumn = Some("id")) shouldBe Streaming.MergeStats(0L, 1L)
+      pruneColumns = Seq("id")) shouldBe Streaming.MergeStats(0L, 1L)
     Streaming.readCommitted(spark, target).count() shouldBe 406L
   }
 
@@ -394,7 +394,7 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       whenMatchedUpdate = Some(Map("payload" -> "s.np")),
       whenNotMatchedInsert = Some(Map("payload" -> "s.np", "shard" -> "9")),
       stagePartitionBy = Seq("shard"),
-      pruneColumn = Some("id"))
+      pruneColumns = Seq("id"))
     stats shouldBe Streaming.MergeStats(1L, 0L)
     Streaming.readCommitted(spark, target)
       .where(col("id") === 100L).select("payload").head()
@@ -420,5 +420,55 @@ class MergeSpec extends AnyFunSuite with Matchers with SparkSessionSetup {
       .select("id", "payload", "score").head() match {
       case r => (r.getLong(0), r.getString(1), r.getLong(2)) shouldBe (1L, "a", 5L)
     }
+  }
+
+  /** 40 rows, ten in each of four `shard=` dirs. */
+  private def sharded(prefix: String): String = {
+    import spark.implicits._
+    val target = Files.createTempDirectory(prefix).toString + "/t"
+    Streaming.upsertPartitionedBatch(target, "id", "v", "shard")(
+      (0 until 40).map(k => (k.toLong, 1L, k.toLong % 4)).toDF("id", "v", "shard"), 1L)
+    target
+  }
+
+  private def idV(target: String): Seq[(Long, Long)] = {
+    import spark.implicits._
+    Streaming.readCommitted(spark, target).select("id", "v").as[(Long, Long)]
+      .collect().toSeq.sorted
+  }
+
+  test("updateWhere with no layout argument stages the updated rows by the table's " +
+      "shard= layout, so no updated row is lost") {
+    val target = sharded("graft-update-layout")
+    Streaming.updateWhere(spark, target, col("id") % 10 === 3,
+      Map("v" -> (col("v") + 1))) shouldBe 4L
+    idV(target) shouldBe (0L until 40L).map(k => (k, if (k % 10 == 3) 2L else 1L))
+    Snapshot.latest(fs, target).get.entries.map(_.dir).toSet shouldBe
+      (0 until 4).map(s => s"shard=$s").toSet
+  }
+
+  test("mergeInto with an insert clause and no layout argument stages its rows by " +
+      "the table's shard= layout") {
+    import spark.implicits._
+    val target = sharded("graft-merge-layout")
+    val source = Seq((3L, 5L, 3L), (13L, 5L, 1L), (100L, 5L, 0L), (101L, 5L, 1L))
+      .toDF("id", "v", "shard")
+    Streaming.mergeInto(spark, target, source, "t.id = s.id",
+      whenMatchedUpdate = Some(Map("v" -> "s.v")),
+      whenNotMatchedInsert = Some(Map.empty)) shouldBe Streaming.MergeStats(2L, 2L)
+    idV(target) shouldBe ((0L until 40L).map(k => (k, if (k == 3L || k == 13L) 5L else 1L)) ++
+      Seq((100L, 5L), (101L, 5L)))
+    Snapshot.latest(fs, target).get.entries.map(_.dir).toSet shouldBe
+      (0 until 4).map(s => s"shard=$s").toSet
+  }
+
+  test("a stagePartitionBy that is not the table's layout is refused, naming both") {
+    val target = sharded("graft-layout-refused")
+    val ex = intercept[IllegalArgumentException] {
+      Streaming.updateWhere(spark, target, col("id") % 10 === 3,
+        Map("v" -> (col("v") + 1)), stagePartitionBy = Seq("other"))
+    }
+    ex.getMessage should (include("[other]") and include("[shard]"))
+    idV(target) shouldBe (0L until 40L).map(k => (k, 1L))
   }
 }
